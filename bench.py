@@ -2,7 +2,7 @@
 """Benchmark headline queries; prints ONE JSON line.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32),
+     SPARK_GRAFT_CPUS (default: the host core count),
      SPARK_GRAFT_REPS (default 2; clamped to >=1) — per-query repeat count;
      both mean and min are reported (compare MINs across rounds, the mean
      carries this machine's ambient-load noise).
@@ -149,7 +149,6 @@ SECONDARY = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     # Fail loudly on testdata schema drift BEFORE any query runs: round 3's
@@ -161,7 +160,7 @@ def main() -> None:
 
     assert_testdata_schema(sf_dir)
 
-    spark = get_spark("bench", cpus=cpus, shuffle_partitions=cpus)
+    spark = get_spark("bench")
     spark.range(10).count()  # JVM/session warmup
 
     # Materialize the shared A/B fixture synthesis once (plan-equality cache

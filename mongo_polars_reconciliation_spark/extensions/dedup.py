@@ -215,17 +215,14 @@ def ingest_novel_neardup(
     ).localCheckpoint(eager=False)
     kept = b.join(keep1.select(id_col), id_col).localCheckpoint(eager=False)
 
-    # batch band keys (wide signatures — the minhash_near_dups shape);
-    # r16: array-form checkpoint so per-doc sizes are row-local (see
-    # shingle_sets / minhash_near_dups — one full-frame aggregation
-    # removed per verify, bit-identical)
+    # batch band keys (wide signatures — the minhash_near_dups shape) over
+    # the checkpointed shingle-ARRAY frame, which jaccard_verify reuses
     sets_b_base = shingle_sets(kept, id_col, text_col, n)
     target = new_docs.sparkSession.sparkContext.defaultParallelism
     if sets_b_base.rdd.getNumPartitions() < target:
         sets_b_base = sets_b_base.repartition(target, F.col(id_col))
     sets_b = sets_b_base.localCheckpoint(eager=False)
     sh_b = sets_b.select(F.col(id_col), F.explode("__shset").alias("shingle"))
-    sizes_b = sets_b.select(F.col(id_col), F.size("__shset").alias("sz"))
     bk = _band_keys_wide(
         minhash_signatures_wide(_shingle_ids(sh_b, hash_mode), id_col, num_hashes),
         id_col,
@@ -272,23 +269,22 @@ def ingest_novel_neardup(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    # distinct AFTER the candidate semi-join (r10): a crash-replayed
+    # distinct AFTER the candidate semi-join: a crash-replayed
     # streaming trigger can leave duplicate rows in the docs/bands state
     # faces (streaming/corpus.py writes the digest ledger last), and a
-    # duplicated history doc would double its shingle rows — doubling its
-    # Jaccard size and intersection counts and shifting jacc_r. Deduping
-    # here costs a shuffle of |collision candidates| rows only (never the
+    # duplicated history doc would contribute a second shingle-set row,
+    # duplicating every pair it is verified in. Deduping here costs a shuffle of |collision candidates| rows only (never the
     # corpus), making duplicate state rows semantics-free by construction.
     # Exclude phase-1 SURVIVOR ids from the history DOC side (legitimately
     # a no-op — state and batch ids are disjoint): a ghost history doc
     # that is also a digest-novel batch doc would otherwise contribute a
-    # second copy of its shingles to sh_all (sh_b already carries every
-    # survivor), doubling its sizes and distorting every jacc_r it appears
-    # in — over-dropping near the threshold on replay. Pairs whose __hid
+    # second shingle-set row to sets_all (sets_b already carries every
+    # survivor), so its pairs would be verified against both copies —
+    # over-dropping near the threshold on replay. Pairs whose __hid
     # is a survivor are still verified, against the single batch-side
     # copy, which is exactly the true Jaccard. Survivors, NOT all batch
     # ids: a redelivered doc whose digest is already ledgered is dropped
-    # in phase 1 and absent from sh_b, so its history copy is the only
+    # in phase 1 and absent from sets_b, so its history copy is the only
     # one — excluding it would un-verify its pairs and re-admit its
     # near-dups (the redelivery-admits-nothing property).
     hist_docs = state_docs.select(
@@ -296,29 +292,20 @@ def ingest_novel_neardup(
     ).join(
         cand_hist.select(F.col("__hid").alias(id_col)).distinct(), id_col
     ).join(keep1.select(id_col), id_col, "left_anti").distinct()
-    # checkpoint the combined shingle-ARRAY frame: jaccard_verify consumes
-    # it three times (sizes + both intersection joins) and the history
-    # side would otherwise re-run its semi-join + shingle extraction per
-    # consumption (sets_b is already materialized above); sizes are
-    # row-local from the arrays — no groupBy over the combined frame
+    # checkpoint the combined shingle-ARRAY frame: jaccard_verify joins it
+    # twice and the history side would otherwise re-run its semi-join +
+    # shingle extraction per consumption (sets_b is already materialized
+    # above)
     sets_all = shingle_sets(hist_docs, id_col, text_col, n).unionByName(
         sets_b
     ).localCheckpoint(eager=False)
-    sh_all = sets_all.select(
-        F.col(id_col), F.explode("__shset").alias("shingle")
-    )
-    sizes_all = sets_all.select(
-        F.col(id_col), F.size("__shset").alias("sz")
-    )
     dropped_hist = jaccard_verify(
         cand_hist.select(
             F.col("__hid").alias("id_a"), F.col("__bid").alias("id_b")
         ),
-        sh_all,
+        sets_all,
         id_col,
         threshold,
-        sizes=sizes_all,
-        sets=sets_all,
     ).select(F.col("id_b").alias(id_col)).distinct()
     kept2 = kept.join(dropped_hist, id_col, "left_anti").localCheckpoint(
         eager=False
@@ -331,9 +318,9 @@ def ingest_novel_neardup(
     pairs = _pairs_from_band_keys(
         bk2.select(id_col, "band", "bkey"), id_col, max_bucket_size
     )
-    edges = jaccard_verify(
-        pairs, sh_b, id_col, threshold, sizes=sizes_b, sets=sets_b
-    ).select(F.col("id_a").alias("lo"), F.col("id_b").alias("hi"))
+    edges = jaccard_verify(pairs, sets_b, id_col, threshold).select(
+        F.col("id_a").alias("lo"), F.col("id_b").alias("hi")
+    )
     admitted = admit_sequential(
         kept2.select(id_col), edges, id_col, mis_max_iter
     )
@@ -374,14 +361,12 @@ def shingle_sets(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
 ) -> DataFrame:
     """Per-document distinct-shingle ARRAY — the pre-explode form of
-    :func:`shingles` (r16 optimization round): ``(id, __shset)`` such that
+    :func:`shingles`: ``(id, __shset)`` such that
     ``sets.select(id, explode(__shset))`` is row-identical to
     ``shingles(df)``. Checkpointing THIS frame instead of the exploded one
-    lets consumers derive both the exploded rows (map-only explode) and
-    the per-doc set size (row-local ``size(__shset)``) without the
-    groupBy-count shuffle ``jaccard_verify`` otherwise pays over the full
-    shingle frame — one whole-corpus aggregation removed per verify
-    (guide §2.4), identical values by construction."""
+    lets consumers derive the exploded rows (map-only explode) for the
+    signatures and intersect the arrays row-locally in
+    :func:`jaccard_verify` — no groupBy over the shingle frame."""
     idx = ", ".join(f"toks[i+{j}]" for j in range(n))
     return (
         df.select(
@@ -654,99 +639,42 @@ def lsh_dropped_buckets(
     )
 
 
-# A/B hook (r16 optimization round, batch 2): True = callers passing the
-# shingle-ARRAY frame (``sets=``) verify pairs with a row-local
-# size(array_intersect(A, B)) after two id-keyed joins — no shingle
-# explode, no (id, shingle)-keyed join, no groupBy over the pair×shingle
-# expansion. False = the original exploded-join intersection for those
-# callers too. Identical jacc_r decisions — pinned in
-# tests/test_properties.py.
-JACCARD_ARRAY_INTERSECT = True
-
-
 def jaccard_verify(
     pairs: DataFrame,
-    sh: DataFrame,
+    sets: DataFrame,
     id_col: str = "doc_id",
     threshold: float = 0.6,
-    sizes: DataFrame | None = None,
-    sets: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs only. Intersection via
-    shingle join, union by |A|+|B|−∩; rounded before thresholding so the
-    decision is reproducible across engines.
+    """Exact shingle-set Jaccard for candidate ``pairs`` (id_a, id_b) only.
+    ``sets`` is the :func:`shingle_sets` frame ``(id, __shset)``: each
+    pair attaches its two DISTINCT-shingle arrays by two id-keyed joins,
+    and ∩ is ``size(array_intersect(A, B))`` row-locally — no shingle
+    explode, no (id, shingle)-keyed join, no groupBy over the
+    pair×shingle expansion. Union is |A|+|B|−∩; the ratio is floored to
+    4 dp before thresholding so the decision is reproducible across
+    engines. Docs with no shingles (< n tokens) have no ``sets`` row, so
+    their pairs drop out of the inner joins.
 
-    ``sizes`` (r16): optional precomputed ``(id, sz)`` per-doc distinct-
-    shingle counts. Callers holding the :func:`shingle_sets` array form
-    pass the row-local ``size(__shset)`` projection and skip the groupBy
-    aggregation over the full shingle frame — at 100 TB that aggregation
-    shuffles one row per corpus document for a verify that touches only
-    the candidate docs. Value-identical: the exploded row count per doc
-    IS the array size.
-
-    ``sets`` (r16 batch 2): the :func:`shingle_sets` array frame itself.
-    When given (and ``JACCARD_ARRAY_INTERSECT``), the verify attaches
-    each pair's two DISTINCT-shingle arrays by two id-keyed joins and
-    computes ∩ as ``size(array_intersect(A, B))`` row-locally — the
-    exploded form's (id_b, shingle)-keyed join (which first expands each
-    pair to |A| rows) and its groupBy(id_a, id_b) disappear. Identical
-    decisions: arrays are distinct per doc, so the intersect size equals
-    the old per-pair matched-shingle count; docs with no shingles
-    (< n tokens) are absent from BOTH frames, so inner-join semantics
-    match; and the jacc_r arithmetic is the same integer division.
-    ``sh``/``sizes`` are ignored on this path."""
-    if sets is not None and JACCARD_ARRAY_INTERSECT:
-        a = sets.select(
-            F.col(id_col).alias("id_a"), F.col("__shset").alias("__sa")
-        )
-        b = sets.select(
-            F.col(id_col).alias("id_b"), F.col("__shset").alias("__sb")
-        )
-        inter = F.size(F.array_intersect("__sa", "__sb"))
-        # drop zero-overlap pairs BEFORE the threshold filter (r17,
-        # ADVICE r16): the exploded-join path drops them structurally
-        # (no shingle row survives its inner join), so this keeps the
-        # two paths row-identical for EVERY threshold, including the
-        # degenerate threshold <= 0 — value-identical for all callers
-        # (0.6–0.8), zero plan cost (one row-local predicate).
-        return (
-            pairs.join(a, "id_a")
-            .join(b, "id_b")
-            .select(
-                "id_a",
-                "id_b",
-                (
-                    F.floor(
-                        inter
-                        / (F.size("__sa") + F.size("__sb") - inter)
-                        * 10000
-                    )
-                    / 10000
-                ).alias("jacc_r"),
-                inter.alias("__inter"),
-            )
-            .where((F.col("__inter") > 0) & (F.col("jacc_r") >= threshold))
-            .select("id_a", "id_b", "jacc_r")
-        )
-    if sizes is None:
-        sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    inter = (
-        pairs.join(sh.select(F.col(id_col).alias("id_a"), "shingle"), "id_a")
-        .join(sh.select(F.col(id_col).alias("id_b"), "shingle"), ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
+    Returns (id_a, id_b, jacc_r) for pairs with a NONZERO overlap and
+    ``jacc_r >= threshold``: the overlap guard defines the result for a
+    degenerate ``threshold <= 0`` as "pairs that share a shingle"."""
+    a = sets.select(F.col(id_col).alias("id_a"), F.col("__shset").alias("__sa"))
+    b = sets.select(F.col(id_col).alias("id_b"), F.col("__shset").alias("__sb"))
+    inter = F.size(F.array_intersect("__sa", "__sb"))
     return (
-        inter.join(sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sza")), "id_a")
-        .join(sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("szb")), "id_b")
+        pairs.join(a, "id_a")
+        .join(b, "id_b")
         .select(
             "id_a",
             "id_b",
-            (F.floor(
-                F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter")) * 10000
-            ) / 10000).alias("jacc_r"),
+            (
+                F.floor(inter / (F.size("__sa") + F.size("__sb") - inter) * 10000)
+                / 10000
+            ).alias("jacc_r"),
+            inter.alias("__inter"),
         )
-        .where(F.col("jacc_r") >= threshold)
+        .where((F.col("__inter") > 0) & (F.col("jacc_r") >= threshold))
+        .select("id_a", "id_b", "jacc_r")
     )
 
 
@@ -791,13 +719,9 @@ def minhash_near_dups(
     extraction twice and trades ONE saved shuffle for interpreted
     higher-order-function evaluation of the 12 hash minima, while this
     path's signature aggregation is whole-stage-codegen'd."""
-    # r16: the checkpointed frame is the per-doc shingle ARRAY, not the
-    # exploded rows — the exploded form is a map-only explode away for
-    # the signature pipeline and the verify's intersection joins, and the
-    # per-doc set size becomes a row-local size(__shset) instead of a
-    # groupBy-count over the whole shingle frame (one corpus-wide
-    # aggregation removed from every near-dup run; bit-identical, the
-    # explode of the array IS the old frame row-for-row)
+    # the checkpointed frame is the per-doc shingle ARRAY, not the
+    # exploded rows: the signature pipeline explodes it map-only, and
+    # jaccard_verify intersects the arrays directly
     sets_base = shingle_sets(df, id_col, text_col, n)
     target = (
         shingle_partitions or df.sparkSession.sparkContext.defaultParallelism
@@ -806,7 +730,6 @@ def minhash_near_dups(
         sets_base = sets_base.repartition(target, F.col(id_col))
     sets = sets_base.localCheckpoint(eager=False)
     sh = sets.select(F.col(id_col), F.explode("__shset").alias("shingle"))
-    sizes = sets.select(F.col(id_col), F.size("__shset").alias("sz"))
     # wide signature path: ONE groupBy(doc) with 12 min columns + row-local
     # band keys — two fewer shuffles than the long (doc,j) form, same values
     sigs_wide = minhash_signatures_wide(
@@ -823,7 +746,7 @@ def minhash_near_dups(
     pairs = _pairs_from_band_keys(
         band_key, id_col, max_bucket_size
     ).localCheckpoint(eager=False)
-    return jaccard_verify(pairs, sh, id_col, threshold, sizes=sizes, sets=sets)
+    return jaccard_verify(pairs, sets, id_col, threshold)
 
 
 def simhash_signatures(

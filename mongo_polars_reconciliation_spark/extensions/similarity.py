@@ -1,18 +1,24 @@
 """Similarity search over embedding columns (array<float>).
 
-Cosine arithmetic fixes the IEEE operation order (left fold), making every
-score bit-reproducible across engines (DuckDB's ``list_reduce`` mirrors it
-exactly). Two interchangeable implementations produce those identical
-doubles: built-in higher-order functions (``zip_with`` + ``aggregate``,
-JVM-side) and Arrow-batched numpy kernels that vectorize ACROSS rows while
-keeping the per-row scalar op sequence (sequential per-dimension
-accumulation — never ``np.sum``/BLAS, which reorder additions). The Arrow
-kernels are the default hot path: r7 interleaved A/B at sf0.1 measured the
-expression path dominated by Catalyst ANALYSIS of the huge literal-centroid
-trees (nlist×dim fold lambdas ≈ 10k nodes), not compute —
-knn_join_multiprobe 7.11→2.96 s min, semantic_dedup_fitted 6.15→2.28 s
-with the kernels. Centroid averaging routes per-dimension sums through
-DECIMAL so shuffle order can't change the result.
+Invariants every score here keeps, so the DuckDB oracles replay each one
+bit-for-bit:
+
+- **Left-fold IEEE order.** Every dot product and squared distance is the
+  accumulator sequence ``((0.0 + x0) + x1) + ...``, sequential in the
+  dimension (DuckDB's ``list_reduce`` mirrors it exactly). Expressions use
+  ``aggregate`` over ``zip_with``; the Arrow kernels (``_pair_dot``, the
+  assignment kernel, the IVF-PQ LUT kernel) vectorize ACROSS rows while
+  keeping that per-row op sequence — never ``np.sum``/BLAS, which reorder
+  additions.
+- **Stable (distance, cid) tie-break.** Nearest-centroid assignment and
+  multi-probe ranking order centroids by squared distance, ties to the
+  lower cid.
+- **Order-free averages.** Centroid means route per-dimension sums through
+  DECIMAL, so shuffle order cannot change a centroid bit.
+
+Driver-known tables (centroids, query vectors, per-cell LUTs) enter plans
+as literal arrays (see ``functions/localrel.py``), not joined frames; the
+one size-gated exception is ``IVFPQ_LUT_LITERAL_MAX_DOUBLES``.
 
 Scale paths:
 - brute-force top-k: one broadcast of the query vector, one pass, one
@@ -37,32 +43,16 @@ def _fold_sum(arr: Column) -> Column:
 
 
 def _pair_dot_kernel_py(va, vb):
-    """Arrow-vectorized pair dot product with the EXACT left-fold IEEE
-    order of ``_fold_sum(zip_with(va, vb, *))``: the accumulator starts
-    at 0.0 and adds one per-dimension product at a time — sequential in
-    the dimension, vectorized ACROSS the batch (``acc += a[:,j]*b[:,j]``)
-    — so every pair sees the scalar op sequence
-    ``((0.0 + a0·b0) + a1·b1) + ...`` bit-for-bit, and the DuckDB
-    ``list_reduce`` mirror stays exact. Never ``np.sum``/BLAS here: both
-    reorder additions (pairwise summation / dgemm) and break the
-    cross-engine bit parity the oracles pin.
+    """Arrow-vectorized pair dot product in the left-fold IEEE order: the
+    accumulator starts at 0.0 and adds one per-dimension product at a
+    time — sequential in the dimension, vectorized ACROSS the batch
+    (``acc += a[:,j]*b[:,j]``) — so every pair sees the scalar op sequence
+    ``((0.0 + a0·b0) + a1·b1) + ...`` bit-for-bit.
 
-    Why a Python-side kernel in a repo that bans row Python in hot paths:
-    the blocked self-joins score ~n·block_size pairs through an
-    INTERPRETED Catalyst fold (128 expression-tree evaluations per pair
-    at dim=64); VERDICT r6 named it the top remaining perf lever and
-    sanctioned Pandas-over-Arrow for exactly this surface. The unrolled
-    ``GetArrayItem`` codegen alternative measured ~40% SLOWER in r6
-    (memory: spark-perf-lessons); this kernel is the measured winner.
-
-    r7 interleaved A/B at sf0.1 (mins of 3 reps, one session): with the
-    assignment kernel also on, sim_knn_join_multiprobe 7.11→2.96 s and
-    sim_semantic_dedup_fitted 6.15→2.28 s. On the small label-block
-    queries the pair counts are low enough that the Python-worker
-    round-trip floor eats the win (sim_knn_join 2.40→2.10,
-    sim_semantic_dedup 1.43→1.54, dedup_embedding_cosine 1.41→1.47 —
-    the latter two inside noise); kept on everywhere for one code path,
-    with ``PAIR_DOT_ARROW=False`` restoring the fold."""
+    Why a Python-side kernel: the blocked self-joins score ~n·block_size
+    pairs, and an interpreted Catalyst fold costs 2·dim expression-tree
+    evaluations per pair; one Arrow batch per task replaces them. (An
+    unrolled ``GetArrayItem`` codegen form measured slower.)"""
     import numpy as np
     import pandas as pd
 
@@ -76,10 +66,6 @@ def _pair_dot_kernel_py(va, vb):
     return pd.Series(acc)
 
 
-# A/B hook (bench-noise discipline: interleave implementations in ONE
-# session when measuring). True = Arrow kernel, False = interpreted fold.
-PAIR_DOT_ARROW = True
-
 # The pandas_udf wrapper is built lazily: the decorator parses its return
 # type through the active SparkContext, so a module-level decoration would
 # make `import similarity` require a running session.
@@ -87,16 +73,14 @@ _PAIR_DOT_UDF = None
 
 
 def _pair_dot(va: Column, vb: Column) -> Column:
-    """Dot product of two array<double> pair columns; both implementations
-    produce bit-identical doubles (same scalar IEEE op order)."""
+    """Dot product of two array<double> pair columns (left-fold order, see
+    :func:`_pair_dot_kernel_py`)."""
     global _PAIR_DOT_UDF
-    if PAIR_DOT_ARROW:
-        if _PAIR_DOT_UDF is None:
-            from pyspark.sql.types import DoubleType
+    if _PAIR_DOT_UDF is None:
+        from pyspark.sql.types import DoubleType
 
-            _PAIR_DOT_UDF = F.pandas_udf(_pair_dot_kernel_py, DoubleType())
-        return _PAIR_DOT_UDF(va, vb)
-    return _fold_sum(F.zip_with(va, vb, lambda x, y: x * y))
+        _PAIR_DOT_UDF = F.pandas_udf(_pair_dot_kernel_py, DoubleType())
+    return _PAIR_DOT_UDF(va, vb)
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -161,23 +145,6 @@ def label_centroids(
     )
 
 
-def _sq_dist(vcol: Column, cent: list[float]) -> Column:
-    """Squared L2 distance to a literal centroid, left-fold order — the
-    same IEEE operation sequence as the SQL mirror, so both engines get
-    bit-identical doubles."""
-    arr = F.array(*[F.lit(float(x)) for x in cent])
-    return _fold_sum(F.zip_with(vcol, arr, lambda x, y: (x - y) * (x - y)))
-
-
-# A/B hook for the centroid-assignment implementation. True = Arrow
-# kernel (one UDF node), False = literal-centroid Catalyst expressions.
-# At sf0.1 the expression path's plan tree is ~10k nodes (nlist=32
-# centroids × dim=64 fold lambdas) and ANALYSIS/codegen of that tree —
-# not compute — dominated the fitted queries (measured r7: kmeans_fit
-# 3.1 s + probe_assignments 2.7 s of the ~8 s total, vs 0.17 s for the
-# actual pair join). The kernel collapses it to one node; same doubles.
-ASSIGN_ARROW = True
-
 # Centroids per distance block inside the assignment kernel: transient
 # kernel memory is batch_rows × _ASSIGN_CHUNK doubles (~80 MB at the
 # 10k-row Arrow default) however large nlist grows. Module-level so the
@@ -189,14 +156,11 @@ def _nearest_cids_udf(cents: list[list[float]], nprobe: int):
     """Build a pandas_udf mapping array<double> → the ``nprobe`` nearest
     centroid ids in (squared distance, cid) ascending order.
 
-    Bit-parity contract: per-centroid distance uses the accumulator
-    sequence ``((0.0 + t0²) + t1²) + ...`` (vectorized across the batch,
-    sequential in the dimension) — the exact IEEE op order of
-    :func:`_sq_dist`'s left fold — and a STABLE argsort on the distance
-    ties by original column position, i.e. ascending cid, the exact
-    ordering of ``array_sort`` over (d, cid) structs / ``least``. The
-    DuckDB oracles replay the same arithmetic, so both implementations
-    are interchangeable bit-for-bit (parity-tested)."""
+    Per-centroid distance is the left-fold accumulator sequence
+    ``((0.0 + t0²) + t1²) + ...`` (vectorized across the batch and the
+    centroids, sequential in the dimension), and a STABLE argsort on the
+    distance breaks ties by column position, i.e. ascending cid. The
+    DuckDB oracles replay the same arithmetic bit-for-bit."""
     C = [[float(x) for x in c] for c in cents]
     # captured at build time (driver) so tests that shrink the chunk see
     # it inside worker processes — a module global read inside fn would
@@ -214,17 +178,13 @@ def _nearest_cids_udf(cents: list[list[float]], nprobe: int):
         carr = np.asarray(C, dtype=np.float64)
         rows = np.arange(m)[:, None]
         best_d = best_c = None
-        # Vectorized across CENTROIDS per dimension (r8, advice item): the
-        # old per-centroid Python loop was O(nlist·dim) numpy calls per
-        # batch — fine at nlist=32, the bottleneck once auto_nlist grows
-        # into the thousands. ``D = D + t*t`` on an (m, chunk) matrix does
-        # the identical per-element IEEE accumulation (same j order, same
-        # 0.0 seed), so bit-parity with _sq_dist's left fold is preserved.
-        # Chunking bounds transient memory at m×chunk doubles; the chunk
-        # merge keeps the (distance, cid) tie-break exactly because chunks
-        # are processed in ascending-cid order and every candidate list is
-        # already (d, cid)-sorted, so a STABLE argsort over concatenated
-        # distances resolves ties to the lower cid.
+        # ``D = D + t*t`` on an (m, chunk) matrix keeps the per-element
+        # left-fold order (same j order, same 0.0 seed). Chunking bounds
+        # transient memory at m×chunk doubles; the merge keeps the
+        # (distance, cid) tie-break because chunks arrive in ascending-cid
+        # order and each candidate list is already (d, cid)-sorted, so a
+        # STABLE argsort over the concatenation resolves ties to the lower
+        # cid.
         for lo in range(0, len(C), chunk):
             cc = carr[lo : lo + chunk]
             D = np.zeros((m, cc.shape[0]), dtype=np.float64)
@@ -248,19 +208,11 @@ def _nearest_cids_udf(cents: list[list[float]], nprobe: int):
 
 
 def cluster_assign(vcol: Column, cents: list[list[float]]) -> Column:
-    """Nearest-centroid id for a vector column: argmin of squared distance
-    with a deterministic cid tie-break, zero joins, zero shuffles.
-    Centroids are k×dim doubles, broadcast-scale by construction. Arrow
-    kernel by default (see ``ASSIGN_ARROW``); the ``least`` over
-    (distance, cid) structs is the expression-path fallback — identical
-    doubles either way."""
-    if ASSIGN_ARROW:
-        return F.element_at(_nearest_cids_udf(cents, 1)(vcol), 1)
-    structs = [
-        F.struct(_sq_dist(vcol, c).alias("d"), F.lit(i).cast("int").alias("cid"))
-        for i, c in enumerate(cents)
-    ]
-    return F.least(*structs)["cid"]
+    """Nearest-centroid id for a vector column: the (squared distance, cid)
+    argmin of the assignment kernel — one UDF node, zero joins, zero
+    shuffles. Centroids are k×dim doubles, broadcast-scale by
+    construction."""
+    return F.element_at(_nearest_cids_udf(cents, 1)(vcol), 1)
 
 
 def kmeans_fit(
@@ -274,9 +226,9 @@ def kmeans_fit(
 
     Init = the vectors of the ``k`` smallest ids (TakeOrderedAndProject —
     k rows to the driver, no global sort); each of the fixed ``n_iter``
-    rounds is one full-scan projection (nearest-centroid via literal
-    arrays, no join) plus one (cid, pos) hash-aggregate whose output is
-    k×dim rows. Per-dimension means go through DECIMAL so shuffle order
+    rounds is one full-scan projection (nearest-centroid via the
+    assignment kernel, no join) plus one (cid, pos) hash-aggregate whose
+    output is k×dim rows. Per-dimension means go through DECIMAL so shuffle order
     can't change a centroid bit. Empty clusters keep their previous
     centroid. The centroids never leave broadcast scale, so the loop's
     driver round-trips carry k×dim doubles, not data.
@@ -324,34 +276,18 @@ def kmeans_fit(
     return cents
 
 
-# A/B hook for the driver-known-constant plumbing (r16 optimization
-# round, guide §1.2 fixed per-job work). True = tiny driver-known tables
-# become literal plan expressions — the centroid lookup in
-# ivf_residuals, the per-cell LUTs in ivfpq_topk and the query-vector
-# lookup in topk_ivf index constant arrays (one F.expr parse, see
-# functions/localrel.py) instead of parallelize+broadcast-join frames —
-# and artifact loads sort driver-side instead of via an orderBy
-# exchange. False = the original parallelize/broadcast-join/orderBy
-# forms. Identical doubles either way — pinned in
-# tests/test_properties.py. (The literal-plan artifact WRITE was
-# measured ~0.15 s slower than the single-slice parallelize write and
-# rejected — see save_centroids.)
-ARTIFACT_LOCAL_PLAN = True
-
-# r17 size gate (VERDICT r16 #3): the per-cell LUT CASE in ivfpq_topk
-# folds nprobe × m × ksub double literals into the plan. At model scale
-# (the pinned geometry: 2 × 4 × 8 = 64 doubles) that is the measured
-# win; past this budget the expression text itself would become a
-# parser/analyzer cost, so larger geometries route to the broadcast
-# lut_df form (bit-equal by the ARTIFACT_LOCAL_PLAN pin). 65536 doubles
-# ≈ 1.4 MB of expression text — parse-trivial; anything beyond is no
-# longer "model scale".
+# Size gate for the per-cell LUT CASE in ivfpq_topk, which folds
+# nprobe × m × ksub double literals into the plan. At model scale (the
+# pinned geometry: 2 × 4 × 8 = 64 doubles) the literal is the cheaper
+# plan; past this budget the expression text itself becomes a
+# parser/analyzer cost, so larger geometries take the broadcast lut_df
+# join (same doubles). 65536 doubles ≈ 1.4 MB of expression text.
 IVFPQ_LUT_LITERAL_MAX_DOUBLES = 65536
 
 
 def save_centroids(spark, cents: list[list[float]], path: str) -> None:
     """Persist a fitted centroid table to parquet — the vector-side model
-    artifact (r10, the ``bpe_save_merges`` treatment): a real pipeline
+    artifact (the ``bpe_save_merges`` treatment): a real pipeline
     fits ONCE and assigns/probes many corpora and ingest waves from the
     stored table, instead of re-running Lloyd per job. Schema is
     (cid int, c array<double>); parquet stores the doubles bit-exactly,
@@ -363,11 +299,11 @@ def save_centroids(spark, cents: list[list[float]], path: str) -> None:
     createDataFrame splits driver rows across defaultParallelism python
     partitions and the write then pays a Python-worker round trip per
     slice — measured ~4 s for 32 rows at local[32] vs 0.3 s single-slice
-    (and one slice means one output file, no coalesce needed). r16
-    measured-and-rejected: an inline()-literal JVM write (no Python
-    worker at all) ran ~0.15 s SLOWER warm — codegen of the k×dim-
-    literal Generate costs more than the one worker round trip it
-    saves — so the single-slice parallelize stays."""
+    (and one slice means one output file, no coalesce needed). An
+    inline()-literal JVM write (no Python worker at all) ran ~0.15 s
+    SLOWER warm — codegen of the k×dim-literal Generate costs more than
+    the one worker round trip it saves — so the single-slice parallelize
+    stays."""
     rows = [(i, [float(x) for x in c]) for i, c in enumerate(cents)]
     spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), "cid int, c array<double>"
@@ -379,7 +315,7 @@ def load_centroids(spark, path: str) -> list[list[float]]:
     assignment kernels close over. The collect is nlist rows — the same
     driver-scale round-trip ``kmeans_fit`` itself performs per Lloyd
     round, not a data collect. The cid sort runs driver-side over those
-    nlist rows (r16): an ``orderBy`` here planned a range-partitioned
+    nlist rows: an ``orderBy`` here planned a range-partitioned
     sort (bounds-sampling job + exchange) to order rows a driver loop
     can order for free."""
     rows = spark.read.parquet(path).collect()
@@ -402,7 +338,7 @@ def pq_fit(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> list[list[list[float]]]:
-    """Product-quantization codebooks (r10): split each vector into ``m``
+    """Product-quantization codebooks: split each vector into ``m``
     contiguous subspaces of dim/m dimensions and run the deterministic
     Lloyd fit of :func:`kmeans_fit` independently per subspace — returns
     ``books[m][ksub][dim/m]``. PQ is the canonical 100 TB ANN memory
@@ -410,8 +346,7 @@ def pq_fit(
     codes, so the candidate scan reads m bytes per row instead of the
     vector, and exact vectors are touched only for the re-rank survivors.
 
-    r16 (optimization round, guide §1.2/§2.4): the ``m`` independent
-    subspace fits are FUSED into one loop — one (id, double-vector)
+    The ``m`` independent subspace fits are FUSED into one loop — one (id, double-vector)
     checkpoint instead of m, ONE init collect (the k smallest ids are the
     same rows for every subspace; slicing the collected vectors equals
     collecting the sliced projections), and per Lloyd round ONE job that
@@ -490,7 +425,7 @@ def save_pq_codebooks(
 ) -> None:
     """Persist PQ codebooks to parquet — (sub, cid, c array<double>) rows,
     bit-exact doubles, single-slice local relation (the
-    :func:`save_centroids` rationale, incl. the r16 rejection of the
+    :func:`save_centroids` rationale, incl. the rejected
     inline()-literal write). m×ksub rows — driver scale."""
     rows = [
         (s, i, [float(x) for x in c])
@@ -569,7 +504,7 @@ def pq_topk_adc(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k via PQ asymmetric-distance scoring with exact
-    re-rank (r10): the query's per-subspace lookup table (ksub squared
+    re-rank: the query's per-subspace lookup table (ksub squared
     distances per subspace, computed driver-side with the shared left
     fold) turns each row's code into an approximate squared L2 distance
     — m array lookups + m-1 additions per row, no vector arithmetic in
@@ -630,9 +565,10 @@ def pq_topk_adc(
 
 
 def _lut_sqdists(q_sub: list[float], book: list[list[float]]) -> list[float]:
-    """Squared distances of one query subvector to every sub-centroid, the
-    shared left-fold accumulator order (``((0.0+t0²)+t1²)+...``) so the
-    doubles match `_sq_dist` / the SQL ``list_reduce`` bit-for-bit."""
+    """Squared distances of one query subvector to every sub-centroid, in
+    the shared left-fold accumulator order (``((0.0+t0²)+t1²)+...``) so
+    the doubles match the assignment kernel and the SQL ``list_reduce``
+    bit-for-bit."""
     lut = []
     for c in book:
         acc = 0.0
@@ -655,41 +591,25 @@ def ivf_residuals(
     product codebooks quantize; FAISS ``IndexIVFPQ`` layout). Assignment
     is the shared Arrow kernel; the centroid lookup indexes a constant
     nested-array literal by blk (nlist×dim doubles folded into the plan
-    once — r16; ``ARTIFACT_LOCAL_PLAN=False`` restores the original
-    broadcast hash join on blk, which paid a parallelize job + broadcast
-    build per materialization for the same nlist rows), and the
-    subtraction a ``zip_with`` — map-side only, zero shuffles, zero
-    joins. Identical doubles either way: both paths subtract the exact
-    same centroid doubles elementwise."""
-    spark = emb.sparkSession
+    once), and the subtraction is a ``zip_with`` — map-side only, zero
+    shuffles, zero joins."""
+    from mongo_polars_reconciliation_spark.functions.localrel import (
+        dbl_nested_array_col,
+    )
+
     assigned = emb.select(
         F.col(id_col),
         _as_double(vec_col).alias("_v"),
         cluster_assign(_as_double(vec_col), coarse).alias("blk"),
     )
-    if ARTIFACT_LOCAL_PLAN:
-        from mongo_polars_reconciliation_spark.functions.localrel import (
-            dbl_nested_array_col,
-        )
-
-        cent_arr = dbl_nested_array_col(coarse)
-        return assigned.select(
-            F.col(id_col),
-            F.zip_with(
-                "_v",
-                F.element_at(cent_arr, F.col("blk") + F.lit(1)),
-                lambda x, c: x - c,
-            ).alias(vec_col),
-            F.col("blk"),
-        )
-    cent_rows = [(i, [float(x) for x in c]) for i, c in enumerate(coarse)]
-    cents_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(cent_rows, 1),
-        "blk int, _cent array<double>",
-    )
-    return assigned.join(F.broadcast(cents_df), "blk").select(
+    cent_arr = dbl_nested_array_col(coarse)
+    return assigned.select(
         F.col(id_col),
-        F.zip_with("_v", "_cent", lambda x, c: x - c).alias(vec_col),
+        F.zip_with(
+            "_v",
+            F.element_at(cent_arr, F.col("blk") + F.lit(1)),
+            lambda x, c: x - c,
+        ).alias(vec_col),
         F.col("blk"),
     )
 
@@ -705,7 +625,7 @@ def ivfpq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF-PQ top-k (r10): coarse cells prune the scan, residual product
+    """IVF-PQ top-k: coarse cells prune the scan, residual product
     codes score the survivors, exact cosine re-ranks — the composition of
     the two persisted artifacts (centroid table + residual codebooks) that
     is the standard billion-scale ANN index (FAISS IVFPQ; Jégou et al.
@@ -714,11 +634,9 @@ def ivfpq_topk(
     those cells' rows are residual-encoded and ADC-scored under a
     per-cell lookup table (the residual query differs per cell, so each
     probed cell gets its own LUT — a literal CASE keyed on blk, m array
-    lookups + m-1 adds per row; ``ARTIFACT_LOCAL_PLAN=False`` — or a LUT
-    volume past ``IVFPQ_LUT_LITERAL_MAX_DOUBLES`` (r17 size gate: the
-    CASE is an O(nprobe·m·ksub) expression string, so past model scale
-    the broadcast form is the right plan) — restores
-    the original broadcast-joined lut_df), and the best ``rerank`` rows by
+    lookups + m-1 adds per row; a LUT volume past
+    ``IVFPQ_LUT_LITERAL_MAX_DOUBLES`` takes a broadcast-joined lut_df
+    instead, same doubles), and the best ``rerank`` rows by
     (adc_r, id) are exactly re-scored. At 100 TB the codes would be a
     precomputed table bucketed by blk, making the probe a partition-pruned
     scan of m-byte codes; this one-shot form recomputes them for the
@@ -758,13 +676,10 @@ def ivfpq_topk(
     lut_literal_ok = (
         len(lut_rows) * m * ksub <= IVFPQ_LUT_LITERAL_MAX_DOUBLES
     )
-    if ARTIFACT_LOCAL_PLAN and lut_literal_ok:
-        # per-cell LUTs as literal CASE expressions keyed on blk (r16):
-        # nprobe cells × m subspaces × ksub doubles folded into the plan
-        # — the fallback's lut_df paid a parallelize job + a broadcast
-        # join build for the same handful of driver-computed doubles.
-        # Every row's blk is one of ``probed`` (the filter above), so the
-        # CASE always matches; identical doubles by construction.
+    if lut_literal_ok:
+        # per-cell LUTs as literal CASE expressions keyed on blk: every
+        # row's blk is one of ``probed`` (the filter above), so the CASE
+        # always matches
         from mongo_polars_reconciliation_spark.functions.localrel import (
             dbl_array_col,
         )
@@ -825,32 +740,18 @@ def ivfpq_topk(
     ).select(id_col, "rank", "cos_r", "adc_r", "blk")
 
 
-# A/B hook for the per-query LUT implementation inside knn_join_ivfpq.
-# True = Arrow kernel (one UDF node computing residual + all m per-cell
-# LUTs); False = the literal-centroid Catalyst fold path (m·ksub
-# interpreted fold expressions per probe row + a broadcast join for the
-# cell centroid). Identical doubles either way — the kernel replays the
-# exact left-fold IEEE op sequence (see _nearest_cids_udf's contract);
-# parity-pinned in tests/test_properties.py.
-LUT_ARROW = True
-
-
 def _pq_luts_udf(coarse: list[list[float]], books: list[list[list[float]]]):
     """Build a pandas_udf mapping (blk, vector) → the m per-subspace ADC
     lookup tables of that vector's residual against its probed cell —
     ``array<array<double>>``, outer index = subspace, inner = sub-centroid.
 
-    Bit-parity contract (r16, the ASSIGN_ARROW treatment applied to the
-    LUT projection): the residual is the elementwise double subtraction
-    ``zip_with(v, cent, x - c)`` computes, and each table entry is the
-    accumulator sequence ``((0.0 + t0²) + t1²) + ...`` over the subspace
-    dims — vectorized across the batch and the sub-centroids, sequential
-    in the dimension — the exact IEEE op order of the
-    ``_fold_sum(zip_with(qs, c, (x-y)·(x-y)))`` literal fold it replaces.
-    Why: the fold path is m·ksub interpreted expression-tree evaluations
-    PER PROBE ROW (m·ksub·dsub ≈ 2k scalar ops each at the pinned
-    geometry) plus a ~10k-node plan the driver re-analyzes per stage —
-    the same ANALYSIS/codegen wall the r7 assignment kernel removed."""
+    The residual is the elementwise double subtraction ``v - cent`` and
+    each table entry is the left-fold accumulator sequence
+    ``((0.0 + t0²) + t1²) + ...`` over the subspace dims (vectorized
+    across the batch and the sub-centroids, sequential in the dimension),
+    so every entry equals :func:`_lut_sqdists` of the row's residual
+    bit-for-bit. One kernel node replaces m·ksub interpreted folds per
+    probe row."""
     C = [[float(x) for x in c] for c in coarse]
     B = [[[float(x) for x in c] for c in book] for book in books]
     m = len(B)
@@ -896,7 +797,7 @@ def knn_join_ivfpq(
     vec_col: str = "embedding",
     res: "DataFrame | None" = None,
 ) -> DataFrame:
-    """IVF-PQ k-NN GRAPH build (r10): every vector, as a query, probes its
+    """IVF-PQ k-NN GRAPH build: every vector, as a query, probes its
     ``nprobe`` nearest coarse cells and meets those cells' members — but
     unlike :func:`knn_join_multiprobe`, the blocked pair scoring is ADC
     (m integer-code lookups into the query's per-cell LUT, no vector
@@ -910,18 +811,15 @@ def knn_join_ivfpq(
     ``res`` (optional): a precomputed :func:`ivf_residuals` frame —
     typically the SAME (usually checkpointed) frame the codebooks were
     fitted on, or at 100 TB the persisted residual/code index table.
-    Passing it skips re-running the assignment kernel + centroid join
+    Passing it skips re-running the assignment kernel + residual lookup
     for the code side; values are identical by construction (the code
     of a row depends only on its own residual).
 
-    Plan shape: residual-encode (map + one broadcast join) → probe
-    assignment (Arrow kernel, map-only) → LUT projection (one Arrow
-    kernel node computing residual + all m per-cell tables; the
-    ``LUT_ARROW=False`` fallback is the original m·ksub literal folds
-    per probe row + a cell-centroid broadcast join — identical doubles,
-    parity-pinned) → blocked equi-join on the cell id → per-query ADC
-    cut (window over the blocked pairs) → exact re-rank join on the
-    survivor ids. A pair
+    Plan shape: residual-encode (map-only) → probe assignment (Arrow
+    kernel, map-only) → LUT projection (one Arrow kernel node computing
+    residual + all m per-cell tables) → blocked equi-join on the cell id
+    → per-query ADC cut (window over the blocked pairs) → exact re-rank
+    join on the survivor ids. A pair
     (q, x) arises at most once (x lives in ONE cell; q probes it or
     not), so no pair dedup is needed. Every ranking input is rounded
     with id tie-breaks; all folds share the engine accumulator order, so
@@ -929,9 +827,6 @@ def knn_join_ivfpq(
 
     Output (vec_id, rank, neighbor_id, cos_r, adc_r)."""
     m = len(books)
-    dsub = len(books[0][0])
-    spark = emb.sparkSession
-
     if res is None:
         res = ivf_residuals(emb, coarse, id_col, vec_col)
     codes = pq_encode(res, books, id_col, vec_col, keep=("blk",)).select(
@@ -939,59 +834,22 @@ def knn_join_ivfpq(
     )
 
     probes = probe_assignments(emb, coarse, nprobe, id_col, vec_col)
-    if LUT_ARROW:
-        # one kernel node computes residual + all m LUTs (identical
-        # doubles — see _pq_luts_udf); the probed cell's centroid is
-        # captured in the kernel, so the cents_df broadcast join
-        # disappears from the plan too
-        luts = probes.select(
-            F.col(id_col).alias("__qid"),
-            F.col("__blk"),
-            _pq_luts_udf(coarse, books)(
-                F.col("__blk"), F.col("__v")
-            ).alias("__luts"),
+    # the probed cell's centroid is captured in the kernel, so no
+    # centroid join is needed for the residual
+    luts = probes.select(
+        F.col(id_col).alias("__qid"),
+        F.col("__blk"),
+        _pq_luts_udf(coarse, books)(F.col("__blk"), F.col("__v")).alias(
+            "__luts"
+        ),
+    )
+    adc = None
+    for s in range(m):
+        term = F.element_at(
+            F.element_at(F.col("__luts"), s + 1),
+            F.element_at(F.col("code"), s + 1) + F.lit(1),
         )
-        adc = None
-        for s in range(m):
-            term = F.element_at(
-                F.element_at(F.col("__luts"), s + 1),
-                F.element_at(F.col("code"), s + 1) + F.lit(1),
-            )
-            adc = term if adc is None else adc + term
-    else:
-        cent_rows = [(i, [float(x) for x in c]) for i, c in enumerate(coarse)]
-        cents_df = spark.createDataFrame(
-            spark.sparkContext.parallelize(cent_rows, 1),
-            "__blk int, _cent array<double>",
-        )
-        qr = F.zip_with("__v", "_cent", lambda x, c: x - c)
-        lut_cols = []
-        for s, book in enumerate(books):
-            qs = F.slice(qr, s * dsub + 1, dsub)
-            lut_cols.append(
-                F.array(
-                    *[
-                        _fold_sum(
-                            F.zip_with(
-                                qs,
-                                F.array(*[F.lit(float(x)) for x in c]),
-                                lambda x, y: (x - y) * (x - y),
-                            )
-                        )
-                        for c in book
-                    ]
-                ).alias(f"__lut{s}")
-            )
-        luts = probes.join(F.broadcast(cents_df), "__blk").select(
-            F.col(id_col).alias("__qid"), F.col("__blk"), *lut_cols
-        )
-        adc = None
-        for s in range(m):
-            term = F.element_at(
-                F.col(f"__lut{s}"),
-                F.element_at(F.col("code"), s + 1) + F.lit(1),
-            )
-            adc = term if adc is None else adc + term
+        adc = term if adc is None else adc + term
     pairs = (
         luts.join(codes, "__blk")
         .where(F.col("__qid") != F.col("__xid"))
@@ -1182,43 +1040,33 @@ def topk_ivf(
     """IVF-style approximate top-k: rank centroids by cosine to the query,
     keep the best ``nprobe`` labels, run exact scoring only inside those
     partitions. Centroid scoring happens on tiny aggregated rows (driver-side
-    broadcast scale), the big scan is pruned by the label filter."""
+    broadcast scale), the big scan is pruned by the label filter. A
+    ``query_vec`` whose length differs from the embedding dimension raises
+    instead of returning a wrong ranking."""
+    from mongo_polars_reconciliation_spark.functions.localrel import (
+        dbl_array_col,
+    )
+
     cents = label_centroids(emb, id_col, vec_col, label_col)
-    # r17 (ADVICE r16): on a malformed query_vec SHORTER than the
-    # embedding dim the two flag paths diverged silently — the broadcast
-    # join dropped unmatched positions (partial dot product) while the
-    # literal element_at raised under ANSI / returned NULL otherwise.
-    # This row-local guard makes BOTH paths fail identically and loudly
-    # before either lookup runs; for well-formed input it keeps every
-    # row (assert_true returns NULL) and costs one predicate on the
-    # nlist×dim centroid rows — model scale, never data scale.
+    # query components as one literal array indexed by pos; try_element_at
+    # so a query SHORTER than the embedding reaches the dim guard below
+    # as NULLs instead of an index error
+    qarr = dbl_array_col(query_vec)
+    joined = cents.withColumn(
+        "qval", F.try_element_at(qarr, F.col("pos") + F.lit(1))
+    )
+    # Dim guard over the nlist aggregated centroid rows (model scale): each
+    # label's centroid covers positions 0..dim-1, so max(pos) + 1 must equal
+    # len(query_vec). A shorter query would score a partial dot product and
+    # a longer one would NULL every cos_r in ``cosine``'s zip_with — both
+    # silent wrong answers, so both fail loudly here.
     dim_guard = F.assert_true(
-        F.col("pos") < F.lit(len(query_vec)),
+        F.col("__dim") == F.lit(len(query_vec)),
         F.lit(
             f"topk_ivf: query_vec has {len(query_vec)} components but the "
-            f"embedding centroids carry higher positions — dim mismatch"
+            f"embedding dimension differs — dim mismatch"
         ),
     )
-    cents = cents.where(dim_guard.isNull())
-    if ARTIFACT_LOCAL_PLAN:
-        # query components as one literal array indexed by pos (r16): the
-        # fallback's qdf paid a default-parallelism parallelize (one
-        # Python task per slice) + a broadcast join for dim driver-known
-        # doubles. pos ∈ [0, dim) by construction (posexplode of
-        # dim-length vectors), so the lookup always hits; same doubles.
-        from mongo_polars_reconciliation_spark.functions.localrel import (
-            dbl_array_col,
-        )
-
-        qarr = dbl_array_col(query_vec)
-        joined = cents.withColumn(
-            "qval", F.element_at(qarr, F.col("pos") + F.lit(1))
-        )
-    else:
-        qdf = cents.sparkSession.createDataFrame(
-            [(i, float(v)) for i, v in enumerate(query_vec)], ["pos", "qval"]
-        )
-        joined = cents.join(F.broadcast(qdf), "pos")
     cs = (
         joined.groupBy(label_col)
         .agg(
@@ -1230,7 +1078,9 @@ def topk_ivf(
                     "double"
                 )
             ).alias("cnorm"),
+            (F.max("pos") + F.lit(1)).alias("__dim"),
         )
+        .where(dim_guard.isNull())
         .select(
             F.col(label_col),
             F.round(F.col("dot") / F.col("cnorm"), 6).alias("c_cos"),
@@ -1539,9 +1389,9 @@ def probe_assignments(
     """(id, __v, __n, __blk) rows: each vector assigned to its ``nprobe``
     NEAREST fitted centroids — the multi-probe generalization of
     :func:`cluster_assign` (which is exactly ``nprobe=1``). Ranking is
-    (squared distance, cid) ascending via ``array_sort`` over literal-
-    centroid structs, the same argmin-with-cid-tie-break contract, so the
-    first probe of every vector equals its single-block assignment.
+    (squared distance, cid) ascending in the assignment kernel, the same
+    argmin-with-cid-tie-break contract, so the first probe of every vector
+    equals its single-block assignment.
 
     Why: single-block ANN (``knn_join``/``semantic_dedup``) is blind to
     nearest-neighbor pairs straddling a cluster boundary; a vector sitting
@@ -1549,31 +1399,14 @@ def probe_assignments(
     closest cluster. Cost: each vector appears in ``nprobe`` blocks, so
     downstream blocked self-joins grow ≤ nprobe²× (still bounded by block
     sizes, never n²). Zero joins, zero shuffles here — the assignment is a
-    pure projection (Arrow kernel by default, literal-centroid
-    ``array_sort`` structs as the ``ASSIGN_ARROW=False`` fallback; same
-    doubles, same (d, cid) ordering), map-only at 100 TB."""
+    pure projection, map-only at 100 TB."""
     base = _with_norm(emb.select(id_col, vec_col), vec_col, "__")
-    if ASSIGN_ARROW:
-        probes = _nearest_cids_udf(cents, nprobe)(F.col("__v"))
-        return base.select(
-            F.col(id_col),
-            F.col("__v"),
-            F.col("__n"),
-            F.explode(probes).alias("__blk"),
-        )
-    structs = [
-        F.struct(
-            _sq_dist(F.col("__v"), c).alias("d"),
-            F.lit(i).cast("int").alias("cid"),
-        )
-        for i, c in enumerate(cents)
-    ]
-    probes = F.slice(F.array_sort(F.array(*structs)), 1, nprobe)
+    probes = _nearest_cids_udf(cents, nprobe)(F.col("__v"))
     return base.select(
         F.col(id_col),
         F.col("__v"),
         F.col("__n"),
-        F.explode(F.transform(probes, lambda s: s["cid"])).alias("__blk"),
+        F.explode(probes).alias("__blk"),
     )
 
 
@@ -1595,7 +1428,7 @@ def knn_join_multiprobe(
     grows — property-pinned in tests), catching boundary-straddling
     neighbors single-block blocking misses.
 
-    ``cents`` (r10): pass a pre-fitted centroid list (typically
+    ``cents``: pass a pre-fitted centroid list (typically
     :func:`load_centroids` of a persisted artifact) to skip the in-
     session Lloyd fit — the fit-once/assign-many production shape;
     nlist/n_iter are ignored when given.
@@ -1684,8 +1517,8 @@ def semantic_dedup_fitted(
     clusters with cosine ≥ ``threshold``. The real-corpus form (no label
     column exists at 100 TB) with the boundary-blindness of single-block
     blocking reduced: near-duplicates split across a cluster edge still
-    meet through their second probe. Returns surviving ids. ``cents``
-    (r10): a pre-fitted centroid list skips the in-session fit — see
+    meet through their second probe. Returns surviving ids. ``cents``:
+    a pre-fitted centroid list skips the in-session fit — see
     :func:`knn_join_multiprobe`."""
     if cents is None:
         nlist = _resolve_nlist(nlist, emb, target_block_rows)
@@ -1731,7 +1564,7 @@ def assignment_state(
 ) -> DataFrame:
     """(blk, vec_id) probe-assignment rows of a corpus under PERSISTED
     centroids — the vector-side analog of the text pipeline's
-    ``band_state`` (r10): the accumulated assignment table the
+    ``band_state``: the accumulated assignment table the
     incremental semantic ingest probes, BUCKETED by blk in production
     (``write_bucketed_state(..., key='blk')``; plan-pinned in
     tests/test_bucketing.py) so the (huge) state side of the collision
@@ -1753,7 +1586,7 @@ def ingest_novel_semantic(
     vec_col: str = "embedding",
     mis_max_iter: int = 25,
 ) -> DataFrame:
-    """Incremental SEMANTIC ingest (r10) — the near-dup ingest family
+    """Incremental SEMANTIC ingest — the near-dup ingest family
     (extensions/dedup.py:ingest_novel_neardup) extended to embedding
     space: of an arriving batch of vectors, admit those that are not
     semantic duplicates (cosine ≥ ``threshold``, the SemDeDup rule) of
@@ -2113,7 +1946,7 @@ def ann_recall_at_k_sampled(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """The recall probe AT CORPUS SCALE (r9): :func:`ann_recall_at_k`'s
+    """The recall probe AT CORPUS SCALE: :func:`ann_recall_at_k`'s
     exact-truth side is O(n²) — fine as a harness, unrunnable on a
     billion vectors. This composition makes the docstring's "run on a
     representative sample" real: ``sample_fixed_per_stratum`` carves a

@@ -33,29 +33,13 @@ STOPWORDS: dict[str, list[str]] = {
 
 TOKEN_PATTERN = "[a-z]+|[0-9]+|[^a-z0-9 ]"
 
-# A/B hook (r16 optimization round): True routes tiny driver-known tables
-# (learned BPE merges, stopword dictionaries) through a pure-JVM literal
-# plan (functions.localrel) instead of a default-parallelism Python-RDD
-# createDataFrame — identical rows/order, zero Python-worker tasks.
-# False restores the original createDataFrame path.
-LOCAL_PLAN_JVM = True
-
-# A/B hook (r16): True folds the Bloom filter of bloom_decontaminate
-# into the plan as a literal array<long> bitmap tested row-locally
-# (zero joins, one aggregate); False restores the broadcast-joined
-# position table + per-gram count-distinct form. Identical flag
-# decisions — pinned in tests/test_properties.py.
-BLOOM_BITMAP_LITERAL = True
-
-# r17 size gate (VERDICT r16 #3 / ADVICE r16): the literal bitmap is an
-# O(m_bits) SQL string parsed by F.expr — fine at the default 4096-bit
-# geometry (64 words), but a production-sized filter (m_bits ≈ 2^30+,
-# the GB-scale bitmaps the 100 TB story implies) would fold tens of
-# millions of plan literals into the parser/analyzer long before
-# execution. Above this word count bloom_decontaminate routes itself to
-# the relational (broadcast position table) form, which degrades
-# gracefully; at or below it the literal path keeps its measured ×0.57.
-# 65536 words = 4 Mi bits ≈ 1.4 MB of expression text — parse-trivial.
+# Size gate for bloom_decontaminate's literal bitmap, an O(m_bits) SQL
+# string parsed by F.expr: trivial at the default 4096-bit geometry (64
+# words), but a production-sized filter (m_bits ≈ 2^30+) would fold tens
+# of millions of plan literals into the parser/analyzer long before
+# execution. Above this word count bloom_decontaminate takes the
+# relational (broadcast position table) form, which degrades gracefully.
+# 65536 words = 4 Mi bits ≈ 1.4 MB of expression text.
 BLOOM_LITERAL_MAX_WORDS = 65536
 
 
@@ -1334,39 +1318,27 @@ def language_id(
     """Stopword-ratio language ID: explode tokens, join the (broadcast)
     stopword dictionary, score per (doc, lang), argmax with deterministic
     tie-break (score desc, lang asc). One shuffle on doc_id."""
-    spark = df.sparkSession
-    if LOCAL_PLAN_JVM:
-        # literal dictionary tables (r16): both frames are driver-known
-        # constants; the default createDataFrame materialized each as
-        # defaultParallelism pickled Python slices on every scan.
-        from mongo_polars_reconciliation_spark.functions.localrel import (
-            inline_local_df,
-        )
+    from mongo_polars_reconciliation_spark.functions.localrel import (
+        inline_local_df,
+    )
 
-        sw = inline_local_df(
-            spark,
-            [
-                F.struct(
-                    F.lit(lang).cast("string").alias("lang"),
-                    F.lit(w).cast("string").alias("tok"),
-                )
-                for lang, ws in STOPWORDS.items()
-                for w in ws
-            ],
-        )
-        langs = inline_local_df(
-            spark,
-            [
-                F.struct(F.lit(lang).cast("string").alias("lang"))
-                for lang in STOPWORDS
-            ],
-        )
-    else:
-        sw = spark.createDataFrame(
-            [(lang, w) for lang, ws in STOPWORDS.items() for w in ws],
-            ["lang", "tok"],
-        )
-        langs = spark.createDataFrame([(lang,) for lang in STOPWORDS], ["lang"])
+    spark = df.sparkSession
+    # both dictionary tables are driver-known constants: literal plans
+    sw = inline_local_df(
+        spark,
+        [
+            F.struct(
+                F.lit(lang).cast("string").alias("lang"),
+                F.lit(w).cast("string").alias("tok"),
+            )
+            for lang, ws in STOPWORDS.items()
+            for w in ws
+        ],
+    )
+    langs = inline_local_df(
+        spark,
+        [F.struct(F.lit(lang).cast("string").alias("lang")) for lang in STOPWORDS],
+    )
     tok = df.select(
         F.col(id_col),
         F.explode(F.split(F.col(text_col), " ")).alias("tok"),
@@ -2129,38 +2101,27 @@ def bloom_decontaminate(
     shards by union/bit-OR — what a 100 TB pipeline broadcasts where the
     exact gram set would not fit.
 
-    Spark realization (r16, guide §2.4 remove shuffles outright): the
-    bitmap is a LITERAL array<long> of m_bits/64 words folded into the
-    plan (the benchmark's ≤ m_bits distinct positions are collected
-    driver-side — bounded by the filter geometry, not the benchmark
-    size), and each gram tests its k positions row-locally with shift/
-    mask arithmetic. Membership semantics are identical to the old
-    broadcast-joined position table (bit set ⇔ position present), so
+    Spark realization: the bitmap is a LITERAL array<long> of m_bits/64
+    words folded into the plan (the benchmark's ≤ m_bits distinct
+    positions are collected driver-side — bounded by the filter
+    geometry, not the benchmark size), and each gram tests its k
+    positions row-locally with shift/mask arithmetic: one map + ONE
+    groupBy(doc) aggregate, zero joins. Bit set ⇔ position present, so
     the DuckDB oracle replays every flag bit-for-bit, false positives
-    included (same hashes ⇒ same collisions) — but the k×-exploded
-    (gram, j, p) frame, its broadcast hash join, and the
-    groupBy(doc, h1, h2) count-distinct shuffle are all gone: the whole
-    probe side is one map + ONE groupBy(doc) aggregate (per-doc totals
-    and distinct-flagged-gram counts fused; the old form paid a second
-    groupBy(doc) plus a doc-keyed join to marry them).
-    ``BLOOM_BITMAP_LITERAL=False`` restores the relational form;
-    equality pinned in tests/test_properties.py. Probe grams carry only
+    included (same hashes ⇒ same collisions). Probe grams carry only
     their (h1, h2) hash pair — the gram string never shuffles. Returns
     flagged docs only (``contamination_probe``'s contract):
     (doc, n_grams, n_flagged, flagged_frac_r).
 
-    Size gate (r17): the literal path applies only while
-    ``m_bits/64 <= BLOOM_LITERAL_MAX_WORDS`` — a bigger filter would be
-    an O(m_bits) expression string through the parser/analyzer, so
-    large geometries route to the relational form automatically (both
-    paths are pinned bit-equal, so the gate is performance-only).
+    Size gate: past ``m_bits/64 > BLOOM_LITERAL_MAX_WORDS`` the bitmap
+    would be an O(m_bits) expression string through the parser/analyzer,
+    so large geometries take the relational form instead — the k×-
+    exploded (gram, j, p) frame broadcast-joined to the position table,
+    then count-distinct per gram. Same membership decisions.
 
-    Note (r17, ADVICE r16): on the literal path the benchmark side is
-    collected EAGERLY at construction time (``bench_pos.collect()`` runs
-    the benchmark scan + distinct as Spark jobs before this function
-    returns); the relational path stays fully lazy. Callers composing
-    frames speculatively pay the benchmark-side cost up front there —
-    acceptable for the harness, a contract point for library use."""
+    The literal path collects the benchmark side EAGERLY (``bench_pos``
+    runs as Spark jobs before this function returns); the relational
+    path stays fully lazy."""
     from mongo_polars_reconciliation_spark.extensions.dedup import shingles
     from mongo_polars_reconciliation_spark.functions.hashing import (
         POLY_P31,
@@ -2172,7 +2133,7 @@ def bloom_decontaminate(
         # widen-if-narrow: the gram hash is two interpreted char folds per
         # shingle and the whole chain is map-only — on a few-split corpus
         # it would run on as many cores as there are parquet splits
-        # (measured r7: ONE, 9.2 s total) unless widened first. A no-op
+        # (measured: ONE, 9.2 s total) unless widened first. A no-op
         # at real scale, mandatory at test scale.
         sh = shingles(df, idc, text_col, n)
         target = df.sparkSession.sparkContext.defaultParallelism
@@ -2207,11 +2168,10 @@ def bloom_decontaminate(
         .distinct()
     )
     n_words = (m_bits + 63) // 64
-    if BLOOM_BITMAP_LITERAL and n_words <= BLOOM_LITERAL_MAX_WORDS:
+    if n_words <= BLOOM_LITERAL_MAX_WORDS:
         # fold the ≤ m_bits distinct positions into a literal bitmap
-        # (m_bits/64 signed words) and test each gram's k positions
-        # row-locally: same membership decisions as the joined position
-        # table, zero joins, one aggregate.
+        # (m_bits/64 signed words); each gram tests its k positions
+        # row-locally
         words = [0] * n_words
         for r in bench_pos.collect():
             p = int(r["p"])
@@ -2660,8 +2620,8 @@ def bpe_merge_fit(
 
     Algorithm, the standard trainer shape: (1) collapse the corpus to the
     WORD-FREQUENCY table once (vocab-first — every real BPE trainer runs
-    on the word-count dict, and the r7 CMS lesson showed the |corpus| →
-    |vocab| collapse is also the Spark win); each word starts as its
+    on the word-count dict, and the |corpus| → |vocab| collapse is also
+    the Spark win); each word starts as its
     character sequence. (2) Per round: corpus-wide adjacent-pair
     aggregate weighted by word count → the single best pair comes to the
     driver (ONE row — the same bounded-state loop contract as
@@ -2685,32 +2645,29 @@ def bpe_merge_fit(
     can occur at most count(l, r) times, and existing pair counts only
     fall when occurrences are consumed by the merge."""
     merges, _ = _bpe_fit(df, n_merges, text_col)
-    if LOCAL_PLAN_JVM and merges:
-        # literal plan instead of a Python-RDD local relation (r16): the
-        # default createDataFrame splits n_merges rows across
-        # defaultParallelism pickled slices — one Python-worker task per
-        # slice on EVERY materialization of the merge table. Same rows,
-        # same order (array order = list order).
-        from mongo_polars_reconciliation_spark.functions.localrel import (
-            inline_local_df,
+    if not merges:
+        # inline() over an empty literal array cannot carry the schema
+        return df.sparkSession.createDataFrame(
+            [],
+            "merge_rank long, lhs string, rhs string, merged string, "
+            "pair_count long",
         )
-
-        structs = [
-            F.struct(
-                F.lit(int(rank)).cast("long").alias("merge_rank"),
-                F.lit(lhs).cast("string").alias("lhs"),
-                F.lit(rhs).cast("string").alias("rhs"),
-                F.lit(merged).cast("string").alias("merged"),
-                F.lit(int(cnt)).cast("long").alias("pair_count"),
-            )
-            for rank, lhs, rhs, merged, cnt in merges
-        ]
-        return inline_local_df(df.sparkSession, structs)
-    return df.sparkSession.createDataFrame(
-        merges,
-        "merge_rank long, lhs string, rhs string, merged string, "
-        "pair_count long",
+    from mongo_polars_reconciliation_spark.functions.localrel import (
+        inline_local_df,
     )
+
+    # the merge table as a literal plan, rows in merge order
+    structs = [
+        F.struct(
+            F.lit(int(rank)).cast("long").alias("merge_rank"),
+            F.lit(lhs).cast("string").alias("lhs"),
+            F.lit(rhs).cast("string").alias("rhs"),
+            F.lit(merged).cast("string").alias("merged"),
+            F.lit(int(cnt)).cast("long").alias("pair_count"),
+        )
+        for rank, lhs, rhs, merged, cnt in merges
+    ]
+    return inline_local_df(df.sparkSession, structs)
 
 
 def _bpe_fit(

@@ -1,18 +1,16 @@
-"""Pure-JVM local relations from driver-side literal rows.
+"""Pure-JVM local relations and literal columns from driver-side values.
 
-r16 optimization round (guide §1.2, fixed per-job work): the idiomatic
-``spark.createDataFrame(rows)`` routes tiny driver-known tables through a
-Python RDD — by default one pickled slice per core (32 Python-worker
-tasks at local[32] to materialize a 5-row merge table), and even the
-single-slice form pays one Python-worker round trip inside every job
-that scans it. For tables whose contents the driver already holds as
-plain literals (model artifacts, learned merge tables, stopword
-dictionaries), shipping the values inside the plan as a literal struct
-array costs one JVM-only task and zero Python workers, and downstream
-jobs re-scan a plan literal instead of re-running a Python stage.
+Tiny driver-known tables (model artifacts, learned merge tables, stopword
+dictionaries, query vectors, per-cell LUTs) enter plans as literals: a
+literal struct array behind ``inline()`` for a relation, or one parsed
+``F.expr`` array for a column. That costs one JVM-only task and zero
+Python workers, where ``spark.createDataFrame(rows)`` would route the
+rows through a Python RDD (one pickled slice per core) and pay a
+Python-worker round trip in every job that scans it.
 
-Values are identical by construction — the same Python floats/ints/
-strings cross py4j either way; only the physical source changes.
+Invariant: values are bit-identical to the driver's — the same Python
+floats/ints/strings cross py4j, and every double literal is emitted as
+its shortest round-tripping ``repr``.
 """
 
 from __future__ import annotations

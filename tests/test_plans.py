@@ -443,29 +443,28 @@ BNLJ_BY_DESIGN = {
 
 def test_bloom_filter_is_plan_literal_or_broadcast(spark):
     """bloom_decontaminate's filter must never travel through a shuffle.
-    r16 default (BLOOM_BITMAP_LITERAL): the bitmap is a literal
-    array<long> in the plan and the probe side has NO join at all — the
-    strictly stronger form of "broadcast the bitmap". The
-    relational fallback keeps the original pin: the position table
-    (≤ m_bits rows) sits on the broadcast side of a hash join."""
+    Within BLOOM_LITERAL_MAX_WORDS the bitmap is a literal array<long> in
+    the plan and the probe side has NO join at all — the strictly
+    stronger form of "broadcast the bitmap". Past the size gate the
+    relational form's position table (≤ m_bits rows) sits on the
+    broadcast side of a hash join."""
     from mongo_polars_reconciliation_spark.extensions import text as text
 
-    old_flag = text.BLOOM_BITMAP_LITERAL
+    old_gate = text.BLOOM_LITERAL_MAX_WORDS
     try:
-        text.BLOOM_BITMAP_LITERAL = True
         plan = QUERIES["text_bloom_decontaminate"](
             spark, SF_DIR
         )._jdf.queryExecution().executedPlan().toString()
         assert "Join" not in plan  # no join of any strategy
         assert "BatchEvalPython" not in plan
-        text.BLOOM_BITMAP_LITERAL = False
+        text.BLOOM_LITERAL_MAX_WORDS = 0  # force the relational branch
         plan = QUERIES["text_bloom_decontaminate"](
             spark, SF_DIR
         )._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan
         assert "BatchEvalPython" not in plan
     finally:
-        text.BLOOM_BITMAP_LITERAL = old_flag
+        text.BLOOM_LITERAL_MAX_WORDS = old_gate
 
 
 # r15: retired from the driver registry (VERDICT r14 #2) but still swept

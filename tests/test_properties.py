@@ -340,6 +340,26 @@ def test_multiprobe_candidates_superset_of_single_probe(spark):
     assert all((b, a) in p2 for (a, b) in p2)
 
 
+def _py_fold_dot(a, b):
+    """Driver-side left fold ``((0.0 + a0*b0) + a1*b1) + ...``."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + x * y
+    return acc
+
+
+def _py_nearest(v, cents, nprobe):
+    """Driver-side reference for the assignment kernel: left-fold squared
+    distances (``_lut_sqdists``), then the ``nprobe`` smallest by
+    (distance, cid)."""
+    from mongo_polars_reconciliation_spark.extensions.similarity import (
+        _lut_sqdists,
+    )
+
+    dists = zip(_lut_sqdists(v, cents), range(len(cents)))
+    return [cid for _, cid in sorted(dists)[:nprobe]]
+
+
 @settings(max_examples=5, deadline=None)
 @given(
     vecs=st.lists(
@@ -355,9 +375,10 @@ def test_multiprobe_candidates_superset_of_single_probe(spark):
 )
 def test_arrow_kernels_bit_identical_to_expression_path(spark, vecs):
     """The Arrow pair-dot and centroid-assignment kernels must produce the
-    EXACT doubles of the Catalyst expression path (same IEEE op order) —
-    unrounded equality on random vectors, both the dot scores and the
-    multi-probe block assignments."""
+    EXACT doubles of a driver-side pure-Python left fold (same IEEE op
+    order) — ``repr``-exact on random vectors — and the (distance, cid)
+    argmin of the same fold, for both single and multi-probe
+    assignment."""
     import mongo_polars_reconciliation_spark.extensions.similarity as sim
 
     emb = spark.createDataFrame(
@@ -368,46 +389,47 @@ def test_arrow_kernels_bit_identical_to_expression_path(spark, vecs):
         emb.alias("a")
         .crossJoin(emb.alias("b"))
         .select(
-            F.col("a.embedding").alias("va"), F.col("b.embedding").alias("vb")
+            F.col("a.vec_id").alias("ia"),
+            F.col("b.vec_id").alias("ib"),
+            F.col("a.embedding").alias("va"),
+            F.col("b.embedding").alias("vb"),
         )
     )
-    cents = [vecs[0], vecs[-1]]
+    cents = [vecs[0], vecs[len(vecs) // 2], vecs[-1]]
 
-    def snapshot():
-        dots = [
-            r[0]
-            for r in pairs.select(
-                sim._pair_dot(F.col("va"), F.col("vb"))
-            ).collect()
-        ]
-        blocks = sorted(
-            map(
-                tuple,
-                sim.probe_assignments(emb, cents, nprobe=2).select(
-                    "vec_id", "__blk"
-                ).collect(),
-            )
-        )
-        assign = [
-            r[0]
-            for r in emb.select(
-                sim.cluster_assign(F.col("embedding"), cents)
-            ).collect()
-        ]
-        return dots, blocks, assign
-
-    saved_pd, saved_as = sim.PAIR_DOT_ARROW, sim.ASSIGN_ARROW
-    try:
-        sim.PAIR_DOT_ARROW = sim.ASSIGN_ARROW = True
-        arrow = snapshot()
-        sim.PAIR_DOT_ARROW = sim.ASSIGN_ARROW = False
-        expr = snapshot()
-    finally:
-        sim.PAIR_DOT_ARROW, sim.ASSIGN_ARROW = saved_pd, saved_as
+    dots = {
+        (r[0], r[1]): r[2]
+        for r in pairs.select(
+            "ia", "ib", sim._pair_dot(F.col("va"), F.col("vb"))
+        ).collect()
+    }
+    want_dots = {
+        (i, j): _py_fold_dot(a, b)
+        for i, a in enumerate(vecs)
+        for j, b in enumerate(vecs)
+    }
     # exact, unrounded — repr distinguishes every double bit pattern
-    assert list(map(repr, arrow[0])) == list(map(repr, expr[0]))
-    assert arrow[1] == expr[1]
-    assert arrow[2] == expr[2]
+    assert {k: repr(v) for k, v in dots.items()} == {
+        k: repr(v) for k, v in want_dots.items()
+    }
+
+    blocks = sorted(
+        map(
+            tuple,
+            sim.probe_assignments(emb, cents, nprobe=2)
+            .select("vec_id", "__blk")
+            .collect(),
+        )
+    )
+    assert blocks == sorted(
+        (i, cid) for i, v in enumerate(vecs) for cid in _py_nearest(v, cents, 2)
+    )
+    assign = dict(
+        emb.select(
+            "vec_id", sim.cluster_assign(F.col("embedding"), cents)
+        ).collect()
+    )
+    assert assign == {i: _py_nearest(v, cents, 1)[0] for i, v in enumerate(vecs)}
 
 
 @settings(max_examples=5, deadline=None)
@@ -849,12 +871,12 @@ def test_multiprobe_superset_random(spark, vecs):
 
 
 def test_assignment_kernel_chunk_merge_parity(spark):
-    """r8: the assignment kernel vectorizes across centroid CHUNKS and
-    merges per-chunk top-nprobe candidates. With the chunk shrunk to 2,
-    a 7-centroid assignment exercises multiple merge rounds — results
-    must be identical to the unchunked kernel AND the expression path,
-    including (distance, cid) tie-breaks (duplicate centroids force
-    exact distance ties across chunk boundaries)."""
+    """The assignment kernel vectorizes across centroid CHUNKS and merges
+    per-chunk top-nprobe candidates. With the chunk shrunk to 2, a
+    7-centroid assignment exercises multiple merge rounds — results must
+    be identical to the unchunked kernel AND the driver-side
+    (distance, cid) reference, including tie-breaks (duplicate centroids
+    force exact distance ties across chunk boundaries)."""
     import mongo_polars_reconciliation_spark.extensions.similarity as sim
 
     vecs = [
@@ -876,18 +898,23 @@ def test_assignment_kernel_chunk_merge_parity(spark):
                 .select("vec_id", "__blk").collect())
         )
 
-    saved_chunk, saved_as = sim._ASSIGN_CHUNK, sim.ASSIGN_ARROW
+    saved_chunk = sim._ASSIGN_CHUNK
     try:
-        sim.ASSIGN_ARROW = True
         sim._ASSIGN_CHUNK = 2
         chunked = [probes(1), probes(2), probes(3)]
         sim._ASSIGN_CHUNK = 1024
         unchunked = [probes(1), probes(2), probes(3)]
-        sim.ASSIGN_ARROW = False
-        expr = [probes(1), probes(2), probes(3)]
     finally:
-        sim._ASSIGN_CHUNK, sim.ASSIGN_ARROW = saved_chunk, saved_as
-    assert chunked == unchunked == expr
+        sim._ASSIGN_CHUNK = saved_chunk
+    reference = [
+        sorted(
+            (i, cid)
+            for i, v in enumerate(vecs)
+            for cid in _py_nearest(v, cents, nprobe)
+        )
+        for nprobe in (1, 2, 3)
+    ]
+    assert chunked == unchunked == reference
 
 
 def _py_bpe(word_counts, n_merges):
@@ -1422,16 +1449,15 @@ def test_neardup_ingest_greedy_not_pair_drop(spark):
     # sanity: the chain structure really held (a~b and b~c verified,
     # a!~c unverified) — otherwise the admitted set above means nothing
     from mongo_polars_reconciliation_spark.extensions.dedup import (
-        jaccard_verify, shingles,
+        jaccard_verify, shingle_sets,
     )
 
-    sh = shingles(df)
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3)], "id_a long, id_b long"
     )
     verified = sorted(
         (r["id_a"], r["id_b"])
-        for r in jaccard_verify(pairs, sh, threshold=0.6).collect()
+        for r in jaccard_verify(pairs, shingle_sets(df), threshold=0.6).collect()
     )
     assert verified == [(1, 2), (2, 3)], verified
 
@@ -3863,16 +3889,16 @@ def test_neardup_ingest_crash_window_replay_idempotent(spark):
     and the digest-ledger write must replay to exactly the original
     admitted set. The trap is a replayed batch doc meeting its own ghost
     state rows: unfiltered self-pairs drop it outright, and a ghost doc's
-    shingles double-counted next to its sh_b copy distort jacc_r for its
-    neighbors — this fixture puts two admitted docs at true J = 7/13
-    (< 0.6, no edge, both admitted) whose doubled-size distortion
-    2*7/(2*10+10-2*7) = 0.875 would cross the threshold and silently
-    drop BOTH on replay."""
+    shingles counted twice next to its batch-side copy would distort
+    jacc_r for its neighbors — this fixture puts two admitted docs at
+    true J = 7/13 (< 0.6, no edge, both admitted) whose doubled-count
+    distortion 2*7/(2*10+10-2*7) = 0.875 would cross the threshold and
+    silently drop BOTH on replay."""
     from mongo_polars_reconciliation_spark.extensions.dedup import (
         band_state,
         ingest_novel_neardup,
         jaccard_verify,
-        shingles,
+        shingle_sets,
     )
 
     toks = [f"w{i:02d}" for i in range(1, 16)]
@@ -3882,9 +3908,8 @@ def test_neardup_ingest_crash_window_replay_idempotent(spark):
         [(1, b_text), (2, c_text)], "doc_id long, text string"
     )
     # fixture sanity: true J = 7/13 < 0.6 -> the pair must NOT verify
-    sh = shingles(df)
     pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    assert jaccard_verify(pairs, sh, threshold=0.6).count() == 0
+    assert jaccard_verify(pairs, shingle_sets(df), threshold=0.6).count() == 0
     # ... but the pair DOES collide in at least one 1-hash band, so the
     # replay actually reaches the verification stage (a checked fact)
     bs = band_state(df, num_hashes=12, bands=12)
@@ -4367,11 +4392,10 @@ def test_pq_fit_fused_equals_sequential_kmeans_per_subspace(spark):
 
 
 def test_shingle_sets_explode_equals_shingles(spark):
-    """r16 (optimization round): the array-form shingle frame must explode
-    to exactly the rows of shingles(), and its row-local size must equal
-    the per-doc count jaccard_verify aggregated — on the real documents
-    fixture plus the short-doc edge shapes (< n tokens → no row either
-    way)."""
+    """The array-form shingle frame must explode to exactly the rows of
+    shingles(), and its row-local size must equal the per-doc shingle
+    count — on the real documents fixture plus the short-doc edge shapes
+    (< n tokens → no row either way)."""
     from mongo_polars_reconciliation_spark.extensions.dedup import (
         shingle_sets,
         shingles,
@@ -4411,10 +4435,10 @@ def test_shingle_sets_explode_equals_shingles(spark):
 
 
 def test_knn_join_ivfpq_lut_kernel_equals_fold_path(spark):
-    """r16 (optimization round): the Arrow LUT kernel inside
-    knn_join_ivfpq must be BIT-identical to the literal-centroid Catalyst
-    fold path it replaces, on the real embeddings fixture at the pinned
-    geometry — every output column including the 6-dp-rounded adc_r."""
+    """The Arrow LUT kernel inside knn_join_ivfpq must be BIT-identical to
+    the driver-side left fold: for every probe row, each of the m tables
+    equals :func:`_lut_sqdists` of that row's residual against its probed
+    cell, on the real embeddings fixture at the pinned geometry."""
     from mongo_polars_reconciliation_spark.extensions import similarity as sim
 
     emb = spark.read.parquet(
@@ -4423,34 +4447,31 @@ def test_knn_join_ivfpq_lut_kernel_equals_fold_path(spark):
     coarse = sim.kmeans_fit(emb, k=4, n_iter=1)
     res = sim.ivf_residuals(emb, coarse).localCheckpoint(eager=False)
     books = sim.pq_fit(res, m=4, ksub=8, n_iter=1)
+    dsub = len(books[0][0])
 
-    def run():
-        return sorted(
-            tuple(r)
-            for r in sim.knn_join_ivfpq(
-                emb, coarse, books, k=5, nprobe=2, rerank=20, res=res
-            ).collect()
+    rows = (
+        sim.probe_assignments(emb, coarse, nprobe=2)
+        .select(
+            "__blk",
+            "__v",
+            sim._pq_luts_udf(coarse, books)(F.col("__blk"), F.col("__v")),
         )
-
-    old_flag = sim.LUT_ARROW
-    try:
-        sim.LUT_ARROW = True
-        got = run()
-        sim.LUT_ARROW = False
-        want = run()
-    finally:
-        sim.LUT_ARROW = old_flag
-    assert got == want and len(got) > 0
+        .collect()
+    )
+    assert len(rows) > 0
+    for blk, v, luts in rows:
+        r = [x - c for x, c in zip(v, coarse[blk])]
+        want = [
+            sim._lut_sqdists(r[s * dsub : (s + 1) * dsub], book)
+            for s, book in enumerate(books)
+        ]
+        assert [list(t) for t in luts] == want
 
 
 def test_artifact_local_plan_equals_python_rdd_path(spark):
-    """r16 (optimization round, batch 2): the literal-plan plumbing
-    behind ARTIFACT_LOCAL_PLAN — driver-side load sort, the constant-
-    array centroid lookup in ivf_residuals, and the literal per-cell LUT
-    CASE in ivfpq_topk — must be BIT-identical to the orderBy/
-    parallelize/broadcast-join path it replaces: the saved artifacts
-    load back equal, and the end-to-end IVF-PQ probe equals the old path
-    row for row (every column incl. the 6-dp adc_r/cos_r)."""
+    """Fitted IVF-PQ artifacts survive save → load bit-exactly: the
+    centroid table and the PQ codebooks load back equal to the fitted
+    lists (the size-gate test below pins the probe built on them)."""
     import shutil
 
     from mongo_polars_reconciliation_spark.extensions import similarity as sim
@@ -4462,160 +4483,29 @@ def test_artifact_local_plan_equals_python_rdd_path(spark):
     coarse = sim.kmeans_fit(emb, k=4, n_iter=1)
     res = sim.ivf_residuals(emb, coarse).localCheckpoint(eager=False)
     books = sim.pq_fit(res, m=4, ksub=8, n_iter=1)
-    q = [float(x) for x in emb.orderBy("vec_id").head()["embedding"]]
 
-    def roundtrip(tag):
-        cpath = scratch_path("test_artifact_local_plan", f"{tag}_c")
-        bpath = scratch_path("test_artifact_local_plan", f"{tag}_b")
-        shutil.rmtree(cpath, ignore_errors=True)
-        shutil.rmtree(bpath, ignore_errors=True)
-        sim.save_centroids(spark, coarse, cpath)
-        sim.save_pq_codebooks(spark, books, bpath)
-        return (
-            sim.load_centroids(spark, cpath),
-            sim.load_pq_codebooks(spark, bpath),
-        )
-
-    def probe():
-        return sorted(
-            tuple(r)
-            for r in sim.ivfpq_topk(
-                emb, q, coarse, books, nprobe=2, k=10, rerank=20
-            ).collect()
-        )
-
-    old_flag = sim.ARTIFACT_LOCAL_PLAN
-    try:
-        sim.ARTIFACT_LOCAL_PLAN = True
-        new_art = roundtrip("new")
-        new_probe = probe()
-        sim.ARTIFACT_LOCAL_PLAN = False
-        old_art = roundtrip("old")
-        old_probe = probe()
-    finally:
-        sim.ARTIFACT_LOCAL_PLAN = old_flag
-    # exact float equality end to end: artifacts and probe rows
-    assert new_art == old_art == (coarse, books)
-    assert new_probe == old_probe and len(new_probe) == 10
-
-
-def test_text_local_plan_equals_createdataframe_path(spark):
-    """r16 (optimization round, batch 2): LOCAL_PLAN_JVM routes the BPE
-    merge table and the stopword dictionaries through a literal JVM plan
-    instead of a Python-RDD createDataFrame — rows, order and values must
-    match the original path exactly."""
-    from mongo_polars_reconciliation_spark.extensions import text as text
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-
-    def run():
-        merges = [
-            tuple(r) for r in text.bpe_merge_fit(docs, n_merges=5).collect()
-        ]
-        langs = sorted(tuple(r) for r in text.language_id(docs).collect())
-        return merges, langs
-
-    old_flag = text.LOCAL_PLAN_JVM
-    try:
-        text.LOCAL_PLAN_JVM = True
-        got = run()
-        text.LOCAL_PLAN_JVM = False
-        want = run()
-    finally:
-        text.LOCAL_PLAN_JVM = old_flag
-    # merge-table row ORDER is part of the contract (merge_rank ascending
-    # as produced); compare unsorted
-    assert got == want
-    assert len(got[0]) == 5 and len(got[1]) > 0
-
-
-def test_bloom_bitmap_literal_equals_joined_positions(spark):
-    """r16 (optimization round, batch 2): BLOOM_BITMAP_LITERAL folds the
-    benchmark's Bloom positions into a literal array<long> bitmap tested
-    row-locally; every flag decision — false positives included — and
-    every output row must equal the broadcast-joined position-table form
-    exactly, at a geometry small enough (m_bits=64) to force plenty of
-    collisions through both paths."""
-    from mongo_polars_reconciliation_spark.extensions import text as text
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    bench = docs.where("doc_id % 7 = 3").selectExpr(
-        "doc_id + 100000 as doc_id", "text"
+    cpath = scratch_path("test_artifact_local_plan", "c")
+    bpath = scratch_path("test_artifact_local_plan", "b")
+    shutil.rmtree(cpath, ignore_errors=True)
+    shutil.rmtree(bpath, ignore_errors=True)
+    sim.save_centroids(spark, coarse, cpath)
+    sim.save_pq_codebooks(spark, books, bpath)
+    loaded = (
+        sim.load_centroids(spark, cpath),
+        sim.load_pq_codebooks(spark, bpath),
     )
-
-    def run(m_bits):
-        return sorted(
-            tuple(r)
-            for r in text.bloom_decontaminate(
-                docs, bench, n=5, m_bits=m_bits
-            ).collect()
-        )
-
-    old_flag = text.BLOOM_BITMAP_LITERAL
-    try:
-        for m_bits in (64, 4096):
-            text.BLOOM_BITMAP_LITERAL = True
-            got = run(m_bits)
-            text.BLOOM_BITMAP_LITERAL = False
-            want = run(m_bits)
-            assert got == want and len(got) > 0
-    finally:
-        text.BLOOM_BITMAP_LITERAL = old_flag
-
-
-def test_jaccard_array_intersect_equals_exploded_join(spark):
-    """r16 (optimization round, batch 2): JACCARD_ARRAY_INTERSECT verifies
-    candidate pairs via row-local size(array_intersect(A, B)) over the
-    shingle-ARRAY frame instead of the exploded (id, shingle) join +
-    groupBy. Every jacc_r and every admit/drop decision must match the
-    exploded form exactly — checked on the full near-dup operator (pair
-    values) and on the ingest operator (admission set), real fixture."""
-    from mongo_polars_reconciliation_spark.extensions import dedup as dd
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "text")
-    hist = docs.where("doc_id % 3 < 2")
-    batch = docs.where("doc_id % 3 = 2")
-    seed_ledger = hist.selectExpr(
-        "md5(cast(text as binary)) as text_hash"
-    ).distinct()
-    seed_bands = dd.band_state(hist)
-
-    def run():
-        pairs = sorted(
-            tuple(r)
-            for r in dd.minhash_near_dups(docs).collect()
-        )
-        admitted = sorted(
-            tuple(r)
-            for r in dd.ingest_novel_neardup(
-                batch, seed_ledger, seed_bands, hist, mis_max_iter=8
-            ).collect()
-        )
-        return pairs, admitted
-
-    old_flag = dd.JACCARD_ARRAY_INTERSECT
-    try:
-        dd.JACCARD_ARRAY_INTERSECT = True
-        got = run()
-        dd.JACCARD_ARRAY_INTERSECT = False
-        want = run()
-    finally:
-        dd.JACCARD_ARRAY_INTERSECT = old_flag
-    assert got == want
-    assert len(got[0]) > 0 and len(got[1]) > 0
+    assert loaded == (coarse, books)
 
 
 def test_bloom_literal_size_gate_routes_large_m_to_relational(spark):
-    """r17 (VERDICT r16 #3 / ADVICE r16): the literal bitmap is an
-    O(m_bits) expression string, so bloom_decontaminate must route
-    itself to the relational form past BLOOM_LITERAL_MAX_WORDS even
-    with BLOOM_BITMAP_LITERAL on. Two pins: (a) a genuinely large
-    geometry picks the JOIN form (visible in the plan; construction
-    stays lazy — the literal path would have collected eagerly), and
-    (b) the gate is performance-only — forcing it at the bench geometry
-    returns rows identical to the literal path."""
+    """The literal bitmap is an O(m_bits) expression string, so
+    bloom_decontaminate must route itself to the relational form past
+    BLOOM_LITERAL_MAX_WORDS. Two pins: (a) a genuinely large geometry
+    picks the JOIN form (visible in the plan; construction stays lazy —
+    the literal path would have collected eagerly), and (b) the gate is
+    performance-only — forcing it returns rows identical to the literal
+    path, at the bench geometry and at one small enough (m_bits=64) to
+    force plenty of false-positive collisions through both forms."""
     from mongo_polars_reconciliation_spark.extensions import text as text
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -4623,7 +4513,6 @@ def test_bloom_literal_size_gate_routes_large_m_to_relational(spark):
         "doc_id + 100000 as doc_id", "text"
     )
 
-    assert text.BLOOM_BITMAP_LITERAL  # the shipped default this gates
     big_m = (text.BLOOM_LITERAL_MAX_WORDS + 1) * 64
     big = text.bloom_decontaminate(docs, bench, n=5, m_bits=big_m)
     plan = big._jdf.queryExecution().analyzed().toString()  # noqa: SLF001
@@ -4639,16 +4528,18 @@ def test_bloom_literal_size_gate_routes_large_m_to_relational(spark):
 
     old_gate = text.BLOOM_LITERAL_MAX_WORDS
     try:
-        literal = run(4096)
-        text.BLOOM_LITERAL_MAX_WORDS = 0  # force the relational branch
-        relational = run(4096)
+        for m_bits in (64, 4096):
+            text.BLOOM_LITERAL_MAX_WORDS = old_gate
+            literal = run(m_bits)
+            text.BLOOM_LITERAL_MAX_WORDS = 0  # force the relational branch
+            relational = run(m_bits)
+            assert literal == relational and len(literal) > 0, m_bits
     finally:
         text.BLOOM_LITERAL_MAX_WORDS = old_gate
-    assert literal == relational and len(literal) > 0
 
 
 def test_ivfpq_lut_size_gate_routes_large_geometry_to_broadcast(spark):
-    """r17 (VERDICT r16 #3): ivfpq_topk's per-cell LUT CASE folds
+    """ivfpq_topk's per-cell LUT CASE folds
     nprobe × m × ksub double literals into the plan — past
     IVFPQ_LUT_LITERAL_MAX_DOUBLES it must fall back to the broadcast
     lut_df form. Forcing the gate at the pinned geometry must (a) show
@@ -4667,7 +4558,6 @@ def test_ivfpq_lut_size_gate_routes_large_geometry_to_broadcast(spark):
     def probe():
         return sim.ivfpq_topk(emb, q, coarse, books, nprobe=2, k=10, rerank=20)
 
-    assert sim.ARTIFACT_LOCAL_PLAN  # the shipped default this gates
     old_gate = sim.IVFPQ_LUT_LITERAL_MAX_DOUBLES
     try:
         literal = sorted(tuple(r) for r in probe().collect())
@@ -4679,3 +4569,47 @@ def test_ivfpq_lut_size_gate_routes_large_geometry_to_broadcast(spark):
     finally:
         sim.IVFPQ_LUT_LITERAL_MAX_DOUBLES = old_gate
     assert literal == gated and len(literal) == 10
+
+
+def test_topk_ivf_rejects_query_dim_mismatch(spark):
+    """topk_ivf must fail loudly when the query vector is SHORTER than the
+    embedding dimension (a partial dot product would rank the centroids)
+    and when it is LONGER (``cosine``'s zip_with would NULL every score
+    and return the top-k in id order) — and must not fire on a
+    well-formed query."""
+    from mongo_polars_reconciliation_spark.extensions.similarity import topk_ivf
+
+    emb = spark.createDataFrame(
+        [
+            (1, [1.0, 0.0, 0.0, 0.0], 0),
+            (2, [0.9, 0.1, 0.0, 0.0], 0),
+            (3, [0.0, 1.0, 0.0, 0.0], 1),
+            (4, [0.0, 0.0, 1.0, 0.5], 2),
+        ],
+        "vec_id long, embedding array<float>, label int",
+    )
+    ok = topk_ivf(emb, [1.0, 0.0, 0.0, 0.0], k=2, nprobe=1).collect()
+    assert [r["vec_id"] for r in ok] == [1, 2]
+    for q in ([1.0, 0.0, 0.0], [1.0, 0.0, 0.0, 0.0, 0.0]):
+        with pytest.raises(Exception, match="dim mismatch"):
+            topk_ivf(emb, q, k=2, nprobe=1).collect()
+
+
+def test_bpe_merge_fit_empty_merge_table_keeps_schema(spark):
+    """A corpus of single-character words has no adjacent symbol pair, so
+    no merge is learned: bpe_merge_fit returns zero rows with the full
+    typed merge-table schema."""
+    from mongo_polars_reconciliation_spark.extensions.text import bpe_merge_fit
+
+    df = spark.createDataFrame(
+        [(1, "a b c"), (2, "d e a")], "doc_id long, text string"
+    )
+    out = bpe_merge_fit(df, n_merges=3)
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+        ("merge_rank", "bigint"),
+        ("lhs", "string"),
+        ("rhs", "string"),
+        ("merged", "string"),
+        ("pair_count", "bigint"),
+    ]
+    assert out.collect() == []

@@ -20,8 +20,9 @@ Usage:
 
 Defaults: control = q1_pricing_summary (small, stable, never rotated),
 reps = 4, data dir from SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-cpus from SPARK_GRAFT_CPUS (default 32). Exit code always 0 (advisory) —
-the adjudication (ambient vs real, with these numbers) goes in NOTES_r{N}.
+cpus from SPARK_GRAFT_CPUS (default: the host core count). Exit code
+always 0 (advisory) — the adjudication (ambient vs real, with these
+numbers) goes in NOTES_r{N}.
 """
 
 from __future__ import annotations
@@ -53,8 +54,7 @@ def main() -> None:
         raise SystemExit(f"bench_recheck: unknown queries {unknown}")
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark("bench_recheck", cpus=cpus, shuffle_partitions=cpus)
+    spark = get_spark("bench_recheck")
     spark.range(10).count()
 
     # warm the shared recon fixtures so a recon flagged query isn't charged

@@ -10,7 +10,7 @@ Usage:
 
 With no queries listed, captures the full headline list. Data dir from
 SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), cpus from
-SPARK_GRAFT_CPUS (default 32).
+SPARK_GRAFT_CPUS (default: the host core count).
 """
 
 from __future__ import annotations
@@ -29,8 +29,7 @@ def main() -> None:
     names = sys.argv[3:] or HEADLINE
     os.makedirs(outdir, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark("capture_plans", cpus=cpus, shuffle_partitions=cpus)
+    spark = get_spark("capture_plans")
 
     from mongo_polars_reconciliation_spark.harness.queries import _ab
 

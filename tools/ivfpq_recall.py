@@ -5,7 +5,7 @@ the README's multiprobe recall table.
 
 Usage: python tools/ivfpq_recall.py [k]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.01),
-     SPARK_GRAFT_CPUS (default 32).
+     SPARK_GRAFT_CPUS (default: the host core count).
 
 Prints one JSON line per grid point:
   {"nprobe": 2, "rerank": 20, "k": 5, "avg_recall": ..., "min_recall": ...,
@@ -35,8 +35,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 def main() -> None:
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 5
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark("ivfpq_recall", cpus=cpus, shuffle_partitions=cpus)
+    spark = get_spark("ivfpq_recall")
     spark.range(10).count()
 
     from mongo_polars_reconciliation_spark.extensions.similarity import (

@@ -12,8 +12,8 @@ Usage:
     python tools/profile_query.py QUERY [--reps N]
 
 Data dir from SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), cpus from
-SPARK_GRAFT_CPUS (default 32). Advisory only — never part of the bench
-contract.
+SPARK_GRAFT_CPUS (default: the host core count). Advisory only — never
+part of the bench contract.
 """
 
 from __future__ import annotations
@@ -38,8 +38,7 @@ def main() -> None:
         raise SystemExit(f"unknown query {args.query!r}")
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark("profile_query", cpus=cpus, shuffle_partitions=cpus)
+    spark = get_spark("profile_query")
     spark.range(10).count()
 
     from mongo_polars_reconciliation_spark.harness.queries import _ab

@@ -780,8 +780,7 @@ def probe_match_skew(spark, factor: int = 4) -> None:
 def main() -> None:
     factor = int(sys.argv[1]) if len(sys.argv) > 1 else 4
     only = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark("scale_probe", cpus=cpus, shuffle_partitions=cpus)
+    spark = get_spark("scale_probe")
     spark.range(10).count()
     probes = [
         ("neardup_ingest", docs_at, probe_neardup_ingest),

@@ -22,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from mongo_polars_reconciliation_spark.harness import queries as _qmod
 from mongo_polars_reconciliation_spark.harness.queries import QUERIES
 from mongo_polars_reconciliation_spark.session import get_spark
+from perfbench.tracing import SparkStatus
 
 # r15: curation_pipeline / _v2 / _v3 were RETIRED from the driver registry
 # (VERDICT r14 #2; carrying pins in tests/test_curation_parity.py at both
@@ -200,51 +201,35 @@ def main() -> None:
     extra_reps = 2
     control = "q1_pricing_summary"
 
-    # r17 (VERDICT r16 #2, scaling-check credibility): the driver's
-    # 8-vs-32-core ratio is uninformative at sf0.1 because AQE's
-    # size-based coalescing collapses most stages to a handful of tasks
-    # — there is nothing for 32 cores to parallelize, and a flat ratio
-    # is indistinguishable from an ignored env var without evidence.
-    # Each query's FIRST rep therefore records its Spark job/stage/task
-    # counts from the AppStatusStore (the data tools/profile_query.py
-    # reads) into the full-fidelity record as `job_profile`: a judge can
-    # read tasks-per-stage directly instead of inferring from wall-clock
-    # ratios. Driver-side only, polled once per query — no listener, no
-    # effect on the timed region beyond one post-rep poll. The stdout
-    # contract line is unchanged.
-    _status_store = spark.sparkContext._jsc.sc().statusStore()  # noqa: SLF001
-
-    def _max_job_id() -> int:
-        jobs = _status_store.jobsList(None)
-        mx = -1
-        for i in range(jobs.size()):
-            mx = max(mx, jobs.apply(i).jobId())
-        return mx
-
-    def _jobs_since(from_id: int) -> dict[str, int]:
-        jobs = _status_store.jobsList(None)
-        njobs = ntasks = nstages = 0
-        for i in range(jobs.size()):
-            j = jobs.apply(i)
-            if j.jobId() > from_id:
-                njobs += 1
-                ntasks += j.numTasks()
-                nstages += j.stageIds().size()
-        return {"jobs": njobs, "stages": nstages, "tasks": ntasks}
-
+    # Each query's FIRST rep records its Spark job/stage/task counts into the
+    # full-fidelity record as `job_profile`, so tasks-per-stage can be read
+    # directly instead of inferred from wall-clock ratios. The job range is
+    # taken from the scheduler's next job id around the rep; the status
+    # store is read after the listener bus is drained, and a job missing
+    # from it raises instead of undercounting. The stdout contract line is
+    # unchanged.
+    status = SparkStatus(spark)
     job_profile: dict[str, dict[str, int]] = {}
+
+    def profile(lo: int, hi: int) -> dict[str, int]:
+        jobs = status.jobs(lo, hi)
+        return {
+            "jobs": len(jobs),
+            "stages": sum(len(j["stageIds"]) for j in jobs),
+            "tasks": sum(j["numTasks"] for j in jobs),
+        }
 
     def run(name: str) -> list[float]:
         ts = []
         for rep in range(reps):
-            before_id = _max_job_id() if rep == 0 else None
+            lo = status.next_job_id()
             t0 = time.perf_counter()
             BENCH_FNS[name](spark, sf_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
             ts.append(round(time.perf_counter() - t0, 3))
             if rep == 0:
-                job_profile[name] = _jobs_since(before_id)
+                job_profile[name] = profile(lo, status.next_job_id())
         if name != control and min(ts) < extra_reps_below_sec:
             for _ in range(extra_reps):
                 t0 = time.perf_counter()

@@ -479,12 +479,11 @@ UNION ALL
 SELECT 'z_eff_a', COUNT(*), {DEC_SUM} FROM ze
 """,
     ),
-    # r15: the skew-knob cascade is bit-identical to the plain cascade by
+    # The hot-key cascade is bit-identical to the plain cascade by
     # contract (ExactPass(hot_threshold) only changes the exact pass's
     # physical join strategy — operators/match.py key-space-partition
-    # argument), so its oracle IS recon_cascade_summary's SQL: the driver
-    # check pins that the pipeline-integrated split does not change a
-    # single bucket row.
+    # argument), so its oracle IS recon_cascade_summary's SQL: the check
+    # pins that the split does not change a single bucket row.
     "recon_cascade_skewed": q(
         BASE_CTES, ZE_CTES,
         select=CASCADE_TAIL_CTES + f"""

@@ -19,7 +19,10 @@ from mongo_polars_reconciliation_spark.harness.fixtures import (
     load_base,
     recon_cfg,
 )
-from mongo_polars_reconciliation_spark.operators.match import match_records
+from mongo_polars_reconciliation_spark.operators.match import (
+    hot_match_keys,
+    match_records,
+)
 from mongo_polars_reconciliation_spark.operators.residuals import (
     residual_external,
     residual_internal,
@@ -77,20 +80,15 @@ def recon_match_exact(spark, sf_dir) -> DataFrame:
 
 
 def recon_match_skewed(spark, sf_dir) -> DataFrame:
-    """r14 (VERDICT r13 #2): skew-hardened exact match — hot key tuples
-    (combined A+B count ≥ threshold) join via broadcast of B's hot slice,
-    the tail sort-merges; output is bit-identical to ``match_records``, so
-    the face shares ``recon_match_exact``'s oracle SQL. The threshold is
-    fixture-low (4: the synthetic B's densest key carries 3 candidate
-    rows against 1 A row — 16 hot keys at sf0.001, 165 at sf0.01) so the
-    driver check exercises BOTH branches; at 100 TB the knob is set so
-    the hot slice is a few monster keys that never enter the shuffle."""
-    from mongo_polars_reconciliation_spark.operators.match import (
-        match_records_skewed,
-    )
-
+    """Exact match through the hot-key split plan: key tuples with a
+    combined A+B count ≥ 4 join via a broadcast of B's hot slice, the rest
+    sort-merges. The output is bit-identical to ``match_records``, so the
+    face shares ``recon_match_exact``'s oracle SQL. The threshold is
+    fixture-low (the synthetic B's densest key carries 3 candidate rows
+    against 1 A row — 16 hot keys at sf0.001, 165 at sf0.01) so the check
+    exercises BOTH branches."""
     cfg, a, b = _ab(spark, sf_dir)
-    matched, _ = match_records_skewed(a, b, cfg, hot_threshold=4)
+    matched, _ = match_records(a, b, cfg, hot_keys=hot_match_keys(a, b, cfg, 4))
     return matched.select(
         "_id", F.col(ROW_NUM).alias("row_num"), "amount", "trx_date"
     )
@@ -156,17 +154,12 @@ def recon_cascade_summary(spark, sf_dir) -> DataFrame:
 
 
 def recon_cascade_skewed(spark, sf_dir) -> DataFrame:
-    """r15 (VERDICT r14 #2): the flagship cascade with its exact pass routed
-    through the skew-hardened match — ``ExactPass(hot_threshold=4)`` reaches
-    ``match_candidates_skewed`` via ``plans/pipeline.py``, so the 100 TB
-    flagship path can engage the hot-key split. Buckets are bit-identical
-    to ``recon_cascade_summary`` by the r14 key-space-partition argument
-    (the split changes only the physical join strategy; reference cascade
-    semantics, src/reconciliatior.py:66-74 + 201-206, unchanged), so the
-    face shares its oracle SQL verbatim — the driver check IS the
-    bit-identity check at pipeline level. The threshold is fixture-low
-    (4, same as ``recon_match_skewed``: 16 hot keys at sf0.001, 165 at
-    sf0.01) so BOTH branches engage at both gate scales."""
+    """The flagship cascade with its exact pass on the hot-key split plan
+    (``ExactPass(hot_threshold=4)``). The buckets are bit-identical to
+    ``recon_cascade_summary`` — the split changes only the physical join
+    strategy — so the face shares its oracle SQL and the check IS the
+    pipeline-level bit-identity check. The threshold matches
+    ``recon_match_skewed`` so BOTH branches engage at both gate scales."""
     cfg, a, b = _ab(spark, sf_dir)
     rc = Reconciliation(cfg, a, b)
     rc.run(

@@ -16,10 +16,23 @@ contract is explicit: candidate order = ``ext_file_row_number`` ascending
 (B's file order). ``strict_compat=True`` reproduces the middle-candidate
 drop; default sends every loser back.
 
-Scale notes: the join shuffles both sides on the key columns (sort-merge), or
-broadcasts B when small — declared with ``broadcast_b=True`` or left to AQE.
-Arbitration adds one extra shuffle on ``_id``; at 100 TB that window is
-per-key-group (no global sort) and AQE handles skewed ids.
+Physical plans (``match_candidates``): by default one sort-merge (or, when
+AQE sizes B under ``autoBroadcastJoinThreshold``, broadcast) join on the
+keys. With a ``hot_keys`` frame the join is split: hot key tuples join via a
+broadcast of B's hot slice and the rest sort-merge. Invariants of the split:
+
+- it partitions the key space, and an inner equi-join distributes over that
+  partition, so the output is bit-identical to the plain plan;
+- one arbitration window runs over the union of the two branches, never one
+  per branch (an ``_id`` has one key tuple, so its candidate group lives in
+  one branch, but ``__cnt`` must not depend on that);
+- the plan reads A and B three times (key aggregate, semi/anti split, match
+  join), so the inputs must be materialized before it — the cascade
+  checkpoints its pass inputs and the harness faces read checkpointed
+  fixtures.
+
+Arbitration adds one shuffle on ``_id``; the window is per-key-group (no
+global sort) and AQE handles skewed ids.
 """
 
 from __future__ import annotations
@@ -40,22 +53,55 @@ def match_candidates(
     a: DataFrame,
     b: DataFrame,
     cfg: ReconConfig,
-    broadcast_b: bool = False,
+    hot_keys: DataFrame | None = None,
     cache=None,
 ) -> DataFrame:
     """Inner-join A⋈B on the key pairs and rank each A row's candidates by
     B file order — the shared substrate for winners, losers AND residuals
-    (one shuffle on the keys; everything downstream anti-joins this by
-    single-column identity instead of re-shuffling A/B on the full keys)."""
-    b_side = F.broadcast(b) if broadcast_b else b
-    joined = a.join(b_side, _join_cond(a, b_side, cfg), "inner").drop(
-        *[b_side[kb] for kb in cfg.b_columns]
+    (everything downstream anti-joins this by single-column identity
+    instead of re-shuffling A/B on the full keys).
+
+    ``hot_keys`` (A-named key tuples, e.g. from ``hot_match_keys``) selects
+    the split plan (module docstring): rows with a hot key tuple join
+    through a broadcast of B's hot slice, the rest sort-merge. It pays off
+    on fanout-heavy keys — a key hot on BOTH sides builds its whole nA·nB
+    fanout in one merge task, which AQE skew splitting (streamed side only)
+    cannot break up; a merely frequent key with trivial fanout makes the
+    split pure overhead. The hot-key frame is aggregate-sized and broadcast
+    for the semi/anti splits; materialize a caller-supplied one if its
+    lineage is expensive."""
+    if hot_keys is None:
+        joined = a.join(b, _join_cond(a, b, cfg), "inner")
+    else:
+        hk_b = hot_keys.select(
+            *[
+                F.col(ka).alias(kb)
+                for ka, kb in zip(cfg.a_columns, cfg.b_columns, strict=True)
+            ]
+        )
+
+        def split(df: DataFrame, hk: DataFrame, keys: list[str], how: str):
+            # USING-join semantics pull the keys to the front; re-select the
+            # original order so both branches share one schema
+            return df.join(F.broadcast(hk), on=keys, how=how).select(*df.columns)
+
+        a_hot = split(a, hot_keys, cfg.a_columns, "left_semi")
+        a_rest = split(a, hot_keys, cfg.a_columns, "left_anti")
+        b_hot = split(b, hk_b, cfg.b_columns, "left_semi")
+        b_rest = split(b, hk_b, cfg.b_columns, "left_anti")
+        rest = a_rest.join(b_rest, _join_cond(a_rest, b_rest, cfg), "inner")
+        hot = a_hot.join(F.broadcast(b_hot), _join_cond(a_hot, b_hot, cfg), "inner")
+        joined = rest.unionByName(hot)
+    # B's keys go by NAME: the split branches share the hot-key subtree, so
+    # the analyzer re-assigns the right side's expression IDs and a
+    # drop-by-reference would silently no-op. ``prepare_external`` gives
+    # every B column the ``ext_`` prefix, so the names are exact.
+    joined = joined.drop(*cfg.b_columns)
+    w = Window.partitionBy(cfg.id_col).orderBy(
+        F.col(cfg.ext_row_number_col).asc_nulls_last()
     )
-    order_col = cfg.ext_row_number_col
-    w = Window.partitionBy(cfg.id_col).orderBy(F.col(order_col).asc_nulls_last())
-    grp = Window.partitionBy(cfg.id_col)
     ranked = joined.withColumn("__rn", F.row_number().over(w)).withColumn(
-        "__cnt", F.count(F.lit(1)).over(grp)
+        "__cnt", F.count(F.lit(1)).over(Window.partitionBy(cfg.id_col))
     )
     if cache is not None:
         # winners, losers and both residual derivations read this frame —
@@ -108,18 +154,15 @@ def match_records(
     a: DataFrame,
     b: DataFrame,
     cfg: ReconConfig,
-    broadcast_b: bool = False,
+    hot_keys: DataFrame | None = None,
     cache=None,
 ) -> tuple[DataFrame, DataFrame]:
     """One-call form: ``(matched, loser_b_rows)`` (reference
     ``match_records`` + ``_process_duplicates``, src/reconciliatior.py:66-74,
     20-59). The pipeline uses the decomposed ``match_candidates`` +
     ``split_winners_losers`` so residuals can reuse the candidate frame."""
-    ranked = match_candidates(a, b, cfg, broadcast_b=broadcast_b, cache=cache)
+    ranked = match_candidates(a, b, cfg, hot_keys=hot_keys, cache=cache)
     return split_winners_losers(ranked, cfg)
-
-
-# --- skew-hardened variant (r14, VERDICT r13 #2) ------------------------------
 
 
 def hot_match_keys(
@@ -162,10 +205,9 @@ def hot_match_keys_auto(
     broadcast_budget_rows: int = 1_000_000,
     min_fanout: int = 32,
 ) -> DataFrame:
-    """Budget-derived hot-key frame (r15, VERDICT r14 #4): makes the
-    "hot keys are few and B's hot slice is broadcastable" contract of
-    ``match_candidates_skewed`` a deterministic sizing rule instead of a
-    hand-picked threshold. Pass the result as ``hot_keys=``.
+    """Budget-derived hot-key frame for ``match_candidates(hot_keys=...)``:
+    a deterministic sizing rule for "hot keys are few and B's hot slice is
+    broadcastable" instead of a hand-picked threshold.
 
     Rule: rank key tuples by combined A+B row count descending (ties
     broken by the key values, so the pick is deterministic), then keep
@@ -173,45 +215,31 @@ def hot_match_keys_auto(
     ``broadcast_budget_rows`` — the budget bounds exactly what the hot
     branch broadcasts (B's hot slice), so the chosen set is
     broadcastable BY CONSTRUCTION. ``min_fanout`` floors the candidate
-    set: keys below it never pay the split (the plain sort-merge handles
-    them fine — NOTES_r14's fanout-light lesson).
+    set: keys below it never pay the split (fanout-light keys are cheaper
+    on the plain sort-merge).
 
-    Candidate filters (r16, VERDICT r15 + ADVICE): before ranking, the
-    rule drops key tuples that can never usefully occupy the budget —
-    (1) tuples with any NULL component (the downstream equality
-    semi-joins can never match them, so a large NULL cluster — missing
-    amounts/codes are common in reconciliation feeds — must not crowd
-    out real hot keys; NULL-keyed rows stay in the sort-merge branch
-    either way, same as ``hot_match_keys``'s documented semantics);
-    (2) tuples with ZERO B-side rows (nothing to broadcast, no match
-    possible — admitting one spends a hot-key-frame slot for no pair
-    fanout saved); (3) tuples whose B slice ALONE exceeds the budget
-    (they can never be admitted, and under the old cumulative-prefix
-    rule one un-broadcastable monster poisoned the running sum and
-    disabled the split for every later key that DID fit — now it is
-    skipped and fitting keys are still admitted). Residual conservatism,
-    documented: within the individually-fitting set the rule still
-    admits a maximal PREFIX, so if the prefix overflows at key i, later
-    smaller keys are not back-filled (a true greedy knapsack is
-    inherently sequential; the prefix rule never overfills and any
-    prefix is a valid key-space partition, so this costs only optional
-    coverage, never correctness).
+    Candidate filters, applied before ranking, drop key tuples that can
+    never usefully occupy the budget: (1) tuples with any NULL component
+    (the equality semi-joins never match them, so a large NULL cluster
+    must not crowd out real hot keys; NULL-keyed rows stay in the
+    sort-merge branch either way); (2) tuples with ZERO B-side rows
+    (nothing to broadcast, no match possible); (3) tuples whose B slice
+    ALONE exceeds the budget (skipped, so one un-broadcastable monster
+    cannot disable the split for later keys that do fit). Within the
+    individually-fitting set the rule admits a maximal PREFIX: if the
+    prefix overflows at key i, later smaller keys are not back-filled.
+    The prefix rule never overfills, and any prefix is a valid key-space
+    partition, so this costs only optional coverage, never correctness.
 
-    Scale bound (r16, VERDICT r15 #4 — unconditional, no longer a
-    skewed-workload assumption): the surviving candidates are pre-pruned
-    to the ``broadcast_budget_rows / min_fanout`` fattest keys by a
-    distributed top-K (per-partition top-K + single-partition merge —
-    ``TakeOrderedAndProject``, executor-side) BEFORE the cumulative
-    window, so the global ranking window's input is aggregate-sized by
-    construction even on an adversarial near-uniform fanout-``min_fanout``
-    key distribution (previously n/min_fanout rows through one sorted
-    partition). The cap is exact at the design point (every admitted key
-    carries ≥ min_fanout B rows ⇒ the admitted prefix can never exceed
-    cap keys); if a workload of sub-``min_fanout``-B keys would admit
-    more, the rule conservatively keeps the cap-many fattest — still a
-    prefix, still budget-respecting, and ``match_candidates_skewed`` is
-    bit-identical under ANY key-space partition, so the truncation is
-    semantics-preserving by construction.
+    Scale bound: the surviving candidates are pre-pruned to the
+    ``broadcast_budget_rows / min_fanout`` fattest keys by a distributed
+    top-K (``TakeOrderedAndProject``, executor-side) BEFORE the
+    cumulative window, so the global ranking window's input is
+    aggregate-sized on any key distribution. The cap is exact at the
+    design point (every admitted key carries ≥ min_fanout B rows); past
+    it the rule keeps the cap-many fattest — still a budget-respecting
+    prefix, and the split is bit-identical under ANY key-space
+    partition.
 
     Everything stays a DataFrame — one union-all key aggregate (the same
     shape ``hot_match_keys`` builds, plus a per-side count), filters, a
@@ -251,119 +279,3 @@ def hot_match_keys_auto(
         .where(F.col("__cum_nb") <= F.lit(broadcast_budget_rows))
         .select(*ka)
     )
-
-
-def match_candidates_skewed(
-    a: DataFrame,
-    b: DataFrame,
-    cfg: ReconConfig,
-    hot_threshold: int | None = None,
-    hot_keys: DataFrame | None = None,
-    cache=None,
-) -> DataFrame:
-    """``match_candidates`` with a hot-key split plan: rows whose key tuple
-    is HOT (combined count ≥ ``hot_threshold``, or caller-supplied
-    ``hot_keys``) join via broadcast of B's hot slice; everything else
-    takes the normal sort-merge path. Output is BIT-IDENTICAL to
-    ``match_candidates`` — the split partitions the key space, an inner
-    equi-join distributes over that partition, and every A ``_id``'s
-    candidate group lives entirely inside one branch (an id has one key
-    tuple). The branches are UNIONED first and then ONE arbitration
-    window runs over the union (see the inline comment below) — do not
-    refactor this into per-branch windows: ``__cnt`` would break if a
-    group ever straddled branches.
-
-    This is the salted-agg pattern applied to J1 (``functions/skew.py``
-    handles aggregation; this handles the match join): AQE skew-join
-    splitting is the first line of defense, but it only splits the
-    STREAMED side of a sort-merge — a key hot on BOTH sides still builds
-    its full fanout in one task's merge. Here the hot slice never enters
-    the shuffle at all.
-
-    Scale contract: ``hot_threshold`` must be set so the hot KEY count is
-    small and B's hot slice fits in a broadcast (a few hot amounts/dates
-    — millions of rows — is the design point; the threshold is a tuning
-    knob, not auto-derived, so the plan is deterministic — see
-    ``hot_match_keys_auto`` for a budget-derived rule). The hot-key
-    frame itself is aggregate-sized and is broadcast for the semi/anti
-    splits — nothing is collected to the driver.
-
-    Input-materialization contract (r15, advice): this plan reads A and B
-    THREE times each (the key aggregate, the semi/anti split, the match
-    join) and the derived ``hot_keys`` aggregate feeds four joins whose
-    broadcast exchanges are not all plan-identical (``hk_b`` is a
-    different projection), so callers should ``persist``/
-    ``localCheckpoint`` A and B before the skewed plan — otherwise the
-    uncached inputs (and through them the key aggregate) can be
-    recomputed per consumer at scale. The engine's own callers already
-    comply: the cascade checkpoints its pass inputs
-    (``plans/pipeline.py:_persist``) and the driver faces read the
-    eagerly-checkpointed ``_ab`` fixture. A caller-supplied ``hot_keys``
-    frame should likewise be materialized if its lineage is expensive.
-
-    When to reach for it (measured, NOTES_r14): the split pays off on
-    FANOUT-HEAVY hot keys — nA·nB large enough that one sort-merge task
-    producing the pairs is the stage straggler (20k×2k ⇒ ×0.86 even on
-    local[32], and the gap widens with executor count). A merely
-    FREQUENT key with trivial fanout (1M×3) makes the split pure
-    overhead (the arbitration window dominates and already
-    distributes); leave those to the plain plan + AQE."""
-    if hot_keys is None:
-        if hot_threshold is None:
-            raise ValueError("need hot_threshold or an explicit hot_keys frame")
-        hot_keys = hot_match_keys(a, b, cfg, hot_threshold)
-    hk_a = F.broadcast(hot_keys)
-    # USING-join semantics pull the key columns to the front; re-select the
-    # original order so both branches (and the plain plan) share one schema
-    a_hot = a.join(hk_a, on=cfg.a_columns, how="left_semi").select(*a.columns)
-    a_rest = a.join(hk_a, on=cfg.a_columns, how="left_anti").select(*a.columns)
-    hk_b = F.broadcast(
-        hot_keys.select(
-            *[
-                F.col(kaa).alias(kb)
-                for kaa, kb in zip(cfg.a_columns, cfg.b_columns, strict=True)
-            ]
-        )
-    )
-    b_hot = b.join(hk_b, on=cfg.b_columns, how="left_semi").select(*b.columns)
-    b_rest = b.join(hk_b, on=cfg.b_columns, how="left_anti").select(*b.columns)
-    # The two match joins are built inline rather than through
-    # ``match_candidates``: the split frames share the hot-key subtree, so
-    # the analyzer de-duplicates the right side's expression IDs at join
-    # time and ``match_candidates``' drop-by-parent-reference would
-    # silently no-op, leaking B's key columns into the output. Key names
-    # are prefix-disjoint from A's by construction (``prepare_external``),
-    # so dropping by NAME is exact. One arbitration window then runs over
-    # the union — identical discipline, one shuffle on the id.
-    rest_joined = a_rest.join(b_rest, _join_cond(a_rest, b_rest, cfg), "inner")
-    hot_joined = a_hot.join(
-        F.broadcast(b_hot), _join_cond(a_hot, b_hot, cfg), "inner"
-    )
-    joined = rest_joined.unionByName(hot_joined).drop(*cfg.b_columns)
-    order_col = cfg.ext_row_number_col
-    w = Window.partitionBy(cfg.id_col).orderBy(F.col(order_col).asc_nulls_last())
-    grp = Window.partitionBy(cfg.id_col)
-    ranked = joined.withColumn("__rn", F.row_number().over(w)).withColumn(
-        "__cnt", F.count(F.lit(1)).over(grp)
-    )
-    if cache is not None:
-        ranked = cache(ranked)
-    return ranked
-
-
-def match_records_skewed(
-    a: DataFrame,
-    b: DataFrame,
-    cfg: ReconConfig,
-    hot_threshold: int | None = None,
-    hot_keys: DataFrame | None = None,
-    cache=None,
-) -> tuple[DataFrame, DataFrame]:
-    """Skew-hardened ``match_records``: same ``(matched, loser_b_rows)``
-    contract and bit-identical output (reference ``match_records``,
-    src/reconciliatior.py:66-74 — the semantics don't change, only the
-    physical join strategy under a hot key)."""
-    ranked = match_candidates_skewed(
-        a, b, cfg, hot_threshold=hot_threshold, hot_keys=hot_keys, cache=cache
-    )
-    return split_winners_losers(ranked, cfg)

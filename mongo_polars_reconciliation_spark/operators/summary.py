@@ -10,8 +10,28 @@ from __future__ import annotations
 from fractions import Fraction
 from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def _count_and_amount(
+    df: DataFrame, amount_col: str, id_col: str, n_name: str, amount_name: str
+) -> list[Column]:
+    """Row count and amount sum aggregates of a bucket. The sum goes
+    through DECIMAL(18,2): decimal addition is exact and order-independent,
+    so the result is deterministic under any shuffle order (float sums are
+    not — SURVEY.md §7 hard part (c)). A missing amount column sums to 0."""
+    amount = (
+        F.coalesce(
+            F.sum(F.col(amount_col).cast("decimal(18,2)")).cast("double"), F.lit(0.0)
+        )
+        if amount_col in df.columns
+        else F.lit(0.0)
+    )
+    return [
+        F.count(id_col if id_col in df.columns else F.lit(1)).alias(n_name),
+        amount.alias(amount_name),
+    ]
 
 
 def bucket_summary(
@@ -21,22 +41,11 @@ def bucket_summary(
     id_col: str = "_id",
 ) -> DataFrame:
     """One-row frame: (bucket, row count, amount sum). Map-side partial
-    aggregation makes this one cheap shuffle of 32 partial rows at any scale.
-
-    The sum goes through DECIMAL(18,2): decimal addition is exact and
-    order-independent, so the result is deterministic under any shuffle order
-    (float sums are not — SURVEY.md §7 hard part (c))."""
-    amount = (
-        F.coalesce(
-            F.sum(F.col(amount_col).cast("decimal(18,2)")).cast("double"), F.lit(0.0)
-        )
-        if amount_col in df.columns
-        else F.lit(0.0)
-    )
+    aggregation makes this one cheap shuffle of 32 partial rows at any
+    scale."""
     return df.agg(
         F.lit(bucket_name).alias("bucket"),
-        F.count(id_col if id_col in df.columns else F.lit(1)).alias("n"),
-        amount.alias("amount_sum"),
+        *_count_and_amount(df, amount_col, id_col, "n", "amount_sum"),
     )
 
 
@@ -267,24 +276,13 @@ def summary_document(
     cost at any scale."""
 
     def one_row(df: DataFrame, prefix: str) -> DataFrame:
-        amount = (
-            F.coalesce(
-                F.sum(F.col(amount_col).cast("decimal(18,2)")).cast("double"),
-                F.lit(0.0),
-            )
-            if amount_col in df.columns
-            else F.lit(0.0)
-        )
         return df.agg(
-            F.count(id_col if id_col in df.columns else F.lit(1)).alias(
-                f"{prefix}_transactions_number"
-            ),
-            amount.alias(f"{prefix}_amount"),
+            *_count_and_amount(
+                df, amount_col, id_col, f"{prefix}_transactions_number", f"{prefix}_amount"
+            )
         )
 
-    m = one_row(matched, "conciliated")
-    u = one_row(unmatched, "remanent")
-    doc = m.crossJoin(u)
+    doc = one_row(matched, "conciliated").crossJoin(one_row(unmatched, "remanent"))
     for name, value in meta.items():
         doc = doc.withColumn(name, F.lit(value))
     return doc.select(

@@ -11,25 +11,28 @@ Spark port fixes the reference's recomputation anti-pattern
 and residuals are materialized between passes — each pass's match + two
 anti-joins reuse one pair of cached inputs.
 
-Materialization strategy (``materialize`` field): a cascade is a *deep*
-plan — each pass's logical tree embeds every earlier pass — and with AQE
-every shuffle stage re-optimizes the full tree, so driver-side planning
-time grows quadratically in pass count while executors sit idle (measured:
-~30 s of planning gaps vs ~10 s of stage compute at sf0.01).
-``"checkpoint"`` (default) uses ``localCheckpoint``: same executor-memory
-storage as ``persist`` *plus* lineage truncation, which is exactly the
-eager-materialization semantics the reference engine has anyway (Polars
-collects per step). The trade: a lost executor forces a job restart
-instead of partition recompute — on long-lived clusters with dynamic
-allocation pass ``materialize="persist"`` to keep recoverable lineage.
+Materialization: a cascade is a *deep* plan — each pass's logical tree
+embeds every earlier pass — and with AQE every shuffle stage re-optimizes
+the full tree, so driver-side planning time would grow quadratically in
+pass count while executors sit idle. Pass inputs, residuals and each
+pass's candidate frame therefore go through ``localCheckpoint``:
+executor-memory storage plus lineage truncation, the eager-materialization
+semantics the reference engine has anyway (Polars collects per step). The
+trade: a lost executor forces a job restart instead of partition
+recompute. A frame the caller already cached, or one that already is a
+checkpoint leaf, is used as is.
+
+Exact passes take an optional ``hot_threshold``: the pass then matches
+through ``match_candidates``' hot-key split plan, whose output is
+bit-identical to the plain plan (operators/match.py), so only the physical
+join strategy changes.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame
-from pyspark.storagelevel import StorageLevel
 
 from mongo_polars_reconciliation_spark.config import (
     ReconConfig,
@@ -37,13 +40,11 @@ from mongo_polars_reconciliation_spark.config import (
     ZeroEffectRule,
 )
 from mongo_polars_reconciliation_spark.operators.match import (
+    hot_match_keys,
     match_candidates,
-    match_candidates_skewed,
     split_winners_losers,
 )
 from mongo_polars_reconciliation_spark.operators.residuals import (
-    residual_external,
-    residual_internal,
     residuals_from_candidates,
 )
 from mongo_polars_reconciliation_spark.operators.summary import run_summary
@@ -60,18 +61,12 @@ class ExactPass:
     those) — the reference's cascade re-matches residuals on different key
     configs between steps (src/reconciliation.py:66-73, new_rc_step).
 
-    ``hot_threshold`` (r15, VERDICT r14 #2): when set, the pass's match
-    join runs the skew-hardened plan (``match_candidates_skewed`` — hot
-    key tuples broadcast B's hot slice, the tail sort-merges) instead of
-    the single sort-merge join. Output is bit-identical by the key-space-
-    partition argument (operators/match.py), so this changes ONLY the
-    physical strategy; reference semantics (src/reconciliatior.py:66-74)
-    are untouched. Default ``None`` keeps the plain plan + AQE — the knob
-    is for fanout-heavy hot keys (the NOTES_r14 A/B contract), not any
-    frequent key. Mutually exclusive with ``broadcast_b`` (if all of B
-    broadcasts, there is no monster shuffle task to split away)."""
+    ``hot_threshold``: when set, key tuples with at least this many combined
+    A+B rows (``hot_match_keys``) join through a broadcast of B's hot slice
+    and the rest sort-merges. The output is bit-identical to the plain
+    plan; set it for fanout-heavy hot keys, not for any frequent key.
+    ``None`` keeps the plain plan, where AQE picks the join by size."""
 
-    broadcast_b: bool = False
     keys: tuple = ()
     hot_threshold: int | None = None
 
@@ -90,7 +85,7 @@ def _union(acc: DataFrame | None, df: DataFrame) -> DataFrame:
 @dataclass
 class Reconciliation:
     """Accumulator-bucket pipeline mirroring the Reconciliator API
-    (src/reconciliatior.py:6-18) with persist-aware pass transitions."""
+    (src/reconciliatior.py:6-18) with checkpointed pass transitions."""
 
     cfg: ReconConfig
     a_df: DataFrame
@@ -100,7 +95,6 @@ class Reconciliation:
     b_to_a_nmt: DataFrame | None = None
     z_eff_a: DataFrame | None = None
     iterations: int = 1
-    materialize: str = "checkpoint"  # "checkpoint" | "persist" (see module doc)
     _persisted: list[DataFrame] = field(default_factory=list)
     # candidate frame of the current pass's match, consumed by
     # not_match_records for id-based residual derivation
@@ -109,14 +103,11 @@ class Reconciliation:
     def _persist(self, df: DataFrame) -> DataFrame:
         if df.storageLevel.useMemory or df.storageLevel.useDisk:
             return df  # already cached by the caller
-        if self.materialize == "checkpoint":
-            if df._jdf.queryExecution().analyzed().getClass().getSimpleName() == (
-                "LogicalRDD"
-            ):
-                return df  # already a checkpoint leaf — don't copy it again
-            df = df.localCheckpoint(eager=False)
-        else:
-            df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        if df._jdf.queryExecution().analyzed().getClass().getSimpleName() == (
+            "LogicalRDD"
+        ):
+            return df  # already a checkpoint leaf — don't copy it again
+        df = df.localCheckpoint(eager=False)
         self._persisted.append(df)
         return df
 
@@ -127,45 +118,32 @@ class Reconciliation:
         self.a_df = self._persist(clean)
         self.z_eff_a = _union(self.z_eff_a, pairs)
 
-    def match_records(
-        self, broadcast_b: bool = False, hot_threshold: int | None = None
-    ) -> None:
-        if hot_threshold is not None:
-            if broadcast_b:
-                raise ValueError(
-                    "broadcast_b and hot_threshold are mutually exclusive: "
-                    "a fully-broadcast B has no shuffle task to split away"
-                )
-            # the skewed plan re-reads both inputs for its key aggregate and
-            # semi/anti splits; the pass inputs are already _persist'ed by
-            # run()/new_rc_step(), satisfying the operator's input-
-            # materialization contract (operators/match.py)
-            ranked = match_candidates_skewed(
-                self.a_df, self.b_df, self.cfg, hot_threshold=hot_threshold,
-                cache=self._persist,
-            )
-        else:
-            ranked = match_candidates(
-                self.a_df, self.b_df, self.cfg, broadcast_b=broadcast_b,
-                cache=self._persist,
-            )
+    def match_records(self, hot_threshold: int | None = None) -> None:
+        # the split plan re-reads both inputs; run()/new_rc_step() have
+        # already checkpointed them, as match_candidates requires
+        hot_keys = (
+            None
+            if hot_threshold is None
+            else hot_match_keys(self.a_df, self.b_df, self.cfg, hot_threshold)
+        )
+        ranked = match_candidates(
+            self.a_df, self.b_df, self.cfg, hot_keys=hot_keys, cache=self._persist
+        )
         matched, loser_b = split_winners_losers(ranked, self.cfg)
         self._candidates = ranked
         self.a_to_b_mt = _union(self.a_to_b_mt, matched)
         self.b_to_a_nmt = _union(self.b_to_a_nmt, loser_b)
 
     def not_match_records(self) -> None:
-        if self._candidates is not None:
-            # reuse the match's cached candidate frame: residual membership
-            # is id-based (one shuffle already paid) — see
-            # residuals_from_candidates for the equivalence argument
-            a_res, b_res = residuals_from_candidates(
-                self.a_df, self.b_df, self._candidates, self.cfg
-            )
-            self._candidates = None
-        else:
-            a_res = residual_internal(self.a_df, self.b_df, self.cfg)
-            b_res = residual_external(self.b_df, self.a_df, self.cfg)
+        """Both residuals of the current pass, derived from its candidate
+        frame (residual membership is id-based, so the match's one key
+        shuffle is reused — see ``residuals_from_candidates``)."""
+        if self._candidates is None:
+            raise ValueError("not_match_records needs a prior match_records")
+        a_res, b_res = residuals_from_candidates(
+            self.a_df, self.b_df, self._candidates, self.cfg
+        )
+        self._candidates = None
         self.a_to_b_nmt = _union(self.a_to_b_nmt, a_res)
         self.b_to_a_nmt = _union(self.b_to_a_nmt, b_res)
 
@@ -201,12 +179,8 @@ class Reconciliation:
         for i, p in enumerate(passes):
             if isinstance(p, ExactPass):
                 if p.keys:
-                    from dataclasses import replace
-
                     self.cfg = replace(base_cfg, keys=list(p.keys))
-                self.match_records(
-                    broadcast_b=p.broadcast_b, hot_threshold=p.hot_threshold
-                )
+                self.match_records(hot_threshold=p.hot_threshold)
                 self.not_match_records()
                 self.cfg = base_cfg
             else:
@@ -230,9 +204,6 @@ class Reconciliation:
         )
 
     def unpersist(self) -> None:
-        """Release cached blocks. Checkpoint-mode blocks that were already
-        materialized are freed by the ContextCleaner once these references
-        drop; ``unpersist`` on them is a harmless no-op."""
-        for df in self._persisted:
-            df.unpersist()
+        """Drop this run's references to its checkpoints; the ContextCleaner
+        frees their blocks once no other frame refers to them."""
         self._persisted.clear()

@@ -3,8 +3,9 @@
 Local testing runs ``local[N]``; the configs below are the ones that matter at
 cluster scale too: AQE on (runtime re-planning, skew-join splitting, dynamic
 shuffle-partition coalescing), UTC session time zone (deterministic date
-formatting), Arrow enabled for the few Pandas-UDF extension paths, and
-nanos-as-long so the ``events`` table's TIMESTAMP(NANOS) parquet is readable.
+formatting), Arrow enabled for the few Pandas-UDF extension paths,
+nanos-as-long so the ``events`` table's TIMESTAMP(NANOS) parquet is readable,
+and the package root on the Python workers' ``PYTHONPATH``.
 """
 
 from __future__ import annotations
@@ -12,6 +13,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_WORKER_PATH = "spark.executorEnv.PYTHONPATH"
 
 
 def get_spark(
@@ -51,7 +55,12 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    # Python workers start in the application's working directory; ship the
+    # package root so UDF kernels import from any directory
+    paths = [_PACKAGE_ROOT, *conf.get(_WORKER_PATH, "").split(os.pathsep)]
+    conf[_WORKER_PATH] = os.pathsep.join(dict.fromkeys(p for p in paths if p))
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

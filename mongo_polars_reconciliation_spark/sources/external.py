@@ -25,7 +25,6 @@ def prepare_external(
     cfg: ReconConfig,
     order_by: list[str] | None = None,
     row_number_col: str | None = None,
-    scalable_index: bool = True,
 ) -> DataFrame:
     """Turn a raw external frame into the engine's prefixed B-side frame.
 
@@ -41,9 +40,7 @@ def prepare_external(
     else:
         if not order_by:
             raise ValueError("need order_by or row_number_col")
-        df = with_file_row_number(
-            df, order_by, cfg.row_number_col, scalable=scalable_index
-        )
+        df = with_file_row_number(df, order_by, cfg.row_number_col)
 
     # numeric alignment casts on pre-prefix names (cast before rename, like
     # the reference: with_columns(cast) → rename → with_columns(exd copies))

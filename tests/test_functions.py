@@ -58,7 +58,7 @@ def test_salted_two_stage_agg_matches_plain(spark):
 
 def test_file_row_number_contiguous(spark):
     df = spark.range(0, 1000).selectExpr("id", "id % 7 as grp")
-    out = with_file_row_number(df, ["id"], scalable=True, num_partitions=8)
+    out = with_file_row_number(df, ["id"], num_partitions=8)
     got = rows(out, "id", "file_row_number")
     assert got == [(i, i + 1) for i in range(1000)]
     assert dict(out.dtypes)["file_row_number"] == "bigint"
@@ -66,8 +66,29 @@ def test_file_row_number_contiguous(spark):
 
 def test_file_row_number_simple(spark):
     df = spark.createDataFrame([("b",), ("a",), ("c",)], ["k"])
-    out = with_file_row_number(df, ["k"], scalable=False)
+    out = with_file_row_number(df, ["k"])
     assert rows(out) == [("a", 1), ("b", 2), ("c", 3)]
+
+
+def test_prepare_external_leaves_no_cache_entry(spark):
+    """The row index stores its range-partitioned frame as a local
+    checkpoint, not a cached plan: a long-lived session that prepares one
+    external file a day must not pile up CacheManager entries."""
+    from mongo_polars_reconciliation_spark.config import KeyPair, ReconConfig
+    from mongo_polars_reconciliation_spark.sources.external import (
+        prepare_external,
+    )
+
+    cfg = ReconConfig(keys=[KeyPair("code", "codigo")])
+    raw = spark.createDataFrame(
+        [(i, f"c{i}") for i in range(20)], "linea int, codigo string"
+    )
+    spark.catalog.clearCache()
+    b = prepare_external(raw, cfg, order_by=["linea"])
+    assert rows(b, "ext_linea", "ext_file_row_number") == [
+        (i, i + 1) for i in range(20)
+    ]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_duplicated_rows_marks_all_members(spark):

@@ -2,7 +2,10 @@ import pytest
 from conftest import rows
 
 from mongo_polars_reconciliation_spark.config import KeyPair, ReconConfig
-from mongo_polars_reconciliation_spark.operators.match import match_records
+from mongo_polars_reconciliation_spark.operators.match import (
+    hot_match_keys,
+    match_records,
+)
 from mongo_polars_reconciliation_spark.operators.residuals import (
     residual_external,
     residual_internal,
@@ -144,13 +147,11 @@ def test_match_skewed_equals_plain(skewed_ab):
     AND losers equal the single-join plan's row-for-row (both arbitrate by
     ext_file_row_number inside per-branch id groups that cannot straddle
     the split — an id has one key tuple)."""
-    from mongo_polars_reconciliation_spark.operators.match import (
-        match_records_skewed,
-    )
-
     a, b = skewed_ab
     matched_p, losers_p = match_records(a, b, CFG)
-    matched_s, losers_s = match_records_skewed(a, b, CFG, hot_threshold=50)
+    matched_s, losers_s = match_records(
+        a, b, CFG, hot_keys=hot_match_keys(a, b, CFG, 50)
+    )
     assert rows(matched_s) == rows(matched_p)
     assert rows(losers_s) == rows(losers_p)
     assert matched_s.columns == matched_p.columns
@@ -164,14 +165,12 @@ def test_match_skewed_equals_plain(skewed_ab):
 
 def test_match_skewed_strict_compat_equals_plain(skewed_ab):
     """The faithful middle-drop bug arbitration also survives the split."""
-    from mongo_polars_reconciliation_spark.operators.match import (
-        match_records_skewed,
-    )
-
     a, b = skewed_ab
     cfg = ReconConfig(keys=CFG.keys, strict_compat=True)
     matched_p, losers_p = match_records(a, b, cfg)
-    matched_s, losers_s = match_records_skewed(a, b, cfg, hot_threshold=50)
+    matched_s, losers_s = match_records(
+        a, b, cfg, hot_keys=hot_match_keys(a, b, cfg, 50)
+    )
     assert rows(matched_s) == rows(matched_p)
     assert rows(losers_s) == rows(losers_p)
 
@@ -183,14 +182,14 @@ def test_match_skewed_plan_broadcasts_hot_slice(spark, skewed_ab):
     small fixture into a broadcast — only the explicit hot-slice hint (and
     the aggregate-sized hot-key splitter frames) may broadcast."""
     from mongo_polars_reconciliation_spark.operators.match import (
-        match_candidates_skewed,
+        match_candidates,
     )
 
     a, b = skewed_ab
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        ranked = match_candidates_skewed(a, b, CFG, hot_threshold=50)
+        ranked = match_candidates(a, b, CFG, hot_keys=hot_match_keys(a, b, CFG, 50))
         plan = ranked._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
@@ -209,10 +208,6 @@ def test_match_skewed_plan_broadcasts_hot_slice(spark, skewed_ab):
 def test_hot_match_keys_counts_both_sides(spark):
     """A key can be hot from either side: combined count (nA+nB) decides,
     mirroring the ingest kernel's combined_cap_keys discipline."""
-    from mongo_polars_reconciliation_spark.operators.match import (
-        hot_match_keys,
-    )
-
     a = spark.createDataFrame(
         [("a1", "AHOT", 1.0)] * 6 + [("a2", "BHOT", 2.0), ("a3", "COLD", 3.0)],
         ["_id", "transaction_code", "approved_transaction_amount"],
@@ -346,12 +341,11 @@ def test_hot_match_keys_auto_cap_truncates_to_prefix(spark):
 
 
 def test_hot_match_keys_auto_feeds_skewed_match(skewed_ab):
-    """The auto-derived frame drops into match_records_skewed as hot_keys
-    and the bit-identity still holds (the rule is just another way to pick
-    the key-space partition)."""
+    """The auto-derived frame drops into match_records as hot_keys and the
+    bit-identity still holds (the rule is just another way to pick the
+    key-space partition)."""
     from mongo_polars_reconciliation_spark.operators.match import (
         hot_match_keys_auto,
-        match_records_skewed,
     )
 
     a, b = skewed_ab
@@ -359,19 +353,15 @@ def test_hot_match_keys_auto_feeds_skewed_match(skewed_ab):
                               min_fanout=50)
     assert rows(hot) == [("HOT", 7.0)]  # the rule finds the monster key
     matched_p, losers_p = match_records(a, b, CFG)
-    matched_s, losers_s = match_records_skewed(a, b, CFG, hot_keys=hot)
+    matched_s, losers_s = match_records(a, b, CFG, hot_keys=hot)
     assert rows(matched_s) == rows(matched_p)
     assert rows(losers_s) == rows(losers_p)
 
 
 def test_match_skewed_null_keys_and_arg_contract(spark):
     """NULL-keyed rows stay in the sort-merge branch and drop out of the
-    inner join exactly as in the plain plan; hot_threshold or hot_keys is
-    required; a caller-supplied hot_keys frame is honored as-is."""
-    from mongo_polars_reconciliation_spark.operators.match import (
-        match_records_skewed,
-    )
-
+    inner join exactly as in the plain plan; a caller-supplied hot_keys
+    frame is honored as-is."""
     a = spark.createDataFrame(
         [("a1", None, 1.0), ("a2", "T1", 1.0)],
         "`_id` string, transaction_code string, approved_transaction_amount double",
@@ -383,12 +373,10 @@ def test_match_skewed_null_keys_and_arg_contract(spark):
         ),
         CFG, order_by=["ord"],
     ).drop("ext_ord")
-    matched, _ = match_records_skewed(a, b, CFG, hot_threshold=2)
+    matched, _ = match_records(a, b, CFG, hot_keys=hot_match_keys(a, b, CFG, 2))
     assert rows(matched, "_id") == [("a2",)]
-    with pytest.raises(ValueError, match="hot_threshold"):
-        match_records_skewed(a, b, CFG)
     explicit = spark.createDataFrame(
         [("T1", 1.0)], ["transaction_code", "approved_transaction_amount"]
     )
-    matched_e, _ = match_records_skewed(a, b, CFG, hot_keys=explicit)
+    matched_e, _ = match_records(a, b, CFG, hot_keys=explicit)
     assert rows(matched_e, "_id") == [("a2",)]

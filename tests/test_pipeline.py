@@ -116,8 +116,8 @@ SKEW_PASSES_HOT = [
 
 
 def test_cascade_skew_knob_buckets_equal_plain(spark):
-    """r15 (VERDICT r14 #2): the hot_threshold knob threaded through the
-    cascade produces bit-identical buckets — both the full-key pass and a
+    """The hot_threshold knob threaded through the cascade produces
+    bit-identical buckets — both the full-key pass and a
     reduced-key second pass (replaced cfg) run the skewed plan, and every
     accumulator bucket equals the plain cascade's row-for-row."""
     a, b = build_skewed(spark)
@@ -138,13 +138,13 @@ def test_cascade_skew_knob_buckets_equal_plain(spark):
 
 
 def test_cascade_skew_knob_plan_pin(spark):
-    """r15 pipeline-level plan pin: with the knob set, the pass built by
+    """Pipeline-level plan pin: with the knob set, the pass built by
     Reconciliation.match_records carries the split plan — BroadcastHashJoin
     for the hot slice, SortMergeJoin for the tail — with auto-broadcast
     disabled so the pin cannot pass by size estimation. Materialization is
-    stubbed to identity for the pin only: checkpoint/persist wrap the plan
-    in a leaf/cache node that hides the join operators from toString, and
-    what the pin must witness is the plan the pipeline BUILDS."""
+    stubbed to identity for the pin only: the checkpoint leaf hides the
+    join operators from toString, and what the pin must witness is the
+    plan the pipeline BUILDS."""
     a, b = build_skewed(spark)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -160,14 +160,14 @@ def test_cascade_skew_knob_plan_pin(spark):
     assert any("SortMergeJoin" in ln and "Inner" in ln for ln in lines), plan
 
 
-def test_cascade_skew_knob_arg_contract(spark):
-    """broadcast_b and hot_threshold are mutually exclusive on a pass."""
+def test_not_match_records_needs_a_prior_match(spark):
+    """Residuals derive from the current pass's candidate frame only."""
     import pytest
 
-    a, b = build_skewed(spark)
+    a, b = build(spark)
     rc = Reconciliation(CFG, a, b)
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        rc.match_records(broadcast_b=True, hot_threshold=10)
+    with pytest.raises(ValueError, match="prior match_records"):
+        rc.not_match_records()
 
 
 def test_cascade_exact_then_tolerance(spark):

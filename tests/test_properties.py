@@ -45,7 +45,7 @@ def _frames(spark, ra, rb):
         [(i, k, str(v)) for i, (k, v) in enumerate(rb)],
         "k long, codigo string, importe string",
     )
-    b = prepare_external(b_raw, CFG, order_by=["k"], scalable_index=False)
+    b = prepare_external(b_raw, CFG, row_number_col="k")
     return a, b
 
 
@@ -4329,20 +4329,22 @@ def test_hot_match_keys_auto_matches_python_model(
     strict=st.booleans(),
 )
 def test_match_skewed_equals_plain_property(spark, ra, rb, thr, strict):
-    """r14: the hot-key split is bit-identical to the plain match for ANY
+    """The hot-key split is bit-identical to the plain match for ANY
     key distribution and ANY threshold — including the degenerate splits
     (thr=1: everything hot, the sort-merge branch is empty; thr=50: nothing
     hot, the broadcast branch is empty) and both arbitration modes. The
     tiny alphabet forces key collisions, k>=3 duplicate groups (the strict
     middle-drop shape), and empty sides."""
     from mongo_polars_reconciliation_spark.operators.match import (
-        match_records_skewed,
+        hot_match_keys,
     )
 
     cfg = ReconConfig(keys=CFG.keys, strict_compat=strict)
     a, b = _frames(spark, ra, rb)
     matched_p, losers_p = match_records(a, b, cfg)
-    matched_s, losers_s = match_records_skewed(a, b, cfg, hot_threshold=thr)
+    matched_s, losers_s = match_records(
+        a, b, cfg, hot_keys=hot_match_keys(a, b, cfg, thr)
+    )
     assert matched_s.columns == matched_p.columns
     assert losers_s.columns == losers_p.columns
     assert sorted(map(tuple, matched_s.collect())) == sorted(

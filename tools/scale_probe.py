@@ -600,7 +600,7 @@ def _skew_cfg():
 
 
 def _skew_fixture(spark, cfg, f: int):
-    """The match_skew fixture (r14): one monster key ("HOT", 7.0) with
+    """The match_skew fixture: one monster key ("HOT", 7.0) with
     nA = 5000·f against a fixed 2000-row B slice, plus a 250k·f 1:1 tail
     (each tail key combined count 2). Shared by the A/B probe and the
     hot-key sizing-rule probe."""
@@ -638,9 +638,11 @@ def _skew_fixture(spark, cfg, f: int):
 
 
 def probe_hot_auto(spark) -> None:
-    """r15 (VERDICT r14 #4): evidence that the budget-derived sizing rule
+    """Evidence that the budget-derived sizing rule
     (``operators/match.py:hot_match_keys_auto``) picks a sane hot-key set
-    on the skew fixture. Expectations the emitted line witnesses:
+    on the skew fixture, and that the picked frame drives
+    ``match_records(hot_keys=...)`` to the plain plan's matched count.
+    Expectations the emitted line witnesses:
 
     * under a realistic budget (1M rows) the rule picks EXACTLY the
       monster key — the 1:1 tail (combined count 2 per key) sits below
@@ -651,14 +653,12 @@ def probe_hot_auto(spark) -> None:
       same key-space partition;
     * a budget SMALLER than the hot B slice (1000 < 2000) picks nothing —
       the rule never overfills the broadcast, it degrades to the plain
-      plan instead. r16 nuance (ADVICE r15): the monster is now skipped
-      INDIVIDUALLY (its B slice alone exceeds the budget) rather than
-      poisoning the cumulative sum, so on this fixture — monster plus a
-      sub-min_fanout 1:1 tail — the pick count is still 0, but a workload
-      with additional FITTING hot keys now admits them (pinned by
+      plan instead (the monster is skipped individually, so further
+      fitting hot keys would still be admitted — pinned by
       ``tests/test_match.py::test_hot_match_keys_auto_skips_useless_keys``)."""
     from mongo_polars_reconciliation_spark.operators.match import (
         hot_match_keys_auto,
+        match_records,
     )
 
     cfg = _skew_cfg()
@@ -690,6 +690,8 @@ def probe_hot_auto(spark) -> None:
     too_small = hot_match_keys_auto(
         a, b, cfg, broadcast_budget_rows=1_000
     ).count()
+    split_matched = match_records(a, b, cfg, hot_keys=picked)[0].count()
+    plain_matched = match_records(a, b, cfg)[0].count()
     print(json.dumps({
         "probe": "hot_auto",
         "budget_rows": 1_000_000,
@@ -698,13 +700,14 @@ def probe_hot_auto(spark) -> None:
         "implied_threshold": picked_counts["implied"],
         "tail_max_combined": tail_max,
         "too_small_budget_picks": too_small,
+        "split_matched_equals_plain": split_matched == plain_matched,
     }))
 
 
 def probe_match_skew(spark, factor: int = 4) -> None:
-    """r14: A/B the skew-hardened match against the plain sort-merge plan
-    on a fanout-heavy fixture at 1x and {factor}x — the evidence behind
-    ``match_records_skewed``'s contract (NOTES_r14): one monster key
+    """A/B the hot-key split plan (``match_records(hot_keys=...)``) against
+    the plain sort-merge plan on a fanout-heavy fixture at 1x and
+    {factor}x — the evidence for when the split pays: one monster key
     whose nA·nB pair production is a single sort-merge task's straggler
     work, plus a 1:1 tail. The hot side scales with the factor (nA =
     5000·f against a fixed 2000-row B slice — hot pairs grow linearly,
@@ -719,15 +722,13 @@ def probe_match_skew(spark, factor: int = 4) -> None:
     expectation is the ordering — plain_ratio > skewed_ratio and
     speedup rising with the factor; the absolute crossover point sits
     around this probe's top scale on local[32] and flaps with ambient
-    load (measured r14: speedup 0.77→0.91 interleaved-dedicated,
-    0.89→1.09 sequential-dedicated — a shared memory bus understates a
-    straggler that would serialize a whole stage on a real cluster).
-    Auto-broadcast is disabled
+    load (a shared memory bus understates a straggler that would
+    serialize a whole stage on a real cluster). Auto-broadcast is disabled
     inside the probe so Spark cannot size-estimate the plain plan into a
     broadcast and vacate the comparison."""
     from mongo_polars_reconciliation_spark.operators.match import (
+        hot_match_keys,
         match_records,
-        match_records_skewed,
     )
 
     cfg = _skew_cfg()
@@ -755,8 +756,8 @@ def probe_match_skew(spark, factor: int = 4) -> None:
                 ts = min(
                     ts,
                     clock_once(
-                        lambda: match_records_skewed(
-                            a, b, cfg, hot_threshold=4_000
+                        lambda: match_records(
+                            a, b, cfg, hot_keys=hot_match_keys(a, b, cfg, 4_000)
                         )
                     ),
                 )
@@ -813,7 +814,7 @@ def main() -> None:
     special = [
         ("admit_depth", probe_admit_depth),
         ("match_skew", probe_match_skew),
-        # r15: budget-derived hot-key sizing rule evidence
+        # budget-derived hot-key sizing rule evidence
         ("hot_auto", probe_hot_auto),
     ]
     if only is not None:

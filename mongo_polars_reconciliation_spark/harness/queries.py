@@ -293,7 +293,7 @@ def recon_summary_doc(spark, sf_dir) -> DataFrame:
 def recon_persist_roundtrip(spark, sf_dir) -> DataFrame:
     """Reference's end-of-run persistence loop END-TO-END
     (``persist_results``, second_conciliate.py:486-503): cascade → each
-    bucket staged then moved time-partitioned into its final dir → the
+    bucket written once, time-partitioned, into its final dir → the
     aggregated-results doc computed FROM the re-read final buckets and
     persisted too. Every returned row is derived from what actually landed
     on disk, so the oracle checks the whole write→read path, not the

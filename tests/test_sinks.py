@@ -1,9 +1,12 @@
 """Sink semantics (SURVEY.md §2.1 S6/S8) and engine partition invariants."""
 
 import glob
+import os
 import shutil
 
+from conftest import rows
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameReader
 
 from mongo_polars_reconciliation_spark.harness.queries import _ab
 from mongo_polars_reconciliation_spark.scratch import scratch_path
@@ -13,6 +16,7 @@ from mongo_polars_reconciliation_spark.operators.residuals import (
     residual_internal,
 )
 from mongo_polars_reconciliation_spark.sources.sinks import (
+    persist_results,
     save_buckets_csv,
     write_time_partitioned,
 )
@@ -35,6 +39,22 @@ def test_save_buckets_csv_single_file_roundtrip(spark):
     assert back.count() == matched.count()
 
 
+def _assert_disjoint_time_ranges(spark, path, ts_col):
+    """Each part file under ``path`` covers its own time interval: sorted by
+    start, no file's range overlaps the next one's. Returns the number of
+    part files."""
+    files = [f for f in glob.glob(f"{path}/part-*") if f.endswith(".parquet")]
+    spans = []
+    for f in files:
+        r = spark.read.parquet(f).agg(F.min(ts_col), F.max(ts_col)).head()
+        if r[0] is not None:
+            spans.append((r[0], r[1]))
+    spans.sort()
+    for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
+        assert hi1 <= lo2
+    return len(files)
+
+
 def test_write_time_partitioned_ranges(spark):
     """S8 without the thread pool: files are range-partitioned on the time
     column, so each covers a contiguous interval (the reference's 5 equal
@@ -42,20 +62,46 @@ def test_write_time_partitioned_ranges(spark):
     shutil.rmtree(f"{OUT}/tp", ignore_errors=True)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    write_time_partitioned(ev, f"{OUT}/tp", "ts", num_partitions=5)
+    write_time_partitioned(ev, f"{OUT}/tp", "ts")
     back = spark.read.parquet(f"{OUT}/tp")
     assert back.count() == ev.count()
-    files = [f for f in glob.glob(f"{OUT}/tp/part-*") if f.endswith(".parquet")]
-    assert len(files) >= 2
-    # per-file min/max ranges must not overlap
-    spans = []
-    for f in files:
-        r = spark.read.parquet(f).agg(F.min("ts"), F.max("ts")).head()
-        if r[0] is not None:
-            spans.append((r[0], r[1]))
-    spans.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
-        assert hi1 <= lo2
+    assert _assert_disjoint_time_ranges(spark, f"{OUT}/tp", "ts") >= 2
+
+
+def test_persist_results_writes_each_bucket_once(spark, monkeypatch):
+    """``persist_results`` writes every bucket straight to its final dir:
+    nothing is read back, no staging dir is left, the finals hold the
+    input rows in disjoint time-range files, and a rerun replaces them."""
+    root = f"{OUT}/persist"
+    shutil.rmtree(root, ignore_errors=True)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ev = spark.read.parquet(f"{SF_DIR}/events.parquet").localCheckpoint()
+    even = ev.where(F.col("event_id") % 2 == 0)
+    buckets = {
+        "even": (even, "ts"),
+        "odd": (ev.where(F.col("event_id") % 2 == 1), "ts"),
+        "empty": (ev.where(F.lit(False)), "ts"),
+    }
+
+    def no_read_back(self, *paths, **options):
+        raise AssertionError(f"persist_results read back {paths}")
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameReader, "parquet", no_read_back)
+        paths = persist_results(buckets, root)
+    assert paths == {name: f"{root}/{name}" for name in buckets}
+    assert not glob.glob(f"{root}/__tmp_*")
+    for name, (df, ts_col) in buckets.items():
+        back = spark.read.parquet(paths[name])
+        assert back.schema == df.schema
+        assert rows(back) == rows(df)
+        _assert_disjoint_time_ranges(spark, paths[name], ts_col)
+
+    # a second run into the same root replaces each final dir in place
+    rerun = {"even": (even.where(F.col("event_id") < 500), "ts")}
+    assert persist_results(rerun, root) == {"even": f"{root}/even"}
+    assert not [e for e in os.listdir(f"{root}/even") if os.path.isdir(f"{root}/even/{e}")]
+    assert rows(spark.read.parquet(f"{root}/even")) == rows(rerun["even"][0])
 
 
 def test_match_and_residual_partition_a(spark):

@@ -1,9 +1,9 @@
 #!/usr/bin/env python
 """Per-query Spark job profile: job count + per-job wall time + total.
 
-Optimization-round instrumentation (guide §1: measure first). Runs one
-bench query through the noop sink with a job-start/end listener attached,
-then prints every Spark job's description and duration, sorted by cost.
+Runs one bench query through the noop sink, then prints the description,
+duration and task count of every Spark job its timed reps launched, in job
+id order.
 The per-job breakdown answers the question the bench total cannot: is a
 multi-action query (ingest loops, cascades, k-means) paying in stage
 compute or in fixed per-job overhead?
@@ -27,6 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import BENCH_FNS as QUERIES  # noqa: E402
 from mongo_polars_reconciliation_spark.session import get_spark  # noqa: E402
+from perfbench.tracing import SparkStatus  # noqa: E402
 
 
 def main() -> None:
@@ -47,13 +48,12 @@ def main() -> None:
     a.count()
     b.count()
 
-    sc = spark.sparkContext
-    jsc = sc._jsc.sc()
-
-    # Listener via the Py4J callback-free route: poll the AppStatusStore
-    # after the run instead of registering a Python listener (callback
-    # server adds its own latency). statusStore gives jobId, name,
-    # submissionTime, completionTime, numTasks.
+    # Only the jobs of the timed reps are reported: the range comes from
+    # the scheduler's next job id around them, so the warm-up and fixture
+    # counts above stay out of the total. SparkStatus drains the listener
+    # bus before it reads the status store.
+    status = SparkStatus(spark)
+    lo = status.next_job_id()
     for rep in range(args.reps):
         t0 = time.perf_counter()
         QUERIES[args.query](spark, sf_dir).write.format("noop").mode(
@@ -62,29 +62,11 @@ def main() -> None:
         dt = time.perf_counter() - t0
         print(f"rep {rep}: {dt:.3f}s")
 
-    store = jsc.statusStore()
-    jobs = store.jobsList(None)
-    n = jobs.size()
     rows = []
-    for i in range(n):
-        j = jobs.apply(i)
-        sub = j.submissionTime()
-        comp = j.completionTime()
-        try:
-            t_sub = sub.get().getTime() if sub.isDefined() else None
-            t_comp = comp.get().getTime() if comp.isDefined() else None
-        except Exception:
-            t_sub = t_comp = None
-        dur = (t_comp - t_sub) / 1000.0 if t_sub and t_comp else float("nan")
-        rows.append(
-            (
-                j.jobId(),
-                dur,
-                j.numTasks(),
-                (j.name() or "")[:110],
-            )
-        )
-    rows.sort(key=lambda r: r[0])
+    for j in status.jobs(lo, status.next_job_id()):
+        sub, comp = j.get("submissionTime"), j.get("completionTime")
+        dur = (comp - sub) / 1000.0 if sub and comp else float("nan")
+        rows.append((j["jobId"], dur, j["numTasks"], (j.get("name") or "")[:110]))
     total = sum(r[1] for r in rows if r[1] == r[1])
     print(f"\n{len(rows)} jobs, {total:.3f}s summed job wall time")
     print(f"{'job':>5} {'sec':>8} {'tasks':>6}  name")

@@ -30,7 +30,6 @@ def curate_corpus(
     text_col: str = "text",
     min_quality: float = 0.5,
     near_dup_threshold: float = 0.6,
-    hash_mode: str = "poly",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Per-language stats of the curated corpus: (pred_lang, n_docs,
@@ -73,7 +72,6 @@ def curate_corpus(
         id_col,
         text_col,
         threshold=near_dup_threshold,
-        hash_mode=hash_mode,
         max_bucket_size=max_bucket_size,
     )
     kept = kept.join(
@@ -111,7 +109,6 @@ def curate_corpus_v2(
     min_quality: float = 0.5,
     near_dup_threshold: float = 0.6,
     contam_threshold: float = 0.2,
-    hash_mode: str = "poly",
     max_bucket_size: int | None = None,
     lm_threshold_q: int | None = None,
     min_term_sent_ratio: float | None = None,
@@ -132,7 +129,7 @@ def curate_corpus_v2(
     gates add are all left_anti on the doc id (one key-shuffle each, tiny
     build sides — the flagged-doc sets).
 
-    ``lm_threshold_q`` (r8, the v3 face): when set, a corpus-bigram LM
+    ``lm_threshold_q`` (the v3 face): when set, a corpus-bigram LM
     typicality gate runs after decontamination — the bigram model is
     trained on the SURVIVING corpus itself (post-dedup, post-gates, the
     distribution the score should mean "typical of") and documents whose
@@ -140,7 +137,7 @@ def curate_corpus_v2(
     below the threshold are dropped. Docs with no bigrams carry no score
     and pass. None (default) skips the stage entirely — v2 behavior.
 
-    ``min_term_sent_ratio`` / ``min_mwps`` (r9): the two C4-residual
+    ``min_term_sent_ratio`` / ``min_mwps``: the two C4-residual
     gates real curation runs among its first cuts — drop docs whose
     terminal-punctuation-per-sentence ratio, or mean words per sentence,
     falls below the floor (``fused_doc_scores(c4=True)`` signals; Raffel
@@ -148,22 +145,22 @@ def curate_corpus_v2(
     projection and the gate is the same left_anti-on-doc-id shape as the
     other gates — zero new shuffles beyond it. None (default) skips.
 
-    ``max_symbol_word_ratio`` / ``min_alpha_word_frac`` (r10): two Gopher
+    ``max_symbol_word_ratio`` / ``min_alpha_word_frac``: two Gopher
     rule gates (Rae et al. 2021 §A1.1.1) — drop docs whose '#'+'...'
     symbol-per-word ratio exceeds the cap (Gopher uses 0.1) or whose
     share of words containing an alphabetic character falls below the
     floor (Gopher uses 0.8). Same row-local-signal + left_anti-on-doc-id
     shape as the C4 gates; None (default) skips.
 
-    r11 (advice): the C4 and Gopher gates share ONE
-    ``fused_doc_scores(c4=…, gopher=…)`` projection — previously each
-    family rescanned ``kept`` separately. All four signals are row-local,
+    The C4 and Gopher gates share ONE
+    ``fused_doc_scores(c4=…, gopher=…)`` projection, so ``kept`` is
+    scanned once for both families. All four signals are row-local,
     so flagging both families from the same frame and applying one union
     left_anti is value-identical to the sequential gates (pinned by
     test_curation_fused_gates_match_sequential_replay in
     tests/test_properties.py) and saves a full-corpus scan at 100 TB.
 
-    ``line_dedup=True`` (r11, the v4 face): corpus-wide C4 LINE dedup
+    ``line_dedup=True`` (the v4 face): corpus-wide C4 LINE dedup
     runs right after exact dedup — every line repeated anywhere in the
     surviving corpus is trimmed to its first global occurrence
     (``line_dedup_trim``), documents that empty out are dropped, and the
@@ -175,7 +172,7 @@ def curate_corpus_v2(
         repetition_signals,
     )
 
-    # shared narrow text scan, as in curate_corpus (r8)
+    # shared narrow text scan, as in curate_corpus
     base = docs.select(F.col(id_col), F.col(text_col)).localCheckpoint(
         eager=False
     )
@@ -204,7 +201,6 @@ def curate_corpus_v2(
         id_col,
         text_col,
         threshold=near_dup_threshold,
-        hash_mode=hash_mode,
         max_bucket_size=max_bucket_size,
     )
     kept = kept.join(

@@ -9,11 +9,10 @@ Designed for the 100 TB dedup pipeline shape:
 - *n-gram Jaccard*: shingle inverted index with a document-frequency cap
   (stop-shingle removal bounds the index blowup), then pair-count verify.
 
-``hash_mode``: "poly" (default) assigns shingle ids with a polynomial
-rolling string hash — narrow column arithmetic, no dictionary, no global
-sort, no join, and bit-identical in ANSI SQL, so the oracle mirrors it.
-"xxhash64" is the single-call JVM hash for pipelines that never need
-cross-engine reproduction.
+Shingle and token ids come from one polynomial rolling string hash
+(per-char fold mod P): narrow column arithmetic with no dictionary, no
+global sort and no join, bit-identical in ANSI SQL, so every DuckDB
+oracle replays the same ids and the same signatures.
 """
 
 from __future__ import annotations
@@ -105,7 +104,6 @@ def band_state(
     n: int = 3,
     num_hashes: int = 12,
     bands: int = 4,
-    hash_mode: str = "poly",
 ) -> DataFrame:
     """(bband, doc_id) MinHash band-key table of a corpus — the persisted
     NEAR-dup state the crawl loop keeps next to the exact digest set.
@@ -123,7 +121,7 @@ def band_state(
         F.col(id_col), F.coalesce(F.col(text_col), F.lit("")).alias(text_col)
     )
     sigs = minhash_signatures_wide(
-        _shingle_ids(shingles(base, id_col, text_col, n), hash_mode),
+        _shingle_ids(shingles(base, id_col, text_col, n)),
         id_col,
         num_hashes,
     )
@@ -147,12 +145,11 @@ def ingest_novel_neardup(
     num_hashes: int = 12,
     bands: int = 4,
     threshold: float = 0.6,
-    hash_mode: str = "poly",
     max_bucket_size: int | None = None,
     mis_max_iter: int = 25,
 ) -> DataFrame:
     """Incremental NEAR-dup ingest — the full "new dump arrived" decision
-    (r9; extends :func:`ingest_novel`, which answers only the exact-digest
+    (extends :func:`ingest_novel`, which answers only the exact-digest
     half): of an arriving batch, admit the documents that are neither
     exact copies NOR verified near-duplicates of (a) the persisted corpus
     or (b) an already-admitted batch member. Returns (id, text_hash) of
@@ -179,20 +176,19 @@ def ingest_novel_neardup(
     for why per-pair/per-cluster keep-lowest break idempotence). Docs
     with no shingles (< n tokens) are exact-dedup-only by construction.
     Phases 1 (digest keepers) and the hot-bucket cap are the kernel's
-    too (r13 extraction); this body keeps only the text-family pieces —
-    MinHash band keys, the ghost-row/survivor-exclusion rules below,
-    and exact-Jaccard verification.
+    too; this body keeps only the text-family pieces — MinHash band
+    keys, the ghost-row/survivor-exclusion rules below, and
+    exact-Jaccard verification.
 
-    ``max_bucket_size`` (r10: extended from within-batch-only to BOTH
-    collision joins, the ``ingest_novel_payloads`` treatment): a
-    boilerplate band key shared corpus-wide — the canonical LSH hot
-    bucket — would fan every batch doc carrying it out to all its
-    history holders. With the cap set, the per-key population is counted
-    over the batch's keys plus the state rows those keys TOUCH (the
-    bucketed key semi-join reads only matching buckets, never full
-    history) and over-cap keys are dropped from the history join; the
-    within-batch phase keeps its batch-side count via
-    :func:`_pairs_from_band_keys`. A bucket that common is boilerplate
+    ``max_bucket_size`` guards BOTH collision joins (the
+    ``ingest_novel_payloads`` treatment): a boilerplate band key shared
+    corpus-wide — the canonical LSH hot bucket — would fan every batch
+    doc carrying it out to all its history holders. With the cap set,
+    the per-key population is counted over the batch's keys plus the
+    state rows those keys TOUCH (the bucketed key semi-join reads only
+    matching buckets, never full history) and over-cap keys are dropped
+    from the history join; the within-batch phase keeps its batch-side
+    count via :func:`_pairs_from_band_keys`. A bucket that common is boilerplate
     collision — genuinely similar docs still meet in their other bands —
     and a dropped bucket's candidates would have failed the Jaccard
     verify anyway in that case (pinned capped ≡ uncapped on a
@@ -217,14 +213,12 @@ def ingest_novel_neardup(
 
     # batch band keys (wide signatures — the minhash_near_dups shape) over
     # the checkpointed shingle-ARRAY frame, which jaccard_verify reuses
-    sets_b_base = shingle_sets(kept, id_col, text_col, n)
-    target = new_docs.sparkSession.sparkContext.defaultParallelism
-    if sets_b_base.rdd.getNumPartitions() < target:
-        sets_b_base = sets_b_base.repartition(target, F.col(id_col))
-    sets_b = sets_b_base.localCheckpoint(eager=False)
+    sets_b = _widen_on_id(
+        shingle_sets(kept, id_col, text_col, n), id_col
+    ).localCheckpoint(eager=False)
     sh_b = sets_b.select(F.col(id_col), F.explode("__shset").alias("shingle"))
     bk = _band_keys_wide(
-        minhash_signatures_wide(_shingle_ids(sh_b, hash_mode), id_col, num_hashes),
+        minhash_signatures_wide(_shingle_ids(sh_b), id_col, num_hashes),
         id_col,
         num_hashes // bands,
         num_hashes,
@@ -329,6 +323,19 @@ def ingest_novel_neardup(
     )
 
 
+def _widen_on_id(df: DataFrame, id_col: str) -> DataFrame:
+    """``df`` hash-repartitioned on the id when it has fewer partitions
+    than the cluster's parallelism, else unchanged. The per-row shingle
+    and hash work downstream is the CPU cost, and a small corpus read from
+    few splits would otherwise run it on as few cores (measured: 3 tasks
+    on 32 cores). It never narrows, so an input that already has more
+    partitions (the 100 TB case) gets no shuffle at all."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target, F.col(id_col))
+    return df
+
+
 def shingles(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
 ) -> DataFrame:
@@ -400,27 +407,19 @@ def shingle_sets(
     )
 
 
-def _shingle_ids(sh: DataFrame, hash_mode: str, p: int = MINHASH_P) -> DataFrame:
-    """Attach an integer shingle id (mod ``p``).
-
-    - ``poly`` (default; ``dict`` accepted as a legacy alias): polynomial
-      rolling hash of the shingle string, per-char fold mod P — pure
-      narrow column arithmetic (NO dictionary, NO global sort, NO join)
-      and bit-identical in any engine, so the oracle mirrors it directly;
-    - ``xxhash64``: one JVM hash call — fastest, engine-specific, for
-      pipelines that never need cross-engine reproduction.
-    """
-    if hash_mode == "xxhash64":
-        return sh.withColumn("sid", F.pmod(F.xxhash64("shingle"), F.lit(p)))
-    if hash_mode not in ("poly", "dict"):
-        raise ValueError(f"unknown hash_mode {hash_mode!r}")
+def _shingle_ids(sh: DataFrame) -> DataFrame:
+    """Attach an integer shingle id: the polynomial rolling hash of the
+    shingle string, per-char fold mod ``MINHASH_P`` — pure narrow column
+    arithmetic (NO dictionary, NO global sort, NO join) and bit-identical
+    in any engine, so the oracle mirrors it directly."""
     # empty-string guard: sequence(1,0) would COUNT DOWN in Spark and the
     # mirrored list_reduce would fold an empty list in the oracle; the
-    # bigint accumulator keeps h*31 exact for p up to 2^31-1
+    # bigint accumulator keeps h*31 exact for a modulus up to 2^31-1
     sid = F.expr(
         f"CASE WHEN length(shingle) = 0 THEN cast(0 as bigint) ELSE "
         f"aggregate(sequence(1, length(shingle)), cast(0 as bigint), "
-        f"(h, i) -> pmod(h * 31 + pmod(ascii(substring(shingle, i, 1)), {p}), {p})) END"
+        f"(h, i) -> pmod(h * 31 + pmod(ascii(substring(shingle, i, 1)),"
+        f" {MINHASH_P}), {MINHASH_P})) END"
     )
     return sh.withColumn("sid", sid)
 
@@ -686,8 +685,6 @@ def minhash_near_dups(
     num_hashes: int = 12,
     bands: int = 4,
     threshold: float = 0.6,
-    hash_mode: str = "poly",
-    shingle_partitions: int | None = None,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """shingle → minhash → LSH bands → verified near-dup pairs.
@@ -702,15 +699,11 @@ def minhash_near_dups(
     same driver-planning bottleneck measured on the cascade (see
     plans/pipeline.py module doc).
 
-    The shingle-set frame is hash-repartitioned on the doc id before the
-    checkpoint ONLY when its natural partitioning is narrower than the
-    target: the downstream per-character polynomial hash is the CPU-heavy
-    step, and a small corpus read from few parquet splits would otherwise
-    run it on as few cores (measured: 3 tasks on 32 cores). When the
-    input already has more partitions (the 100 TB case) no repartition —
-    and no shuffle — happens at all.
+    The shingle-set frame is widened to the cluster's parallelism before
+    the checkpoint (:func:`_widen_on_id`): the downstream per-character
+    polynomial hash is the CPU-heavy step.
 
-    Measured-and-rejected (r6): a fully ROW-LOCAL band-key path (per-row
+    Measured-and-rejected: a fully ROW-LOCAL band-key path (per-row
     shingle array → sid array → 12 array-min hashes → band keys in one
     projection, zero shuffles before the bucket join — the rewrite that
     took SimHash 4.5 s → 1.4 s) ran 10–20% SLOWER here in an interleaved
@@ -722,19 +715,13 @@ def minhash_near_dups(
     # the checkpointed frame is the per-doc shingle ARRAY, not the
     # exploded rows: the signature pipeline explodes it map-only, and
     # jaccard_verify intersects the arrays directly
-    sets_base = shingle_sets(df, id_col, text_col, n)
-    target = (
-        shingle_partitions or df.sparkSession.sparkContext.defaultParallelism
-    )
-    if sets_base.rdd.getNumPartitions() < target:
-        sets_base = sets_base.repartition(target, F.col(id_col))
-    sets = sets_base.localCheckpoint(eager=False)
+    sets = _widen_on_id(
+        shingle_sets(df, id_col, text_col, n), id_col
+    ).localCheckpoint(eager=False)
     sh = sets.select(F.col(id_col), F.explode("__shset").alias("shingle"))
     # wide signature path: ONE groupBy(doc) with 12 min columns + row-local
     # band keys — two fewer shuffles than the long (doc,j) form, same values
-    sigs_wide = minhash_signatures_wide(
-        _shingle_ids(sh, hash_mode), id_col, num_hashes
-    )
+    sigs_wide = minhash_signatures_wide(_shingle_ids(sh), id_col, num_hashes)
     # checkpoint the (bands-per-doc) band-key rows: the bucket-pair stage
     # consumes them three times (size filter + both self-join sides), and
     # each consumption would otherwise recompute the signature aggregation
@@ -753,7 +740,6 @@ def simhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_mode: str = "poly",
 ) -> DataFrame:
     """64-bit SimHash over unigram tokens with term-frequency weights.
 
@@ -778,18 +764,13 @@ def simhash_signatures(
     ~2.5 s at sf0.1. Two earlier rejected reorderings of the shuffle form
     (hash-after-count-groupBy, pre-hash widening) are moot now — there is
     nothing left to shuffle."""
-    if hash_mode == "xxhash64":
-        sid_of = f"pmod(xxhash64(t), {SIMHASH_SID_P})"
-    elif hash_mode in ("poly", "dict"):
-        # same per-char fold as _shingle_ids (empty-string guard included)
-        sid_of = (
-            f"CASE WHEN length(t) = 0 THEN cast(0 as bigint) ELSE "
-            f"aggregate(sequence(1, length(t)), cast(0 as bigint), "
-            f"(h, i) -> pmod(h * 31 + pmod(ascii(substring(t, i, 1)),"
-            f" {SIMHASH_SID_P}), {SIMHASH_SID_P})) END"
-        )
-    else:
-        raise ValueError(f"unknown hash_mode {hash_mode!r}")
+    # same per-char fold as _shingle_ids (empty-string guard included)
+    sid_of = (
+        f"CASE WHEN length(t) = 0 THEN cast(0 as bigint) ELSE "
+        f"aggregate(sequence(1, length(t)), cast(0 as bigint), "
+        f"(h, i) -> pmod(h * 31 + pmod(ascii(substring(t, i, 1)),"
+        f" {SIMHASH_SID_P}), {SIMHASH_SID_P})) END"
+    )
     sids = F.expr(
         f"transform(split({text_col}, ' '), t -> {sid_of})"
     ).alias("__sids")
@@ -854,7 +835,6 @@ def simhash_near_dups(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
-    hash_mode: str = "poly",
 ) -> DataFrame:
     """4-block pigeonhole blocking over 64-bit signatures: a pair within
     Hamming distance 3 differs in at most 3 of the 4 disjoint 16-bit
@@ -867,9 +847,7 @@ def simhash_near_dups(
         raise ValueError(
             f"pigeonhole guarantee needs max_hamming < {SIMHASH_BLOCKS}"
         )
-    sigs = simhash_signatures(df, id_col, text_col, hash_mode).localCheckpoint(
-        eager=False
-    )
+    sigs = simhash_signatures(df, id_col, text_col).localCheckpoint(eager=False)
     blocks = simhash_blocks(sigs, id_col)
     l = blocks.select(
         F.col(id_col).alias("id_a"), F.col("simhash").alias("sh_a"), "b", "bval"
@@ -1090,7 +1068,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_df: int = 50,
-    shingle_partitions: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup via shingle inverted index. Shingles
     with document frequency > max_df are dropped from the *index* (classic
@@ -1098,31 +1075,26 @@ def ngram_jaccard_pairs(
     the capped shingle sets of both docs (consistent, engine-mirrorable).
 
     The shingle frame is checkpointed once (read three times: df-counts,
-    both sides of the inverted-index join) and widened — never narrowed —
-    to ``shingle_partitions`` (default: the cluster's parallelism) when a
-    few-split corpus would otherwise run the per-character shingle work
-    on a handful of cores. The shingle identity that shuffles (df
-    groupBy, cap join, inverted-index self-join) is the 128-bit two-lane
-    xxhash64 composite, not the raw n-token string — the
+    both sides of the inverted-index join) and widened to the cluster's
+    parallelism (:func:`_widen_on_id`). The shingle identity that
+    shuffles (df groupBy, cap join, inverted-index self-join) is the
+    128-bit two-lane xxhash64 composite, not the raw n-token string — the
     ``duplicate_spans`` shuffle-byte treatment; a collision could only
     merge two shingles' df counts (collision odds ~N²/2¹²⁹). Interleaved
     A/B at sf0.1 measured neutral wall-clock (3.29 vs 3.31 s min —
     stage latency dominates at test scale); the change is for shuffle
     BYTES, which shrink several-fold on long shingles at 100 TB."""
-    sh_base = shingles(df, id_col, text_col, n).select(
-        F.col(id_col),
-        F.xxhash64("shingle").alias("h1"),
-        F.xxhash64(F.col("shingle"), F.lit(0x5EED)).alias("h2"),
-    )
-    target = (
-        shingle_partitions or df.sparkSession.sparkContext.defaultParallelism
-    )
-    if sh_base.rdd.getNumPartitions() < target:
-        sh_base = sh_base.repartition(target, F.col(id_col))
-    sh = sh_base.localCheckpoint(eager=False)
-    # r16 measured-and-rejected (guide §1.2 discipline): a window-count
-    # df cap (the _pairs_from_band_keys rewrite) ran ×1.46 SLOWER here in
-    # an interleaved A/B at sf0.1 (2.90 vs 4.24 s min) — this frame is
+    sh = _widen_on_id(
+        shingles(df, id_col, text_col, n).select(
+            F.col(id_col),
+            F.xxhash64("shingle").alias("h1"),
+            F.xxhash64(F.col("shingle"), F.lit(0x5EED)).alias("h2"),
+        ),
+        id_col,
+    ).localCheckpoint(eager=False)
+    # measured-and-rejected: a window-count df cap (the
+    # _pairs_from_band_keys rewrite) ran ×1.46 SLOWER here in an
+    # interleaved A/B at sf0.1 (2.90 vs 4.24 s min) — this frame is
     # ~300k rows of near-unique hash keys, so the window's sort dwarfs
     # the hash-agg + join-back it would save; the band-key frame where
     # the rewrite wins is two orders smaller and post-aggregate.

@@ -11,7 +11,7 @@ novel rows, append). What differs per family is the CANDIDATE GENERATOR
 and the VERIFIER (exact Jaccard over shingles / 6-dp cosine / shared
 aligned-block fraction); what never differs is the state discipline.
 This module is that discipline, extracted verbatim from the three
-function bodies (r13; the refactor carried as r10 #7 → r11 #5 → r12 #5):
+function bodies:
 
 - :func:`digest_novel_keepers` — phase 1: within-batch exact collapse
   to the deterministic min-id keeper per content digest, then the
@@ -47,6 +47,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from mongo_polars_reconciliation_spark.session import materialize
 
 
 def digest_novel_keepers(
@@ -121,7 +123,6 @@ def greedy_admit(
     edges: DataFrame,
     id_col: str,
     max_iter: int = 25,
-    inputs_materialized: bool = False,
 ) -> DataFrame:
     """Sequential-arrival admission over a verified near-dup pair graph:
     admit a doc iff NO already-ADMITTED lower id is a verified near-dup
@@ -136,7 +137,7 @@ def greedy_admit(
     components) both break that contract: a doc can be dropped because
     of a neighbor that itself was never admitted, so on re-delivery (or a
     different batch split) nothing in the state blocks it and it slips
-    in. Measured on the r8 ingest pins' counter-example shapes in
+    in. Pinned on those counter-example shapes in
     tests/test_properties.py.
 
     Iterative topological wave, one join + one groupBy per round: a node
@@ -151,22 +152,15 @@ def greedy_admit(
     bounded driver-side loop the ingest family keeps — it reads a
     status frame of |paired batch nodes| rows, never the corpus.
 
-    ``inputs_materialized`` (r16, optimization round): when the caller
-    already owns checkpoints of BOTH inputs (``admit_sequential`` does —
-    it checkpoints the edge set and the paired-node frame), the entry
-    checkpoints here would each copy an already-materialized leaf through
-    one more job (measured: the admission tail of a converged-in-one-
-    round batch spends ~1 s in fixed job overhead, not compute). Skipping
-    them reads the map-only projections straight off the caller's leaves;
-    per-round status checkpoints are unchanged. Default False keeps the
-    self-contained behavior for direct callers."""
-    e = edges.select(F.col("lo"), F.col("hi"))
-    status = candidates.select(
+    Both inputs go through ``session.materialize`` at entry: an input
+    that already is a checkpoint leaf or cached (``admit_sequential``
+    passes both that way) is read as is, so the loop's map-only
+    projections sit straight on the caller's leaf instead of copying it
+    through one more job; a raw input is checkpointed once."""
+    e = materialize(edges).select(F.col("lo"), F.col("hi"))
+    status = materialize(candidates).select(
         F.col(id_col).alias("node"), F.lit("U").alias("st")
     )
-    if not inputs_materialized:
-        e = e.localCheckpoint(eager=False)
-        status = status.localCheckpoint(eager=False)
     for _ in range(max_iter):
         low = (
             e.join(status, e["lo"] == status["node"])
@@ -215,7 +209,8 @@ def admit_sequential(
     The edge set is checkpointed HERE because this tail consumes it
     three times (both legs of the paired-node union and the greedy
     loop's own leaf) — callers pass the raw verified frame and must not
-    stack a second boundary under it."""
+    stack a second boundary under it. :func:`greedy_admit` reads both
+    checkpoints as is."""
     edges = edges.localCheckpoint(eager=False)
     paired = (
         edges.select(F.col("lo").alias(id_col))
@@ -223,10 +218,6 @@ def admit_sequential(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    # both inputs are checkpointed right here, so the greedy loop must not
-    # stack a second boundary under either (r16 — see greedy_admit)
-    admitted_mis = greedy_admit(
-        paired, edges, id_col, mis_max_iter, inputs_materialized=True
-    )
+    admitted_mis = greedy_admit(paired, edges, id_col, mis_max_iter)
     unpaired = kept_ids.join(paired, id_col, "left_anti")
     return unpaired.unionByName(admitted_mis)

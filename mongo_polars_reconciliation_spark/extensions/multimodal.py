@@ -53,21 +53,18 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def extract_features(mm: DataFrame, batch_probe: dict | None = None) -> DataFrame:
+def extract_features(mm: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the binary payload.
 
     The stub 'decoder' computes byte length and the hex of the first 8 bytes
     — stand-ins for (width, height, phash). Swap ``_extract_batch``'s body
     for PIL/ffmpeg calls in production; the mapInPandas contract (schema,
-    batch shape) stays identical. ``batch_probe`` (tests only) records how
-    many Arrow batches were seen."""
+    batch shape) stays identical."""
 
     def _extract(batches: Iterator, /):
         import pandas as pd
 
         for pdf in batches:
-            if batch_probe is not None:
-                batch_probe["batches"] = batch_probe.get("batches", 0) + 1
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],

@@ -1510,21 +1510,15 @@ def semantic_dedup_fitted(
     target_block_rows: int = 1024,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cents: "list[list[float]] | None" = None,
 ) -> DataFrame:
     """:func:`semantic_dedup` over FITTED multi-probe blocks: a vector is
     dropped iff some lower-id vector shares ANY of its ``nprobe`` nearest
     clusters with cosine ≥ ``threshold``. The real-corpus form (no label
     column exists at 100 TB) with the boundary-blindness of single-block
     blocking reduced: near-duplicates split across a cluster edge still
-    meet through their second probe. Returns surviving ids. ``cents``:
-    a pre-fitted centroid list skips the in-session fit — see
-    :func:`knn_join_multiprobe`."""
-    if cents is None:
-        nlist = _resolve_nlist(nlist, emb, target_block_rows)
-        cents = kmeans_fit(
-            emb, k=nlist, n_iter=n_iter, id_col=id_col, vec_col=vec_col
-        )
+    meet through their second probe. Returns surviving ids."""
+    nlist = _resolve_nlist(nlist, emb, target_block_rows)
+    cents = kmeans_fit(emb, k=nlist, n_iter=n_iter, id_col=id_col, vec_col=vec_col)
     blocked = probe_assignments(
         emb, cents, nprobe, id_col, vec_col
     ).localCheckpoint(eager=False)

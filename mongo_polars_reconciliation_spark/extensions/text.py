@@ -1101,7 +1101,7 @@ def mix_epochs(
         poly_hash_mixed_col,
     )
 
-    # loud-failure posture (like _shingle_ids' hash_mode check): a negative
+    # loud-failure posture: a negative
     # weight would silently floor to 0 copies with a negative fractional
     # threshold, and NaN would silently zero out a stratum
     for k, w in list(weights.items()) + [("default_weight", default_weight)]:

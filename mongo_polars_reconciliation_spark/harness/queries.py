@@ -953,7 +953,7 @@ def dedup_minhash_lsh(spark, sf_dir) -> DataFrame:
     from mongo_polars_reconciliation_spark.extensions.dedup import minhash_near_dups
     from mongo_polars_reconciliation_spark.harness.fixtures import build_documents_aug
 
-    return minhash_near_dups(build_documents_aug(spark, sf_dir), hash_mode="poly")
+    return minhash_near_dups(build_documents_aug(spark, sf_dir))
 
 
 # dedup_minhash_lsh_capped RETIRED r13 (VERDICT r12 #5, registry
@@ -968,7 +968,7 @@ def dedup_simhash(spark, sf_dir) -> DataFrame:
     from mongo_polars_reconciliation_spark.extensions.dedup import simhash_near_dups
     from mongo_polars_reconciliation_spark.harness.fixtures import build_documents_aug
 
-    return simhash_near_dups(build_documents_aug(spark, sf_dir), hash_mode="poly")
+    return simhash_near_dups(build_documents_aug(spark, sf_dir))
 
 
 def dedup_clusters_cc(spark, sf_dir) -> DataFrame:
@@ -982,7 +982,7 @@ def dedup_clusters_cc(spark, sf_dir) -> DataFrame:
     from mongo_polars_reconciliation_spark.harness.fixtures import build_documents_aug
 
     docs = build_documents_aug(spark, sf_dir)
-    pairs = minhash_near_dups(docs, hash_mode="poly")
+    pairs = minhash_near_dups(docs)
     return dedup_clusters(pairs, docs.select("doc_id"))
 
 
@@ -998,7 +998,7 @@ def dedup_clusters_star_cc(spark, sf_dir) -> DataFrame:
     from mongo_polars_reconciliation_spark.harness.fixtures import build_documents_aug
 
     docs = build_documents_aug(spark, sf_dir)
-    pairs = minhash_near_dups(docs, hash_mode="poly")
+    pairs = minhash_near_dups(docs)
     return dedup_clusters_star(pairs, docs.select("doc_id"))
 
 
@@ -1026,7 +1026,7 @@ def dedup_clusters_quality(spark, sf_dir) -> DataFrame:
     docs = build_documents_aug(spark, sf_dir).select(
         "doc_id", F.coalesce(F.col("text"), F.lit("")).alias("text")
     )
-    pairs = minhash_near_dups(docs, hash_mode="poly")
+    pairs = minhash_near_dups(docs)
     clusters = dedup_clusters_star(pairs, docs.select("doc_id"))
     scores = fused_doc_scores(docs)
     return cluster_keepers_by_quality(clusters, scores)
@@ -2031,7 +2031,7 @@ def text_split_cluster_safe(spark, sf_dir) -> DataFrame:
     from mongo_polars_reconciliation_spark.harness.fixtures import build_documents_aug
 
     docs = build_documents_aug(spark, sf_dir)
-    pairs = minhash_near_dups(docs, hash_mode="poly")
+    pairs = minhash_near_dups(docs)
     return cluster_safe_split(dedup_clusters(pairs, docs.select("doc_id")))
 
 

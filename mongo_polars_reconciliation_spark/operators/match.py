@@ -155,14 +155,12 @@ def match_records(
     b: DataFrame,
     cfg: ReconConfig,
     hot_keys: DataFrame | None = None,
-    cache=None,
 ) -> tuple[DataFrame, DataFrame]:
     """One-call form: ``(matched, loser_b_rows)`` (reference
     ``match_records`` + ``_process_duplicates``, src/reconciliatior.py:66-74,
     20-59). The pipeline uses the decomposed ``match_candidates`` +
     ``split_winners_losers`` so residuals can reuse the candidate frame."""
-    ranked = match_candidates(a, b, cfg, hot_keys=hot_keys, cache=cache)
-    return split_winners_losers(ranked, cfg)
+    return split_winners_losers(match_candidates(a, b, cfg, hot_keys=hot_keys), cfg)
 
 
 def hot_match_keys(

@@ -20,7 +20,7 @@ executor-memory storage plus lineage truncation, the eager-materialization
 semantics the reference engine has anyway (Polars collects per step). The
 trade: a lost executor forces a job restart instead of partition
 recompute. A frame the caller already cached, or one that already is a
-checkpoint leaf, is used as is.
+checkpoint leaf, is used as is (``session.materialize``).
 
 Exact passes take an optional ``hot_threshold``: the pass then matches
 through ``match_candidates``' hot-key split plan, whose output is
@@ -50,6 +50,7 @@ from mongo_polars_reconciliation_spark.operators.residuals import (
 from mongo_polars_reconciliation_spark.operators.summary import run_summary
 from mongo_polars_reconciliation_spark.operators.tolerance import apply_tolerance
 from mongo_polars_reconciliation_spark.operators.zero_effect import apply_zero_effect
+from mongo_polars_reconciliation_spark.session import materialize
 
 
 @dataclass(frozen=True)
@@ -101,15 +102,10 @@ class Reconciliation:
     _candidates: DataFrame | None = None
 
     def _persist(self, df: DataFrame) -> DataFrame:
-        if df.storageLevel.useMemory or df.storageLevel.useDisk:
-            return df  # already cached by the caller
-        if df._jdf.queryExecution().analyzed().getClass().getSimpleName() == (
-            "LogicalRDD"
-        ):
-            return df  # already a checkpoint leaf — don't copy it again
-        df = df.localCheckpoint(eager=False)
-        self._persisted.append(df)
-        return df
+        out = materialize(df)
+        if out is not df:
+            self._persisted.append(out)
+        return out
 
     def apply_zero_effect(self, rules: list[ZeroEffectRule]) -> None:
         clean, pairs = apply_zero_effect(

@@ -6,13 +6,16 @@ shuffle-partition coalescing), UTC session time zone (deterministic date
 formatting), Arrow enabled for the few Pandas-UDF extension paths,
 nanos-as-long so the ``events`` table's TIMESTAMP(NANOS) parquet is readable,
 and the package root on the Python workers' ``PYTHONPATH``.
+
+:func:`materialize` is the one "checkpoint unless already materialized"
+rule the operators share.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _WORKER_PATH = "spark.executorEnv.PYTHONPATH"
@@ -65,3 +68,17 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """``df`` as a materialized leaf: returned unchanged when it is cached
+    or already a checkpoint leaf (copying it through one more job buys
+    nothing), otherwise ``localCheckpoint(eager=False)``. Under AQE that
+    call runs the plan's shuffle and broadcast stages now, on the driver
+    thread; only the final stage waits for the first action."""
+    if df.storageLevel.useMemory or df.storageLevel.useDisk:
+        return df
+    plan = df._jdf.queryExecution().analyzed()  # noqa: SLF001
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        return df
+    return df.localCheckpoint(eager=False)

@@ -44,12 +44,10 @@ def scan_internal(
     path: str,
     fields: list[str],
     flt: SourceFilter | None = None,
-    string_default: bool = True,
     long_fields: tuple[str, ...] = (),
     double_fields: tuple[str, ...] = (),
-    fmt: str = "parquet",
 ) -> DataFrame:
-    """Internal-table scan: filter → project → cast (reference S1,
+    """Internal parquet-table scan: filter → project → cast (reference S1,
     src/data_extractor.py:26-50 + $toString schema expression_builder.py:29-43).
 
     Every projected field is cast to string unless listed in ``long_fields`` /
@@ -57,19 +55,17 @@ def scan_internal(
     (SURVEY.md §1.2). Filters are applied before the projection so they reach
     the scan as pushed predicates over the source column types.
     """
-    df = spark.read.format(fmt).load(path) if fmt != "csv" else read_csv_all_string(spark, path)
+    df = spark.read.parquet(path)
     if flt is not None:
         df = apply_source_filter(df, flt)
     cols = []
     for f in fields:
-        if string_default and f not in long_fields and f not in double_fields:
-            cols.append(F.col(f).cast("string").alias(f))
-        elif f in long_fields:
+        if f in long_fields:
             cols.append(F.col(f).cast("long").alias(f))
         elif f in double_fields:
             cols.append(F.col(f).cast("double").alias(f))
         else:
-            cols.append(F.col(f))
+            cols.append(F.col(f).cast("string").alias(f))
     return df.select(cols)
 
 

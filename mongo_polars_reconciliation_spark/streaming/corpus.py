@@ -24,6 +24,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mongo_polars_reconciliation_spark.streaming.events import drain
+
 
 def read_documents_stream(
     spark: SparkSession,
@@ -197,7 +199,7 @@ def incremental_neardup_ingest(
     text_col: str = "text",
     **neardup_kwargs,
 ) -> None:
-    """The FULL crawl loop as a stream (r9): each arriving micro-batch of
+    """The FULL crawl loop as a stream: each arriving micro-batch of
     documents runs the batch near-dup admission operator
     (extensions/dedup.py:ingest_novel_neardup) against the seed state
     PLUS everything admitted by earlier micro-batches, then appends its
@@ -211,7 +213,7 @@ def incremental_neardup_ingest(
     arrival order respects id order, the drained admitted set equals the
     ONE-batch admission of the concatenated stream — the greedy
     batch-split property pinned in tests/test_properties.py. Exactly-once
-    posture (r10, advice): the admitted/ digest ledger is written LAST —
+    posture: the admitted/ digest ledger is written LAST —
     a crash between the bands/docs writes and the ledger write means the
     replayed trigger re-derives the SAME admitted set (the state digests
     it anti-joins are unchanged; the operator filters the self-pairs and
@@ -228,10 +230,10 @@ def incremental_neardup_ingest(
     than merely the ledger.
 
     ``neardup_kwargs`` are forwarded BOTH to the admission operator and
-    to the ``band_state`` rows persisted for admitted docs (r10, advice:
-    the MinHash geometry — n/num_hashes/bands/hash_mode — must match
-    between the state being probed and the state being appended, or
-    later triggers silently miss near-dups of earlier admissions).
+    to the ``band_state`` rows persisted for admitted docs: the MinHash
+    geometry — n/num_hashes/bands — must match between the state being
+    probed and the state being appended, or later triggers silently miss
+    near-dups of earlier admissions.
 
     Like ``incremental_match``, the per-batch plan is the batch engine's
     (swept by the batch plan sweep); this captures the stream side."""
@@ -252,7 +254,7 @@ def incremental_neardup_ingest(
     band_kwargs = {
         k: v
         for k, v in neardup_kwargs.items()
-        if k in ("n", "num_hashes", "bands", "hash_mode")
+        if k in ("n", "num_hashes", "bands")
     }
 
     def process(batch: DataFrame, epoch_id: int) -> None:
@@ -295,19 +297,12 @@ def incremental_neardup_ingest(
             f2.result()
         admitted.write.mode("append").parquet(adm_dir)
 
-    query = (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        docs_stream.writeStream.foreachBatch(process).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        "incremental_neardup",
     )
-    query.awaitTermination()
-    from mongo_polars_reconciliation_spark.streaming.events import LAST_PLANS
-
-    try:
-        LAST_PLANS["incremental_neardup"] = query._jsq.explainInternal(True)  # noqa: SLF001
-    except Exception:
-        LAST_PLANS.pop("incremental_neardup", None)
 
 
 def incremental_semantic_ingest(
@@ -382,19 +377,12 @@ def incremental_semantic_ingest(
             adm_vecs, cents, nprobe, id_col, vec_col
         ).write.mode("append").parquet(assign_dir)
 
-    query = (
-        vecs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        vecs_stream.writeStream.foreachBatch(process).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        "incremental_semantic",
     )
-    query.awaitTermination()
-    from mongo_polars_reconciliation_spark.streaming.events import LAST_PLANS
-
-    try:
-        LAST_PLANS["incremental_semantic"] = query._jsq.explainInternal(True)  # noqa: SLF001
-    except Exception:
-        LAST_PLANS.pop("incremental_semantic", None)
 
 
 def incremental_payload_ingest(
@@ -458,19 +446,12 @@ def incremental_payload_ingest(
         ).write.mode("append").parquet(blocks_dir)
         admitted.write.mode("append").parquet(adm_dir)
 
-    query = (
-        mm_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        mm_stream.writeStream.foreachBatch(process).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        "incremental_payload",
     )
-    query.awaitTermination()
-    from mongo_polars_reconciliation_spark.streaming.events import LAST_PLANS
-
-    try:
-        LAST_PLANS["incremental_payload"] = query._jsq.explainInternal(True)  # noqa: SLF001
-    except Exception:
-        LAST_PLANS.pop("incremental_payload", None)
 
 
 def compact_ingest_state(

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -60,7 +61,6 @@ def read_events_stream(
     sf_dir: str,
     name: str = "events",
     with_sentinel: bool = False,
-    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """File-source stream over the events table, ``ts`` normalized to the
     engine's epoch-nanos BIGINT whatever the file's physical type (see
@@ -114,10 +114,9 @@ def read_events_stream(
             F.lit(0.0).alias("value"),
             F.lit("").alias("props"),
         ).write.mode("overwrite").parquet(f"{feed}/zzz_sentinel.parquet")
-    reader = spark.readStream.schema(stored)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return ensure_epoch_nanos(reader.parquet(f"{feed}/*.parquet"))
+    return ensure_epoch_nanos(
+        spark.readStream.schema(stored).parquet(f"{feed}/*.parquet")
+    )
 
 
 def read_events_stream_duplicated(
@@ -351,6 +350,18 @@ def user_running_seq(events: DataFrame) -> DataFrame:
 LAST_PLANS: dict[str, str] = {}
 
 
+def drain(writer: DataStreamWriter, name: str) -> None:
+    """Run the caller's configured stream writer over its bounded source
+    to completion (``availableNow``), then record the executed plan in
+    ``LAST_PLANS[name]``."""
+    query = writer.trigger(availableNow=True).start()
+    query.awaitTermination()
+    try:
+        LAST_PLANS[name] = query._jsq.explainInternal(True)  # noqa: SLF001
+    except Exception:
+        LAST_PLANS.pop(name, None)
+
+
 def run_to_table(
     sdf: DataFrame, name: str, output_mode: str = "update"
 ) -> DataFrame:
@@ -361,16 +372,8 @@ def run_to_table(
     for q in spark.streams.active:
         if q.name == name:
             q.stop()
-    query = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        sdf.writeStream.format("memory").queryName(name).outputMode(output_mode),
+        name,
     )
-    query.awaitTermination()
-    try:
-        LAST_PLANS[name] = query._jsq.explainInternal(True)  # noqa: SLF001
-    except Exception:
-        LAST_PLANS.pop(name, None)
     return spark.table(name)

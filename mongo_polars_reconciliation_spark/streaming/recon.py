@@ -19,13 +19,12 @@ expose B attributes are rows-only checked.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mongo_polars_reconciliation_spark.config import ReconConfig
 from mongo_polars_reconciliation_spark.operators.match import match_records
+from mongo_polars_reconciliation_spark.streaming.events import drain
 
 
 def incremental_match(
@@ -59,22 +58,14 @@ def incremental_match(
             .parquet(state_dir)
         )
 
-    query = (
-        b_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    # the recorded plan is the stream side (file scan → foreachBatch); the
+    # per-batch MATCH plan is the batch engine's (covered by the batch sweep)
+    drain(
+        b_stream.writeStream.foreachBatch(process).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        "incremental_match",
     )
-    query.awaitTermination()
-    # expose the drained plan for the streaming plan sweep; the per-batch
-    # MATCH plan is the batch engine's (covered by the batch sweep) — this
-    # captures the stream side (file scan → foreachBatch)
-    from mongo_polars_reconciliation_spark.streaming.events import LAST_PLANS
-
-    try:
-        LAST_PLANS["incremental_match"] = query._jsq.explainInternal(True)  # noqa: SLF001
-    except Exception:
-        LAST_PLANS.pop("incremental_match", None)
 
 
 def _has_state_files(spark: SparkSession, state_dir: str) -> bool:
@@ -96,9 +87,7 @@ def _has_state_files(spark: SparkSession, state_dir: str) -> bool:
 def matched_state(spark: SparkSession, state_dir: str) -> DataFrame:
     """Final matched-A set from the state directory (empty frame if the
     stream never matched anything)."""
-    if not os.path.isdir(state_dir) or not any(
-        f.endswith(".parquet") for f in os.listdir(state_dir)
-    ):
+    if not _has_state_files(spark, state_dir):
         from pyspark.sql.types import StringType, StructField, StructType
 
         return spark.createDataFrame([], StructType([StructField("_id", StringType())]))

@@ -277,7 +277,7 @@ def test_r6_operator_edge_cases(spark):
 
 def test_mix_epochs_rejects_bad_weights(spark):
     """A -0.5 typo must fail loudly, not silently emit zero copies; NaN the
-    same (loud-failure posture mirroring _shingle_ids' hash_mode check)."""
+    same (the loud-failure posture of the package's input guards)."""
     import pytest
 
     from mongo_polars_reconciliation_spark.extensions.text import mix_epochs

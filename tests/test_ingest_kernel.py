@@ -79,6 +79,42 @@ def test_greedy_admit_loud_on_exhausted_rounds(spark):
         greedy_admit(cand, edges, "doc_id", max_iter=1)
 
 
+def _count_local_checkpoints(monkeypatch):
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    calls = []
+    real = DataFrame.localCheckpoint
+
+    def counting(self, *args, **kwargs):
+        calls.append(1)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", counting)
+    return calls
+
+
+def test_greedy_admit_reads_checkpoint_leaves_as_is(spark, monkeypatch):
+    """The 1-2-3 chain settles in 3 rounds, one status checkpoint each.
+    Inputs that already are checkpoint leaves (what admit_sequential
+    passes) get no entry checkpoint; inputs with a plan above their leaf
+    get one each."""
+    cand = spark.createDataFrame(
+        [(1,), (2,), (3,)], "doc_id long"
+    ).localCheckpoint(eager=True)
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3)], "lo long, hi long"
+    ).localCheckpoint(eager=True)
+    calls = _count_local_checkpoints(monkeypatch)
+
+    assert _ids(greedy_admit(cand, edges, "doc_id")) == [1, 3]
+    assert len(calls) == 3
+    calls.clear()
+    raw_cand = cand.where(F.col("doc_id") > 0)
+    raw_edges = edges.where(F.col("lo") > 0)
+    assert _ids(greedy_admit(raw_cand, raw_edges, "doc_id")) == [1, 3]
+    assert len(calls) == 3 + 2
+
+
 def test_admit_sequential_unpaired_pass_and_union_shape(spark):
     """Unpaired survivors admit outright; paired ones go through the
     greedy rule; the result is their union with no duplicates."""

@@ -70,7 +70,7 @@ def test_uncapped_equals_generous_cap(spark):
 def test_minhash_capped_equals_uncapped_on_fixture(spark):
     """r13 (VERDICT r12 #5, registry consolidation): the exact
     configuration the retired ``dedup_minhash_lsh_capped`` driver query
-    ran — ``minhash_near_dups(build_documents_aug, hash_mode='poly',
+    ran — ``minhash_near_dups(build_documents_aug,
     max_bucket_size=1000)`` at sf0.001 — is bit-identical to exact
     mode, because no fixture bucket approaches the cap. This pin is the
     retired query's oracle check verbatim (the query shared the
@@ -85,10 +85,8 @@ def test_minhash_capped_equals_uncapped_on_fixture(spark):
     )
 
     docs = build_documents_aug(spark, "/root/testdata/sf0.001")
-    exact = minhash_near_dups(docs, hash_mode="poly")
-    capped = minhash_near_dups(
-        docs, hash_mode="poly", max_bucket_size=1000
-    )
+    exact = minhash_near_dups(docs)
+    capped = minhash_near_dups(docs, max_bucket_size=1000)
     assert sorted(map(tuple, exact.collect())) == sorted(
         map(tuple, capped.collect())
     )
@@ -118,7 +116,7 @@ def test_wide_signatures_equal_long(spark):
         ],
         "doc_id long, text string",
     )
-    sh_ids = _shingle_ids(shingles(docs), "poly")
+    sh_ids = _shingle_ids(shingles(docs))
     long_sigs = minhash_signatures(sh_ids, "doc_id", NH)
     wide_sigs = minhash_signatures_wide(sh_ids, "doc_id", NH)
     long_as_wide = sorted(

@@ -544,7 +544,7 @@ def test_cluster_safe_split_keeps_near_dups_together(spark):
         (4, "completely different words about completely other things yes"),
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    pairs = minhash_near_dups(df, hash_mode="poly")
+    pairs = minhash_near_dups(df)
     assert (1, 2) in {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     out = {
         r["doc_id"]: (r["cluster_id"], r["split"], r["bucket"])

@@ -175,6 +175,24 @@ def test_has_state_files_absent_and_empty(spark, tmp_path):
     assert not _has_state_files(spark, str(empty))
 
 
+def test_matched_state_reads_uri_state_dir(spark, tmp_path):
+    """matched_state probes the state dir through the Hadoop FileSystem,
+    like incremental_match: a ``file://`` URI holding matched ids must
+    return them, not the empty never-matched frame."""
+    from mongo_polars_reconciliation_spark.streaming.recon import (
+        _has_state_files,
+        matched_state,
+    )
+
+    uri = (tmp_path / "uri_state").as_uri()
+    spark.createDataFrame([("a1",), ("a2",)], "_id string").write.parquet(uri)
+    assert _has_state_files(spark, uri)
+    assert sorted(r["_id"] for r in matched_state(spark, uri).collect()) == [
+        "a1",
+        "a2",
+    ]
+
+
 def test_stream_dedup_corpus_state_carries_across_batches(spark):
     """A text whose copies arrive in DIFFERENT micro-batches must still
     aggregate to one state row with the global min keeper and total count —
@@ -284,8 +302,8 @@ def test_compact_ingest_state_closes_the_loop(spark):
 
 def test_neardup_stream_state_matches_nondefault_geometry(spark):
     """r10 (advice): the crawl loop must persist admitted docs' band
-    state with the SAME MinHash geometry (n/num_hashes/bands/hash_mode)
-    it admits with. With non-default bands, a near-dup of a batch-1
+    state with the SAME MinHash geometry (n/num_hashes/bands) it admits
+    with. With non-default bands, a near-dup of a batch-1
     ADMISSION arriving in batch 2 collides only if the persisted bband
     keys were built with the matching rows-per-band — before the fix,
     ``band_state`` ran with defaults and the probe silently missed."""

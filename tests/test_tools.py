@@ -72,3 +72,22 @@ def test_control_recovered_from_truncated_tail(tmp_path):
     p = tmp_path / "tail.json"
     p.write_text('...runcated {"control_min_sec": 0.75, "sf": 0.1}')
     assert bd.load_control(str(p)) == 0.75
+
+
+def test_no_module_level_ab_flags():
+    """One implementation per operator: no package module carries a
+    module-level boolean switch (``NAME = True``/``NAME = False``) that
+    selects between two code paths."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / (
+        "mongo_polars_reconciliation_spark"
+    )
+    flag = re.compile(r"^[A-Z_]+ = (True|False)$", re.MULTILINE)
+    hits = [
+        f"{path.relative_to(pkg)}: {m.group(0)}"
+        for path in sorted(pkg.rglob("*.py"))
+        for m in flag.finditer(path.read_text())
+    ]
+    assert not hits, hits

@@ -303,7 +303,7 @@ def probe_clusters_star(spark, docs):
     )
 
     docs = docs.localCheckpoint(eager=True)
-    pairs = minhash_near_dups(docs, hash_mode="poly").localCheckpoint(
+    pairs = minhash_near_dups(docs).localCheckpoint(
         eager=True
     )
     ids = docs.select("doc_id").localCheckpoint(eager=True)
@@ -338,7 +338,7 @@ def probe_simhash(spark, docs):
 
     docs = docs.localCheckpoint(eager=True)
     t0 = time.perf_counter()
-    simhash_near_dups(docs, hash_mode="poly").write.format("noop").mode(
+    simhash_near_dups(docs).write.format("noop").mode(
         "overwrite"
     ).save()
     return time.perf_counter() - t0
@@ -570,7 +570,7 @@ def probe_admit_depth(spark) -> None:
         "doc_id", "text"
     )
     edges = (
-        minhash_near_dups(docs, hash_mode="poly")
+        minhash_near_dups(docs)
         .select(F.col("id_a").alias("lo"), F.col("id_b").alias("hi"))
         .localCheckpoint(eager=True)
     )

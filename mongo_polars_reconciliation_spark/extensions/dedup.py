@@ -28,6 +28,7 @@ from mongo_polars_reconciliation_spark.extensions.ingest_kernel import (
     # similarity/multimodal ingest faces and the property tests import
     # it from here (moved verbatim in r13, value-identical)
 )
+from mongo_polars_reconciliation_spark.session import widen
 
 # Universal-hash constants: h_j(x) = (A_j * x + B_j) mod P. Deterministic
 # literals so the oracle SQL can reproduce them.
@@ -213,7 +214,7 @@ def ingest_novel_neardup(
 
     # batch band keys (wide signatures — the minhash_near_dups shape) over
     # the checkpointed shingle-ARRAY frame, which jaccard_verify reuses
-    sets_b = _widen_on_id(
+    sets_b = widen(
         shingle_sets(kept, id_col, text_col, n), id_col
     ).localCheckpoint(eager=False)
     sh_b = sets_b.select(F.col(id_col), F.explode("__shset").alias("shingle"))
@@ -321,19 +322,6 @@ def ingest_novel_neardup(
     return keep1.join(admitted, id_col).select(
         F.col(id_col), F.col("__dg").alias("text_hash")
     )
-
-
-def _widen_on_id(df: DataFrame, id_col: str) -> DataFrame:
-    """``df`` hash-repartitioned on the id when it has fewer partitions
-    than the cluster's parallelism, else unchanged. The per-row shingle
-    and hash work downstream is the CPU cost, and a small corpus read from
-    few splits would otherwise run it on as few cores (measured: 3 tasks
-    on 32 cores). It never narrows, so an input that already has more
-    partitions (the 100 TB case) gets no shuffle at all."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target, F.col(id_col))
-    return df
 
 
 def shingles(
@@ -551,36 +539,30 @@ def _pairs_from_band_keys(
 ) -> DataFrame:
     """Bucket self-join over (band, bkey) rows → distinct candidate pairs.
 
-    Always prunes singleton buckets: they can't form pairs, and dropping
-    them BEFORE the self-join shrinks both join inputs and the distinct —
-    measured ~25% faster than joining them through, with zero semantic
-    change (the r5 bench showed capped mode beating "exact" mode purely
-    because of this filter).
-
-    r16 (optimization round, guide §2.4): the bucket-size filter is a
-    WINDOW count over (band, bkey), not a groupBy + join-back — one
+    Uncapped, singleton buckets are pruned before the self-join: they
+    can't form pairs, and dropping them shrinks both join inputs and the
+    distinct (measured ~25% faster, no semantic change). The bucket size
+    is a WINDOW count over (band, bkey), not a groupBy + join-back: one
     shuffle of the band-key frame establishes the partitioning, the
-    filter runs in place, and the self-join's two sides share that same
-    hash partitioning (one physical exchange via reuse). The old
-    agg-then-join form paid the aggregate's shuffle AND a join back
-    whose build side is O(distinct buckets) — far beyond broadcast
-    range at corpus scale, where it degraded to a second full
-    sort-merge pass. Identical pairs (window count == group count;
-    measured ×0.8 at sf0.1 on top of the scale fix).
+    filter runs in place, and the self-join's two sides share that hash
+    partitioning (one physical exchange via reuse). The agg-then-join
+    form pays the aggregate's shuffle AND a join back whose build side is
+    O(distinct buckets), beyond broadcast range at corpus scale (the
+    window form measured ×0.8 at sf0.1).
 
-    r17 (VERDICT r16 #1, guide §2.5): the window form stays ONLY for the
-    uncapped path. With a cap set it was a skew hazard: ``count(1) over
-    (partition by band, bkey)`` forces every row of a bucket into ONE
+    Capped, the window form would be a skew hazard: ``count(1) over
+    (partition by band, bkey)`` puts every row of a bucket into ONE
     window partition BEFORE the ``bsz <= cap`` filter can drop it, and
     AQE can split skewed join partitions but never a window partition —
-    one degenerate boilerplate band bucket spills/OOMs that task at
-    100 TB, which is precisely the population the cap exists to kill.
-    The capped path now counts per-key populations with a map-side
-    partial aggregate (the monster bucket folds to one row per map task
-    and never co-locates) and removes the over-cap keys with a BROADCAST
-    anti-join — by pigeonhole at most n/max_bucket_size keys exceed the
-    cap, so the broadcast side is bounded by row count / cap, never by
-    distinct-bucket count. Singleton buckets then die in the self-join
+    one degenerate boilerplate bucket spills or OOMs that task at 100 TB,
+    the very population the cap exists to kill. So the capped path counts
+    per-key populations with a map-side partial aggregate (the monster
+    bucket folds to one row per map task and never co-locates) and
+    removes the over-cap keys with an anti-join. By pigeonhole at most
+    n/max_bucket_size keys exceed the cap; the join strategy is left to
+    AQE and ``spark.sql.autoBroadcastJoinThreshold``, so the key set
+    broadcasts while it is small and takes a sort-merge anti-join once it
+    outgrows the threshold. Singleton buckets then die in the self-join
     itself (a 1-row bucket yields no ``id_a < id_b`` pair), so the
     ``bsz >= 2`` prefilter — a performance-only row cut — is dropped on
     this path rather than re-attached through an O(collision buckets)
@@ -594,9 +576,7 @@ def _pairs_from_band_keys(
             .where(F.col("bsz") > max_bucket_size)
             .select("band", "bkey")
         )
-        pruned = band_key.join(
-            F.broadcast(over), ["band", "bkey"], "left_anti"
-        )
+        pruned = band_key.join(over, ["band", "bkey"], "left_anti")
         l = pruned.select(F.col(id_col).alias("id_a"), "band", "bkey")
         r = pruned.select(F.col(id_col).alias("id_b"), "band", "bkey")
         return (
@@ -700,7 +680,7 @@ def minhash_near_dups(
     plans/pipeline.py module doc).
 
     The shingle-set frame is widened to the cluster's parallelism before
-    the checkpoint (:func:`_widen_on_id`): the downstream per-character
+    the checkpoint (:func:`session.widen`): the downstream per-character
     polynomial hash is the CPU-heavy step.
 
     Measured-and-rejected: a fully ROW-LOCAL band-key path (per-row
@@ -715,7 +695,7 @@ def minhash_near_dups(
     # the checkpointed frame is the per-doc shingle ARRAY, not the
     # exploded rows: the signature pipeline explodes it map-only, and
     # jaccard_verify intersects the arrays directly
-    sets = _widen_on_id(
+    sets = widen(
         shingle_sets(df, id_col, text_col, n), id_col
     ).localCheckpoint(eager=False)
     sh = sets.select(F.col(id_col), F.explode("__shset").alias("shingle"))
@@ -796,16 +776,9 @@ def simhash_signatures(
         f"ELSE cast(0 as bigint) END"
         for k in range(SIMHASH_BITS)
     )
-    base = df.select(F.col(id_col), F.col(text_col))
-    # widen ONLY when the corpus arrives in fewer splits than the cluster
-    # has cores: the 64 per-row vote folds are the CPU cost, and a
-    # few-split corpus would run them on as few tasks (measured: 3 of 32).
-    # Shuffling the raw (id, text) rows is cheap; at 100 TB the scan
-    # already has more partitions than cores and this is a no-op, keeping
-    # the stage map-only on the scale path.
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if base.rdd.getNumPartitions() < target:
-        base = base.repartition(target)
+    # the 64 per-row vote folds are the CPU cost; shuffling the raw
+    # (id, text) rows to widen a few-split corpus is cheap
+    base = widen(df.select(F.col(id_col), F.col(text_col)))
     return base.select(F.col(id_col), sids).select(
         F.col(id_col), F.expr(sig).cast("long").alias("simhash")
     )
@@ -1076,7 +1049,7 @@ def ngram_jaccard_pairs(
 
     The shingle frame is checkpointed once (read three times: df-counts,
     both sides of the inverted-index join) and widened to the cluster's
-    parallelism (:func:`_widen_on_id`). The shingle identity that
+    parallelism (:func:`session.widen`). The shingle identity that
     shuffles (df groupBy, cap join, inverted-index self-join) is the
     128-bit two-lane xxhash64 composite, not the raw n-token string — the
     ``duplicate_spans`` shuffle-byte treatment; a collision could only
@@ -1084,7 +1057,7 @@ def ngram_jaccard_pairs(
     A/B at sf0.1 measured neutral wall-clock (3.29 vs 3.31 s min —
     stage latency dominates at test scale); the change is for shuffle
     BYTES, which shrink several-fold on long shingles at 100 TB."""
-    sh = _widen_on_id(
+    sh = widen(
         shingles(df, id_col, text_col, n).select(
             F.col(id_col),
             F.xxhash64("shingle").alias("h1"),

@@ -2128,6 +2128,7 @@ def bloom_decontaminate(
         POLY_P31B,
         poly_hash_mixed_col,
     )
+    from mongo_polars_reconciliation_spark.session import widen
 
     def hashed_grams(df: DataFrame, idc: str) -> DataFrame:
         # widen-if-narrow: the gram hash is two interpreted char folds per
@@ -2135,10 +2136,7 @@ def bloom_decontaminate(
         # it would run on as many cores as there are parquet splits
         # (measured: ONE, 9.2 s total) unless widened first. A no-op
         # at real scale, mandatory at test scale.
-        sh = shingles(df, idc, text_col, n)
-        target = df.sparkSession.sparkContext.defaultParallelism
-        if sh.rdd.getNumPartitions() < target:
-            sh = sh.repartition(target, F.col(idc))
+        sh = widen(shingles(df, idc, text_col, n), idc)
         return sh.select(
             F.col(idc),
             poly_hash_mixed_col("shingle", POLY_P31).alias("h1"),

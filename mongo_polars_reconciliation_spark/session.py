@@ -8,7 +8,8 @@ nanos-as-long so the ``events`` table's TIMESTAMP(NANOS) parquet is readable,
 and the package root on the Python workers' ``PYTHONPATH``.
 
 :func:`materialize` is the one "checkpoint unless already materialized"
-rule the operators share.
+rule the operators share, and :func:`widen` the one "repartition when
+narrower than the cluster" rule.
 """
 
 from __future__ import annotations
@@ -82,3 +83,17 @@ def materialize(df: DataFrame) -> DataFrame:
     if plan.getClass().getSimpleName() == "LogicalRDD":
         return df
     return df.localCheckpoint(eager=False)
+
+
+def widen(df: DataFrame, *cols) -> DataFrame:
+    """``df`` repartitioned to ``defaultParallelism`` when it has fewer
+    partitions, else unchanged: hash-partitioned on ``cols`` when given,
+    round-robin otherwise. The per-row map-side work downstream is the
+    CPU cost, and a small input read from few splits would otherwise run
+    it on as few cores (measured: 3 tasks on 32 cores). It never narrows,
+    so an input that already has more partitions (the 100 TB case) gets
+    no shuffle."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target, *cols)
+    return df

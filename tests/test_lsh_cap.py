@@ -362,3 +362,27 @@ def test_capped_plan_is_skew_safe(spark):
         uncapped._jdf.queryExecution(), "formatted"
     )
     assert "Window" in uplan, uplan
+
+
+def test_capped_prune_shuffles_past_broadcast_threshold(spark):
+    """The over-cap key set grows as rows / cap, so the capped prune must
+    not force a broadcast: with ``autoBroadcastJoinThreshold`` disabled
+    (the key set past any broadcast budget) the prune plans as a
+    sort-merge LeftAnti, and it still keeps exactly the healthy pairs."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        capped = lsh_candidate_pairs(
+            _sigs(spark, 200), rows_per_band=RPB, max_bucket_size=50
+        )
+        plan = capped._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+            capped._jdf.queryExecution(), "formatted"
+        )
+        got = [tuple(r) for r in capped.collect()]
+    finally:
+        spark.conf.set(key, saved)
+    lines = plan.splitlines()
+    assert any("SortMergeJoin" in ln and "LeftAnti" in ln for ln in lines), plan
+    assert not any("BroadcastHashJoin" in ln and "LeftAnti" in ln for ln in lines), plan
+    assert got == [(0, 1)]

@@ -4615,3 +4615,62 @@ def test_bpe_merge_fit_empty_merge_table_keeps_schema(spark):
         ("pair_count", "bigint"),
     ]
     assert out.collect() == []
+
+
+_sim_base = st.lists(st.integers(-3, 3), min_size=4, max_size=4).filter(any)
+
+
+@settings(max_examples=5, deadline=None)
+@given(
+    bases=st.lists(_sim_base, min_size=2, max_size=4),
+    rows=st.lists(
+        st.tuples(
+            st.integers(0, 1),  # label
+            st.integers(0, 3),  # base vector (mod len(bases))
+            st.sampled_from([0.0, 1e-6, 1e-3, 0.5]),  # jitter on dim 0
+        ),
+        min_size=3,
+        max_size=10,
+    ),
+    cut=st.floats(0.0, 1.0),
+)
+def test_similarity_family_shares_one_pair_score(spark, bases, rows, cut):
+    """The blocked similarity operators agree because they score a pair
+    the same way (one 6-dp cosine, neighbor-ascending ties) — pinned on
+    labelled corpora with exact duplicates, near-duplicates and a
+    threshold equal to one realized pair score:
+
+    - ``semantic_dedup`` survivors are the ids minus the ``id_b`` set of
+      ``embedding_near_dups`` at the same threshold and block column;
+    - ``knn_join`` over one constant label equals ``knn_join_exact`` row
+      for row."""
+    from mongo_polars_reconciliation_spark.extensions.similarity import (
+        embedding_near_dups,
+        knn_join,
+        knn_join_exact,
+        semantic_dedup,
+    )
+
+    data = [
+        (i, lab, [float(x) + (jit if j == 0 else 0.0)
+                  for j, x in enumerate(bases[b % len(bases)])])
+        for i, (lab, b, jit) in enumerate(rows)
+    ]
+    emb = spark.createDataFrame(
+        data, "vec_id long, label int, embedding array<double>"
+    )
+    n = len(data)
+    exact = sorted(map(tuple, knn_join_exact(emb, k=n, n_buckets=3).collect()))
+    scores = sorted({r[3] for r in exact})
+    threshold = scores[int(cut * (len(scores) - 1))]
+
+    survivors = {r["vec_id"] for r in semantic_dedup(emb, threshold).collect()}
+    dominated = {
+        r["id_b"] for r in embedding_near_dups(emb, threshold).collect()
+    }
+    assert survivors == set(range(n)) - dominated
+
+    one_block = emb.withColumn("label", F.lit(0))
+    assert sorted(map(tuple, knn_join(one_block, k=n).collect())) == exact
+    top1 = sorted(map(tuple, knn_join_exact(emb, k=1, n_buckets=3).collect()))
+    assert sorted(map(tuple, knn_join(one_block, k=1).collect())) == top1

@@ -5,9 +5,9 @@ Pattern for image/audio/video at 100 TB (SURVEY.md §2.9): media lives in a
 resize / frame-sample run as Arrow-batched Pandas functions over
 ``mapInPandas`` — the *only* sanctioned Python-in-the-loop path, because
 Arrow moves the bytes zero-copy and the work is per-row embarrassingly
-parallel. The decode bodies here are deterministic stubs (this container
-has no image/audio libs — see ``decode_image``); the Spark-side plumbing
-(schema, batch iteration, partitioning) is real and tested.
+parallel. The feature bodies here are deterministic stand-ins for a real
+decoder; the Spark-side plumbing (schema, batch iteration, partitioning)
+is real and tested.
 """
 
 from __future__ import annotations
@@ -75,20 +75,6 @@ def extract_features(mm: DataFrame) -> DataFrame:
             )
 
     return mm.mapInPandas(_extract, FEATURE_SCHEMA)
-
-
-def decode_image(payload_bytes: bytes) -> "object":
-    """Real image decode — requires PIL/turbojpeg, absent in this container.
-
-    STUB (SURVEY.md §2.9): raises so callers fail loudly rather than fake
-    imagery; ``extract_features`` is the deterministic-fake path used by
-    tests and the oracle. Probed again 2026-08-16 (round 16): PIL, cv2,
-    torchvision all absent and the container has no network (DNS fails) to
-    install any — the stub stands."""
-    raise NotImplementedError(
-        "image decode requires PIL/libjpeg — not available in this environment; "
-        "use extract_features() for the deterministic stub pipeline"
-    )
 
 
 def payload_digest_dedup(

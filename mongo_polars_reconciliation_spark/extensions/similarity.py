@@ -6,15 +6,17 @@ bit-for-bit:
 - **Left-fold IEEE order.** Every dot product and squared distance is the
   accumulator sequence ``((0.0 + x0) + x1) + ...``, sequential in the
   dimension (DuckDB's ``list_reduce`` mirrors it exactly). Expressions use
-  ``aggregate`` over ``zip_with``; the Arrow kernels (``_pair_dot``, the
-  assignment kernel, the IVF-PQ LUT kernel) vectorize ACROSS rows while
-  keeping that per-row op sequence — never ``np.sum``/BLAS, which reorder
-  additions.
+  ``aggregate`` over ``zip_with``; the driver-side distances use
+  ``_lut_sqdists``, the only Python copy of the fold; the Arrow kernels
+  (``_pair_dot``, the assignment kernel, the IVF-PQ LUT kernel) vectorize
+  ACROSS rows while keeping that per-row op sequence — never
+  ``np.sum``/BLAS, which reorder additions.
 - **Stable (distance, cid) tie-break.** Nearest-centroid assignment and
   multi-probe ranking order centroids by squared distance, ties to the
   lower cid.
-- **Order-free averages.** Centroid means route per-dimension sums through
-  DECIMAL, so shuffle order cannot change a centroid bit.
+- **Order-free averages.** Centroid means are ``_decimal_mean``: the
+  per-dimension sums route through DECIMAL, so shuffle order cannot
+  change a centroid bit.
 
 One pair-scoring path serves every batch operator that compares vectors
 with each other (``embedding_near_dups``, ``knn_join*``,
@@ -30,24 +32,51 @@ pairs them, ``_cos_r`` scores them and ``_dominated_ids`` /
 - k-NN ranks order by (cos_r DESC, neighbor ASC), so ties go to the lower
   neighbor id and graphs built by different operators compare row for row.
 
+One search path serves every single-query operator (``topk_*``,
+``pq_topk_adc``, ``ivfpq_topk``): the probe strategy only chooses the
+rows, and ``_exact_topk`` ranks them. Its invariants:
+
+- a non-NULL embedding whose length differs from the query's raises
+  instead of scoring NULL (operators whose artifact fixes the dimension
+  also check it on the driver, before any job);
+- the cosine against the literal query is rounded to 6 decimals once, and
+  rows rank by (cos_r DESC, id ASC): a TakeOrderedAndProject cut, then a
+  ``row_number`` over the k survivors only;
+- the PQ paths score candidates with ``_adc_r`` (``round(Σ_s
+  lut_s[code[s]], 6)``, summed in subspace order) and keep the best
+  ``rerank`` by (adc_r, id) in ``_adc_candidates`` before the exact tail.
+
+One Lloyd loop, ``_lloyd``, fits both ``kmeans_fit`` (one subspace) and
+``pq_fit`` (``m`` subspaces in one pass per round): init = the vectors of
+the smallest ids, nearest centroid by the assignment kernel, empty
+clusters keep their previous centroid.
+
 Driver-known tables (centroids, query vectors, per-cell LUTs) enter plans
 as literal arrays (see ``functions/localrel.py``), not joined frames; the
 one size-gated exception is ``IVFPQ_LUT_LITERAL_MAX_DOUBLES``.
 
 Scale paths:
 - brute-force top-k: one broadcast of the query vector, one pass, one
-  top-k window — the 100 TB plan is a full scan, which is the correct
+  top-k cut — the 100 TB plan is a full scan, which is the correct
   baseline for exact search;
-- IVF: centroids per partition label (k-means assignments at scale; the
-  ``label`` column here), probe the closest ``nprobe`` centroids, search
-  only those partitions — the scan shrinks by ~nprobe/nlist.
+- IVF: probe the ``nprobe`` centroids closest to the query and score only
+  the rows assigned to them — ``topk_ivf`` uses per-label mean centroids
+  of an upstream ``label`` column, ``topk_ivf_fitted`` and the IVF-PQ
+  paths fitted k-means centroids; the scan shrinks by ~nprobe/nlist.
 """
 
 from __future__ import annotations
 
+import functools
+import operator
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from mongo_polars_reconciliation_spark.functions.localrel import (
+    dbl_array_col,
+    dbl_nested_array_col,
+)
 from mongo_polars_reconciliation_spark.functions.windows import single_partition_key
 from mongo_polars_reconciliation_spark.session import widen
 
@@ -100,6 +129,20 @@ def _pair_dot_kernel(a, b):
     return acc
 
 
+def _sqdist_kernel(a, c):
+    """(rows, centroids) squared distances between the rows of two
+    (·, dim) matrices in the left-fold order ``((0.0 + t0²) + t1²) + ...``:
+    sequential in the dimension, vectorized across rows and centroids, so
+    every entry equals :func:`_lut_sqdists` bit-for-bit."""
+    import numpy as np
+
+    D = np.zeros((a.shape[0], c.shape[0]), dtype=np.float64)
+    for j in range(a.shape[1]):
+        t = a[:, j][:, None] - c[:, j][None, :]
+        D = D + t * t
+    return D
+
+
 def _pair_dot(va: Column, vb: Column) -> Column:
     """Dot product of two array<double> pair columns (left-fold order, see
     :func:`_pair_dot_kernel`)."""
@@ -118,6 +161,69 @@ def _as_double(col: str) -> Column:
     return F.transform(F.col(col), lambda x: x.cast("double"))
 
 
+def _check_query_dim(op: str, query_vec: list[float], dim: int) -> None:
+    """Driver-side dimension check, for operators whose artifact (fitted
+    centroids, PQ codebooks) fixes the embedding dimension."""
+    if len(query_vec) != dim:
+        raise ValueError(
+            f"{op}: query_vec has {len(query_vec)} components but the "
+            f"embedding dimension is {dim} — dim mismatch"
+        )
+
+
+def _dim_guard(vec_col: str, dim: int, value: Column) -> Column:
+    """``value``, or an error on a row whose non-NULL ``vec_col`` does not
+    have ``dim`` components: ``zip_with`` would pad the shorter side with
+    NULLs and fold the row's score to NULL, a silent wrong ranking. A NULL
+    vector keeps its NULL score."""
+    v = F.col(vec_col)
+    return F.when(
+        v.isNotNull() & (F.size(v) != F.lit(dim)),
+        F.raise_error(
+            F.lit(
+                f"query_vec has {dim} components but an embedding row has a "
+                "different length — dim mismatch"
+            )
+        ),
+    ).otherwise(value)
+
+
+def _exact_topk(
+    rows: DataFrame,
+    query_vec: list[float],
+    k: int,
+    id_col: str,
+    vec_col: str,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """The exact tail of every single-query search: (``id_col``, rank,
+    cos_r, *carry) for the ``k`` best ``rows`` by the 6-dp-rounded cosine
+    to the literal query, ties to the lower id (the dimension guard of
+    :func:`_dim_guard` on every row).
+
+    orderBy+limit plans as TakeOrderedAndProject: each partition computes
+    a local top-k and the driver merges k*parts rows — no global window
+    (which would funnel every scored row through one task). The rank
+    window then runs over just the k limited rows; its non-foldable
+    constant key keeps the WindowExec no-partition warning out of logs."""
+    q = dbl_array_col([float(v) for v in query_vec])
+    score = F.round(cosine(_as_double(vec_col), q), 6)
+    order = (F.col("cos_r").desc(), F.col(id_col).asc())
+    topk = (
+        rows.select(
+            F.col(id_col),
+            _dim_guard(vec_col, len(query_vec), score).alias("cos_r"),
+            *carry,
+        )
+        .orderBy(*order)
+        .limit(k)
+    )
+    w = Window.partitionBy(single_partition_key()).orderBy(*order)
+    return topk.withColumn("rank", F.row_number().over(w).cast("long")).select(
+        id_col, "rank", "cos_r", *carry
+    )
+
+
 def topk_bruteforce(
     emb: DataFrame,
     query_vec: list[float],
@@ -126,26 +232,17 @@ def topk_bruteforce(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k by cosine: broadcast literal query vector, score every
-    row, one top-k window. Ranking uses the 6-dp-rounded score with id
-    tie-break so rank order is reproducible."""
-    q = F.array(*[F.lit(float(v)) for v in query_vec])
-    scored = emb.select(
-        F.col(id_col),
-        F.round(cosine(_as_double(vec_col), q), 6).alias("cos_r"),
-    )
-    # orderBy+limit plans as TakeOrderedAndProject: each partition computes a
-    # local top-k and the driver merges k*parts rows — no global window (which
-    # would funnel every scored row through one task). The rank window then
-    # runs over just k rows.
-    topk = scored.orderBy(F.col("cos_r").desc(), F.col(id_col).asc()).limit(k)
-    # the window only ever sees the k limited rows; non-foldable constant
-    # key keeps the WindowExec no-partition warning out of bench logs
-    w = Window.partitionBy(single_partition_key()).orderBy(
-        F.col("cos_r").desc(), F.col(id_col).asc()
-    )
-    return (
-        topk.withColumn("rank", F.row_number().over(w).cast("long"))
-        .select(id_col, "rank", "cos_r")
+    row, one top-k cut (:func:`_exact_topk`). Ranking uses the
+    6-dp-rounded score with id tie-break so rank order is reproducible;
+    an embedding of another length than ``query_vec`` raises."""
+    return _exact_topk(emb, query_vec, k, id_col, vec_col)
+
+
+def _decimal_mean(col: str) -> Column:
+    """Mean of a double column with the sum routed through DECIMAL, so the
+    result does not depend on aggregation (shuffle) order."""
+    return F.sum(F.col(col).cast("decimal(28,12)")).cast("double") / F.count(
+        F.lit(1)
     )
 
 
@@ -161,10 +258,7 @@ def label_centroids(
         F.col(label_col), F.posexplode(_as_double(vec_col)).alias("pos", "val")
     )
     return exploded.groupBy(label_col, "pos").agg(
-        (
-            F.sum(F.col("val").cast("decimal(28,12)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("cval")
+        _decimal_mean("val").alias("cval")
     )
 
 
@@ -179,11 +273,10 @@ def _nearest_cids_udf(cents: list[list[float]], nprobe: int):
     """Build a pandas_udf mapping array<double> → the ``nprobe`` nearest
     centroid ids in (squared distance, cid) ascending order.
 
-    Per-centroid distance is the left-fold accumulator sequence
-    ``((0.0 + t0²) + t1²) + ...`` (vectorized across the batch and the
-    centroids, sequential in the dimension), and a STABLE argsort on the
-    distance breaks ties by column position, i.e. ascending cid. The
-    DuckDB oracles replay the same arithmetic bit-for-bit."""
+    Per-centroid distance is :func:`_sqdist_kernel`'s left fold, and a
+    STABLE argsort on the distance breaks ties by column position, i.e.
+    ascending cid. The DuckDB oracles replay the same arithmetic
+    bit-for-bit."""
     C = [[float(x) for x in c] for c in cents]
     # captured at build time (driver) so tests that shrink the chunk see
     # it inside worker processes — a module global read inside the kernel
@@ -193,23 +286,16 @@ def _nearest_cids_udf(cents: list[list[float]], nprobe: int):
     def kernel(a):
         import numpy as np
 
-        m, dim = a.shape
         carr = np.asarray(C, dtype=np.float64)
-        rows = np.arange(m)[:, None]
+        rows = np.arange(a.shape[0])[:, None]
         best_d = best_c = None
-        # ``D = D + t*t`` on an (m, chunk) matrix keeps the per-element
-        # left-fold order (same j order, same 0.0 seed). Chunking bounds
-        # transient memory at m×chunk doubles; the merge keeps the
-        # (distance, cid) tie-break because chunks arrive in ascending-cid
-        # order and each candidate list is already (d, cid)-sorted, so a
-        # STABLE argsort over the concatenation resolves ties to the lower
-        # cid.
+        # Chunking bounds transient memory at rows×chunk doubles; the merge
+        # keeps the (distance, cid) tie-break because chunks arrive in
+        # ascending-cid order and each candidate list is already
+        # (d, cid)-sorted, so a STABLE argsort over the concatenation
+        # resolves ties to the lower cid.
         for lo in range(0, len(C), chunk):
-            cc = carr[lo : lo + chunk]
-            D = np.zeros((m, cc.shape[0]), dtype=np.float64)
-            for j in range(dim):
-                t = a[:, j][:, None] - cc[:, j][None, :]
-                D = D + t * t
+            D = _sqdist_kernel(a, carr[lo : lo + chunk])
             idx = np.argsort(D, axis=1, kind="stable")[:, :nprobe]
             cand_d, cand_c = D[rows, idx], idx + lo
             if best_d is None:
@@ -239,58 +325,97 @@ def kmeans_fit(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> list[list[float]]:
-    """Deterministic DataFrame-native Lloyd fit; returns k×dim centroids.
-
-    Init = the vectors of the ``k`` smallest ids (TakeOrderedAndProject —
-    k rows to the driver, no global sort); each of the fixed ``n_iter``
-    rounds is one full-scan projection (nearest-centroid via the
-    assignment kernel, no join) plus one (cid, pos) hash-aggregate whose
-    output is k×dim rows. Per-dimension means go through DECIMAL so shuffle order
-    can't change a centroid bit. Empty clusters keep their previous
-    centroid. The centroids never leave broadcast scale, so the loop's
-    driver round-trips carry k×dim doubles, not data.
+    """Deterministic DataFrame-native Lloyd fit; returns k×dim centroids
+    (fewer when the input has fewer than ``k`` rows): :func:`_lloyd` over
+    one subspace.
 
     A production alternative is ``pyspark.ml.clustering.KMeans`` with a
     fixed seed — this fold-exact form exists so the DuckDB oracle can
-    replay the fit bit-for-bit (kmeans++ sampling cannot be mirrored).
+    replay the fit bit-for-bit (kmeans++ sampling cannot be mirrored)."""
+    return _lloyd(emb, k, n_iter, 1, id_col, vec_col, "kmeans_fit")[0]
+
+
+def _lloyd(
+    emb: DataFrame,
+    k: int,
+    n_iter: int,
+    m: int,
+    id_col: str,
+    vec_col: str,
+    op: str,
+) -> list[list[list[float]]]:
+    """The Lloyd loop of :func:`kmeans_fit` (``m`` = 1) and :func:`pq_fit`:
+    split each vector into ``m`` contiguous subspaces of dim/m dimensions
+    and fit ``k`` centroids per subspace — ``books[m][k][dim/m]``. Errors
+    name the caller ``op``.
+
+    Init = the vectors of the ``k`` smallest ids (TakeOrderedAndProject —
+    k rows to the driver, no global sort; with fewer rows than ``k``, every
+    subspace fits as many clusters as there are rows). Each of the fixed
+    ``n_iter`` rounds is ONE job: one full-scan projection assigning all
+    ``m`` subspaces (m assignment-kernel nodes, the :func:`pq_encode`
+    shape, no join) and one (subspace, cid, pos) hash-aggregate of
+    ``_decimal_mean``s whose output is m×k×dim/m rows. Empty clusters keep
+    their previous centroid. The subspaces never interact: each (s, cid,
+    pos) group's decimal sum and count are exactly those of a separate
+    fit over the sliced projection (pinned fused ≡ per-subspace in
+    tests/test_properties.py). The centroids never leave broadcast scale,
+    so the loop's driver round-trips carry k×dim doubles, not data.
 
     The (id, double-vector) projection is lineage-checkpointed once: the
-    loop's 2·n_iter+1 actions would otherwise each re-read the parquet
-    scan and re-run the cast projection, and the checkpoint also keeps
-    the per-iteration plans leaf-shallow (the AQE re-analysis cost
-    measured on the cascade)."""
+    loop's n_iter+1 actions would otherwise each re-read the scan and
+    re-run the cast projection, and the checkpoint also keeps the
+    per-round plans leaf-shallow."""
     vecs = emb.select(
         F.col(id_col).alias("_kid"), _as_double(vec_col).alias("v")
     ).localCheckpoint(eager=False)
     init = vecs.orderBy("_kid").limit(k).collect()
     if not init:
-        raise ValueError("kmeans_fit: input has no rows")
-    # fewer rows than k: fit the clusters the data can support — the
-    # update loop below indexes cents[c], so k must equal len(cents)
-    cents = [list(r["v"]) for r in init]
-    k = len(cents)
-    dim = len(cents[0])
+        raise ValueError(f"{op}: input has no rows")
+    dim = len(init[0]["v"])
+    if dim % m != 0:
+        raise ValueError(f"{op}: dim {dim} not divisible by m={m}")
+    dsub = dim // m
+    books = [
+        [list(r["v"])[s * dsub : (s + 1) * dsub] for r in init]
+        for s in range(m)
+    ]
+    k = len(init)
     for _ in range(n_iter):
-        assigned = vecs.select(cluster_assign(F.col("v"), cents).alias("cid"), "v")
-        rows = (
-            assigned.select("cid", F.posexplode("v").alias("pos", "val"))
-            .groupBy("cid", "pos")
-            .agg(
-                (
-                    F.sum(F.col("val").cast("decimal(28,12)")).cast("double")
-                    / F.count(F.lit(1))
-                ).alias("cval")
+        structs = [
+            F.struct(
+                F.lit(s).alias("s"),
+                cluster_assign(
+                    F.slice(F.col("v"), s * dsub + 1, dsub), books[s]
+                ).alias("cid"),
+                F.slice(F.col("v"), s * dsub + 1, dsub).alias("sv"),
             )
+            for s in range(m)
+        ]
+        rows = (
+            vecs.select(F.explode(F.array(*structs)).alias("e"))
+            .select(
+                F.col("e.s").alias("s"),
+                F.col("e.cid").alias("cid"),
+                F.posexplode("e.sv").alias("pos", "val"),
+            )
+            .groupBy("s", "cid", "pos")
+            .agg(_decimal_mean("val").alias("cval"))
             .collect()
         )
-        by_cid: dict[int, dict[int, float]] = {}
+        by_sc: dict[tuple[int, int], dict[int, float]] = {}
         for r in rows:
-            by_cid.setdefault(r["cid"], {})[r["pos"]] = r["cval"]
-        cents = [
-            [by_cid[c][p] for p in range(dim)] if c in by_cid else cents[c]
-            for c in range(k)
+            by_sc.setdefault((r["s"], r["cid"]), {})[r["pos"]] = r["cval"]
+        books = [
+            [
+                [by_sc[(s, c)][p] for p in range(dsub)]
+                if (s, c) in by_sc
+                else books[s][c]
+                for c in range(k)
+            ]
+            for s in range(m)
         ]
-    return cents
+    return books
 
 
 # Size gate for the per-cell LUT CASE in ivfpq_topk, which folds
@@ -356,85 +481,15 @@ def pq_fit(
     vec_col: str = "embedding",
 ) -> list[list[list[float]]]:
     """Product-quantization codebooks: split each vector into ``m``
-    contiguous subspaces of dim/m dimensions and run the deterministic
-    Lloyd fit of :func:`kmeans_fit` independently per subspace — returns
-    ``books[m][ksub][dim/m]``. PQ is the canonical 100 TB ANN memory
-    trade (FAISS's IVF-PQ layout): a 64-dim float vector becomes m small
-    codes, so the candidate scan reads m bytes per row instead of the
-    vector, and exact vectors are touched only for the re-rank survivors.
-
-    The ``m`` independent subspace fits are FUSED into one loop — one (id, double-vector)
-    checkpoint instead of m, ONE init collect (the k smallest ids are the
-    same rows for every subspace; slicing the collected vectors equals
-    collecting the sliced projections), and per Lloyd round ONE job that
-    assigns all m subspaces (m assignment-kernel nodes in a single
-    projection, the :func:`pq_encode` shape) and aggregates the per-
-    (subspace, cid, pos) DECIMAL means together. Bit-identical to the
-    sequential per-subspace loop: elementwise double-cast commutes with
-    slicing, each (s, cid, pos) group's decimal sum/count is exactly the
-    per-subspace group's, and empty clusters keep their previous centroid
-    per subspace (pinned fused ≡ sequential in tests/test_properties.py).
-    Measured at sf0.1 (m=4, ksub=8, n_iter=1): 3.25 s → ~1 s warm — the
-    old form paid m×(checkpoint + init collect + n_iter collects) driver
-    round-trips; at scale it paid m full passes over the corpus per
-    round where one suffices."""
-    vecs = emb.select(
-        F.col(id_col).alias("_kid"), _as_double(vec_col).alias("v")
-    ).localCheckpoint(eager=False)
-    init = vecs.orderBy("_kid").limit(ksub).collect()
-    if not init:
-        raise ValueError("pq_fit: input has no rows")
-    dim = len(init[0]["v"])
-    if dim % m != 0:
-        raise ValueError(f"pq_fit: dim {dim} not divisible by m={m}")
-    dsub = dim // m
-    # fewer rows than ksub: per-subspace k shrinks identically to the
-    # sequential kmeans_fit (k = number of collected init rows)
-    books = [
-        [list(r["v"])[s * dsub : (s + 1) * dsub] for r in init]
-        for s in range(m)
-    ]
-    k = len(init)
-    for _ in range(n_iter):
-        structs = [
-            F.struct(
-                F.lit(s).alias("s"),
-                cluster_assign(
-                    F.slice(F.col("v"), s * dsub + 1, dsub), books[s]
-                ).alias("cid"),
-                F.slice(F.col("v"), s * dsub + 1, dsub).alias("sv"),
-            )
-            for s in range(m)
-        ]
-        rows = (
-            vecs.select(F.explode(F.array(*structs)).alias("e"))
-            .select(
-                F.col("e.s").alias("s"),
-                F.col("e.cid").alias("cid"),
-                F.posexplode("e.sv").alias("pos", "val"),
-            )
-            .groupBy("s", "cid", "pos")
-            .agg(
-                (
-                    F.sum(F.col("val").cast("decimal(28,12)")).cast("double")
-                    / F.count(F.lit(1))
-                ).alias("cval")
-            )
-            .collect()
-        )
-        by_sc: dict[tuple[int, int], dict[int, float]] = {}
-        for r in rows:
-            by_sc.setdefault((r["s"], r["cid"]), {})[r["pos"]] = r["cval"]
-        books = [
-            [
-                [by_sc[(s, c)][p] for p in range(dsub)]
-                if (s, c) in by_sc
-                else books[s][c]
-                for c in range(k)
-            ]
-            for s in range(m)
-        ]
-    return books
+    contiguous subspaces of dim/m dimensions and fit ``ksub`` centroids
+    per subspace with the shared Lloyd loop (:func:`_lloyd`, all ``m``
+    subspaces in one job per round) — returns ``books[m][ksub][dim/m]``,
+    bit-identical to ``m`` separate :func:`kmeans_fit` calls over the
+    sliced projections. PQ is the canonical 100 TB ANN memory trade
+    (FAISS's IVF-PQ layout): a 64-dim float vector becomes m small codes,
+    so the candidate scan reads m bytes per row instead of the vector, and
+    exact vectors are touched only for the re-rank survivors."""
+    return _lloyd(emb, ksub, n_iter, m, id_col, vec_col, "pq_fit")
 
 
 def save_pq_codebooks(
@@ -534,58 +589,20 @@ def pq_topk_adc(
     Output (vec_id, rank, cos_r, adc_r): ``cos_r`` is the exact score of
     the survivor, ``adc_r`` the approximation that put it in the
     candidate set — the pair is the recall diagnostic."""
-    m = len(books)
-    dsub = len(books[0][0])
-    q = [float(x) for x in query_vec]
-    luts = []
-    for s, book in enumerate(books):
-        qs = q[s * dsub : (s + 1) * dsub]
-        lut = []
-        for c in book:
-            acc = 0.0
-            for x, y in zip(qs, c):
-                t = x - y
-                acc = acc + t * t
-            lut.append(acc)
-        luts.append(lut)
-
+    _check_query_dim("pq_topk_adc", query_vec, len(books) * len(books[0][0]))
+    luts = _query_luts([float(x) for x in query_vec], books)
     codes = pq_encode(emb, books, id_col, vec_col)
-    adc = None
-    for s in range(m):
-        term = F.element_at(
-            F.array(*[F.lit(v) for v in luts[s]]),
-            F.element_at(F.col("code"), s + 1) + F.lit(1),
-        )
-        adc = term if adc is None else adc + term
-    cand = (
-        codes.select(F.col(id_col), F.round(adc, 6).alias("adc_r"))
-        .orderBy(F.col("adc_r").asc(), F.col(id_col).asc())
-        .limit(rerank)
-    )
-    qarr = F.array(*[F.lit(v) for v in q])
-    rescored = (
-        emb.join(F.broadcast(cand), id_col)
-        .select(
-            F.col(id_col),
-            F.round(cosine(_as_double(vec_col), qarr), 6).alias("cos_r"),
-            F.col("adc_r"),
-        )
-        .orderBy(F.col("cos_r").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
-    w = Window.partitionBy(single_partition_key()).orderBy(
-        F.col("cos_r").desc(), F.col(id_col).asc()
-    )
-    return rescored.withColumn(
-        "rank", F.row_number().over(w).cast("long")
-    ).select(id_col, "rank", "cos_r", "adc_r")
+    cand = _adc_candidates(codes, [dbl_array_col(t) for t in luts], id_col, rerank)
+    rows = emb.join(F.broadcast(cand), id_col)
+    return _exact_topk(rows, query_vec, k, id_col, vec_col, carry=("adc_r",))
 
 
 def _lut_sqdists(q_sub: list[float], book: list[list[float]]) -> list[float]:
-    """Squared distances of one query subvector to every sub-centroid, in
-    the shared left-fold accumulator order (``((0.0+t0²)+t1²)+...``) so
-    the doubles match the assignment kernel and the SQL ``list_reduce``
-    bit-for-bit."""
+    """Squared distances of one driver-side (sub)vector to every centroid
+    of ``book`` (a PQ sub-codebook, or the coarse centroids), in the
+    shared left-fold accumulator order (``((0.0+t0²)+t1²)+...``) so the
+    doubles match the assignment kernel and the SQL ``list_reduce``
+    bit-for-bit. The package's only Python copy of that fold."""
     lut = []
     for c in book:
         acc = 0.0
@@ -594,6 +611,46 @@ def _lut_sqdists(q_sub: list[float], book: list[list[float]]) -> list[float]:
             acc = acc + t * t
         lut.append(acc)
     return lut
+
+
+def _query_luts(
+    q: list[float], books: list[list[list[float]]]
+) -> list[list[float]]:
+    """The ADC lookup tables of one query vector: per subspace, its
+    :func:`_lut_sqdists` against that subspace's codebook."""
+    dsub = len(books[0][0])
+    return [
+        _lut_sqdists(q[s * dsub : (s + 1) * dsub], book)
+        for s, book in enumerate(books)
+    ]
+
+
+def _adc_r(luts: list[Column]) -> Column:
+    """The ADC score of a ``code`` row: ``round(Σ_s luts[s][code[s]], 6)``,
+    summed in subspace order, where ``luts[s]`` is subspace ``s``'s
+    array<double> of squared distances to its sub-centroids — m array
+    lookups and m-1 additions per row, no vector arithmetic."""
+    terms = [
+        F.element_at(lut, F.element_at(F.col("code"), s + 1) + F.lit(1))
+        for s, lut in enumerate(luts)
+    ]
+    return F.round(functools.reduce(operator.add, terms), 6)
+
+
+def _adc_candidates(
+    codes: DataFrame,
+    luts: list[Column],
+    id_col: str,
+    rerank: int,
+    *keep: str,
+) -> DataFrame:
+    """(``id_col``, *keep, adc_r) of the ``rerank`` best ``codes`` rows by
+    (adc_r, id): a TakeOrderedAndProject cut, never a global window."""
+    return (
+        codes.select(F.col(id_col), *keep, _adc_r(luts).alias("adc_r"))
+        .orderBy(F.col("adc_r").asc(), F.col(id_col).asc())
+        .limit(rerank)
+    )
 
 
 def ivf_residuals(
@@ -610,10 +667,6 @@ def ivf_residuals(
     nested-array literal by blk (nlist×dim doubles folded into the plan
     once), and the subtraction is a ``zip_with`` — map-side only, zero
     shuffles, zero joins."""
-    from mongo_polars_reconciliation_spark.functions.localrel import (
-        dbl_nested_array_col,
-    )
-
     assigned = emb.select(
         F.col(id_col),
         _as_double(vec_col).alias("_v"),
@@ -664,97 +717,44 @@ def ivfpq_topk(
     oracle replays both cuts bit-for-bit. Output (vec_id, rank, cos_r,
     adc_r, blk): blk is the probed-cell provenance — the recall
     diagnostic for nprobe tuning."""
-    spark = emb.sparkSession
-    m = len(books)
-    dsub = len(books[0][0])
     q = [float(x) for x in query_vec]
-    dists = []
-    for cid, c in enumerate(coarse):
-        acc = 0.0
-        for x, y in zip(q, c):
-            t = x - y
-            acc = acc + t * t
-        dists.append((acc, cid))
-    probed = [cid for _, cid in sorted(dists)[:nprobe]]
-    lut_rows = []
-    for cid in probed:
-        qr = [x - y for x, y in zip(q, coarse[cid])]
-        luts = [
-            _lut_sqdists(qr[s * dsub : (s + 1) * dsub], book)
-            for s, book in enumerate(books)
-        ]
-        lut_rows.append((cid, *luts))
-
+    _check_query_dim("ivfpq_topk", q, len(coarse[0]))
+    dists = _lut_sqdists(q, coarse)
+    probed = sorted(range(len(coarse)), key=lambda c: (dists[c], c))[:nprobe]
+    # the residual query differs per probed cell, so each cell has its own
+    # m lookup tables
+    luts = {
+        c: _query_luts([x - y for x, y in zip(q, coarse[c])], books)
+        for c in probed
+    }
     res = ivf_residuals(emb, coarse, id_col, vec_col).filter(
-        F.col("blk").isin([int(p) for p in probed])
+        F.col("blk").isin(probed)
     )
     codes = pq_encode(res, books, id_col, vec_col, keep=("blk",))
-    ksub = len(books[0])
-    lut_literal_ok = (
-        len(lut_rows) * m * ksub <= IVFPQ_LUT_LITERAL_MAX_DOUBLES
-    )
-    if lut_literal_ok:
+    m, ksub = len(books), len(books[0])
+    if len(probed) * m * ksub <= IVFPQ_LUT_LITERAL_MAX_DOUBLES:
         # per-cell LUTs as literal CASE expressions keyed on blk: every
         # row's blk is one of ``probed`` (the filter above), so the CASE
-        # always matches
-        from mongo_polars_reconciliation_spark.functions.localrel import (
-            dbl_array_col,
-        )
-
-        scored = codes
-        lut_expr = {}
+        # always matches. F.when opens the CASE, Column.when extends it.
+        lut_cols = []
         for s in range(m):
-            e = None
-            for row in lut_rows:
-                arr = dbl_array_col(row[1 + s])
-                cond = F.col("blk") == F.lit(int(row[0]))
-                e = F.when(cond, arr) if e is None else e.when(cond, arr)
-            lut_expr[s] = e
-        adc = None
-        for s in range(m):
-            term = F.element_at(
-                lut_expr[s], F.element_at(F.col("code"), s + 1) + F.lit(1)
-            )
-            adc = term if adc is None else adc + term
+            case = F
+            for c in probed:
+                case = case.when(F.col("blk") == c, dbl_array_col(luts[c][s]))
+            lut_cols.append(case)
     else:
+        spark = emb.sparkSession
         lut_df = spark.createDataFrame(
-            spark.sparkContext.parallelize(lut_rows, 1),
-            "blk int, "
-            + ", ".join(f"_lut{s} array<double>" for s in range(m)),
+            spark.sparkContext.parallelize(
+                [(c, *luts[c]) for c in probed], 1
+            ),
+            "blk int, " + ", ".join(f"_lut{s} array<double>" for s in range(m)),
         )
-        scored = codes.join(F.broadcast(lut_df), "blk")
-        adc = None
-        for s in range(m):
-            term = F.element_at(
-                F.col(f"_lut{s}"),
-                F.element_at(F.col("code"), s + 1) + F.lit(1),
-            )
-            adc = term if adc is None else adc + term
-    cand = (
-        scored.select(
-            F.col(id_col), F.col("blk"), F.round(adc, 6).alias("adc_r")
-        )
-        .orderBy(F.col("adc_r").asc(), F.col(id_col).asc())
-        .limit(rerank)
-    )
-    qarr = F.array(*[F.lit(v) for v in q])
-    rescored = (
-        emb.join(F.broadcast(cand), id_col)
-        .select(
-            F.col(id_col),
-            F.round(cosine(_as_double(vec_col), qarr), 6).alias("cos_r"),
-            F.col("adc_r"),
-            F.col("blk"),
-        )
-        .orderBy(F.col("cos_r").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
-    w = Window.partitionBy(single_partition_key()).orderBy(
-        F.col("cos_r").desc(), F.col(id_col).asc()
-    )
-    return rescored.withColumn(
-        "rank", F.row_number().over(w).cast("long")
-    ).select(id_col, "rank", "cos_r", "adc_r", "blk")
+        codes = codes.join(F.broadcast(lut_df), "blk")
+        lut_cols = [F.col(f"_lut{s}") for s in range(m)]
+    cand = _adc_candidates(codes, lut_cols, id_col, rerank, "blk")
+    rows = emb.join(F.broadcast(cand), id_col)
+    return _exact_topk(rows, q, k, id_col, vec_col, carry=("adc_r", "blk"))
 
 
 def _pq_luts_udf(coarse: list[list[float]], books: list[list[list[float]]]):
@@ -763,12 +763,9 @@ def _pq_luts_udf(coarse: list[list[float]], books: list[list[list[float]]]):
     ``array<array<double>>``, outer index = subspace, inner = sub-centroid.
 
     The residual is the elementwise double subtraction ``v - cent`` and
-    each table entry is the left-fold accumulator sequence
-    ``((0.0 + t0²) + t1²) + ...`` over the subspace dims (vectorized
-    across the batch and the sub-centroids, sequential in the dimension),
-    so every entry equals :func:`_lut_sqdists` of the row's residual
-    bit-for-bit. One kernel node replaces m·ksub interpreted folds per
-    probe row."""
+    each table is :func:`_sqdist_kernel` over the subspace dims, so every
+    entry equals :func:`_lut_sqdists` of the row's residual bit-for-bit.
+    One kernel node replaces m·ksub interpreted folds per probe row."""
     C = [[float(x) for x in c] for c in coarse]
     B = [[[float(x) for x in c] for c in book] for book in books]
     m = len(B)
@@ -777,16 +774,13 @@ def _pq_luts_udf(coarse: list[list[float]], books: list[list[list[float]]]):
     def kernel(blks, a):
         import numpy as np
 
-        carr = np.asarray(C, dtype=np.float64)
-        r = a - carr[blks]
-        out_per_s = []
-        for s in range(m):
-            bs = np.asarray(B[s], dtype=np.float64)  # ksub × dsub
-            D = np.zeros((a.shape[0], bs.shape[0]), dtype=np.float64)
-            for j in range(dsub):
-                t = r[:, s * dsub + j][:, None] - bs[:, j][None, :]
-                D = D + t * t
-            out_per_s.append(D)
+        r = a - np.asarray(C, dtype=np.float64)[blks]
+        out_per_s = [
+            _sqdist_kernel(
+                r[:, s * dsub : (s + 1) * dsub], np.asarray(B[s], dtype=np.float64)
+            )
+            for s in range(m)
+        ]
         return [
             [out_per_s[s][i].tolist() for s in range(m)]
             for i in range(a.shape[0])
@@ -852,21 +846,11 @@ def knn_join_ivfpq(
             "__luts"
         ),
     )
-    adc = None
-    for s in range(m):
-        term = F.element_at(
-            F.element_at(F.col("__luts"), s + 1),
-            F.element_at(F.col("code"), s + 1) + F.lit(1),
-        )
-        adc = term if adc is None else adc + term
+    adc_r = _adc_r([F.element_at(F.col("__luts"), s + 1) for s in range(m)])
     pairs = (
         luts.join(codes, "__blk")
         .where(F.col("__ida") != F.col("__idb"))
-        .select(
-            F.col("__ida"),
-            F.col("__idb"),
-            F.round(adc, 6).alias("adc_r"),
-        )
+        .select(F.col("__ida"), F.col("__idb"), adc_r.alias("adc_r"))
     )
     w_adc = Window.partitionBy("__ida").orderBy(
         F.col("adc_r").asc(), F.col("__idb").asc()
@@ -953,6 +937,7 @@ def topk_ivf_fitted(
     one projection + filter, no join."""
     nlist = _resolve_nlist(nlist, emb, target_block_rows)
     cents = kmeans_fit(emb, k=nlist, n_iter=n_iter, id_col=id_col, vec_col=vec_col)
+    _check_query_dim("topk_ivf_fitted", query_vec, len(cents[0]))
 
     def cos_to_query(c: list[float]) -> float:
         # same left-fold order and correctly-rounded sqrt as the SQL
@@ -1020,10 +1005,6 @@ def topk_ivf(
     broadcast scale), the big scan is pruned by the label filter. A
     ``query_vec`` whose length differs from the embedding dimension raises
     instead of returning a wrong ranking."""
-    from mongo_polars_reconciliation_spark.functions.localrel import (
-        dbl_array_col,
-    )
-
     cents = label_centroids(emb, id_col, vec_col, label_col)
     # query components as one literal array indexed by pos; try_element_at
     # so a query SHORTER than the embedding reaches the dim guard below
@@ -1178,14 +1159,17 @@ def topk_lsh(
     Scale path: the signature is a plain column — precompute it at ingest and
     write the table partitioned/bucketed by ``sig`` and the probe becomes
     partition pruning (read ~(1+nbits)/2^nbits of the data); computed on the
-    fly it is still a pushable scan filter, never a shuffle."""
+    fly it is still a pushable scan filter, never a shuffle.
+
+    The probe filter carries the dimension guard of :func:`_dim_guard`: an
+    embedding of another length than ``query_vec`` gets a NULL-folded
+    signature, so it must raise before the filter can drop it."""
     qsig = lsh_signature_py([float(v) for v in query_vec], nbits)
     sigs = emb.withColumn(
         "sig", lsh_signature_col(vec_col, nbits, dim=len(query_vec))
     )
-    probed = sigs.where(
-        F.bit_count(F.col("sig").bitwiseXOR(F.lit(qsig))) <= max_hamming
-    ).drop("sig")
+    near = F.bit_count(F.col("sig").bitwiseXOR(F.lit(qsig))) <= max_hamming
+    probed = sigs.where(_dim_guard(vec_col, len(query_vec), near)).drop("sig")
     return topk_bruteforce(probed, query_vec, k, id_col, vec_col)
 
 
@@ -1773,7 +1757,6 @@ def ann_recall_at_k_sampled(
     per stratum as AVG(recall_r) — the per-language/per-source index
     quality readout."""
     from mongo_polars_reconciliation_spark.extensions.text import (
-        floor4,
         sample_fixed_per_stratum,
     )
 
@@ -1782,31 +1765,40 @@ def ann_recall_at_k_sampled(
     ).select(strata_col, id_col)
     truth = knn_join_exact_probes(
         emb, probes, k=k, id_col=id_col, vec_col=vec_col
-    ).select(F.col(id_col), "neighbor_id")
-    ann = (
-        knn_join_multiprobe(
-            emb,
-            k=k,
-            nprobe=nprobe,
-            nlist=nlist,
-            n_iter=n_iter,
-            id_col=id_col,
-            vec_col=vec_col,
-        )
-        .join(probes.select(id_col), id_col)
-        .select(F.col(id_col), "neighbor_id", F.lit(1).alias("__hit"))
     )
+    ann = knn_join_multiprobe(
+        emb,
+        k=k,
+        nprobe=nprobe,
+        nlist=nlist,
+        n_iter=n_iter,
+        id_col=id_col,
+        vec_col=vec_col,
+    ).join(probes.select(id_col), id_col)
     return (
-        truth.join(ann, [id_col, "neighbor_id"], "left")
+        _recall_rows(truth, ann, id_col)
+        .join(probes, id_col)
+        .select(id_col, strata_col, "n_true", "n_hit", "recall_r")
+    )
+
+
+def _recall_rows(truth: DataFrame, ann: DataFrame, id_col: str) -> DataFrame:
+    """(``id_col``, n_true, n_hit, recall_r) of two k-NN graphs: per vector,
+    its ``truth`` neighbors, how many of them ``ann`` also lists, and the
+    floor4 ratio."""
+    from mongo_polars_reconciliation_spark.extensions.text import floor4
+
+    hits = ann.select(F.col(id_col), "neighbor_id", F.lit(1).alias("__hit"))
+    return (
+        truth.select(F.col(id_col), "neighbor_id")
+        .join(hits, [id_col, "neighbor_id"], "left")
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_true"),
             F.count("__hit").alias("n_hit"),
         )
-        .join(probes, id_col)
         .select(
             F.col(id_col),
-            F.col(strata_col),
             "n_true",
             "n_hit",
             floor4(F.col("n_hit") / F.col("n_true")).alias("recall_r"),
@@ -1836,11 +1828,7 @@ def ann_recall_at_k(
 
     Scale: truth is O(n²) — run on a representative sample at corpus
     scale; the ANN side is the production path being measured."""
-    from mongo_polars_reconciliation_spark.extensions.text import floor4
-
-    truth = knn_join_exact(emb, k=k, id_col=id_col, vec_col=vec_col).select(
-        F.col(id_col), "neighbor_id"
-    )
+    truth = knn_join_exact(emb, k=k, id_col=id_col, vec_col=vec_col)
     ann = knn_join_multiprobe(
         emb,
         k=k,
@@ -1849,18 +1837,5 @@ def ann_recall_at_k(
         n_iter=n_iter,
         id_col=id_col,
         vec_col=vec_col,
-    ).select(F.col(id_col), "neighbor_id", F.lit(1).alias("__hit"))
-    return (
-        truth.join(ann, [id_col, "neighbor_id"], "left")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_true"),
-            F.count("__hit").alias("n_hit"),
-        )
-        .select(
-            F.col(id_col),
-            "n_true",
-            "n_hit",
-            floor4(F.col("n_hit") / F.col("n_true")).alias("recall_r"),
-        )
     )
+    return _recall_rows(truth, ann, id_col)

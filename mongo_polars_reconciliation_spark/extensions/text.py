@@ -43,10 +43,6 @@ TOKEN_PATTERN = "[a-z]+|[0-9]+|[^a-z0-9 ]"
 BLOOM_LITERAL_MAX_WORDS = 65536
 
 
-def tokens(df: DataFrame, text_col: str = "text", out: str = "toks") -> DataFrame:
-    return df.withColumn(out, F.split(F.col(text_col), " "))
-
-
 def chunk_documents(
     df: DataFrame,
     chunk_tokens: int = 32,

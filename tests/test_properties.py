@@ -4597,6 +4597,96 @@ def test_topk_ivf_rejects_query_dim_mismatch(spark):
             topk_ivf(emb, q, k=2, nprobe=1).collect()
 
 
+_DIM_EMB = [
+    (1, [1.0, 0.0, 0.0, 0.0]),
+    (2, [0.9, 0.1, 0.0, 0.0]),
+    (3, [0.0, 1.0, 0.0, 0.0]),
+    (4, [0.0, 0.0, 1.0, 0.5]),
+]
+# 4-d artifacts fixed on the driver: two coarse cells, m=2 codebooks of
+# ksub=2 two-dimensional sub-centroids
+_DIM_COARSE = [[1.0, 0.0, 0.0, 0.0], [0.0, 0.0, 1.0, 0.5]]
+_DIM_BOOKS = [[[1.0, 0.0], [0.0, 1.0]], [[0.0, 0.0], [1.0, 0.5]]]
+
+
+def _dim_probe(name, emb, q):
+    from mongo_polars_reconciliation_spark.extensions import similarity as sim
+
+    return {
+        "topk_bruteforce": lambda: sim.topk_bruteforce(emb, q, k=3),
+        # every row probed, so the guard cannot hide behind the filter
+        "topk_lsh": lambda: sim.topk_lsh(emb, q, k=3, nbits=2, max_hamming=2),
+        "topk_ivf_fitted": lambda: sim.topk_ivf_fitted(
+            emb, q, k=3, nlist=2, n_iter=1, nprobe=2
+        ),
+        "pq_topk_adc": lambda: sim.pq_topk_adc(emb, q, _DIM_BOOKS, k=3),
+        "ivfpq_topk": lambda: sim.ivfpq_topk(
+            emb, q, _DIM_COARSE, _DIM_BOOKS, nprobe=2, k=3
+        ),
+    }[name]()
+
+
+_DIM_OPS = [
+    "topk_bruteforce",
+    "topk_lsh",
+    "topk_ivf_fitted",
+    "pq_topk_adc",
+    "ivfpq_topk",
+]
+
+
+@pytest.mark.parametrize("q", [[1.0, 0.0, 0.0], [1.0, 0.0, 0.0, 0.0, 0.0]])
+@pytest.mark.parametrize("name", _DIM_OPS)
+def test_single_query_search_rejects_query_dim_mismatch(spark, name, q):
+    """Every single-query operator fails loudly on a query vector SHORTER
+    or LONGER than the 4-d embeddings: ``zip_with`` pads the shorter side
+    with NULLs, so an unguarded path returns k rows with ``cos_r`` NULL
+    ranked by id."""
+    emb = spark.createDataFrame(_DIM_EMB, "vec_id long, embedding array<float>")
+    with pytest.raises(Exception, match="dim mismatch"):
+        _dim_probe(name, emb, q).collect()
+
+
+@pytest.mark.parametrize("name", ["topk_bruteforce", "topk_lsh"])
+def test_single_query_search_keeps_null_embedding_score(spark, name):
+    """The dimension guard fires only on a non-NULL embedding of the wrong
+    length: a well-formed query ranks the 4-d rows, and a NULL embedding
+    row keeps its NULL score. (The probes that run the assignment kernel
+    over every row do not take NULL vectors at all.)"""
+    emb = spark.createDataFrame(
+        _DIM_EMB + [(5, None)], "vec_id long, embedding array<float>"
+    )
+    rows = _dim_probe(name, emb, [1.0, 0.0, 0.0, 0.0]).collect()
+    assert [r["vec_id"] for r in rows][:2] == [1, 2]
+    assert all(r["cos_r"] is None for r in rows if r["vec_id"] == 5)
+
+
+@pytest.mark.parametrize(
+    "fit, name",
+    [
+        (lambda sim, df: sim.kmeans_fit(df, k=2), "kmeans_fit"),
+        (lambda sim, df: sim.pq_fit(df, m=2, ksub=2), "pq_fit"),
+    ],
+)
+def test_lloyd_fit_rejects_empty_input(spark, fit, name):
+    """The shared Lloyd loop names its caller when the input has no rows."""
+    from mongo_polars_reconciliation_spark.extensions import similarity as sim
+
+    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match=f"^{name}: input has no rows"):
+        fit(sim, empty)
+
+
+def test_pq_fit_rejects_dim_not_divisible_by_m(spark):
+    """pq_fit splits vectors into m equal subspaces; a 4-d corpus cannot be
+    split into 3."""
+    from mongo_polars_reconciliation_spark.extensions.similarity import pq_fit
+
+    emb = spark.createDataFrame(_DIM_EMB, "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match=r"^pq_fit: dim 4 not divisible by m=3"):
+        pq_fit(emb, m=3, ksub=2)
+
+
 def test_bpe_merge_fit_empty_merge_table_keeps_schema(spark):
     """A corpus of single-character words has no adjacent symbol pair, so
     no merge is learned: bpe_merge_fit returns zero rows with the full

@@ -91,19 +91,37 @@ def _arrow_udf(kernel, return_type: str):
     column arrives ``np.stack``-ed into a (rows, dim) matrix, any
     other column as its 1-d array, and ``kernel``'s per-row results become
     the output Series. An empty batch returns an empty Series without
-    calling ``kernel``. ``return_type`` is a DDL string, parsed through the
-    active session, so kernels are built inside operator calls, never at
-    import time."""
+    calling ``kernel``. An array column holding a NULL row or rows of
+    different lengths raises a ``ValueError`` naming which, diagnosed only
+    when ``np.stack`` gives no numeric matrix. ``return_type`` is a DDL
+    string, parsed through the active session, so kernels are built inside
+    operator calls, never at import time."""
+
+    def stack(i, rows):
+        import numpy as np
+
+        try:
+            out = np.stack(rows)
+            if out.dtype != object:  # NULL-only rows stack as objects
+                return out
+        except ValueError:
+            pass
+        null = any(r is None for r in rows)
+        problem = "a NULL row" if null else "rows of different lengths"
+        lengths = sorted({len(r) for r in rows if r is not None})
+        raise ValueError(
+            f"array argument {i} holds {problem} (row lengths seen: "
+            f"{lengths}); every row must be a non-NULL array of one length"
+        )
 
     def fn(*cols):
-        import numpy as np
         import pandas as pd
 
         if len(cols[0]) == 0:
             return pd.Series([], dtype=object)
         args = [
-            np.stack(c.to_numpy()) if c.dtype == object else c.to_numpy()
-            for c in cols
+            stack(i, c.to_numpy()) if c.dtype == object else c.to_numpy()
+            for i, c in enumerate(cols)
         ]
         return pd.Series(kernel(*args))
 
@@ -123,6 +141,8 @@ def _pair_dot_kernel(a, b):
     unrolled ``GetArrayItem`` codegen form measured slower.)"""
     import numpy as np
 
+    if a.shape[1] != b.shape[1]:
+        raise ValueError(f"pair vector dims differ: {a.shape[1]} != {b.shape[1]}")
     acc = np.zeros(a.shape[0], dtype=np.float64)
     for j in range(a.shape[1]):
         acc = acc + a[:, j] * b[:, j]
@@ -136,6 +156,8 @@ def _sqdist_kernel(a, c):
     every entry equals :func:`_lut_sqdists` bit-for-bit."""
     import numpy as np
 
+    if a.shape[1] != c.shape[1]:
+        raise ValueError(f"vector dim {a.shape[1]} != centroid dim {c.shape[1]}")
     D = np.zeros((a.shape[0], c.shape[0]), dtype=np.float64)
     for j in range(a.shape[1]):
         t = a[:, j][:, None] - c[:, j][None, :]

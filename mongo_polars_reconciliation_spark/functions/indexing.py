@@ -30,7 +30,6 @@ def with_prefix_sum(
     value_col: str,
     name: str = "prefix_sum",
     scalable: bool = True,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Add an EXCLUSIVE prefix sum of ``value_col`` (long) by the given total
     order: row i gets sum(value of rows 0..i-1), first row gets 0.
@@ -48,15 +47,16 @@ def with_prefix_sum(
         w = Window.orderBy(*order_by).rowsBetween(Window.unboundedPreceding, -1)
         return df.withColumn(name, F.coalesce(F.sum(v).over(w), F.lit(0)))
 
-    parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     ranged = (
-        df.repartitionByRange(parts, *order_by)
+        df.repartitionByRange(
+            df.sparkSession.sparkContext.defaultParallelism, *order_by
+        )
         .sortWithinPartitions(*order_by)
         .withColumn("__pid", F.spark_partition_id())
         .localCheckpoint(eager=False)
     )
     sums = ranged.groupBy("__pid").agg(F.sum(v).alias("__s"))
-    # ≤num_partitions rows — a single-partition window is the right plan;
+    # ≤defaultParallelism rows — a single-partition window is the right plan;
     # the non-foldable constant key keeps WindowExec's warning out
     w_off = (
         Window.partitionBy(single_partition_key())
@@ -84,11 +84,10 @@ def with_file_row_number(
     df: DataFrame,
     order_by: list[str],
     name: str = "file_row_number",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Add a contiguous 1-based ``long`` index by the given total order: the
     exclusive prefix sum of 1, plus 1."""
     ones = df.withColumn(name, F.lit(1))
-    return with_prefix_sum(
-        ones, order_by, name, name, num_partitions=num_partitions
-    ).withColumn(name, F.col(name) + 1)
+    return with_prefix_sum(ones, order_by, name, name).withColumn(
+        name, F.col(name) + 1
+    )

@@ -339,6 +339,79 @@ def build_mm_payload_aug(spark: SparkSession, sf_dir: str) -> DataFrame:
     return attach_payload(d.unionByName(exact).unionByName(appended))
 
 
+def _ingest_split(
+    spark: SparkSession, path: str, id_col: str, value_col: str,
+    redeliver_mod: int, variant_mod: int, variant_offset: int, variant,
+) -> "tuple[DataFrame, DataFrame]":
+    """(history, batch) of an ingest family over the (``id_col``,
+    ``value_col``) columns of ``path``: history is the id%3<2 slice; the
+    batch is the %3==2 slice, exact re-deliveries of the
+    %10==``redeliver_mod`` slice under +100000 ids, and the ``variant``
+    (a Column) of the %10==``variant_mod`` slice under +``variant_offset``
+    ids."""
+    df = spark.read.parquet(path).select(id_col, value_col)
+    i = F.col(id_col)
+    batch = (
+        df.where(i % 3 == 2)
+        .unionByName(
+            df.where(i % 10 == redeliver_mod).select(
+                (i + 100000).alias(id_col), value_col
+            )
+        )
+        .unionByName(
+            df.where(i % 10 == variant_mod).select(
+                (i + variant_offset).alias(id_col), variant.alias(value_col)
+            )
+        )
+    )
+    return df.where(i % 3 < 2), batch
+
+
+def neardup_ingest_split(
+    spark: SparkSession, sf_dir: str
+) -> "tuple[DataFrame, DataFrame]":
+    """(history, batch) of the near-dup ingest faces: exact redeliveries
+    of the %10==7 docs, and the %10==3 docs with their first word dropped
+    (+200000 ids)."""
+    return _ingest_split(
+        spark, f"{sf_dir}/documents.parquet", "doc_id", "text", 7, 3, 200000,
+        F.expr("substring(text, instr(text, ' ') + 1)"),
+    )
+
+
+def payload_ingest_split(
+    spark: SparkSession, sf_dir: str
+) -> "tuple[DataFrame, DataFrame]":
+    """(history, batch) of the payload ingest faces, both as
+    ``attach_payload`` frames: exact re-uploads of the %10==7 docs, and
+    the %10==5 docs with ``MM_PAYLOAD_TAIL`` appended (+300000 ids)."""
+    from mongo_polars_reconciliation_spark.extensions.multimodal import (
+        attach_payload,
+    )
+
+    hist, batch = _ingest_split(
+        spark, f"{sf_dir}/documents.parquet", "doc_id", "text", 7, 5, 300000,
+        F.concat(F.col("text"), F.lit(MM_PAYLOAD_TAIL)),
+    )
+    return attach_payload(hist), attach_payload(batch)
+
+
+def semantic_ingest_split(
+    spark: SparkSession, sf_dir: str
+) -> "tuple[DataFrame, DataFrame]":
+    """(history, batch) of the semantic ingest faces: exact re-uploads of
+    the %10==1 vectors, and the %10==4 vectors with their first 8 dims
+    zeroed (+200000 ids)."""
+    return _ingest_split(
+        spark, f"{sf_dir}/embeddings.parquet", "vec_id", "embedding",
+        1, 4, 200000,
+        F.expr(
+            "transform(embedding, (x, i) -> CASE WHEN i < 8 "
+            "THEN CAST(0.0 AS FLOAT) ELSE x END)"
+        ),
+    )
+
+
 def build_documents_xsource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Documents plus CROSS-source exact copies: doc_id % 10 == 7 docs are
     mirrored (doc_id + 100000) under the synthetic source ``mirror`` —

@@ -17,7 +17,10 @@ from mongo_polars_reconciliation_spark.harness.fixtures import (
     build_internal,
     build_state,
     load_base,
+    neardup_ingest_split,
+    payload_ingest_split,
     recon_cfg,
+    semantic_ingest_split,
 )
 from mongo_polars_reconciliation_spark.operators.match import (
     hot_match_keys,
@@ -1783,7 +1786,7 @@ def sim_centroid_roundtrip(spark, sf_dir) -> DataFrame:
 
 
 def sim_ingest_semantic(spark, sf_dir) -> DataFrame:
-    """Incremental SEMANTIC ingest (r10): history (vec_id%3<2) fits the
+    """Incremental SEMANTIC ingest: history (vec_id%3<2) fits the
     centroid artifact once (persisted + reloaded — probe keys must never
     drift between waves) and persists its probe-assignment state; the
     arriving batch (the %3==2 slice, plus exact re-uploads of the
@@ -1804,27 +1807,7 @@ def sim_ingest_semantic(spark, sf_dir) -> DataFrame:
         MULTIPROBE_ORACLE_NLIST,
     )
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    hist = emb.where(F.col("vec_id") % 3 < 2)
-    batch = (
-        emb.where(F.col("vec_id") % 3 == 2)
-        .unionByName(
-            emb.where(F.col("vec_id") % 10 == 1).select(
-                (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
-            )
-        )
-        .unionByName(
-            emb.where(F.col("vec_id") % 10 == 4).select(
-                (F.col("vec_id") + 200000).alias("vec_id"),
-                F.expr(
-                    "transform(embedding, (x, i) -> CASE WHEN i < 8 "
-                    "THEN CAST(0.0 AS FLOAT) ELSE x END)"
-                ).alias("embedding"),
-            )
-        )
-    )
+    hist, batch = semantic_ingest_split(spark, sf_dir)
     cents = kmeans_fit(
         hist, k=MULTIPROBE_ORACLE_NLIST, n_iter=MULTIPROBE_ORACLE_N_ITER
     )
@@ -2069,7 +2052,7 @@ def dedup_ingest_incremental(spark, sf_dir) -> DataFrame:
 
 
 def dedup_ingest_neardup(spark, sf_dir) -> DataFrame:
-    """Incremental NEAR-dup ingest (r9): history (doc_id%3<2) persists a
+    """Incremental NEAR-dup ingest: history (doc_id%3<2) persists a
     digest set AND a MinHash band-key state; the arriving batch (the
     %3==2 slice, plus exact redeliveries of the %10==7 slice under
     +100000 ids and first-word-dropped near-dup variants of the %10==3
@@ -2083,25 +2066,7 @@ def dedup_ingest_neardup(spark, sf_dir) -> DataFrame:
         ingest_novel_neardup,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    hist = docs.where(F.col("doc_id") % 3 < 2)
-    near_text = F.expr("substring(text, instr(text, ' ') + 1)")
-    batch = (
-        docs.where(F.col("doc_id") % 3 == 2)
-        .unionByName(
-            docs.where(F.col("doc_id") % 10 == 7).select(
-                (F.col("doc_id") + 100000).alias("doc_id"), "text"
-            )
-        )
-        .unionByName(
-            docs.where(F.col("doc_id") % 10 == 3).select(
-                (F.col("doc_id") + 200000).alias("doc_id"),
-                near_text.alias("text"),
-            )
-        )
-    )
+    hist, batch = neardup_ingest_split(spark, sf_dir)
     state_digests = hist.select(
         F.md5(F.coalesce(F.col("text"), F.lit("")).cast("binary")).alias(
             "text_hash"
@@ -2470,7 +2435,7 @@ def mm_payload_near_dup(spark, sf_dir) -> DataFrame:
 
 
 def mm_payload_ingest(spark, sf_dir) -> DataFrame:
-    """Incremental PAYLOAD ingest (r10): history (doc_id%3<2) persists a
+    """Incremental PAYLOAD ingest: history (doc_id%3<2) persists a
     payload-digest set and a composite block-key state; the arriving
     batch (the %3==2 slice, plus byte-exact re-uploads of the %10==7
     slice under +100000 ids and appended-tail variants of the %10==5
@@ -2479,34 +2444,11 @@ def mm_payload_ingest(spark, sf_dir) -> DataFrame:
     fraction >= 0.5) of history or of an already-admitted batch member.
     mis_max_iter=8 matches the oracle's unrolled greedy rounds."""
     from mongo_polars_reconciliation_spark.extensions.multimodal import (
-        attach_payload,
         ingest_novel_payloads,
         payload_block_state,
     )
-    from mongo_polars_reconciliation_spark.harness.fixtures import (
-        MM_PAYLOAD_TAIL,
-    )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    hist = attach_payload(docs.where(F.col("doc_id") % 3 < 2))
-    batch = attach_payload(
-        docs.where(F.col("doc_id") % 3 == 2)
-        .unionByName(
-            docs.where(F.col("doc_id") % 10 == 7).select(
-                (F.col("doc_id") + 100000).alias("doc_id"), "text"
-            )
-        )
-        .unionByName(
-            docs.where(F.col("doc_id") % 10 == 5).select(
-                (F.col("doc_id") + 300000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(MM_PAYLOAD_TAIL)).alias(
-                    "text"
-                ),
-            )
-        )
-    )
+    hist, batch = payload_ingest_split(spark, sf_dir)
     state_digests = hist.select(
         F.md5(
             F.coalesce(F.col("payload"), F.lit("").cast("binary"))
@@ -2599,24 +2541,8 @@ def stream_ingest_novel(spark, sf_dir) -> DataFrame:
     )
 
 
-def _pin_feed_trigger_order(feed: str) -> None:
-    """Pin micro-batch ORDER for an order-sensitive ingest stream: the file
-    source orders triggers by modification time, and the drained-≡-one-
-    batch contract of the ingest loops requires originals to precede the
-    synthetic redeliveries. Same-millisecond part writes would leave the
-    order to luck; a monotone utime per part makes it a fact."""
-    import glob as _glob
-    import os as _os
-    import time as _time
-
-    now = _time.time()
-    for i, part in enumerate(sorted(_glob.glob(f"{feed}/part*"))):
-        for f in _glob.glob(f"{part}/*.parquet"):
-            _os.utime(f, (now + 10 * i, now + 10 * i))
-
-
 def stream_ingest_neardup(spark, sf_dir) -> DataFrame:
-    """Streaming crawl loop (r9): the dedup_ingest_neardup batch arrives
+    """Streaming crawl loop: the dedup_ingest_neardup batch arrives
     as TWO micro-batches in id order (originals first, redelivered/
     variant synthetics second); each trigger runs the full near-dup
     admission against the seeded history state PLUS earlier triggers'
@@ -2632,25 +2558,7 @@ def stream_ingest_neardup(spark, sf_dir) -> DataFrame:
     )
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    hist = docs.where(F.col("doc_id") % 3 < 2)
-    near_text = F.expr("substring(text, instr(text, ' ') + 1)")
-    batch = (
-        docs.where(F.col("doc_id") % 3 == 2)
-        .unionByName(
-            docs.where(F.col("doc_id") % 10 == 7).select(
-                (F.col("doc_id") + 100000).alias("doc_id"), "text"
-            )
-        )
-        .unionByName(
-            docs.where(F.col("doc_id") % 10 == 3).select(
-                (F.col("doc_id") + 200000).alias("doc_id"),
-                near_text.alias("text"),
-            )
-        )
-    )
+    hist, batch = neardup_ingest_split(spark, sf_dir)
     # Eager-checkpoint every seed face: each is consumed once PER TRIGGER
     # inside foreachBatch, and the band-key seed is itself a whole
     # shingle→signature pipeline — without materialization each trigger
@@ -2675,7 +2583,6 @@ def stream_ingest_neardup(spark, sf_dir) -> DataFrame:
         name=f"neardup_{tag}",
         split_expr=(F.col("doc_id") >= 100000).cast("int"),
     )
-    _pin_feed_trigger_order(scratch_path("corpus", f"neardup_{tag}", "feed"))
     root = scratch_path(tag, "neardup_state")
     shutil.rmtree(root, ignore_errors=True)
     incremental_neardup_ingest(
@@ -2691,7 +2598,7 @@ def stream_ingest_neardup(spark, sf_dir) -> DataFrame:
 
 
 def stream_ingest_semantic(spark, sf_dir) -> DataFrame:
-    """Streaming embedding-space crawl loop (r10): the sim_ingest_semantic
+    """Streaming embedding-space crawl loop: the sim_ingest_semantic
     batch arrives as TWO micro-batches in id order (originals first,
     re-upload/variant synthetics second); each trigger runs the full
     semantic admission under the PERSISTED centroid artifact against the
@@ -2717,27 +2624,8 @@ def stream_ingest_semantic(spark, sf_dir) -> DataFrame:
     )
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    hist = emb.where(F.col("vec_id") % 3 < 2).localCheckpoint(eager=True)
-    batch = (
-        emb.where(F.col("vec_id") % 3 == 2)
-        .unionByName(
-            emb.where(F.col("vec_id") % 10 == 1).select(
-                (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
-            )
-        )
-        .unionByName(
-            emb.where(F.col("vec_id") % 10 == 4).select(
-                (F.col("vec_id") + 200000).alias("vec_id"),
-                F.expr(
-                    "transform(embedding, (x, i) -> CASE WHEN i < 8 "
-                    "THEN CAST(0.0 AS FLOAT) ELSE x END)"
-                ).alias("embedding"),
-            )
-        )
-    )
+    hist, batch = semantic_ingest_split(spark, sf_dir)
+    hist = hist.localCheckpoint(eager=True)
     cents = kmeans_fit(
         hist, k=MULTIPROBE_ORACLE_NLIST, n_iter=MULTIPROBE_ORACLE_N_ITER
     )
@@ -2755,7 +2643,6 @@ def stream_ingest_semantic(spark, sf_dir) -> DataFrame:
         id_col="vec_id",
         split_expr=(F.col("vec_id") >= 100000).cast("int"),
     )
-    _pin_feed_trigger_order(scratch_path("corpus", f"sem_ingest_{tag}", "feed"))
     root = scratch_path(tag, "sem_ingest_state")
     shutil.rmtree(root, ignore_errors=True)
     incremental_semantic_ingest(
@@ -2773,7 +2660,7 @@ def stream_ingest_semantic(spark, sf_dir) -> DataFrame:
 
 
 def stream_ingest_payloads(spark, sf_dir) -> DataFrame:
-    """Streaming binary-payload crawl loop (r10): the mm_payload_ingest
+    """Streaming binary-payload crawl loop: the mm_payload_ingest
     batch arrives as TWO micro-batches in id order (originals first,
     re-upload/appended-tail synthetics second); each trigger runs the
     full chunked-block admission against the seeded history state PLUS
@@ -2784,11 +2671,7 @@ def stream_ingest_payloads(spark, sf_dir) -> DataFrame:
     import shutil
 
     from mongo_polars_reconciliation_spark.extensions.multimodal import (
-        attach_payload,
         payload_block_state,
-    )
-    from mongo_polars_reconciliation_spark.harness.fixtures import (
-        MM_PAYLOAD_TAIL,
     )
     from mongo_polars_reconciliation_spark.streaming.corpus import (
         incremental_payload_ingest,
@@ -2796,28 +2679,8 @@ def stream_ingest_payloads(spark, sf_dir) -> DataFrame:
     )
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    hist = attach_payload(docs.where(F.col("doc_id") % 3 < 2)).localCheckpoint(
-        eager=True
-    )
-    batch = attach_payload(
-        docs.where(F.col("doc_id") % 3 == 2)
-        .unionByName(
-            docs.where(F.col("doc_id") % 10 == 7).select(
-                (F.col("doc_id") + 100000).alias("doc_id"), "text"
-            )
-        )
-        .unionByName(
-            docs.where(F.col("doc_id") % 10 == 5).select(
-                (F.col("doc_id") + 300000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(MM_PAYLOAD_TAIL)).alias(
-                    "text"
-                ),
-            )
-        )
-    ).select("doc_id", "payload")
+    hist, batch = payload_ingest_split(spark, sf_dir)
+    hist = hist.localCheckpoint(eager=True)
     seed_digests = hist.select(
         F.md5(
             F.coalesce(F.col("payload"), F.lit("").cast("binary"))
@@ -2828,13 +2691,10 @@ def stream_ingest_payloads(spark, sf_dir) -> DataFrame:
     )
     stream = read_documents_stream(
         spark,
-        batch.coalesce(1),
+        batch.select("doc_id", "payload").coalesce(1),
         name=f"payload_ingest_{tag}",
         n_files=2,
         split_expr=(F.col("doc_id") >= 100000).cast("int"),
-    )
-    _pin_feed_trigger_order(
-        scratch_path("corpus", f"payload_ingest_{tag}", "feed")
     )
     root = scratch_path(tag, "payload_ingest_state")
     shutil.rmtree(root, ignore_errors=True)

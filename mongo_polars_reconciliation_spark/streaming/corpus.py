@@ -1,25 +1,57 @@
-"""Streaming corpus ingestion: exact dedup as a native streaming aggregation.
+"""Streaming corpus ingestion.
 
-The batch face of exact dedup (extensions/dedup.py:exact_dedup_groups) is one
-hash-groupBy on a text digest. Documents arriving as a stream (a crawler, a
-drop-folder of dumps) need the SAME contract — one row per distinct text with
-the deterministic keeper — maintained incrementally across micro-batches.
-Because min and count are commutative streaming aggregates, Structured
-Streaming's aggregation state store computes exactly the batch answer
-whatever the arrival order: the drained result is bit-identical to
-``dedup_exact`` and shares its oracle.
+Two kinds of streaming face live here.
 
-Scale posture: aggregation state is one row per distinct text hash (the
-deduped corpus size, not the arrival count), partitioned by the hash — the
-same key the batch groupBy shuffles on. Complete-mode emission to the memory
-sink is the bounded-drain test harness; a production sink would run update
-mode into an upsert store (sources/state.py:upsert_state_table).
+**Native streaming aggregations** (``dedup_state``, ``cms_counter_state``,
+``datacard_stream_state``, ``ingest_novel_state``): the batch operator's
+state is a commutative aggregate (min, count, sums), so Structured
+Streaming's state store computes exactly the batch answer whatever the
+arrival order or micro-batch split, and the drained result shares the
+batch face's oracle. State is one row per aggregate key (distinct text
+hash, sketch counter, datacard group), partitioned by that key.
+
+**The crawl loop** (``incremental_neardup_ingest``,
+``incremental_semantic_ingest``, ``incremental_payload_ingest``): the
+reference's ingest loop (``second_conciliate.py:420-447``: read the
+persisted state, admit only novel rows, append) as a ``foreachBatch``
+stream, written once in ``_crawl_loop``. Each family is an admission
+operator plus its list of state faces, each face a parquet dir under
+``state_root``, in write order. Per trigger:
+
+- every face is read as its seed frame unioned with its dir, when the dir
+  holds files — so trigger N+1's horizon includes trigger N's admissions,
+  as successive dumps meet a growing corpus;
+- the family's batch admission operator runs against those faces;
+- the admitted ids and the admitted batch rows are eager-checkpointed, so
+  every append reads one materialized answer;
+- the pre-ledger faces are appended (overlapped), then the ledger face —
+  the last in the list — strictly after them.
+
+Crash safety follows from the write order. A crash after some pre-ledger
+appends leaves the ledger short, so the replayed trigger re-derives the
+same admissions and appends them again; a crash after the ledger append
+means the replay admits nothing, and every face is already complete.
+The duplicate and ghost state rows a replay leaves are harmless by
+construction of the admission operators: the text and payload operators filter the
+self-pairs a replayed row forms with its own ghost and dedup state rows
+after their candidate semi-join, and the semantic store is reached only
+through its assign/ ledger. The crash-window tests in
+tests/test_properties.py and tests/test_streaming.py pin this. A
+transactional sink would put all faces in one commit; until then this
+order makes every crash window replay-idempotent.
+
+The per-trigger plan is the batch engine's (swept by the batch plan
+sweep); ``drain`` records the stream side in ``LAST_PLANS``. The
+compactors (``compact_*_state``) rewrite a loop's append-only dirs into
+the bucketed tables the batch wave path reads.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,18 +80,13 @@ def read_documents_stream(
     feed = scratch_path("corpus", name, "feed")
     shutil.rmtree(feed, ignore_errors=True)
     os.makedirs(feed)
-    # the per-part feed writes are independent (disjoint dirs, same
-    # read-only source) — overlap them on a small driver pool (r16,
-    # guide §2.6). The file source orders triggers by modification time,
-    # and sequential writes used to give part i an earlier mtime than
-    # part i+1 implicitly; with overlapped writes that guarantee must be
-    # made explicit, so the mtimes are pinned monotone per part AFTER
-    # the writes — the same discipline the order-sensitive harness
-    # queries already apply on top (their re-pin is now redundant but
-    # harmless).
+    # the per-part writes are independent (disjoint dirs, one read-only
+    # source), so they overlap. The file source orders triggers by
+    # modification time, so after the writes every file of part i gets an
+    # mtime strictly below every file of part i+1: trigger order is part
+    # order, which the order-sensitive crawl loops rely on.
     import glob as _glob
     import time as _time
-    from concurrent.futures import ThreadPoolExecutor
 
     def _write_part(i: int) -> None:
         docs.where(split_expr == i).write.mode("overwrite").parquet(
@@ -188,6 +215,65 @@ def datacard_stream_state(
     )
 
 
+def _crawl_loop(
+    stream: DataFrame,
+    faces: "list[tuple[str, DataFrame, Callable]]",
+    admit: "Callable[[DataFrame, dict[str, DataFrame]], DataFrame]",
+    row_cols: "tuple[str, ...]", state_root: str, checkpoint_dir: str,
+    plan_name: str, id_col: str, digest_ledger: bool = True,
+) -> None:
+    """Drain ``stream`` through the crawl loop (module docstring).
+
+    ``faces`` lists ``(name, seed, rows)`` in write order, the last being
+    the ledger. Per trigger, face ``name`` is read as ``seed`` unioned
+    with the ``state_root/name`` dir (projected to ``seed``'s columns)
+    when that dir holds files, a ``digest_ledger`` then DISTINCTed;
+    ``admit(batch, {name: face})`` gives the admitted ids; the ids and
+    the admitted batch rows (``id_col`` + ``row_cols``) are
+    eager-checkpointed; ``rows(admitted, admitted_rows)`` is appended to
+    every face but the ledger on a 2-thread pool, then to the ledger.
+    The executed plan lands in ``LAST_PLANS[plan_name]``."""
+    from mongo_polars_reconciliation_spark.streaming.recon import (
+        _has_state_files,
+    )
+
+    spark = stream.sparkSession
+    ledger = faces[-1][0]
+
+    def read(name: str, seed: DataFrame) -> DataFrame:
+        path = f"{state_root}/{name}"
+        if not _has_state_files(spark, path):
+            return seed
+        df = seed.unionByName(spark.read.parquet(path).select(*seed.columns))
+        return df.distinct() if digest_ledger and name == ledger else df
+
+    def process(batch: DataFrame, epoch_id: int) -> None:
+        state = {name: read(name, seed) for name, seed, _ in faces}
+        admitted = admit(batch, state).localCheckpoint(eager=True)
+        adm_rows = batch.select(id_col, *row_cols).join(
+            admitted.select(id_col), id_col
+        ).localCheckpoint(eager=True)
+
+        def append(face) -> None:
+            name, _, rows = face
+            rows(admitted, adm_rows).write.mode("append").parquet(
+                f"{state_root}/{name}"
+            )
+
+        # the pre-ledger appends read only the two checkpoints and land in
+        # disjoint dirs, so they overlap; the ledger waits for all of them
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            list(pool.map(append, faces[:-1]))
+        append(faces[-1])
+
+    drain(
+        stream.writeStream.foreachBatch(process).option(
+            "checkpointLocation", checkpoint_dir
+        ),
+        plan_name,
+    )
+
+
 def incremental_neardup_ingest(
     docs_stream: DataFrame,
     seed_digests: DataFrame,
@@ -199,109 +285,46 @@ def incremental_neardup_ingest(
     text_col: str = "text",
     **neardup_kwargs,
 ) -> None:
-    """The FULL crawl loop as a stream: each arriving micro-batch of
-    documents runs the batch near-dup admission operator
-    (extensions/dedup.py:ingest_novel_neardup) against the seed state
-    PLUS everything admitted by earlier micro-batches, then appends its
-    admitted docs to all three state faces under ``state_root``
-    (admitted/ = (id, text_hash) ledger, bands/ = their band-key rows,
-    docs/ = the admitted documents) — so batch N+1's dedup horizon
-    includes batch N, exactly like successive dumps against a growing
-    corpus.
+    """The text crawl loop: each trigger runs
+    ``extensions/dedup.py:ingest_novel_neardup`` against the seeds plus
+    every earlier admission, then appends bands/ (the admitted docs'
+    band keys), docs/ (the admitted docs) and, last, the admitted/
+    (id, text_hash) ledger.
 
-    Equivalence contract (what the oracle checks): when micro-batch
-    arrival order respects id order, the drained admitted set equals the
-    ONE-batch admission of the concatenated stream — the greedy
-    batch-split property pinned in tests/test_properties.py. Exactly-once
-    posture: the admitted/ digest ledger is written LAST —
-    a crash between the bands/docs writes and the ledger write means the
-    replayed trigger re-derives the SAME admitted set (the state digests
-    it anti-joins are unchanged; the operator filters the self-pairs and
-    double-counted shingles its own ghost rows would otherwise create —
-    the crash-window pins in tests/test_properties.py) and re-appends
-    bands/docs, leaving duplicate rows there; ``ingest_novel_neardup``
-    tolerates duplicate state rows by construction (bands feed a DISTINCT
-    candidate set, docs are deduped after the candidate semi-join), so
-    the blind spot the old ledger-first order created (replay admits
-    nothing → bands/docs never backfilled → permanent near-dup hole)
-    cannot occur. A production transactional sink (sources/state.py
-    capability gate) would put all three faces in one transaction; until
-    then this ordering makes every crash window replay-idempotent rather
-    than merely the ledger.
+    Equivalence contract (what the oracle checks): when trigger order
+    respects id order, the drained admitted set equals the one-batch
+    admission of the concatenated stream — the greedy batch-split
+    property pinned in tests/test_properties.py.
 
-    ``neardup_kwargs`` are forwarded BOTH to the admission operator and
-    to the ``band_state`` rows persisted for admitted docs: the MinHash
-    geometry — n/num_hashes/bands — must match between the state being
-    probed and the state being appended, or later triggers silently miss
-    near-dups of earlier admissions.
-
-    Like ``incremental_match``, the per-batch plan is the batch engine's
-    (swept by the batch plan sweep); this captures the stream side."""
+    ``neardup_kwargs`` go both to the admission operator and to the
+    ``band_state`` rows appended for admitted docs: the MinHash geometry
+    (n/num_hashes/bands) must match between the state probed and the
+    state appended, or later triggers silently miss near-dups of earlier
+    admissions."""
     from mongo_polars_reconciliation_spark.extensions.dedup import (
         band_state,
         ingest_novel_neardup,
     )
-    from mongo_polars_reconciliation_spark.streaming.recon import (
-        _has_state_files,
-    )
 
-    spark = seed_docs.sparkSession
-    adm_dir = f"{state_root}/admitted"
-    bands_dir = f"{state_root}/bands"
-    docs_dir = f"{state_root}/docs"
-    # the band-state geometry MUST match the admission join's keys —
-    # these kwargs are the shared subset of the two signatures
+    # the shared subset of the admission and band_state signatures
     band_kwargs = {
         k: v
         for k, v in neardup_kwargs.items()
         if k in ("n", "num_hashes", "bands")
     }
-
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        digests = seed_digests.select("text_hash")
-        bands = seed_bands.select("bband", id_col)
-        corpus = seed_docs.select(id_col, text_col)
-        if _has_state_files(spark, adm_dir):
-            digests = digests.unionByName(
-                spark.read.parquet(adm_dir).select("text_hash")
-            ).distinct()
-            bands = bands.unionByName(spark.read.parquet(bands_dir))
-            corpus = corpus.unionByName(spark.read.parquet(docs_dir))
-        admitted = ingest_novel_neardup(
-            batch, digests, bands, corpus,
+    faces = [
+        ("bands", seed_bands.select("bband", id_col),
+         lambda adm, rows: band_state(rows, id_col, text_col, **band_kwargs)),
+        ("docs", seed_docs.select(id_col, text_col), lambda adm, rows: rows),
+        ("admitted", seed_digests.select("text_hash"), lambda adm, rows: adm),
+    ]
+    _crawl_loop(
+        docs_stream, faces,
+        lambda batch, st: ingest_novel_neardup(
+            batch, st["admitted"], st["bands"], st["docs"],
             id_col=id_col, text_col=text_col, **neardup_kwargs,
-        ).localCheckpoint(eager=True)
-        adm_docs = batch.select(id_col, text_col).join(
-            admitted.select(id_col), id_col
-        ).localCheckpoint(eager=True)
-        # bands + docs BEFORE the admitted/ ledger (see docstring): a crash
-        # anywhere in this window leaves the digest ledger short, so the
-        # replayed trigger re-derives the same admissions and the duplicate
-        # band/doc appends are tolerated downstream. The two PRE-ledger
-        # writes are mutually independent (both read the eager adm_docs
-        # checkpoint, land in disjoint dirs) and unordered within the
-        # crash window, so they overlap on a 2-thread pool (r16, guide
-        # §2.6); only the ledger write must come strictly after both.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f1 = pool.submit(
-                lambda: band_state(adm_docs, id_col, text_col, **band_kwargs)
-                .write.mode("append")
-                .parquet(bands_dir)
-            )
-            f2 = pool.submit(
-                lambda: adm_docs.write.mode("append").parquet(docs_dir)
-            )
-            f1.result()
-            f2.result()
-        admitted.write.mode("append").parquet(adm_dir)
-
-    drain(
-        docs_stream.writeStream.foreachBatch(process).option(
-            "checkpointLocation", checkpoint_dir
         ),
-        "incremental_neardup",
+        (text_col,), state_root, checkpoint_dir, "incremental_neardup", id_col,
     )
 
 
@@ -318,70 +341,43 @@ def incremental_semantic_ingest(
     vec_col: str = "embedding",
     mis_max_iter: int = 25,
 ) -> None:
-    """The embedding-space crawl loop as a stream (r10) — the vector face
-    of :func:`incremental_neardup_ingest`: each arriving micro-batch of
-    vectors runs the batch semantic admission
-    (extensions/similarity.py:ingest_novel_semantic) under the PERSISTED
-    centroid artifact against the seed state PLUS everything admitted by
-    earlier triggers, then appends the admitted vectors to both state
-    faces under ``state_root`` (vecs/ = the vector store, assign/ =
-    their probe-assignment rows).
+    """The embedding crawl loop: each trigger runs
+    ``extensions/similarity.py:ingest_novel_semantic`` under the persisted
+    centroid artifact against the seeds plus every earlier admission,
+    then appends vecs/ (the admitted vectors) and, last, assign/ (their
+    probe-assignment rows).
 
     ``cents`` and ``nprobe`` are shared between the admission join and
-    the appended :func:`assignment_state` rows — the MinHash-geometry
-    lesson applied to probe keys: a per-trigger refit (or a different
-    nprobe) would make later triggers probe the accumulated state with
-    mismatched blocks and silently miss semantic dups of earlier
-    admissions.
+    the appended :func:`assignment_state` rows: a per-trigger refit (or a
+    different nprobe) would make later triggers probe the accumulated
+    state with mismatched blocks and silently miss semantic dups of
+    earlier admissions.
 
-    Exactly-once posture: the semantic family has NO separate ledger
-    face — an admitted vector's own (assign, vecs) rows ARE its ledger,
-    because a redelivered copy meets itself at cos 1.0 and is dropped.
-    Write order vecs/ THEN assign/: a crash after vecs/ leaves the
-    ghosts unreachable (the store is only read through the assignment
-    collision semi-join), so the replayed trigger re-derives the same
-    admissions and re-appends — duplicate rows are deduped after the
-    semi-join; a crash after both faces means the replay admits nothing
-    and the faces are already complete. Both windows pinned in
-    tests/test_properties.py; the drained admitted set is read from the
-    vecs/ face, so every window drains to the same answer."""
+    This family has no digest ledger: an admitted vector's own assign/
+    rows are its ledger entry, because a redelivered copy meets itself at
+    cos 1.0 and is dropped. Ghost vecs/ rows from a crash before the
+    assign/ append are unreachable (the store is read only through the
+    assignment collision semi-join). The drained admitted set is read
+    from vecs/."""
     from mongo_polars_reconciliation_spark.extensions.similarity import (
         assignment_state,
         ingest_novel_semantic,
     )
-    from mongo_polars_reconciliation_spark.streaming.recon import (
-        _has_state_files,
-    )
 
-    spark = seed_vecs.sparkSession
-    vecs_dir = f"{state_root}/vecs"
-    assign_dir = f"{state_root}/assign"
-
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        assign = seed_assign.select("blk", id_col)
-        vecs = seed_vecs.select(id_col, vec_col)
-        if _has_state_files(spark, vecs_dir):
-            vecs = vecs.unionByName(spark.read.parquet(vecs_dir))
-        if _has_state_files(spark, assign_dir):
-            assign = assign.unionByName(spark.read.parquet(assign_dir))
-        admitted = ingest_novel_semantic(
-            batch, assign, vecs, cents,
+    faces = [
+        ("vecs", seed_vecs.select(id_col, vec_col), lambda adm, rows: rows),
+        ("assign", seed_assign.select("blk", id_col),
+         lambda adm, rows: assignment_state(rows, cents, nprobe, id_col, vec_col)),
+    ]
+    _crawl_loop(
+        vecs_stream, faces,
+        lambda batch, st: ingest_novel_semantic(
+            batch, st["assign"], st["vecs"], cents,
             threshold=threshold, nprobe=nprobe,
             id_col=id_col, vec_col=vec_col, mis_max_iter=mis_max_iter,
-        ).localCheckpoint(eager=True)
-        adm_vecs = batch.select(id_col, vec_col).join(
-            admitted, id_col
-        ).localCheckpoint(eager=True)
-        adm_vecs.write.mode("append").parquet(vecs_dir)
-        assignment_state(
-            adm_vecs, cents, nprobe, id_col, vec_col
-        ).write.mode("append").parquet(assign_dir)
-
-    drain(
-        vecs_stream.writeStream.foreachBatch(process).option(
-            "checkpointLocation", checkpoint_dir
         ),
-        "incremental_semantic",
+        (vec_col,), state_root, checkpoint_dir, "incremental_semantic", id_col,
+        digest_ledger=False,
     )
 
 
@@ -398,59 +394,34 @@ def incremental_payload_ingest(
     max_bucket_size: "int | None" = None,
     mis_max_iter: int = 25,
 ) -> None:
-    """The binary-payload crawl loop as a stream (r10): each arriving
-    micro-batch of payloads runs the batch admission
-    (extensions/multimodal.py:ingest_novel_payloads) against the seed
-    state PLUS everything admitted by earlier triggers, then appends the
-    admitted payloads' block-key rows to blocks/ and their (id,
-    payload_hash) rows to the admitted/ digest ledger — blocks BEFORE
-    the ledger, the text loop's write order: a crash in the window means
-    the replayed trigger re-derives the SAME admissions (digests
-    unchanged; the operator filters the self-pairs its ghost block rows
-    would create — the crash-window pin in tests/test_properties.py) and
-    re-appends, with duplicate block rows deduped after the candidate
-    semi-join. ``block_bytes`` is shared between the admission join and
-    the appended :func:`payload_block_state` rows — mismatched chunk
+    """The binary-payload crawl loop: each trigger runs
+    ``extensions/multimodal.py:ingest_novel_payloads`` against the seeds
+    plus every earlier admission, then appends blocks/ (the admitted
+    payloads' block keys) and, last, the admitted/ (id, payload_hash)
+    ledger. ``block_bytes`` is shared between the admission join and the
+    appended :func:`payload_block_state` rows — a mismatched chunk
     geometry would make later triggers probe with foreign keys."""
     from mongo_polars_reconciliation_spark.extensions.multimodal import (
         ingest_novel_payloads,
         payload_block_state,
     )
-    from mongo_polars_reconciliation_spark.streaming.recon import (
-        _has_state_files,
-    )
 
-    spark = seed_digests.sparkSession
-    adm_dir = f"{state_root}/admitted"
-    blocks_dir = f"{state_root}/blocks"
-
-    def process(batch: DataFrame, epoch_id: int) -> None:
-        digests = seed_digests.select("payload_hash")
-        blocks = seed_blocks.select("bblock", id_col, "n_blocks")
-        if _has_state_files(spark, adm_dir):
-            digests = digests.unionByName(
-                spark.read.parquet(adm_dir).select("payload_hash")
-            ).distinct()
-            blocks = blocks.unionByName(spark.read.parquet(blocks_dir))
-        admitted = ingest_novel_payloads(
-            batch, digests, blocks,
+    faces = [
+        ("blocks", seed_blocks.select("bblock", id_col, "n_blocks"),
+         lambda adm, rows: payload_block_state(
+             rows, block_bytes, id_col, payload_col
+         )),
+        ("admitted", seed_digests.select("payload_hash"), lambda adm, rows: adm),
+    ]
+    _crawl_loop(
+        mm_stream, faces,
+        lambda batch, st: ingest_novel_payloads(
+            batch, st["admitted"], st["blocks"],
             block_bytes=block_bytes, threshold=threshold,
             id_col=id_col, payload_col=payload_col,
             max_bucket_size=max_bucket_size, mis_max_iter=mis_max_iter,
-        ).localCheckpoint(eager=True)
-        adm_mm = batch.select(id_col, payload_col).join(
-            admitted.select(id_col), id_col
-        ).localCheckpoint(eager=True)
-        payload_block_state(
-            adm_mm, block_bytes, id_col, payload_col
-        ).write.mode("append").parquet(blocks_dir)
-        admitted.write.mode("append").parquet(adm_dir)
-
-    drain(
-        mm_stream.writeStream.foreachBatch(process).option(
-            "checkpointLocation", checkpoint_dir
         ),
-        "incremental_payload",
+        (payload_col,), state_root, checkpoint_dir, "incremental_payload", id_col,
     )
 
 
@@ -462,7 +433,7 @@ def compact_ingest_state(
     id_col: str = "doc_id",
 ) -> "dict[str, str]":
     """Compact the crawl loop's append-only state dirs into the BUCKETED
-    tables the admission joins want (r9): ``incremental_neardup_ingest``
+    tables the admission joins want: ``incremental_neardup_ingest``
     appends one parquet fragment per micro-batch to admitted/ bands/
     docs/ — correct, but after N triggers each is N small fragments and
     every anti-join reshuffles the whole accumulated state. This rewrite
@@ -477,7 +448,7 @@ def compact_ingest_state(
     re-delivered batch admits nothing whether it reads the fragments or
     the compacted tables (pinned in tests/test_streaming.py).
 
-    Consumers (r10, advice): the compacted tables feed the BATCH wave
+    Consumers: the compacted tables feed the BATCH wave
     path — ``spark.table(out['digests'])`` etc. straight into
     ``ingest_novel_neardup`` (the ``dedup_ingest_waves`` query is exactly
     wave → compact → wave, with the wave-2 plan pinned exchange-free on
@@ -485,10 +456,6 @@ def compact_ingest_state(
     ``state_root`` parquet DIRS, not these tables — to resume the
     streaming loop after a compaction, seed a fresh ``state_root`` from
     the tables (or pass them as the seed_* frames of a new loop)."""
-    from mongo_polars_reconciliation_spark.sources.state import (
-        write_bucketed_state,
-    )
-
     faces = {
         "digests": (f"{state_root}/admitted", "text_hash"),
         "bands": (f"{state_root}/bands", "bband"),
@@ -511,7 +478,7 @@ def compact_semantic_state(
     id_col: str = "vec_id",
 ) -> "dict[str, str]":
     """:func:`compact_ingest_state` for the embedding-space crawl loop's
-    faces (r10): ``incremental_semantic_ingest`` appends one fragment per
+    faces: ``incremental_semantic_ingest`` appends one fragment per
     trigger to vecs/ and assign/; this rewrite lands the vector store
     bucketed by the id (the collision verify's semi-join key) and the
     assignment rows by blk (the collision join's key), and drops the
@@ -541,7 +508,7 @@ def compact_payload_state(
     id_col: str = "doc_id",
 ) -> "dict[str, str]":
     """:func:`compact_ingest_state` for the binary-payload crawl loop's
-    faces (r10): the (doc_id, payload_hash) ledger bucketed by
+    faces: the (doc_id, payload_hash) ledger bucketed by
     payload_hash (the digest anti-join's key) and the block rows by
     bblock (the collision join's key), crash-replay duplicates dropped.
     Same consumer routing as the text compactor."""
@@ -576,7 +543,7 @@ def _compact_faces(
 
     # the stale-location cleanup below shells out to the local filesystem —
     # loudly refuse a non-local warehouse URI instead of rmtree'ing a
-    # stripped-scheme path that doesn't mean what it says (r10, advice)
+    # stripped-scheme path that doesn't mean what it says
     wh_uri = spark.conf.get("spark.sql.warehouse.dir")
     if not (wh_uri.startswith("file:") or wh_uri.startswith("/")):
         raise ValueError(
@@ -602,10 +569,8 @@ def _compact_faces(
         return face, table
 
     # face rewrites are independent (distinct tables, distinct source
-    # dirs) — overlap them on a small driver pool (r16, guide §2.6) so
-    # one face's write tail back-fills with the next face's scan
-    from concurrent.futures import ThreadPoolExecutor
-
+    # dirs) — overlap them on a small driver pool so one face's write
+    # tail back-fills with the next face's scan
     with ThreadPoolExecutor(max_workers=2) as pool:
         return dict(pool.map(_compact_one, faces.items()))
 

@@ -56,31 +56,26 @@ def _stored_events_schema(spark: SparkSession, path: str) -> StructType:
     return spark.read.parquet(path).schema
 
 
-def read_events_stream(
+def _events_feed_stream(
     spark: SparkSession,
     sf_dir: str,
-    name: str = "events",
-    with_sentinel: bool = False,
+    name: str,
+    copies: int,
+    with_sentinel: bool,
+    file_per_trigger: bool,
 ) -> DataFrame:
-    """File-source stream over the events table, ``ts`` normalized to the
-    engine's epoch-nanos BIGINT whatever the file's physical type (see
-    functions/timenorm.py). The file stream source needs a *directory*, so
-    the table file is symlinked into a private feed dir (a live pipeline
-    points this at an arriving-files dir or Kafka).
-
-    ``with_sentinel`` appends one far-future event (user ``SENTINEL_USER``):
-    on a bounded stream, append-mode aggregations only emit once the
-    watermark passes a window's end, and the watermark only moves when later
-    events arrive — the sentinel plus Spark's final no-data micro-batch
-    pushes the watermark past every real window so the drained stream equals
-    the batch answer. Callers filter ``user_id != SENTINEL_USER``."""
+    """The events table symlinked ``copies`` times into a fresh private
+    feed dir (the file stream source needs a *directory*), read as a file
+    stream under the table's stored schema with ``ts`` normalized to the
+    engine's epoch-nanos BIGINT (functions/timenorm.py).
+    ``with_sentinel`` adds one far-future event (``read_events_stream``);
+    ``file_per_trigger`` delivers one feed file per micro-batch."""
     import os
     import shutil
 
     from mongo_polars_reconciliation_spark.functions.timenorm import (
         ensure_epoch_nanos,
     )
-
     from mongo_polars_reconciliation_spark.scratch import scratch_path
 
     src_path = f"{sf_dir}/events.parquet"
@@ -89,7 +84,8 @@ def read_events_stream(
     feed = scratch_path(tag, name, "feed")
     shutil.rmtree(feed, ignore_errors=True)
     os.makedirs(feed)
-    os.symlink(src_path, f"{feed}/000_events.parquet")
+    for i in range(copies):
+        os.symlink(src_path, f"{feed}/{i:03d}_events.parquet")
     if with_sentinel:
         # Far-future row in the FILE's native ts type (mixing physical types
         # across feed files under one declared schema is exactly the silent
@@ -114,9 +110,31 @@ def read_events_stream(
             F.lit(0.0).alias("value"),
             F.lit("").alias("props"),
         ).write.mode("overwrite").parquet(f"{feed}/zzz_sentinel.parquet")
-    return ensure_epoch_nanos(
-        spark.readStream.schema(stored).parquet(f"{feed}/*.parquet")
-    )
+    reader = spark.readStream.schema(stored)
+    if file_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", "1")
+    return ensure_epoch_nanos(reader.parquet(f"{feed}/*.parquet"))
+
+
+def read_events_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str = "events",
+    with_sentinel: bool = False,
+) -> DataFrame:
+    """File-source stream over the events table, ``ts`` normalized to the
+    engine's epoch-nanos BIGINT whatever the file's physical type (see
+    functions/timenorm.py). The file stream source needs a *directory*, so
+    the table file is symlinked into a private feed dir (a live pipeline
+    points this at an arriving-files dir or Kafka).
+
+    ``with_sentinel`` appends one far-future event (user ``SENTINEL_USER``):
+    on a bounded stream, append-mode aggregations only emit once the
+    watermark passes a window's end, and the watermark only moves when later
+    events arrive — the sentinel plus Spark's final no-data micro-batch
+    pushes the watermark past every real window so the drained stream equals
+    the batch answer. Callers filter ``user_id != SENTINEL_USER``."""
+    return _events_feed_stream(spark, sf_dir, name, 1, with_sentinel, False)
 
 
 def read_events_stream_duplicated(
@@ -128,28 +146,7 @@ def read_events_stream_duplicated(
     """Same file stream, but the table arrives ``copies`` times (separate
     files → separate micro-batches with maxFilesPerTrigger=1) — the at-least-
     once delivery shape that streaming dedup exists to absorb."""
-    import os
-    import shutil
-
-    from mongo_polars_reconciliation_spark.functions.timenorm import (
-        ensure_epoch_nanos,
-    )
-
-    from mongo_polars_reconciliation_spark.scratch import scratch_path
-
-    src_path = f"{sf_dir}/events.parquet"
-    stored = _stored_events_schema(spark, src_path)
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    feed = scratch_path(tag, name, "feed")
-    shutil.rmtree(feed, ignore_errors=True)
-    os.makedirs(feed)
-    for i in range(copies):
-        os.symlink(src_path, f"{feed}/{i:03d}_events.parquet")
-    return ensure_epoch_nanos(
-        spark.readStream.schema(stored)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{feed}/*.parquet")
-    )
+    return _events_feed_stream(spark, sf_dir, name, copies, False, True)
 
 
 def stream_dedup(events: DataFrame, watermark: str = "2 hours") -> DataFrame:

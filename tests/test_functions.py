@@ -12,7 +12,7 @@ from mongo_polars_reconciliation_spark.functions import (
 def test_prefix_sum_scalable_matches_window(spark):
     df = spark.range(0, 500).selectExpr("id", "(id % 13) + 1 as v")
     scal = rows(
-        with_prefix_sum(df, ["id"], "v", scalable=True, num_partitions=8),
+        with_prefix_sum(df, ["id"], "v", scalable=True),
         "id",
         "prefix_sum",
     )
@@ -58,7 +58,7 @@ def test_salted_two_stage_agg_matches_plain(spark):
 
 def test_file_row_number_contiguous(spark):
     df = spark.range(0, 1000).selectExpr("id", "id % 7 as grp")
-    out = with_file_row_number(df, ["id"], num_partitions=8)
+    out = with_file_row_number(df, ["id"])
     got = rows(out, "id", "file_row_number")
     assert got == [(i, i + 1) for i in range(1000)]
     assert dict(out.dtypes)["file_row_number"] == "bigint"

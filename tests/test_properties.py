@@ -1387,26 +1387,11 @@ def test_sample_shortfall_audit_flags_tight_prefilter(spark):
 def _neardup_fixture(spark, sf_dir="/root/testdata/sf0.001"):
     """The dedup_ingest_neardup query's (hist, batch, digest-state) shapes."""
     from mongo_polars_reconciliation_spark.extensions.dedup import band_state
+    from mongo_polars_reconciliation_spark.harness.fixtures import (
+        neardup_ingest_split,
+    )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    hist = docs.where(F.col("doc_id") % 3 < 2)
-    near_text = F.expr("substring(text, instr(text, ' ') + 1)")
-    batch = (
-        docs.where(F.col("doc_id") % 3 == 2)
-        .unionByName(
-            docs.where(F.col("doc_id") % 10 == 7).select(
-                (F.col("doc_id") + 100000).alias("doc_id"), "text"
-            )
-        )
-        .unionByName(
-            docs.where(F.col("doc_id") % 10 == 3).select(
-                (F.col("doc_id") + 200000).alias("doc_id"),
-                near_text.alias("text"),
-            )
-        )
-    )
+    hist, batch = neardup_ingest_split(spark, sf_dir)
     digests = hist.select(
         F.md5(F.coalesce(F.col("text"), F.lit("")).cast("binary")).alias(
             "text_hash"
@@ -3257,28 +3242,11 @@ def _semantic_fixture(spark, sf_dir="/root/testdata/sf0.001"):
         assignment_state,
         kmeans_fit,
     )
+    from mongo_polars_reconciliation_spark.harness.fixtures import (
+        semantic_ingest_split,
+    )
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    hist = emb.where(F.col("vec_id") % 3 < 2)
-    batch = (
-        emb.where(F.col("vec_id") % 3 == 2)
-        .unionByName(
-            emb.where(F.col("vec_id") % 10 == 1).select(
-                (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
-            )
-        )
-        .unionByName(
-            emb.where(F.col("vec_id") % 10 == 4).select(
-                (F.col("vec_id") + 200000).alias("vec_id"),
-                F.expr(
-                    "transform(embedding, (x, i) -> CASE WHEN i < 8 "
-                    "THEN CAST(0.0 AS FLOAT) ELSE x END)"
-                ).alias("embedding"),
-            )
-        )
-    )
+    hist, batch = semantic_ingest_split(spark, sf_dir)
     cents = kmeans_fit(hist, k=32, n_iter=1)
     return hist, batch, cents, assignment_state(hist, cents, nprobe=2)
 
@@ -3371,33 +3339,13 @@ def _payload_fixture(spark, sf_dir="/root/testdata/sf0.001"):
     payload ingest properties — the mm_payload_ingest fixture shapes
     (byte-exact re-uploads + appended-tail variants, 64-byte blocks)."""
     from mongo_polars_reconciliation_spark.extensions.multimodal import (
-        attach_payload,
         payload_block_state,
     )
     from mongo_polars_reconciliation_spark.harness.fixtures import (
-        MM_PAYLOAD_TAIL,
+        payload_ingest_split,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    hist = attach_payload(docs.where(F.col("doc_id") % 3 < 2))
-    batch = attach_payload(
-        docs.where(F.col("doc_id") % 3 == 2)
-        .unionByName(
-            docs.where(F.col("doc_id") % 10 == 7).select(
-                (F.col("doc_id") + 100000).alias("doc_id"), "text"
-            )
-        )
-        .unionByName(
-            docs.where(F.col("doc_id") % 10 == 5).select(
-                (F.col("doc_id") + 300000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(MM_PAYLOAD_TAIL)).alias(
-                    "text"
-                ),
-            )
-        )
-    )
+    hist, batch = payload_ingest_split(spark, sf_dir)
     digests = hist.select(
         F.md5(F.col("payload")).alias("payload_hash")
     ).distinct()
@@ -4652,13 +4600,48 @@ def test_single_query_search_keeps_null_embedding_score(spark, name):
     """The dimension guard fires only on a non-NULL embedding of the wrong
     length: a well-formed query ranks the 4-d rows, and a NULL embedding
     row keeps its NULL score. (The probes that run the assignment kernel
-    over every row do not take NULL vectors at all.)"""
+    over every row reject a NULL vector: see the next test.)"""
     emb = spark.createDataFrame(
         _DIM_EMB + [(5, None)], "vec_id long, embedding array<float>"
     )
     rows = _dim_probe(name, emb, [1.0, 0.0, 0.0, 0.0]).collect()
     assert [r["vec_id"] for r in rows][:2] == [1, 2]
     assert all(r["cos_r"] is None for r in rows if r["vec_id"] == 5)
+
+
+@pytest.mark.parametrize(
+    "rows, message",
+    [
+        (
+            [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, None)],
+            "array argument 0 holds a NULL row (row lengths seen: [2])",
+        ),
+        (
+            [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0])],
+            "array argument 0 holds rows of different lengths "
+            "(row lengths seen: [1, 2])",
+        ),
+        # alone in its batch a short row stacks cleanly: only the kernel
+        # can see that it does not match the centroids
+        ([(3, [1.0])], "vector dim 1 != centroid dim 2"),
+    ],
+)
+def test_assignment_kernel_names_null_or_ragged_embedding(spark, rows, message):
+    """A NULL embedding, or one of another length, fails the assignment
+    kernel with an error naming the problem and the row lengths seen, not
+    numpy's opaque stack error or an assignment by a partial distance.
+    One partition puts the rows in one Arrow batch."""
+    import re
+
+    from mongo_polars_reconciliation_spark.extensions.similarity import (
+        probe_assignments,
+    )
+
+    emb = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>"
+    ).coalesce(1)
+    with pytest.raises(Exception, match=re.escape(message)):
+        probe_assignments(emb, [[1.0, 0.0], [0.0, 1.0]], nprobe=1).collect()
 
 
 @pytest.mark.parametrize(

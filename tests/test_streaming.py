@@ -251,27 +251,12 @@ def test_compact_ingest_state_closes_the_loop(spark):
         == admitted.select("text_hash").distinct().count()
     )
     # the full admission horizon = seeds + compacted state; re-deliver
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    hist = docs.where(F.col("doc_id") % 3 < 2)
-    near_text = F.expr("substring(text, instr(text, ' ') + 1)")
-    batch = (
-        docs.where(F.col("doc_id") % 3 == 2)
-        .unionByName(
-            docs.where(F.col("doc_id") % 10 == 7).select(
-                (F.col("doc_id") + 100000).alias("doc_id"), "text"
-            )
-        )
-        .unionByName(
-            docs.where(F.col("doc_id") % 10 == 3).select(
-                (F.col("doc_id") + 200000).alias("doc_id"),
-                near_text.alias("text"),
-            )
-        )
-    )
     from mongo_polars_reconciliation_spark.extensions.dedup import band_state
+    from mongo_polars_reconciliation_spark.harness.fixtures import (
+        neardup_ingest_split,
+    )
 
+    hist, batch = neardup_ingest_split(spark, sf_dir)
     seed_digests = hist.select(
         F.md5(F.coalesce(F.col("text"), F.lit("")).cast("binary")).alias(
             "text_hash"
@@ -301,16 +286,12 @@ def test_compact_ingest_state_closes_the_loop(spark):
 
 
 def test_neardup_stream_state_matches_nondefault_geometry(spark):
-    """r10 (advice): the crawl loop must persist admitted docs' band
-    state with the SAME MinHash geometry (n/num_hashes/bands) it admits
-    with. With non-default bands, a near-dup of a batch-1
-    ADMISSION arriving in batch 2 collides only if the persisted bband
-    keys were built with the matching rows-per-band — before the fix,
-    ``band_state`` ran with defaults and the probe silently missed."""
-    from mongo_polars_reconciliation_spark.streaming.corpus import (
-        incremental_neardup_ingest,
-        read_documents_stream,
-    )
+    """The crawl loop must persist admitted docs' band state with the SAME
+    MinHash geometry (n/num_hashes/bands) it admits with. With
+    non-default bands, a near-dup of a batch-1 ADMISSION arriving in
+    batch 2 collides only if the persisted bband keys were built with the
+    matching rows-per-band — otherwise the probe silently misses."""
+    from mongo_polars_reconciliation_spark.extensions.dedup import band_state
 
     toks = [f"w{i:02d}" for i in range(1, 13)]
     orig = " ".join(toks)            # doc 10, batch 0 (novel)
@@ -318,54 +299,22 @@ def test_neardup_stream_state_matches_nondefault_geometry(spark):
     docs = spark.createDataFrame(
         [(10, orig), (20, near)], "doc_id long, text string"
     )
-    stream = read_documents_stream(
-        spark,
-        docs.coalesce(1),
-        name="nondefault_geom",
+    geometry = {"num_hashes": 12, "bands": 6}
+    state = _drain(
+        spark, "nondefault_geom", docs, _neardup_ingest(spark, **geometry),
         split_expr=(F.col("doc_id") >= 20).cast("int"),
-    )
-    empty_dg = spark.createDataFrame([], "text_hash string")
-    empty_bands = spark.createDataFrame([], "bband string, doc_id long")
-    empty_docs = spark.createDataFrame([], "doc_id long, text string")
-    root = scratch_path("unit", "nondefault_geom_state")
-    shutil.rmtree(root, ignore_errors=True)
-    incremental_neardup_ingest(
-        stream,
-        empty_dg,
-        empty_bands,
-        empty_docs,
-        f"{root}/state",
-        f"{root}/ckpt",
-        num_hashes=12,
-        bands=6,
-    )
-    admitted = sorted(
-        r["doc_id"]
-        for r in spark.read.parquet(f"{root}/state/admitted").collect()
     )
     # doc 20 must be rejected THROUGH the persisted band state: with
     # mismatched geometry its probe keys never equal the stored keys and
     # it slips in (admitted == [10, 20])
-    assert admitted == [10], admitted
-    # sanity: the pair really is a verified near-dup under this geometry
-    # (otherwise the rejection above proves nothing)
-    from mongo_polars_reconciliation_spark.extensions.dedup import (
-        band_state,
-    )
+    assert _ids(spark, f"{state}/admitted") == [10]
+    # sanity: the pair really collides under this geometry (otherwise the
+    # rejection above proves nothing)
+    def bands_of(doc_id):
+        one = docs.where(F.col("doc_id") == doc_id)
+        return {r["bband"] for r in band_state(one, **geometry).collect()}
 
-    b10 = {
-        r["bband"]
-        for r in band_state(
-            docs.where(F.col("doc_id") == 10), num_hashes=12, bands=6
-        ).collect()
-    }
-    b20 = {
-        r["bband"]
-        for r in band_state(
-            docs.where(F.col("doc_id") == 20), num_hashes=12, bands=6
-        ).collect()
-    }
-    assert b10 & b20, "fixture lost its band collision"
+    assert bands_of(10) & bands_of(20), "fixture lost its band collision"
 
 
 def test_neardup_ingest_tolerates_duplicate_state_rows(spark):
@@ -425,14 +374,77 @@ def test_compact_ingest_state_refuses_remote_warehouse(spark):
         compact_ingest_state(_FakeSpark(), "/tmp/nowhere")
 
 
+def _drain(spark, name, docs, ingest, split_expr=None, ghosts=None):
+    """Drain ``docs`` through ``ingest(stream, state_dir, checkpoint_dir)``
+    under a fresh scratch root, as the two triggers ``split_expr`` (a 0/1
+    Column) gives or as one, after writing each ``ghosts`` frame as its
+    face dir; return the state dir."""
+    from mongo_polars_reconciliation_spark.streaming.corpus import (
+        read_documents_stream,
+    )
+
+    root = scratch_path("unit", f"{name}_state")
+    shutil.rmtree(root, ignore_errors=True)
+    for face, rows in (ghosts or {}).items():
+        rows.write.parquet(f"{root}/state/{face}")
+    stream = read_documents_stream(
+        spark,
+        docs.coalesce(1),
+        name=name,
+        n_files=1 if split_expr is None else 2,
+        split_expr=F.lit(0) if split_expr is None else split_expr,
+    )
+    ingest(stream, f"{root}/state", f"{root}/ckpt")
+    return f"{root}/state"
+
+
+def _rows(spark, path):
+    return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+
+def _ids(spark, path):
+    return [r[0] for r in _rows(spark, path)]
+
+
+def _neardup_ingest(spark, **kwargs):
+    from mongo_polars_reconciliation_spark.streaming.corpus import (
+        incremental_neardup_ingest,
+    )
+
+    return lambda stream, state, ckpt: incremental_neardup_ingest(
+        stream,
+        spark.createDataFrame([], "text_hash string"),
+        spark.createDataFrame([], "bband string, doc_id long"),
+        spark.createDataFrame([], "doc_id long, text string"),
+        state,
+        ckpt,
+        **kwargs,
+    )
+
+
+def _payload_ingest(spark):
+    from mongo_polars_reconciliation_spark.streaming.corpus import (
+        incremental_payload_ingest,
+    )
+
+    return lambda stream, state, ckpt: incremental_payload_ingest(
+        stream,
+        spark.createDataFrame([], "payload_hash string"),
+        spark.createDataFrame([], "bblock string, doc_id long, n_blocks long"),
+        state,
+        ckpt,
+        block_bytes=4,
+        threshold=0.5,
+    )
+
+
 def test_semantic_stream_rejects_cross_trigger_dup(spark):
-    """r10: the embedding-space crawl loop must reject a trigger-2 exact
+    """The embedding-space crawl loop must reject a trigger-2 exact
     re-upload of a trigger-1 ADMISSION through the persisted (assign,
     vecs) state — the cross-trigger face of the cos-1.0 ledger. The
     drained vecs/ face is the admitted set."""
     from mongo_polars_reconciliation_spark.streaming.corpus import (
         incremental_semantic_ingest,
-        read_documents_stream,
     )
 
     vecs = spark.createDataFrame(
@@ -444,56 +456,35 @@ def test_semantic_stream_rejects_cross_trigger_dup(spark):
         "vec_id long, embedding array<float>",
     )
     cents = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.0, 0.0, 1.0]]
-    stream = read_documents_stream(
+    state = _drain(
         spark,
-        vecs.coalesce(1),
-        name="sem_cross_trigger",
-        id_col="vec_id",
+        "sem_cross_trigger",
+        vecs,
+        lambda stream, state, ckpt: incremental_semantic_ingest(
+            stream,
+            spark.createDataFrame([], "blk int, vec_id long"),
+            spark.createDataFrame([], "vec_id long, embedding array<float>"),
+            cents,
+            state,
+            ckpt,
+            threshold=0.9,
+            nprobe=2,
+        ),
         split_expr=(F.col("vec_id") >= 20).cast("int"),
     )
-    from mongo_polars_reconciliation_spark.harness.queries import (
-        _pin_feed_trigger_order,
-    )
-
-    _pin_feed_trigger_order(scratch_path("corpus", "sem_cross_trigger", "feed"))
-    empty_assign = spark.createDataFrame([], "blk int, vec_id long")
-    empty_vecs = spark.createDataFrame(
-        [], "vec_id long, embedding array<float>"
-    )
-    root = scratch_path("unit", "sem_cross_trigger_state")
-    shutil.rmtree(root, ignore_errors=True)
-    incremental_semantic_ingest(
-        stream,
-        empty_assign,
-        empty_vecs,
-        cents,
-        f"{root}/state",
-        f"{root}/ckpt",
-        threshold=0.9,
-        nprobe=2,
-    )
-    admitted = sorted(
-        r["vec_id"]
-        for r in spark.read.parquet(f"{root}/state/vecs").collect()
-    )
-    assert admitted == [10, 21], admitted
+    assert _ids(spark, f"{state}/vecs") == [10, 21]
     # the assign face carries nprobe rows per admitted vector
-    assign = spark.read.parquet(f"{root}/state/assign")
+    assign = spark.read.parquet(f"{state}/assign")
     assert assign.count() == 4 and sorted(
         {r["vec_id"] for r in assign.collect()}
     ) == [10, 21]
 
 
 def test_payload_stream_rejects_cross_trigger_dups(spark):
-    """r10: the payload crawl loop must reject, through the persisted
-    state, BOTH a trigger-2 byte-exact re-upload of a trigger-1
-    admission (digest ledger) and a trigger-2 chunked-block near-dup of
-    it (block face, shared fraction 3/4 >= 0.5)."""
-    from mongo_polars_reconciliation_spark.streaming.corpus import (
-        incremental_payload_ingest,
-        read_documents_stream,
-    )
-
+    """The payload crawl loop must reject, through the persisted state,
+    BOTH a trigger-2 byte-exact re-upload of a trigger-1 admission (digest
+    ledger) and a trigger-2 chunked-block near-dup of it (block face,
+    shared fraction 3/4 >= 0.5)."""
     p = b"AAAABBBBCCCCDDDD"            # 4 blocks of 4 bytes
     near = b"AAAABBBBCCCCEEEE"         # shares 3/4 aligned blocks
     novel = b"WWWWXXXXYYYYZZZZ"
@@ -501,39 +492,81 @@ def test_payload_stream_rejects_cross_trigger_dups(spark):
         [(10, p), (20, p), (21, near), (22, novel)],
         "doc_id long, payload binary",
     )
-    stream = read_documents_stream(
-        spark,
-        mm.coalesce(1),
-        name="payload_cross_trigger",
+    state = _drain(
+        spark, "payload_cross_trigger", mm, _payload_ingest(spark),
         split_expr=(F.col("doc_id") >= 20).cast("int"),
     )
-    from mongo_polars_reconciliation_spark.harness.queries import (
-        _pin_feed_trigger_order,
+    assert _ids(spark, f"{state}/admitted") == [10, 22]
+
+
+def test_neardup_loop_replays_crash_window_ghosts(spark):
+    """A first trigger that crashed after its bands/ and docs/ appends but
+    before the admitted/ ledger leaves ghost rows that the replay reads
+    (each face is read as soon as its own dir holds files). The replay
+    must still write the clean drain's ledger. The pair is the trap of
+    test_neardup_ingest_crash_window_replay_idempotent: true J = 7/13 is
+    below 0.6, but ghost shingles counted twice would verify it."""
+    from mongo_polars_reconciliation_spark.extensions.dedup import band_state
+
+    toks = [f"w{i:02d}" for i in range(1, 16)]
+    docs = spark.createDataFrame(
+        [(1, " ".join(toks[0:12])), (2, " ".join(toks[3:15]))],
+        "doc_id long, text string",
+    )
+    geometry = {"num_hashes": 12, "bands": 12}
+    ingest = _neardup_ingest(spark, mis_max_iter=8, **geometry)
+    clean = _drain(spark, "ghost_neardup_clean", docs, ingest)
+    replay = _drain(
+        spark, "ghost_neardup_replay", docs, ingest,
+        ghosts={"bands": band_state(docs, **geometry), "docs": docs},
+    )
+    assert _ids(spark, f"{clean}/admitted") == [1, 2]
+    assert _rows(spark, f"{replay}/admitted") == _rows(spark, f"{clean}/admitted")
+
+
+def test_payload_loop_replays_crash_window_ghosts(spark):
+    """The payload face of the loop-level crash window: ghost blocks/ rows
+    and no admitted/ ledger. Without the self-pair filter each payload
+    meets its own ghost blocks at shared fraction 1.0 and is dropped."""
+    from mongo_polars_reconciliation_spark.extensions.multimodal import (
+        payload_block_state,
     )
 
-    _pin_feed_trigger_order(
-        scratch_path("corpus", "payload_cross_trigger", "feed")
+    mm = spark.createDataFrame(
+        [(10, b"AAAABBBBCCCCDDDD"), (22, b"WWWWXXXXYYYYZZZZ")],
+        "doc_id long, payload binary",
     )
-    empty_dg = spark.createDataFrame([], "payload_hash string")
-    empty_blocks = spark.createDataFrame(
-        [], "bblock string, doc_id long, n_blocks long"
+    clean = _drain(spark, "ghost_payload_clean", mm, _payload_ingest(spark))
+    replay = _drain(
+        spark, "ghost_payload_replay", mm, _payload_ingest(spark),
+        ghosts={"blocks": payload_block_state(mm, block_bytes=4)},
     )
-    root = scratch_path("unit", "payload_cross_trigger_state")
-    shutil.rmtree(root, ignore_errors=True)
-    incremental_payload_ingest(
-        stream,
-        empty_dg,
-        empty_blocks,
-        f"{root}/state",
-        f"{root}/ckpt",
-        block_bytes=4,
-        threshold=0.5,
+    assert _ids(spark, f"{clean}/admitted") == [10, 22]
+    assert _rows(spark, f"{replay}/admitted") == _rows(spark, f"{clean}/admitted")
+
+
+def test_read_documents_stream_orders_parts_by_mtime(spark):
+    """The file source orders triggers by modification time, so every file
+    of part i must be older than every file of part i+1: trigger order is
+    part order, whatever order the overlapped part writes finished in."""
+    import glob
+
+    from mongo_polars_reconciliation_spark.streaming.corpus import (
+        read_documents_stream,
     )
-    admitted = sorted(
-        r["doc_id"]
-        for r in spark.read.parquet(f"{root}/state/admitted").collect()
-    )
-    assert admitted == [10, 22], admitted
+
+    docs = spark.createDataFrame(
+        [(i, f"doc {i}") for i in range(24)], "doc_id long, text string"
+    ).repartition(4)
+    read_documents_stream(spark, docs, name="part_order", n_files=3)
+    feed = scratch_path("corpus", "part_order", "feed")
+    mtimes = [
+        [os.path.getmtime(f) for f in glob.glob(f"{feed}/part{i}/*.parquet")]
+        for i in range(3)
+    ]
+    assert all(mtimes), mtimes
+    for i in range(2):
+        assert max(mtimes[i]) < min(mtimes[i + 1]), (i, mtimes)
 
 
 def _bucket_spec(spark, table):
@@ -553,6 +586,9 @@ def test_compact_semantic_state_closes_the_loop(spark):
         ingest_novel_semantic,
         load_centroids,
     )
+    from mongo_polars_reconciliation_spark.harness.fixtures import (
+        semantic_ingest_split,
+    )
     from mongo_polars_reconciliation_spark.streaming.corpus import (
         compact_semantic_state,
     )
@@ -566,27 +602,7 @@ def test_compact_semantic_state_closes_the_loop(spark):
     )
     assert set(tables) == {"vecs", "assign"}
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    hist = emb.where(F.col("vec_id") % 3 < 2)
-    batch = (
-        emb.where(F.col("vec_id") % 3 == 2)
-        .unionByName(
-            emb.where(F.col("vec_id") % 10 == 1).select(
-                (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
-            )
-        )
-        .unionByName(
-            emb.where(F.col("vec_id") % 10 == 4).select(
-                (F.col("vec_id") + 200000).alias("vec_id"),
-                F.expr(
-                    "transform(embedding, (x, i) -> CASE WHEN i < 8 "
-                    "THEN CAST(0.0 AS FLOAT) ELSE x END)"
-                ).alias("embedding"),
-            )
-        )
-    )
+    hist, batch = semantic_ingest_split(spark, sf_dir)
     cents = load_centroids(
         spark, scratch_path("sf0.001", "stream_ingest_centroids")
     )
@@ -611,12 +627,11 @@ def test_compact_payload_state_closes_the_loop(spark):
     against (seeds + compacted tables) admits nothing, bucket specs on
     the digest and block join keys."""
     from mongo_polars_reconciliation_spark.extensions.multimodal import (
-        attach_payload,
         ingest_novel_payloads,
         payload_block_state,
     )
     from mongo_polars_reconciliation_spark.harness.fixtures import (
-        MM_PAYLOAD_TAIL,
+        payload_ingest_split,
     )
     from mongo_polars_reconciliation_spark.streaming.corpus import (
         compact_payload_state,
@@ -633,26 +648,7 @@ def test_compact_payload_state_closes_the_loop(spark):
     # compacted ledger == drained admitted set
     assert spark.table(tables["digests"]).count() == admitted.count()
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    hist = attach_payload(docs.where(F.col("doc_id") % 3 < 2))
-    batch = attach_payload(
-        docs.where(F.col("doc_id") % 3 == 2)
-        .unionByName(
-            docs.where(F.col("doc_id") % 10 == 7).select(
-                (F.col("doc_id") + 100000).alias("doc_id"), "text"
-            )
-        )
-        .unionByName(
-            docs.where(F.col("doc_id") % 10 == 5).select(
-                (F.col("doc_id") + 300000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(MM_PAYLOAD_TAIL)).alias(
-                    "text"
-                ),
-            )
-        )
-    ).select("doc_id", "payload")
+    hist, batch = payload_ingest_split(spark, sf_dir)
     seed_digests = hist.select(
         F.md5(
             F.coalesce(F.col("payload"), F.lit("").cast("binary"))

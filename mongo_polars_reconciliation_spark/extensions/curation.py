@@ -21,7 +21,87 @@ from mongo_polars_reconciliation_spark.extensions.dedup import (
     exact_dedup_groups,
     minhash_near_dups,
 )
-from mongo_polars_reconciliation_spark.extensions.text import fused_doc_scores
+from mongo_polars_reconciliation_spark.extensions.text import (
+    floor4,
+    fused_doc_scores,
+)
+
+
+def _dedup_head(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    near_dup_threshold: float,
+    max_bucket_size: int | None,
+    line_dedup: bool = False,
+) -> DataFrame:
+    """The shared head of both curation pipelines: narrow ``(id, text)``
+    scan → exact dedup (min-id keeper) → optional C4 line dedup →
+    MinHash-LSH near-dup drop. Returns the surviving ``(id, text)`` rows.
+
+    ONE narrow projection feeds every stage: checkpointing it makes the
+    corpus text read once (the exact-dedup digest and the keeper join
+    would otherwise each re-scan the source — one full-corpus scan at
+    100 TB; neutral at test scale, where the checkpoint write costs about
+    what the second tiny scan did). Stage boundaries are
+    localCheckpoint'ed: ``kept`` feeds the near-dup stage AND the
+    downstream scorers, and without lineage truncation AQE re-analyzes
+    the whole upstream tree per shuffle stage (the measured
+    driver-planning bottleneck — see plans/pipeline.py)."""
+    base = docs.select(F.col(id_col), F.col(text_col)).localCheckpoint(
+        eager=False
+    )
+    keepers = exact_dedup_groups(base, id_col, text_col).select(
+        F.col("keeper_id").alias(id_col)
+    )
+    kept = base.join(keepers, id_col).localCheckpoint(eager=False)
+
+    if line_dedup:
+        from mongo_polars_reconciliation_spark.extensions.text import (
+            line_dedup_trim,
+        )
+
+        # C4 line stage: trim every corpus-repeated line to its first
+        # global occurrence and feed the CLEANED text downstream; docs
+        # that empty out are dropped here (n_kept = 0, the C4 drop rule)
+        kept = (
+            line_dedup_trim(kept, id_col=id_col, text_col=text_col)
+            .where(F.col("n_kept") > 0)
+            .select(F.col(id_col), F.col("text_kept").alias(text_col))
+            .localCheckpoint(eager=False)
+        )
+
+    # near-dup removal — drop the higher id of every verified pair
+    pairs = minhash_near_dups(
+        kept,
+        id_col,
+        text_col,
+        threshold=near_dup_threshold,
+        max_bucket_size=max_bucket_size,
+    )
+    return kept.join(
+        pairs.select(F.col("id_b").alias(id_col)), id_col, "left_anti"
+    ).localCheckpoint(eager=False)
+
+
+def _lang_stats(
+    kept: DataFrame, id_col: str, text_col: str, min_quality: float
+) -> DataFrame:
+    """The shared tail: quality gate + language id + token count in ONE
+    map-only projection (:func:`fused_doc_scores`), then per-language
+    stats; the quality mean goes through an exact DECIMAL sum so shuffle
+    order can't change the rounded result."""
+    scored = fused_doc_scores(kept, id_col=id_col, text_col=text_col).where(
+        F.col("quality_r") >= min_quality
+    )
+    return scored.groupBy("pred_lang").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("ws_tokens").alias("total_ws_tokens"),
+        floor4(
+            F.sum(F.col("quality_r").cast("decimal(18,4)")).cast("double")
+            / F.count(F.lit(1))
+        ).alias("avg_quality_r"),
+    )
 
 
 def curate_corpus(
@@ -33,7 +113,8 @@ def curate_corpus(
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Per-language stats of the curated corpus: (pred_lang, n_docs,
-    total_ws_tokens, avg_quality_r).
+    total_ws_tokens, avg_quality_r) — exact dedup → near-dup drop →
+    quality gate.
 
     ``max_bucket_size`` is the LSH hot-bucket guard passed through to
     :func:`minhash_near_dups` (see extensions/dedup.py:lsh_candidate_pairs)
@@ -41,64 +122,11 @@ def curate_corpus(
     boilerplate band key can never turn the bucket self-join into B² pairs;
     ``None`` keeps exact mode. At test scale no bucket approaches the
     default cap, so capped and exact results coincide — pinned on the
-    driver fixture by tests/test_lsh_cap.py (formerly the retired
-    ``dedup_minhash_lsh_capped`` oracle query's check)."""
-    # 0. ONE narrow (id, text) projection feeds every stage (r8): the
-    # exact-dedup digest and the keeper join each re-scanned the source
-    # parquet before; checkpointing the projection makes the corpus text
-    # read ONCE — at 100 TB that is one full-corpus scan saved. The rest
-    # of the pipeline only ever needs these two columns (pred_lang etc.
-    # are computed), so nothing widens back. Measured (r8, interleaved
-    # A/B, 3 reps, one session, sf0.1, load ~2.4): old 2.97 s min vs new
-    # 3.04 s — NEUTRAL at test scale, where the checkpoint write costs
-    # about what the second tiny scan did; kept for the scan count at
-    # real scale, not for a local win.
-    base = docs.select(F.col(id_col), F.col(text_col)).localCheckpoint(
-        eager=False
+    driver fixture by tests/test_lsh_cap.py."""
+    kept = _dedup_head(
+        docs, id_col, text_col, near_dup_threshold, max_bucket_size
     )
-    # 1. exact dedup — keep the min-id copy of each distinct text.
-    # Stage boundaries are localCheckpoint'ed: `kept` feeds the near-dup
-    # stage AND three downstream scorers, and without lineage truncation
-    # AQE re-analyzes the whole upstream tree per shuffle stage (the
-    # measured driver-planning bottleneck — see plans/pipeline.py).
-    keepers = exact_dedup_groups(base, id_col, text_col).select(
-        F.col("keeper_id").alias(id_col)
-    )
-    kept = base.join(keepers, id_col).localCheckpoint(eager=False)
-
-    # 2. near-dup removal — drop the higher id of every verified pair
-    pairs = minhash_near_dups(
-        kept,
-        id_col,
-        text_col,
-        threshold=near_dup_threshold,
-        max_bucket_size=max_bucket_size,
-    )
-    kept = kept.join(
-        pairs.select(F.col("id_b").alias(id_col)), id_col, "left_anti"
-    ).localCheckpoint(eager=False)
-
-    # 3. quality gate + language id + token count in ONE map-only projection
-    # (fused_doc_scores) — previously three scans of `kept` re-joined on
-    # doc_id, i.e. two whole-corpus hash shuffles for row-local computations
-    scored = fused_doc_scores(kept, id_col=id_col, text_col=text_col).where(
-        F.col("quality_r") >= min_quality
-    )
-
-    # 4. per-language corpus stats; the quality mean goes through an exact
-    # DECIMAL sum so shuffle order can't change the rounded result
-    return scored.groupBy("pred_lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("ws_tokens").alias("total_ws_tokens"),
-        (
-            F.floor(
-                F.sum(F.col("quality_r").cast("decimal(18,4)")).cast("double")
-                / F.count(F.lit(1))
-                * 10000
-            )
-            / 10000
-        ).alias("avg_quality_r"),
-    )
+    return _lang_stats(kept, id_col, text_col, min_quality)
 
 
 def curate_corpus_v2(
@@ -172,40 +200,10 @@ def curate_corpus_v2(
         repetition_signals,
     )
 
-    # shared narrow text scan, as in curate_corpus
-    base = docs.select(F.col(id_col), F.col(text_col)).localCheckpoint(
-        eager=False
+    kept = _dedup_head(
+        docs, id_col, text_col, near_dup_threshold, max_bucket_size,
+        line_dedup,
     )
-    keepers = exact_dedup_groups(base, id_col, text_col).select(
-        F.col("keeper_id").alias(id_col)
-    )
-    kept = base.join(keepers, id_col).localCheckpoint(eager=False)
-
-    if line_dedup:
-        from mongo_polars_reconciliation_spark.extensions.text import (
-            line_dedup_trim,
-        )
-
-        # C4 line stage: trim every corpus-repeated line to its first
-        # global occurrence and feed the CLEANED text downstream; docs
-        # that empty out are dropped here (n_kept = 0, the C4 drop rule)
-        kept = (
-            line_dedup_trim(kept, id_col=id_col, text_col=text_col)
-            .where(F.col("n_kept") > 0)
-            .select(F.col(id_col), F.col("text_kept").alias(text_col))
-            .localCheckpoint(eager=False)
-        )
-
-    pairs = minhash_near_dups(
-        kept,
-        id_col,
-        text_col,
-        threshold=near_dup_threshold,
-        max_bucket_size=max_bucket_size,
-    )
-    kept = kept.join(
-        pairs.select(F.col("id_b").alias(id_col)), id_col, "left_anti"
-    ).localCheckpoint(eager=False)
 
     rep_flagged = (
         repetition_signals(kept, id_col=id_col, text_col=text_col)
@@ -219,7 +217,7 @@ def curate_corpus_v2(
         max_symbol_word_ratio is not None or min_alpha_word_frac is not None
     )
     if need_c4 or need_gopher:
-        # ONE projection carries every requested gate signal (r11 advice);
+        # ONE projection carries every requested gate signal;
         # all four are row-local, so the union of flags from the shared
         # frame + one left_anti equals the old sequential per-family gates
         gate_cond = F.lit(False)
@@ -275,18 +273,4 @@ def curate_corpus_v2(
             eager=False
         )
 
-    scored = fused_doc_scores(kept, id_col=id_col, text_col=text_col).where(
-        F.col("quality_r") >= min_quality
-    )
-    return scored.groupBy("pred_lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("ws_tokens").alias("total_ws_tokens"),
-        (
-            F.floor(
-                F.sum(F.col("quality_r").cast("decimal(18,4)")).cast("double")
-                / F.count(F.lit(1))
-                * 10000
-            )
-            / 10000
-        ).alias("avg_quality_r"),
-    )
+    return _lang_stats(kept, id_col, text_col, min_quality)

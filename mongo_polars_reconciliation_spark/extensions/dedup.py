@@ -2,31 +2,50 @@
 
 Designed for the 100 TB dedup pipeline shape:
 - *exact*: one hash-groupBy shuffle on a digest column;
-- *MinHash+LSH*: shingle → minhash signature → band buckets → bucket join →
-  exact-Jaccard verification of candidates only (never all pairs);
+- *MinHash+LSH*: ONE path, shared by the batch probe
+  (:func:`minhash_near_dups`), the persisted band state
+  (:func:`band_state`) and the incremental ingest
+  (:func:`ingest_novel_neardup`): word n-gram shingles
+  (:func:`shingle_sets`) → polynomial shingle id → ``num_hashes`` minima
+  from one ``groupBy(doc)`` → row-local band keys
+  (:func:`_minhash_band_keys`) → bucket self-join
+  (:func:`lsh_candidate_pairs`) → exact-Jaccard verification of the
+  candidates only (:func:`jaccard_verify`; never all pairs);
 - *SimHash*: per-token bit votes → 64-bit signature → 4×16-bit block
   pigeonhole join → Hamming filter;
 - *n-gram Jaccard*: shingle inverted index with a document-frequency cap
   (stop-shingle removal bounds the index blowup), then pair-count verify.
 
+MinHash invariants: ``bands`` divides ``num_hashes`` (a non-dividing
+geometry raises, it is never silently re-banded), and band ``b``'s key is
+the ``'_'``-join of minima ``b*r .. b*r+r-1`` (r = num_hashes / bands) —
+one string format shared by the persisted ``bband`` state and the DuckDB
+oracle's ``STRING_AGG(... ORDER BY j)``.
+
 Shingle and token ids come from one polynomial rolling string hash
-(per-char fold mod P): narrow column arithmetic with no dictionary, no
-global sort and no join, bit-identical in ANSI SQL, so every DuckDB
-oracle replays the same ids and the same signatures.
+(functions/hashing.py, per-char fold mod P): narrow column arithmetic
+with no dictionary, no global sort and no join, bit-identical in ANSI
+SQL, so every DuckDB oracle replays the same ids and the same signatures.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from mongo_polars_reconciliation_spark.extensions.ingest_kernel import (
     admit_sequential,
     combined_cap_keys,
     digest_novel_keepers,
-    greedy_admit as _greedy_admit,  # shared kernel; re-exported — the
-    # similarity/multimodal ingest faces and the property tests import
-    # it from here (moved verbatim in r13, value-identical)
+)
+from mongo_polars_reconciliation_spark.extensions.text import (
+    floor4,
+    hash128,
+    word_ngrams,
+)
+from mongo_polars_reconciliation_spark.functions.hashing import (
+    poly_hash_col,
+    poly_hash_spark,
 )
 from mongo_polars_reconciliation_spark.session import widen
 
@@ -79,7 +98,7 @@ def ingest_novel(
     dump arrived" decision, answered without rescanning history.
 
     ``state_digests`` is any frame with a ``text_hash`` column (the
-    accumulated digest set). NULL text digests as '' (the r8 null-text
+    accumulated digest set). NULL text digests as '' (the null-text
     rule shared with leakage_safe_split).
 
     Scale shape: one digest hash-aggregate over the batch (map-side
@@ -88,7 +107,7 @@ def ingest_novel(
     production state table is BUCKETED by text_hash so the anti-join is
     shuffle-free on the (huge) state side and only the new batch moves.
     Nothing driver-side; output ≤ distinct-batch-digests rows. Body =
-    the shared kernel's phase-1 verbatim (ingest_kernel.py, r13) plus
+    the shared kernel's phase 1 (ingest_kernel.digest_novel_keepers) plus
     this family's digest rule."""
     dg = F.md5(
         F.coalesce(F.col(text_col), F.lit("")).cast("binary")
@@ -121,18 +140,10 @@ def band_state(
     base = docs.select(
         F.col(id_col), F.coalesce(F.col(text_col), F.lit("")).alias(text_col)
     )
-    sigs = minhash_signatures_wide(
-        _shingle_ids(shingles(base, id_col, text_col, n)),
-        id_col,
-        num_hashes,
+    bk = _minhash_band_keys(
+        shingles(base, id_col, text_col, n), id_col, num_hashes, bands
     )
-    bk = _band_keys_wide(sigs, id_col, num_hashes // bands, num_hashes)
-    return bk.select(
-        F.concat_ws(":", F.col("band").cast("string"), F.col("bkey")).alias(
-            "bband"
-        ),
-        F.col(id_col),
-    )
+    return bk.select(_bband(), F.col(id_col))
 
 
 def ingest_novel_neardup(
@@ -189,7 +200,7 @@ def ingest_novel_neardup(
     state rows those keys TOUCH (the bucketed key semi-join reads only
     matching buckets, never full history) and over-cap keys are dropped
     from the history join; the within-batch phase keeps its batch-side
-    count via :func:`_pairs_from_band_keys`. A bucket that common is boilerplate
+    count via :func:`lsh_candidate_pairs`. A bucket that common is boilerplate
     collision — genuinely similar docs still meet in their other bands —
     and a dropped bucket's candidates would have failed the Jaccard
     verify anyway in that case (pinned capped ≡ uncapped on a
@@ -212,24 +223,14 @@ def ingest_novel_neardup(
     ).localCheckpoint(eager=False)
     kept = b.join(keep1.select(id_col), id_col).localCheckpoint(eager=False)
 
-    # batch band keys (wide signatures — the minhash_near_dups shape) over
-    # the checkpointed shingle-ARRAY frame, which jaccard_verify reuses
+    # batch band keys over the checkpointed shingle-ARRAY frame, which
+    # jaccard_verify reuses
     sets_b = widen(
         shingle_sets(kept, id_col, text_col, n), id_col
     ).localCheckpoint(eager=False)
     sh_b = sets_b.select(F.col(id_col), F.explode("__shset").alias("shingle"))
-    bk = _band_keys_wide(
-        minhash_signatures_wide(_shingle_ids(sh_b), id_col, num_hashes),
-        id_col,
-        num_hashes // bands,
-        num_hashes,
-    ).select(
-        F.concat_ws(":", F.col("band").cast("string"), F.col("bkey")).alias(
-            "bband"
-        ),
-        F.col(id_col),
-        F.col("band"),
-        F.col("bkey"),
+    bk = _minhash_band_keys(sh_b, id_col, num_hashes, bands).select(
+        _bband(), F.col(id_col), F.col("band"), F.col("bkey")
     ).localCheckpoint(eager=False)
 
     # phase 2: history collisions → exact-Jaccard verify against the few
@@ -310,7 +311,7 @@ def ingest_novel_neardup(
     # (a history-dropped doc is never admitted, so it cannot block anyone
     # — sequential semantics), then greedy admission
     bk2 = bk.join(kept2.select(id_col), id_col)
-    pairs = _pairs_from_band_keys(
+    pairs = lsh_candidate_pairs(
         bk2.select(id_col, "band", "bkey"), id_col, max_bucket_size
     )
     edges = jaccard_verify(pairs, sets_b, id_col, threshold).select(
@@ -324,45 +325,18 @@ def ingest_novel_neardup(
     )
 
 
-def shingles(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
-) -> DataFrame:
-    """Distinct word n-gram shingles per document, via array transform —
-    no Python, one explode."""
-    idx = ", ".join(f"toks[i+{j}]" for j in range(n))
-    return (
-        df.select(
-            F.col(id_col),
-            F.split(F.col(text_col), " ").alias("toks"),
-        )
-        # sequence(0, negative) counts DOWN in Spark — a doc shorter than n
-        # tokens would emit spurious partial shingles instead of none
-        .where(F.size("toks") >= n)
-        .select(
-            F.col(id_col),
-            F.explode(
-                F.array_distinct(
-                    F.expr(
-                        f"transform(sequence(0, size(toks)-{n}), i -> concat_ws(' ', {idx}))"
-                    )
-                )
-            ).alias("shingle"),
-        )
-        .where(F.col("shingle").isNotNull())
-    )
-
-
 def shingle_sets(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
 ) -> DataFrame:
-    """Per-document distinct-shingle ARRAY — the pre-explode form of
-    :func:`shingles`: ``(id, __shset)`` such that
-    ``sets.select(id, explode(__shset))`` is row-identical to
-    ``shingles(df)``. Checkpointing THIS frame instead of the exploded one
-    lets consumers derive the exploded rows (map-only explode) for the
-    signatures and intersect the arrays row-locally in
-    :func:`jaccard_verify` — no groupBy over the shingle frame."""
-    idx = ", ".join(f"toks[i+{j}]" for j in range(n))
+    """Per-document distinct word n-gram shingle ARRAY ``(id, __shset)`` —
+    the checkpointable form of :func:`shingles`: consumers derive the
+    exploded rows (map-only explode) for the signatures and intersect the
+    arrays row-locally in :func:`jaccard_verify` — no groupBy over the
+    shingle frame. Docs shorter than ``n`` tokens have no row. The
+    n-gram array is :func:`text.word_ngrams` (total under ANSI: its CASE
+    guard holds even when the optimizer evaluates the projection on rows
+    the size filter would have dropped); the null filter is defensive —
+    concat_ws over in-bounds tokens is never NULL."""
     return (
         df.select(
             F.col(id_col),
@@ -371,173 +345,91 @@ def shingle_sets(
         .where(F.size("toks") >= n)
         .select(
             F.col(id_col),
-            # the size guard is REPEATED inside the expression: when a
-            # downstream explode is collapsed into this projection the
-            # optimizer can evaluate it on rows the Filter would have
-            # dropped (observed: Generate pushed through a Union), and a
-            # sub-n token array would then index out of bounds under ANSI
-            # — the CASE makes the expression total; surviving rows are
-            # untouched. The null filter mirrors shingles()'s post-explode
-            # isNotNull guard (defensive: concat_ws over in-bounds tokens
-            # is never NULL, but the two forms must stay row-identical by
-            # construction, not by argument).
             F.filter(
-                F.array_distinct(
-                    F.expr(
-                        f"CASE WHEN size(toks) >= {n} THEN "
-                        f"transform(sequence(0, size(toks)-{n}), i -> concat_ws(' ', {idx})) "
-                        f"ELSE array() END"
-                    )
-                ),
+                F.array_distinct(word_ngrams("toks", n)),
                 lambda x: x.isNotNull(),
             ).alias("__shset"),
         )
     )
 
 
-def _shingle_ids(sh: DataFrame) -> DataFrame:
-    """Attach an integer shingle id: the polynomial rolling hash of the
-    shingle string, per-char fold mod ``MINHASH_P`` — pure narrow column
-    arithmetic (NO dictionary, NO global sort, NO join) and bit-identical
-    in any engine, so the oracle mirrors it directly."""
-    # empty-string guard: sequence(1,0) would COUNT DOWN in Spark and the
-    # mirrored list_reduce would fold an empty list in the oracle; the
-    # bigint accumulator keeps h*31 exact for a modulus up to 2^31-1
-    sid = F.expr(
-        f"CASE WHEN length(shingle) = 0 THEN cast(0 as bigint) ELSE "
-        f"aggregate(sequence(1, length(shingle)), cast(0 as bigint), "
-        f"(h, i) -> pmod(h * 31 + pmod(ascii(substring(shingle, i, 1)),"
-        f" {MINHASH_P}), {MINHASH_P})) END"
-    )
-    return sh.withColumn("sid", sid)
-
-
-def minhash_signatures(
-    sh_ids: DataFrame,
-    id_col: str = "doc_id",
-    num_hashes: int = 12,
+def shingles(
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
 ) -> DataFrame:
-    """One row per (doc, hash_j): minhash_j = min((A_j*sid + B_j) mod P).
-    A_j = 2j+3, B_j = 5j+7. Long format — the audit/diagnostic shape that
-    :func:`lsh_candidate_pairs` / :func:`lsh_dropped_buckets` consume;
-    the production pipeline (:func:`minhash_near_dups`) uses the
-    value-identical wide form below, which shuffles 12× less."""
-    hashes = F.explode(
-        F.expr(
-            f"transform(sequence(0, {num_hashes - 1}),"
-            f" j -> struct(j as j, pmod((2*j+3)*sid + 5*j+7, {MINHASH_P}) as h))"
+    """Distinct word n-gram shingles per document ``(id, shingle)``: the
+    explode of :func:`shingle_sets`."""
+    return shingle_sets(df, id_col, text_col, n).select(
+        F.col(id_col), F.explode("__shset").alias("shingle")
+    )
+
+
+def _minhash_band_keys(
+    sh: DataFrame, id_col: str, num_hashes: int, bands: int
+) -> DataFrame:
+    """MinHash band keys ``(id, band, bkey)`` of an ``(id, shingle)``
+    frame — the one builder behind every MinHash face.
+
+    Shingle id ``sid`` = the polynomial hash mod ``MINHASH_P``; minhash
+    j = ``min((2j+3)·sid + 5j+7) mod P`` over the doc's shingles, all
+    ``num_hashes`` minima from ONE ``groupBy(id)`` (map-side partial min,
+    one narrow row per doc per partition; sid < P keeps the products
+    exact in long math). Band b's key is the ``'_'``-join of minima
+    ``b·r .. b·r+r-1`` (r = num_hashes / bands) — a row-local concat plus
+    a small fixed explode, no further shuffle.
+
+    Measured-and-rejected: a fully ROW-LOCAL form (per-row shingle array
+    → sid array → array-min hashes → band keys in one projection, zero
+    shuffles before the bucket join — the rewrite that took SimHash
+    4.5 s → 1.4 s) ran 10–20% SLOWER in an interleaved A/B at sf0.1: the
+    shingle explode exists anyway for the exact-Jaccard verify, and it
+    trades one saved shuffle for interpreted higher-order-function
+    evaluation of the minima, while this aggregation is
+    whole-stage-codegen'd."""
+    if bands < 1 or num_hashes % bands:
+        raise ValueError(
+            f"bands ({bands}) must divide num_hashes ({num_hashes})"
         )
-    ).alias("jh")
-    return (
-        sh_ids.select(F.col(id_col), hashes)
-        .select(F.col(id_col), F.col("jh.j").alias("j"), F.col("jh.h").alias("h"))
-        .groupBy(id_col, "j")
-        .agg(F.min("h").alias("mh"))
+    rows = num_hashes // bands
+    sid = poly_hash_col("shingle", MINHASH_P)
+    sigs = sh.select(F.col(id_col), sid.alias("sid")).groupBy(id_col).agg(
+        *[
+            F.min(
+                F.pmod((2 * j + 3) * F.col("sid") + (5 * j + 7), F.lit(MINHASH_P))
+            ).alias(f"mh{j}")
+            for j in range(num_hashes)
+        ]
     )
-
-
-def minhash_signatures_wide(
-    sh_ids: DataFrame,
-    id_col: str = "doc_id",
-    num_hashes: int = 12,
-) -> DataFrame:
-    """One row per doc with ``num_hashes`` minhash COLUMNS (mh0..mhN) from a
-    single groupBy — same values as :func:`minhash_signatures`, but no 12×
-    row explode and no (doc, j) shuffle: the hash-min aggregation ships one
-    narrow row per doc per partition through map-side partial min (the same
-    columnar-votes shape ``simhash_signatures`` uses, where the explode form
-    measured ~4× slower). sid < P keeps (2j+3)*sid exact in long math."""
-    aggs = [
-        F.min(
-            F.pmod((2 * j + 3) * F.col("sid") + (5 * j + 7), F.lit(MINHASH_P))
-        ).alias(f"mh{j}")
-        for j in range(num_hashes)
-    ]
-    return sh_ids.groupBy(id_col).agg(*aggs)
-
-
-def _band_keys(
-    sigs: DataFrame, id_col: str, rows_per_band: int
-) -> DataFrame:
-    """(id, band, bkey) from LONG-format signatures — one bucket key per
-    (doc, band); costs a (doc, band) groupBy shuffle."""
-    # collect_list order is nondeterministic — order the band key by j
-    return (
-        sigs.withColumn("band", (F.col("j") / rows_per_band).cast("int"))
-        .groupBy(id_col, "band")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("j"), F.col("mh")))
-                    ),
-                    lambda s: s["mh"].cast("string"),
-                ),
-                "_",
-            ).alias("bkey")
-        )
-    )
-
-
-def _band_keys_wide(
-    sigs_wide: DataFrame, id_col: str, rows_per_band: int, num_hashes: int
-) -> DataFrame:
-    """(id, band, bkey) from WIDE signatures — the band key is a row-local
-    concat of the band's minhash columns plus a small fixed explode: NO
-    shuffle at all, identical key strings to :func:`_band_keys`."""
-    bands = num_hashes // rows_per_band
     entries = [
         F.struct(
             F.lit(b).alias("band"),
             F.concat_ws(
-                "_",
-                *[
-                    F.col(f"mh{b * rows_per_band + i}").cast("string")
-                    for i in range(rows_per_band)
-                ],
+                "_", *[F.col(f"mh{b * rows + i}").cast("string") for i in range(rows)]
             ).alias("bkey"),
         )
         for b in range(bands)
     ]
-    return sigs_wide.select(
+    return sigs.select(
         F.col(id_col), F.explode(F.array(*entries)).alias("bb")
     ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bkey").alias("bkey"))
 
 
+def _bband() -> Column:
+    """The composite band key ``band || ':' || bkey`` of the persisted
+    band state (:func:`band_state`)."""
+    return F.concat_ws(":", F.col("band").cast("string"), F.col("bkey")).alias(
+        "bband"
+    )
+
+
 def lsh_candidate_pairs(
-    sigs: DataFrame,
+    band_keys: DataFrame,
     id_col: str = "doc_id",
-    rows_per_band: int = 3,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """Band the signature (bands × rows_per_band), bucket-join on the band
-    key, emit distinct candidate pairs (id_a < id_b). The join is the LSH
-    trick: only same-bucket docs ever meet, so cost scales with bucket sizes,
-    not n^2.
-
-    ``max_bucket_size`` is the hot-bucket guard: one degenerate bucket (a
-    boilerplate band key shared by B docs) makes the self-join emit B² pairs
-    — AQE's skew split spreads the shuffle but cannot shrink the pair count.
-    With the cap set, buckets over the threshold are SKIPPED before the
-    join (same pattern as the n-gram doc-frequency cap below): a bucket that
-    common is near-certainly boilerplate collision, and genuinely similar
-    docs still meet in their other, less-degenerate bands. Use
-    :func:`lsh_dropped_buckets` to surface exactly what a given cap drops —
-    capping must never be silent. Default None = exact; production default
-    1000 (what curation/curate_corpus and the *_capped query run — pinned
-    equal to exact mode by the oracle at test scale).
-
-    The band COUNT is derived from the signature rows themselves
-    (band = j // rows_per_band), so there is no separate ``bands``
-    argument that could silently disagree with the data's banding."""
-    band_key = _band_keys(sigs, id_col, rows_per_band)
-    return _pairs_from_band_keys(band_key, id_col, max_bucket_size)
-
-
-def _pairs_from_band_keys(
-    band_key: DataFrame, id_col: str, max_bucket_size: int | None
-) -> DataFrame:
-    """Bucket self-join over (band, bkey) rows → distinct candidate pairs.
+    """Bucket self-join over ``(id, band, bkey)`` band-key rows
+    (:func:`_minhash_band_keys`) → distinct candidate pairs
+    (id_a < id_b). The join is the LSH trick: only same-bucket docs ever
+    meet, so cost scales with bucket sizes, not n².
 
     Uncapped, singleton buckets are pruned before the self-join: they
     can't form pairs, and dropping them shrinks both join inputs and the
@@ -550,46 +442,36 @@ def _pairs_from_band_keys(
     O(distinct buckets), beyond broadcast range at corpus scale (the
     window form measured ×0.8 at sf0.1).
 
-    Capped, the window form would be a skew hazard: ``count(1) over
-    (partition by band, bkey)`` puts every row of a bucket into ONE
-    window partition BEFORE the ``bsz <= cap`` filter can drop it, and
-    AQE can split skewed join partitions but never a window partition —
-    one degenerate boilerplate bucket spills or OOMs that task at 100 TB,
-    the very population the cap exists to kill. So the capped path counts
-    per-key populations with a map-side partial aggregate (the monster
-    bucket folds to one row per map task and never co-locates) and
-    removes the over-cap keys with an anti-join. By pigeonhole at most
+    ``max_bucket_size`` is the hot-bucket guard: one degenerate bucket (a
+    boilerplate band key shared by B docs) makes the self-join emit B²
+    pairs — AQE's skew split spreads the shuffle but cannot shrink the
+    pair count. With the cap set, the buckets :func:`lsh_dropped_buckets`
+    reports are removed BEFORE the join: a bucket that common is
+    near-certainly boilerplate collision, and genuinely similar docs still
+    meet in their other, less-degenerate bands. The window form would be
+    a skew hazard here — ``count(1) over (partition by band, bkey)`` puts
+    every row of a bucket into ONE window partition before the filter can
+    drop it, and AQE never splits a window partition — so the capped path
+    counts per-key populations with a map-side partial aggregate (the
+    monster bucket folds to one row per map task) and removes the
+    over-cap keys with an anti-join. By pigeonhole at most
     n/max_bucket_size keys exceed the cap; the join strategy is left to
     AQE and ``spark.sql.autoBroadcastJoinThreshold``, so the key set
     broadcasts while it is small and takes a sort-merge anti-join once it
-    outgrows the threshold. Singleton buckets then die in the self-join
-    itself (a 1-row bucket yields no ``id_a < id_b`` pair), so the
-    ``bsz >= 2`` prefilter — a performance-only row cut — is dropped on
-    this path rather than re-attached through an O(collision buckets)
-    join-back. Pair set identical on both paths by construction; capped
-    ≡ window-form pinned in tests/test_lsh_cap.py, skewed-bucket
-    linearity probed by tools/scale_probe.py (lsh_hot_bucket)."""
+    outgrows the threshold. Singletons then die in the self-join itself
+    (a 1-row bucket yields no ``id_a < id_b`` pair). Pair set identical
+    on both paths by construction; capped ≡ uncapped and the plan shapes
+    are pinned in tests/test_lsh_cap.py, skewed-bucket linearity probed
+    by tools/scale_probe.py (lsh_hot_bucket). Default None = exact."""
     if max_bucket_size is not None:
-        over = (
-            band_key.groupBy("band", "bkey")
-            .agg(F.count(F.lit(1)).alias("bsz"))
-            .where(F.col("bsz") > max_bucket_size)
-            .select("band", "bkey")
+        over = lsh_dropped_buckets(band_keys, max_bucket_size).select(
+            "band", "bkey"
         )
-        pruned = band_key.join(over, ["band", "bkey"], "left_anti")
-        l = pruned.select(F.col(id_col).alias("id_a"), "band", "bkey")
-        r = pruned.select(F.col(id_col).alias("id_b"), "band", "bkey")
-        return (
-            l.join(r, ["band", "bkey"])
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
-    from pyspark.sql import Window as _W
-
-    sized = band_key.withColumn(
-        "bsz", F.count(F.lit(1)).over(_W.partitionBy("band", "bkey"))
-    ).where(F.col("bsz") >= 2)
+        sized = band_keys.join(over, ["band", "bkey"], "left_anti")
+    else:
+        sized = band_keys.withColumn(
+            "bsz", F.count(F.lit(1)).over(Window.partitionBy("band", "bkey"))
+        ).where(F.col("bsz") >= 2)
     l = sized.select(F.col(id_col).alias("id_a"), "band", "bkey")
     r = sized.select(F.col(id_col).alias("id_b"), "band", "bkey")
     return (
@@ -601,18 +483,14 @@ def _pairs_from_band_keys(
 
 
 def lsh_dropped_buckets(
-    sigs: DataFrame,
-    id_col: str = "doc_id",
-    rows_per_band: int = 3,
-    max_bucket_size: int = 1000,
+    band_keys: DataFrame, max_bucket_size: int = 1000
 ) -> DataFrame:
-    """(band, bkey, bsz) for every bucket the cap in
-    :func:`lsh_candidate_pairs` would skip — the audit face of the cap, so
-    a capped run can report WHAT it declined to compare instead of silently
-    under-reporting duplicates."""
+    """(band, bkey, bsz) for every bucket of the ``(id, band, bkey)``
+    band-key rows over ``max_bucket_size`` — exactly what the cap in
+    :func:`lsh_candidate_pairs` skips, so a capped run can report WHAT it
+    declined to compare instead of silently under-reporting duplicates."""
     return (
-        _band_keys(sigs, id_col, rows_per_band)
-        .groupBy("band", "bkey")
+        band_keys.groupBy("band", "bkey")
         .agg(F.count(F.lit(1)).alias("bsz"))
         .where(F.col("bsz") > max_bucket_size)
     )
@@ -646,10 +524,9 @@ def jaccard_verify(
         .select(
             "id_a",
             "id_b",
-            (
-                F.floor(inter / (F.size("__sa") + F.size("__sb") - inter) * 10000)
-                / 10000
-            ).alias("jacc_r"),
+            floor4(inter / (F.size("__sa") + F.size("__sb") - inter)).alias(
+                "jacc_r"
+            ),
             inter.alias("__inter"),
         )
         .where((F.col("__inter") > 0) & (F.col("jacc_r") >= threshold))
@@ -669,8 +546,9 @@ def minhash_near_dups(
 ) -> DataFrame:
     """shingle → minhash → LSH bands → verified near-dup pairs.
     ``max_bucket_size`` caps degenerate LSH buckets (see
-    lsh_candidate_pairs; pair with lsh_dropped_buckets for an audit of
-    what a cap skips). Default None = exact.
+    :func:`lsh_candidate_pairs`; pair with :func:`lsh_dropped_buckets`
+    over the same band keys for an audit of what a cap skips). Default
+    None = exact.
 
     Materialization is ``localCheckpoint`` (not ``persist``): the verify
     join reads the shingle and pair frames multiple times, and lineage
@@ -681,17 +559,7 @@ def minhash_near_dups(
 
     The shingle-set frame is widened to the cluster's parallelism before
     the checkpoint (:func:`session.widen`): the downstream per-character
-    polynomial hash is the CPU-heavy step.
-
-    Measured-and-rejected: a fully ROW-LOCAL band-key path (per-row
-    shingle array → sid array → 12 array-min hashes → band keys in one
-    projection, zero shuffles before the bucket join — the rewrite that
-    took SimHash 4.5 s → 1.4 s) ran 10–20% SLOWER here in an interleaved
-    A/B at sf0.1: unlike SimHash, the shingle explode must exist anyway
-    for the exact-Jaccard verify, so the row-local form pays the shingle
-    extraction twice and trades ONE saved shuffle for interpreted
-    higher-order-function evaluation of the 12 hash minima, while this
-    path's signature aggregation is whole-stage-codegen'd."""
+    polynomial hash is the CPU-heavy step."""
     # the checkpointed frame is the per-doc shingle ARRAY, not the
     # exploded rows: the signature pipeline explodes it map-only, and
     # jaccard_verify intersects the arrays directly
@@ -699,19 +567,16 @@ def minhash_near_dups(
         shingle_sets(df, id_col, text_col, n), id_col
     ).localCheckpoint(eager=False)
     sh = sets.select(F.col(id_col), F.explode("__shset").alias("shingle"))
-    # wide signature path: ONE groupBy(doc) with 12 min columns + row-local
-    # band keys — two fewer shuffles than the long (doc,j) form, same values
-    sigs_wide = minhash_signatures_wide(_shingle_ids(sh), id_col, num_hashes)
     # checkpoint the (bands-per-doc) band-key rows: the bucket-pair stage
     # consumes them three times (size filter + both self-join sides), and
     # each consumption would otherwise recompute the signature aggregation
-    band_key = _band_keys_wide(
-        sigs_wide, id_col, num_hashes // bands, num_hashes
+    band_keys = _minhash_band_keys(
+        sh, id_col, num_hashes, bands
     ).localCheckpoint(eager=False)
     # candidate pairs are tiny (bucket collisions only) but sit on top of
     # the whole signature pipeline — materialize once
-    pairs = _pairs_from_band_keys(
-        band_key, id_col, max_bucket_size
+    pairs = lsh_candidate_pairs(
+        band_keys, id_col, max_bucket_size
     ).localCheckpoint(eager=False)
     return jaccard_verify(pairs, sets, id_col, threshold)
 
@@ -744,15 +609,9 @@ def simhash_signatures(
     ~2.5 s at sf0.1. Two earlier rejected reorderings of the shuffle form
     (hash-after-count-groupBy, pre-hash widening) are moot now — there is
     nothing left to shuffle."""
-    # same per-char fold as _shingle_ids (empty-string guard included)
-    sid_of = (
-        f"CASE WHEN length(t) = 0 THEN cast(0 as bigint) ELSE "
-        f"aggregate(sequence(1, length(t)), cast(0 as bigint), "
-        f"(h, i) -> pmod(h * 31 + pmod(ascii(substring(t, i, 1)),"
-        f" {SIMHASH_SID_P}), {SIMHASH_SID_P})) END"
-    )
     sids = F.expr(
-        f"transform(split({text_col}, ' '), t -> {sid_of})"
+        f"transform(split({text_col}, ' '), "
+        f"t -> {poly_hash_spark('t', SIMHASH_SID_P)})"
     ).alias("__sids")
 
     def vote_sum(k: int) -> str:
@@ -949,16 +808,7 @@ def dedup_clusters_star(
     exceptAll per round — three job launches whose driver latency dominated
     wall time at bench scale (star was 1.4× plain propagation at sf0.1
     despite doing asymptotically less work). ``max_iter`` is a loud safety
-    bound like the propagation variant's.
-
-    Drift watch closed (r8): driver warm-mins rose two rounds running
-    (r5 3.67 → r6 4.38 → r7 4.79 s), flagged as possible regression.
-    Interleaved A/B against ``dedup_clusters`` as control (4 reps, one
-    session, sf0.1, load ~2.5): star 3.50 s min vs control 3.31 s —
-    at the r5 level, 1.06× the control, no mechanism. The trend was
-    ambient load compounding across rounds; tools/bench_drift.py now
-    makes the per-query comparison automatic so a real one is caught in
-    one round."""
+    bound like the propagation variant's."""
     edges = (
         pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .where(F.col("u") != F.col("v"))
@@ -1059,14 +909,12 @@ def ngram_jaccard_pairs(
     BYTES, which shrink several-fold on long shingles at 100 TB."""
     sh = widen(
         shingles(df, id_col, text_col, n).select(
-            F.col(id_col),
-            F.xxhash64("shingle").alias("h1"),
-            F.xxhash64(F.col("shingle"), F.lit(0x5EED)).alias("h2"),
+            F.col(id_col), *hash128("shingle")
         ),
         id_col,
     ).localCheckpoint(eager=False)
     # measured-and-rejected: a window-count df cap (the
-    # _pairs_from_band_keys rewrite) ran ×1.46 SLOWER here in an
+    # lsh_candidate_pairs uncapped form) ran ×1.46 SLOWER here in an
     # interleaved A/B at sf0.1 (2.90 vs 4.24 s min) — this frame is
     # ~300k rows of near-unique hash keys, so the window's sort dwarfs
     # the hash-agg + join-back it would save; the band-key frame where
@@ -1100,9 +948,9 @@ def ngram_jaccard_pairs(
         .select(
             "id_a",
             "id_b",
-            (F.floor(
-                F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter")) * 10000
-            ) / 10000).alias("jacc_r"),
+            floor4(
+                F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter"))
+            ).alias("jacc_r"),
         )
         .where(F.col("jacc_r") >= threshold)
     )
@@ -1128,10 +976,9 @@ def source_overlap(
     count aggregate. Mergeable across corpus partitions (distinct-union
     then recount), no all-pairs document join anywhere.
 
-    NULL text digests as the empty string (r8 fix, same as
-    leakage_safe_split): a NULL digest never matches the overlap
-    self-join, so null-text rows silently dropped out of the matrix;
-    they now count as empty-text content."""
+    NULL text digests as the empty string (same as
+    leakage_safe_split): a NULL digest would never match the overlap
+    self-join, so null-text rows count as empty-text content."""
     ds = (
         df.select(
             F.md5(

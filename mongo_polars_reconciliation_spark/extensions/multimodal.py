@@ -23,6 +23,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from mongo_polars_reconciliation_spark.extensions.text import floor4
+
 
 def attach_payload(
     df: DataFrame,
@@ -81,7 +83,7 @@ def payload_digest_dedup(
     mm: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
     """Exact payload dedup — the binary column joined into the dedup
-    family (r9): md5 over the raw bytes, one row per distinct payload
+    family: md5 over the raw bytes, one row per distinct payload
     with the deterministic min-id keeper and the copy count — byte-for-
     byte identical images/audio collapse exactly like duplicate text
     does in ``exact_dedup_groups`` (same output contract, same hash-
@@ -145,35 +147,35 @@ def payload_near_dups(
     payload_col: str = "payload",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """Chunked-byte-signature near-dup probe over binary payloads (r9):
+    """Chunked-byte-signature near-dup probe over binary payloads:
     two payloads are candidates iff they share at least one
     (block_no, block_hash) — identical bytes at the same aligned offset
     window — and a pair is emitted when the shared-block fraction
     ``floor4(n_shared / max(n_blocks_a, n_blocks_b))`` reaches
-    ``threshold``. Catches the dominant binary near-dup classes —
-    re-uploads with appended/truncated tails, metadata-stripped copies
-    sharing their byte prefix — deterministically and oracle-replayably
-    (no decoder needed, so it works in this container and as the cheap
-    pre-filter before any perceptual hash in production).
+    ``threshold`` (:func:`_shared_blocks`). Catches the dominant binary
+    near-dup classes — re-uploads with appended/truncated tails,
+    metadata-stripped copies sharing their byte prefix —
+    deterministically and oracle-replayably (no decoder needed, so it
+    works in this container and as the cheap pre-filter before any
+    perceptual hash in production).
 
-    ``max_bucket_size`` (r10, VERDICT r9's one weak flag) is the
-    hot-bucket guard ported from ``lsh_candidate_pairs``: a degenerate
-    COMMON aligned block — a zero-padding run, a shared format header —
-    IS corpus-sized on real binary corpora, and its bucket self-join
-    emits B² pairs. Buckets over the cap are skipped BEFORE the join;
-    a block that common carries no near-dup signal (every pair it
+    ``max_bucket_size`` is the hot-bucket guard of
+    ``lsh_candidate_pairs``: a degenerate COMMON aligned block — a
+    zero-padding run, a shared format header — IS corpus-sized on real
+    binary corpora, and its bucket self-join emits B² pairs. Buckets
+    over the cap are skipped BEFORE the join; a block that common
+    carries no near-dup signal (every pair it
     suggests still shares its other, discriminative blocks), but note
     the capped ``n_shared`` counts only surviving blocks, so a pair
     whose overlap is MOSTLY degenerate blocks can fall under
     ``threshold`` — exactly the intended behavior, audited (never
     silent) via :func:`payload_dropped_buckets`. Default None = exact;
     tests/test_lsh_cap.py pins capped ≡ exact on the driver fixture at
-    cap 1000 (no degenerate block there — formerly the retired
-    ``mm_payload_near_dup_capped`` query's check), the hot-bucket unit test
+    cap 1000 (no degenerate block there), the hot-bucket unit test
     pins the skip on a synthetic zero-padded corpus. Singleton buckets
     are always pruned — they cannot form a pair, and dropping them
     before the join shrinks both join inputs (the
-    ``_pairs_from_band_keys`` treatment; the count agg hashes on the
+    ``lsh_candidate_pairs`` treatment; the count agg hashes on the
     same keys as the join, so no extra shuffle of the big side).
 
     Scale shape: exactly the SimHash pigeonhole envelope — block keys
@@ -196,39 +198,56 @@ def payload_near_dups(
         .select("block_no", "block_hash")
     )
     keys = keys.join(ok, ["block_no", "block_hash"])
-    l = keys.select(
-        F.col(id_col).alias("id_a"),
-        "block_no",
-        "block_hash",
-        F.col("n_blocks").alias("n_blocks_a"),
-    )
-    r = keys.select(
-        F.col(id_col).alias("id_b"),
-        "block_no",
-        "block_hash",
-        F.col("n_blocks").alias("n_blocks_b"),
-    )
     return (
-        l.join(r, ["block_no", "block_hash"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", "n_blocks_a", "n_blocks_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .select(
-            "id_a",
-            "id_b",
-            "n_shared",
-            "n_blocks_a",
-            "n_blocks_b",
-            (
-                F.floor(
-                    F.col("n_shared")
-                    / F.greatest(F.col("n_blocks_a"), F.col("n_blocks_b"))
-                    * 10000
-                )
-                / 10000
-            ).alias("block_sim_r"),
+        _shared_blocks(
+            keys, keys, ["block_no", "block_hash"], id_col,
+            F.col("__ida") < F.col("__idb"),
         )
-        .where(F.col("block_sim_r") >= threshold)
+        .where(F.col("__sim") >= threshold)
+        .select(
+            F.col("__ida").alias("id_a"),
+            F.col("__idb").alias("id_b"),
+            F.col("__nsh").alias("n_shared"),
+            F.col("__nba").alias("n_blocks_a"),
+            F.col("__nbb").alias("n_blocks_b"),
+            F.col("__sim").alias("block_sim_r"),
+        )
+    )
+
+
+def _block_side(
+    keys: DataFrame, key: list[str], id_col: str, side: str
+) -> DataFrame:
+    """One side of a block-bucket join: the bucket ``key`` columns, the id
+    as ``__id<side>`` and the payload's block count as ``__nb<side>``."""
+    return keys.select(
+        *key,
+        F.col(id_col).alias(f"__id{side}"),
+        F.col("n_blocks").alias(f"__nb{side}"),
+    )
+
+
+def _shared_blocks(
+    keys_a: DataFrame,
+    keys_b: DataFrame,
+    key: list[str],
+    id_col: str,
+    pair_cond,
+) -> DataFrame:
+    """The payload block-pair verdict: bucket join of two block-key frames
+    (``key`` columns, ``id_col``, ``n_blocks``) → one row per id pair
+    meeting ``pair_cond`` with ``__nsh`` = its shared aligned blocks and
+    ``__sim`` = the shared-block fraction
+    ``floor4(__nsh / max(__nba, __nbb))``. Callers threshold ``__sim``."""
+    return (
+        _block_side(keys_a, key, id_col, "a")
+        .join(_block_side(keys_b, key, id_col, "b"), key)
+        .where(pair_cond)
+        .groupBy("__ida", "__idb", "__nba", "__nbb")
+        .agg(F.count(F.lit(1)).alias("__nsh"))
+        .withColumn(
+            "__sim", floor4(F.col("__nsh") / F.greatest("__nba", "__nbb"))
+        )
     )
 
 
@@ -239,7 +258,7 @@ def payload_block_state(
     payload_col: str = "payload",
 ) -> DataFrame:
     """(bblock, doc_id, n_blocks) block-key table of a payload corpus —
-    the persisted near-dup state of the payload ingest (r10), the binary
+    the persisted near-dup state of the payload ingest, the binary
     analog of the text pipeline's ``band_state``: ``bblock`` is the
     single composite key ``block_no || ':' || block_hash`` so the state
     table can be BUCKETED by exactly the collision join's key
@@ -268,7 +287,7 @@ def ingest_novel_payloads(
     max_bucket_size: int | None = None,
     mis_max_iter: int = 25,
 ) -> DataFrame:
-    """Incremental PAYLOAD ingest (r10) — the near-dup ingest family
+    """Incremental PAYLOAD ingest — the near-dup ingest family
     (extensions/dedup.py:ingest_novel_neardup) over binary payloads: of
     an arriving batch, admit the payloads that are neither byte-exact
     copies (md5 digest) NOR chunked-block near-dups (shared aligned-
@@ -289,8 +308,7 @@ def ingest_novel_payloads(
     family. NULL payloads digest as the EMPTY payload (the shared
     null-content rule): a NULL digest would never match the anti-join
     (NULL <> NULL in join equality), so a null-payload doc would
-    re-admit on every redelivery — the r8 null-text lesson, applied
-    here from the start.
+    re-admit on every redelivery (the text family's null-text rule).
 
     ``max_bucket_size``: the hot-bucket cap, applied over the COMBINED
     per-key population of the collision join — the batch's own keys plus
@@ -299,15 +317,15 @@ def ingest_novel_payloads(
     semi-join reads only the matching buckets exchange-free, never the
     full history (capped ≡ uncapped pinned on the fixture). The text
     ingest applies the same restrict-to-touched-buckets-then-count
-    pattern to its band state (r10); since r13 both families share the
-    count-and-filter itself (``ingest_kernel.combined_cap_keys``).
+    pattern to its band state; both families share the count-and-filter
+    itself (``ingest_kernel.combined_cap_keys``).
 
     Scale shape: phase 1 is the digest-bucketed anti-join; phase 2's
     collision join hits the bblock-bucketed state (plan pin in
     tests/test_bucketing.py) and verification is the same aggregate that
-    found the candidates; phase 3 runs on the batch only, capped the
-    same way, feeding the sequential-arrival greedy admission
-    (batch-split + redelivery properties pinned in
+    found the candidates (:func:`_shared_blocks`); phase 3 runs on the
+    batch only, capped the same way, feeding the sequential-arrival
+    greedy admission (batch-split + redelivery properties pinned in
     tests/test_properties.py)."""
     from mongo_polars_reconciliation_spark.extensions.ingest_kernel import (
         admit_sequential,
@@ -341,42 +359,21 @@ def ingest_novel_payloads(
         ok = combined_cap_keys(bk, hits, "bblock", max_bucket_size)
         bk = bk.join(ok, "bblock").localCheckpoint(eager=False)
         hits = hits.join(ok, "bblock")
+    # Self-pairs are impossible for legitimate input (ids unique across
+    # state and batch) — they arise only from ghost block rows a
+    # crash-replayed streaming trigger left behind (blocks/ written,
+    # digest ledger not). Unfiltered, a replayed payload meets its own
+    # ghost blocks at shared fraction 1.0 and is silently dropped, so
+    # the ledger is never backfilled. With the filter, every crash
+    # window replays to exactly the original admitted set (pinned in
+    # tests/test_properties.py); pairs against OTHER ghosts still
+    # verify at the true fraction (block rows are distinct-deduped).
     dropped_hist = (
-        bk.select(
-            "bblock",
-            F.col(id_col).alias("__bid"),
-            F.col("n_blocks").alias("__nbb"),
+        _shared_blocks(
+            bk, hits, ["bblock"], id_col, F.col("__ida") != F.col("__idb")
         )
-        .join(
-            hits.select(
-                "bblock",
-                F.col(id_col).alias("__hid"),
-                F.col("n_blocks").alias("__nbh"),
-            ),
-            "bblock",
-        )
-        # Self-pairs are impossible for legitimate input (ids unique across
-        # state and batch) — they arise only from ghost block rows a
-        # crash-replayed streaming trigger left behind (blocks/ written,
-        # digest ledger not). Unfiltered, a replayed payload meets its own
-        # ghost blocks at shared fraction 1.0 and is silently dropped, so
-        # the ledger is never backfilled. With the filter, every crash
-        # window replays to exactly the original admitted set (pinned in
-        # tests/test_properties.py); pairs against OTHER ghosts still
-        # verify at the true fraction (block rows are distinct-deduped).
-        .where(F.col("__bid") != F.col("__hid"))
-        .groupBy("__bid", "__hid", "__nbb", "__nbh")
-        .agg(F.count(F.lit(1)).alias("__nsh"))
-        .where(
-            F.floor(
-                F.col("__nsh")
-                / F.greatest(F.col("__nbb"), F.col("__nbh"))
-                * 10000
-            )
-            / 10000
-            >= threshold
-        )
-        .select(F.col("__bid").alias(id_col))
+        .where(F.col("__sim") >= threshold)
+        .select(F.col("__ida").alias(id_col))
         .distinct()
     )
     kept2 = (
@@ -388,30 +385,11 @@ def ingest_novel_payloads(
     # phase 3: within-batch pairs among the history-clean payloads, then
     # greedy admission (a history-dropped payload never blocks anyone)
     bk2 = bk.join(kept2, id_col)
-    l = bk2.select(
-        "bblock",
-        F.col(id_col).alias("__ida"),
-        F.col("n_blocks").alias("__nba"),
-    )
-    r = bk2.select(
-        "bblock",
-        F.col(id_col).alias("__idb"),
-        F.col("n_blocks").alias("__nbb"),
-    )
     edges = (
-        l.join(r, "bblock")
-        .where(F.col("__ida") < F.col("__idb"))
-        .groupBy("__ida", "__idb", "__nba", "__nbb")
-        .agg(F.count(F.lit(1)).alias("__nsh"))
-        .where(
-            F.floor(
-                F.col("__nsh")
-                / F.greatest(F.col("__nba"), F.col("__nbb"))
-                * 10000
-            )
-            / 10000
-            >= threshold
+        _shared_blocks(
+            bk2, bk2, ["bblock"], id_col, F.col("__ida") < F.col("__idb")
         )
+        .where(F.col("__sim") >= threshold)
         .select(F.col("__ida").alias("lo"), F.col("__idb").alias("hi"))
     )
     admitted = admit_sequential(kept2, edges, id_col, mis_max_iter)

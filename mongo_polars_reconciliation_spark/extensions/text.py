@@ -19,6 +19,34 @@ def floor4(col: Column) -> Column:
     (rational scores like hits/total routinely land exactly on x.xxxx5)."""
     return F.floor(col * 10000) / 10000
 
+
+def word_ngrams(toks: str, n: int) -> Column:
+    """Array of the word n-grams (``n`` consecutive tokens joined by ' ')
+    of the token-array column ``toks``, in position order, duplicates
+    kept. Total: an array shorter than ``n`` yields an empty array —
+    ``sequence(0, negative)`` would count DOWN and index out of bounds
+    under ANSI, and the optimizer may evaluate a projection on rows a
+    preceding size filter drops (observed: Generate pushed through a
+    Union), so the guard lives inside the expression."""
+    idx = ", ".join(f"{toks}[i+{j}]" for j in range(n))
+    return F.expr(
+        f"CASE WHEN size({toks}) >= {n} THEN "
+        f"transform(sequence(0, size({toks})-{n}), i -> concat_ws(' ', {idx})) "
+        f"ELSE array() END"
+    )
+
+
+def hash128(col: str) -> list[Column]:
+    """The 128-bit shuffle key of a string column: two independent
+    xxhash64 lanes ``h1``, ``h2``. Replaces a raw n-gram string as a
+    groupBy/join key (~16 vs ~50-70 bytes per 8-token window); collision
+    odds ~N²/2¹²⁹ — ≈1e-19 even at 10¹⁰ distinct keys."""
+    return [
+        F.xxhash64(col).alias("h1"),
+        F.xxhash64(F.col(col), F.lit(0x5EED)).alias("h2"),
+    ]
+
+
 # Small per-language stopword lists for the n-gram/stopword language-ID
 # heuristic. Deliberately tiny & hardcoded: the operator's job is the
 # join/aggregate shape (tokens ⋈ broadcast dictionary → per-doc-per-lang
@@ -1149,23 +1177,15 @@ def duplicate_spans(
     Scale shape: window explode (map-only) → window doc-frequency groupBy
     with map-side combine → join back → per-doc aggregate. Same
     inverted-index cost envelope as ``ngram_jaccard_pairs`` but with no
-    pair join at all, so no df-cap is needed. The groupBy/join key is a
-    128-bit composite hash of the window (two independent xxhash64
-    lanes), NOT the raw n-token string: an 8-token window averages
-    ~50-70 shuffle bytes vs 16 for the hash pair, a several-fold
-    shuffle-byte cut at scale (VERDICT r6 nit). Collision risk at 128
-    bits is ~N²/2¹²⁹ — ≈1e-19 even at 10¹⁰ distinct windows — and a
+    pair join at all, so no df-cap is needed. The groupBy/join key is
+    :func:`hash128` of the window, NOT the raw n-token string; a
     collision could only merge two windows' doc-frequency counts, never
     lose a window."""
     from mongo_polars_reconciliation_spark.extensions.dedup import shingles
 
     sh = (
         shingles(df, id_col, text_col, n)
-        .select(
-            F.col(id_col),
-            F.xxhash64("shingle").alias("h1"),
-            F.xxhash64(F.col("shingle"), F.lit(0x5EED)).alias("h2"),
-        )
+        .select(F.col(id_col), *hash128("shingle"))
         .localCheckpoint(eager=False)
     )
     dfreq = sh.groupBy("h1", "h2").agg(F.count(F.lit(1)).alias("df_"))
@@ -1218,33 +1238,20 @@ def trim_duplicate_spans(
     duplicated windows, ×n) → keyed distinct + anti-join on (doc, pos) →
     one groupBy(doc) whose collect_list is bounded by document length.
     No all-pairs joins anywhere. The window string itself never shuffles:
-    the checkpoint materializes (doc, i, h1, h2) with the 128-bit
-    composite hash replacing the raw n-token string (~16 vs ~50-70
-    bytes/row; VERDICT r6 nit) — collision odds ~N²/2¹²⁹, and a
-    collision could only over-mark a window as duplicated, never unmark
-    one."""
+    the checkpoint materializes (doc, i, h1, h2) with :func:`hash128`
+    replacing the raw n-token string — a collision could only over-mark
+    a window as duplicated, never unmark one."""
     base = df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("toks"))
     tok = base.select(
         F.col(id_col), F.posexplode("toks").alias("pos", "tok")
     )
-    idx = ", ".join(f"toks[i+{j}]" for j in range(n))
     wins = (
         base.where(F.size("toks") >= n)
         .select(
             F.col(id_col),
-            F.posexplode(
-                F.expr(
-                    f"transform(sequence(0, size(toks)-{n}),"
-                    f" i -> concat_ws(' ', {idx}))"
-                )
-            ).alias("i", "w"),
+            F.posexplode(word_ngrams("toks", n)).alias("i", "w"),
         )
-        .select(
-            F.col(id_col),
-            "i",
-            F.xxhash64("w").alias("h1"),
-            F.xxhash64(F.col("w"), F.lit(0x5EED)).alias("h2"),
-        )
+        .select(F.col(id_col), "i", *hash128("w"))
         .localCheckpoint(eager=False)
     )
     dupw = (
@@ -1559,8 +1566,7 @@ def repetition_signals(
       3-gram fraction > 0.3).
 
     All ratios are exact-int divisions floor4-quantized, so the DuckDB
-    oracle reproduces every value bit-for-bit. 1-based ``element_at``
-    indexing keeps the Spark and SQL gram walks identical."""
+    oracle reproduces every value bit-for-bit."""
     toks = F.split(F.col(text_col), " ")
     base = df.select(F.col(id_col), toks.alias("toks"))
     n = F.size("toks")
@@ -1573,10 +1579,7 @@ def repetition_signals(
         .agg(F.max("c").alias("top_c"), F.sum("c").alias("n_tok"))
     )
 
-    grams = F.expr(
-        "transform(sequence(1, size(toks)-2), i -> concat_ws(' ',"
-        " element_at(toks, i), element_at(toks, i+1), element_at(toks, i+2)))"
-    )
+    grams = word_ngrams("toks", 3)
     consec = F.expr(
         "aggregate(sequence(1, size(toks)-1), 0, (acc, i) -> acc +"
         " CASE WHEN element_at(toks, i) = element_at(toks, i+1)"
@@ -1821,21 +1824,11 @@ def ngram_frequencies(
     Scale shape: one explode + one hash-groupBy with map-side partial
     aggregation; the min_count filter runs post-agg (HAVING), so the
     shuffle carries one partial row per (partition, ngram)."""
-    idx = ", ".join(f"toks[i+{j}]" for j in range(n))
     grams = df.select(
         F.col(id_col),
         F.split(F.col(text_col), " ").alias("toks"),
-    ).where(
-        # sequence(0, negative) counts DOWN in Spark — a short doc would
-        # emit spurious partial grams instead of none
-        F.size("toks") >= n
-    ).select(
-        F.col(id_col),
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, size(toks)-{n}), i -> concat_ws(' ', {idx}))"
-            )
-        ).alias("ngram"),
+    ).where(F.size("toks") >= n).select(
+        F.col(id_col), F.explode(word_ngrams("toks", n)).alias("ngram")
     )
     return (
         grams.groupBy("ngram")
@@ -1991,11 +1984,7 @@ def ngram_novelty(
 
     sh = (
         shingles(df, id_col, text_col, n)
-        .select(
-            F.col(id_col),
-            F.xxhash64("shingle").alias("h1"),
-            F.xxhash64(F.col("shingle"), F.lit(0x5EED)).alias("h2"),
-        )
+        .select(F.col(id_col), *hash128("shingle"))
         .localCheckpoint(eager=False)
     )
     first = sh.groupBy("h1", "h2").agg(F.min(id_col).alias("first_id"))
@@ -2393,13 +2382,9 @@ def corpus_datacard(
     return ranked.groupBy(source_col, lang_col).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("ws_tokens").alias("total_ws_tokens"),
-        (
-            F.floor(
-                F.sum(F.col("quality_r").cast("decimal(18,4)")).cast("double")
-                / F.count(F.lit(1))
-                * 10000
-            )
-            / 10000
+        floor4(
+            F.sum(F.col("quality_r").cast("decimal(18,4)")).cast("double")
+            / F.count(F.lit(1))
         ).alias("avg_quality_r"),
         F.max(F.when(F.col("__rn") == p50, F.col("ws_tokens"))).alias("p50_tokens"),
         F.max(F.when(F.col("__rn") == p90, F.col("ws_tokens"))).alias("p90_tokens"),
@@ -2482,12 +2467,9 @@ def datacard_from_state(
     return cum.groupBy(source_col, lang_col).agg(
         F.sum("c").alias("n_docs"),
         F.sum(F.col("ws_tokens") * F.col("c")).alias("total_ws_tokens"),
-        (
-            F.floor(
-                F.sum("q_sum").cast("double") / F.sum("c") * 10000
-            )
-            / 10000
-        ).alias("avg_quality_r"),
+        floor4(F.sum("q_sum").cast("double") / F.sum("c")).alias(
+            "avg_quality_r"
+        ),
         F.min(F.when(F.col("__cum") >= k50, F.col("ws_tokens"))).alias(
             "p50_tokens"
         ),

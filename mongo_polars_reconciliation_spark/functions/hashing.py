@@ -29,15 +29,21 @@ POLY_P31 = 2147483647  # Mersenne prime 2^31-1 — the default modulus
 POLY_P31B = 2147483629  # largest prime below 2^31-1
 
 
-def poly_hash_col(expr: str, p: int = POLY_P31) -> Column:
-    """Spark column: polynomial hash of the (string) SQL expression
-    ``expr``. Empty strings hash to 0 (sequence(1,0) would count DOWN)."""
+def poly_hash_spark(expr: str, p: int = POLY_P31) -> str:
+    """Spark SQL fragment: polynomial hash of the (string) SQL expression
+    ``expr`` — usable inside a higher-order function's lambda. Empty
+    strings hash to 0 (sequence(1,0) would count DOWN)."""
     s = f"CAST({expr} AS STRING)"
-    return F.expr(
+    return (
         f"CASE WHEN length({s}) = 0 THEN cast(0 as bigint) ELSE "
         f"aggregate(sequence(1, length({s})), cast(0 as bigint), "
         f"(h, i) -> pmod(h * 31 + pmod(ascii(substring({s}, i, 1)), {p}), {p})) END"
     )
+
+
+def poly_hash_col(expr: str, p: int = POLY_P31) -> Column:
+    """Spark column: :func:`poly_hash_spark` of ``expr``."""
+    return F.expr(poly_hash_spark(expr, p))
 
 
 def poly_hash_sql(expr: str, p: int = POLY_P31) -> str:

@@ -341,30 +341,39 @@ def build_mm_payload_aug(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ingest_split(
     spark: SparkSession, path: str, id_col: str, value_col: str,
-    redeliver_mod: int, variant_mod: int, variant_offset: int, variant,
+    redeliver_mod: int, variant_mod: int | None = None,
+    variant_offset: int = 0, variant=None,
 ) -> "tuple[DataFrame, DataFrame]":
     """(history, batch) of an ingest family over the (``id_col``,
     ``value_col``) columns of ``path``: history is the id%3<2 slice; the
     batch is the %3==2 slice, exact re-deliveries of the
-    %10==``redeliver_mod`` slice under +100000 ids, and the ``variant``
-    (a Column) of the %10==``variant_mod`` slice under +``variant_offset``
-    ids."""
+    %10==``redeliver_mod`` slice under +100000 ids, and — unless
+    ``variant_mod`` is None — the ``variant`` (a Column) of the
+    %10==``variant_mod`` slice under +``variant_offset`` ids."""
     df = spark.read.parquet(path).select(id_col, value_col)
     i = F.col(id_col)
-    batch = (
-        df.where(i % 3 == 2)
-        .unionByName(
-            df.where(i % 10 == redeliver_mod).select(
-                (i + 100000).alias(id_col), value_col
-            )
+    batch = df.where(i % 3 == 2).unionByName(
+        df.where(i % 10 == redeliver_mod).select(
+            (i + 100000).alias(id_col), value_col
         )
-        .unionByName(
+    )
+    if variant_mod is not None:
+        batch = batch.unionByName(
             df.where(i % 10 == variant_mod).select(
                 (i + variant_offset).alias(id_col), variant.alias(value_col)
             )
         )
-    )
     return df.where(i % 3 < 2), batch
+
+
+def exact_ingest_split(
+    spark: SparkSession, sf_dir: str
+) -> "tuple[DataFrame, DataFrame]":
+    """(history, batch) of the exact-digest ingest faces: the batch holds
+    exact redeliveries of the %10==7 docs and no variants."""
+    return _ingest_split(
+        spark, f"{sf_dir}/documents.parquet", "doc_id", "text", 7
+    )
 
 
 def neardup_ingest_split(

@@ -3142,8 +3142,8 @@ def _mh_band_ctes(src: str, p: str) -> str:
 
 def _greedy_mis_round(prev: str, cur: str) -> str:
     """One unrolled round of the sequential-arrival greedy admission
-    (extensions/ingest_kernel.py:greedy_admit, re-exported as
-    dedup._greedy_admit): statuses are final once decided;
+    (extensions/ingest_kernel.py:greedy_admit): statuses are final once
+    decided;
     a node is Rejected when an Admitted lower near-dup neighbor exists,
     Admitted when every lower neighbor is Rejected (vacuously true for
     none), else still Undecided."""

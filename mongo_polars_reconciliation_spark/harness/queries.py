@@ -16,6 +16,7 @@ from mongo_polars_reconciliation_spark.harness.fixtures import (
     build_external,
     build_internal,
     build_state,
+    exact_ingest_split,
     load_base,
     neardup_ingest_split,
     payload_ingest_split,
@@ -2031,21 +2032,14 @@ def dedup_source_overlap(spark, sf_dir) -> DataFrame:
 
 
 def dedup_ingest_incremental(spark, sf_dir) -> DataFrame:
-    """Two-phase incremental ingest (r8): batch 1 (doc_id%3<2) seeds the
+    """Two-phase incremental ingest: batch 1 (doc_id%3<2) seeds the
     digest state; batch 2 (the rest, plus redelivered copies of the
     id%10==7 slice under shifted ids) is deduped against it — output is
     batch 2's novel keepers only: within-batch duplicates collapse to the
     min id, cross-batch duplicates (including every redelivered copy)
     are suppressed by the state anti-join."""
     from mongo_polars_reconciliation_spark.extensions.dedup import ingest_novel
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    b1 = docs.where(F.col("doc_id") % 3 < 2)
-    b2 = docs.where(F.col("doc_id") % 3 == 2).select("doc_id", "text").unionByName(
-        docs.where(F.col("doc_id") % 10 == 7).select(
-            (F.col("doc_id") + 100000).alias("doc_id"), "text"
-        )
-    )
+    b1, b2 = exact_ingest_split(spark, sf_dir)
     empty_state = spark.createDataFrame([], "text_hash string")
     state1 = ingest_novel(b1, empty_state)
     return ingest_novel(b2, state1)
@@ -2507,7 +2501,7 @@ def stream_dedup_corpus(spark, sf_dir) -> DataFrame:
 
 
 def stream_ingest_novel(spark, sf_dir) -> DataFrame:
-    """Streaming incremental ingest (r8): batch 1 (doc_id%3<2) digests
+    """Streaming incremental ingest: batch 1 (doc_id%3<2) digests
     form the STATIC state; batch 2 (the rest plus redelivered copies of
     the id%10==7 slice under +100000 ids) arrives as two micro-batches
     split by id parity — so duplicates of one text land in different
@@ -2522,17 +2516,12 @@ def stream_ingest_novel(spark, sf_dir) -> DataFrame:
     from mongo_polars_reconciliation_spark.streaming.events import run_to_table
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    state = docs.where(F.col("doc_id") % 3 < 2).select(
+    hist, b2 = exact_ingest_split(spark, sf_dir)
+    state = hist.select(
         F.md5(F.coalesce(F.col("text"), F.lit("")).cast("binary")).alias(
             "text_hash"
         )
     ).distinct()
-    b2 = docs.where(F.col("doc_id") % 3 == 2).select("doc_id", "text").unionByName(
-        docs.where(F.col("doc_id") % 10 == 7).select(
-            (F.col("doc_id") + 100000).alias("doc_id"), "text"
-        )
-    )
     stream = read_documents_stream(spark, b2, name=f"ingest_{tag}")
     return run_to_table(
         ingest_novel_state(stream, state),

@@ -1,4 +1,4 @@
-"""Hot-bucket cap for LSH candidate generation (VERDICT r3 item 4).
+"""Hot-bucket cap for LSH candidate generation, and the MinHash band keys.
 
 A degenerate bucket — one band key shared by B docs — makes the LSH
 self-join emit B(B-1)/2 pairs; AQE's skew split spreads the shuffle but
@@ -7,6 +7,7 @@ the join, (b) keep every pair arising from healthy buckets, and (c) be
 auditable via lsh_dropped_buckets.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from mongo_polars_reconciliation_spark.extensions.dedup import (
@@ -14,24 +15,21 @@ from mongo_polars_reconciliation_spark.extensions.dedup import (
     lsh_dropped_buckets,
 )
 
-RPB, NH = 3, 12  # bands derived from data: j // RPB
-
 
 def _sigs(spark, n_docs: int):
-    """Signature frame (doc_id, j, mh) where band 0 (j=0..2) is one
-    constant hot bucket across ALL docs, bands 1..3 are unique per doc —
-    except docs 0 and 1 share every band (a genuine near-dup pair)."""
+    """Band-key frame (doc_id, band, bkey) where band 0 is one constant
+    hot bucket across ALL docs, bands 1..3 are unique per doc — except
+    docs 0 and 1 share every band (a genuine near-dup pair)."""
     return spark.range(n_docs).select(
         F.col("id").alias("doc_id"),
-        F.explode(F.sequence(F.lit(0), F.lit(NH - 1))).alias("j"),
+        F.explode(F.sequence(F.lit(0), F.lit(3))).alias("band"),
     ).select(
         "doc_id",
-        "j",
-        F.when(F.col("j") < RPB, F.lit(7))  # hot bucket: constant band 0
-        .when(F.col("doc_id") <= 1, F.col("j") * 1000)  # docs 0,1 twins
-        .otherwise(F.col("doc_id") * 100 + F.col("j"))
-        .cast("long")
-        .alias("mh"),
+        "band",
+        F.when(F.col("band") == 0, F.lit("hot"))
+        .when(F.col("doc_id") <= 1, F.lit("twin"))
+        .otherwise(F.col("doc_id").cast("string"))
+        .alias("bkey"),
     )
 
 
@@ -41,15 +39,13 @@ def test_cap_skips_hot_bucket_keeps_healthy_pairs(spark):
     # uncapped this join would emit ~50M pairs from band 0 alone; with the
     # cap it must finish fast and keep exactly the twin pair from the
     # healthy bands
-    pairs = lsh_candidate_pairs(sigs, rows_per_band=RPB, max_bucket_size=100)
+    pairs = lsh_candidate_pairs(sigs, max_bucket_size=100)
     assert [tuple(r) for r in pairs.collect()] == [(0, 1)]
 
 
 def test_dropped_buckets_audit_names_the_hot_bucket(spark):
     n = 5_000
-    dropped = lsh_dropped_buckets(
-        _sigs(spark, n), rows_per_band=RPB, max_bucket_size=100
-    ).collect()
+    dropped = lsh_dropped_buckets(_sigs(spark, n), max_bucket_size=100).collect()
     assert len(dropped) == 1
     assert dropped[0]["band"] == 0 and dropped[0]["bsz"] == n
 
@@ -58,25 +54,18 @@ def test_uncapped_equals_generous_cap(spark):
     """On data with no bucket over the cap, capped output == exact output
     (the cap only ever removes over-cap buckets, nothing else)."""
     sigs = _sigs(spark, 60)
-    exact = lsh_candidate_pairs(sigs, rows_per_band=RPB)
-    capped = lsh_candidate_pairs(
-        sigs, rows_per_band=RPB, max_bucket_size=60
-    )
+    exact = lsh_candidate_pairs(sigs)
+    capped = lsh_candidate_pairs(sigs, max_bucket_size=60)
     assert sorted(map(tuple, exact.collect())) == sorted(
         map(tuple, capped.collect())
     )
 
 
 def test_minhash_capped_equals_uncapped_on_fixture(spark):
-    """r13 (VERDICT r12 #5, registry consolidation): the exact
-    configuration the retired ``dedup_minhash_lsh_capped`` driver query
-    ran — ``minhash_near_dups(build_documents_aug,
-    max_bucket_size=1000)`` at sf0.001 — is bit-identical to exact
-    mode, because no fixture bucket approaches the cap. This pin is the
-    retired query's oracle check verbatim (the query shared the
-    uncapped face's oracle), so the guard-is-semantics-preserving
-    property stays verified every run; the cap-ENGAGED behavior is
-    pinned by the hot-bucket tests above."""
+    """``minhash_near_dups(build_documents_aug, max_bucket_size=1000)``
+    at sf0.001 is bit-identical to exact mode, because no fixture bucket
+    approaches the cap — the guard is semantics-preserving; the
+    cap-ENGAGED behavior is pinned by the hot-bucket tests above."""
     from mongo_polars_reconciliation_spark.extensions.dedup import (
         minhash_near_dups,
     )
@@ -92,48 +81,86 @@ def test_minhash_capped_equals_uncapped_on_fixture(spark):
     )
 
 
-def test_wide_signatures_equal_long(spark):
-    """The production wide signature path (one groupBy, 12 min columns,
-    row-local band keys) must produce exactly the long form's values and
-    band-key strings — pins the r5 shuffle-elimination refactor."""
-    from pyspark.sql import functions as F
+def _model_band_keys(text: str, num_hashes: int, bands: int) -> set:
+    """Driver-side MinHash band keys of one doc: distinct word 3-gram
+    shingles, sid = the polynomial hash mod P, minhash j =
+    min((2j+3)·sid + 5j+7) mod P, band b = the '_'-join of minima
+    b·r .. b·r+r-1."""
+    from mongo_polars_reconciliation_spark.extensions.dedup import MINHASH_P
 
+    toks = text.split(" ")
+    sh = {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
+    sids = []
+    for g in sh:
+        h = 0
+        for c in g:
+            h = (h * 31 + ord(c) % MINHASH_P) % MINHASH_P
+        sids.append(h)
+    if not sids:
+        return set()
+    mh = [
+        min(((2 * j + 3) * s + 5 * j + 7) % MINHASH_P for s in sids)
+        for j in range(num_hashes)
+    ]
+    r = num_hashes // bands
+    return {
+        f"{b}:" + "_".join(str(m) for m in mh[b * r : (b + 1) * r])
+        for b in range(bands)
+    }
+
+
+def test_band_state_keys_match_python_model(spark):
+    """The persisted ``bband`` strings (and so the oracle's
+    ``STRING_AGG(... ORDER BY j)`` band keys) equal a driver-side Python
+    model of the MinHash band keys, at the default geometry and at 6
+    bands of 2; a doc under 3 tokens has none."""
+    from mongo_polars_reconciliation_spark.extensions.dedup import band_state
+
+    rows = [
+        (1, "the quick brown fox jumps over the lazy dog"),
+        (2, "the quick brown fox jumps over the lazy cat"),
+        (3, "entirely different content with other words here"),
+        (4, "short doc"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    for bands in (4, 6):
+        got = sorted(
+            tuple(r)
+            for r in band_state(docs, num_hashes=12, bands=bands)
+            .select("doc_id", "bband")
+            .collect()
+        )
+        want = sorted(
+            (d, k) for d, t in rows for k in _model_band_keys(t, 12, bands)
+        )
+        assert got == want and len(want) == 3 * bands, bands
+
+
+def test_band_geometry_must_divide_num_hashes(spark):
+    """A band count that does not divide ``num_hashes`` is refused with
+    both values named — never silently re-banded (12 hashes / 5 bands
+    would write 6 bands of 2) nor a bare ZeroDivisionError (13 bands)."""
     from mongo_polars_reconciliation_spark.extensions.dedup import (
-        _band_keys,
-        _band_keys_wide,
-        _shingle_ids,
-        minhash_signatures,
-        minhash_signatures_wide,
-        shingles,
+        band_state,
+        ingest_novel_neardup,
+        minhash_near_dups,
     )
 
     docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "the quick brown fox jumps over the lazy cat"),
-            (3, "entirely different content with other words here"),
-            (4, "short doc"),
-        ],
-        "doc_id long, text string",
+        [(1, "a b c d"), (2, "a b c e")], "doc_id long, text string"
     )
-    sh_ids = _shingle_ids(shingles(docs))
-    long_sigs = minhash_signatures(sh_ids, "doc_id", NH)
-    wide_sigs = minhash_signatures_wide(sh_ids, "doc_id", NH)
-    long_as_wide = sorted(
-        tuple(r)
-        for r in long_sigs.groupBy("doc_id")
-        .pivot("j", list(range(NH)))
-        .agg(F.first("mh"))
-        .collect()
-    )
-    wide = sorted(tuple(r) for r in wide_sigs.collect())
-    assert long_as_wide == wide
-
-    bk_long = sorted(tuple(r) for r in _band_keys(long_sigs, "doc_id", RPB).collect())
-    bk_wide = sorted(
-        tuple(r) for r in _band_keys_wide(wide_sigs, "doc_id", RPB, NH).collect()
-    )
-    assert bk_long == bk_wide
+    empty_dg = spark.createDataFrame([], "text_hash string")
+    empty_bands = spark.createDataFrame([], "bband string, doc_id long")
+    for bands in (5, 13):
+        for build in (
+            lambda: band_state(docs, num_hashes=12, bands=bands),
+            lambda: minhash_near_dups(docs, num_hashes=12, bands=bands),
+            lambda: ingest_novel_neardup(
+                docs, empty_dg, empty_bands, docs, num_hashes=12, bands=bands
+            ),
+        ):
+            with pytest.raises(ValueError, match=rf"\b{bands}\b.*\b12\b"):
+                build()
 
 
 def _payloads(spark, n_degenerate: int):
@@ -156,7 +183,7 @@ def _payloads(spark, n_degenerate: int):
 
 
 def test_payload_cap_skips_hot_block_keeps_healthy_pairs(spark):
-    """r10 (VERDICT r9's weak flag): a corpus-sized bucket of identical
+    """A corpus-sized bucket of identical
     aligned blocks (zero-padding) must be skipped BEFORE the self-join —
     uncapped, 5k copies of one block emit ~12.5M pairs; capped, the join
     stays bounded and the genuine byte-identical pair (whose similarity
@@ -189,12 +216,9 @@ def test_payload_dropped_buckets_audit_names_the_block(spark):
 
 def test_payload_capped_equals_uncapped_on_fixture(spark):
     """On the mm payload fixture (no degenerate common block) the capped
-    probe is bit-identical to exact mode. This is the retired
-    ``mm_payload_near_dup_capped`` driver query's configuration verbatim
-    (it shared the uncapped face's oracle; retired r13 per VERDICT r12
-    #5 — this pin now carries the guard-is-semantics-preserving
-    property; cap-ENGAGED behavior is pinned by the hot-block tests
-    above)."""
+    probe is bit-identical to exact mode — the guard is
+    semantics-preserving; cap-ENGAGED behavior is pinned by the
+    hot-block tests above."""
     from mongo_polars_reconciliation_spark.extensions.multimodal import (
         payload_near_dups,
     )
@@ -213,7 +237,7 @@ def test_payload_capped_equals_uncapped_on_fixture(spark):
 
 
 def test_payload_ingest_cap_bounds_degenerate_history_collisions(spark):
-    """r10: the payload ingest's hot-bucket cap guards the HISTORY
+    """The payload ingest's hot-bucket cap guards the HISTORY
     collision join too — 2k history payloads sharing one zero-run block
     would fan every zero-padded batch doc out to all of them; with the
     cap the degenerate key is dropped from both sides BEFORE the join
@@ -264,7 +288,7 @@ def test_payload_ingest_cap_bounds_degenerate_history_collisions(spark):
 
 
 def test_text_ingest_history_cap_equals_uncapped(spark):
-    """r10: the text ingest's history collision join now honors the
+    """The text ingest's history collision join honors the
     hot-bucket cap with the combined batch+touched-state count. Two
     pins: (a) on the standard ingest fixture (no hot bucket) capped ≡
     uncapped exactly; (b) on a boilerplate-header corpus — 400 history
@@ -336,19 +360,18 @@ def test_text_ingest_history_cap_equals_uncapped(spark):
 
 
 def test_capped_plan_is_skew_safe(spark):
-    """r17 (VERDICT r16 #1): the CAPPED pair path must not co-locate a
-    bucket's rows before the cap can drop it. The r16 window form did —
-    ``count(1) over (partition by band, bkey)`` put every row of a
-    degenerate bucket on ONE window task, and AQE cannot split a window
-    partition. The skew-safe shape counts per-key populations with a
-    map-side partial aggregate and removes the (pigeonhole-tiny)
-    over-cap key set with a BROADCAST anti-join, so no operator ever
-    gathers an over-cap bucket. Pinned on the physical plan: no Window
+    """The CAPPED pair path must not co-locate a bucket's rows before the
+    cap can drop it: a window form — ``count(1) over (partition by band,
+    bkey)`` — puts every row of a degenerate bucket on ONE window task,
+    and AQE cannot split a window partition. The skew-safe shape counts
+    per-key populations with a map-side partial aggregate and removes
+    the (pigeonhole-tiny) over-cap key set with a BROADCAST anti-join, so
+    no operator ever gathers an over-cap bucket. Pinned on the physical plan: no Window
     node anywhere, and the prune is a broadcast LeftAnti. The UNCAPPED
     path keeps the window form (its singleton prune) — also pinned so a
     refactor cannot silently swap the two."""
     sigs = _sigs(spark, 200)
-    capped = lsh_candidate_pairs(sigs, rows_per_band=RPB, max_bucket_size=50)
+    capped = lsh_candidate_pairs(sigs, max_bucket_size=50)
     plan = capped._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
         capped._jdf.queryExecution(), "formatted"
     )
@@ -357,7 +380,7 @@ def test_capped_plan_is_skew_safe(spark):
     assert any(
         "BroadcastHashJoin" in ln and "LeftAnti" in ln for ln in plan.splitlines()
     ), plan
-    uncapped = lsh_candidate_pairs(sigs, rows_per_band=RPB)
+    uncapped = lsh_candidate_pairs(sigs)
     uplan = uncapped._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
         uncapped._jdf.queryExecution(), "formatted"
     )
@@ -373,9 +396,7 @@ def test_capped_prune_shuffles_past_broadcast_threshold(spark):
     saved = spark.conf.get(key)
     spark.conf.set(key, "-1")
     try:
-        capped = lsh_candidate_pairs(
-            _sigs(spark, 200), rows_per_band=RPB, max_bucket_size=50
-        )
+        capped = lsh_candidate_pairs(_sigs(spark, 200), max_bucket_size=50)
         plan = capped._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
             capped._jdf.queryExecution(), "formatted"
         )

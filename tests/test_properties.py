@@ -1288,18 +1288,15 @@ def test_stream_ingest_drained_state_equals_batch_ingest(spark):
     (not just both matching DuckDB): same novel keepers whatever the
     micro-batch split, with n_copies counting batch-2 arrivals."""
     from mongo_polars_reconciliation_spark.extensions.dedup import ingest_novel
+    from mongo_polars_reconciliation_spark.harness.fixtures import (
+        exact_ingest_split,
+    )
     from mongo_polars_reconciliation_spark.harness.queries import (
         stream_ingest_novel,
     )
 
     sf = "/root/testdata/sf0.001"
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    b1 = docs.where(F.col("doc_id") % 3 < 2)
-    b2 = docs.where(F.col("doc_id") % 3 == 2).select("doc_id", "text").unionByName(
-        docs.where(F.col("doc_id") % 10 == 7).select(
-            (F.col("doc_id") + 100000).alias("doc_id"), "text"
-        )
-    )
+    b1, b2 = exact_ingest_split(spark, sf)
     empty = spark.createDataFrame([], "text_hash string")
     batch = {
         r["text_hash"]: r["doc_id"]
@@ -3147,11 +3144,11 @@ def test_payload_block_near_dup_matches_python_model(spark):
 )
 def test_greedy_admit_matches_python_sequential_model(spark, edges):
     """Randomized pin of the sequential-arrival admission: on arbitrary
-    near-dup graphs, _greedy_admit equals the doc-at-a-time Python
+    near-dup graphs, greedy_admit equals the doc-at-a-time Python
     greedy (admit v iff no ADMITTED lower neighbor) — the property the
     ingest's batch-split and redelivery contracts rest on."""
-    from mongo_polars_reconciliation_spark.extensions.dedup import (
-        _greedy_admit,
+    from mongo_polars_reconciliation_spark.extensions.ingest_kernel import (
+        greedy_admit,
     )
 
     norm = sorted({(min(a, b), max(a, b)) for a, b in edges})
@@ -3161,7 +3158,7 @@ def test_greedy_admit_matches_python_sequential_model(spark, edges):
     e_df = spark.createDataFrame(norm, "lo long, hi long")
     c_df = spark.createDataFrame([(n,) for n in nodes], "doc_id long")
     got = sorted(
-        r["doc_id"] for r in _greedy_admit(c_df, e_df, "doc_id", 25).collect()
+        r["doc_id"] for r in greedy_admit(c_df, e_df, "doc_id", 25).collect()
     )
     admitted = set()
     for v in nodes:  # id order == arrival order

@@ -1,15 +1,45 @@
-"""Text analysis operators: tokenization, language ID, quality, fingerprints.
+"""Text and corpus-statistics operators: tokenization, language ID,
+quality scoring, PII scrubbing, sampling and mixing, splits, span and
+n-gram statistics, sketches (count-min, Bloom), data cards and BPE.
 
-All JVM-side built-in expressions (split/regexp/md5/windows) — no Python UDFs,
-so every operator stays on the whole-stage-codegen path at 100 TB.
+All JVM-side built-in expressions (split/regexp/md5/windows) — no Python
+UDFs, so every operator stays on the whole-stage-codegen path at 100 TB.
+
+Every operator the DuckDB oracle replays bit-for-bit rests on three
+integer invariants, each written once:
+
+- **One mixed hash.** Sampling buckets, splits (:func:`split_assignment`),
+  sketch rows and Bloom positions hash through
+  ``functions/hashing.py``'s mixed polynomial hash, never ``rand()``.
+- **Double hashing.** The sketches take their base pair ``(h1, h2)``
+  from ``poly_hash_pair`` (two prime moduli); a count-min cell is
+  :func:`cms_cells`'s ``((h1 + j·h2) mod P) mod w``, a Bloom position
+  ``(h1 + j·h2) mod m``.
+- **Integer nearest rank.** Every quantile and cutoff position is
+  ``functions.windows.nearest_rank``, the exact ``ceil(q·n)``, so a
+  reported quantile is an actual data value.
 """
 
 from __future__ import annotations
 
+from fractions import Fraction
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from mongo_polars_reconciliation_spark.functions.hashing import (
+    POLY_P31,
+    poly_hash_mixed_col,
+    poly_hash_pair,
+)
+from mongo_polars_reconciliation_spark.functions.indexing import with_prefix_sum
+from mongo_polars_reconciliation_spark.functions.localrel import inline_local_df
+from mongo_polars_reconciliation_spark.functions.windows import (
+    nearest_rank,
+    single_partition_key,
+)
+from mongo_polars_reconciliation_spark.session import widen
 
 
 def floor4(col: Column) -> Column:
@@ -171,8 +201,6 @@ def pack_sequences(
     first token lands in. The global running offset comes from the two-pass
     distributed prefix sum (functions/indexing.py:with_prefix_sum), so the
     sequential-looking layout is one scan + one tiny broadcast at 100 TB."""
-    from mongo_polars_reconciliation_spark.functions.indexing import with_prefix_sum
-
     toks = df.select(
         F.col(id_col),
         F.size(F.split(F.col(text_col), " ")).cast("long").alias("n_tokens"),
@@ -211,7 +239,7 @@ def write_packed_shards(
     corpora avoid the 8-files-per-task spray ``partitionBy`` alone
     produces.
 
-    ``validate=True`` (r11, advice): the one-file-per-shard contract is
+    ``validate=True``: the one-file-per-shard contract is
     an emergent property of repartition+partitionBy, and session config
     can silently break it — ``spark.sql.files.maxRecordsPerFile`` splits
     a task's output, and two shard values can hash-collide into one task
@@ -249,7 +277,7 @@ def _validate_one_file_per_shard(spark, out_dir: str) -> None:
         # an EMPTY corpus writes only _SUCCESS — no shard dirs, nothing
         # to validate (the read can't infer a schema from zero files);
         # the pre-validation write path has always accepted this. ONLY
-        # that case is swallowed (r12, advice): any other analysis
+        # that case is swallowed: any other analysis
         # failure — bad path, corrupt footer, permissions — must not
         # silently skip validation and let the write appear checked.
         if e.getCondition() == "UNABLE_TO_INFER_SCHEMA":
@@ -332,14 +360,14 @@ def _luhn_valid(cand: Column) -> Column:
     doubles (subtracting 9 when the double exceeds 9). split/arithmetic
     only — mirrors verbatim in any SQL dialect, no UDF.
 
-    Shape note (r12 review): the walk is a ``transform`` over
+    Shape note: the walk is a ``transform`` over
     ``split(stripped, '')`` — the separator-stripping regexp_replace
     appears ONCE in the expression tree. Higher-order-function lambdas
     get no common-subexpression elimination, so the earlier
     sequence(1,16) + substr(stripped, i, 1) form inlined (and
     re-evaluated) the strip 16 times per candidate.
 
-    Version-floor dependency (r13, advice): this relies on
+    Version-floor dependency: this relies on
     ``split(s, '')`` NOT emitting a trailing empty element — the
     SPARK-40194 semantics, Spark >= 3.4. On older Spark the trailing
     ``''`` would cast to a NULL int, poison the aggregate's sum, and
@@ -384,7 +412,7 @@ def pii_scrub(
     of the text alone. Counts are taken per class on the PRE-replacement
     text of that stage, mirroring exactly in SQL.
 
-    The CARD stage (r12, VERDICT r11 #6) is count-then-replace with a
+    The CARD stage is count-then-replace with a
     semantic filter a single regex can't express: 16-digit candidates
     must pass the Luhn mod-10 check (:func:`_luhn_valid`, integer
     arithmetic over ``substr`` digits — no UDF). n_cards counts the
@@ -392,7 +420,7 @@ def pii_scrub(
     match order, rewriting each one word-boundary-anchored — an invalid
     candidate (a random 16-digit run) is left intact and audited as 0.
 
-    Cross-class boundary (r13, advice — INTENDED): because CARD runs
+    Cross-class boundary (INTENDED): because CARD runs
     before PHONE, the card candidate scan can match ACROSS a phone
     number's tail — ``call 555-123-4567 8901 2345 6783`` yields the
     candidate ``4567 8901 2345 6783``, which is Luhn-valid and is
@@ -404,7 +432,7 @@ def pii_scrub(
     that must preserve phone audit counts in that corner would need a
     lookbehind-free two-pass design — out of scope here.
 
-    NULL text scores as EMPTY (r12, the r11 verdict's finding): all
+    NULL text scores as EMPTY: all
     audit counts are 0 — not NULL — and ``text_scrubbed`` stays NULL
     (the doc survives, nothing to scrub; the repo-wide null-text rule).
 
@@ -471,25 +499,35 @@ def stratified_sample(
     reproducible corpus-mixing primitive (e.g. re-weighting languages or
     sources into a training mix). Pure column arithmetic on the scan: no
     shuffle, no Python. Uses the MIXED hash (functions/hashing.py) so the
-    realized rate tracks the target even for short numeric ids."""
-    from mongo_polars_reconciliation_spark.functions.hashing import (
-        poly_hash_mixed_col,
-    )
+    realized rate tracks the target even for short numeric ids.
 
+    Every rate, ``default_rate`` included, must lie in [0, 1]: a rate
+    outside it would silently drop or keep a whole stratum, so it raises
+    ``ValueError`` naming the stratum (the sampler rule :func:`mix_epochs`
+    follows)."""
+    for k, r in list(rates.items()) + [("default_rate", default_rate)]:
+        if not 0 <= r <= 1:  # also catches NaN: every comparison is False
+            raise ValueError(
+                f"stratified_sample: rate for {k!r} must be in [0, 1], got {r}"
+            )
     h = F.pmod(poly_hash_mixed_col(id_col), F.lit(denom))
-    threshold = None
-    for k in sorted(rates):
-        cond = F.col(strata_col) == k
-        val = F.lit(int(rates[k] * denom))
-        threshold = (
-            F.when(cond, val) if threshold is None else threshold.when(cond, val)
-        )
-    threshold = (
-        threshold.otherwise(F.lit(int(default_rate * denom)))
-        if threshold is not None
-        else F.lit(int(default_rate * denom))
+    threshold = _per_stratum(
+        strata_col,
+        {k: int(r * denom) for k, r in rates.items()},
+        int(default_rate * denom),
     )
     return df.where(h < threshold)
+
+
+def _per_stratum(col: str, values: dict, default) -> Column:
+    """``values[stratum]`` of the stratum column ``col`` as one literal
+    when-chain over the sorted strata, ``default`` for any other value
+    (a NULL stratum included)."""
+    out = None
+    for k in sorted(values):
+        cond, v = F.col(col) == k, F.lit(values[k])
+        out = F.when(cond, v) if out is None else out.when(cond, v)
+    return out.otherwise(F.lit(default)) if out is not None else F.lit(default)
 
 
 def quality_gate_adaptive(
@@ -521,7 +559,7 @@ def quality_gate_adaptive(
     map-only filter. quality_r is floor4-quantized, so the cutoff
     comparison is bit-exact cross-engine.
 
-    NULL text scores as empty text (r9 advice; the shared null-text rule
+    NULL text scores as empty text (the shared null-text rule
     of leakage_safe_split/source_overlap): without the coalesce a NULL
     text yields NULL quality_r, and the two engines ORDER it to opposite
     ends (Spark ASC puts NULLs FIRST, the oracle's ROW_NUMBER puts them
@@ -575,11 +613,6 @@ def sample_fixed_per_stratum(
     of the data. The filter is deterministic and oracle-replayable; pick
     frac ≫ k/|stratum| (say 4×) and the exact same k rows come out.
     Default None = exact path, no assumption."""
-    from mongo_polars_reconciliation_spark.functions.hashing import (
-        POLY_P31,
-        poly_hash_mixed_col,
-    )
-
     h = poly_hash_mixed_col(id_col)
     base = df.select(F.col(strata_col), F.col(id_col), h.alias("__h"))
     if prefilter_frac is not None:
@@ -603,10 +636,10 @@ def sample_shortfall_audit(
     id_col: str = "doc_id",
     prefilter_frac: "float | None" = None,
 ) -> DataFrame:
-    """Audit face of :func:`sample_fixed_per_stratum`'s prefilter fast path
-    (r9 advice): the prefilter silently returns FEWER than k rows per
-    stratum when frac·|stratum| < k — the docstring noted the
-    precondition, nothing detected a violation. Per stratum:
+    """Audit face of :func:`sample_fixed_per_stratum`'s prefilter fast path:
+    the prefilter silently returns FEWER than k rows per
+    stratum when frac·|stratum| < k, a precondition nothing else
+    detects. Per stratum:
     (strata, n_rows, n_eligible, n_sampled, shortfall) where n_eligible
     counts rows surviving the hash prefilter, n_sampled = what the sample
     would return = min(k, n_eligible), and
@@ -619,11 +652,6 @@ def sample_shortfall_audit(
     Scale shape: two map-side-combined count aggregates on the stratum
     key (no window, no sort) — strictly cheaper than the sample itself,
     so auditing every ingest is affordable."""
-    from mongo_polars_reconciliation_spark.functions.hashing import (
-        POLY_P31,
-        poly_hash_mixed_col,
-    )
-
     h = poly_hash_mixed_col(id_col)
     base = df.select(F.col(strata_col), F.col(id_col), h.alias("__h"))
     elig = (
@@ -674,7 +702,7 @@ def line_dedup_corpus(
     constant-time lookups into the document's OWN line array — bounded
     by document size, never corpus-shaped, never quadratic.
 
-    Shuffle-key posture (r11, VERDICT r10): the aggregate and the
+    Shuffle-key posture: the aggregate and the
     survivor join key on ``md5(line)`` — a fixed 32-char digest — not the
     raw line string. Corpus-hot boilerplate lines are LONG (footers,
     license blocks), so digest keys cut the first-occurrence aggregate's
@@ -702,7 +730,7 @@ def _line_dedup_joined(df, id_col, text_col):
     every line was a corpus repeat. See :func:`line_dedup_corpus` for
     the skew and shuffle-key posture.
 
-    Text moves through exactly ONE shuffle (r11): the per-document line
+    Text moves through exactly ONE shuffle: the per-document line
     collection (groupBy id over the exploded lines). The first-occurrence
     aggregate's output IS the survivor coordinate set {(id, line_no)} —
     digest-keyed, text-free — collapsed to one SORTED survivor-index
@@ -713,7 +741,7 @@ def _line_dedup_joined(df, id_col, text_col):
     work O(L log L) for the sort, never quadratic, and bounded by
     document size, never corpus-shaped.
 
-    NULL text scores as EMPTY (r12, the r11 verdict's defect find):
+    NULL text scores as EMPTY:
     ``posexplode(split(NULL))`` yields no rows, so a NULL-text doc would
     otherwise never reach ``doc_lines`` and VANISH from the output — the
     silent-corpus-loss failure mode this module's contracts forbid. The
@@ -761,7 +789,7 @@ def _line_dedup_joined(df, id_col, text_col):
         F.size(F.col("__all")).cast("long").alias("n_lines"),
         # NOT coalesce(size(...), 0): under non-ANSI mode size(NULL)
         # returns -1 (non-null), so the coalesce never fires and an
-        # emptied-out doc would report n_kept=-1 (r12, advice) —
+        # emptied-out doc would report n_kept=-1 —
         # inconsistent with this module's deliberate non-ANSI hardening
         F.when(F.col("__keep_lns").isNull(), F.lit(0))
         .otherwise(F.size(F.col("__keep_lns")))
@@ -776,8 +804,8 @@ def line_dedup_trim(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """C4 corpus-wide line dedup that EMITS the cleaned corpus (r11,
-    VERDICT r10 #2): same first-global-occurrence semantics as
+    """C4 corpus-wide line dedup that EMITS the cleaned corpus: same
+    first-global-occurrence semantics as
     :func:`line_dedup_corpus` (whose output is the audit digest), but the
     reassembled surviving TEXT is returned so the next pipeline stage can
     consume it — the ``trim_duplicate_spans`` treatment applied to the
@@ -794,7 +822,7 @@ def _div_exact(a: Column, b: Column) -> Column:
     """Exact floor division of non-negative DECIMAL(38,0) columns.
 
     Neither Spark primitive is safe here: ``DIV`` returns BIGINT (wraps
-    past 2^63, the r10 advice finding) and decimal ``/`` adjusts
+    past 2^63) and decimal ``/`` adjusts
     precision/scale and may ROUND under allowPrecisionLoss. Instead the
     numerator is first made an exact multiple of b (``a - a % b``, both
     exact decimal ops), so the mathematical quotient is an integer and
@@ -817,7 +845,7 @@ _ISQRT_DEC_MAX = "9999999999999999999"
 def _isqrt_dec_steps(df: DataFrame, src: str, out: str) -> DataFrame:
     """Append ``out`` = exact integer square root of the non-negative
     DECIMAL(38,0) column ``src``. A plain BIGINT float-seed ±1 correction
-    (the r10 form this supersedes) is exact only while q fits BIGINT; at
+    is exact only while q fits BIGINT; at
     q ≈ 10^38 the double seed is off by up to ~1.2e3, so here two
     integer Newton steps in exact decimal arithmetic contract the seed
     error below 2 (e' ≲ e²/2√q + 1.5) and a ±2 correction ladder
@@ -886,7 +914,7 @@ def _isqrt_unscale_steps(
 ) -> DataFrame:
     """Append ``out`` = exact isqrt of DECIMAL(38,0) ``q_col``, seeded
     from ``root_col`` = isqrt of the SAME quotient computed at a
-    ``denom``²-finer scale (the α=3/4 fusion, r13: w_{1/2} recovered
+    ``denom``²-finer scale (the α=3/4 fusion: w_{1/2} recovered
     from the q4 chain's first root instead of a second full Newton
     chain). Precondition: with x the underlying real quotient,
     ``q_col`` = floor(x) and ``root_col`` = isqrt(floor(x·denom²)) —
@@ -959,10 +987,10 @@ def mix_temperature(
     1 = inverse-frequency balance). Dyadic denominators keep the weight
     EXACT: α = a/2^b needs only nested integer square roots.
 
-    Exactness (r11, upgraded per the r10 advice): float ``pow``/``sqrt``
-    pipelines can differ in the last bit across engines, and the r10
-    BIGINT pipeline silently wrapped once n_max · denom² passed 2^63 —
-    so every quantity is now DECIMAL(38,0) with exact floor division
+    Exactness: float ``pow``/``sqrt`` pipelines can differ in the last
+    bit across engines, and a BIGINT pipeline silently wraps once
+    n_max · denom² passes 2^63 — so every quantity is DECIMAL(38,0)
+    with exact floor division
     (:func:`_div_exact`) and exact decimal isqrt (:func:`_isqrt_dec_steps`):
       α=1      → w_q = (n_max·denom)            DIV n
       α=1/2    → w_q = isqrt((n_max·denom²)     DIV n)
@@ -972,8 +1000,8 @@ def mix_temperature(
     w_q DIV denom; the fractional copy comes from the shared mixed-hash
     threshold (pmod(h, denom) < w_q mod denom) — every realized copy a
     pure function of the id, bit-identical in DuckDB. Values at α=1/2
-    are unchanged from the r10 BIGINT spec wherever that didn't overflow
-    (same floor/isqrt math, parity-pinned). Bounds: two constraints,
+    equal the BIGINT form's wherever that does not overflow (same
+    floor/isqrt math, parity-pinned). Bounds: two constraints,
     both astronomically above real corpora — the multiplication needs
     n_max·denom^(2^b) ≤ 10^38 (n_max ≤ 10^22 at den=4, 10^30 at den=2,
     denom=10⁴), and :func:`_div_exact`'s decimal(38,6) quotient needs
@@ -992,10 +1020,6 @@ def mix_temperature(
 
     Output: (id, stratum, w_q, epoch) — w_q is the applied weight in
     1/denom units, for the mix audit."""
-    from mongo_polars_reconciliation_spark.functions.hashing import (
-        poly_hash_mixed_col,
-    )
-
     num, den = alpha
     if den not in (1, 2, 4) or not 0 < num <= den:
         raise ValueError(
@@ -1010,12 +1034,8 @@ def mix_temperature(
     # single-partition window over the COLLAPSED |strata|-row frame — the
     # correct plan at any scale, but a foldable lit(1) key is optimized
     # to an empty spec and WindowExec then logs its data-scale warning on
-    # every run (r12, VERDICT r11 #3: 3+ spurious warnings per bench run
-    # would mask a REAL global-window regression elsewhere)
-    from mongo_polars_reconciliation_spark.functions.windows import (
-        single_partition_key,
-    )
-
+    # every run (3+ spurious warnings per bench run would mask a REAL
+    # global-window regression elsewhere)
     w_all = Window.partitionBy(single_partition_key())
     nmax = F.col("__nmaxd")
     n = F.col("__nd")
@@ -1034,7 +1054,7 @@ def mix_temperature(
         wdf = _isqrt_dec_steps(wdf, "__q4", "__r4")
         wdf = _isqrt_dec_steps(wdf, "__r4", "__w")
     else:  # (3, 4): binary-expansion product w_{1/2} · w_{1/4} / denom
-        # fused chain (r13, VERDICT r12 #3): both roots come off the ONE
+        # fused chain: both roots come off the ONE
         # q4 Newton chain — r4 = isqrt(q4) already carries w_{1/2} at
         # denom-finer scale, so it is recovered by exact floor division
         # + a ±1 ladder (:func:`_isqrt_unscale_steps`, bit-identical by
@@ -1121,10 +1141,6 @@ def mix_epochs(
     map-only, no shuffle, output inherits the input partitioning. Uses the
     MIXED hash (functions/hashing.py): raw poly-hash values of short
     numeric ids sit in narrow bands and skew the realized rates badly."""
-    from mongo_polars_reconciliation_spark.functions.hashing import (
-        poly_hash_mixed_col,
-    )
-
     # loud-failure posture: a negative
     # weight would silently floor to 0 copies with a negative fractional
     # threshold, and NaN would silently zero out a stratum
@@ -1133,18 +1149,15 @@ def mix_epochs(
             raise ValueError(f"mix_epochs: weight for {k!r} must be >= 0, got {w}")
 
     h = F.pmod(poly_hash_mixed_col(id_col), F.lit(denom))
-    base = None
-    thr = None
-    for k in sorted(weights):
-        w = weights[k]
-        cond = F.col(strata_col) == k
-        b, t = F.lit(int(w)), F.lit(int(round((w - int(w)) * denom)))
-        base = F.when(cond, b) if base is None else base.when(cond, b)
-        thr = F.when(cond, t) if thr is None else thr.when(cond, t)
     dw = default_weight
-    db, dt = F.lit(int(dw)), F.lit(int(round((dw - int(dw)) * denom)))
-    base = base.otherwise(db) if base is not None else db
-    thr = thr.otherwise(dt) if thr is not None else dt
+    base = _per_stratum(
+        strata_col, {k: int(w) for k, w in weights.items()}, int(dw)
+    )
+    thr = _per_stratum(
+        strata_col,
+        {k: int(round((w - int(w)) * denom)) for k, w in weights.items()},
+        int(round((dw - int(dw)) * denom)),
+    )
     n_copies = base + F.when(h < thr, F.lit(1)).otherwise(F.lit(0))
     return (
         df.withColumn("__n", n_copies)
@@ -1321,10 +1334,6 @@ def language_id(
     """Stopword-ratio language ID: explode tokens, join the (broadcast)
     stopword dictionary, score per (doc, lang), argmax with deterministic
     tie-break (score desc, lang asc). One shuffle on doc_id."""
-    from mongo_polars_reconciliation_spark.functions.localrel import (
-        inline_local_df,
-    )
-
     spark = df.sparkSession
     # both dictionary tables are driver-known constants: literal plans
     sw = inline_local_df(
@@ -1400,7 +1409,7 @@ def fused_doc_scores(
     the scan instead of three scans + two whole-corpus hash shuffles
     (explode/join/window) that the operator-per-frame composition costs.
 
-    ``c4=True`` (r9) appends the two cheap C4-residual signals real
+    ``c4=True`` appends the two cheap C4-residual signals real
     curation gates on FIRST (Raffel et al. 2020 §2.2's line heuristics,
     doc-level): ``n_sentences`` (segments between terminal punctuation
     with at least one non-space char), ``term_sent_ratio_r`` (terminal
@@ -1412,7 +1421,7 @@ def fused_doc_scores(
     the oracle replays them bit-for-bit. Default off: every existing
     caller's output is unchanged.
 
-    ``gopher=True`` (r10) appends the remaining Gopher rule-filter
+    ``gopher=True`` appends the remaining Gopher rule-filter
     signals (Rae et al. 2021 §A1.1.1 — the non-repetition half;
     repetition lives in :func:`repetition_signals`): ``n_lines``,
     ``bullet_line_frac_r`` / ``ellipsis_line_frac_r`` (share of lines
@@ -1699,7 +1708,7 @@ def bigram_lm_scores(
     ).localCheckpoint(eager=False)
     # ^ pairs is consumed twice (corpus counts AND the per-doc probability
     # join); without the checkpoint the explode runs both times (measured
-    # r8, interleaved 3 reps at sf0.1: 1.06 -> 0.81 s warm min)
+    # interleaved, 3 reps at sf0.1: 1.06 -> 0.81 s warm min)
     c2 = (
         pairs.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c2"))
@@ -1777,17 +1786,15 @@ def lm_typicality_buckets(
         F.sum("c").over(w_all).alias("n"),
     )
     cuts = cum.groupBy(lang_col).agg(
-        F.max(
-            F.when(
-                F.col("cum") >= F.expr("(n + 2) div 3"), F.col("lm_score_q")
-            )
-        ).alias("cut1"),
-        F.max(
-            F.when(
-                F.col("cum") >= F.expr("(2 * n + 2) div 3"),
-                F.col("lm_score_q"),
-            )
-        ).alias("cut2"),
+        *[
+            F.max(
+                F.when(
+                    F.col("cum") >= nearest_rank(Fraction(i, 3), "n"),
+                    F.col("lm_score_q"),
+                )
+            ).alias(f"cut{i}")
+            for i in (1, 2)
+        ]
     )
     # null-safe join: docs with a NULL language form their own stratum
     # (the aggregates above already grouped them) — a plain equi-join
@@ -1840,6 +1847,41 @@ def ngram_frequencies(
     )
 
 
+def cms_cells(frame: DataFrame, d: int, w: int, *carry: str) -> DataFrame:
+    """The count-min cells of every ``tok`` row of ``frame``: one
+    ``(carry…, j, b)`` row per sketch row ``j < d``, with
+    ``b = ((h1 + j·h2) mod POLY_P31) mod w`` over the
+    :func:`~mongo_polars_reconciliation_spark.functions.hashing.poly_hash_pair`
+    of the token — the one definition of a CMS cell, shared by the batch
+    counters, the top-k probes and the streaming counter state."""
+    h1, h2 = poly_hash_pair("tok")
+    cells = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(j).cast("int").alias("j"),
+                    F.pmod(F.pmod(h1 + F.lit(j) * h2, F.lit(POLY_P31)), F.lit(w)).alias("b"),
+                )
+                for j in range(d)
+            ]
+        )
+    ).alias("jb")
+    return frame.select(*carry, cells).select(
+        *carry, F.col("jb.j").alias("j"), F.col("jb.b").alias("b")
+    )
+
+
+def _cms_counters(vocab: DataFrame, d: int, w: int, out: str) -> DataFrame:
+    """The d×w counters ``(j, b, out)`` from a ``(tok, n_exact)``
+    vocabulary: each distinct token is hashed once and weights its cells
+    by its occurrence count (vocab-first)."""
+    return (
+        cms_cells(vocab, d, w, "n_exact")
+        .groupBy("j", "b")
+        .agg(F.sum("n_exact").alias(out))
+    )
+
+
 def heavy_hitters_cms(
     df: DataFrame,
     d: int = 3,
@@ -1857,14 +1899,14 @@ def heavy_hitters_cms(
     partial-aggregation contract as the KMV sketch), and estimates can
     only OVERcount (min over d rows), never undercount.
 
-    Bucket family: the standard double-hashing rows ``g_j = (h1 + j·h2)
-    mod p mod w`` (Kirsch & Mitzenmacher 2006) with two genuinely
-    different base hashes — the same polynomial fold under two DIFFERENT
-    prime moduli (functions/hashing.py:POLY_P31B has the why, and why the
-    two prior h2 designs — reversed token (r7: h1 == h2 for palindromes,
-    incl. every 1-char token) and salt-prefixed token (same-length
-    collisions propagate) — were rejected). If h2(x) = 0 (prob 1/p2)
-    the d rows coincide for that token — estimates still never
+    Bucket family: :func:`cms_cells`, the standard double-hashing rows
+    ``g_j = (h1 + j·h2) mod p mod w`` (Kirsch & Mitzenmacher 2006) with
+    two genuinely different base hashes — the same polynomial fold under
+    two DIFFERENT prime moduli (functions/hashing.py:POLY_P31B has the
+    why, and why the two prior h2 designs — reversed token (h1 == h2 for
+    palindromes, incl. every 1-char token) and salt-prefixed token
+    (same-length collisions propagate) — were rejected). If h2(x) = 0
+    (prob 1/p2) the d rows coincide for that token — estimates still never
     undercount, the sketch just loses row-independence for that key.
 
     Determinism: bucket hashes derive from the cross-engine mixed
@@ -1877,69 +1919,22 @@ def heavy_hitters_cms(
     at d·w per partition; the exact top-k is a (token) hash-aggregate +
     TakeOrderedAndProject; estimates join the k×d probe rows (broadcast)
     against the d·w counter rows. Nothing driver-side beyond k rows."""
-    from mongo_polars_reconciliation_spark.functions.hashing import (
-        POLY_P31,
-        POLY_P31B,
-        poly_hash_mixed_col,
-    )
-    from mongo_polars_reconciliation_spark.functions.windows import (
-        single_partition_key,
-    )
-
-    tok = df.select(F.explode(F.split(F.col(text_col), " ")).alias("tok"))
-    h1 = poly_hash_mixed_col("tok", POLY_P31)
-    h2 = poly_hash_mixed_col("tok", POLY_P31B)
-
-    def bucket(j: int):
-        return F.pmod(
-            F.pmod(h1 + F.lit(j) * h2, F.lit(POLY_P31)),
-            F.lit(w),
-        )
-
-    rows = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(j).cast("int").alias("j"), bucket(j).alias("b")
-                )
-                for j in range(d)
-            ]
-        )
-    ).alias("jb")
     # Aggregate occurrences to the (vocab-sized) distinct-token frame
     # FIRST, then hash each distinct token once and weight its counter
     # contribution by the occurrence count — same integer sums bit-for-
     # bit, but the two interpreted hash folds run |vocab| times instead
-    # of |corpus tokens| times (measured r7 at sf0.1: 3.43→1.09 s warm
-    # min, after the double-hash family had doubled per-occurrence fold
-    # work). The (j, b) aggregate's input also shrinks from
+    # of |corpus tokens| times (measured at sf0.1: 3.43→1.09 s warm
+    # min). The (j, b) aggregate's input also shrinks from
     # d·occurrences to d·vocab rows.
     exact = (
-        tok.groupBy("tok")
+        df.select(F.explode(F.split(F.col(text_col), " ")).alias("tok"))
+        .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("n_exact"))
         .localCheckpoint(eager=False)
     )
-    counters = (
-        exact.select("n_exact", rows)
-        .select(F.col("jb.j").alias("j"), F.col("jb.b").alias("b"), "n_exact")
-        .groupBy("j", "b")
-        .agg(F.sum("n_exact").alias("cnt"))
-    )
+    counters = _cms_counters(exact, d, w, "cnt")
     topk = exact.orderBy(F.col("n_exact").desc(), F.col("tok").asc()).limit(k)
-    probes = topk.select(
-        "tok",
-        "n_exact",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).cast("int").alias("j"), bucket(j).alias("b")
-                    )
-                    for j in range(d)
-                ]
-            )
-        ).alias("jb"),
-    ).select("tok", "n_exact", F.col("jb.j").alias("j"), F.col("jb.b").alias("b"))
+    probes = cms_cells(topk, d, w, "tok", "n_exact")
     est = (
         F.broadcast(probes)
         .join(counters, ["j", "b"])
@@ -2008,6 +2003,20 @@ def ngram_novelty(
     )
 
 
+def split_assignment(key: str) -> list[Column]:
+    """The deterministic 80/10/10 train/val/test assignment of the key
+    column ``key``: ``bucket`` = its mixed polynomial hash mod 100, and
+    ``split`` = train below 80, val below 90, else test. A pure function
+    of the key — no rand(), stable across runs, engines and cluster
+    shapes. The mixed hash matters: raw poly-hash bands of short numeric
+    ids skew the proportions."""
+    h = F.pmod(poly_hash_mixed_col(key), F.lit(100))
+    return [
+        h.alias("bucket"),
+        F.when(h < 80, "train").when(h < 90, "val").otherwise("test").alias("split"),
+    ]
+
+
 def leakage_safe_split(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -2030,15 +2039,11 @@ def leakage_safe_split(
     deterministic mixed-hash bucket arithmetic as ``text_split_assign``:
     no rand(), stable across runs/engines/cluster shapes.
 
-    NULL text digests as the empty string (r8 fix): md5(NULL) is NULL and
-    a NULL key never matches the join back, so a null-text doc previously
-    received NO assignment and silently vanished — the one outcome a
-    split assigner must never produce. Null-text docs now land in the
-    empty-text group (deterministic, same split for all of them)."""
-    from mongo_polars_reconciliation_spark.functions.hashing import (
-        poly_hash_mixed_col,
-    )
-
+    NULL text digests as the empty string: md5(NULL) is NULL and a NULL
+    key never matches the join back, so a null-text doc would receive NO
+    assignment and silently vanish — the one outcome a split assigner
+    must never produce. Null-text docs land in the empty-text group
+    (deterministic, same split for all of them)."""
     digest = F.md5(
         F.coalesce(F.col(text_col), F.lit("")).cast("binary")
     ).alias("__dg")
@@ -2047,19 +2052,10 @@ def leakage_safe_split(
         .groupBy("__dg")
         .agg(F.min(id_col).alias("rep_id"))
     )
-    h = F.pmod(poly_hash_mixed_col("rep_id"), F.lit(100))
     return (
         df.select(F.col(id_col), digest)
         .join(reps, "__dg")
-        .select(
-            F.col(id_col),
-            "rep_id",
-            h.alias("bucket"),
-            F.when(h < 80, "train")
-            .when(h < 90, "val")
-            .otherwise("test")
-            .alias("split"),
-        )
+        .select(F.col(id_col), "rep_id", *split_assignment("rep_id"))
     )
 
 
@@ -2108,12 +2104,6 @@ def bloom_decontaminate(
     runs as Spark jobs before this function returns); the relational
     path stays fully lazy."""
     from mongo_polars_reconciliation_spark.extensions.dedup import shingles
-    from mongo_polars_reconciliation_spark.functions.hashing import (
-        POLY_P31,
-        POLY_P31B,
-        poly_hash_mixed_col,
-    )
-    from mongo_polars_reconciliation_spark.session import widen
 
     def hashed_grams(df: DataFrame, idc: str) -> DataFrame:
         # widen-if-narrow: the gram hash is two interpreted char folds per
@@ -2122,23 +2112,19 @@ def bloom_decontaminate(
         # (measured: ONE, 9.2 s total) unless widened first. A no-op
         # at real scale, mandatory at test scale.
         sh = widen(shingles(df, idc, text_col, n), idc)
-        return sh.select(
-            F.col(idc),
-            poly_hash_mixed_col("shingle", POLY_P31).alias("h1"),
-            poly_hash_mixed_col("shingle", POLY_P31B).alias("h2"),
-        )
+        h1, h2 = poly_hash_pair("shingle")
+        return sh.select(F.col(idc), h1.alias("h1"), h2.alias("h2"))
+
+    def pos(j: int) -> Column:
+        # the j-th Bloom position of a gram: no inner POLY_P31 reduction,
+        # unlike a CMS cell
+        return F.pmod(F.col("h1") + F.lit(j) * F.col("h2"), F.lit(m_bits))
 
     def positions() -> Column:
         return F.explode(
             F.array(
                 *[
-                    F.struct(
-                        F.lit(j).cast("int").alias("j"),
-                        F.pmod(
-                            F.col("h1") + F.lit(j) * F.col("h2"),
-                            F.lit(m_bits),
-                        ).alias("p"),
-                    )
+                    F.struct(F.lit(j).cast("int").alias("j"), pos(j).alias("p"))
                     for j in range(k_hashes)
                 ]
             )
@@ -2168,12 +2154,7 @@ def bloom_decontaminate(
                 F.col(id_col),
                 "h1",
                 "h2",
-                *[
-                    F.pmod(
-                        F.col("h1") + F.lit(j) * F.col("h2"), F.lit(m_bits)
-                    ).alias(f"__p{j}")
-                    for j in range(k_hashes)
-                ],
+                *[pos(j).alias(f"__p{j}") for j in range(k_hashes)],
             )
             .withColumn("__bm", F.expr(bm_sql))
         )
@@ -2242,19 +2223,8 @@ def cluster_safe_split(
     copies — can never straddle train/eval. Map-only over the cluster
     table (the hash is pure column arithmetic); the clustering itself
     carries whatever cost its operator documents."""
-    from mongo_polars_reconciliation_spark.functions.hashing import (
-        poly_hash_mixed_col,
-    )
-
-    h = F.pmod(poly_hash_mixed_col(cluster_col), F.lit(100))
     return clusters.select(
-        F.col(id_col),
-        F.col(cluster_col),
-        h.alias("bucket"),
-        F.when(h < 80, "train")
-        .when(h < 90, "val")
-        .otherwise("test")
-        .alias("split"),
+        F.col(id_col), F.col(cluster_col), *split_assignment(cluster_col)
     )
 
 
@@ -2275,15 +2245,15 @@ def cms_merge_check(
     source/day and combined without rescanning (same pin shape as
     ``events_kmv_merge`` for the KMV sketch).
 
-    The two sides are INDEPENDENTLY constructed (r8, advice item): each
-    partial sketch comes from its own filtered scan of the source
-    (``xxhash64(id) mod n_splits`` — a total, never-null partition of the
-    rows), and the global side re-derives vocabulary and counters from an
-    unfiltered scan. The previous form aggregated ONE checkpointed bucket
-    frame twice, so merged == global was an algebraic identity (SUM
-    associativity) that could not fail whatever the sketch did; now a
-    rewrite whose partials stop being mergeable (e.g. any split-dependent
-    hashing or width) diverges. The comparison is a FULL OUTER join, so a
+    The two sides are INDEPENDENTLY constructed: each partial sketch comes
+    from its own filtered scan of the source (``xxhash64(id) mod
+    n_splits`` — a total, never-null partition of the rows), and the
+    global side re-derives vocabulary and counters from an unfiltered
+    scan. Aggregating ONE bucket frame twice would make merged == global
+    an algebraic identity (SUM associativity) that could not fail
+    whatever the sketch did; here a rewrite whose partials stop being
+    mergeable (e.g. any split-dependent hashing or width) diverges. The
+    comparison is a FULL OUTER join, so a
     bucket present on only one side surfaces as a NULL (hash-mismatch at
     the driver) instead of being silently dropped by an inner join.
 
@@ -2295,41 +2265,12 @@ def cms_merge_check(
     builder (``heavy_hitters_cms`` scans once)."""
 
     def counters(frame: DataFrame, out: str) -> DataFrame:
-        from mongo_polars_reconciliation_spark.functions.hashing import (
-            POLY_P31,
-            POLY_P31B,
-            poly_hash_mixed_col,
+        vocab = (
+            frame.select(F.explode(F.split(F.col(text_col), " ")).alias("tok"))
+            .groupBy("tok")
+            .agg(F.count(F.lit(1)).alias("n_exact"))
         )
-
-        tok = frame.select(
-            F.explode(F.split(F.col(text_col), " ")).alias("tok")
-        )
-        h1 = poly_hash_mixed_col("tok", POLY_P31)
-        h2 = poly_hash_mixed_col("tok", POLY_P31B)
-        rows = F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).cast("int").alias("j"),
-                        F.pmod(
-                            F.pmod(h1 + F.lit(j) * h2, F.lit(POLY_P31)),
-                            F.lit(w),
-                        ).alias("b"),
-                    )
-                    for j in range(d)
-                ]
-            )
-        ).alias("jb")
-        # vocab-first (as in heavy_hitters_cms): hash each distinct token
-        # once, weight the counter contribution by its occurrence count
-        return (
-            tok.groupBy("tok")
-            .agg(F.count(F.lit(1)).alias("occ"))
-            .select("occ", rows)
-            .select(F.col("jb.j").alias("j"), F.col("jb.b").alias("b"), "occ")
-            .groupBy("j", "b")
-            .agg(F.sum("occ").alias(out))
-        )
+        return _cms_counters(vocab, d, w, out)
 
     split = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_splits))
     partials = [
@@ -2365,8 +2306,8 @@ def corpus_datacard(
     (``fused_doc_scores``) then one shuffle on the (source, lang) key that
     serves both the rank window and the final aggregate — no global sort,
     no second scan. Quantiles are nearest-rank in integer arithmetic
-    (rank = ceil(q·n) as (num·n+den−1) DIV den) so every reported number
-    is an actual data value, hash-identical across engines."""
+    (``functions.windows.nearest_rank``) so every reported number is an
+    actual data value, hash-identical across engines."""
     scored = fused_doc_scores(
         df, id_col=id_col, text_col=text_col, keep=(source_col, lang_col)
     )
@@ -2377,8 +2318,6 @@ def corpus_datacard(
     ranked = scored.withColumn("__rn", F.row_number().over(w)).withColumn(
         "__n", F.count(F.lit(1)).over(grp)
     )
-    p50 = F.expr("(1 * __n + 1) DIV 2")
-    p90 = F.expr("(9 * __n + 9) DIV 10")
     return ranked.groupBy(source_col, lang_col).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("ws_tokens").alias("total_ws_tokens"),
@@ -2386,8 +2325,12 @@ def corpus_datacard(
             F.sum(F.col("quality_r").cast("decimal(18,4)")).cast("double")
             / F.count(F.lit(1))
         ).alias("avg_quality_r"),
-        F.max(F.when(F.col("__rn") == p50, F.col("ws_tokens"))).alias("p50_tokens"),
-        F.max(F.when(F.col("__rn") == p90, F.col("ws_tokens"))).alias("p90_tokens"),
+        *[
+            F.max(F.when(F.col("__rn") == nearest_rank(q), F.col("ws_tokens"))).alias(
+                f"p{round(q * 100)}_tokens"
+            )
+            for q in (0.5, 0.9)
+        ],
     )
 
 
@@ -2399,7 +2342,7 @@ def datacard_state(
     lang_col: str = "lang",
 ) -> DataFrame:
     """The EXACT mergeable sufficient statistic behind
-    :func:`corpus_datacard` (r10): one row per (source, lang, ws_tokens)
+    :func:`corpus_datacard`: one row per (source, lang, ws_tokens)
     carrying the doc count and the DECIMAL quality sum. Because
     ``ws_tokens`` is a small integer, this histogram is sketch-sized
     (groups × distinct lengths) yet loses NOTHING: counts and decimal
@@ -2462,20 +2405,18 @@ def datacard_from_state(
         F.sum("c").over(w_cum).alias("__cum"),
         F.sum("c").over(grp).alias("__n"),
     )
-    k50 = F.expr("(1 * __n + 1) DIV 2")
-    k90 = F.expr("(9 * __n + 9) DIV 10")
     return cum.groupBy(source_col, lang_col).agg(
         F.sum("c").alias("n_docs"),
         F.sum(F.col("ws_tokens") * F.col("c")).alias("total_ws_tokens"),
         floor4(F.sum("q_sum").cast("double") / F.sum("c")).alias(
             "avg_quality_r"
         ),
-        F.min(F.when(F.col("__cum") >= k50, F.col("ws_tokens"))).alias(
-            "p50_tokens"
-        ),
-        F.min(F.when(F.col("__cum") >= k90, F.col("ws_tokens"))).alias(
-            "p90_tokens"
-        ),
+        *[
+            F.min(F.when(F.col("__cum") >= nearest_rank(q), F.col("ws_tokens"))).alias(
+                f"p{round(q * 100)}_tokens"
+            )
+            for q in (0.5, 0.9)
+        ],
     )
 
 
@@ -2512,35 +2453,18 @@ def datacard_merge_check(
         lang_col,
     )
     global_card = corpus_datacard(df, id_col, text_col, source_col, lang_col)
-    m = merged.select(
-        F.col(source_col),
-        F.col(lang_col),
-        *[
-            F.col(c).alias(f"merged_{c}")
-            for c in (
-                "n_docs",
-                "total_ws_tokens",
-                "avg_quality_r",
-                "p50_tokens",
-                "p90_tokens",
-            )
-        ],
+    metrics = ("n_docs", "total_ws_tokens", "avg_quality_r", "p50_tokens", "p90_tokens")
+
+    def side(card: DataFrame, prefix: str) -> DataFrame:
+        return card.select(
+            F.col(source_col),
+            F.col(lang_col),
+            *[F.col(c).alias(f"{prefix}_{c}") for c in metrics],
+        )
+
+    return side(merged, "merged").join(
+        side(global_card, "global"), [source_col, lang_col], "full_outer"
     )
-    g = global_card.select(
-        F.col(source_col),
-        F.col(lang_col),
-        *[
-            F.col(c).alias(f"global_{c}")
-            for c in (
-                "n_docs",
-                "total_ws_tokens",
-                "avg_quality_r",
-                "p50_tokens",
-                "p90_tokens",
-            )
-        ],
-    )
-    return m.join(g, [source_col, lang_col], "full_outer")
 
 
 def bpe_pair_stats(
@@ -2628,10 +2552,6 @@ def bpe_merge_fit(
             "merge_rank long, lhs string, rhs string, merged string, "
             "pair_count long",
         )
-    from mongo_polars_reconciliation_spark.functions.localrel import (
-        inline_local_df,
-    )
-
     # the merge table as a literal plan, rows in merge order
     structs = [
         F.struct(
@@ -2646,13 +2566,11 @@ def bpe_merge_fit(
     return inline_local_df(df.sparkSession, structs)
 
 
-def _bpe_fit(
-    df: DataFrame, n_merges: int, text_col: str
-) -> "tuple[list[tuple[int, str, str, str, int]], DataFrame]":
-    """The fit loop shared by :func:`bpe_merge_fit` (wants the merge
-    table) and :func:`bpe_encode_stats` (wants the final per-word
-    segmentation). Returns (merge rows, vocab frame (tok, wc, syms))."""
-    words = (
+def _bpe_vocab(df: DataFrame, text_col: str) -> DataFrame:
+    """The word-frequency table BPE runs on, ``(tok, wc, syms)``: every
+    distinct non-empty whitespace token, its count, and its character
+    sequence as the starting symbol array."""
+    return (
         df.select(F.explode(F.split(F.col(text_col), " ")).alias("tok"))
         .where(F.length("tok") >= 1)
         .groupBy("tok")
@@ -2664,8 +2582,16 @@ def _bpe_fit(
                 "transform(sequence(1, length(tok)), i -> substring(tok, i, 1))"
             ).alias("syms"),
         )
-        .localCheckpoint(eager=False)
     )
+
+
+def _bpe_fit(
+    df: DataFrame, n_merges: int, text_col: str
+) -> "tuple[list[tuple[int, str, str, str, int]], DataFrame]":
+    """The fit loop shared by :func:`bpe_merge_fit` (wants the merge
+    table) and :func:`bpe_encode_stats` (wants the final per-word
+    segmentation). Returns (merge rows, vocab frame (tok, wc, syms))."""
+    words = _bpe_vocab(df, text_col).localCheckpoint(eager=False)
     merges: list[tuple[int, str, str, str, int]] = []
     for rank in range(1, n_merges + 1):
         best = (
@@ -2712,7 +2638,7 @@ def _bpe_merge_step(_l: str, _r: str, _m: str):
     as default args."""
 
     def step(acc, s):
-        # try_element_at (r9 advice): the plain element_at(acc, -1) is
+        # try_element_at: the plain element_at(acc, -1) is
         # out-of-bounds on the empty initial accumulator — hit for EVERY
         # word — and ANSI mode only tolerated it because the And
         # short-circuited after size(acc) > 0, an eval order Spark does
@@ -2802,7 +2728,7 @@ def bpe_encode_with_merges(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """ENCODE from a persisted merge table (r9) — the tokenizer-artifact
+    """ENCODE from a persisted merge table — the tokenizer-artifact
     half of the loop: a real pipeline trains ONCE (:func:`bpe_merge_fit`
     → write parquet) and encodes many corpora from the loaded table;
     :func:`bpe_encode_stats` covers only the fit-and-encode-in-one-
@@ -2829,19 +2755,7 @@ def bpe_encode_with_merges(
         (r["merge_rank"], r["lhs"], r["rhs"], r["merged"])
         for r in merges.select("merge_rank", "lhs", "rhs", "merged").collect()
     )
-    vocab = (
-        df.select(F.explode(F.split(F.col(text_col), " ")).alias("tok"))
-        .where(F.length("tok") >= 1)
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("wc"))
-        .select(
-            "tok",
-            "wc",
-            F.expr(
-                "transform(sequence(1, length(tok)), i -> substring(tok, i, 1))"
-            ).alias("syms"),
-        )
-    )
+    vocab = _bpe_vocab(df, text_col)
     syms = F.col("syms")
     for _, l, r, m in rows:
         syms = F.aggregate(

@@ -22,7 +22,7 @@ POLY_P31 = 2147483647  # Mersenne prime 2^31-1 — the default modulus
 # (CMS rows, Bloom positions). The per-step reduction makes the mod-p and
 # mod-p2 folds genuinely different functions of the token, so an h1
 # collision does not propagate to h2 — unlike the two rejected h2 designs:
-# hash of the REVERSED token (r7: degenerates to h1 == h2 for palindromes,
+# hash of the REVERSED token (degenerates to h1 == h2 for palindromes,
 # which includes every 1-char token) and hash of a salt-PREFIXED token
 # (h(salt+x) − h(x) depends only on len(x), so same-length tokens colliding
 # in h1 collide in h2 — and whitespace tokens are heavily same-length).
@@ -70,6 +70,13 @@ def poly_hash_mixed_col(expr: str, p: int = POLY_P31) -> Column:
     scramble spreads the bands across [0, p). Exact BIGINT in both
     engines: h < 2^31 so h·MIX_A < 2^63."""
     return F.pmod(poly_hash_col(expr, p) * F.lit(MIX_A), F.lit(p))
+
+
+def poly_hash_pair(col: str) -> tuple[Column, Column]:
+    """The ``(h1, h2)`` base-hash pair of the double-hashed sketch families
+    (CMS rows, Bloom positions): the mixed hash of ``col`` under
+    ``POLY_P31`` and under ``POLY_P31B``."""
+    return poly_hash_mixed_col(col, POLY_P31), poly_hash_mixed_col(col, POLY_P31B)
 
 
 def poly_hash_mixed_sql(expr: str, p: int = POLY_P31) -> str:

@@ -11,6 +11,8 @@ explicit ``order_by`` — strictly stronger, deterministic semantics
 
 from __future__ import annotations
 
+from fractions import Fraction
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -30,6 +32,18 @@ def single_partition_key() -> Column:
     yet non-foldable, so the spec stays non-empty and bench logs stay
     clean. Never use over data-sized inputs."""
     return F.pmod(F.spark_partition_id(), F.lit(1))
+
+
+def nearest_rank(q: "Fraction | float", n: str = "__n") -> Column:
+    """The nearest-rank position ``ceil(q·n)`` of the row-count column
+    ``n``, exact: ``q`` as the rational ``num/den`` (a ``Fraction``, or a
+    decimal literal read through its ``str``), and the rank as
+    ``(num·n + den − 1) DIV den`` in integer arithmetic. A float product
+    can land just above an integer and shift the rank by one against the
+    oracle's exact CEIL; this form cannot."""
+    frac = q if isinstance(q, Fraction) else Fraction(str(q))
+    num, den = frac.numerator, frac.denominator
+    return F.expr(f"({num} * {n} + {den - 1}) DIV {den}")
 
 
 def with_group_count(df: DataFrame, subset: list[str], name: str = "_cnt") -> DataFrame:

@@ -10,6 +10,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mongo_polars_reconciliation_spark.functions.asof import asof_join_backward
+from mongo_polars_reconciliation_spark.functions.hashing import (
+    POLY_P31,
+    poly_hash_mixed_col,
+)
+from mongo_polars_reconciliation_spark.functions.skew import salted_two_stage_agg
+from mongo_polars_reconciliation_spark.functions.timenorm import ensure_epoch_nanos
+from mongo_polars_reconciliation_spark.functions.windows import keep_last
 from mongo_polars_reconciliation_spark.harness.fixtures import (
     TOLERANCE_RULES,
     ZE_RULE,
@@ -259,8 +267,6 @@ def recon_subset_dedup_keep_last(spark, sf_dir) -> DataFrame:
     """U4 subset dedup, keep-LAST by explicit order: one B row per codigo,
     the highest file_row_number wins (Polars unique(keep='last') with the
     order made explicit — SURVEY.md §2.5)."""
-    from mongo_polars_reconciliation_spark.functions.windows import keep_last
-
     _, _, b = _ab(spark, sf_dir)
     out = keep_last(b, ["ext_codigo"], [ROW_NUM])
     return out.select(
@@ -551,10 +557,6 @@ def _read_events(spark, sf_dir) -> DataFrame:
     ONCE here (see functions/timenorm.py) so every downstream query keeps
     exact integer nanosecond arithmetic and any future drift fails loudly
     in one place."""
-    from mongo_polars_reconciliation_spark.functions.timenorm import (
-        ensure_epoch_nanos,
-    )
-
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return ensure_epoch_nanos(spark.read.parquet(f"{sf_dir}/events.parquet"))
 
@@ -729,8 +731,6 @@ def events_asof_last_view(spark, sf_dir) -> DataFrame:
     at-or-before it (union + carry-forward window: one shuffle on the key,
     no O(pairs) range explosion). Unmatched purchases carry sentinel -1 so
     the output stays typed and orderable."""
-    from mongo_polars_reconciliation_spark.functions.asof import asof_join_backward
-
     e = _read_events(spark, sf_dir)
     purchases = e.where(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_event_id"), "user_id", "ts"
@@ -753,25 +753,41 @@ def events_asof_last_view(spark, sf_dir) -> DataFrame:
     )
 
 
+def _kmv_estimate(e: DataFrame, hashed: DataFrame, k: int) -> DataFrame:
+    """The KMV row ``(k_actual, kth_min, n_exact, n_estimate)``: the k
+    smallest of the distinct hash values ``hashed.hv`` (TakeOrderedAndProject
+    — k rows to the driver), the estimate ``floor((k−1)·P/kth_min)``, and
+    the exact distinct ``user_id`` count of ``e`` for the error check."""
+    kth = hashed.orderBy(F.col("hv").asc()).limit(k)
+    est = kth.agg(
+        F.max("hv").alias("kth_min"), F.count(F.lit(1)).alias("k_actual")
+    )
+    exact = e.agg(F.countDistinct("user_id").alias("n_exact"))
+    return est.crossJoin(exact).select(
+        "k_actual",
+        "kth_min",
+        "n_exact",
+        F.when(
+            F.col("kth_min") > 0,
+            F.floor(
+                (F.col("k_actual") - 1) * F.lit(float(POLY_P31)) / F.col("kth_min")
+            ).cast("long"),
+        ).alias("n_estimate"),
+    )
+
+
 def events_user_kmv(spark, sf_dir) -> DataFrame:
     """KMV (k-minimum-values) distinct-count sketch, k=64: hash every key
     with the cross-engine polynomial hash, keep the k smallest distinct
-    hash values (TakeOrderedAndProject — k rows to the driver), estimate
-    |distinct| ≈ (k-1)·P/kth_min. Unlike HyperLogLog this sketch is fully
+    hash values, estimate |distinct| ≈ (k-1)·P/kth_min
+    (:func:`_kmv_estimate`). Unlike HyperLogLog this sketch is fully
     deterministic and integer-exact, so the oracle reproduces it
     bit-for-bit; the exact distinct count rides along for the error
     check. At scale the k-min pass is one scan with per-partition local
     top-k — no shuffle of raw keys. The MIXED hash matters here more than
     anywhere: the estimator (k-1)·P/kth_min assumes hv ~ Uniform[0, P),
     and raw poly-hash values of numeric user ids sit in narrow bands."""
-    from mongo_polars_reconciliation_spark.functions.hashing import (
-        POLY_P31,
-        poly_hash_mixed_col,
-    )
-
     e = _read_events(spark, sf_dir)
-    p = POLY_P31
-    k = 64
     # NULL keys are excluded on BOTH engines (Spark orderBy puts NULLs first
     # while DuckDB's ORDER BY ... LIMIT puts them last — a null user_id would
     # skew k_actual/kth_min differently); countDistinct ignores NULLs too, so
@@ -781,25 +797,7 @@ def events_user_kmv(spark, sf_dir) -> DataFrame:
         .where(F.col("hv").isNotNull())
         .distinct()
     )
-    kth = hashed.orderBy(F.col("hv").asc()).limit(k)
-    est = kth.agg(
-        F.max("hv").alias("kth_min"), F.count(F.lit(1)).alias("k_actual")
-    )
-    exact = e.agg(F.countDistinct("user_id").alias("n_exact"))
-    return (
-        est.crossJoin(exact)
-        .select(
-            "k_actual",
-            "kth_min",
-            "n_exact",
-            F.when(
-                F.col("kth_min") > 0,
-                F.floor(
-                    (F.col("k_actual") - 1) * F.lit(float(p)) / F.col("kth_min")
-                ).cast("long"),
-            ).alias("n_estimate"),
-        )
-    )
+    return _kmv_estimate(e, hashed, 64)
 
 
 def events_kmv_merge(spark, sf_dir) -> DataFrame:
@@ -812,13 +810,8 @@ def events_kmv_merge(spark, sf_dir) -> DataFrame:
     within-type k-minimum), so this row equals events_user_kmv
     bit-for-bit — which is precisely the mergeability property the oracle
     pins."""
-    from mongo_polars_reconciliation_spark.functions.hashing import (
-        POLY_P31,
-        poly_hash_mixed_col,
-    )
-
     e = _read_events(spark, sf_dir)
-    p, k = POLY_P31, 64
+    k = 64
     hashed = (
         e.select("event_type", poly_hash_mixed_col("user_id").alias("hv"))
         .where(F.col("hv").isNotNull())
@@ -828,22 +821,7 @@ def events_kmv_merge(spark, sf_dir) -> DataFrame:
     sketches = hashed.withColumn("rn", F.row_number().over(w)).where(
         F.col("rn") <= k
     )
-    merged = sketches.select("hv").distinct().orderBy(F.col("hv").asc()).limit(k)
-    est = merged.agg(
-        F.max("hv").alias("kth_min"), F.count(F.lit(1)).alias("k_actual")
-    )
-    exact = e.agg(F.countDistinct("user_id").alias("n_exact"))
-    return est.crossJoin(exact).select(
-        "k_actual",
-        "kth_min",
-        "n_exact",
-        F.when(
-            F.col("kth_min") > 0,
-            F.floor(
-                (F.col("k_actual") - 1) * F.lit(float(p)) / F.col("kth_min")
-            ).cast("long"),
-        ).alias("n_estimate"),
-    )
+    return _kmv_estimate(e, sketches.select("hv").distinct(), k)
 
 
 def events_hourly_from_daily_rollup(spark, sf_dir) -> DataFrame:
@@ -1452,23 +1430,15 @@ def text_contamination(spark, sf_dir) -> DataFrame:
 
 def text_split_assign(spark, sf_dir) -> DataFrame:
     """Deterministic train/val/test split: bucket = polynomial hash of the
-    doc id mod 100 → 80/10/10. Hash-based assignment is the reproducible-
-    sampling primitive every training-data pipeline needs — stable across
-    runs, engines and cluster shapes (no rand(), no partition order
-    dependence), and any stratum's rate is changeable without reshuffling
-    other docs. Mixed hash: raw poly-hash bands of short numeric ids skew
-    the 80/10/10 proportions."""
-    from mongo_polars_reconciliation_spark.functions.hashing import (
-        poly_hash_mixed_col,
-    )
+    doc id mod 100 → 80/10/10 (``text.split_assignment``). Hash-based
+    assignment is the reproducible-sampling primitive every training-data
+    pipeline needs — stable across runs, engines and cluster shapes (no
+    rand(), no partition order dependence), and any stratum's rate is
+    changeable without reshuffling other docs."""
+    from mongo_polars_reconciliation_spark.extensions.text import split_assignment
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    h = F.pmod(poly_hash_mixed_col("doc_id"), F.lit(100))
-    return docs.select(
-        "doc_id",
-        h.alias("bucket"),
-        F.when(h < 80, "train").when(h < 90, "val").otherwise("test").alias("split"),
-    )
+    return docs.select("doc_id", *split_assignment("doc_id"))
 
 
 def text_repetition(spark, sf_dir) -> DataFrame:
@@ -1516,10 +1486,6 @@ def events_salted_agg(spark, sf_dir) -> DataFrame:
     routed value sums computed via (key, salt) partials then merged —
     bit-identical to the plain GROUP BY the oracle runs, pinning that
     salting is semantics-preserving."""
-    from mongo_polars_reconciliation_spark.functions.skew import (
-        salted_two_stage_agg,
-    )
-
     e = _read_events(spark, sf_dir)
     return salted_two_stage_agg(
         e, ["event_type"], count_name="n", sum_cols={"value": "value_sum"}
@@ -2722,19 +2688,19 @@ def stream_cms_counters(spark, sf_dir) -> DataFrame:
 
 
 def stream_datacard(spark, sf_dir) -> DataFrame:
-    """Streaming corpus reporting (r10): documents arrive as micro-batches
-    and a native streaming aggregation maintains the exact datacard STATE
-    (the mergeable sufficient statistic of text_datacard_merge);
-    deriving the card from the drained state is a batch epilogue over
-    sketch-sized rows. Commutative counts + DECIMAL sums make the drained
-    state — and therefore the card — bit-equal to the batch
-    corpus_datacard whatever the arrival order, so the query shares
-    text_datacard's oracle."""
+    """Streaming corpus reporting: documents arrive as micro-batches and
+    ``datacard_state`` runs on the stream as a native streaming
+    aggregation, maintaining the exact datacard STATE (the mergeable
+    sufficient statistic of text_datacard_merge); deriving the card from
+    the drained state is a batch epilogue over sketch-sized rows.
+    Commutative counts + DECIMAL sums make the drained state — and
+    therefore the card — bit-equal to the batch corpus_datacard whatever
+    the arrival order, so the query shares text_datacard's oracle."""
     from mongo_polars_reconciliation_spark.extensions.text import (
         datacard_from_state,
+        datacard_state,
     )
     from mongo_polars_reconciliation_spark.streaming.corpus import (
-        datacard_stream_state,
         read_documents_stream,
     )
     from mongo_polars_reconciliation_spark.streaming.events import run_to_table
@@ -2743,7 +2709,7 @@ def stream_datacard(spark, sf_dir) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     stream = read_documents_stream(spark, docs, name=f"datacard_{tag}")
     state = run_to_table(
-        datacard_stream_state(stream),
+        datacard_state(stream),
         "mem_stream_datacard",
         output_mode="complete",
     )

@@ -3,15 +3,28 @@
 Reference: ``save_aggregated_results`` (second_conciliate.py:450-483) — one
 ``sum(amount)`` + ``count(_id)`` per outcome bucket, assembled with run
 metadata into a single summary document. SURVEY.md §2.6 A1.
+
+The quantile family next to it: ``bucket_quantiles`` (exact nearest-rank
+quantiles per bucket), ``mad_outliers`` (its two medians are
+``bucket_quantiles`` at 0.5), and the fixed-bin histogram sketch
+``histogram_quantiles`` with its mergeability pin
+``histogram_merge_check`` (one ``_hist_bin`` serves both). Every rank is
+``functions.windows.nearest_rank``, the exact integer ``ceil(q·n)``, so
+each reported number is an actual data value (or bin edge) and
+hash-compares against the SQL oracle.
 """
 
 from __future__ import annotations
 
-from fractions import Fraction
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from mongo_polars_reconciliation_spark.functions.windows import (
+    nearest_rank,
+    single_partition_key,
+)
 
 
 def _count_and_amount(
@@ -77,26 +90,32 @@ def bucket_quantiles(
     )
     w = Window.partitionBy(bucket_col).orderBy(*order)
     grp = Window.partitionBy(bucket_col)
-    ranked = df.select(bucket_col, value_col, *( [tie_col] if tie_col else [] )).withColumn(
+    ranked = df.select(bucket_col, value_col, *([tie_col] if tie_col else [])).withColumn(
         "__rn", F.row_number().over(w)
     ).withColumn("__n", F.count(F.lit(1)).over(grp))
-    aggs = []
-    for q in qs:
-        name = f"q{str(q).replace('0.', '')}"
-        # nearest-rank position in INTEGER arithmetic: q as an exact
-        # rational num/den, rank = ceil(num·n/den) = (num·n + den − 1) DIV
-        # den — a float product could land just above an integer for
-        # arbitrary q and shift the rank by one vs the oracle's exact CEIL
-        frac = Fraction(str(q))
-        num, den = frac.numerator, frac.denominator
-        rank = F.expr(f"({num} * __n + {den - 1}) DIV {den}")
-        aggs.append(
-            F.max(
-                F.when(F.col("__rn") == rank, F.col(value_col))
-            ).alias(name)
+    aggs = [
+        F.max(F.when(F.col("__rn") == nearest_rank(q), F.col(value_col))).alias(
+            f"q{str(q).replace('0.', '')}"
         )
+        for q in qs
+    ]
     return ranked.groupBy(bucket_col).agg(
         F.max("__n").cast("long").alias("n"), *aggs
+    )
+
+
+def _hist_bin(bins: int) -> Column:
+    """The fixed-width bin of ``__v`` over the broadcast ``(__lo, __hi)``
+    edges: ``floor((v − lo) / width)``, the maximum folded into the last
+    bin, every value in bin 0 when all values are equal. Pure IEEE double
+    ops, so the oracle bins every value identically."""
+    width = (F.col("__hi") - F.col("__lo")) / F.lit(float(bins))
+    return (
+        F.when(F.col("__hi") == F.col("__lo"), F.lit(0))
+        .otherwise(
+            F.least(F.floor((F.col("__v") - F.col("__lo")) / width), F.lit(bins - 1))
+        )
+        .cast("long")
     )
 
 
@@ -118,12 +137,6 @@ def histogram_quantiles(
     pure IEEE double ops (identical bit results in any engine), the rank is
     integer-rational ceil(q·n), and counts are exact — so even the sketch
     is hash-comparable, not just "close"."""
-    from fractions import Fraction as _Fr
-
-    from mongo_polars_reconciliation_spark.functions.windows import (
-        single_partition_key,
-    )
-
     vals = df.where(F.col(value_col).isNotNull()).select(
         F.col(value_col).cast("double").alias("__v")
     )
@@ -132,20 +145,9 @@ def histogram_quantiles(
         F.max("__v").alias("__hi"),
         F.count(F.lit(1)).alias("__n"),
     )
-    width = (F.col("__hi") - F.col("__lo")) / F.lit(float(bins))
     binned = (
         vals.crossJoin(F.broadcast(stats))
-        .withColumn(
-            "__bin",
-            F.when(F.col("__hi") == F.col("__lo"), F.lit(0))
-            .otherwise(
-                F.least(
-                    F.floor((F.col("__v") - F.col("__lo")) / width),
-                    F.lit(bins - 1),
-                )
-            )
-            .cast("long"),
-        )
+        .withColumn("__bin", _hist_bin(bins))
         .groupBy("__bin")
         .agg(F.count(F.lit(1)).alias("__c"))
     )
@@ -155,20 +157,21 @@ def histogram_quantiles(
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     cum = binned.withColumn("__cum", F.sum("__c").over(w_cum))
-
-    q_structs = ", ".join(
-        f"named_struct('q_label', '{q}', 'num', {_Fr(str(q)).numerator}L, "
-        f"'den', {_Fr(str(q)).denominator}L)"
-        for q in qs
-    )
-    q_rows = (
-        df.sparkSession.range(1)
-        .select(F.explode(F.expr(f"array({q_structs})")).alias("q"))
-        .select("q.q_label", "q.num", "q.den")
-    )
-    ranks = q_rows.crossJoin(F.broadcast(stats)).withColumn(
-        "__rank", F.expr("(num * __n + den - 1) DIV den")
-    )
+    ranks = stats.select(
+        "__lo",
+        "__hi",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(str(q)).alias("q_label"),
+                        nearest_rank(q).alias("__rank"),
+                    )
+                    for q in qs
+                ]
+            )
+        ).alias("__q"),
+    ).select("__lo", "__hi", "__q.q_label", "__q.__rank")
     hit = ranks.crossJoin(F.broadcast(cum)).where(F.col("__cum") >= F.col("__rank"))
     return (
         hit.groupBy("q_label", "__rank", "__lo", "__hi")
@@ -203,8 +206,8 @@ def histogram_merge_check(
     incompatible); here they come from one global min/max pass, in
     production from a fixed known range or a prior pass.
 
-    The two sides are INDEPENDENTLY constructed (r8, advice item; same
-    rework as ``cms_merge_check``): each partial histogram bins its own
+    The two sides are INDEPENDENTLY constructed (as in
+    ``cms_merge_check``): each partial histogram bins its own
     filtered scan (``xxhash64(split_col) mod n_splits`` — total,
     never-null row partition), the global side re-bins an unfiltered
     scan, and only the (lo, hi) edge pass is shared — sharing the edges
@@ -224,22 +227,11 @@ def histogram_merge_check(
         F.col(value_col).cast("double").alias("__v"),
     ).localCheckpoint(eager=False)
     stats = vals.agg(F.min("__v").alias("__lo"), F.max("__v").alias("__hi"))
-    width = (F.col("__hi") - F.col("__lo")) / F.lit(float(bins))
 
     def binned(frame: DataFrame, out: str) -> DataFrame:
         return (
             frame.crossJoin(F.broadcast(stats))
-            .select(
-                F.when(F.col("__hi") == F.col("__lo"), F.lit(0))
-                .otherwise(
-                    F.least(
-                        F.floor((F.col("__v") - F.col("__lo")) / width),
-                        F.lit(bins - 1),
-                    )
-                )
-                .cast("long")
-                .alias("bin"),
-            )
+            .select(_hist_bin(bins).alias("bin"))
             .groupBy("bin")
             .agg(F.count(F.lit(1)).alias(out))
         )
@@ -306,33 +298,25 @@ def mad_outliers(
     than ``k·MAD`` — the standard robust outlier rule (unlike mean/stddev,
     a handful of extreme values cannot drag the threshold).
 
-    Exactness: nearest-rank medians are actual data values (rank =
-    (n+1) DIV 2 in integer arithmetic), deviations are single IEEE
-    subtractions, and the k·MAD comparison runs identically in the SQL
-    oracle — no interpolation anywhere, so the whole frame hash-compares.
+    Exactness: both medians are :func:`bucket_quantiles` at 0.5, so
+    actual data values at the integer nearest rank; deviations are single
+    IEEE subtractions, and the k·MAD comparison runs identically in the
+    SQL oracle — no interpolation anywhere, so the whole frame
+    hash-compares.
 
-    Scale shape: two rank windows and one aggregate, all partitioned by
-    the key — per-key sorts only, no global sort, three key-shuffles
-    total at any data size."""
-    w_val = Window.partitionBy(key_col).orderBy(F.col(value_col).asc())
-    grp = Window.partitionBy(key_col)
-    ranked = df.select(key_col, value_col).withColumn(
-        "__rn", F.row_number().over(w_val)
-    ).withColumn("__n", F.count(F.lit(1)).over(grp))
-    med = (
-        ranked.where(F.col("__rn") == F.expr("(__n + 1) DIV 2"))
-        .select(F.col(key_col), F.col(value_col).alias("med"))
+    Scale shape: each median is a per-key rank window plus a
+    one-row-per-key aggregate, and the final count is one more aggregate
+    on the key — per-key sorts only, no global sort. The median frames
+    are key-sized, so adaptive execution broadcasts them into their joins
+    back onto the rows."""
+    med = bucket_quantiles(df, key_col, value_col, (0.5,)).select(
+        F.col(key_col), F.col("q5").alias("med")
     )
     dev = df.select(key_col, value_col).join(med, key_col).withColumn(
         "__dev", F.abs(F.col(value_col) - F.col("med"))
     )
-    w_dev = Window.partitionBy(key_col).orderBy(F.col("__dev").asc())
-    dev_ranked = dev.withColumn("__rn", F.row_number().over(w_dev)).withColumn(
-        "__n", F.count(F.lit(1)).over(grp)
-    )
-    mad = (
-        dev_ranked.where(F.col("__rn") == F.expr("(__n + 1) DIV 2"))
-        .select(F.col(key_col), F.col("__dev").alias("mad"))
+    mad = bucket_quantiles(dev, key_col, "__dev", (0.5,)).select(
+        F.col(key_col), F.col("q5").alias("mad")
     )
     return (
         dev.join(mad, key_col)

@@ -3,12 +3,13 @@
 Two kinds of streaming face live here.
 
 **Native streaming aggregations** (``dedup_state``, ``cms_counter_state``,
-``datacard_stream_state``, ``ingest_novel_state``): the batch operator's
-state is a commutative aggregate (min, count, sums), so Structured
-Streaming's state store computes exactly the batch answer whatever the
-arrival order or micro-batch split, and the drained result shares the
-batch face's oracle. State is one row per aggregate key (distinct text
-hash, sketch counter, datacard group), partitioned by that key.
+``ingest_novel_state``, and ``extensions/text.py:datacard_state``, which
+runs on a stream unchanged): the batch operator's state is a commutative
+aggregate (min, count, sums), so Structured Streaming's state store
+computes exactly the batch answer whatever the arrival order or
+micro-batch split, and the drained result shares the batch face's
+oracle. State is one row per aggregate key (distinct text hash, sketch
+counter, datacard group), partitioned by that key.
 
 **The crawl loop** (``incremental_neardup_ingest``,
 ``incremental_semantic_ingest``, ``incremental_payload_ingest``): the
@@ -56,6 +57,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mongo_polars_reconciliation_spark.extensions.text import cms_cells
 from mongo_polars_reconciliation_spark.streaming.events import drain
 
 
@@ -144,13 +146,8 @@ def cms_counter_state(
     Note: this is the per-occurrence form (one aggregation), not the
     batch path's vocab-first two-phase rewrite — chained streaming
     aggregations are unsupported, and the sums are identical either
-    way."""
-    from mongo_polars_reconciliation_spark.functions.hashing import (
-        POLY_P31,
-        POLY_P31B,
-        poly_hash_mixed_col,
-    )
-
+    way. The cells are :func:`extensions.text.cms_cells`, as in the
+    batch sketch."""
     # widen-if-narrow, streaming edition: the token explode + interpreted
     # hash folds are map-side work that would otherwise run on one task
     # per source file within each micro-batch; repartitioning the (cheap,
@@ -160,58 +157,10 @@ def cms_counter_state(
     tok = stream.repartition(target).select(
         F.explode(F.split(F.col(text_col), " ")).alias("tok")
     )
-    h1 = poly_hash_mixed_col("tok", POLY_P31)
-    h2 = poly_hash_mixed_col("tok", POLY_P31B)
-    rows = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(j).cast("int").alias("j"),
-                    F.pmod(
-                        F.pmod(h1 + F.lit(j) * h2, F.lit(POLY_P31)),
-                        F.lit(w),
-                    ).alias("b"),
-                )
-                for j in range(d)
-            ]
-        )
-    ).alias("jb")
     return (
-        tok.select(rows)
-        .select(F.col("jb.j").alias("j"), F.col("jb.b").alias("b"))
+        cms_cells(tok, d, w)
         .groupBy("j", "b")
         .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def datacard_stream_state(
-    stream: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-    lang_col: str = "lang",
-) -> DataFrame:
-    """Streaming maintenance of the exact datacard state
-    (``extensions/text.py:datacard_state``): the fused scoring projection
-    is map-only, so the one stateful operator is the
-    (source, lang, ws_tokens) aggregate — counts and DECIMAL quality
-    sums, both commutative, so the drained complete-mode state is
-    bit-identical to the batch state whatever the micro-batch order.
-    State is |groups × distinct lengths| rows however many documents
-    stream through (the bounded-state property); the card itself is a
-    batch epilogue over the drained state (``datacard_from_state`` —
-    chained streaming aggregations are unsupported, and the derivation
-    is a window over sketch-sized rows, not data)."""
-    from mongo_polars_reconciliation_spark.extensions.text import (
-        fused_doc_scores,
-    )
-
-    scored = fused_doc_scores(
-        stream, id_col=id_col, text_col=text_col, keep=(source_col, lang_col)
-    )
-    return scored.groupBy(source_col, lang_col, "ws_tokens").agg(
-        F.count(F.lit(1)).alias("c"),
-        F.sum(F.col("quality_r").cast("decimal(18,4)")).alias("q_sum"),
     )
 
 

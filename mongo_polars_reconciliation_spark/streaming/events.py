@@ -27,6 +27,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from mongo_polars_reconciliation_spark.functions.timenorm import ensure_epoch_nanos
+
 EVENTS_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -73,9 +75,6 @@ def _events_feed_stream(
     import os
     import shutil
 
-    from mongo_polars_reconciliation_spark.functions.timenorm import (
-        ensure_epoch_nanos,
-    )
     from mongo_polars_reconciliation_spark.scratch import scratch_path
 
     src_path = f"{sf_dir}/events.parquet"
@@ -179,10 +178,6 @@ def _nanos(events: DataFrame) -> DataFrame:
     convention, what the readers above emit) or a raw TIMESTAMP frame (what
     batch-parity callers hand in) — normalized here, no-op when already
     long. This is what keeps one operator body valid for both regimes."""
-    from mongo_polars_reconciliation_spark.functions.timenorm import (
-        ensure_epoch_nanos,
-    )
-
     return ensure_epoch_nanos(events)
 
 

@@ -291,6 +291,48 @@ def test_mix_epochs_rejects_bad_weights(spark):
         mix_epochs(docs, "lang", {"en": 1.0}, default_weight=-1.0)
 
 
+def test_stratified_sample_rejects_rates_outside_unit_interval(spark):
+    """A rate outside [0, 1] (or NaN) must fail loudly naming the stratum,
+    not silently drop (negative) or keep (above 1) a whole stratum; the
+    default rate the same."""
+    import pytest
+
+    from mongo_polars_reconciliation_spark.extensions.text import (
+        stratified_sample,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "en"), (2, "fr")], "doc_id long, lang string"
+    )
+    for rates in ({"en": -0.5}, {"en": 1.5}, {"en": float("nan")}):
+        with pytest.raises(ValueError, match="'en'"):
+            stratified_sample(docs, "lang", rates)
+    for bad in (-1.0, 2.0, float("nan")):
+        with pytest.raises(ValueError, match="default_rate"):
+            stratified_sample(docs, "lang", {"en": 0.5}, default_rate=bad)
+    assert stratified_sample(docs, "lang", {"en": 1.0}, default_rate=0.0).count() == 1
+
+
+def test_nearest_rank_is_exact_ceil(spark):
+    """nearest_rank(q) is Python's exact ceil(q·n) for every n in 0…200,
+    including the thirds, which no decimal string can express."""
+    import math
+    from fractions import Fraction
+
+    from mongo_polars_reconciliation_spark.functions.windows import nearest_rank
+
+    qs = [Fraction(1, 3), Fraction(2, 3), 0.5, 0.9, 0.99, 0.999]
+    ns = spark.range(0, 201).selectExpr("id AS __n")
+    got = ns.select("__n", *[nearest_rank(q).alias(f"r{i}") for i, q in enumerate(qs)])
+    for r in got.collect():
+        n = r["__n"]
+        want = [
+            math.ceil((q if isinstance(q, Fraction) else Fraction(str(q))) * n)
+            for q in qs
+        ]
+        assert [r[f"r{i}"] for i in range(len(qs))] == want, n
+
+
 def test_semantic_contamination_reports_partnerless_rows(spark):
     """A corpus row whose ONLY benchmark partner is itself (self-pair
     excluded) must still appear: max_cos_r NULL, contaminated false —

@@ -91,3 +91,51 @@ def test_no_module_level_ab_flags():
         for m in flag.finditer(path.read_text())
     ]
     assert not hits, hits
+
+
+def test_leaf_modules_imported_at_module_level():
+    """``functions.*`` and ``session`` import nothing from the package, so
+    no module needs to import them inside a function to break a cycle;
+    a function-local import of either is a hidden per-call cost and a
+    dependency the module header does not show."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / (
+        "mongo_polars_reconciliation_spark"
+    )
+    local = re.compile(
+        r"^\s+from mongo_polars_reconciliation_spark\.(functions\b|session import)"
+    )
+    hits = [
+        f"{path.relative_to(pkg)}:{i}"
+        for path in sorted(pkg.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if local.match(line)
+    ]
+    assert not hits, hits
+
+
+def test_capture_plans_names_unknown_faces(tmp_path):
+    """An unknown face name fails up front, naming every unknown face,
+    before any Spark application starts."""
+    import os
+    import pathlib
+
+    tool = pathlib.Path(__file__).resolve().parents[1] / "tools" / "capture_plans.py"
+    out = subprocess.run(
+        [
+            sys.executable,
+            str(tool),
+            str(tmp_path / "plans"),
+            "recon_amount_quantiles",
+            "no_such_face",
+            "stream_datacard",
+        ],
+        capture_output=True,
+        text=True,
+        env={**os.environ, "SPARK_GRAFT_SF_DIR": str(tmp_path)},
+    )
+    assert out.returncode != 0
+    assert "unknown faces: no_such_face stream_datacard" in out.stderr
+    assert not (tmp_path / "plans").exists()

@@ -14,7 +14,8 @@ Writes ``OUTDIR/<face>.json``: the result row count, the
 Generate and TakeOrderedAndProject node counts. Two capture dirs compare
 with ``diff -r``. Data dir from SPARK_GRAFT_SF_DIR (required, e.g. the
 sf0.001 testdata dir), cpus from SPARK_GRAFT_CPUS (default: the host core
-count).
+count). A name that is not a registry face (``QUERIES``) stops the tool
+before any application starts, naming every unknown face.
 """
 
 from __future__ import annotations
@@ -55,6 +56,11 @@ def main() -> None:
     if len(sys.argv) < 3 or "SPARK_GRAFT_SF_DIR" not in os.environ:
         raise SystemExit(__doc__)
     outdir, faces = sys.argv[1], sys.argv[2:]
+    from mongo_polars_reconciliation_spark.harness.queries import QUERIES
+
+    unknown = [f for f in faces if f not in QUERIES]
+    if unknown:
+        raise SystemExit(f"unknown faces: {' '.join(unknown)}")
     os.makedirs(outdir, exist_ok=True)
     ctx = multiprocessing.get_context("spawn")
     failed = []

@@ -22,6 +22,7 @@ integer invariants, each written once:
 
 from __future__ import annotations
 
+import math
 from fractions import Fraction
 from functools import reduce
 
@@ -511,10 +512,15 @@ def stratified_sample(
                 f"stratified_sample: rate for {k!r} must be in [0, 1], got {r}"
             )
     h = F.pmod(poly_hash_mixed_col(id_col), F.lit(denom))
+
+    def cut(r: float) -> int:
+        # h < rate·denom over integer h is h < ceil(rate·denom), taken on
+        # the rate's decimal value: a float product can land just below an
+        # integer (0.57 · 10000 = 5699.999…)
+        return math.ceil(Fraction(str(r)) * denom)
+
     threshold = _per_stratum(
-        strata_col,
-        {k: int(r * denom) for k, r in rates.items()},
-        int(default_rate * denom),
+        strata_col, {k: cut(r) for k, r in rates.items()}, cut(default_rate)
     )
     return df.where(h < threshold)
 

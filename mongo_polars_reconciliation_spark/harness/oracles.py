@@ -1,14 +1,97 @@
-"""DuckDB oracle SQL mirroring harness/fixtures.py exactly.
+"""DuckDB oracle SQL: an independent replay of every registry face.
 
-Every CTE here is the 1:1 SQL translation of a fixture builder or engine
-operator; the driver runs these against the same parquet tables and
-hash-compares values with the Spark results. Column aliases must match the
-Spark-side selects verbatim (driver sorts columns by name before hashing).
+Each ``ORACLES`` entry is the SQL translation of one query in
+harness/queries.py: the same fixture builder (harness/fixtures.py) and
+the same engine operator, run by DuckDB over the same parquet tables. The
+correctness gate and the parity tests compare the two answers value for
+value after sorting columns by name, so column aliases match the
+Spark-side selects verbatim and every float comes out of the same
+operation order (DECIMAL-routed sums, left folds, floor-4 / round-6
+quantization).
+
+Sharing rule: every fixture CTE and every SQL kernel is written once, as a
+fragment named after the fixture builder or engine operator it mirrors,
+and each oracle is assembled from those fragments. A fixture or kernel
+change is then one edit, and no oracle can drift from its siblings. The
+only package import is the shared SQL hash of functions/hashing.py (the
+Spark side builds the same expression); no oracle is built from engine
+code.
+
+Shared fragments and what they mirror:
+
+- ``BASE_CTES``: ``fixtures.load_base`` / ``build_internal`` /
+  ``build_external``.
+- ``_ranked_match`` (``MATCH_CTES``), ``_match_pass``: the winners and
+  losers of ``operators/match.py`` and the residuals of
+  ``operators/residuals.py``.
+- ``ZE_CTES``, ``ZE_CLEAN``: ``operators/zero_effect.py``.
+- ``_tolerance_match``: ``operators/tolerance.py``.
+- ``CASCADE_TAIL_CTES``, ``_bucket_summary``: the ``plans/pipeline.py``
+  cascade and ``operators/summary.bucket_summary``.
+- ``_EVENTS_HOURLY``: the hourly event rollup.
+- ``_session_flags``: the gap rule of the event sessionization faces.
+- ``DOCUMENTS_AUG``, ``_DROP_FIRST_WORD``: ``fixtures.build_documents_aug``.
+- ``DOCUMENTS_FOOTERS``: ``fixtures.build_documents_footers``.
+- ``MM_PAYLOAD_BASE``, ``_PAYLOAD_TAIL``: ``fixtures.build_mm_payload_aug``.
+- ``EMBEDDINGS_AUG``, ``_zero_head``: ``fixtures.build_embeddings_aug``.
+- ``_ingest_split``: ``fixtures._ingest_split`` (the exact, near-dup,
+  payload and semantic ingest splits).
+- ``QUERY_VEC``: ``fixtures.query_vector``.
+- ``_ngram_list``, ``_shingles``: ``text.word_ngrams`` /
+  ``dedup.shingle_sets``.
+- ``_mh_band_ctes``: ``dedup._minhash_band_keys``.
+- ``_floor4_jaccard``, ``_jaccard_verify``: ``dedup.jaccard_verify``.
+- ``_minhash_pair_ctes`` (``MINHASH_PAIR_CTES``): ``dedup.minhash_near_dups``.
+- ``CC_CTES``: ``dedup.dedup_clusters``.
+- ``_quality_sql``: ``text.quality_score``.
+- ``_lang_id_ctes``: ``text.language_id``.
+- ``_split_case``: ``text.split_assignment``.
+- ``_repetition_ctes``: ``text.repetition_signals``.
+- ``_line_dedup_ctes``: ``text.line_dedup_corpus``.
+- ``_bigram_lm_ctes``: ``text.bigram_lm_scores``.
+- ``_isqrt_cte``, ``_MIX_COPIES``: ``text.mix_temperature``.
+- ``_cms_cell``: ``text.cms_cells``.
+- ``_KMV_ESTIMATE``: the KMV distinct-count estimate.
+- ``_HIST_BIN``: ``operators/summary._hist_bin``.
+- ``_DATACARD_CTES``: ``text.corpus_datacard``.
+- ``_PACK_CTES``: ``text.pack_sequences``.
+- ``_curation_oracle``: ``curation.curate_corpus`` / ``curate_corpus_v2``.
+- ``_sqdist_sql``, ``kmeans_ctes``, ``_kmeans_assign_topn``:
+  ``similarity.kmeans_fit`` / ``cluster_assign`` / ``probe_assignments``.
+- ``_dot_sql``, ``_cos_sql``, ``_cos6_sql``: ``similarity.cosine`` and its
+  6-dp rounding, pair form (``a.v``, ``b.v``) and query form (``v``, ``q``).
+- ``_query_scored``, ``_topk_by_cos``, ``_knn_ranked``, ``_KNN3_SELECT``:
+  the query scoring and the (cos_r DESC, id) rankings of
+  ``similarity._exact_topk`` / ``_knn_rank``.
+- ``MULTIPROBE_CTES``: ``similarity.probe_assignments`` over the
+  multiprobe fit.
+- ``_recall_ctes``: ``similarity.ann_recall_at_k``.
+- ``_lsh_sig_sql``: ``similarity.lsh_signature_col``.
+- ``_pq_books``, ``_ivf_residual_ctes``, ``_pq_codes``, ``_adc_sum``:
+  ``similarity.pq_fit`` / ``ivf_residuals`` / ``pq_encode`` / ``_adc_r``.
+- ``_payload_block_keys``, ``_block_sim``: ``multimodal.payload_block_keys``
+  and the shared-block fraction of ``multimodal.payload_near_dups``.
+- ``_novel_keepers``: ``ingest_kernel.digest_novel_keepers``.
+- ``_greedy_mis``, ``_greedy_mis_round``: ``ingest_kernel.greedy_admit``.
+- ``PII_CARD_STAGE_SQL``: the Luhn card stage of ``text.pii_scrub``.
 """
 
 from __future__ import annotations
 
-# --- shared fixture CTEs (mirror of fixtures.load_base/build_internal/build_external)
+from mongo_polars_reconciliation_spark.functions.hashing import (
+    POLY_P31B,
+    poly_hash_mixed_sql,
+)
+
+
+def q(*cte_blocks: str, select: str, recursive: bool = False) -> str:
+    """One oracle statement: the CTE blocks as one WITH list, then the
+    final ``select``."""
+    ctes = ",".join(b.strip().strip(",").strip() for b in cte_blocks)
+    return ("WITH RECURSIVE " if recursive else "WITH ") + ctes + "\n" + select
+
+
+# --- reconciliation ----------------------------------------------------
 
 BASE_CTES = """
 base AS (
@@ -59,18 +142,49 @@ b_tbl AS (
 )
 """
 
-# exact-match join + winner/loser ranking (operators/match.py mirror)
-MATCH_CTES = """
-j1 AS (
+# The reconciliation keys with the A side aliased a and the B side b: all
+# three for the exact pass, code and date for the tolerance and third
+# passes.
+_EXACT_KEYS = (
+    "a.transaction_code = b.codigo AND a.amount = b.importe"
+    " AND a.trx_date = b.fecha"
+)
+_CODE_DATE_KEYS = "a.transaction_code = b.codigo AND a.trx_date = b.fecha"
+
+
+def _ranked_match(n: int, a_src: str, b_src: str, keys: str) -> str:
+    """Every (A row, B candidate) pair on ``keys`` as ``j{n}``, ranked per
+    A row by B row number: rn = 1 is the winner, the rest are losers."""
+    return f"""j{n} AS (
   SELECT a._id, a.transaction_code, a.amount, a.trx_date,
          b.codigo, b.importe, b.fecha, b.row_num,
          ROW_NUMBER() OVER (PARTITION BY a._id ORDER BY b.row_num) AS rn
-  FROM a_tbl a JOIN b_tbl b
-    ON a.transaction_code = b.codigo AND a.amount = b.importe AND a.trx_date = b.fecha
-)
-"""
+  FROM {a_src} a JOIN {b_src} b ON {keys}
+)"""
 
-# zero-effect pair detection (operators/zero_effect.py mirror)
+
+def _match_pass(n: int, a_src: str, b_src: str, keys: str) -> str:
+    """One cascade pass: the ranked match ``j{n}``, its winners ``m{n}``
+    and both residuals — ``a_res{n}``, the A rows with no candidate, and
+    ``b_res{n}``, the B rows with none plus the losers, which return to
+    the pool."""
+    return _ranked_match(n, a_src, b_src, keys) + f""",
+m{n} AS (SELECT _id, amount FROM j{n} WHERE rn = 1),
+losers{n} AS (SELECT codigo, importe, fecha, row_num FROM j{n} WHERE rn > 1),
+a_res{n} AS (
+  SELECT a.* FROM {a_src} a WHERE NOT EXISTS (SELECT 1 FROM {b_src} b
+    WHERE {keys})
+),
+b_res{n} AS (
+  SELECT b.codigo, b.importe, b.fecha, b.row_num FROM {b_src} b
+  WHERE NOT EXISTS (SELECT 1 FROM {a_src} a WHERE {keys})
+  UNION ALL
+  SELECT codigo, importe, fecha, row_num FROM losers{n}
+)"""
+
+
+MATCH_CTES = _ranked_match(1, "a_tbl", "b_tbl", _EXACT_KEYS)
+
 ZE_CTES = """
 ze AS (
   SELECT s._id AS sale_id, v._id AS void_id, s.amount AS amount
@@ -80,11 +194,656 @@ ze AS (
 )
 """
 
+# the A side with both members of every zero-effect pair removed
+ZE_CLEAN = """a1 AS (
+  SELECT a.* FROM a_tbl a
+  WHERE NOT EXISTS (SELECT 1 FROM ze WHERE ze.sale_id = a._id)
+    AND NOT EXISTS (SELECT 1 FROM ze WHERE ze.void_id = a._id)
+)"""
+
+
+def _tolerance_match(a_src: str, b_src: str) -> str:
+    """Per (code, date) A group, the B candidate on code and date nearest
+    in amount within 1.0, ties to the lower B row number → ``tm`` with
+    the absolute ``diff``."""
+    return f"""tm AS (
+  SELECT * FROM (
+    SELECT a._id, a.transaction_code, a.amount, a.trx_date,
+           b.codigo, b.importe, b.fecha, b.row_num,
+           ABS(b.importe - a.amount) AS diff,
+           ROW_NUMBER() OVER (PARTITION BY a.transaction_code, a.trx_date
+                              ORDER BY ABS(b.importe - a.amount), b.row_num) AS trn
+    FROM {a_src} a JOIN {b_src} b ON {_CODE_DATE_KEYS}
+    WHERE ABS(b.importe - a.amount) <= 1.0
+  ) t WHERE trn = 1
+)"""
+
+
+# The cascade: zero-effect → exact pass → tolerance pass. Follows
+# BASE_CTES + ZE_CTES; exposes mt_all (matched) and a_nmt / b_nmt (the
+# residuals after the tolerance pass).
+CASCADE_TAIL_CTES = f"""{ZE_CLEAN},
+{_match_pass(1, "a1", "b_tbl", _EXACT_KEYS)},
+{_tolerance_match("a_res1", "b_res1")},
+a_nmt AS (
+  SELECT a.* FROM a_res1 a WHERE NOT EXISTS (SELECT 1 FROM tm
+    WHERE tm.transaction_code = a.transaction_code AND tm.trx_date = a.trx_date)
+),
+b_nmt AS (
+  SELECT b.* FROM b_res1 b WHERE NOT EXISTS (SELECT 1 FROM tm
+    WHERE tm.codigo = b.codigo AND tm.importe = b.importe AND tm.fecha = b.fecha)
+),
+mt_all AS (SELECT _id, amount FROM m1 UNION ALL SELECT _id, amount FROM tm)"""
+
 DEC_SUM = "COALESCE(CAST(SUM(CAST(amount AS DECIMAL(18,2))) AS DOUBLE), 0.0)"
 
 
-def q(*cte_blocks: str, select: str) -> str:
-    return "WITH " + ",".join(b.strip().rstrip(",") for b in cte_blocks) + "\n" + select
+def _bucket_summary(mt: str, a_nmt: str, b_nmt: str) -> str:
+    """Count and DECIMAL-routed amount sum per result bucket (the B
+    residual carries no A amount)."""
+    return f"""
+SELECT 'a_to_b_mt' AS bucket, COUNT(*) AS n, {DEC_SUM} AS amount_sum FROM {mt}
+UNION ALL
+SELECT 'a_to_b_nmt', COUNT(*), {DEC_SUM} FROM {a_nmt}
+UNION ALL
+SELECT 'b_to_a_nmt', COUNT(*), 0.0 FROM {b_nmt}
+UNION ALL
+SELECT 'z_eff_a', COUNT(*), {DEC_SUM} FROM ze
+"""
+
+
+# --- events --------------------------------------------------------------
+
+_EVENTS_HOURLY = """
+SELECT CAST(epoch_ns(ts) // 3600000000000 AS BIGINT) AS hour_bucket,
+       event_type,
+       COUNT(*) AS n,
+       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_sum
+FROM events
+GROUP BY 1, 2
+"""
+
+_USER_HASH = poly_hash_mixed_sql("user_id")
+
+# The KMV distinct count over kth(hv), the k smallest distinct hashes:
+# (k - 1) · P31 / (k-th smallest), beside the exact count.
+_KMV_ESTIMATE = """est AS (SELECT MAX(hv) AS kth_min, COUNT(*) AS k_actual FROM kth),
+exact AS (SELECT COUNT(DISTINCT user_id) AS n_exact FROM events)
+SELECT k_actual, kth_min, n_exact,
+       CASE WHEN kth_min > 0
+            THEN CAST(FLOOR((k_actual - 1) * 2147483647.0 / kth_min) AS BIGINT)
+       END AS n_estimate
+FROM est CROSS JOIN exact
+"""
+
+
+def _session_flags(gap_op: str) -> str:
+    """Per user in (ts, event_id) order, ``flagged.is_new`` = 1 on the
+    first event and after a gap ``gap_op`` 30 minutes."""
+    return f"""e AS (
+  SELECT event_id, user_id, epoch_ns(ts) AS tn FROM events
+),
+lagged AS (
+  SELECT event_id, user_id, tn,
+         LAG(tn) OVER (PARTITION BY user_id ORDER BY tn, event_id) AS prev_tn
+  FROM e
+),
+flagged AS (
+  SELECT event_id, user_id, tn,
+         CASE WHEN prev_tn IS NULL OR tn - prev_tn {gap_op} 1800000000000
+              THEN 1 ELSE 0 END AS is_new
+  FROM lagged
+)"""
+
+
+# operators/summary._hist_bin: 1000 equal-width bins of t.v over the
+# [lo, hi] of stats s
+_HIST_BIN = """CASE WHEN s.hi = s.lo THEN 0
+         ELSE LEAST(CAST(FLOOR((t.v - s.lo) / ((s.hi - s.lo) / 1000.0))
+                    AS BIGINT), 999) END"""
+
+
+# --- documents: fixtures and text kernels ----------------------------------
+
+_DROP_FIRST_WORD = "substr(text, strpos(text, ' ') + 1)"
+
+# fixtures.build_documents_aug: exact copies of the %10==7 docs (+100000)
+# and first-word-dropped near-dups of the %10==3 docs (+200000)
+DOCUMENTS_AUG = f"""docs_aug AS (
+  SELECT doc_id, text FROM documents
+  UNION ALL
+  SELECT doc_id + 100000, text FROM documents WHERE doc_id % 10 = 7
+  UNION ALL
+  SELECT doc_id + 200000, {_DROP_FIRST_WORD}
+  FROM documents WHERE doc_id % 10 = 3
+)"""
+
+# fixtures.build_documents_footers: a shared footer replacing (%97==0),
+# appended (%5==0), appended with a second shared line (%5==1) or
+# prepended (%5==2)
+DOCUMENTS_FOOTERS = """docs_f AS (
+  SELECT doc_id,
+         CASE WHEN doc_id % 97 = 0 THEN 'shared boilerplate footer'
+              WHEN doc_id % 5 = 0
+              THEN text || chr(10) || 'shared boilerplate footer'
+              WHEN doc_id % 5 = 1
+              THEN text || chr(10) || 'shared boilerplate footer'
+                   || chr(10) || 'second shared footer'
+              WHEN doc_id % 5 = 2
+              THEN 'shared boilerplate footer' || chr(10) || text
+              ELSE text END AS text
+  FROM documents
+)"""
+
+_PAYLOAD_TAIL = "text || ' extra appended tail content for payload variant'"
+
+# fixtures.build_mm_payload_aug: byte-exact copies of the %10==7 docs
+# (+100000) and tail-appended variants of the %10==5 docs (+300000). The
+# payloads are UTF-8 encodings of ASCII texts, so DuckDB's VARCHAR
+# md5/substr mirror Spark's byte-level md5/substring exactly.
+MM_PAYLOAD_BASE = f"""base AS (
+  SELECT doc_id, text FROM documents
+  UNION ALL
+  SELECT doc_id + 100000, text FROM documents WHERE doc_id % 10 = 7
+  UNION ALL
+  SELECT doc_id + 300000,
+         {_PAYLOAD_TAIL}
+  FROM documents WHERE doc_id % 10 = 5
+)"""
+
+# the documents with NULL text read as ''
+_DOCS_NONNULL = "docs0 AS (SELECT doc_id, COALESCE(text, '') AS text FROM documents)"
+
+
+def _ingest_split(
+    src: str, id_col: str, val: str, redeliver_mod: int, *variants,
+    hist: str = "hist",
+) -> str:
+    """fixtures._ingest_split over the (``id_col``, ``val``) columns of
+    ``src``: ``{hist}`` is the id%3<2 slice; ``batch`` is the %3==2 slice,
+    the exact re-deliveries of the %10==``redeliver_mod`` slice under
+    +100000 ids and, for each ``(mod, offset, expr)`` variant, ``expr`` of
+    the %10==mod slice under +offset ids."""
+    arms = [
+        f"SELECT {id_col}, {val} FROM {src} WHERE {id_col} % 3 = 2",
+        f"SELECT {id_col} + 100000, {val} FROM {src}"
+        f" WHERE {id_col} % 10 = {redeliver_mod}",
+    ] + [
+        f"SELECT {id_col} + {off}, {expr} FROM {src} WHERE {id_col} % 10 = {mod}"
+        for mod, off, expr in variants
+    ]
+    union = "\n  UNION ALL\n  ".join(arms)
+    return f"""{hist} AS MATERIALIZED (
+  SELECT {id_col}, {val} FROM {src} WHERE {id_col} % 3 < 2
+),
+batch AS MATERIALIZED (
+  {union}
+)"""
+
+
+def _novel_keepers(digest: str) -> str:
+    """ingest_kernel.digest_novel_keepers over ``hist`` / ``batch``: per
+    batch ``digest`` (an expression of text) the min-id keeper and the copy
+    count, minus the digests the history holds → ``keep1n(h, doc_id,
+    n_copies)``, and the keepers' rows ``kept(doc_id, text)``."""
+    return f"""hist_dg AS MATERIALIZED (SELECT DISTINCT {digest} AS h FROM hist),
+keep1 AS MATERIALIZED (
+  SELECT {digest} AS h, MIN(doc_id) AS doc_id, COUNT(*) AS n_copies
+  FROM batch GROUP BY {digest}
+),
+keep1n AS MATERIALIZED (
+  SELECT k.h, k.doc_id, k.n_copies FROM keep1 k LEFT JOIN hist_dg s ON s.h = k.h
+  WHERE s.h IS NULL
+),
+kept AS MATERIALIZED (
+  SELECT b.doc_id, b.text FROM batch b JOIN keep1n k ON k.doc_id = b.doc_id
+)"""
+
+
+def _ngram_list(t: str, n: int) -> str:
+    """text.word_ngrams: the space-joined word n-grams of token list ``t``,
+    in order."""
+    gram = " || ' ' || ".join(f"{t}[i+{j}]" if j else f"{t}[i]" for j in range(n))
+    return f"list_transform(generate_series(1, len({t})-{n - 1}), i -> {gram})"
+
+
+def _shingles(src: str, n: int, p: str = "", mat: str = "") -> str:
+    """dedup.shingle_sets: the distinct word n-grams of each doc of ``src``
+    (doc_id, text) as ``{p}sh(doc_id, shingle)``, over the token lists
+    ``{p}toks(doc_id, t)``. ``mat`` is "" or " MATERIALIZED"."""
+    return f"""{p}toks AS{mat} (SELECT doc_id, string_split(text, ' ') AS t FROM {src}),
+{p}sh AS{mat} (
+  SELECT DISTINCT doc_id, shingle FROM (
+    SELECT doc_id, unnest({_ngram_list("t", n)}) AS shingle
+    FROM {p}toks) u
+  WHERE shingle IS NOT NULL
+)"""
+
+
+def _mh_band_ctes(src: str, p: str = "", mat: str = "") -> str:
+    """dedup._minhash_band_keys over the 3-gram sets of ``src`` (doc_id,
+    text), CTEs prefixed ``p``: the poly shingle id (h·31 + c) mod 8191,
+    12 hashes ((2j+3)·sid + 5j+7) mod 8191, 4 bands of 3 joined with '_'.
+    Exposes ``{p}sh(doc_id, shingle)``, ``{p}sizes(doc_id, sz)`` and
+    ``{p}bandkeys(doc_id, band, bkey)``."""
+    return _shingles(src, 3, p, mat) + f""",
+{p}shid AS{mat} (
+  SELECT doc_id,
+         CASE WHEN length(shingle) = 0 THEN 0 ELSE
+           list_reduce(list_transform(generate_series(1, length(shingle)),
+                       i -> ord(substr(shingle, i, 1)) % 8191),
+                       (h, c) -> (h*31 + c) % 8191) END AS sid
+  FROM {p}sh
+),
+{p}hashes AS{mat} (
+  SELECT doc_id, j, MIN(((2*j+3)*sid + 5*j+7) % 8191) AS mh
+  FROM {p}shid CROSS JOIN (SELECT unnest(generate_series(0, 11)) AS j) js
+  GROUP BY doc_id, j
+),
+{p}bandkeys AS{mat} (
+  SELECT doc_id, j // 3 AS band,
+         STRING_AGG(CAST(mh AS VARCHAR), '_' ORDER BY j) AS bkey
+  FROM {p}hashes GROUP BY doc_id, j // 3
+),
+{p}sizes AS{mat} (SELECT doc_id, COUNT(*) AS sz FROM {p}sh GROUP BY doc_id)"""
+
+
+def _floor4_jaccard(n_int: str, sz_a: str, sz_b: str) -> str:
+    """dedup.jaccard_verify: |A ∩ B| / |A ∪ B| from the intersection count
+    and both set sizes, floored to 4 dp."""
+    return (
+        f"FLOOR(CAST({n_int} AS DOUBLE) / ({sz_a} + {sz_b} - {n_int})"
+        " * 10000) / 10000"
+    )
+
+
+def _jaccard_verify(cand: str, a: str, b: str, pa: str = "", pb: str = "") -> str:
+    """dedup.jaccard_verify: the floor-4 3-gram Jaccard ``jacc_r`` of each
+    candidate pair (``a``, ``b``) of ``cand``, doc ``a`` read from the
+    ``_mh_band_ctes`` prefixed ``pa`` and doc ``b`` from those prefixed
+    ``pb``."""
+    return f"""SELECT c.{a}, c.{b},
+           {_floor4_jaccard("COUNT(*)", "sa.sz", "sb.sz")} AS jacc_r
+    FROM {cand} c
+    JOIN {pa}sh x ON x.doc_id = c.{a}
+    JOIN {pb}sh y ON y.doc_id = c.{b} AND y.shingle = x.shingle
+    JOIN {pa}sizes sa ON sa.doc_id = c.{a}
+    JOIN {pb}sizes sb ON sb.doc_id = c.{b}
+    GROUP BY c.{a}, c.{b}, sa.sz, sb.sz"""
+
+
+def _minhash_pair_ctes(src: str) -> str:
+    """dedup.minhash_near_dups over ``src`` (doc_id, text): band-collision
+    candidates verified by exact 3-gram Jaccard >= 0.6 →
+    ``mh_pairs(id_a, id_b, jacc_r)``."""
+    return _mh_band_ctes(src) + f""",
+cand AS (
+  SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
+  FROM bandkeys l JOIN bandkeys r
+    ON l.band = r.band AND l.bkey = r.bkey AND l.doc_id < r.doc_id
+),
+mh_pairs AS (
+  SELECT id_a, id_b, jacc_r FROM (
+    {_jaccard_verify("cand", "id_a", "id_b")}
+  ) v WHERE jacc_r >= 0.6
+)"""
+
+
+MINHASH_PAIR_CTES = DOCUMENTS_AUG + ",\n" + _minhash_pair_ctes("docs_aug")
+
+# dedup.dedup_clusters over mh_pairs: every docs_aug doc labelled with the
+# min id reachable in the undirected pair graph → cl(doc_id, cluster_id).
+# Needs WITH RECURSIVE.
+CC_CTES = """edges AS (
+  SELECT id_a AS src, id_b AS dst FROM mh_pairs
+  UNION
+  SELECT id_b, id_a FROM mh_pairs
+),
+walk(node, lbl) AS (
+  SELECT doc_id, doc_id FROM docs_aug
+  UNION
+  SELECT e.src, w.lbl FROM walk w JOIN edges e ON e.dst = w.node
+),
+cl AS (SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM walk GROUP BY node)"""
+
+# text.quality_score's stopword hits over column text
+_STOPWORD_HITS = (
+    "len(list_filter(string_split(text, ' '),"
+    " t -> t IN ('the','a','of','and','is','to','in')))"
+)
+
+
+def _quality_sql(n_tok: str = "len(string_split(text, ' '))") -> str:
+    """text.quality_score's quality_r of column ``text``: 0.4 · length
+    + 0.3 · (1 − stopword ratio) + 0.3 · mean word length / 8, each term
+    capped at 1, floored to 4 dp. ``n_tok`` is the whitespace token count
+    (a column where the caller already has one)."""
+    return f"""FLOOR((
+           0.4 * LEAST(1.0, {n_tok} / 100.0)
+           + 0.3 * (1.0 - CAST({_STOPWORD_HITS} AS DOUBLE) / {n_tok})
+           + 0.3 * LEAST(1.0,
+               ((length(text) - ({n_tok} - 1)) / CAST({n_tok} AS DOUBLE)) / 8.0)
+           ) * 10000) / 10000"""
+
+
+def _lang_id_ctes(src: str) -> str:
+    """text.language_id over ``src`` (doc_id, text): per language the
+    share of a doc's whitespace tokens in its stopword list; the top share
+    wins, ties to the lower language code → ``lang_pick(doc_id,
+    pred_lang, score)``."""
+    return f"""swords(lang, tok) AS (VALUES
+  ('en','the'),('en','a'),('en','of'),('en','and'),('en','is'),('en','to'),('en','in'),
+  ('es','el'),('es','la'),('es','de'),('es','y'),('es','es'),('es','en'),('es','un'),
+  ('fr','le'),('fr','la'),('fr','de'),('fr','et'),('fr','est'),('fr','en'),('fr','un'),
+  ('de','der'),('de','die'),('de','das'),('de','und'),('de','ist'),('de','in'),('de','ein'),
+  ('zh','de'),('zh','shi'),('zh','le'),('zh','zai'),('zh','he'),('zh','you'),('zh','wo')
+),
+langs AS (SELECT DISTINCT lang FROM swords),
+toksl AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM {src}),
+tot AS (SELECT doc_id, COUNT(*) AS n_tok FROM toksl GROUP BY 1),
+hits AS (
+  SELECT t.doc_id, s.lang, COUNT(*) AS n_hit
+  FROM toksl t JOIN swords s USING (tok) GROUP BY 1, 2
+),
+lscored AS (
+  SELECT tot.doc_id, l.lang, COALESCE(h.n_hit, 0) / tot.n_tok AS score
+  FROM tot CROSS JOIN langs l
+  LEFT JOIN hits h ON h.doc_id = tot.doc_id AND h.lang = l.lang
+),
+lang_pick AS (
+  SELECT doc_id, lang AS pred_lang, score FROM (
+    SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY score DESC, lang) AS rn
+    FROM lscored
+  ) t WHERE rn = 1
+)"""
+
+
+def _split_case(bucket: str) -> str:
+    """text.split_assignment: hash buckets 0–79 train, 80–89 val, 90–99
+    test."""
+    return (
+        f"CASE WHEN {bucket} < 80 THEN 'train' WHEN {bucket} < 90 THEN 'val'"
+        " ELSE 'test' END"
+    )
+
+
+def _repetition_ctes(src: str, p: str = "") -> str:
+    """text.repetition_signals over ``src`` (doc_id, text): the top token
+    count and token total (``{p}top``), the duplicate-3-gram and
+    consecutive-repeat fractions (``{p}arr``)."""
+    return f"""{p}base AS (SELECT doc_id, string_split(text, ' ') AS toks FROM {src}),
+{p}tokr AS (SELECT doc_id, unnest(toks) AS tok FROM {p}base),
+{p}top AS (
+  SELECT doc_id, MAX(c) AS top_c, CAST(SUM(c) AS BIGINT) AS n_tok FROM (
+    SELECT doc_id, tok, COUNT(*) AS c FROM {p}tokr GROUP BY doc_id, tok
+  ) t GROUP BY doc_id
+),
+{p}arr AS (
+  SELECT doc_id,
+         CASE WHEN len(toks) >= 3 THEN
+           1.0 - CAST(len(list_distinct(g.grams)) AS DOUBLE) / len(g.grams)
+         ELSE 0.0 END AS dup_3gram_frac,
+         CASE WHEN len(toks) >= 2 THEN
+           CAST(list_sum(list_transform(generate_series(1, len(toks)-1),
+                i -> CASE WHEN toks[i] = toks[i+1] THEN 1 ELSE 0 END)) AS DOUBLE)
+           / (len(toks) - 1)
+         ELSE 0.0 END AS consec_rep_frac
+  FROM {p}base,
+       LATERAL (SELECT {_ngram_list("toks", 3)} AS grams) g
+)"""
+
+
+def _line_dedup_ctes(src: str, p: str = "") -> str:
+    """text.line_dedup_corpus over ``src`` (doc_id, text): every distinct
+    line kept at its first global occurrence — the lexicographic min of
+    (doc_id, line number), taken in two aggregate phases (min doc, then
+    min line within it) → ``{p}lines`` and ``{p}kept`` (doc_id, ln,
+    line)."""
+    return f"""{p}lines AS (
+  SELECT doc_id, CAST(u.i - 1 AS INT) AS ln, l[u.i] AS line
+  FROM (SELECT doc_id, string_split(text, chr(10)) AS l FROM {src}) t,
+       unnest(range(1, len(l) + 1)) AS u(i)
+),
+{p}f1 AS (SELECT line, MIN(doc_id) AS fdoc FROM {p}lines GROUP BY line),
+{p}f2 AS (
+  SELECT l.line, l.doc_id AS fdoc, MIN(l.ln) AS fln
+  FROM {p}lines l JOIN {p}f1 ON {p}f1.line = l.line AND l.doc_id = {p}f1.fdoc
+  GROUP BY l.line, l.doc_id
+),
+{p}kept AS (
+  SELECT l.doc_id, l.ln, l.line
+  FROM {p}lines l JOIN {p}f2
+    ON {p}f2.line = l.line AND l.doc_id = {p}f2.fdoc AND l.ln = {p}f2.fln
+)"""
+
+
+# a doc's kept lines rebuilt in line order
+_LINES_REBUILT = "string_agg(line, chr(10) ORDER BY ln)"
+
+
+def _bigram_lm_ctes(src: str, p: str = "") -> str:
+    """text.bigram_lm_scores over the docs of ``src`` (doc_id, text) with
+    at least two tokens: bigram counts, integer conditional probabilities
+    p_q = c(w1 w2) · 10^6 // c(w1), and each doc's mean p_q →
+    ``{p}scores(doc_id, n_bigrams, lm_score_q)``."""
+    return f"""{p}pairs AS (
+  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
+  FROM (
+    SELECT doc_id, string_split(text, ' ') AS t FROM {src}
+    WHERE len(string_split(text, ' ')) >= 2
+  ), unnest(range(1, len(t))) AS u(i)
+),
+{p}c2 AS (SELECT w1, w2, COUNT(*) AS c2 FROM {p}pairs GROUP BY w1, w2),
+{p}c1 AS (SELECT w1, SUM(c2) AS c1 FROM {p}c2 GROUP BY w1),
+{p}probs AS (
+  SELECT {p}c2.w1, {p}c2.w2, ({p}c2.c2 * 1000000) // {p}c1.c1 AS p_q
+  FROM {p}c2 JOIN {p}c1 USING (w1)
+),
+{p}scores AS (
+  SELECT p.doc_id, COUNT(*) AS n_bigrams,
+         CAST(SUM(pr.p_q) // COUNT(*) AS BIGINT) AS lm_score_q
+  FROM {p}pairs p JOIN {p}probs pr ON pr.w1 = p.w1 AND pr.w2 = p.w2
+  GROUP BY p.doc_id
+)"""
+
+
+def _isqrt_cte(
+    name: str, src: str, cols: str, x: str, out: str, int_type: str
+) -> str:
+    """``{name}({cols}, {out})`` with ``out`` = isqrt(``x``) per row of
+    ``src``: the float seed FLOOR(SQRT(x)) corrected by ±1, the exact
+    integer square root of text.mix_temperature wherever the double seed
+    errs by less than 1 (x < ~10^30, every gate scale)."""
+    return f"""{name} AS (
+  SELECT {cols},
+         CASE WHEN (s1 + 1) * (s1 + 1) <= {x} THEN s1 + 1 ELSE s1 END AS {out}
+  FROM (
+    SELECT {cols}, {x},
+           CASE WHEN s0 * s0 > {x} THEN s0 - 1 ELSE s0 END AS s1
+    FROM (SELECT {cols}, {x},
+                 CAST(FLOOR(SQRT(CAST({x} AS DOUBLE))) AS {int_type}) AS s0
+          FROM {src}) t0) t1
+)"""
+
+
+# text.mix_temperature's copies over weights(lang, w_q): w_q // 10^4 whole
+# epochs, plus one where the mixed doc hash mod 10^4 falls below the
+# fractional part
+_MIX_COPIES = f"""base AS (
+  SELECT d.doc_id, d.lang, w.w_q,
+         w.w_q // 10000
+         + CASE WHEN {poly_hash_mixed_sql("d.doc_id")} % 10000 < w.w_q % 10000
+                THEN 1 ELSE 0 END AS n_copies
+  FROM documents d JOIN weights w ON w.lang = d.lang
+)"""
+_MIX_SELECT = """
+SELECT doc_id, lang, w_q,
+       CAST(unnest(generate_series(1, n_copies)) AS BIGINT) AS epoch
+FROM base WHERE n_copies > 0
+"""
+
+# the three count-min rows j = 0..2 (alias j)
+_J3 = "(SELECT unnest(generate_series(0, 2)) AS j) j"
+
+
+def _cms_cell(h1: str, h2: str) -> str:
+    """text.cms_cells: row j's cell by double hashing, (h1 + j·h2) mod P31
+    mod 64."""
+    return f"(({h1} + j.j * {h2}) % 2147483647) % 64"
+
+
+# text.corpus_datacard per (source, lang) over documents: doc and token
+# totals, mean quality and nearest-rank p50/p90 token counts →
+# gcard(source, lang, n_docs, total_ws_tokens, avg_quality_r, p50_tokens,
+# p90_tokens)
+_DATACARD_CTES = f"""scored AS (
+  SELECT source, lang, doc_id,
+         CAST(len(string_split(text, ' ')) AS BIGINT) AS ws_tokens,
+         {_quality_sql()} AS quality_r
+  FROM documents
+),
+ranked AS (
+  SELECT *,
+         ROW_NUMBER() OVER (PARTITION BY source, lang ORDER BY ws_tokens, doc_id) AS rn,
+         COUNT(*) OVER (PARTITION BY source, lang) AS n
+  FROM scored
+),
+gcard AS (
+  SELECT source, lang,
+         COUNT(*) AS n_docs,
+         CAST(SUM(ws_tokens) AS BIGINT) AS total_ws_tokens,
+         FLOOR(CAST(SUM(CAST(quality_r AS DECIMAL(18,4))) AS DOUBLE)
+               / COUNT(*) * 10000) / 10000 AS avg_quality_r,
+         MAX(CASE WHEN rn = (1 * n + 1) // 2 THEN ws_tokens END) AS p50_tokens,
+         MAX(CASE WHEN rn = (9 * n + 9) // 10 THEN ws_tokens END) AS p90_tokens
+  FROM ranked GROUP BY source, lang
+)"""
+
+# the training-pack offsets (text.pack_sequences): each doc's token count
+# and exclusive running token offset in doc_id order
+_PACK_CTES = """t AS (
+  SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+         text
+  FROM documents
+),
+p AS (
+  SELECT doc_id, n_tokens, text,
+         CAST(COALESCE(SUM(n_tokens) OVER (
+              ORDER BY doc_id
+              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+              AS BIGINT) AS start_offset
+  FROM t
+)"""
+
+
+# --- embeddings: fixtures and vector kernels --------------------------------
+
+
+def _zero_head(v: str) -> str:
+    """The perturbation of fixtures.build_embeddings_aug and
+    fixtures.semantic_ingest_split: DOUBLE[] ``v`` with its first 8 dims
+    zeroed."""
+    return (
+        f"list_transform(generate_series(1, len({v})),"
+        f" i -> CASE WHEN i <= 8 THEN 0.0 ELSE {v}[i] END)"
+    )
+
+
+# fixtures.build_embeddings_aug: the %10==1 vectors again (+100000, same
+# label) with their first 8 dims zeroed → emb_aug(vec_id, label, v)
+EMBEDDINGS_AUG = f"""emb AS (
+  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+),
+emb_aug AS (
+  SELECT vec_id, label, v FROM emb
+  UNION ALL
+  SELECT vec_id + 100000, label, {_zero_head("v")}
+  FROM emb WHERE vec_id % 10 = 1
+)"""
+
+EV = "ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)"
+
+# fixtures.query_vector: vector 0 as the query q
+QUERY_VEC = (
+    "qv AS (SELECT CAST(embedding AS DOUBLE[]) AS q FROM embeddings WHERE vec_id = 0)"
+)
+
+
+def _dot_sql(x: str, y: str) -> str:
+    """Left-fold dot product of two DOUBLE[] expressions — bit-identical
+    to Spark's aggregate() fold."""
+    return (
+        f"list_reduce(list_transform(generate_series(1, len({x})), "
+        f"i -> {x}[i]*{y}[i]), (x,y) -> x+y)"
+    )
+
+
+def _cos_sql(a: str, b: str) -> str:
+    """similarity.cosine of two DOUBLE[] expressions, left-fold order."""
+    return f"{_dot_sql(a, b)} / (sqrt({_dot_sql(a, a)}) * sqrt({_dot_sql(b, b)}))"
+
+
+def _cos6_sql(a: str, b: str) -> str:
+    """The cosine rounded to 6 dp: the cos_r of every similarity face."""
+    return f"ROUND({_cos_sql(a, b)}, 6)"
+
+
+def _sqdist_sql(x: str, y: str, n: str) -> str:
+    """Left-fold squared distance over i = 1..``n`` of the element
+    expressions ``x`` and ``y`` (both in terms of i)."""
+    return (
+        f"list_reduce(list_transform(generate_series(1, {n}), i -> "
+        f"({x} - {y}) * ({x} - {y})), (x,y) -> x + y)"
+    )
+
+
+def _query_scored(src: str) -> str:
+    """The cos_r of every vector of ``src`` (vec_id, v) to the query
+    vector → scored(vec_id, cos_r)."""
+    return f"""scored AS (
+  SELECT vec_id, {_cos6_sql("v", "q")} AS cos_r
+  FROM {src} CROSS JOIN qv
+)"""
+
+
+def _topk_by_cos(src: str, extra: str = "") -> str:
+    """similarity._exact_topk's ranking: the top 10 of ``src`` (vec_id,
+    cos_r{extra}) by (cos_r DESC, vec_id)."""
+    return f"""
+SELECT vec_id, rank, cos_r{extra} FROM (
+  SELECT vec_id, CAST(ROW_NUMBER() OVER (ORDER BY cos_r DESC, vec_id) AS BIGINT) AS rank,
+         cos_r{extra}
+  FROM {src}
+) r WHERE rank <= 10
+"""
+
+
+def _knn_ranked(src: str) -> str:
+    """similarity._knn_rank: the rows of ``src`` (vec_id, neighbor_id,
+    cos_r) with each vector's neighbor rank rn by (cos_r DESC,
+    neighbor_id)."""
+    return f"""SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+                                 ORDER BY cos_r DESC, neighbor_id) AS rn
+    FROM {src}"""
+
+
+# the k-NN graph faces: each vector's 3 best neighbors of scored
+_KNN3_SELECT = f"""
+SELECT vec_id, CAST(rn AS BIGINT) AS rank, neighbor_id, cos_r FROM (
+  {_knn_ranked("scored")}
+) t WHERE rn <= 3
+"""
+
+
+def _lsh_sig_sql(v: str) -> str:
+    """similarity.lsh_signature_col: 8 random-hyperplane sign bits of
+    ``v`` (LCG hyperplane entries, left-fold projections)."""
+    return f"""list_reduce(list_transform(generate_series(0, 7), j ->
+      CASE WHEN list_reduce(list_transform(generate_series(1, len({v})), i ->
+          {v}[i] * (CAST((1103515245::BIGINT * (j*4096 + i - 1) + 12345) % 65536 AS DOUBLE)/65536 - 0.5)
+        ), (x,y) -> x+y) >= 0
+      THEN CAST(1 AS BIGINT) << j ELSE CAST(0 AS BIGINT) END
+    ), (x,y) -> x+y)"""
 
 
 # SQL mirror of similarity.kmeans_fit: unrolled deterministic Lloyd over a
@@ -92,12 +851,7 @@ def q(*cte_blocks: str, select: str) -> str:
 # n_iter iterations; DECIMAL-routed per-dimension means; empty clusters keep
 # the previous centroid (COALESCE). Final centroids in `cents_final(cid, c)`,
 # final assignment of every vector in `assign_final(vec_id, v, cid)`.
-# Left-fold distance / list_reduce gives bit-identical doubles to Spark's
-# aggregate() fold.
-_SQDIST = (
-    "list_reduce(list_transform(generate_series(1, len(e.v)),"
-    " i -> (e.v[i]-c.c[i])*(e.v[i]-c.c[i])), (x,y) -> x+y)"
-)
+_SQDIST = _sqdist_sql("e.v[i]", "c.c[i]", "len(e.v)")
 
 
 def _kmeans_assign_topn(
@@ -105,10 +859,10 @@ def _kmeans_assign_topn(
 ) -> str:
     """Each vector's ``n`` nearest centroids — (sqdist, cid) ascending, the
     same argmin-with-cid-tie-break as similarity.cluster_assign /
-    probe_assignments; n=1 is the plain assignment. ``src_vecs`` (r10)
-    assigns a frame OTHER than the fit input — the persisted-centroid
-    ingest oracle assigns both the history and the arriving batch under
-    the one fitted centroid set."""
+    probe_assignments; n=1 is the plain assignment. ``src_vecs`` assigns
+    a frame other than the fit input (the semantic ingest oracle assigns
+    both the history and the arriving batch under one fitted centroid
+    set)."""
     return f"""
 {name} AS (
   SELECT vec_id, v, cid FROM (
@@ -118,10 +872,6 @@ def _kmeans_assign_topn(
     FROM {src_vecs} e CROSS JOIN {src_cents} c) t
   WHERE rn <= {n}
 )"""
-
-
-def _kmeans_assign(src_cents: str, name: str) -> str:
-    return _kmeans_assign_topn(src_cents, name, 1)
 
 
 def _kmeans_means(src_assign: str, prev: str, mname: str, fname: str, lname: str) -> str:
@@ -143,8 +893,8 @@ def _kmeans_means(src_assign: str, prev: str, mname: str, fname: str, lname: str
 
 # Single source of truth for the fitted-k-means queries: harness/queries.py
 # imports these and passes them to kmeans_fit / *_fitted, and the oracle CTE
-# chain below is GENERATED from the same values — changing k or n_iter can
-# no longer silently diverge the two engines.
+# chain below is generated from the same values, so changing k or n_iter
+# cannot diverge the two engines.
 KMEANS_ORACLE_K = 4
 KMEANS_ORACLE_N_ITER = 2
 
@@ -159,9 +909,9 @@ def kmeans_ctes(
     iterations over ``k`` centroids. Exposes two fixed final aliases so
     downstream SQL is independent of the iteration count:
     ``{prefix}cents_final`` (cid, c) and ``{prefix}assign_final``
-    (vec_id, v, cid). ``prefix``/``src_vecs`` (r10) let several
-    independent fits coexist in one query — the PQ oracle runs one chain
-    per subspace over sliced vectors."""
+    (vec_id, v, cid). ``prefix``/``src_vecs`` let several independent
+    fits coexist in one query — the PQ oracle runs one chain per subspace
+    over sliced vectors."""
     p = prefix
     parts = [
         f"""
@@ -201,18 +951,24 @@ def kmeans_ctes(
 
 KMEANS_CTES = kmeans_ctes()
 
-# The multi-probe queries fit MORE clusters with ONE Lloyd iteration:
+# The multi-probe queries fit more clusters with one Lloyd iteration:
 # block sizes (and the blocked self-join's pair count) scale with n/nlist,
 # and nlist=4 over the sf0.1 corpus produced ~1000-vector blocks → ~4M
 # interpreted 64-dim dot products (measured 30 s at sf0.1; 9 s with
 # nlist=32). nlist≈sqrt(n)·k-ish with a single refinement iteration is the
-# standard IVF coarse-quantizer recipe — the quantizer only needs to BLOCK
+# standard IVF coarse-quantizer recipe — the quantizer only needs to block
 # well, not converge. The harness queries and this CTE chain share the
 # constants so the two engines cannot diverge.
 MULTIPROBE_ORACLE_NLIST = 32
 MULTIPROBE_ORACLE_N_ITER = 1
 KMEANS_CTES_MULTIPROBE = kmeans_ctes(
     k=MULTIPROBE_ORACLE_NLIST, n_iter=MULTIPROBE_ORACLE_N_ITER
+)
+# similarity.probe_assignments: every vector's 2 nearest multiprobe cells
+MULTIPROBE_CTES = (
+    KMEANS_CTES_MULTIPROBE
+    + ","
+    + _kmeans_assign_topn("cents_final", "assign_probe", 2)
 )
 
 # Product-quantization constants, shared by harness/queries.py:sim_topk_pq
@@ -225,142 +981,150 @@ PQ_ORACLE_KSUB = 8
 PQ_ORACLE_N_ITER = 1
 PQ_ORACLE_RERANK = 50
 
-# IVF-PQ constants (r10), shared by harness/queries.py:sim_topk_ivfpq and
-# the oracle chain below. A small coarse quantizer (4 cells, 1 Lloyd
-# round) keeps the 5-fit oracle chain tractable at the gate SFs; the PQ
-# geometry is the PQ_ORACLE_* set, fitted on RESIDUALS. nprobe=2 probes
-# half the cells — a real recall/read trade, not a degenerate full scan.
+# IVF-PQ constants, shared by harness/queries.py:sim_topk_ivfpq and the
+# oracle chain below. A small coarse quantizer (4 cells, 1 Lloyd round)
+# keeps the 5-fit oracle chain tractable at the gate SFs; the PQ geometry
+# is the PQ_ORACLE_* set, fitted on residuals. nprobe=2 probes half the
+# cells — a real recall/read trade, not a degenerate full scan.
 IVFPQ_ORACLE_NLIST = 4
 IVFPQ_ORACLE_N_ITER = 1
 IVFPQ_ORACLE_NPROBE = 2
 
-# IVF-PQ k-NN graph constants (r10): k=5 matches the other knn-join
-# queries; rerank=20 exact-scored survivors per query.
+# IVF-PQ k-NN graph constants: k=5 matches the other knn-join queries;
+# rerank=20 exact-scored survivors per query.
 IVFPQ_ORACLE_KJOIN = 5
 IVFPQ_ORACLE_RERANK_JOIN = 20
 
 
-MINHASH_PAIR_CTES = """docs_aug AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 100000, text FROM documents WHERE doc_id % 10 = 7
-  UNION ALL
-  SELECT doc_id + 200000, substr(text, strpos(text, ' ') + 1)
-  FROM documents WHERE doc_id % 10 = 3
-),
-toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM docs_aug),
-sh AS (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id,
-           unnest(list_transform(generate_series(1, len(t)-2),
-                  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-    FROM toks) u
-  WHERE shingle IS NOT NULL
-),
-shid AS (
-  SELECT doc_id,
-         CASE WHEN length(shingle) = 0 THEN 0 ELSE
-           list_reduce(list_transform(generate_series(1, length(shingle)),
-                       i -> ord(substr(shingle, i, 1)) % 8191),
-                       (h, c) -> (h*31 + c) % 8191) END AS sid
-  FROM sh
-),
-hashes AS (
-  SELECT doc_id, j, MIN(((2*j+3)*sid + 5*j+7) % 8191) AS mh
-  FROM shid CROSS JOIN (SELECT unnest(generate_series(0, 11)) AS j) js
-  GROUP BY doc_id, j
-),
-bandkeys AS (
-  SELECT doc_id, j // 3 AS band,
-         STRING_AGG(CAST(mh AS VARCHAR), '_' ORDER BY j) AS bkey
-  FROM hashes GROUP BY doc_id, j // 3
-),
-cand AS (
-  SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-  FROM bandkeys l JOIN bandkeys r
-    ON l.band = r.band AND l.bkey = r.bkey AND l.doc_id < r.doc_id
-),
-sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT c.id_a, c.id_b, COUNT(*) AS n_int
-  FROM cand c
-  JOIN sh a ON a.doc_id = c.id_a
-  JOIN sh b ON b.doc_id = c.id_b AND b.shingle = a.shingle
-  GROUP BY c.id_a, c.id_b
-),
-mh_pairs AS (
-  SELECT id_a, id_b, jacc_r FROM (
-    SELECT i.id_a, i.id_b,
-           FLOOR(CAST(i.n_int AS DOUBLE) / (sa.sz + sb.sz - i.n_int) * 10000) / 10000 AS jacc_r
-    FROM inter i
-    JOIN sizes sa ON sa.doc_id = i.id_a
-    JOIN sizes sb ON sb.doc_id = i.id_b
-  ) v WHERE jacc_r >= 0.6
+def _pq_books(src: str, dim: int) -> str:
+    """similarity.pq_fit over ``src`` (vec_id, v): one prefixed Lloyd chain
+    per subspace over the sliced vectors ``s{s}ev`` — the fit's final
+    assignment ``s{s}assign_final`` is the code, ``s{s}cents_final`` the
+    book."""
+    m, dsub = PQ_ORACLE_M, dim // PQ_ORACLE_M
+    slices = [
+        f"s{s}ev AS (SELECT vec_id, v[{s * dsub + 1}:{(s + 1) * dsub}] AS v FROM {src})"
+        for s in range(m)
+    ]
+    fits = [
+        kmeans_ctes(
+            k=PQ_ORACLE_KSUB, n_iter=PQ_ORACLE_N_ITER, prefix=f"s{s}",
+            src_vecs=f"s{s}ev",
+        )
+        for s in range(m)
+    ]
+    return ",\n".join(slices + fits)
+
+
+def _ivf_residual_ctes(dim: int) -> str:
+    """similarity.ivf_residuals: the coarse chain (prefix g) over ev and
+    ``rv(vec_id, v, blk)``, each vector minus its cell's centroid."""
+    coarse = kmeans_ctes(
+        k=IVFPQ_ORACLE_NLIST, n_iter=IVFPQ_ORACLE_N_ITER, prefix="g",
+        src_vecs="ev",
+    )
+    return coarse + f""",
+rv AS (
+  SELECT a.vec_id,
+         list_transform(generate_series(1, {dim}), i -> a.v[i] - c.c[i]) AS v,
+         a.cid AS blk
+  FROM gassign_final a JOIN gcents_final c ON c.cid = a.cid
 )"""
 
 
-# Cascade CTE chain (zero-effect → exact pass → tolerance pass), shared by
-# recon_cascade_summary and recon_persist_roundtrip. Appends to BASE_CTES +
-# ZE_CTES; exposes mt_all (matched), a_nmt / b_nmt (final residuals).
-CASCADE_TAIL_CTES = """
-, a1 AS (
-  SELECT a.* FROM a_tbl a
-  WHERE NOT EXISTS (SELECT 1 FROM ze WHERE ze.sale_id = a._id)
-    AND NOT EXISTS (SELECT 1 FROM ze WHERE ze.void_id = a._id)
-),
-j1 AS (
-  SELECT a._id, a.transaction_code, a.amount, a.trx_date,
-         b.codigo, b.importe, b.fecha, b.row_num,
-         ROW_NUMBER() OVER (PARTITION BY a._id ORDER BY b.row_num) AS rn
-  FROM a1 a JOIN b_tbl b
-    ON a.transaction_code = b.codigo AND a.amount = b.importe AND a.trx_date = b.fecha
-),
-m1 AS (SELECT _id, amount FROM j1 WHERE rn = 1),
-losers1 AS (SELECT codigo, importe, fecha, row_num FROM j1 WHERE rn > 1),
-a_res1 AS (
-  SELECT a.* FROM a1 a WHERE NOT EXISTS (SELECT 1 FROM b_tbl b
-    WHERE a.transaction_code = b.codigo AND a.amount = b.importe AND a.trx_date = b.fecha)
-),
-b_res1 AS (
-  SELECT b.codigo, b.importe, b.fecha, b.row_num FROM b_tbl b
-  WHERE NOT EXISTS (SELECT 1 FROM a1 a
-    WHERE a.transaction_code = b.codigo AND a.amount = b.importe AND a.trx_date = b.fecha)
-  UNION ALL
-  SELECT codigo, importe, fecha, row_num FROM losers1
-),
-tm AS (
-  SELECT * FROM (
-    SELECT a._id, a.transaction_code, a.amount, a.trx_date,
-           b.codigo, b.importe, b.fecha, b.row_num,
-           ABS(b.importe - a.amount) AS diff,
-           ROW_NUMBER() OVER (PARTITION BY a.transaction_code, a.trx_date
-                              ORDER BY ABS(b.importe - a.amount), b.row_num) AS trn
-    FROM a_res1 a JOIN b_res1 b
-      ON a.transaction_code = b.codigo AND a.trx_date = b.fecha
-    WHERE ABS(b.importe - a.amount) <= 1.0
-  ) t WHERE trn = 1
-),
-a_nmt AS (
-  SELECT a.* FROM a_res1 a WHERE NOT EXISTS (SELECT 1 FROM tm
-    WHERE tm.transaction_code = a.transaction_code AND tm.trx_date = a.trx_date)
-),
-b_nmt AS (
-  SELECT b.* FROM b_res1 b WHERE NOT EXISTS (SELECT 1 FROM tm
-    WHERE tm.codigo = b.codigo AND tm.importe = b.importe AND tm.fecha = b.fecha)
-),
-mt_all AS (SELECT _id, amount FROM m1 UNION ALL SELECT _id, amount FROM tm)"""
+def _pq_codes(id_as: str = "") -> str:
+    """similarity.pq_encode of the residuals: ``codes(vec_id{id_as}, blk,
+    c0..c{m-1})``."""
+    cols = ", ".join(f"a{s}.cid AS c{s}" for s in range(PQ_ORACLE_M))
+    joins = "".join(
+        f" JOIN s{s}assign_final a{s} ON a{s}.vec_id = r.vec_id"
+        for s in range(PQ_ORACLE_M)
+    )
+    return f"""codes AS (
+  SELECT r.vec_id{id_as}, r.blk, {cols}
+  FROM rv r{joins}
+)"""
 
+
+def _adc_sum(t: str) -> str:
+    """similarity._adc_r's fixed-order sum ((t0.d + t1.d) + t2.d) + … of
+    the m subspace terms."""
+    out = f"{t}0.d"
+    for s in range(1, PQ_ORACLE_M):
+        out = f"({out} + {t}{s}.d)"
+    return out
+
+
+# --- payloads and greedy admission --------------------------------------------
+
+
+def _payload_block_keys(src: str, name: str) -> str:
+    """multimodal.payload_block_keys over ``src`` (doc_id, text): the md5 of
+    every 64-byte block, its position and the payload's block count."""
+    return f"""{name} AS MATERIALIZED (
+  SELECT doc_id, CAST(i - 1 AS BIGINT) AS block_no,
+         md5(substr(text, (i - 1) * 64 + 1, 64)) AS block_hash,
+         CAST(ceil(length(text) / 64) AS BIGINT) AS n_blocks
+  FROM {src}, unnest(generate_series(1,
+       CAST(ceil(length(text) / 64) AS INT))) AS u(i)
+  WHERE length(text) > 0
+)"""
+
+
+def _block_sim(a: str, b: str) -> str:
+    """The shared-block fraction of a grouped block-key join of ``a`` and
+    ``b``, floored to 4 dp."""
+    return (
+        f"FLOOR(CAST(COUNT(*) AS DOUBLE) / GREATEST({a}.n_blocks, {b}.n_blocks)"
+        " * 10000) / 10000"
+    )
+
+
+def _greedy_mis_round(prev: str, cur: str) -> str:
+    """One unrolled round of the sequential-arrival greedy admission
+    (extensions/ingest_kernel.py:greedy_admit): statuses are final once
+    decided; a node is Rejected when an Admitted lower near-dup neighbor
+    exists, Admitted when every lower neighbor is Rejected (vacuously true
+    for none), else still Undecided."""
+    return f"""{cur} AS MATERIALIZED (
+  SELECT p.node, CASE
+    WHEN p.st <> 'U' THEN p.st
+    WHEN EXISTS (SELECT 1 FROM mis_edges e JOIN {prev} q ON q.node = e.lo
+                 WHERE e.hi = p.node AND q.st = 'A') THEN 'R'
+    WHEN NOT EXISTS (SELECT 1 FROM mis_edges e JOIN {prev} q ON q.node = e.lo
+                     WHERE e.hi = p.node AND q.st <> 'R') THEN 'A'
+    ELSE 'U' END AS st
+  FROM {prev} p)"""
+
+
+def _greedy_mis(id_col: str, n_rounds: int = 8) -> str:
+    """ingest_kernel.greedy_admit over the near-dup graph
+    ``mis_edges(lo, hi)`` of the candidates ``kept2(id_col)``: every edge
+    endpoint starts Undecided, ``n_rounds`` unrolled rounds (the queries
+    pin mis_max_iter to the same count, so a graph needing more fails
+    loudly on the Spark side), then ``admitted(id_col)`` = the candidates
+    outside the graph plus the Admitted nodes."""
+    rounds = ",\n".join(
+        _greedy_mis_round(f"s{i}", f"s{i + 1}") for i in range(n_rounds)
+    )
+    return f"""mis_nodes AS MATERIALIZED (
+  SELECT DISTINCT node FROM (
+    SELECT lo AS node FROM mis_edges UNION ALL SELECT hi FROM mis_edges) u
+),
+s0 AS MATERIALIZED (SELECT node, 'U' AS st FROM mis_nodes),
+{rounds},
+admitted AS (
+  SELECT k.{id_col} FROM kept2 k
+  WHERE k.{id_col} NOT IN (SELECT node FROM mis_nodes)
+  UNION ALL
+  SELECT node AS {id_col} FROM s{n_rounds} WHERE st = 'A'
+)"""
+
+
+# --- the oracles ----------------------------------------------------------------
 
 ORACLES: dict[str, str] = {
     "recon_match_exact": q(
-        BASE_CTES, MATCH_CTES,
-        select="SELECT _id, row_num, amount, trx_date FROM j1 WHERE rn = 1",
-    ),
-    # r14: the skew-hardened match is bit-identical to the plain match by
-    # contract (the hot-key split partitions the key space), so its oracle
-    # IS the plain match's SQL — the driver check pins that the physical
-    # split does not change a single row.
-    "recon_match_skewed": q(
         BASE_CTES, MATCH_CTES,
         select="SELECT _id, row_num, amount, trx_date FROM j1 WHERE rn = 1",
     ),
@@ -370,13 +1134,13 @@ ORACLES: dict[str, str] = {
     ),
     "recon_amount_quantiles": q(
         BASE_CTES,
-        select="""
-, r AS (
+        """r AS (
   SELECT transaction_type, amount,
          ROW_NUMBER() OVER (PARTITION BY transaction_type ORDER BY amount) AS rn,
          COUNT(*) OVER (PARTITION BY transaction_type) AS n
   FROM a_tbl
-)
+)""",
+        select="""
 SELECT transaction_type,
        MAX(n) AS n,
        MAX(CASE WHEN rn = CAST(CEIL(0.5 * n) AS BIGINT) THEN amount END) AS q5,
@@ -396,50 +1160,31 @@ SELECT codigo, row_num, importe FROM (
 """,
     ),
     "recon_summary_doc": q(
-        BASE_CTES, MATCH_CTES,
-        select="""
-, matched AS (SELECT _id, amount FROM j1 WHERE rn = 1),
-unmatched AS (
-  SELECT a._id, a.amount FROM a_tbl a
-  WHERE NOT EXISTS (SELECT 1 FROM b_tbl b
-    WHERE a.transaction_code = b.codigo AND a.amount = b.importe
-      AND a.trx_date = b.fecha)
-)
+        BASE_CTES, _match_pass(1, "a_tbl", "b_tbl", _EXACT_KEYS),
+        select=f"""
 SELECT 'exec-0001' AS execution_id,
        'on_demand' AS execution_type,
        '2024-01-01' AS execution_date,
        'processor-a' AS processor_name,
        'MXN' AS conciliation_currency,
-       (SELECT COUNT(_id) FROM matched) AS conciliated_transactions_number,
-       (SELECT COUNT(_id) FROM unmatched) AS remanent_transactions_number,
-       (SELECT COALESCE(CAST(SUM(CAST(amount AS DECIMAL(18,2))) AS DOUBLE), 0.0)
-        FROM matched) AS conciliated_amount,
-       (SELECT COALESCE(CAST(SUM(CAST(amount AS DECIMAL(18,2))) AS DOUBLE), 0.0)
-        FROM unmatched) AS remanent_amount
-""",
-    ),
-    "recon_csv_sink_roundtrip": q(
-        BASE_CTES,
-        select="""
-SELECT a._id, a.transaction_code, a.amount FROM a_tbl a
-WHERE NOT EXISTS (SELECT 1 FROM b_tbl b
-  WHERE a.transaction_code = b.codigo AND a.amount = b.importe AND a.trx_date = b.fecha)
+       (SELECT COUNT(_id) FROM m1) AS conciliated_transactions_number,
+       (SELECT COUNT(_id) FROM a_res1) AS remanent_transactions_number,
+       (SELECT {DEC_SUM} FROM m1) AS conciliated_amount,
+       (SELECT {DEC_SUM} FROM a_res1) AS remanent_amount
 """,
     ),
     "recon_residual_internal": q(
         BASE_CTES,
-        select="""
+        select=f"""
 SELECT a._id, a.transaction_code, a.amount FROM a_tbl a
-WHERE NOT EXISTS (SELECT 1 FROM b_tbl b
-  WHERE a.transaction_code = b.codigo AND a.amount = b.importe AND a.trx_date = b.fecha)
+WHERE NOT EXISTS (SELECT 1 FROM b_tbl b WHERE {_EXACT_KEYS})
 """,
     ),
     "recon_residual_external": q(
         BASE_CTES,
-        select="""
+        select=f"""
 SELECT b.row_num, b.codigo, b.importe FROM b_tbl b
-WHERE NOT EXISTS (SELECT 1 FROM a_tbl a
-  WHERE a.transaction_code = b.codigo AND a.amount = b.importe AND a.trx_date = b.fecha)
+WHERE NOT EXISTS (SELECT 1 FROM a_tbl a WHERE {_EXACT_KEYS})
 """,
     ),
     "recon_zero_effect_pairs": q(
@@ -447,64 +1192,25 @@ WHERE NOT EXISTS (SELECT 1 FROM a_tbl a
         select="SELECT sale_id, void_id FROM ze",
     ),
     "recon_zero_effect_clean": q(
-        BASE_CTES, ZE_CTES,
-        select="""
-SELECT a._id FROM a_tbl a
-WHERE NOT EXISTS (SELECT 1 FROM ze WHERE ze.sale_id = a._id)
-  AND NOT EXISTS (SELECT 1 FROM ze WHERE ze.void_id = a._id)
-""",
+        BASE_CTES, ZE_CTES, ZE_CLEAN, select="SELECT _id FROM a1"
     ),
     "recon_tolerance_match": q(
-        BASE_CTES,
-        select="""
-SELECT _id, row_num, ROUND(diff, 2) AS diff FROM (
-  SELECT a._id, b.row_num, ABS(b.importe - a.amount) AS diff,
-         ROW_NUMBER() OVER (PARTITION BY a.transaction_code, a.trx_date
-                            ORDER BY ABS(b.importe - a.amount), b.row_num) AS trn
-  FROM a_tbl a JOIN b_tbl b
-    ON a.transaction_code = b.codigo AND a.trx_date = b.fecha
-  WHERE ABS(b.importe - a.amount) <= 1.0
-) t WHERE trn = 1
-""",
+        BASE_CTES, _tolerance_match("a_tbl", "b_tbl"),
+        select="SELECT _id, row_num, ROUND(diff, 2) AS diff FROM tm",
     ),
     "recon_cascade_summary": q(
-        BASE_CTES, ZE_CTES,
-        select=CASCADE_TAIL_CTES + f"""
-SELECT 'a_to_b_mt' AS bucket, COUNT(*) AS n, {DEC_SUM} AS amount_sum FROM mt_all
-UNION ALL
-SELECT 'a_to_b_nmt', COUNT(*), {DEC_SUM} FROM a_nmt
-UNION ALL
-SELECT 'b_to_a_nmt', COUNT(*), 0.0 FROM b_nmt
-UNION ALL
-SELECT 'z_eff_a', COUNT(*), {DEC_SUM} FROM ze
-""",
+        BASE_CTES, ZE_CTES, CASCADE_TAIL_CTES,
+        select=_bucket_summary("mt_all", "a_nmt", "b_nmt"),
     ),
-    # The hot-key cascade is bit-identical to the plain cascade by
-    # contract (ExactPass(hot_threshold) only changes the exact pass's
-    # physical join strategy — operators/match.py key-space-partition
-    # argument), so its oracle IS recon_cascade_summary's SQL: the check
-    # pins that the split does not change a single bucket row.
-    "recon_cascade_skewed": q(
-        BASE_CTES, ZE_CTES,
-        select=CASCADE_TAIL_CTES + f"""
-SELECT 'a_to_b_mt' AS bucket, COUNT(*) AS n, {DEC_SUM} AS amount_sum FROM mt_all
-UNION ALL
-SELECT 'a_to_b_nmt', COUNT(*), {DEC_SUM} FROM a_nmt
-UNION ALL
-SELECT 'b_to_a_nmt', COUNT(*), 0.0 FROM b_nmt
-UNION ALL
-SELECT 'z_eff_a', COUNT(*), {DEC_SUM} FROM ze
-""",
-    ),
-    # The roundtrip query's values are what the CASCADE produces — the disk
+    # The roundtrip query's values are what the cascade produces — the disk
     # roundtrip (stage → time-partitioned move → re-read, and the summary
     # doc re-read) must be value-preserving, which is exactly what this
     # mirror checks. doc_* rows repeat mt_all/a_nmt by construction: the
-    # doc is COMPUTED from the re-read buckets, so agreement here proves
+    # doc is computed from the re-read buckets, so agreement here proves
     # the doc write→read also preserved them.
     "recon_persist_roundtrip": q(
-        BASE_CTES, ZE_CTES,
-        select=CASCADE_TAIL_CTES + f"""
+        BASE_CTES, ZE_CTES, CASCADE_TAIL_CTES,
+        select=f"""
 SELECT 'a_to_b_mt' AS bucket, COUNT(*) AS n, {DEC_SUM} AS amount_sum FROM mt_all
 UNION ALL
 SELECT 'a_to_b_nmt', COUNT(*), {DEC_SUM} FROM a_nmt
@@ -519,21 +1225,20 @@ SELECT 'doc_remanent', COUNT(*), {DEC_SUM} FROM a_nmt
     ),
     "recon_duplicate_losers_strict": q(
         BASE_CTES,
-        select="""
+        select=f"""
 SELECT row_num, codigo, importe FROM (
   SELECT b.codigo, b.importe, b.row_num,
          ROW_NUMBER() OVER (PARTITION BY a._id ORDER BY b.row_num) AS rn,
          COUNT(*) OVER (PARTITION BY a._id) AS cnt
-  FROM a_tbl a JOIN b_tbl b
-    ON a.transaction_code = b.codigo AND a.amount = b.importe AND a.trx_date = b.fecha
+  FROM a_tbl a JOIN b_tbl b ON {_EXACT_KEYS}
 ) t WHERE cnt > 1 AND rn = cnt
 """,
     ),
     "recon_state_merge_upsert": q(
         BASE_CTES,
+        """target AS (SELECT _id, 'OLD' AS status FROM a_tbl WHERE k % 4 = 0),
+source AS (SELECT _id, 'NEW' AS status FROM a_tbl WHERE k % 3 = 0)""",
         select="""
-, target AS (SELECT _id, 'OLD' AS status FROM a_tbl WHERE k % 4 = 0),
-source AS (SELECT _id, 'NEW' AS status FROM a_tbl WHERE k % 3 = 0)
 SELECT t._id, t.status FROM target t
 WHERE NOT EXISTS (SELECT 1 FROM source s WHERE s._id = t._id)
 UNION ALL
@@ -542,93 +1247,19 @@ SELECT _id, status FROM source
     ),
     "recon_match_on_names": q(
         BASE_CTES,
-        select="""
+        select=f"""
 SELECT a._id, b.row_num, a.amount,
        'CONCILIATED' AS conciliation_status,
        'transaction_code,amount,trx_date' AS key_code
-FROM a_tbl a JOIN b_tbl b
-  ON a.transaction_code = b.codigo AND a.amount = b.importe AND a.trx_date = b.fecha
+FROM a_tbl a JOIN b_tbl b ON {_EXACT_KEYS}
 """,
     ),
+    # the cascade plus a third pass on code and date over its residuals
     "recon_cascade_three_pass": q(
-        BASE_CTES, ZE_CTES,
-        select=f"""
-, a1 AS (
-  SELECT a.* FROM a_tbl a
-  WHERE NOT EXISTS (SELECT 1 FROM ze WHERE ze.sale_id = a._id)
-    AND NOT EXISTS (SELECT 1 FROM ze WHERE ze.void_id = a._id)
-),
-j1 AS (
-  SELECT a._id, a.transaction_code, a.amount, a.trx_date,
-         b.codigo, b.importe, b.fecha, b.row_num,
-         ROW_NUMBER() OVER (PARTITION BY a._id ORDER BY b.row_num) AS rn
-  FROM a1 a JOIN b_tbl b
-    ON a.transaction_code = b.codigo AND a.amount = b.importe AND a.trx_date = b.fecha
-),
-m1 AS (SELECT _id, amount FROM j1 WHERE rn = 1),
-losers1 AS (SELECT codigo, importe, fecha, row_num FROM j1 WHERE rn > 1),
-a_res1 AS (
-  SELECT a.* FROM a1 a WHERE NOT EXISTS (SELECT 1 FROM b_tbl b
-    WHERE a.transaction_code = b.codigo AND a.amount = b.importe AND a.trx_date = b.fecha)
-),
-b_res1 AS (
-  SELECT b.codigo, b.importe, b.fecha, b.row_num FROM b_tbl b
-  WHERE NOT EXISTS (SELECT 1 FROM a1 a
-    WHERE a.transaction_code = b.codigo AND a.amount = b.importe AND a.trx_date = b.fecha)
-  UNION ALL
-  SELECT codigo, importe, fecha, row_num FROM losers1
-),
-tm AS (
-  SELECT * FROM (
-    SELECT a._id, a.transaction_code, a.amount, a.trx_date,
-           b.codigo, b.importe, b.fecha, b.row_num,
-           ROW_NUMBER() OVER (PARTITION BY a.transaction_code, a.trx_date
-                              ORDER BY ABS(b.importe - a.amount), b.row_num) AS trn
-    FROM a_res1 a JOIN b_res1 b
-      ON a.transaction_code = b.codigo AND a.trx_date = b.fecha
-    WHERE ABS(b.importe - a.amount) <= 1.0
-  ) t WHERE trn = 1
-),
-a_res2 AS (
-  SELECT a.* FROM a_res1 a WHERE NOT EXISTS (SELECT 1 FROM tm
-    WHERE tm.transaction_code = a.transaction_code AND tm.trx_date = a.trx_date)
-),
-b_res2 AS (
-  SELECT b.* FROM b_res1 b WHERE NOT EXISTS (SELECT 1 FROM tm
-    WHERE tm.codigo = b.codigo AND tm.importe = b.importe AND tm.fecha = b.fecha)
-),
-j3 AS (
-  SELECT a._id, a.amount, b.codigo, b.importe, b.fecha, b.row_num,
-         ROW_NUMBER() OVER (PARTITION BY a._id ORDER BY b.row_num) AS rn
-  FROM a_res2 a JOIN b_res2 b
-    ON a.transaction_code = b.codigo AND a.trx_date = b.fecha
-),
-m3 AS (SELECT _id, amount FROM j3 WHERE rn = 1),
-losers3 AS (SELECT codigo, importe, fecha, row_num FROM j3 WHERE rn > 1),
-a_res3 AS (
-  SELECT a.* FROM a_res2 a WHERE NOT EXISTS (SELECT 1 FROM b_res2 b
-    WHERE a.transaction_code = b.codigo AND a.trx_date = b.fecha)
-),
-b_res3 AS (
-  SELECT b.codigo, b.importe, b.fecha, b.row_num FROM b_res2 b
-  WHERE NOT EXISTS (SELECT 1 FROM a_res2 a
-    WHERE a.transaction_code = b.codigo AND a.trx_date = b.fecha)
-  UNION ALL
-  SELECT codigo, importe, fecha, row_num FROM losers3
-),
-mt_all AS (
-  SELECT _id, amount FROM m1
-  UNION ALL SELECT _id, amount FROM tm
-  UNION ALL SELECT _id, amount FROM m3
-)
-SELECT 'a_to_b_mt' AS bucket, COUNT(*) AS n, {DEC_SUM} AS amount_sum FROM mt_all
-UNION ALL
-SELECT 'a_to_b_nmt', COUNT(*), {DEC_SUM} FROM a_res3
-UNION ALL
-SELECT 'b_to_a_nmt', COUNT(*), 0.0 FROM b_res3
-UNION ALL
-SELECT 'z_eff_a', COUNT(*), {DEC_SUM} FROM ze
-""",
+        BASE_CTES, ZE_CTES, CASCADE_TAIL_CTES,
+        _match_pass(3, "a_nmt", "b_nmt", _CODE_DATE_KEYS),
+        "mt3 AS (SELECT _id, amount FROM mt_all UNION ALL SELECT _id, amount FROM m3)",
+        select=_bucket_summary("mt3", "a_res3", "b_res3"),
     ),
     "recon_source_scan_filtered": """
 SELECT CAST(o_orderkey AS BIGINT) AS o_orderkey,
@@ -658,9 +1289,9 @@ FROM a_tbl WHERE transaction_type = 'SALE'""",
     ),
     "recon_state_merge_keep_existing": q(
         BASE_CTES,
+        """target AS (SELECT _id, 'OLD' AS status FROM a_tbl WHERE k % 4 = 0),
+source AS (SELECT _id, 'PENDING' AS status FROM a_tbl)""",
         select="""
-, target AS (SELECT _id, 'OLD' AS status FROM a_tbl WHERE k % 4 = 0),
-source AS (SELECT _id, 'PENDING' AS status FROM a_tbl)
 SELECT _id, status FROM target
 UNION ALL
 SELECT s._id, s.status FROM source s
@@ -669,25 +1300,35 @@ WHERE NOT EXISTS (SELECT 1 FROM target t WHERE t._id = s._id)
     ),
     "recon_remanent_lookup": q(
         BASE_CTES,
-        select="""
-, state AS (
+        """state AS (
   SELECT CAST(k AS VARCHAR) AS _id,
          CASE WHEN k % 5 = 2 THEN 'REMANENT' ELSE 'CONCILIATED' END AS conciliation_status
   FROM base
-)
+)""",
+        select="""
 SELECT a._id, a.amount FROM a_tbl a
 JOIN state s ON a._id = s._id AND s.conciliation_status = 'REMANENT'
 """,
     ),
     "recon_union_remanent_dedup": q(
         BASE_CTES,
-        select="""
-, w AS (SELECT _id, 'W' AS src, 0 AS rank_src FROM a_tbl WHERE k < 700),
+        """w AS (SELECT _id, 'W' AS src, 0 AS rank_src FROM a_tbl WHERE k < 700),
 r AS (SELECT _id, 'R' AS src, 1 AS rank_src FROM a_tbl WHERE k % 5 = 2),
-u AS (SELECT * FROM w UNION ALL SELECT * FROM r)
+u AS (SELECT * FROM w UNION ALL SELECT * FROM r)""",
+        select="""
 SELECT _id, src FROM (
   SELECT _id, src, ROW_NUMBER() OVER (PARTITION BY _id ORDER BY rank_src) AS rn FROM u
 ) t WHERE rn = 1
+""",
+    ),
+    # foreachBatch incremental reconciliation converges to the batch matched
+    # set: an A row matches iff ANY B candidate exists, whichever micro-batch
+    # carried it (which candidate won arbitration may differ — not exposed)
+    "stream_incremental_match": q(
+        BASE_CTES,
+        select=f"""
+SELECT a._id FROM a_tbl a
+WHERE EXISTS (SELECT 1 FROM b_tbl b WHERE {_EXACT_KEYS})
 """,
     ),
     "events_props_extract": """
@@ -713,26 +1354,20 @@ SELECT event_type, rnk, user_id, total_value FROM (
   FROM totals
 ) t WHERE rnk <= 3
 """,
-    "events_user_kmv": """
+    "events_user_kmv": f"""
 WITH hv AS (
-  SELECT DISTINCT {POLY_HASH_USER} AS hv
+  SELECT DISTINCT {_USER_HASH} AS hv
   FROM events
-  WHERE {POLY_HASH_USER} IS NOT NULL
+  WHERE {_USER_HASH} IS NOT NULL
 ),
 kth AS (SELECT hv FROM hv ORDER BY hv LIMIT 64),
-est AS (SELECT MAX(hv) AS kth_min, COUNT(*) AS k_actual FROM kth),
-exact AS (SELECT COUNT(DISTINCT user_id) AS n_exact FROM events)
-SELECT k_actual, kth_min, n_exact,
-       CASE WHEN kth_min > 0
-            THEN CAST(FLOOR((k_actual - 1) * 2147483647.0 / kth_min) AS BIGINT)
-       END AS n_estimate
-FROM est CROSS JOIN exact
-""",
-    "events_kmv_merge": """
+{_KMV_ESTIMATE}""",
+    # per-type sketches of the 64 smallest hashes, merged
+    "events_kmv_merge": f"""
 WITH hv AS (
-  SELECT DISTINCT event_type, {POLY_HASH_USER} AS hv
+  SELECT DISTINCT event_type, {_USER_HASH} AS hv
   FROM events
-  WHERE {POLY_HASH_USER} IS NOT NULL
+  WHERE {_USER_HASH} IS NOT NULL
 ),
 sk AS (
   SELECT hv, ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY hv) AS rn
@@ -740,21 +1375,9 @@ sk AS (
 ),
 mg AS (SELECT DISTINCT hv FROM sk WHERE rn <= 64),
 kth AS (SELECT hv FROM mg ORDER BY hv LIMIT 64),
-est AS (SELECT MAX(hv) AS kth_min, COUNT(*) AS k_actual FROM kth),
-exact AS (SELECT COUNT(DISTINCT user_id) AS n_exact FROM events)
-SELECT k_actual, kth_min, n_exact,
-       CASE WHEN kth_min > 0
-            THEN CAST(FLOOR((k_actual - 1) * 2147483647.0 / kth_min) AS BIGINT)
-       END AS n_estimate
-FROM est CROSS JOIN exact
-""",
-    "events_daily_rollup2": """
-WITH hourly AS (
-  SELECT CAST(epoch_ns(ts) // 3600000000000 AS BIGINT) AS hour_bucket, event_type,
-         COUNT(*) AS n,
-         CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_sum
-  FROM events GROUP BY 1, 2
-)
+{_KMV_ESTIMATE}""",
+    "events_daily_rollup2": f"""
+WITH hourly AS ({_EVENTS_HOURLY})
 SELECT CAST(hour_bucket // 24 AS BIGINT) AS day_bucket, event_type,
        CAST(SUM(n) AS BIGINT) AS n,
        CAST(SUM(CAST(value_sum AS DECIMAL(18,2))) AS DOUBLE) AS value_sum
@@ -837,157 +1460,65 @@ SELECT COUNT(CASE WHEN t0 IS NOT NULL THEN 1 END) AS n_view,
              THEN 1 END) AS n_view_click_purchase
 FROM per_user
 """,
-    "events_hourly": """
-SELECT CAST(epoch_ns(ts) // 3600000000000 AS BIGINT) AS hour_bucket,
-       event_type,
-       COUNT(*) AS n,
-       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_sum
-FROM events
-GROUP BY 1, 2
-""",
-    "events_sessionize": """
-WITH e AS (
-  SELECT event_id, user_id, epoch_ns(ts) AS tn FROM events
-),
-lagged AS (
-  SELECT event_id, user_id, tn,
-         LAG(tn) OVER (PARTITION BY user_id ORDER BY tn, event_id) AS prev_tn
-  FROM e
-),
-flagged AS (
-  SELECT event_id, user_id,tn,
-         CASE WHEN prev_tn IS NULL OR tn - prev_tn > 1800000000000 THEN 1 ELSE 0 END AS is_new
-  FROM lagged
-)
+    "events_hourly": _EVENTS_HOURLY,
+    "events_sessionize": q(
+        _session_flags(">"),
+        select="""
 SELECT event_id, user_id,
        CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY tn, event_id
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
 FROM flagged
-""",
-    # foreachBatch incremental reconciliation converges to the batch matched
-    # set: an A row matches iff ANY B candidate exists, whichever micro-batch
-    # carried it (which candidate won arbitration may differ — not exposed)
-    "stream_incremental_match": q(
-        BASE_CTES,
-        select="""
-SELECT a._id FROM a_tbl a
-WHERE EXISTS (SELECT 1 FROM b_tbl b
-  WHERE a.transaction_code = b.codigo AND a.amount = b.importe AND a.trx_date = b.fecha)
 """,
     ),
     # streaming skins: a drained bounded stream must equal the batch answer
     "stream_dedup": """
 SELECT event_id, user_id, event_type, value FROM events
 """,
-    "stream_events_hourly": """
-SELECT CAST(epoch_ns(ts) // 3600000000000 AS BIGINT) AS hour_bucket,
-       event_type,
-       COUNT(*) AS n,
-       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_sum
-FROM events
-GROUP BY 1, 2
-""",
-    # >= on the gap: session_window starts a NEW session when the gap equals
+    # >= on the gap: session_window starts a new session when the gap equals
     # the threshold (windows must overlap to merge), unlike the batch
     # sessionize's strict > rule
-    "stream_sessionize_agg": """
-WITH e AS (
-  SELECT event_id, user_id, epoch_ns(ts) AS tn FROM events
-),
-lagged AS (
-  SELECT event_id, user_id, tn,
-         LAG(tn) OVER (PARTITION BY user_id ORDER BY tn, event_id) AS prev_tn
-  FROM e
-),
-flagged AS (
-  SELECT event_id, user_id, tn,
-         CASE WHEN prev_tn IS NULL OR tn - prev_tn >= 1800000000000 THEN 1 ELSE 0 END AS is_new
-  FROM lagged
-),
-sess AS (
+    "stream_sessionize_agg": q(
+        _session_flags(">="),
+        """sess AS (
   SELECT user_id, tn,
          SUM(is_new) OVER (PARTITION BY user_id ORDER BY tn, event_id
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
   FROM flagged
-)
+)""",
+        select="""
 SELECT user_id, MIN(tn) // 1000 AS session_start_us, COUNT(*) AS n_events
 FROM sess GROUP BY user_id, sid
 """,
+    ),
     "stream_user_seq": """
 SELECT event_id, user_id,
        CAST(ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY epoch_ns(ts), event_id)
             AS BIGINT) AS seq_in_user
 FROM events
 """,
-    "dedup_exact": """
-WITH docs_aug AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 100000, text FROM documents WHERE doc_id % 10 = 7
-  UNION ALL
-  SELECT doc_id + 200000, substr(text, strpos(text, ' ') + 1)
-  FROM documents WHERE doc_id % 10 = 3
-)
+    "dedup_exact": q(
+        DOCUMENTS_AUG,
+        select="""
 SELECT md5(text) AS text_hash, MIN(doc_id) AS keeper_id, COUNT(*) AS n_copies
 FROM docs_aug GROUP BY 1
 """,
-    # streaming face of dedup_exact: drained complete-mode aggregation state
-    # must equal the batch groupBy (min/count commute with micro-batching)
-    "stream_dedup_corpus": """
-WITH docs_aug AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 100000, text FROM documents WHERE doc_id % 10 = 7
-  UNION ALL
-  SELECT doc_id + 200000, substr(text, strpos(text, ' ') + 1)
-  FROM documents WHERE doc_id % 10 = 3
-)
-SELECT md5(text) AS text_hash, MIN(doc_id) AS keeper_id, COUNT(*) AS n_copies
-FROM docs_aug GROUP BY 1
-""",
-    "dedup_minhash_lsh": "WITH " + MINHASH_PAIR_CTES
-    + "\nSELECT id_a, id_b, jacc_r FROM mh_pairs",
-    "dedup_clusters": "WITH RECURSIVE " + MINHASH_PAIR_CTES + """,
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM mh_pairs
-  UNION
-  SELECT id_b, id_a FROM mh_pairs
-),
-walk(node, lbl) AS (
-  SELECT doc_id, doc_id FROM docs_aug
-  UNION
-  SELECT e.src, w.lbl FROM walk w JOIN edges e ON e.dst = w.node
-)
-SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM walk GROUP BY node
-""",
-    # Quality-keeper arbitration: the CC fixpoint above + the fused
-    # quality mirror (same arithmetic as text_quality_gate — established
-    # bit-stable cross-engine) + an argmax window per cluster. The Spark
-    # side computes the argmax as a partial-aggregable struct-max; the
-    # (quality DESC, id ASC) window here is the same total order.
-    "dedup_clusters_quality": "WITH RECURSIVE " + MINHASH_PAIR_CTES + """,
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM mh_pairs
-  UNION
-  SELECT id_b, id_a FROM mh_pairs
-),
-walk(node, lbl) AS (
-  SELECT doc_id, doc_id FROM docs_aug
-  UNION
-  SELECT e.src, w.lbl FROM walk w JOIN edges e ON e.dst = w.node
-),
-cl AS (SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM walk GROUP BY node),
-q AS (
-  SELECT doc_id,
-         FLOOR((
-           0.4 * LEAST(1.0, len(string_split(text, ' ')) / 100.0)
-           + 0.3 * (1.0 - CAST(len(list_filter(string_split(text, ' '),
-                        t -> t IN ('the','a','of','and','is','to','in'))) AS DOUBLE)
-                    / len(string_split(text, ' ')))
-           + 0.3 * LEAST(1.0,
-               ((length(text) - (len(string_split(text, ' ')) - 1))
-                / CAST(len(string_split(text, ' ')) AS DOUBLE)) / 8.0)
-           ) * 10000) / 10000 AS quality_r
+    ),
+    "dedup_minhash_lsh": q(
+        MINHASH_PAIR_CTES, select="SELECT id_a, id_b, jacc_r FROM mh_pairs"
+    ),
+    "dedup_clusters": q(
+        MINHASH_PAIR_CTES, CC_CTES,
+        select="SELECT doc_id, cluster_id FROM cl",
+        recursive=True,
+    ),
+    # Quality-keeper arbitration: the CC fixpoint above + the quality score
+    # + an argmax window per cluster. The Spark side computes the argmax as
+    # a partial-aggregable struct-max; the (quality DESC, id ASC) window
+    # here is the same total order.
+    "dedup_clusters_quality": q(
+        MINHASH_PAIR_CTES, CC_CTES,
+        f"""q AS (
+  SELECT doc_id, {_quality_sql()} AS quality_r
   FROM (SELECT doc_id, COALESCE(text, '') AS text FROM docs_aug) d0
 ),
 ranked AS (
@@ -996,21 +1527,17 @@ ranked AS (
                             ORDER BY q.quality_r DESC, cl.doc_id ASC) AS rn,
          COUNT(*) OVER (PARTITION BY cl.cluster_id) AS n_members
   FROM cl JOIN q USING (doc_id)
-)
+)""",
+        select="""
 SELECT cluster_id, doc_id AS keeper_id, quality_r AS keeper_quality_r,
        CAST(n_members AS BIGINT) AS n_members
 FROM ranked WHERE rn = 1
 """,
-    "dedup_simhash": """
-WITH docs_aug AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 100000, text FROM documents WHERE doc_id % 10 = 7
-  UNION ALL
-  SELECT doc_id + 200000, substr(text, strpos(text, ' ') + 1)
-  FROM documents WHERE doc_id % 10 = 3
-),
-toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM docs_aug),
+        recursive=True,
+    ),
+    "dedup_simhash": q(
+        DOCUMENTS_AUG,
+        """toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM docs_aug),
 th AS (
   SELECT doc_id,
          CAST(CASE WHEN length(tok) = 0 THEN 0 ELSE
@@ -1045,31 +1572,18 @@ cand AS (
          l.simhash AS sh_a, r.simhash AS sh_b
   FROM blocks l JOIN blocks r
     ON l.b = r.b AND l.bval = r.bval AND l.doc_id < r.doc_id
-)
+)""",
+        select="""
 SELECT id_a, id_b,
        CAST(bit_count(xor(sh_a, sh_b)) AS BIGINT) AS hamming
 FROM cand
 WHERE bit_count(xor(sh_a, sh_b)) <= 3
 """,
-    "dedup_ngram_jaccard": """
-WITH docs_aug AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 100000, text FROM documents WHERE doc_id % 10 = 7
-  UNION ALL
-  SELECT doc_id + 200000, substr(text, strpos(text, ' ') + 1)
-  FROM documents WHERE doc_id % 10 = 3
-),
-toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM docs_aug),
-sh AS (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id,
-           unnest(list_transform(generate_series(1, len(t)-2),
-                  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-    FROM toks) u
-  WHERE shingle IS NOT NULL
-),
-dfc AS (SELECT shingle, COUNT(*) AS df_ FROM sh GROUP BY shingle),
+    ),
+    # exact 3-gram Jaccard over the shingles in at most 50 docs
+    "dedup_ngram_jaccard": q(
+        DOCUMENTS_AUG, _shingles("docs_aug", 3),
+        """dfc AS (SELECT shingle, COUNT(*) AS df_ FROM sh GROUP BY shingle),
 capped AS (
   SELECT s.doc_id, s.shingle FROM sh s JOIN dfc USING (shingle) WHERE df_ <= 50
 ),
@@ -1078,94 +1592,44 @@ inter AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_int
   FROM capped a JOIN capped b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
   GROUP BY 1, 2
-)
+)""",
+        select=f"""
 SELECT id_a, id_b, jacc_r FROM (
   SELECT i.id_a, i.id_b,
-         FLOOR(CAST(i.n_int AS DOUBLE) / (sa.sz + sb.sz - i.n_int) * 10000) / 10000 AS jacc_r
+         {_floor4_jaccard("i.n_int", "sa.sz", "sb.sz")} AS jacc_r
   FROM inter i
   JOIN sizes sa ON sa.doc_id = i.id_a
   JOIN sizes sb ON sb.doc_id = i.id_b
 ) v WHERE jacc_r >= 0.5
 """,
-    "dedup_embedding_cosine": """
-WITH emb_aug AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label FROM embeddings
-  UNION ALL
-  SELECT vec_id + 100000,
-         list_transform(generate_series(1, len(embedding)),
-                        i -> CASE WHEN i <= 8 THEN 0.0 ELSE CAST(embedding[i] AS DOUBLE) END),
-         label
-  FROM embeddings WHERE vec_id % 10 = 1
-)
+    ),
+    "dedup_embedding_cosine": q(
+        EMBEDDINGS_AUG,
+        select=f"""
 SELECT id_a, id_b, cos_r FROM (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         ROUND(
-           list_reduce(list_transform(generate_series(1, len(a.v)), i -> a.v[i]*b.v[i]), (x,y) -> x+y)
-           / (sqrt(list_reduce(list_transform(generate_series(1, len(a.v)), i -> a.v[i]*a.v[i]), (x,y) -> x+y))
-            * sqrt(list_reduce(list_transform(generate_series(1, len(b.v)), i -> b.v[i]*b.v[i]), (x,y) -> x+y))),
-           6) AS cos_r
+  SELECT a.vec_id AS id_a, b.vec_id AS id_b, {_cos6_sql("a.v", "b.v")} AS cos_r
   FROM emb_aug a JOIN emb_aug b ON a.label = b.label AND a.vec_id < b.vec_id
 ) p WHERE cos_r >= 0.8
 """,
-    "sim_topk_bruteforce": """
-WITH qv AS (SELECT CAST(embedding AS DOUBLE[]) AS q FROM embeddings WHERE vec_id = 0),
-ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-scored AS (
-  SELECT e.vec_id,
-         ROUND(
-           list_reduce(list_transform(generate_series(1, len(v)), i -> v[i]*q[i]), (x,y) -> x+y)
-           / (sqrt(list_reduce(list_transform(generate_series(1, len(v)), i -> v[i]*v[i]), (x,y) -> x+y))
-            * sqrt(list_reduce(list_transform(generate_series(1, len(q)), i -> q[i]*q[i]), (x,y) -> x+y))),
-           6) AS cos_r
-  FROM ev e CROSS JOIN qv
-)
-SELECT vec_id, rank, cos_r FROM (
-  SELECT vec_id, CAST(ROW_NUMBER() OVER (ORDER BY cos_r DESC, vec_id) AS BIGINT) AS rank, cos_r
-  FROM scored
-) r WHERE rank <= 10
-""",
-    "sim_topk_lsh": """
-WITH qv AS (SELECT CAST(embedding AS DOUBLE[]) AS q FROM embeddings WHERE vec_id = 0),
-ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-sigs AS (
-  SELECT vec_id, v,
-    list_reduce(list_transform(generate_series(0, 7), j ->
-      CASE WHEN list_reduce(list_transform(generate_series(1, len(v)), i ->
-          v[i] * (CAST((1103515245::BIGINT * (j*4096 + i - 1) + 12345) % 65536 AS DOUBLE)/65536 - 0.5)
-        ), (x,y) -> x+y) >= 0
-      THEN CAST(1 AS BIGINT) << j ELSE CAST(0 AS BIGINT) END
-    ), (x,y) -> x+y) AS sig
-  FROM ev
-),
-qsig AS (
-  SELECT list_reduce(list_transform(generate_series(0, 7), j ->
-      CASE WHEN list_reduce(list_transform(generate_series(1, len(q)), i ->
-          q[i] * (CAST((1103515245::BIGINT * (j*4096 + i - 1) + 12345) % 65536 AS DOUBLE)/65536 - 0.5)
-        ), (x,y) -> x+y) >= 0
-      THEN CAST(1 AS BIGINT) << j ELSE CAST(0 AS BIGINT) END
-    ), (x,y) -> x+y) AS qs
-  FROM qv
-),
+    ),
+    "sim_topk_bruteforce": q(
+        QUERY_VEC, EV, _query_scored("ev"), select=_topk_by_cos("scored")
+    ),
+    # signatures within Hamming distance 1 of the query's
+    "sim_topk_lsh": q(
+        QUERY_VEC, EV,
+        f"""sigs AS (SELECT vec_id, v, {_lsh_sig_sql("v")} AS sig FROM ev),
+qsig AS (SELECT {_lsh_sig_sql("q")} AS qs FROM qv),
 probed AS (
   SELECT s.vec_id, s.v FROM sigs s CROSS JOIN qsig WHERE bit_count(xor(s.sig, qsig.qs)) <= 1
-),
-scored AS (
-  SELECT p.vec_id,
-         ROUND(
-           list_reduce(list_transform(generate_series(1, len(v)), i -> v[i]*q[i]), (x,y) -> x+y)
-           / (sqrt(list_reduce(list_transform(generate_series(1, len(v)), i -> v[i]*v[i]), (x,y) -> x+y))
-            * sqrt(list_reduce(list_transform(generate_series(1, len(q)), i -> q[i]*q[i]), (x,y) -> x+y))),
-           6) AS cos_r
-  FROM probed p CROSS JOIN qv
-)
-SELECT vec_id, rank, cos_r FROM (
-  SELECT vec_id, CAST(ROW_NUMBER() OVER (ORDER BY cos_r DESC, vec_id) AS BIGINT) AS rank, cos_r
-  FROM scored
-) r WHERE rank <= 10
-""",
-    "sim_topk_ivf": """
-WITH qv AS (SELECT CAST(embedding AS DOUBLE[]) AS q FROM embeddings WHERE vec_id = 0),
-ev AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+)""",
+        _query_scored("probed"),
+        select=_topk_by_cos("scored"),
+    ),
+    # label centroids, the 2 nearest to the query probed
+    "sim_topk_ivf": q(
+        QUERY_VEC,
+        """ev AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 ex AS (
   SELECT vec_id, label, unnest(v) AS val, generate_subscripts(v, 1) AS pos FROM ev
 ),
@@ -1186,34 +1650,19 @@ probe AS (
     SELECT label, ROW_NUMBER() OVER (ORDER BY c_cos DESC, label) AS rn FROM cscore
   ) t WHERE rn <= 2
 ),
-pruned AS (SELECT e.vec_id, e.v FROM ev e JOIN probe USING (label)),
-scored AS (
-  SELECT p.vec_id,
-         ROUND(
-           list_reduce(list_transform(generate_series(1, len(v)), i -> v[i]*q[i]), (x,y) -> x+y)
-           / (sqrt(list_reduce(list_transform(generate_series(1, len(v)), i -> v[i]*v[i]), (x,y) -> x+y))
-            * sqrt(list_reduce(list_transform(generate_series(1, len(q)), i -> q[i]*q[i]), (x,y) -> x+y))),
-           6) AS cos_r
-  FROM pruned p CROSS JOIN qv
-)
-SELECT vec_id, rank, cos_r FROM (
-  SELECT vec_id, CAST(ROW_NUMBER() OVER (ORDER BY cos_r DESC, vec_id) AS BIGINT) AS rank, cos_r
-  FROM scored
-) r WHERE rank <= 10
-""",
-    "sim_topk_ivf_fitted": """
-WITH qv AS (SELECT CAST(embedding AS DOUBLE[]) AS q FROM embeddings WHERE vec_id = 0),
-ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-""" + KMEANS_CTES + """,
-cscore AS (
+pruned AS (SELECT e.vec_id, e.v FROM ev e JOIN probe USING (label))""",
+        _query_scored("pruned"),
+        select=_topk_by_cos("scored"),
+    ),
+    # fitted centroids, the 2 nearest to the query probed (a zero-norm
+    # centroid scores -inf)
+    "sim_topk_ivf_fitted": q(
+        QUERY_VEC, EV, KMEANS_CTES,
+        f"""cscore AS (
   SELECT c.cid,
-         CASE WHEN list_reduce(list_transform(generate_series(1, len(c.c)), i -> c.c[i]*c.c[i]), (x,y) -> x+y) = 0
-                OR list_reduce(list_transform(generate_series(1, len(q)), i -> q[i]*q[i]), (x,y) -> x+y) = 0
+         CASE WHEN {_dot_sql("c.c", "c.c")} = 0 OR {_dot_sql("q", "q")} = 0
          THEN CAST('-infinity' AS DOUBLE)
-         ELSE
-         list_reduce(list_transform(generate_series(1, len(c.c)), i -> c.c[i]*q[i]), (x,y) -> x+y)
-         / (sqrt(list_reduce(list_transform(generate_series(1, len(c.c)), i -> c.c[i]*c.c[i]), (x,y) -> x+y))
-          * sqrt(list_reduce(list_transform(generate_series(1, len(q)), i -> q[i]*q[i]), (x,y) -> x+y)))
+         ELSE {_cos_sql("c.c", "q")}
          END AS c_cos
   FROM cents_final c CROSS JOIN qv
 ),
@@ -1222,231 +1671,39 @@ probe AS (
     SELECT cid, ROW_NUMBER() OVER (ORDER BY c_cos DESC, cid) AS rn FROM cscore
   ) t WHERE rn <= 2
 ),
-pruned AS (SELECT a.vec_id, a.v FROM assign_final a JOIN probe USING (cid)),
-scored AS (
-  SELECT p.vec_id,
-         ROUND(
-           list_reduce(list_transform(generate_series(1, len(v)), i -> v[i]*q[i]), (x,y) -> x+y)
-           / (sqrt(list_reduce(list_transform(generate_series(1, len(v)), i -> v[i]*v[i]), (x,y) -> x+y))
-            * sqrt(list_reduce(list_transform(generate_series(1, len(q)), i -> q[i]*q[i]), (x,y) -> x+y))),
-           6) AS cos_r
-  FROM pruned p CROSS JOIN qv
-)
-SELECT vec_id, rank, cos_r FROM (
-  SELECT vec_id, CAST(ROW_NUMBER() OVER (ORDER BY cos_r DESC, vec_id) AS BIGINT) AS rank, cos_r
-  FROM scored
-) r WHERE rank <= 10
-""",
-    "dedup_embedding_cosine_fitted": """
-WITH emb_aug AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-  UNION ALL
-  SELECT vec_id + 100000,
-         list_transform(generate_series(1, len(embedding)),
-                        i -> CASE WHEN i <= 8 THEN 0.0 ELSE CAST(embedding[i] AS DOUBLE) END)
-  FROM embeddings WHERE vec_id % 10 = 1
-),
-ev AS (SELECT vec_id, v FROM emb_aug),
-""" + KMEANS_CTES + """
+pruned AS (SELECT a.vec_id, a.v FROM assign_final a JOIN probe USING (cid))""",
+        _query_scored("pruned"),
+        select=_topk_by_cos("scored"),
+    ),
+    "dedup_embedding_cosine_fitted": q(
+        EMBEDDINGS_AUG, "ev AS (SELECT vec_id, v FROM emb_aug)", KMEANS_CTES,
+        select=f"""
 SELECT id_a, id_b, cos_r FROM (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         ROUND(
-           list_reduce(list_transform(generate_series(1, len(a.v)), i -> a.v[i]*b.v[i]), (x,y) -> x+y)
-           / (sqrt(list_reduce(list_transform(generate_series(1, len(a.v)), i -> a.v[i]*a.v[i]), (x,y) -> x+y))
-            * sqrt(list_reduce(list_transform(generate_series(1, len(b.v)), i -> b.v[i]*b.v[i]), (x,y) -> x+y))),
-           6) AS cos_r
+  SELECT a.vec_id AS id_a, b.vec_id AS id_b, {_cos6_sql("a.v", "b.v")} AS cos_r
   FROM assign_final a JOIN assign_final b ON a.cid = b.cid AND a.vec_id < b.vec_id
 ) p WHERE cos_r >= 0.8
 """,
-    "curation_pipeline": """
-WITH docs_aug AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 100000, text FROM documents WHERE doc_id % 10 = 7
-  UNION ALL
-  SELECT doc_id + 200000, substr(text, strpos(text, ' ') + 1)
-  FROM documents WHERE doc_id % 10 = 3
-),
-eh AS (SELECT md5(text) AS th, MIN(doc_id) AS keeper FROM docs_aug GROUP BY 1),
-kept AS (
-  SELECT d.doc_id, d.text FROM docs_aug d
-  JOIN eh ON md5(d.text) = eh.th AND d.doc_id = eh.keeper
-),
-toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM kept),
-sh AS (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id,
-           unnest(list_transform(generate_series(1, len(t)-2),
-                  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-    FROM toks) u
-  WHERE shingle IS NOT NULL
-),
-shid AS (
-  SELECT doc_id,
-         CASE WHEN length(shingle) = 0 THEN 0 ELSE
-           list_reduce(list_transform(generate_series(1, length(shingle)),
-                       i -> ord(substr(shingle, i, 1)) % 8191),
-                       (h, c) -> (h*31 + c) % 8191) END AS sid
-  FROM sh
-),
-hashes AS (
-  SELECT doc_id, j, MIN(((2*j+3)*sid + 5*j+7) % 8191) AS mh
-  FROM shid CROSS JOIN (SELECT unnest(generate_series(0, 11)) AS j) js
-  GROUP BY doc_id, j
-),
-bandkeys AS (
-  SELECT doc_id, j // 3 AS band,
-         STRING_AGG(CAST(mh AS VARCHAR), '_' ORDER BY j) AS bkey
-  FROM hashes GROUP BY doc_id, j // 3
-),
-cand AS (
-  SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-  FROM bandkeys l JOIN bandkeys r
-    ON l.band = r.band AND l.bkey = r.bkey AND l.doc_id < r.doc_id
-),
-sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT c.id_a, c.id_b, COUNT(*) AS n_int
-  FROM cand c
-  JOIN sh a ON a.doc_id = c.id_a
-  JOIN sh b ON b.doc_id = c.id_b AND b.shingle = a.shingle
-  GROUP BY c.id_a, c.id_b
-),
-nd_pairs AS (
-  SELECT id_a, id_b FROM (
-    SELECT i.id_a, i.id_b,
-           FLOOR(CAST(i.n_int AS DOUBLE) / (sa.sz + sb.sz - i.n_int) * 10000) / 10000 AS jacc_r
-    FROM inter i
-    JOIN sizes sa ON sa.doc_id = i.id_a
-    JOIN sizes sb ON sb.doc_id = i.id_b
-  ) v WHERE jacc_r >= 0.6
-),
-kept2 AS MATERIALIZED (
-  SELECT * FROM kept WHERE doc_id NOT IN (SELECT id_b FROM nd_pairs)
-),
-qual AS (
-  SELECT doc_id,
-         FLOOR((
-           0.4 * LEAST(1.0, len(string_split(text, ' ')) / 100.0)
-           + 0.3 * (1.0 - CAST(len(list_filter(string_split(text, ' '),
-                        t -> t IN ('the','a','of','and','is','to','in'))) AS DOUBLE)
-                    / len(string_split(text, ' ')))
-           + 0.3 * LEAST(1.0,
-               ((length(text) - (len(string_split(text, ' ')) - 1))
-                / CAST(len(string_split(text, ' ')) AS DOUBLE)) / 8.0)
-           ) * 10000) / 10000 AS quality_r
-  FROM kept2
-),
-swords(lang, tok) AS (VALUES
-  ('en','the'),('en','a'),('en','of'),('en','and'),('en','is'),('en','to'),('en','in'),
-  ('es','el'),('es','la'),('es','de'),('es','y'),('es','es'),('es','en'),('es','un'),
-  ('fr','le'),('fr','la'),('fr','de'),('fr','et'),('fr','est'),('fr','en'),('fr','un'),
-  ('de','der'),('de','die'),('de','das'),('de','und'),('de','ist'),('de','in'),('de','ein'),
-  ('zh','de'),('zh','shi'),('zh','le'),('zh','zai'),('zh','he'),('zh','you'),('zh','wo')
-),
-langs AS (SELECT DISTINCT lang FROM swords),
-toksl AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM kept2),
-tot AS (SELECT doc_id, COUNT(*) AS n_tok FROM toksl GROUP BY 1),
-hits AS (
-  SELECT t.doc_id, s.lang, COUNT(*) AS n_hit
-  FROM toksl t JOIN swords s USING (tok) GROUP BY 1, 2
-),
-lscored AS (
-  SELECT tot.doc_id, l.lang, COALESCE(h.n_hit, 0) / tot.n_tok AS score
-  FROM tot CROSS JOIN langs l
-  LEFT JOIN hits h ON h.doc_id = tot.doc_id AND h.lang = l.lang
-),
-lang_pick AS (
-  SELECT doc_id, lang AS pred_lang FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY score DESC, lang) AS rn
-    FROM lscored
-  ) t WHERE rn = 1
-),
-tokc AS (
-  SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS ws_tokens
-  FROM kept2
-)
-SELECT p.pred_lang,
-       COUNT(*) AS n_docs,
-       CAST(SUM(t.ws_tokens) AS BIGINT) AS total_ws_tokens,
-       FLOOR(CAST(SUM(CAST(q.quality_r AS DECIMAL(18,4))) AS DOUBLE)
-             / COUNT(*) * 10000) / 10000 AS avg_quality_r
-FROM qual q
-JOIN lang_pick p USING (doc_id)
-JOIN tokc t USING (doc_id)
-WHERE q.quality_r >= 0.5
-GROUP BY p.pred_lang
+    ),
+    "text_lang_id": q(
+        _lang_id_ctes("documents"),
+        select="""
+SELECT doc_id, pred_lang, FLOOR(score * 10000) / 10000 AS score_r FROM lang_pick
 """,
-    "text_lang_id": """
-WITH swords(lang, tok) AS (VALUES
-  ('en','the'),('en','a'),('en','of'),('en','and'),('en','is'),('en','to'),('en','in'),
-  ('es','el'),('es','la'),('es','de'),('es','y'),('es','es'),('es','en'),('es','un'),
-  ('fr','le'),('fr','la'),('fr','de'),('fr','et'),('fr','est'),('fr','en'),('fr','un'),
-  ('de','der'),('de','die'),('de','das'),('de','und'),('de','ist'),('de','in'),('de','ein'),
-  ('zh','de'),('zh','shi'),('zh','le'),('zh','zai'),('zh','he'),('zh','you'),('zh','wo')
-),
-langs AS (SELECT DISTINCT lang FROM swords),
-toksl AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-tot AS (SELECT doc_id, COUNT(*) AS n_tok FROM toksl GROUP BY 1),
-hits AS (
-  SELECT t.doc_id, s.lang, COUNT(*) AS n_hit
-  FROM toksl t JOIN swords s USING (tok) GROUP BY 1, 2
-),
-scored AS (
-  SELECT tot.doc_id, l.lang, COALESCE(h.n_hit, 0) / tot.n_tok AS score
-  FROM tot CROSS JOIN langs l
-  LEFT JOIN hits h ON h.doc_id = tot.doc_id AND h.lang = l.lang
-)
-SELECT doc_id, lang AS pred_lang, FLOOR(score * 10000) / 10000 AS score_r FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY score DESC, lang) AS rn
-  FROM scored
-) t WHERE rn = 1
-""",
-    "text_lang_confusion": """
-WITH swords(lang, tok) AS (VALUES
-  ('en','the'),('en','a'),('en','of'),('en','and'),('en','is'),('en','to'),('en','in'),
-  ('es','el'),('es','la'),('es','de'),('es','y'),('es','es'),('es','en'),('es','un'),
-  ('fr','le'),('fr','la'),('fr','de'),('fr','et'),('fr','est'),('fr','en'),('fr','un'),
-  ('de','der'),('de','die'),('de','das'),('de','und'),('de','ist'),('de','in'),('de','ein'),
-  ('zh','de'),('zh','shi'),('zh','le'),('zh','zai'),('zh','he'),('zh','you'),('zh','wo')
-),
-langs AS (SELECT DISTINCT lang FROM swords),
-toksl AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-tot AS (SELECT doc_id, COUNT(*) AS n_tok FROM toksl GROUP BY 1),
-hits AS (
-  SELECT t.doc_id, s.lang, COUNT(*) AS n_hit
-  FROM toksl t JOIN swords s USING (tok) GROUP BY 1, 2
-),
-scored AS (
-  SELECT tot.doc_id, l.lang, COALESCE(h.n_hit, 0) / tot.n_tok AS score
-  FROM tot CROSS JOIN langs l
-  LEFT JOIN hits h ON h.doc_id = tot.doc_id AND h.lang = l.lang
-),
-pick AS (
-  SELECT doc_id, lang AS pred_lang FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY score DESC, lang) AS rn
-    FROM scored
-  ) t WHERE rn = 1
-)
+    ),
+    "text_lang_confusion": q(
+        _lang_id_ctes("documents"),
+        select="""
 SELECT d.lang AS gold_lang, p.pred_lang, COUNT(*) AS n
-FROM documents d JOIN pick p USING (doc_id)
+FROM documents d JOIN lang_pick p USING (doc_id)
 GROUP BY d.lang, p.pred_lang
 """,
-    "text_quality": """
+    ),
+    "text_quality": f"""
 SELECT doc_id,
        CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-       FLOOR(CAST(len(list_filter(string_split(text, ' '),
-                  t -> t IN ('the','a','of','and','is','to','in'))) AS DOUBLE)
+       FLOOR(CAST({_STOPWORD_HITS} AS DOUBLE)
              / len(string_split(text, ' ')) * 10000) / 10000 AS stopword_ratio_r,
-       FLOOR((
-         0.4 * LEAST(1.0, len(string_split(text, ' ')) / 100.0)
-         + 0.3 * (1.0 - CAST(len(list_filter(string_split(text, ' '),
-                      t -> t IN ('the','a','of','and','is','to','in'))) AS DOUBLE)
-                  / len(string_split(text, ' ')))
-         + 0.3 * LEAST(1.0,
-             ((length(text) - (len(string_split(text, ' ')) - 1))
-              / CAST(len(string_split(text, ' ')) AS DOUBLE)) / 8.0)
-         ) * 10000) / 10000 AS quality_r
+       {_quality_sql()} AS quality_r
 FROM documents
 """,
     "text_token_count": """
@@ -1460,14 +1717,9 @@ SELECT doc_id,
        md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS fp
 FROM documents
 """,
-    "text_ngram_freq": """
+    "text_ngram_freq": f"""
 WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-grams AS (
-  SELECT doc_id,
-         unnest(list_transform(generate_series(1, len(t)-1),
-                i -> t[i] || ' ' || t[i+1])) AS ngram
-  FROM toks
-)
+grams AS (SELECT doc_id, unnest({_ngram_list("t", 2)}) AS ngram FROM toks)
 SELECT ngram,
        COUNT(DISTINCT doc_id) AS n_docs,
        COUNT(*) AS n_occurrences
@@ -1480,106 +1732,56 @@ SELECT doc_id,
        'text/plain' AS mime
 FROM documents
 """,
-    "text_split_assign": """
+    "text_split_assign": f"""
 WITH h AS (
-  SELECT doc_id, {POLY_HASH_DOC} % 100 AS bucket
+  SELECT doc_id, {poly_hash_mixed_sql("doc_id")} % 100 AS bucket
   FROM documents
 )
-SELECT doc_id, bucket,
-       CASE WHEN bucket < 80 THEN 'train'
-            WHEN bucket < 90 THEN 'val'
-            ELSE 'test' END AS split
+SELECT doc_id, bucket, {_split_case("bucket")} AS split
 FROM h
 """,
-    # en 2.5 epochs (base 2, extra iff hv < 5000), es 1.25 (base 1, < 2500),
-    # default 0.5 (base 0, < 5000) — mirrors extensions/text.py:mix_epochs
-    "sim_semantic_dedup": """
-WITH emb_aug AS (
-  SELECT vec_id, label,
-         list_transform(generate_series(1, len(embedding)),
-                        i -> CAST(embedding[i] AS DOUBLE)) AS v
-  FROM embeddings
-  UNION ALL
-  SELECT vec_id + 100000, label,
-         list_transform(generate_series(1, len(embedding)),
-                        i -> CASE WHEN i <= 8 THEN 0.0 ELSE CAST(embedding[i] AS DOUBLE) END)
-  FROM embeddings WHERE vec_id % 10 = 1
-),
-dropped AS (
+    "sim_semantic_dedup": q(
+        EMBEDDINGS_AUG,
+        f"""dropped AS (
   SELECT DISTINCT a.vec_id FROM emb_aug a
   JOIN emb_aug b ON a.label = b.label AND b.vec_id < a.vec_id
-  WHERE ROUND(
-          list_reduce(list_transform(generate_series(1, len(a.v)), i -> a.v[i]*b.v[i]), (x,y) -> x+y)
-          / (sqrt(list_reduce(list_transform(generate_series(1, len(a.v)), i -> a.v[i]*a.v[i]), (x,y) -> x+y))
-           * sqrt(list_reduce(list_transform(generate_series(1, len(b.v)), i -> b.v[i]*b.v[i]), (x,y) -> x+y))),
-          6) >= 0.9
-)
+  WHERE {_cos6_sql("a.v", "b.v")} >= 0.9
+)""",
+        select="""
 SELECT vec_id, label FROM emb_aug
 WHERE vec_id NOT IN (SELECT vec_id FROM dropped)
 """,
-    "sim_knn_join": """
-WITH ev AS (
-  SELECT vec_id, label,
-         list_transform(generate_series(1, len(embedding)),
-                        i -> CAST(embedding[i] AS DOUBLE)) AS v
-  FROM embeddings
-),
-scored AS (
-  SELECT a.vec_id, b.vec_id AS neighbor_id,
-         ROUND(
-           list_reduce(list_transform(generate_series(1, len(a.v)), i -> a.v[i]*b.v[i]), (x,y) -> x+y)
-           / (sqrt(list_reduce(list_transform(generate_series(1, len(a.v)), i -> a.v[i]*a.v[i]), (x,y) -> x+y))
-            * sqrt(list_reduce(list_transform(generate_series(1, len(b.v)), i -> b.v[i]*b.v[i]), (x,y) -> x+y))),
-           6) AS cos_r
+    ),
+    "sim_knn_join": q(
+        """ev AS (
+  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+)""",
+        f"""scored AS (
+  SELECT a.vec_id, b.vec_id AS neighbor_id, {_cos6_sql("a.v", "b.v")} AS cos_r
   FROM ev a JOIN ev b ON a.label = b.label AND a.vec_id <> b.vec_id
-)
-SELECT vec_id, CAST(rn AS BIGINT) AS rank, neighbor_id, cos_r FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY cos_r DESC, neighbor_id) AS rn
-  FROM scored
-) t WHERE rn <= 3
-""",
-    "sim_knn_join_multiprobe": """
-WITH ev AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-),
-""" + KMEANS_CTES_MULTIPROBE + "," + _kmeans_assign_topn("cents_final", "assign_probe", 2) + """,
-scored AS (
-  SELECT DISTINCT a.vec_id, b.vec_id AS neighbor_id,
-         ROUND(
-           list_reduce(list_transform(generate_series(1, len(a.v)), i -> a.v[i]*b.v[i]), (x,y) -> x+y)
-           / (sqrt(list_reduce(list_transform(generate_series(1, len(a.v)), i -> a.v[i]*a.v[i]), (x,y) -> x+y))
-            * sqrt(list_reduce(list_transform(generate_series(1, len(b.v)), i -> b.v[i]*b.v[i]), (x,y) -> x+y))),
-           6) AS cos_r
+)""",
+        select=_KNN3_SELECT,
+    ),
+    "sim_knn_join_multiprobe": q(
+        EV, MULTIPROBE_CTES,
+        f"""scored AS (
+  SELECT DISTINCT a.vec_id, b.vec_id AS neighbor_id, {_cos6_sql("a.v", "b.v")} AS cos_r
   FROM assign_probe a JOIN assign_probe b ON a.cid = b.cid AND a.vec_id <> b.vec_id
-)
-SELECT vec_id, CAST(rn AS BIGINT) AS rank, neighbor_id, cos_r FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY cos_r DESC, neighbor_id) AS rn
-  FROM scored
-) t WHERE rn <= 3
-""",
-    "sim_semantic_dedup_fitted": """
-WITH emb_aug AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-  UNION ALL
-  SELECT vec_id + 100000,
-         list_transform(generate_series(1, len(embedding)),
-                        i -> CASE WHEN i <= 8 THEN 0.0 ELSE CAST(embedding[i] AS DOUBLE) END)
-  FROM embeddings WHERE vec_id % 10 = 1
-),
-ev AS (SELECT vec_id, v FROM emb_aug),
-""" + KMEANS_CTES_MULTIPROBE + "," + _kmeans_assign_topn("cents_final", "assign_probe", 2) + """,
-dropped AS (
+)""",
+        select=_KNN3_SELECT,
+    ),
+    "sim_semantic_dedup_fitted": q(
+        EMBEDDINGS_AUG, "ev AS (SELECT vec_id, v FROM emb_aug)", MULTIPROBE_CTES,
+        f"""dropped AS (
   SELECT DISTINCT a.vec_id FROM assign_probe a
   JOIN assign_probe b ON a.cid = b.cid AND b.vec_id < a.vec_id
-  WHERE ROUND(
-          list_reduce(list_transform(generate_series(1, len(a.v)), i -> a.v[i]*b.v[i]), (x,y) -> x+y)
-          / (sqrt(list_reduce(list_transform(generate_series(1, len(a.v)), i -> a.v[i]*a.v[i]), (x,y) -> x+y))
-           * sqrt(list_reduce(list_transform(generate_series(1, len(b.v)), i -> b.v[i]*b.v[i]), (x,y) -> x+y))),
-          6) >= 0.9
-)
+  WHERE {_cos6_sql("a.v", "b.v")} >= 0.9
+)""",
+        select="""
 SELECT vec_id FROM emb_aug
 WHERE vec_id NOT IN (SELECT vec_id FROM dropped)
 """,
+    ),
     "text_bpe_pairs": """
 WITH toks AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
@@ -1642,67 +1844,23 @@ SELECT d.event_type, COUNT(*) AS n, MAX(d.med) AS med, MAX(m.mad) AS mad,
 FROM dev d JOIN mad m USING (event_type)
 GROUP BY d.event_type
 """,
-    "text_datacard": """
-WITH scored AS (
-  SELECT source, lang, doc_id,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS ws_tokens,
-         FLOOR((
-           0.4 * LEAST(1.0, len(string_split(text, ' ')) / 100.0)
-           + 0.3 * (1.0 - CAST(len(list_filter(string_split(text, ' '),
-                        t -> t IN ('the','a','of','and','is','to','in'))) AS DOUBLE)
-                    / len(string_split(text, ' ')))
-           + 0.3 * LEAST(1.0,
-               ((length(text) - (len(string_split(text, ' ')) - 1))
-                / CAST(len(string_split(text, ' ')) AS DOUBLE)) / 8.0)
-           ) * 10000) / 10000 AS quality_r
-  FROM documents
-),
-ranked AS (
-  SELECT *,
-         ROW_NUMBER() OVER (PARTITION BY source, lang ORDER BY ws_tokens, doc_id) AS rn,
-         COUNT(*) OVER (PARTITION BY source, lang) AS n
-  FROM scored
-)
-SELECT source, lang,
-       COUNT(*) AS n_docs,
-       CAST(SUM(ws_tokens) AS BIGINT) AS total_ws_tokens,
-       FLOOR(CAST(SUM(CAST(quality_r AS DECIMAL(18,4))) AS DOUBLE)
-             / COUNT(*) * 10000) / 10000 AS avg_quality_r,
-       MAX(CASE WHEN rn = (1 * n + 1) // 2 THEN ws_tokens END) AS p50_tokens,
-       MAX(CASE WHEN rn = (9 * n + 9) // 10 THEN ws_tokens END) AS p90_tokens
-FROM ranked GROUP BY source, lang
-""",
-    # Mergeable datacard audit (r10): the merged side replays the per-split
-    # state fold (histogram + DECIMAL quality sums per split, summed, then
+    "text_datacard": q(_DATACARD_CTES, select="SELECT * FROM gcard"),
+    # Mergeable datacard audit: the merged side replays the per-split state
+    # fold (histogram + DECIMAL quality sums per split, summed, then
     # cumulative-count nearest-rank quantiles); the global side is the
-    # text_datacard SQL verbatim. FULL OUTER join so a group present on only
-    # one side surfaces as NULLs instead of vanishing.
-    "text_datacard_merge": """
-WITH scored AS (
-  SELECT source, lang, doc_id,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS ws_tokens,
-         FLOOR((
-           0.4 * LEAST(1.0, len(string_split(text, ' ')) / 100.0)
-           + 0.3 * (1.0 - CAST(len(list_filter(string_split(text, ' '),
-                        t -> t IN ('the','a','of','and','is','to','in'))) AS DOUBLE)
-                    / len(string_split(text, ' ')))
-           + 0.3 * LEAST(1.0,
-               ((length(text) - (len(string_split(text, ' ')) - 1))
-                / CAST(len(string_split(text, ' ')) AS DOUBLE)) / 8.0)
-           ) * 10000) / 10000 AS quality_r
-  FROM documents
-),
-state0 AS (
+    # text_datacard card. FULL OUTER join so a group present on only one
+    # side surfaces as NULLs instead of vanishing.
+    "text_datacard_merge": q(
+        _DATACARD_CTES,
+        *[
+            f"""state{i} AS (
   SELECT source, lang, ws_tokens, COUNT(*) AS c,
          SUM(CAST(quality_r AS DECIMAL(18,4))) AS q_sum
-  FROM scored WHERE doc_id % 2 = 0 GROUP BY source, lang, ws_tokens
-),
-state1 AS (
-  SELECT source, lang, ws_tokens, COUNT(*) AS c,
-         SUM(CAST(quality_r AS DECIMAL(18,4))) AS q_sum
-  FROM scored WHERE doc_id % 2 = 1 GROUP BY source, lang, ws_tokens
-),
-folded AS (
+  FROM scored WHERE doc_id % 2 = {i} GROUP BY source, lang, ws_tokens
+)"""
+            for i in range(2)
+        ],
+        """folded AS (
   SELECT source, lang, ws_tokens, SUM(c) AS c, SUM(q_sum) AS q_sum
   FROM (SELECT * FROM state0 UNION ALL SELECT * FROM state1) u
   GROUP BY source, lang, ws_tokens
@@ -1726,23 +1884,8 @@ merged AS (
          MIN(CASE WHEN cum >= (9 * n + 9) // 10 THEN ws_tokens END)
            AS p90_tokens
   FROM cum GROUP BY source, lang
-),
-ranked AS (
-  SELECT *,
-         ROW_NUMBER() OVER (PARTITION BY source, lang ORDER BY ws_tokens, doc_id) AS rn,
-         COUNT(*) OVER (PARTITION BY source, lang) AS n
-  FROM scored
-),
-gcard AS (
-  SELECT source, lang,
-         COUNT(*) AS n_docs,
-         CAST(SUM(ws_tokens) AS BIGINT) AS total_ws_tokens,
-         FLOOR(CAST(SUM(CAST(quality_r AS DECIMAL(18,4))) AS DOUBLE)
-               / COUNT(*) * 10000) / 10000 AS avg_quality_r,
-         MAX(CASE WHEN rn = (1 * n + 1) // 2 THEN ws_tokens END) AS p50_tokens,
-         MAX(CASE WHEN rn = (9 * n + 9) // 10 THEN ws_tokens END) AS p90_tokens
-  FROM ranked GROUP BY source, lang
-)
+)""",
+        select="""
 SELECT COALESCE(m.source, g.source) AS source,
        COALESCE(m.lang, g.lang) AS lang,
        m.n_docs AS merged_n_docs,
@@ -1758,9 +1901,12 @@ SELECT COALESCE(m.source, g.source) AS source,
 FROM merged m FULL OUTER JOIN gcard g
   ON g.source = m.source AND g.lang = m.lang
 """,
-    "text_mix_epochs": """
+    ),
+    # en 2.5 epochs (base 2, extra iff hv < 5000), es 1.25 (base 1, < 2500),
+    # default 0.5 (base 0, < 5000) — mirrors extensions/text.py:mix_epochs
+    "text_mix_epochs": f"""
 WITH h AS (
-  SELECT doc_id, lang, {POLY_HASH_DOC} % 10000 AS hv FROM documents
+  SELECT doc_id, lang, {poly_hash_mixed_sql("doc_id")} % 10000 AS hv FROM documents
 ),
 n AS (
   SELECT doc_id, lang,
@@ -1775,109 +1921,22 @@ SELECT doc_id, lang,
        CAST(unnest(generate_series(1, n_copies)) AS BIGINT) AS epoch
 FROM n WHERE n_copies > 0
 """,
-    # C4-style corpus-wide line dedup (r10): the footer-injected fixture
-    # mirrors build_documents_footers verbatim; first occurrence of each
-    # distinct line = lexicographic min over (doc_id, ln), computed in two
-    # aggregate phases (min doc, then min ln within it) — equal to the
-    # engine's one-shot min(struct). string_agg ORDER BY ln rebuilds the
-    # surviving text; md5 on the (ASCII) rebuild mirrors Spark's binary md5.
-    "text_line_dedup": """
-WITH docs_f AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 97 = 0 THEN 'shared boilerplate footer'
-              WHEN doc_id % 5 = 0
-              THEN text || chr(10) || 'shared boilerplate footer'
-              WHEN doc_id % 5 = 1
-              THEN text || chr(10) || 'shared boilerplate footer'
-                   || chr(10) || 'second shared footer'
-              WHEN doc_id % 5 = 2
-              THEN 'shared boilerplate footer' || chr(10) || text
-              ELSE text END AS text
-  FROM documents
-),
-lines AS (
-  SELECT doc_id, CAST(u.i - 1 AS INT) AS ln, l[u.i] AS line
-  FROM (SELECT doc_id, string_split(text, chr(10)) AS l FROM docs_f) t,
-       unnest(range(1, len(l) + 1)) AS u(i)
-),
-totals AS (
-  SELECT doc_id, COUNT(*) AS n_lines FROM lines GROUP BY doc_id
-),
-f1 AS (SELECT line, MIN(doc_id) AS fdoc FROM lines GROUP BY line),
-f2 AS (
-  SELECT l.line, l.doc_id AS fdoc, MIN(l.ln) AS fln
-  FROM lines l JOIN f1 ON f1.line = l.line AND l.doc_id = f1.fdoc
-  GROUP BY l.line, l.doc_id
-),
-kept AS (
-  SELECT l.doc_id, l.ln, l.line
-  FROM lines l JOIN f2
-    ON f2.line = l.line AND l.doc_id = f2.fdoc AND l.ln = f2.fln
-),
-rebuilt AS (
-  SELECT doc_id, COUNT(*) AS n_kept,
-         md5(string_agg(line, chr(10) ORDER BY ln)) AS kept_md5
-  FROM kept GROUP BY doc_id
-)
-SELECT t.doc_id, t.n_lines,
-       COALESCE(r.n_kept, 0) AS n_kept,
-       r.kept_md5
-FROM totals t LEFT JOIN rebuilt r ON r.doc_id = t.doc_id
-""",
-    # Temperature mixing at alpha=1/2 (r10): weights derived from corpus
-    # shares in pure integers — q = (n_max*10^8) DIV n, w_q = exact integer
-    # sqrt (float sqrt + the same +-1 correction the engine applies), base
+    # Temperature mixing at alpha=1/2: weights derived from corpus shares
+    # in pure integers — q = (n_max*10^8) DIV n, w_q = isqrt(q), base
     # copies w_q DIV 10^4, fractional copy from the shared mixed hash.
-    "text_mix_temperature": """
-WITH counts AS (
+    "text_mix_temperature": q(
+        """counts AS (
   SELECT lang, COUNT(*) AS n FROM documents GROUP BY lang
 ),
-weights AS (
-  SELECT lang,
-         CASE WHEN (s1 + 1) * (s1 + 1) <= q THEN s1 + 1 ELSE s1 END AS w_q
-  FROM (
-    SELECT lang, q,
-           CASE WHEN s0 * s0 > q THEN s0 - 1 ELSE s0 END AS s1
-    FROM (
-      SELECT lang,
-             (MAX(n) OVER () * 100000000) // n AS q,
-             CAST(FLOOR(SQRT(CAST((MAX(n) OVER () * 100000000) // n
-                  AS DOUBLE))) AS BIGINT) AS s0
-      FROM counts) t0
-  ) t1
-),
-base AS (
-  SELECT d.doc_id, d.lang, w.w_q,
-         w.w_q // 10000
-         + CASE WHEN {POLY_HASH_DOC} % 10000 < w.w_q % 10000
-                THEN 1 ELSE 0 END AS n_copies
-  FROM documents d JOIN weights w ON w.lang = d.lang
-)
-SELECT doc_id, lang, w_q,
-       CAST(unnest(generate_series(1, n_copies)) AS BIGINT) AS epoch
-FROM base WHERE n_copies > 0
-""",
-    "text_dup_spans": """
-WITH docs_aug AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 100000, text FROM documents WHERE doc_id % 10 = 7
-  UNION ALL
-  SELECT doc_id + 200000, substr(text, strpos(text, ' ') + 1)
-  FROM documents WHERE doc_id % 10 = 3
-),
-toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM docs_aug),
-sh AS (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id,
-           unnest(list_transform(generate_series(1, len(t)-7),
-                  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]
-                   || ' ' || t[i+4] || ' ' || t[i+5] || ' ' || t[i+6]
-                   || ' ' || t[i+7])) AS shingle
-    FROM toks) u
-  WHERE shingle IS NOT NULL
-),
-dfq AS (SELECT shingle, COUNT(*) AS dfr FROM sh GROUP BY 1)
+qw AS (SELECT lang, (MAX(n) OVER () * 100000000) // n AS q FROM counts)""",
+        _isqrt_cte("weights", "qw", "lang", "q", "w_q", "BIGINT"),
+        _MIX_COPIES,
+        select=_MIX_SELECT,
+    ),
+    "text_dup_spans": q(
+        DOCUMENTS_AUG, _shingles("docs_aug", 8),
+        "dfq AS (SELECT shingle, COUNT(*) AS dfr FROM sh GROUP BY 1)",
+        select="""
 SELECT s.doc_id,
        COUNT(*) AS n_windows,
        COUNT(CASE WHEN d.dfr >= 2 THEN 1 END) AS n_dup_windows,
@@ -1886,16 +1945,10 @@ SELECT s.doc_id,
 FROM sh s JOIN dfq d USING (shingle)
 GROUP BY s.doc_id
 """,
-    "text_dup_spans_trim": """
-WITH docs_aug AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 100000, text FROM documents WHERE doc_id % 10 = 7
-  UNION ALL
-  SELECT doc_id + 200000, substr(text, strpos(text, ' ') + 1)
-  FROM documents WHERE doc_id % 10 = 3
-),
-toks0 AS (SELECT doc_id, string_split(text, ' ') AS t FROM docs_aug),
+    ),
+    "text_dup_spans_trim": q(
+        DOCUMENTS_AUG,
+        """toks0 AS (SELECT doc_id, string_split(text, ' ') AS t FROM docs_aug),
 tok AS (
   SELECT doc_id, generate_subscripts(t, 1) - 1 AS pos, unnest(t) AS tok
   FROM toks0
@@ -1925,7 +1978,8 @@ kept_agg AS (
          md5(string_agg(tok, ' ' ORDER BY pos)) AS trimmed_md5
   FROM kept GROUP BY doc_id
 ),
-totals AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens FROM toks0)
+totals AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens FROM toks0)""",
+        select="""
 SELECT tt.doc_id, tt.n_tokens,
        CAST(COALESCE(k.n_kept, 0) AS BIGINT) AS n_kept,
        FLOOR(COALESCE(k.n_kept, 0) / CAST(tt.n_tokens AS DOUBLE) * 10000)
@@ -1933,35 +1987,22 @@ SELECT tt.doc_id, tt.n_tokens,
        COALESCE(k.trimmed_md5, md5('')) AS trimmed_md5
 FROM totals tt LEFT JOIN kept_agg k USING (doc_id)
 """,
-    "sim_contamination": """
-WITH emb_aug AS (
-  SELECT vec_id,
-         list_transform(generate_series(1, len(embedding)),
-                        i -> CAST(embedding[i] AS DOUBLE)) AS v
-  FROM embeddings
-  UNION ALL
-  SELECT vec_id + 100000,
-         list_transform(generate_series(1, len(embedding)),
-                        i -> CASE WHEN i <= 8 THEN 0.0 ELSE CAST(embedding[i] AS DOUBLE) END)
-  FROM embeddings WHERE vec_id % 10 = 1
-),
-bench AS (
-  SELECT vec_id AS bid,
-         list_transform(generate_series(1, len(embedding)),
-                        i -> CAST(embedding[i] AS DOUBLE)) AS bv
-  FROM embeddings WHERE vec_id % 10 = 1
-),
+    ),
+    # max cosine of every vector to the benchmark (%10==1) vectors, itself
+    # excluded
+    "sim_contamination": q(
+        EMBEDDINGS_AUG,
+        f"""bench AS (SELECT vec_id AS bid, v AS bv FROM emb WHERE vec_id % 10 = 1),
 scored AS (
-  SELECT e.vec_id,
-         list_reduce(list_transform(generate_series(1, len(e.v)), i -> e.v[i]*b.bv[i]), (x,y) -> x+y)
-         / (sqrt(list_reduce(list_transform(generate_series(1, len(e.v)), i -> e.v[i]*e.v[i]), (x,y) -> x+y))
-          * sqrt(list_reduce(list_transform(generate_series(1, len(b.bv)), i -> b.bv[i]*b.bv[i]), (x,y) -> x+y))) AS c
+  SELECT e.vec_id, {_cos_sql("e.v", "b.bv")} AS c
   FROM emb_aug e LEFT JOIN bench b ON e.vec_id <> b.bid
-)
+)""",
+        select="""
 SELECT vec_id, ROUND(MAX(c), 6) AS max_cos_r,
        COALESCE(ROUND(MAX(c), 6) >= 0.9, FALSE) AS contaminated
 FROM scored GROUP BY vec_id
 """,
+    ),
     "text_chunk": """
 WITH toks AS (
   SELECT doc_id, string_split(text, ' ') AS t FROM documents
@@ -2007,54 +2048,35 @@ SELECT doc_id, term, CAST(tf AS BIGINT) AS tf,
        CAST(score_q AS BIGINT) AS score_q, CAST(rnk AS BIGINT) AS rnk
 FROM rk WHERE rnk <= 3
 """,
-    "text_pack_sequences": """
-WITH t AS (
-  SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-  FROM documents
-),
-p AS (
-  SELECT doc_id, n_tokens,
-         CAST(COALESCE(SUM(n_tokens) OVER (
-              ORDER BY doc_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-              AS BIGINT) AS start_offset
-  FROM t
-)
+    "text_pack_sequences": q(
+        _PACK_CTES,
+        select="""
 SELECT doc_id, n_tokens, start_offset,
        CAST(start_offset // 512 AS BIGINT) AS batch_id
 FROM p
 """,
-    # Training-shard writer round trip (r10): the pack CTE verbatim, plus
-    # the round-robin shard assignment and the text digest — the Spark side
-    # returns these FROM THE RE-READ shard files, so equality checks the
+    ),
+    # Training-shard writer round trip: the pack offsets plus the
+    # round-robin shard assignment and the text digest — the Spark side
+    # returns these from the re-read shard files, so equality checks the
     # write->read path. Texts are ASCII, so DuckDB's VARCHAR md5 mirrors
-    # Spark's binary md5 byte-for-byte (the mm_payload precedent).
-    "text_pack_shards_roundtrip": """
-WITH t AS (
-  SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-         text
-  FROM documents
-),
-p AS (
-  SELECT doc_id, n_tokens, text,
-         CAST(COALESCE(SUM(n_tokens) OVER (
-              ORDER BY doc_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-              AS BIGINT) AS start_offset
-  FROM t
-)
+    # Spark's binary md5 byte-for-byte.
+    "text_pack_shards_roundtrip": q(
+        _PACK_CTES,
+        select="""
 SELECT doc_id, n_tokens, start_offset,
        CAST(start_offset // 512 AS BIGINT) AS batch_id,
        CAST((start_offset // 512) % 8 AS INT) AS shard,
        md5(text) AS text_md5
 FROM p
 """,
+    ),
     "events_salted_agg": """
 SELECT event_type, COUNT(*) AS n,
        CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_sum
 FROM events GROUP BY 1
 """,
-    "events_hist_quantiles": """
+    "events_hist_quantiles": f"""
 WITH vals AS (
   SELECT CAST(value AS DOUBLE) AS v FROM events WHERE value IS NOT NULL
 ),
@@ -2062,9 +2084,7 @@ stats AS (
   SELECT MIN(v) AS lo, MAX(v) AS hi, COUNT(*) AS n FROM vals
 ),
 binned AS (
-  SELECT CASE WHEN s.hi = s.lo THEN 0
-         ELSE LEAST(CAST(FLOOR((t.v - s.lo) / ((s.hi - s.lo) / 1000.0))
-                    AS BIGINT), 999) END AS bin,
+  SELECT {_HIST_BIN} AS bin,
          COUNT(*) AS c
   FROM vals t, stats s GROUP BY 1
 ),
@@ -2084,9 +2104,9 @@ SELECT r.q_label, CAST(r.rank AS BIGINT) AS rank,
 FROM ranks r JOIN cum c ON c.cumc >= r.rank
 GROUP BY r.q_label, r.rank, r.lo, r.hi
 """,
-    "text_sample_stratified": """
+    "text_sample_stratified": f"""
 WITH h AS (
-  SELECT doc_id, lang, {POLY_HASH_DOC} % 10000 AS hb
+  SELECT doc_id, lang, {poly_hash_mixed_sql("doc_id")} % 10000 AS hb
   FROM documents
 )
 SELECT doc_id, lang FROM h
@@ -2103,50 +2123,26 @@ SELECT doc_id,
              '\\bstream\\b', '<stream>', 'g')) AS redacted_md5
 FROM documents
 """,
-    "text_contamination": """
-WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-grams AS (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id,
-           unnest(list_transform(generate_series(1, len(t)-4),
-                  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4])) AS shingle
-    FROM toks WHERE len(t) >= 5) u
-  WHERE shingle IS NOT NULL
-),
-bench AS (SELECT DISTINCT shingle FROM grams WHERE doc_id % 10 = 7),
-totals AS (SELECT doc_id, COUNT(*) AS n_grams FROM grams GROUP BY doc_id),
+    # the 5-grams of the %10==7 docs as the benchmark
+    "text_contamination": q(
+        _shingles("documents", 5),
+        """bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 10 = 7),
+totals AS (SELECT doc_id, COUNT(*) AS n_grams FROM sh GROUP BY doc_id),
 hits AS (
   SELECT g.doc_id, COUNT(*) AS hit_ngrams
-  FROM grams g JOIN bench b USING (shingle) GROUP BY g.doc_id
-)
+  FROM sh g JOIN bench b USING (shingle) GROUP BY g.doc_id
+)""",
+        select="""
 SELECT h.doc_id, h.hit_ngrams, t.n_grams,
        FLOOR(CAST(h.hit_ngrams AS DOUBLE) / t.n_grams * 10000) / 10000 AS contam_frac_r
 FROM hits h JOIN totals t USING (doc_id)
 """,
-    "text_repetition": """
-WITH base AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-tokr AS (SELECT doc_id, unnest(toks) AS tok FROM base),
-top AS (
-  SELECT doc_id, MAX(c) AS top_c, CAST(SUM(c) AS BIGINT) AS n_tok FROM (
-    SELECT doc_id, tok, COUNT(*) AS c FROM tokr GROUP BY doc_id, tok
-  ) t GROUP BY doc_id
-),
-arr AS (
-  SELECT doc_id,
-         CASE WHEN len(toks) >= 3 THEN
-           1.0 - CAST(len(list_distinct(g.grams)) AS DOUBLE) / len(g.grams)
-         ELSE 0.0 END AS dup_3gram_frac,
-         CASE WHEN len(toks) >= 2 THEN
-           CAST(list_sum(list_transform(generate_series(1, len(toks)-1),
-                i -> CASE WHEN toks[i] = toks[i+1] THEN 1 ELSE 0 END)) AS DOUBLE)
-           / (len(toks) - 1)
-         ELSE 0.0 END AS consec_rep_frac
-  FROM base,
-       LATERAL (SELECT list_transform(generate_series(1, len(toks)-2),
-                i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]) AS grams) g
-),
-j AS (SELECT t.doc_id, t.top_c, t.n_tok, a.dup_3gram_frac, a.consec_rep_frac
-      FROM top t JOIN arr a USING (doc_id))
+    ),
+    "text_repetition": q(
+        _repetition_ctes("documents"),
+        """j AS (SELECT t.doc_id, t.top_c, t.n_tok, a.dup_3gram_frac, a.consec_rep_frac
+      FROM top t JOIN arr a USING (doc_id))""",
+        select="""
 SELECT doc_id,
        FLOOR(CAST(top_c AS DOUBLE) / n_tok * 10000) / 10000 AS top_tok_share_r,
        FLOOR(dup_3gram_frac * 10000) / 10000 AS dup_3gram_frac_r,
@@ -2154,6 +2150,7 @@ SELECT doc_id,
        (CAST(top_c AS DOUBLE) / n_tok > 0.2 OR dup_3gram_frac > 0.3) AS flag_repetitive
 FROM j
 """,
+    ),
     "stream_view_attribution": """
 SELECT p.event_id AS purchase_event_id,
        v.event_id AS view_event_id,
@@ -2185,22 +2182,28 @@ FROM lineitem
 WHERE CAST(l_shipdate AS DATE) <= DATE '1999-12-31'
 GROUP BY l_returnflag, l_linestatus
 """,
-    "text_heavy_hitters_cms": """
+    # count-min estimates of the 20 most frequent tokens
+    "text_heavy_hitters_cms": f"""
 WITH tok AS (
   SELECT unnest(string_split(text, ' ')) AS tok FROM documents
 ),
-hv AS (SELECT tok, {POLY_HASH_TOK} AS h1, {POLY_HASH_TOK2} AS h2 FROM tok),
+hv AS (
+  SELECT tok, {poly_hash_mixed_sql("tok")} AS h1,
+         {poly_hash_mixed_sql("tok", POLY_P31B)} AS h2
+  FROM tok
+),
 buckets AS (
-  SELECT j.j, ((h.h1 + j.j * h.h2) % 2147483647) % 64 AS b
-  FROM hv h CROSS JOIN (SELECT unnest(generate_series(0, 2)) AS j) j
+  SELECT j.j, {_cms_cell("h.h1", "h.h2")} AS b
+  FROM hv h CROSS JOIN {_J3}
 ),
 counters AS (SELECT j, b, COUNT(*) AS cnt FROM buckets GROUP BY j, b),
 exact AS (SELECT tok, COUNT(*) AS n_exact FROM tok GROUP BY tok),
 topk AS (SELECT tok, n_exact FROM exact ORDER BY n_exact DESC, tok LIMIT 20),
 probes AS (
   SELECT t.tok, t.n_exact, j.j,
-         ((({POLY_HASH_TTOK}) + j.j * ({POLY_HASH_TTOK2})) % 2147483647) % 64 AS b
-  FROM topk t CROSS JOIN (SELECT unnest(generate_series(0, 2)) AS j) j
+         {_cms_cell(f"({poly_hash_mixed_sql('t.tok')})",
+                    f"({poly_hash_mixed_sql('t.tok', POLY_P31B)})")} AS b
+  FROM topk t CROSS JOIN {_J3}
 ),
 est AS (
   SELECT p.tok, p.n_exact, MIN(c.cnt) AS n_cms
@@ -2211,7 +2214,7 @@ SELECT CAST(ROW_NUMBER() OVER (ORDER BY n_exact DESC, tok) AS BIGINT) AS rank,
        tok, n_exact, n_cms
 FROM est
 """,
-    "events_hist_merge": """
+    "events_hist_merge": f"""
 WITH vals AS (
   SELECT event_type AS g, CAST(value AS DOUBLE) AS v
   FROM events WHERE value IS NOT NULL
@@ -2219,9 +2222,7 @@ WITH vals AS (
 stats AS (SELECT MIN(v) AS lo, MAX(v) AS hi FROM vals),
 binned AS (
   SELECT t.g,
-         CASE WHEN s.hi = s.lo THEN 0
-         ELSE LEAST(CAST(FLOOR((t.v - s.lo) / ((s.hi - s.lo) / 1000.0))
-                    AS BIGINT), 999) END AS bin
+         {_HIST_BIN} AS bin
   FROM vals t, stats s
 ),
 per_group AS (SELECT g, bin, COUNT(*) AS cnt FROM binned GROUP BY g, bin),
@@ -2232,33 +2233,23 @@ SELECT CAST(m.bin AS BIGINT) AS bin,
        CAST(f.cnt_global AS BIGINT) AS cnt_global
 FROM merged m JOIN full_scan f USING (bin)
 """,
-    # r14: the stream_cms_counters face was RETIRED from the registry
-    # (VERDICT r13 #5) — the counter math stays oracle-checked through
-    # text_heavy_hitters_cms / text_cms_merge (same hashes), and stream ≡
-    # batch is pinned in
-    # tests/test_streaming.py::test_stream_cms_equals_batch_counters.
-    "text_bloom_decontaminate": """
-WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-sh AS (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id,
-           unnest(list_transform(generate_series(1, len(t)-4),
-                  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]
-                   || ' ' || t[i+4])) AS shingle
-    FROM toks) u
-  WHERE shingle IS NOT NULL
-),
-hs AS (
-  SELECT doc_id, shingle, {POLY_HASH_SH} AS h1, {POLY_HASH_SH2} AS h2 FROM sh
+    # A 3-probe Bloom filter of the %10==7 docs' 5-grams over 4096 bits;
+    # a 5-gram is flagged when all 3 of its positions are set.
+    "text_bloom_decontaminate": q(
+        _shingles("documents", 5),
+        f"""hs AS (
+  SELECT doc_id, shingle, {poly_hash_mixed_sql("shingle")} AS h1,
+         {poly_hash_mixed_sql("shingle", POLY_P31B)} AS h2
+  FROM sh
 ),
 bench_pos AS (
   SELECT DISTINCT (h1 + j.j * h2) % 4096 AS p
-  FROM hs CROSS JOIN (SELECT unnest(generate_series(0, 2)) AS j) j
+  FROM hs CROSS JOIN {_J3}
   WHERE doc_id % 10 = 7
 ),
 gpos AS (
   SELECT doc_id, h1, h2, j.j, (h1 + j.j * h2) % 4096 AS p
-  FROM hs CROSS JOIN (SELECT unnest(generate_series(0, 2)) AS j) j
+  FROM hs CROSS JOIN {_J3}
 ),
 flagged AS (
   SELECT doc_id, h1, h2
@@ -2267,31 +2258,18 @@ flagged AS (
   HAVING COUNT(DISTINCT j) = 3
 ),
 totals AS (SELECT doc_id, COUNT(*) AS n_grams FROM sh GROUP BY 1),
-fc AS (SELECT doc_id, COUNT(*) AS n_flagged FROM flagged GROUP BY 1)
+fc AS (SELECT doc_id, COUNT(*) AS n_flagged FROM flagged GROUP BY 1)""",
+        select="""
 SELECT t.doc_id, t.n_grams, f.n_flagged,
        FLOOR(f.n_flagged / CAST(t.n_grams AS DOUBLE) * 10000) / 10000
          AS flagged_frac_r
 FROM totals t JOIN fc f USING (doc_id)
 """,
-    "text_ngram_novelty": """
-WITH docs_aug AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 100000, text FROM documents WHERE doc_id % 10 = 7
-  UNION ALL
-  SELECT doc_id + 200000, substr(text, strpos(text, ' ') + 1)
-  FROM documents WHERE doc_id % 10 = 3
-),
-toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM docs_aug),
-sh AS (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id,
-           unnest(list_transform(generate_series(1, len(t)-2),
-                  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-    FROM toks) u
-  WHERE shingle IS NOT NULL
-),
-firsts AS (SELECT shingle, MIN(doc_id) AS first_id FROM sh GROUP BY 1)
+    ),
+    "text_ngram_novelty": q(
+        DOCUMENTS_AUG, _shingles("docs_aug", 3),
+        "firsts AS (SELECT shingle, MIN(doc_id) AS first_id FROM sh GROUP BY 1)",
+        select="""
 SELECT s.doc_id,
        COUNT(*) AS n_grams,
        COUNT(CASE WHEN f.first_id = s.doc_id THEN 1 END) AS n_novel,
@@ -2300,27 +2278,23 @@ SELECT s.doc_id,
 FROM sh s JOIN firsts f USING (shingle)
 GROUP BY s.doc_id
 """,
-    "text_split_leakage_safe": """
-WITH docs_aug AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 100000, text FROM documents WHERE doc_id % 10 = 7
-  UNION ALL
-  SELECT doc_id + 200000, substr(text, strpos(text, ' ') + 1)
-  FROM documents WHERE doc_id % 10 = 3
-),
-reps AS (SELECT COALESCE(text, '') AS key, MIN(doc_id) AS rep_id
+    ),
+    # every copy of a text splits with its min-id representative
+    "text_split_leakage_safe": q(
+        DOCUMENTS_AUG,
+        f"""reps AS (SELECT COALESCE(text, '') AS key, MIN(doc_id) AS rep_id
          FROM docs_aug GROUP BY COALESCE(text, '')),
 assigned AS (
-  SELECT d.doc_id, r.rep_id, ({POLY_HASH_REP}) % 100 AS bucket
+  SELECT d.doc_id, r.rep_id, ({poly_hash_mixed_sql("r.rep_id")}) % 100 AS bucket
   FROM docs_aug d JOIN reps r ON COALESCE(d.text, '') = r.key
-)
-SELECT doc_id, rep_id, bucket,
-       CASE WHEN bucket < 80 THEN 'train'
-            WHEN bucket < 90 THEN 'val'
-            ELSE 'test' END AS split
+)""",
+        select=f"""
+SELECT doc_id, rep_id, bucket, {_split_case("bucket")} AS split
 FROM assigned
 """,
+    ),
+    # fixtures.build_documents_xsource: the %10==7 docs mirrored under
+    # source 'mirror'
     "dedup_source_overlap": """
 WITH docs_x AS (
   SELECT doc_id, text, source FROM documents
@@ -2332,14 +2306,18 @@ SELECT a.source AS source_a, b.source AS source_b, COUNT(*) AS n_shared
 FROM ds a JOIN ds b ON a.key = b.key AND a.source < b.source
 GROUP BY a.source, b.source
 """,
-    "text_cms_merge": """
+    "text_cms_merge": f"""
 WITH tok AS (
   SELECT source AS g, unnest(string_split(text, ' ')) AS tok FROM documents
 ),
-hv AS (SELECT g, tok, {POLY_HASH_TOK} AS h1, {POLY_HASH_TOK2} AS h2 FROM tok),
+hv AS (
+  SELECT g, tok, {poly_hash_mixed_sql("tok")} AS h1,
+         {poly_hash_mixed_sql("tok", POLY_P31B)} AS h2
+  FROM tok
+),
 buckets AS (
-  SELECT g, j.j, ((h.h1 + j.j * h.h2) % 2147483647) % 64 AS b
-  FROM hv h CROSS JOIN (SELECT unnest(generate_series(0, 2)) AS j) j
+  SELECT g, j.j, {_cms_cell("h.h1", "h.h2")} AS b
+  FROM hv h CROSS JOIN {_J3}
 ),
 per_group AS (SELECT g, j, b, COUNT(*) AS cnt FROM buckets GROUP BY g, j, b),
 merged AS (SELECT j, b, SUM(cnt) AS cnt_merged FROM per_group GROUP BY j, b),
@@ -2351,45 +2329,29 @@ FROM merged m JOIN full_scan g2 ON g2.j = m.j AND g2.b = m.b
 """,
 }
 
+# Faces whose answer is another face's by contract share its SQL:
+# - the skew-hardened match and cascade equal the plain ones (the hot-key
+#   split partitions the key space, so it cannot change a row);
+# - the csv sink round trip re-reads the internal residual;
+# - a drained bounded stream equals the batch aggregate;
+# - the star-based CC variant computes the same min-reachable-id fixpoint.
+for _face, _same in {
+    "recon_match_skewed": "recon_match_exact",
+    "recon_cascade_skewed": "recon_cascade_summary",
+    "recon_csv_sink_roundtrip": "recon_residual_internal",
+    "stream_events_hourly": "events_hourly",
+    "stream_dedup_corpus": "dedup_exact",
+    "dedup_clusters_star": "dedup_clusters",
+}.items():
+    ORACLES[_face] = ORACLES[_same]
 
-# Shared cross-engine polynomial hash (functions/hashing.py) — substituted
-# here so the Spark expression and the SQL mirror can never drift apart.
-# Sampling coordinates and KMV order statistics use the MIXED variant (one
-# multiplicative scramble) because raw poly-hash values of short numeric ids
-# occupy narrow bands — see poly_hash_mixed_col.
-from mongo_polars_reconciliation_spark.functions.hashing import (  # noqa: E402
-    POLY_P31B,
-    poly_hash_mixed_sql,
-)
-
-ORACLES["events_user_kmv"] = ORACLES["events_user_kmv"].replace(
-    "{POLY_HASH_USER}", poly_hash_mixed_sql("user_id")
-)
-ORACLES["events_kmv_merge"] = ORACLES["events_kmv_merge"].replace(
-    "{POLY_HASH_USER}", poly_hash_mixed_sql("user_id")
-)
-ORACLES["text_split_assign"] = ORACLES["text_split_assign"].replace(
-    "{POLY_HASH_DOC}", poly_hash_mixed_sql("doc_id")
-)
-ORACLES["text_sample_stratified"] = ORACLES["text_sample_stratified"].replace(
-    "{POLY_HASH_DOC}", poly_hash_mixed_sql("doc_id")
-)
-ORACLES["text_mix_epochs"] = ORACLES["text_mix_epochs"].replace(
-    "{POLY_HASH_DOC}", poly_hash_mixed_sql("doc_id")
-)
-ORACLES["text_mix_temperature"] = ORACLES["text_mix_temperature"].replace(
-    "{POLY_HASH_DOC}", poly_hash_mixed_sql("d.doc_id")
-)
-
-# Temperature mixing at alpha=3/4 (r11): binary-expansion product —
+# Temperature mixing at alpha=3/4: binary-expansion product —
 # w = (isqrt(n_max·10^8 // n) · isqrt(isqrt(n_max·10^16 // n))) // 10^4.
 # HUGEINT keeps the q4 = n_max·10^16 product exact past BIGINT; the
-# float-seed ±1 correction is an exact isqrt for q < ~10^30 (double seed
-# error << 1 there), which covers every gate scale — the engine's Newton
-# chain extends the same spec to 10^38, so the two agree wherever both
-# are defined. Same mixed-hash fractional-copy threshold as alpha=1/2.
-ORACLES["text_mix_temperature_alpha"] = """
-WITH counts AS (
+# engine's Newton chain extends the same spec to 10^38, so the two agree
+# wherever both are defined. Same mixed-hash fractional copy as alpha=1/2.
+ORACLES["text_mix_temperature_alpha"] = q(
+    """counts AS (
   SELECT lang, COUNT(*) AS n FROM documents GROUP BY lang
 ),
 qs AS (
@@ -2397,242 +2359,158 @@ qs AS (
          (CAST(MAX(n) OVER () AS HUGEINT) * 100000000) // n AS q2,
          (CAST(MAX(n) OVER () AS HUGEINT) * 10000000000000000) // n AS q4
   FROM counts
-),
-h1 AS (
-  SELECT lang, q4,
-         CASE WHEN (s1 + 1) * (s1 + 1) <= q2 THEN s1 + 1 ELSE s1 END AS w_half
-  FROM (
-    SELECT lang, q2, q4,
-           CASE WHEN s0 * s0 > q2 THEN s0 - 1 ELSE s0 END AS s1
-    FROM (SELECT lang, q2, q4,
-                 CAST(FLOOR(SQRT(CAST(q2 AS DOUBLE))) AS HUGEINT) AS s0
-          FROM qs) t0) t1
-),
-h2 AS (
-  SELECT lang, w_half,
-         CASE WHEN (s1 + 1) * (s1 + 1) <= q4 THEN s1 + 1 ELSE s1 END AS r4
-  FROM (
-    SELECT lang, w_half, q4,
-           CASE WHEN s0 * s0 > q4 THEN s0 - 1 ELSE s0 END AS s1
-    FROM (SELECT lang, w_half, q4,
-                 CAST(FLOOR(SQRT(CAST(q4 AS DOUBLE))) AS HUGEINT) AS s0
-          FROM h1) t0) t1
-),
-h3 AS (
-  SELECT lang, w_half,
-         CASE WHEN (s1 + 1) * (s1 + 1) <= r4 THEN s1 + 1 ELSE s1 END AS w_quarter
-  FROM (
-    SELECT lang, w_half, r4,
-           CASE WHEN s0 * s0 > r4 THEN s0 - 1 ELSE s0 END AS s1
-    FROM (SELECT lang, w_half, r4,
-                 CAST(FLOOR(SQRT(CAST(r4 AS DOUBLE))) AS HUGEINT) AS s0
-          FROM h2) t0) t1
-),
-weights AS (
+)""",
+    _isqrt_cte("h1", "qs", "lang, q4", "q2", "w_half", "HUGEINT"),
+    _isqrt_cte("h2", "h1", "lang, w_half", "q4", "r4", "HUGEINT"),
+    _isqrt_cte("h3", "h2", "lang, w_half", "r4", "w_quarter", "HUGEINT"),
+    """weights AS (
   SELECT lang, CAST((w_half * w_quarter) // 10000 AS BIGINT) AS w_q FROM h3
-),
-base AS (
-  SELECT d.doc_id, d.lang, w.w_q,
-         w.w_q // 10000
-         + CASE WHEN {POLY_HASH_DOC} % 10000 < w.w_q % 10000
-                THEN 1 ELSE 0 END AS n_copies
-  FROM documents d JOIN weights w ON w.lang = d.lang
-)
-SELECT doc_id, lang, w_q,
-       CAST(unnest(generate_series(1, n_copies)) AS BIGINT) AS epoch
-FROM base WHERE n_copies > 0
-""".replace("{POLY_HASH_DOC}", poly_hash_mixed_sql("d.doc_id"))
-ORACLES["text_heavy_hitters_cms"] = (
-    ORACLES["text_heavy_hitters_cms"]
-    .replace("{POLY_HASH_TOK}", poly_hash_mixed_sql("tok"))
-    .replace("{POLY_HASH_TOK2}", poly_hash_mixed_sql("tok", POLY_P31B))
-    .replace("{POLY_HASH_TTOK}", poly_hash_mixed_sql("t.tok"))
-    .replace("{POLY_HASH_TTOK2}", poly_hash_mixed_sql("t.tok", POLY_P31B))
-)
-ORACLES["text_bloom_decontaminate"] = (
-    ORACLES["text_bloom_decontaminate"]
-    .replace("{POLY_HASH_SH}", poly_hash_mixed_sql("shingle"))
-    .replace("{POLY_HASH_SH2}", poly_hash_mixed_sql("shingle", POLY_P31B))
-)
-ORACLES["text_split_leakage_safe"] = ORACLES["text_split_leakage_safe"].replace(
-    "{POLY_HASH_REP}", poly_hash_mixed_sql("r.rep_id")
-)
-ORACLES["text_cms_merge"] = (
-    ORACLES["text_cms_merge"]
-    .replace("{POLY_HASH_TOK}", poly_hash_mixed_sql("tok"))
-    .replace("{POLY_HASH_TOK2}", poly_hash_mixed_sql("tok", POLY_P31B))
+)""",
+    _MIX_COPIES,
+    select=_MIX_SELECT,
 )
 
-# The star-based CC variant shares the propagation variant's oracle: both
-# compute the identical min-reachable-id fixpoint over the same pair graph.
-ORACLES["dedup_clusters_star"] = ORACLES["dedup_clusters"]
-
-# Near-dup-safe split = the CC fixpoint above + one hash per cluster id.
-ORACLES["text_split_cluster_safe"] = (
-    "WITH RECURSIVE "
-    + MINHASH_PAIR_CTES
-    + """,
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM mh_pairs
-  UNION
-  SELECT id_b, id_a FROM mh_pairs
-),
-walk(node, lbl) AS (
-  SELECT doc_id, doc_id FROM docs_aug
-  UNION
-  SELECT e.src, w.lbl FROM walk w JOIN edges e ON e.dst = w.node
-),
-cl AS (SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM walk GROUP BY node)
-SELECT doc_id, cluster_id, ({PH}) % 100 AS bucket,
-       CASE WHEN ({PH}) % 100 < 80 THEN 'train'
-            WHEN ({PH}) % 100 < 90 THEN 'val'
-            ELSE 'test' END AS split
+# Near-dup-safe split = the CC fixpoint + one hash per cluster id.
+_CLUSTER_HASH = f"({poly_hash_mixed_sql('cluster_id')}) % 100"
+ORACLES["text_split_cluster_safe"] = q(
+    MINHASH_PAIR_CTES, CC_CTES,
+    select=f"""
+SELECT doc_id, cluster_id, {_CLUSTER_HASH} AS bucket,
+       {_split_case(_CLUSTER_HASH)} AS split
 FROM cl
-"""
-).replace("{PH}", poly_hash_mixed_sql("cluster_id"))
+""",
+    recursive=True,
+)
 
-# curation v2 = curation v1 with the Gopher repetition gate and the 5-gram
-# benchmark-decontamination gate inserted between near-dup removal (kept2)
-# and the quality/language tail — assembled from the v1 SQL so the shared
-# stages cannot drift apart.
-_V2_GATES = """rbase AS (SELECT doc_id, text, string_split(text, ' ') AS toks FROM kept2),
-rtok AS (SELECT doc_id, unnest(toks) AS tok FROM rbase),
-rtop AS (
-  SELECT doc_id, MAX(c) AS top_c, CAST(SUM(c) AS BIGINT) AS n_tok FROM (
-    SELECT doc_id, tok, COUNT(*) AS c FROM rtok GROUP BY doc_id, tok
-  ) t GROUP BY doc_id
-),
-rarr AS (
-  SELECT doc_id,
-         CASE WHEN len(toks) >= 3 THEN
-           1.0 - CAST(len(list_distinct(g.grams)) AS DOUBLE) / len(g.grams)
-         ELSE 0.0 END AS dup3
-  FROM rbase,
-       LATERAL (SELECT list_transform(generate_series(1, len(toks)-2),
-                i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]) AS grams) g
-),
+
+# The curation gates, in ladder order: the Gopher repetition gate
+# (kept2 → kept3), the 5-gram benchmark-contamination gate (kept3 →
+# kept4), the bigram-LM typicality gate at 32800 of 10^6, the model
+# trained on the surviving corpus (kept4 → kept5).
+_CURATION_GATES = (
+    _repetition_ctes("kept2", "r") + """,
 rflag AS (
   SELECT t.doc_id FROM rtop t JOIN rarr a USING (doc_id)
-  WHERE CAST(t.top_c AS DOUBLE) / t.n_tok > 0.2 OR a.dup3 > 0.3
+  WHERE CAST(t.top_c AS DOUBLE) / t.n_tok > 0.2 OR a.dup_3gram_frac > 0.3
 ),
-kept3 AS (SELECT * FROM kept2 WHERE doc_id NOT IN (SELECT doc_id FROM rflag)),
-ctoks AS (SELECT doc_id, string_split(text, ' ') AS t FROM kept3),
-cgrams AS (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id,
-           unnest(list_transform(generate_series(1, len(t)-4),
-                  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4])) AS shingle
-    FROM ctoks) u
-  WHERE shingle IS NOT NULL
-),
-bgrams AS (
-  SELECT DISTINCT shingle FROM (
-    SELECT unnest(list_transform(generate_series(1, len(t)-4),
-           i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || t[i+4])) AS shingle
-    FROM (SELECT string_split(text, ' ') AS t FROM documents WHERE doc_id % 10 = 7) b
-  ) u WHERE shingle IS NOT NULL
-),
-ctot AS (SELECT doc_id, COUNT(*) AS n_grams FROM cgrams GROUP BY doc_id),
-chit AS (SELECT g.doc_id, COUNT(*) AS hit FROM cgrams g JOIN bgrams USING (shingle) GROUP BY g.doc_id),
+kept3 AS (SELECT * FROM kept2 WHERE doc_id NOT IN (SELECT doc_id FROM rflag))""",
+    _shingles("kept3", 5, "c") + """,
+bdocs AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 7),
+""" + _shingles("bdocs", 5, "b") + """,
+bgrams AS (SELECT DISTINCT shingle FROM bsh),
+ctot AS (SELECT doc_id, COUNT(*) AS n_grams FROM csh GROUP BY doc_id),
+chit AS (SELECT g.doc_id, COUNT(*) AS hit FROM csh g JOIN bgrams USING (shingle) GROUP BY g.doc_id),
 cflag AS (
   SELECT h.doc_id FROM chit h JOIN ctot t USING (doc_id)
   WHERE FLOOR(CAST(h.hit AS DOUBLE) / t.n_grams * 10000) / 10000 >= 0.2
 ),
-kept4 AS MATERIALIZED (SELECT * FROM kept3 WHERE doc_id NOT IN (SELECT doc_id FROM cflag)),
-"""
-# r15: the curation_pipeline / _v2 / _v3 faces were RETIRED from the
-# registry (VERDICT r14 #2, registry consolidation) — curation_pipeline_v4
-# remains the driver face for the composition ladder. These oracle entries
-# REMAIN on purpose: tests/test_curation_parity.py re-runs the full former
-# driver check (Spark vs DuckDB, count+schema+values) against them at both
-# gate scales every round. oracle_sql() filters by QUERIES membership, so
-# the driver never sees them.
-_v1_head, _v1_tail = ORACLES["curation_pipeline"].split("qual AS (", 1)
-ORACLES["curation_pipeline_v2"] = (
-    _v1_head + _V2_GATES + "qual AS (" + _v1_tail.replace("FROM kept2", "FROM kept4")
+kept4 AS MATERIALIZED (SELECT * FROM kept3 WHERE doc_id NOT IN (SELECT doc_id FROM cflag))""",
+    _bigram_lm_ctes("kept4", "lm") + """,
+kept5 AS (
+  SELECT * FROM kept4
+  WHERE doc_id NOT IN (SELECT doc_id FROM lmscores WHERE lm_score_q < 32800)
+)""",
 )
 
-# v3 = v2 + the bigram-LM typicality gate (threshold 32800 of 10^6): the
-# model is trained on the surviving corpus (kept4) and low-typicality docs
-# are dropped before scoring. Mirrors extensions/text.py:bigram_lm_scores.
-_V3_LM_GATE = """lmtok AS (
-  SELECT doc_id, string_split(text, ' ') AS t FROM kept4
-  WHERE len(string_split(text, ' ')) >= 2
-),
-lmpairs AS (
-  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
-  FROM lmtok, unnest(range(1, len(t))) AS u(i)
-),
-lmc2 AS (SELECT w1, w2, COUNT(*) AS c2 FROM lmpairs GROUP BY w1, w2),
-lmc1 AS (SELECT w1, SUM(c2) AS c1 FROM lmc2 GROUP BY w1),
-lmprobs AS (
-  SELECT lmc2.w1, lmc2.w2, (lmc2.c2 * 1000000) // lmc1.c1 AS p_q
-  FROM lmc2 JOIN lmc1 USING (w1)
-),
-lmscore AS (
-  SELECT p.doc_id, SUM(pr.p_q) // COUNT(*) AS s
-  FROM lmpairs p JOIN lmprobs pr ON pr.w1 = p.w1 AND pr.w2 = p.w2
-  GROUP BY p.doc_id
-),
-lmflag AS (SELECT doc_id FROM lmscore WHERE s < 32800),
-kept5 AS (SELECT * FROM kept4 WHERE doc_id NOT IN (SELECT doc_id FROM lmflag)),
-"""
-ORACLES["curation_pipeline_v3"] = (
-    _v1_head + _V2_GATES + _V3_LM_GATE + "qual AS ("
-    + _v1_tail.replace("FROM kept2", "FROM kept5")
+
+def _curation_oracle(
+    fixture: str, src: str, n_gates: int, line_trim: bool = False
+) -> str:
+    """The curation ladder over fixture CTE ``src``: exact dedup (min-id
+    keeper per md5) → with ``line_trim`` the corpus-wide line-dedup trim
+    (emptied docs dropped, every later stage reads the cleaned text) →
+    MinHash near-dup removal → the first ``n_gates`` curation gates →
+    per predicted language, the docs with quality_r >= 0.5."""
+    dd = "keptL" if line_trim else "kept"
+    stages = [
+        fixture,
+        f"""eh AS (SELECT md5(text) AS th, MIN(doc_id) AS keeper FROM {src} GROUP BY 1),
+kept AS (
+  SELECT d.doc_id, d.text FROM {src} d
+  JOIN eh ON md5(d.text) = eh.th AND d.doc_id = eh.keeper
+)""",
+    ]
+    if line_trim:
+        stages.append(_line_dedup_ctes("kept", "l") + f""",
+keptL AS MATERIALIZED (
+  SELECT doc_id, {_LINES_REBUILT} AS text
+  FROM lkept GROUP BY doc_id
+)""")
+    stages += [
+        _minhash_pair_ctes(dd),
+        f"""kept2 AS MATERIALIZED (
+  SELECT * FROM {dd} WHERE doc_id NOT IN (SELECT id_b FROM mh_pairs)
+)""",
+        *_CURATION_GATES[:n_gates],
+    ]
+    last = f"kept{2 + n_gates}"
+    return q(
+        *stages,
+        f"""qual AS (SELECT doc_id, {_quality_sql()} AS quality_r FROM {last}),
+{_lang_id_ctes(last)},
+tokc AS (
+  SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS ws_tokens
+  FROM {last}
+)""",
+        select="""
+SELECT p.pred_lang,
+       COUNT(*) AS n_docs,
+       CAST(SUM(t.ws_tokens) AS BIGINT) AS total_ws_tokens,
+       FLOOR(CAST(SUM(CAST(q.quality_r AS DECIMAL(18,4))) AS DOUBLE)
+             / COUNT(*) * 10000) / 10000 AS avg_quality_r
+FROM qual q
+JOIN lang_pick p USING (doc_id)
+JOIN tokc t USING (doc_id)
+WHERE q.quality_r >= 0.5
+GROUP BY p.pred_lang
+""",
+    )
+
+
+# curation_pipeline_v4 is the registry face of the ladder. The first three
+# rungs are not registry faces; tests/test_curation_parity.py re-runs the
+# full Spark-vs-DuckDB check (count + schema + values) against them at
+# both gate scales, and oracle_sql() serves only QUERIES members, so the
+# correctness gate never sees them.
+ORACLES["curation_pipeline"] = _curation_oracle(DOCUMENTS_AUG, "docs_aug", 0)
+ORACLES["curation_pipeline_v2"] = _curation_oracle(DOCUMENTS_AUG, "docs_aug", 2)
+ORACLES["curation_pipeline_v3"] = _curation_oracle(DOCUMENTS_AUG, "docs_aug", 3)
+ORACLES["curation_pipeline_v4"] = _curation_oracle(
+    DOCUMENTS_FOOTERS, "docs_f", 3, line_trim=True
 )
 
-# line-dedup TRIM face (r11): identical first-global-occurrence chain to
-# text_line_dedup, but rebuilt emits the reassembled surviving TEXT itself
-# (NULL for emptied-out docs) instead of its md5 — the cleaned corpus.
-ORACLES["text_line_dedup_trim"] = """
-WITH docs_f AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 97 = 0 THEN 'shared boilerplate footer'
-              WHEN doc_id % 5 = 0
-              THEN text || chr(10) || 'shared boilerplate footer'
-              WHEN doc_id % 5 = 1
-              THEN text || chr(10) || 'shared boilerplate footer'
-                   || chr(10) || 'second shared footer'
-              WHEN doc_id % 5 = 2
-              THEN 'shared boilerplate footer' || chr(10) || text
-              ELSE text END AS text
-  FROM documents
-),
-lines AS (
-  SELECT doc_id, CAST(u.i - 1 AS INT) AS ln, l[u.i] AS line
-  FROM (SELECT doc_id, string_split(text, chr(10)) AS l FROM docs_f) t,
-       unnest(range(1, len(l) + 1)) AS u(i)
-),
-totals AS (
+
+def _line_dedup_oracle(rebuilt: str, col: str) -> str:
+    """Corpus-wide line dedup over the footer fixture: per doc its line
+    count, kept-line count and the kept lines rebuilt in order, as
+    ``rebuilt`` named ``col`` (NULL for an emptied doc). string_agg ORDER
+    BY ln rebuilds the surviving text; md5 on the (ASCII) rebuild mirrors
+    Spark's binary md5."""
+    return q(
+        DOCUMENTS_FOOTERS,
+        _line_dedup_ctes("docs_f"),
+        f"""totals AS (
   SELECT doc_id, COUNT(*) AS n_lines FROM lines GROUP BY doc_id
 ),
-f1 AS (SELECT line, MIN(doc_id) AS fdoc FROM lines GROUP BY line),
-f2 AS (
-  SELECT l.line, l.doc_id AS fdoc, MIN(l.ln) AS fln
-  FROM lines l JOIN f1 ON f1.line = l.line AND l.doc_id = f1.fdoc
-  GROUP BY l.line, l.doc_id
-),
-kept AS (
-  SELECT l.doc_id, l.ln, l.line
-  FROM lines l JOIN f2
-    ON f2.line = l.line AND l.doc_id = f2.fdoc AND l.ln = f2.fln
-),
 rebuilt AS (
-  SELECT doc_id, COUNT(*) AS n_kept,
-         string_agg(line, chr(10) ORDER BY ln) AS text_kept
+  SELECT doc_id, COUNT(*) AS n_kept, {rebuilt} AS {col}
   FROM kept GROUP BY doc_id
-)
+)""",
+        select=f"""
 SELECT t.doc_id, t.n_lines,
        COALESCE(r.n_kept, 0) AS n_kept,
-       r.text_kept
+       r.{col}
 FROM totals t LEFT JOIN rebuilt r ON r.doc_id = t.doc_id
-"""
+""",
+    )
 
-# PII scrub (r11; r12 adds the Luhn card stage + the null-text rule):
-# the staged count-then-replace chain — each class's count is taken on
-# the PREVIOUS stage's text (emails mask their host parts from the IP
-# stage), replacement is global ('g'). The CARD stage replays the
+
+ORACLES["text_line_dedup"] = _line_dedup_oracle(f"md5({_LINES_REBUILT})", "kept_md5")
+ORACLES["text_line_dedup_trim"] = _line_dedup_oracle(_LINES_REBUILT, "text_kept")
+
+# PII scrub: the staged count-then-replace chain — each class's count is
+# taken on the previous stage's text (emails mask their host parts from
+# the IP stage), replacement is global ('g'). The card stage replays the
 # Spark-side semantics exactly: extract 16-digit candidates, keep only
 # those passing the Luhn mod-10 check, count the valid matches, then
 # fold-replace each valid candidate \b-anchored in match order
@@ -2678,6 +2556,7 @@ sC AS (
   FROM cards
 )"""
 
+# docs_p mirrors fixtures.build_documents_pii
 ORACLES["text_pii_scrub"] = r"""
 WITH docs_p AS (
   SELECT doc_id,
@@ -2724,74 +2603,6 @@ SELECT doc_id, n_emails, n_cards, n_phones,
          AS text_scrubbed
 FROM s2
 """
-
-# curation v4 (r11) = v3 with (a) the footer-injected fixture replacing the
-# dup-injected one and (b) the C4 LINE-dedup TRIM stage inserted between
-# exact dedup (kept) and the MinHash chain: corpus-repeated lines cut to
-# their first global occurrence, emptied docs dropped (absent from keptL),
-# and every later stage — shingles, gates, scoring — consumes the CLEANED
-# text. Assembled from the v1/v2/v3 SQL so shared stages cannot drift.
-_V4_FIXTURE = """docs_aug AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 97 = 0 THEN 'shared boilerplate footer'
-              WHEN doc_id % 5 = 0
-              THEN text || chr(10) || 'shared boilerplate footer'
-              WHEN doc_id % 5 = 1
-              THEN text || chr(10) || 'shared boilerplate footer'
-                   || chr(10) || 'second shared footer'
-              WHEN doc_id % 5 = 2
-              THEN 'shared boilerplate footer' || chr(10) || text
-              ELSE text END AS text
-  FROM documents
-),
-"""
-_V4_LINE_STAGE = """llines AS (
-  SELECT doc_id, CAST(u.i - 1 AS INT) AS ln, l[u.i] AS line
-  FROM (SELECT doc_id, string_split(text, chr(10)) AS l FROM kept) t,
-       unnest(range(1, len(l) + 1)) AS u(i)
-),
-lf1 AS (SELECT line, MIN(doc_id) AS fdoc FROM llines GROUP BY line),
-lf2 AS (
-  SELECT l.line, l.doc_id AS fdoc, MIN(l.ln) AS fln
-  FROM llines l JOIN lf1 ON lf1.line = l.line AND l.doc_id = lf1.fdoc
-  GROUP BY l.line, l.doc_id
-),
-lkept AS (
-  SELECT l.doc_id, l.ln, l.line
-  FROM llines l JOIN lf2
-    ON lf2.line = l.line AND l.doc_id = lf2.fdoc AND l.ln = lf2.fln
-),
-keptL AS MATERIALIZED (
-  SELECT doc_id, string_agg(line, chr(10) ORDER BY ln) AS text
-  FROM lkept GROUP BY doc_id
-),
-"""
-_V1_FIXTURE = """docs_aug AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 100000, text FROM documents WHERE doc_id % 10 = 7
-  UNION ALL
-  SELECT doc_id + 200000, substr(text, strpos(text, ' ') + 1)
-  FROM documents WHERE doc_id % 10 = 3
-),
-"""
-_V1_TOKS = "toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM kept),"
-_V1_KEPT2 = "FROM kept WHERE doc_id NOT IN (SELECT id_b FROM nd_pairs)"
-for _needle in (_V1_FIXTURE, _V1_TOKS, _V1_KEPT2):
-    assert _v1_head.count(_needle) == 1, f"v4 oracle surgery drifted: {_needle[:40]!r}"
-_v4_head = (
-    _v1_head.replace(_V1_FIXTURE, _V4_FIXTURE)
-    .replace(
-        _V1_TOKS,
-        _V4_LINE_STAGE
-        + "toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM keptL),",
-    )
-    .replace(_V1_KEPT2, "FROM keptL WHERE doc_id NOT IN (SELECT id_b FROM nd_pairs)")
-)
-ORACLES["curation_pipeline_v4"] = (
-    _v4_head + _V2_GATES + _V3_LM_GATE + "qual AS ("
-    + _v1_tail.replace("FROM kept2", "FROM kept5")
-)
 
 
 def _bpe_merges_oracle(n_rounds: int) -> str:
@@ -2849,7 +2660,7 @@ ORACLES["text_bpe_merges"] = _bpe_merges_oracle(5)
 
 
 def _bpe_encode_oracle(n_rounds: int) -> str:
-    """Encode-stats replay: the SAME fitted chain (the final s{n} CTE is
+    """Encode-stats replay: the same fitted chain (the final s{n} CTE is
     the per-distinct-token segmentation), joined back onto the corpus
     token stream and aggregated per document."""
     chain = _bpe_merges_oracle(n_rounds)
@@ -2878,73 +2689,87 @@ GROUP BY d.doc_id
 
 
 ORACLES["text_bpe_encode"] = _bpe_encode_oracle(5)
+# Tokenizer artifact round trip: the parquet write/read of the merge table
+# is invisible to results (encode-from-artifact is bit-equal to
+# fit-then-encode, property-pinned), so the oracle is the encode oracle.
+ORACLES["text_bpe_vocab_roundtrip"] = ORACLES["text_bpe_encode"]
 
 
-def _cos6_sql(a: str, b: str) -> str:
-    """6-dp-rounded cosine of two DOUBLE[] columns, left-fold order — the
-    shared arithmetic of every knn graph oracle."""
-    def dot(x: str, y: str) -> str:
-        return (
-            f"list_reduce(list_transform(generate_series(1, len({x})), "
-            f"i -> {x}[i]*{y}[i]), (p,q) -> p+q)"
-        )
-
-    return (
-        f"ROUND({dot(a, b)} / (sqrt({dot(a, a)}) * sqrt({dot(b, b)})), 6)"
-    )
-
-
-# Recall@10 of the multiprobe ANN graph vs exact all-pairs truth: both
-# sides replayed with identical arithmetic and (cos DESC, neighbor ASC)
-# tie-breaks, so n_hit/n_true is exact, not approximate.
-ORACLES["sim_recall_probe"] = (
-    """
-WITH ev AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-),
-"""
-    + KMEANS_CTES_MULTIPROBE
-    + ","
-    + _kmeans_assign_topn("cents_final", "assign_probe", 2)
-    + f""",
-ann_scored AS (
+def _recall_ctes(only: str = "", mat: str = "") -> str:
+    """similarity.ann_recall_at_k: each vector's top 10 by the multiprobe
+    ANN graph (``ann_k``) and by exact all-pairs cosine (``truth_k``),
+    both with (cos DESC, neighbor ASC) tie-breaks, so n_hit/n_true is
+    exact; ``only`` restricts the query side."""
+    return f"""ann_scored AS{mat} (
   SELECT DISTINCT a.vec_id, b.vec_id AS neighbor_id,
-         {_cos6_sql('a.v', 'b.v')} AS cos_r
+         {_cos6_sql("a.v", "b.v")} AS cos_r
   FROM assign_probe a JOIN assign_probe b
-    ON a.cid = b.cid AND a.vec_id <> b.vec_id
+    ON a.cid = b.cid AND a.vec_id <> b.vec_id{only}
 ),
-ann_k AS (
+ann_k AS{mat} (
   SELECT vec_id, neighbor_id FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                 ORDER BY cos_r DESC, neighbor_id) AS rn
-    FROM ann_scored) t
+    {_knn_ranked("ann_scored")}) t
   WHERE rn <= 10
 ),
-truth_scored AS (
+truth_scored AS{mat} (
   SELECT a.vec_id, b.vec_id AS neighbor_id,
-         {_cos6_sql('a.v', 'b.v')} AS cos_r
-  FROM ev a JOIN ev b ON a.vec_id <> b.vec_id
+         {_cos6_sql("a.v", "b.v")} AS cos_r
+  FROM ev a JOIN ev b ON a.vec_id <> b.vec_id{only}
 ),
-truth_k AS (
+truth_k AS{mat} (
   SELECT vec_id, neighbor_id FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                 ORDER BY cos_r DESC, neighbor_id) AS rn
-    FROM truth_scored) t
+    {_knn_ranked("truth_scored")}) t
   WHERE rn <= 10
-)
+)"""
+
+
+_RECALL_R = """FLOOR((CAST(COUNT(a.neighbor_id) AS DOUBLE) / COUNT(*)) * 10000)
+         / 10000 AS recall_r"""
+
+ORACLES["sim_recall_probe"] = q(
+    EV, MULTIPROBE_CTES, _recall_ctes(),
+    select=f"""
 SELECT t.vec_id, COUNT(*) AS n_true, COUNT(a.neighbor_id) AS n_hit,
-       FLOOR((CAST(COUNT(a.neighbor_id) AS DOUBLE) / COUNT(*)) * 10000)
-         / 10000 AS recall_r
+       {_RECALL_R}
 FROM truth_k t LEFT JOIN ann_k a
   ON a.vec_id = t.vec_id AND a.neighbor_id = t.neighbor_id
 GROUP BY t.vec_id
-"""
+""",
 )
 
+# Sampled recall probe: a deterministic 5-per-label KMV probe set; exact
+# truth for the probes only (one-sided vs the full corpus). Per-probe rows
+# carry the stratum for the per-label aggregate.
+ORACLES["sim_recall_probe_sampled"] = q(
+    """ev AS MATERIALIZED (
+  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+)""",
+    f"""probes AS MATERIALIZED (
+  SELECT label, vec_id FROM (
+    SELECT label, vec_id,
+           ROW_NUMBER() OVER (PARTITION BY label
+                              ORDER BY {poly_hash_mixed_sql("vec_id")}, vec_id) AS rn
+    FROM ev) t
+  WHERE rn <= 5
+)""",
+    MULTIPROBE_CTES,
+    _recall_ctes(
+        "\n  WHERE a.vec_id IN (SELECT vec_id FROM probes)", " MATERIALIZED"
+    ),
+    select=f"""
+SELECT t.vec_id, p.label, COUNT(*) AS n_true, COUNT(a.neighbor_id) AS n_hit,
+       {_RECALL_R}
+FROM truth_k t
+JOIN probes p ON p.vec_id = t.vec_id
+LEFT JOIN ann_k a
+  ON a.vec_id = t.vec_id AND a.neighbor_id = t.neighbor_id
+GROUP BY t.vec_id, p.label
+""",
+)
 
-ORACLES["text_sample_fixed_k"] = """
+ORACLES["text_sample_fixed_k"] = f"""
 WITH h AS (
-  SELECT source, doc_id, {POLY_HASH_DOC} AS hh FROM documents
+  SELECT source, doc_id, {poly_hash_mixed_sql("doc_id")} AS hh FROM documents
 ),
 r AS (
   SELECT source, doc_id,
@@ -2952,75 +2777,38 @@ r AS (
   FROM h
 )
 SELECT source, doc_id, CAST(rn AS BIGINT) AS sample_rank FROM r WHERE rn <= 5
-""".replace("{POLY_HASH_DOC}", poly_hash_mixed_sql("doc_id"))
-
-
-ORACLES["dedup_ingest_incremental"] = """
-WITH b1 AS (
-  SELECT doc_id, COALESCE(text, '') AS t FROM documents WHERE doc_id % 3 < 2
-),
-b2 AS (
-  SELECT doc_id, COALESCE(text, '') AS t FROM documents WHERE doc_id % 3 = 2
-  UNION ALL
-  SELECT doc_id + 100000, COALESCE(text, '') FROM documents WHERE doc_id % 10 = 7
-),
-s1 AS (SELECT DISTINCT md5(t) AS h FROM b1),
-k2 AS (SELECT md5(t) AS h, MIN(doc_id) AS doc_id FROM b2 GROUP BY md5(t))
-SELECT k2.doc_id, k2.h AS text_hash
-FROM k2 LEFT JOIN s1 ON s1.h = k2.h
-WHERE s1.h IS NULL
 """
 
+# fixtures.exact_ingest_split
+_EXACT_INGEST = _ingest_split("docs0", "doc_id", "text", 7)
 
-ORACLES["text_lm_score"] = '''
-WITH pairs AS (
-  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
-  FROM (
-    SELECT doc_id, string_split(text, ' ') AS t FROM documents
-    WHERE len(string_split(text, ' ')) >= 2
-  ), unnest(range(1, len(t))) AS u(i)
-),
-c2 AS (SELECT w1, w2, COUNT(*) AS c2 FROM pairs GROUP BY w1, w2),
-c1 AS (SELECT w1, SUM(c2) AS c1 FROM c2 GROUP BY w1),
-probs AS (
-  SELECT c2.w1, c2.w2, (c2.c2 * 1000000) // c1.c1 AS p_q
-  FROM c2 JOIN c1 USING (w1)
+ORACLES["dedup_ingest_incremental"] = q(
+    _DOCS_NONNULL, _EXACT_INGEST, _novel_keepers("md5(text)"),
+    select="SELECT doc_id, h AS text_hash FROM keep1n",
 )
-SELECT p.doc_id, COUNT(*) AS n_bigrams,
-       CAST(SUM(pr.p_q) // COUNT(*) AS BIGINT) AS lm_score_q
-FROM pairs p JOIN probs pr ON pr.w1 = p.w1 AND pr.w2 = p.w2
-GROUP BY p.doc_id
-'''
 
+# Streaming face of the incremental ingest: drained state == batch answer,
+# so the oracle is the batch SQL with the keeper/copy-count shape.
+ORACLES["stream_ingest_novel"] = q(
+    _DOCS_NONNULL, _EXACT_INGEST, _novel_keepers("md5(text)"),
+    select="SELECT h AS text_hash, doc_id AS keeper_id, n_copies FROM keep1n",
+)
 
-# CCNet head/middle/tail typicality terciles (r10): the lm CTE chain is
-# text_lm_score's verbatim; cutoffs are nearest-rank k-th largest scores
-# found on the collapsed (lang, score) distribution (cum is a ROWS window
-# over DISTINCT scores, so RANGE-vs-ROWS tie semantics cannot differ);
-# buckets by integer score-vs-cutoff comparison — tied scores share a
-# bucket on both engines by construction.
-ORACLES["text_lm_buckets"] = '''
-WITH pairs AS (
-  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
-  FROM (
-    SELECT doc_id, string_split(text, ' ') AS t FROM documents
-    WHERE len(string_split(text, ' ')) >= 2
-  ), unnest(range(1, len(t))) AS u(i)
-),
-c2 AS (SELECT w1, w2, COUNT(*) AS c2 FROM pairs GROUP BY w1, w2),
-c1 AS (SELECT w1, SUM(c2) AS c1 FROM c2 GROUP BY w1),
-probs AS (
-  SELECT c2.w1, c2.w2, (c2.c2 * 1000000) // c1.c1 AS p_q
-  FROM c2 JOIN c1 USING (w1)
-),
-lm AS (
-  SELECT p.doc_id, CAST(SUM(pr.p_q) // COUNT(*) AS BIGINT) AS lm_score_q
-  FROM pairs p JOIN probs pr ON pr.w1 = p.w1 AND pr.w2 = p.w2
-  GROUP BY p.doc_id
-),
-scored AS (
+ORACLES["text_lm_score"] = q(
+    _bigram_lm_ctes("documents"),
+    select="SELECT doc_id, n_bigrams, lm_score_q FROM scores",
+)
+
+# CCNet head/middle/tail typicality terciles: cutoffs are nearest-rank
+# k-th largest scores found on the collapsed (lang, score) distribution
+# (cum is a window over distinct scores, so RANGE-vs-ROWS tie semantics
+# cannot differ); buckets by integer score-vs-cutoff comparison — tied
+# scores share a bucket on both engines by construction.
+ORACLES["text_lm_buckets"] = q(
+    _bigram_lm_ctes("documents"),
+    """scored AS (
   SELECT s.doc_id, d.lang, s.lm_score_q
-  FROM lm s JOIN documents d ON d.doc_id = s.doc_id
+  FROM scores s JOIN documents d ON d.doc_id = s.doc_id
 ),
 dist AS (
   SELECT lang, lm_score_q, COUNT(*) AS c FROM scored GROUP BY lang, lm_score_q
@@ -3036,38 +2824,23 @@ cuts AS (
          MAX(CASE WHEN cum >= (n + 2) // 3 THEN lm_score_q END) AS cut1,
          MAX(CASE WHEN cum >= (2 * n + 2) // 3 THEN lm_score_q END) AS cut2
   FROM cum GROUP BY lang
-)
+)""",
+    select="""
 SELECT s.doc_id, s.lang, s.lm_score_q,
        CASE WHEN s.lm_score_q >= c.cut1 THEN 'head'
             WHEN s.lm_score_q >= c.cut2 THEN 'middle'
             ELSE 'tail' END AS bucket
 FROM scored s JOIN cuts c ON c.lang = s.lang
-'''
+""",
+)
 
-
-# Adaptive percentile quality gate: nearest-rank k-th smallest fused
-# quality (k = ceil(n*50/1000), integer arithmetic) as the cutoff; ties at
-# the cutoff survive. quality arithmetic mirrors fused_doc_scores exactly
-# (same formula as the curation oracles' qual CTE). NULL text scores as ''
-# (r9 advice — otherwise the engines order NULL quality to opposite ends
-# of the rank and the cutoff diverges).
-ORACLES["text_quality_gate"] = '''
-WITH docs0 AS (
-  SELECT doc_id, COALESCE(text, '') AS text FROM documents
-),
-q AS (
-  SELECT doc_id,
-         FLOOR((
-           0.4 * LEAST(1.0, len(string_split(text, ' ')) / 100.0)
-           + 0.3 * (1.0 - CAST(len(list_filter(string_split(text, ' '),
-                        t -> t IN ('the','a','of','and','is','to','in'))) AS DOUBLE)
-                    / len(string_split(text, ' ')))
-           + 0.3 * LEAST(1.0,
-               ((length(text) - (len(string_split(text, ' ')) - 1))
-                / CAST(len(string_split(text, ' ')) AS DOUBLE)) / 8.0)
-           ) * 10000) / 10000 AS quality_r
-  FROM docs0
-),
+# Adaptive percentile quality gate: nearest-rank k-th smallest quality
+# (k = ceil(n*50/1000), integer arithmetic) as the cutoff; ties at the
+# cutoff survive. NULL text scores as '' (otherwise the engines order a
+# NULL quality to opposite ends of the rank and the cutoff diverges).
+ORACLES["text_quality_gate"] = q(
+    _DOCS_NONNULL,
+    f"""q AS (SELECT doc_id, {_quality_sql()} AS quality_r FROM docs0),
 ranked AS (
   SELECT quality_r,
          ROW_NUMBER() OVER (ORDER BY quality_r ASC, doc_id ASC) AS rn
@@ -3076,143 +2849,38 @@ ranked AS (
 kk AS (
   SELECT GREATEST(1, (COUNT(*) * 50 + 999) // 1000) AS k FROM q
 ),
-cutoff AS (SELECT r.quality_r AS cutoff_r FROM ranked r, kk WHERE r.rn = kk.k)
+cutoff AS (SELECT r.quality_r AS cutoff_r FROM ranked r, kk WHERE r.rn = kk.k)""",
+    select="""
 SELECT q.doc_id, q.quality_r, c.cutoff_r
 FROM q CROSS JOIN cutoff c
 WHERE q.quality_r >= c.cutoff_r
-'''
-
-
-# Streaming face of the incremental ingest: drained state == batch answer,
-# so the oracle is the batch SQL with the keeper/copy-count shape.
-ORACLES["stream_ingest_novel"] = '''
-WITH b1 AS (
-  SELECT doc_id, COALESCE(text, '') AS t FROM documents WHERE doc_id % 3 < 2
-),
-b2 AS (
-  SELECT doc_id, COALESCE(text, '') AS t FROM documents WHERE doc_id % 3 = 2
-  UNION ALL
-  SELECT doc_id + 100000, COALESCE(text, '') FROM documents WHERE doc_id % 10 = 7
-),
-s1 AS (SELECT DISTINCT md5(t) AS text_hash FROM b1),
-k2 AS (
-  SELECT md5(t) AS text_hash, MIN(doc_id) AS keeper_id, COUNT(*) AS n_copies
-  FROM b2 GROUP BY md5(t)
+""",
 )
-SELECT k2.text_hash, k2.keeper_id, k2.n_copies
-FROM k2 LEFT JOIN s1 ON s1.text_hash = k2.text_hash
-WHERE s1.text_hash IS NULL
-'''
 
 
-def _mh_band_ctes(src: str, p: str) -> str:
-    """MinHash shingle/signature/band-key CTE chain over docs CTE ``src``
-    (columns doc_id, text), prefixed ``p`` — the parametrized form of
-    MINHASH_PAIR_CTES' front half, shared by the near-dup ingest oracle's
-    history and batch sides. Constants in lockstep with extensions/dedup.py
-    (12 hashes, 4 bands of 3, P=8191, poly sid hash)."""
-    return f"""{p}toks AS MATERIALIZED (SELECT doc_id, string_split(text, ' ') AS t FROM {src}),
-{p}sh AS MATERIALIZED (
-  SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id,
-           unnest(list_transform(generate_series(1, len(t)-2),
-                  i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS shingle
-    FROM {p}toks) u
-  WHERE shingle IS NOT NULL
-),
-{p}shid AS MATERIALIZED (
-  SELECT doc_id,
-         CASE WHEN length(shingle) = 0 THEN 0 ELSE
-           list_reduce(list_transform(generate_series(1, length(shingle)),
-                       i -> ord(substr(shingle, i, 1)) % 8191),
-                       (h, c) -> (h*31 + c) % 8191) END AS sid
-  FROM {p}sh
-),
-{p}hashes AS MATERIALIZED (
-  SELECT doc_id, j, MIN(((2*j+3)*sid + 5*j+7) % 8191) AS mh
-  FROM {p}shid CROSS JOIN (SELECT unnest(generate_series(0, 11)) AS j) js
-  GROUP BY doc_id, j
-),
-{p}bandkeys AS MATERIALIZED (
-  SELECT doc_id, j // 3 AS band,
-         STRING_AGG(CAST(mh AS VARCHAR), '_' ORDER BY j) AS bkey
-  FROM {p}hashes GROUP BY doc_id, j // 3
-)"""
-
-
-def _greedy_mis_round(prev: str, cur: str) -> str:
-    """One unrolled round of the sequential-arrival greedy admission
-    (extensions/ingest_kernel.py:greedy_admit): statuses are final once
-    decided;
-    a node is Rejected when an Admitted lower near-dup neighbor exists,
-    Admitted when every lower neighbor is Rejected (vacuously true for
-    none), else still Undecided."""
-    return f"""{cur} AS MATERIALIZED (
-  SELECT p.node, CASE
-    WHEN p.st <> 'U' THEN p.st
-    WHEN EXISTS (SELECT 1 FROM mis_edges e JOIN {prev} q ON q.node = e.lo
-                 WHERE e.hi = p.node AND q.st = 'A') THEN 'R'
-    WHEN NOT EXISTS (SELECT 1 FROM mis_edges e JOIN {prev} q ON q.node = e.lo
-                     WHERE e.hi = p.node AND q.st <> 'R') THEN 'A'
-    ELSE 'U' END AS st
-  FROM {prev} p)"""
-
-
-# Incremental NEAR-dup ingest (r9): history digests + band-key state;
-# batch = fresh slice + exact redeliveries + near-dup variants. Phase 1
-# exact (keeper min-id per digest, anti-join history digests); phase 2
-# band-collision candidates vs history, exact-Jaccard-verified at 0.6;
-# phase 3 within-batch candidates under sequential-arrival greedy
-# admission, unrolled 8 rounds (the query pins mis_max_iter=8 so a graph
-# needing more rounds fails LOUDLY on the Spark side instead of
-# diverging silently).
-ORACLES["dedup_ingest_neardup"] = (
-    """
-WITH hist AS (
-  SELECT doc_id, COALESCE(text, '') AS text FROM documents WHERE doc_id % 3 < 2
-),
-batch AS MATERIALIZED (
-  SELECT doc_id, COALESCE(text, '') AS text FROM documents WHERE doc_id % 3 = 2
-  UNION ALL
-  SELECT doc_id + 100000, COALESCE(text, '') FROM documents WHERE doc_id % 10 = 7
-  UNION ALL
-  SELECT doc_id + 200000, COALESCE(substr(text, strpos(text, ' ') + 1), '')
-  FROM documents WHERE doc_id % 10 = 3
-),
-hist_dg AS MATERIALIZED (SELECT DISTINCT md5(text) AS h FROM hist),
-keep1 AS MATERIALIZED (
-  SELECT md5(text) AS h, MIN(doc_id) AS doc_id FROM batch GROUP BY md5(text)
-),
-keep1n AS MATERIALIZED (
-  SELECT k.h, k.doc_id FROM keep1 k LEFT JOIN hist_dg s ON s.h = k.h
-  WHERE s.h IS NULL
-),
-kept AS MATERIALIZED (
-  SELECT b.doc_id, b.text FROM batch b JOIN keep1n k ON k.doc_id = b.doc_id
-),
-"""
-    + _mh_band_ctes("kept", "b_")
-    + ",\n"
-    + _mh_band_ctes("hist", "h_")
-    + """,
-b_sizes AS MATERIALIZED (SELECT doc_id, COUNT(*) AS sz FROM b_sh GROUP BY doc_id),
-h_sizes AS MATERIALIZED (SELECT doc_id, COUNT(*) AS sz FROM h_sh GROUP BY doc_id),
-cand_hist AS MATERIALIZED (
+def _neardup_ingest_oracle(*extra_variants) -> str:
+    """Incremental near-dup ingest (dedup.ingest_novel_neardup) over
+    fixtures.neardup_ingest_split plus ``extra_variants``: history
+    digests + band-key state. Phase 1 exact (keeper min-id per digest,
+    anti-join the history digests); phase 2 band-collision candidates vs
+    history, exact-Jaccard-verified at 0.6; phase 3 within-batch
+    candidates under the greedy admission."""
+    split = _ingest_split(
+        "docs0", "doc_id", "text", 7, (3, 200000, _DROP_FIRST_WORD),
+        *extra_variants,
+    )
+    return q(
+        _DOCS_NONNULL, split, _novel_keepers("md5(text)"),
+        _mh_band_ctes("kept", "b_", " MATERIALIZED"),
+        _mh_band_ctes("hist", "h_", " MATERIALIZED"),
+        f"""cand_hist AS MATERIALIZED (
   SELECT DISTINCT b.doc_id AS bid, h.doc_id AS hid
   FROM b_bandkeys b JOIN h_bandkeys h
     ON b.band = h.band AND b.bkey = h.bkey
 ),
 hist_drop AS MATERIALIZED (
   SELECT DISTINCT bid FROM (
-    SELECT c.bid, c.hid,
-           FLOOR(CAST(COUNT(*) AS DOUBLE)
-                 / (hs.sz + bs.sz - COUNT(*)) * 10000) / 10000 AS jacc_r
-    FROM cand_hist c
-    JOIN h_sh a ON a.doc_id = c.hid
-    JOIN b_sh b ON b.doc_id = c.bid AND b.shingle = a.shingle
-    JOIN h_sizes hs ON hs.doc_id = c.hid
-    JOIN b_sizes bs ON bs.doc_id = c.bid
-    GROUP BY c.bid, c.hid, hs.sz, bs.sz
+    {_jaccard_verify("cand_hist", "hid", "bid", "h_", "b_")}
   ) v WHERE jacc_r >= 0.6
 ),
 kept2 AS MATERIALIZED (
@@ -3228,111 +2896,37 @@ cand_batch AS MATERIALIZED (
 ),
 mis_edges AS MATERIALIZED (
   SELECT id_a AS lo, id_b AS hi FROM (
-    SELECT c.id_a, c.id_b,
-           FLOOR(CAST(COUNT(*) AS DOUBLE)
-                 / (sa.sz + sb.sz - COUNT(*)) * 10000) / 10000 AS jacc_r
-    FROM cand_batch c
-    JOIN b_sh a ON a.doc_id = c.id_a
-    JOIN b_sh b ON b.doc_id = c.id_b AND b.shingle = a.shingle
-    JOIN b_sizes sa ON sa.doc_id = c.id_a
-    JOIN b_sizes sb ON sb.doc_id = c.id_b
-    GROUP BY c.id_a, c.id_b, sa.sz, sb.sz
+    {_jaccard_verify("cand_batch", "id_a", "id_b", "b_", "b_")}
   ) v WHERE jacc_r >= 0.6
-),
-mis_nodes AS MATERIALIZED (
-  SELECT DISTINCT node FROM (
-    SELECT lo AS node FROM mis_edges UNION ALL SELECT hi FROM mis_edges) u
-),
-s0 AS MATERIALIZED (SELECT node, 'U' AS st FROM mis_nodes),
-"""
-    + ",\n".join(_greedy_mis_round(f"s{i}", f"s{i + 1}") for i in range(8))
-    + """,
-admitted AS (
-  SELECT k.doc_id FROM kept2 k
-  WHERE k.doc_id NOT IN (SELECT node FROM mis_nodes)
-  UNION ALL
-  SELECT node AS doc_id FROM s8 WHERE st = 'A'
-)
+)""",
+        _greedy_mis("doc_id"),
+        select="""
 SELECT k.doc_id, k.h AS text_hash
 FROM keep1n k JOIN admitted a ON a.doc_id = k.doc_id
-"""
+""",
+    )
+
+
+ORACLES["dedup_ingest_neardup"] = _neardup_ingest_oracle()
+
+# Multi-wave ingest across compaction: wave-1 + wave-2 admissions equal
+# the one-batch admission of the concatenated stream (greedy batch-split
+# property — arrival respects id order), so the oracle is the one-batch
+# replay of the near-dup batch extended by a novel wave-2 slice
+# (token-reversed %10==6 docs: reversed word order shares no 3-shingle
+# with the original, so they must be admitted through the compacted
+# state). A compaction that lost a digest/band/doc row admits a
+# duplicate; one that fabricated state drops the novel slice — either
+# mismatches.
+ORACLES["dedup_ingest_waves"] = _neardup_ingest_oracle(
+    (6, 300000, "array_to_string(list_reverse(string_split(text, ' ')), ' ')")
 )
 
-
-# Sampled recall probe (r9): deterministic 5-per-label KMV probe set;
-# exact truth computed for probes only (one-sided vs the full corpus);
-# ANN side identical to sim_recall_probe's multiprobe chain. Per-probe
-# rows carry the stratum for the per-label aggregate.
-ORACLES["sim_recall_probe_sampled"] = (
-    """
-WITH ev AS MATERIALIZED (
-  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-),
-probes AS MATERIALIZED (
-  SELECT label, vec_id FROM (
-    SELECT label, vec_id,
-           ROW_NUMBER() OVER (PARTITION BY label
-                              ORDER BY {POLY_HASH_VEC}, vec_id) AS rn
-    FROM ev) t
-  WHERE rn <= 5
-),
-"""
-    + KMEANS_CTES_MULTIPROBE
-    + ","
-    + _kmeans_assign_topn("cents_final", "assign_probe", 2)
-    + f""",
-ann_scored AS MATERIALIZED (
-  SELECT DISTINCT a.vec_id, b.vec_id AS neighbor_id,
-         {_cos6_sql('a.v', 'b.v')} AS cos_r
-  FROM assign_probe a JOIN assign_probe b
-    ON a.cid = b.cid AND a.vec_id <> b.vec_id
-  WHERE a.vec_id IN (SELECT vec_id FROM probes)
-),
-ann_k AS MATERIALIZED (
-  SELECT vec_id, neighbor_id FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                 ORDER BY cos_r DESC, neighbor_id) AS rn
-    FROM ann_scored) t
-  WHERE rn <= 10
-),
-truth_scored AS MATERIALIZED (
-  SELECT a.vec_id, b.vec_id AS neighbor_id,
-         {_cos6_sql('a.v', 'b.v')} AS cos_r
-  FROM ev a JOIN ev b ON a.vec_id <> b.vec_id
-  WHERE a.vec_id IN (SELECT vec_id FROM probes)
-),
-truth_k AS MATERIALIZED (
-  SELECT vec_id, neighbor_id FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                 ORDER BY cos_r DESC, neighbor_id) AS rn
-    FROM truth_scored) t
-  WHERE rn <= 10
-)
-SELECT t.vec_id, p.label, COUNT(*) AS n_true, COUNT(a.neighbor_id) AS n_hit,
-       FLOOR((CAST(COUNT(a.neighbor_id) AS DOUBLE) / COUNT(*)) * 10000)
-         / 10000 AS recall_r
-FROM truth_k t
-JOIN probes p ON p.vec_id = t.vec_id
-LEFT JOIN ann_k a
-  ON a.vec_id = t.vec_id AND a.neighbor_id = t.neighbor_id
-GROUP BY t.vec_id, p.label
-"""
-).replace("{POLY_HASH_VEC}", poly_hash_mixed_sql("vec_id"))
-
-
-# Tokenizer artifact round-trip (r9): the parquet write/read of the merge
-# table is invisible to results (encode-from-artifact is bit-equal to
-# fit-then-encode, the BPE replay property — property-pinned), so the
-# oracle is the encode oracle itself, the recon_orc_roundtrip pattern.
-ORACLES["text_bpe_vocab_roundtrip"] = _bpe_encode_oracle(5)
-
-
-# C4-residual quality signals (r9) over the punctuation-injected fixture:
-# sentences = [.!?]-delimited segments with a non-space char; terminal
-# ratio = terminators per sentence capped at 1; mwps = whitespace tokens
-# per sentence. quality_r mirrors fused_doc_scores (the text_quality_gate
-# oracle's formula).
-ORACLES["text_quality_c4"] = '''
+# C4-residual quality signals over the punctuation-injected fixture
+# (fixtures.build_documents_punct): sentences = [.!?]-delimited segments
+# with a non-space char; terminal ratio = terminators per sentence capped
+# at 1; mwps = whitespace tokens per sentence.
+ORACLES["text_quality_c4"] = f'''
 WITH docs_punct AS (
   SELECT doc_id,
          CASE WHEN doc_id % 3 = 0
@@ -3352,14 +2946,7 @@ sig AS (
   FROM docs_punct
 )
 SELECT doc_id,
-       FLOOR((
-         0.4 * LEAST(1.0, n_tok / 100.0)
-         + 0.3 * (1.0 - CAST(len(list_filter(string_split(text, ' '),
-                      t -> t IN ('the','a','of','and','is','to','in'))) AS DOUBLE)
-                  / n_tok)
-         + 0.3 * LEAST(1.0,
-             ((length(text) - (n_tok - 1)) / CAST(n_tok AS DOUBLE)) / 8.0)
-         ) * 10000) / 10000 AS quality_r,
+       {_quality_sql("n_tok")} AS quality_r,
        CAST(n_sent AS BIGINT) AS n_sentences,
        CASE WHEN n_sent > 0
             THEN FLOOR(LEAST(1.0, CAST(n_term AS DOUBLE) / n_sent) * 10000)
@@ -3371,9 +2958,8 @@ SELECT doc_id,
 FROM sig
 '''
 
-
-# Gopher rule-filter signals (r10): the line/symbol-injected fixture and
-# every count/division mirror harness/fixtures.py:build_documents_lines and
+# Gopher rule-filter signals: the line/symbol-injected fixture and every
+# count/division mirror harness/fixtures.py:build_documents_lines and
 # extensions/text.py:fused_doc_scores(gopher=True) verbatim — literal
 # replaces, non-overlapping left-to-right on both engines, integer counts
 # divided then floor4'd.
@@ -3431,118 +3017,42 @@ SELECT doc_id,
 FROM sig
 """
 
-
-# Binary payload dedup (r9): payloads are UTF-8 encodings of ASCII texts,
-# so DuckDB's VARCHAR md5/substr mirror Spark's byte-level md5/substring
-# exactly (same bytes, same lowercase hex).
-MM_PAYLOAD_BASE = """base AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 100000, text FROM documents WHERE doc_id % 10 = 7
-  UNION ALL
-  SELECT doc_id + 300000,
-         text || ' extra appended tail content for payload variant'
-  FROM documents WHERE doc_id % 10 = 5
-)"""
-
-ORACLES["mm_payload_dedup"] = (
-    "WITH " + MM_PAYLOAD_BASE + """
+ORACLES["mm_payload_dedup"] = q(
+    MM_PAYLOAD_BASE,
+    select="""
 SELECT md5(text) AS payload_hash, MIN(doc_id) AS keeper_id,
        COUNT(*) AS n_copies
 FROM base GROUP BY md5(text)
-"""
+""",
 )
 
-ORACLES["mm_payload_near_dup"] = (
-    "WITH " + MM_PAYLOAD_BASE + """,
-keys AS MATERIALIZED (
-  SELECT doc_id, CAST(i - 1 AS BIGINT) AS block_no,
-         md5(substr(text, (i - 1) * 64 + 1, 64)) AS block_hash,
-         CAST(ceil(length(text) / 64) AS BIGINT) AS n_blocks
-  FROM base, unnest(generate_series(1,
-       CAST(ceil(length(text) / 64) AS INT))) AS u(i)
-  WHERE length(text) > 0
-)
+ORACLES["mm_payload_near_dup"] = q(
+    MM_PAYLOAD_BASE, _payload_block_keys("base", "keys"),
+    select=f"""
 SELECT l.doc_id AS id_a, r.doc_id AS id_b, COUNT(*) AS n_shared,
        l.n_blocks AS n_blocks_a, r.n_blocks AS n_blocks_b,
-       FLOOR(CAST(COUNT(*) AS DOUBLE)
-             / GREATEST(l.n_blocks, r.n_blocks) * 10000) / 10000
-         AS block_sim_r
+       {_block_sim("l", "r")} AS block_sim_r
 FROM keys l JOIN keys r
   ON l.block_no = r.block_no AND l.block_hash = r.block_hash
  AND l.doc_id < r.doc_id
 GROUP BY l.doc_id, r.doc_id, l.n_blocks, r.n_blocks
-HAVING FLOOR(CAST(COUNT(*) AS DOUBLE)
-             / GREATEST(l.n_blocks, r.n_blocks) * 10000) / 10000 >= 0.5
-"""
+HAVING {_block_sim("l", "r")} >= 0.5
+""",
 )
 
-
-# Streaming face of the near-dup ingest: the drained admitted set equals
-# the one-batch admission (greedy batch-split property, property-pinned),
-# so the oracle is the batch oracle.
-ORACLES["stream_ingest_neardup"] = ORACLES["dedup_ingest_neardup"]
-
-# Centroid artifact round-trip (r10): fit -> parquet -> load -> assign is
-# bit-identical to fit-then-assign (parquet doubles are exact; property-
-# pinned), so the query shares the in-session multiprobe oracle.
-ORACLES["sim_centroid_roundtrip"] = ORACLES["sim_knn_join_multiprobe"]
-
-# Multi-wave ingest across compaction (r10): wave-1 + wave-2 admissions
-# equal the one-batch admission of the concatenated stream (greedy
-# batch-split property — arrival respects id order), so the oracle is the
-# one-batch replay over the waves query's batch — the dedup_ingest_neardup
-# batch extended by a genuinely NOVEL wave-2 slice (token-reversed %10==6
-# docs: reversed word order shares no 3-shingle with the original, so they
-# must be ADMITTED through the compacted state). A compaction that lost a
-# digest/band/doc row admits a duplicate; one that fabricated state drops
-# the novel slice — either mismatches.
-ORACLES["dedup_ingest_waves"] = ORACLES["dedup_ingest_neardup"].replace(
-    """  SELECT doc_id + 200000, COALESCE(substr(text, strpos(text, ' ') + 1), '')
-  FROM documents WHERE doc_id % 10 = 3
-),""",
-    """  SELECT doc_id + 200000, COALESCE(substr(text, strpos(text, ' ') + 1), '')
-  FROM documents WHERE doc_id % 10 = 3
-  UNION ALL
-  SELECT doc_id + 300000,
-         COALESCE(array_to_string(list_reverse(string_split(text, ' ')), ' '), '')
-  FROM documents WHERE doc_id % 10 = 6
-),""",
-)
-assert ORACLES["dedup_ingest_waves"] != ORACLES["dedup_ingest_neardup"]
-
-
-# Incremental SEMANTIC ingest (r10): the near-dup ingest family in
-# embedding space. History (vec_id%3<2) is the k-means fit input AND the
-# persisted corpus; the batch (the %3==2 slice + exact re-uploads of the
-# %10==1 slice under +100000 ids + zeroed-first-8-dims variants of the
-# %10==4 slice under +200000 ids) is admitted only where no persisted or
-# already-admitted vector shares a probe block with cosine >= 0.9. The
-# greedy rounds unroll 8x; the query pins mis_max_iter=8 in lockstep.
-ORACLES["sim_ingest_semantic"] = (
-    """
-WITH allv AS MATERIALIZED (
+# Incremental semantic ingest: the near-dup ingest family in embedding
+# space. History is the k-means fit input and the persisted corpus; a
+# batch vector is admitted only where no persisted or already-admitted
+# vector shares a probe block with cosine >= 0.9.
+ORACLES["sim_ingest_semantic"] = q(
+    """allv AS MATERIALIZED (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-),
-ev AS MATERIALIZED (SELECT vec_id, v FROM allv WHERE vec_id % 3 < 2),
-batch AS MATERIALIZED (
-  SELECT vec_id, v FROM allv WHERE vec_id % 3 = 2
-  UNION ALL
-  SELECT vec_id + 100000, v FROM allv WHERE vec_id % 10 = 1
-  UNION ALL
-  SELECT vec_id + 200000,
-         list_transform(generate_series(1, len(v)),
-                        i -> CASE WHEN i <= 8 THEN 0.0 ELSE v[i] END)
-  FROM allv WHERE vec_id % 10 = 4
-),
-"""
-    + KMEANS_CTES_MULTIPROBE
-    + ","
-    + _kmeans_assign_topn("cents_final", "hist_assign", 2)
-    + ","
-    + _kmeans_assign_topn("cents_final", "batch_assign", 2, src_vecs="batch")
-    + """,
-cand_hist AS MATERIALIZED (
+)""",
+    _ingest_split("allv", "vec_id", "v", 1, (4, 200000, _zero_head("v")), hist="ev"),
+    KMEANS_CTES_MULTIPROBE,
+    _kmeans_assign_topn("cents_final", "hist_assign", 2),
+    _kmeans_assign_topn("cents_final", "batch_assign", 2, src_vecs="batch"),
+    f"""cand_hist AS MATERIALIZED (
   SELECT DISTINCT b.vec_id AS bid, h.vec_id AS hid
   FROM batch_assign b JOIN hist_assign h ON b.cid = h.cid
 ),
@@ -3550,13 +3060,7 @@ hist_drop AS MATERIALIZED (
   SELECT DISTINCT c.bid FROM cand_hist c
   JOIN batch bb ON bb.vec_id = c.bid
   JOIN ev hh ON hh.vec_id = c.hid
-  WHERE ROUND(
-    list_reduce(list_transform(generate_series(1, len(bb.v)),
-                i -> bb.v[i]*hh.v[i]), (x,y) -> x+y)
-    / (sqrt(list_reduce(list_transform(generate_series(1, len(bb.v)),
-             i -> bb.v[i]*bb.v[i]), (x,y) -> x+y))
-     * sqrt(list_reduce(list_transform(generate_series(1, len(hh.v)),
-             i -> hh.v[i]*hh.v[i]), (x,y) -> x+y))), 6) >= 0.9
+  WHERE {_cos6_sql("bb.v", "hh.v")} >= 0.9
 ),
 kept2 AS MATERIALIZED (
   SELECT b.vec_id FROM batch b LEFT JOIN hist_drop d ON d.bid = b.vec_id
@@ -3573,88 +3077,26 @@ mis_edges AS MATERIALIZED (
   SELECT c.id_a AS lo, c.id_b AS hi FROM cand_batch c
   JOIN batch a ON a.vec_id = c.id_a
   JOIN batch b ON b.vec_id = c.id_b
-  WHERE ROUND(
-    list_reduce(list_transform(generate_series(1, len(a.v)),
-                i -> a.v[i]*b.v[i]), (x,y) -> x+y)
-    / (sqrt(list_reduce(list_transform(generate_series(1, len(a.v)),
-             i -> a.v[i]*a.v[i]), (x,y) -> x+y))
-     * sqrt(list_reduce(list_transform(generate_series(1, len(b.v)),
-             i -> b.v[i]*b.v[i]), (x,y) -> x+y))), 6) >= 0.9
-),
-mis_nodes AS MATERIALIZED (
-  SELECT DISTINCT node FROM (
-    SELECT lo AS node FROM mis_edges UNION ALL SELECT hi FROM mis_edges) u
-),
-s0 AS MATERIALIZED (SELECT node, 'U' AS st FROM mis_nodes),
-"""
-    + ",\n".join(_greedy_mis_round(f"s{i}", f"s{i + 1}") for i in range(8))
-    + """
-SELECT k.vec_id FROM kept2 k
-WHERE k.vec_id NOT IN (SELECT node FROM mis_nodes)
-UNION ALL
-SELECT node AS vec_id FROM s8 WHERE st = 'A'
-"""
+  WHERE {_cos6_sql("a.v", "b.v")} >= 0.9
+)""",
+    _greedy_mis("vec_id"),
+    select="SELECT vec_id FROM admitted",
 )
 
-
-# Incremental PAYLOAD ingest (r10): the near-dup ingest family over binary
+# Incremental payload ingest: the near-dup ingest family over binary
 # payloads (texts are ASCII, so the oracle mirrors byte slicing with
-# substr, the mm_payload_near_dup treatment). History digests + composite
-# block-key state; batch = fresh slice + byte-exact re-uploads + appended-
-# tail variants; phase 1 exact (min-id keeper, digest anti-join), phase 2
-# shared-block-fraction >= 0.5 vs history (the collision aggregate IS the
-# verification — no payload re-read), phase 3 within-batch pairs under the
-# sequential-arrival greedy admission unrolled 8 rounds (the query pins
-# mis_max_iter=8).
-ORACLES["mm_payload_ingest"] = (
-    """
-WITH hist AS MATERIALIZED (
-  SELECT doc_id, text FROM documents WHERE doc_id % 3 < 2
-),
-batch AS MATERIALIZED (
-  SELECT doc_id, text FROM documents WHERE doc_id % 3 = 2
-  UNION ALL
-  SELECT doc_id + 100000, text FROM documents WHERE doc_id % 10 = 7
-  UNION ALL
-  SELECT doc_id + 300000,
-         text || ' extra appended tail content for payload variant'
-  FROM documents WHERE doc_id % 10 = 5
-),
-hist_dg AS MATERIALIZED (
-  SELECT DISTINCT md5(COALESCE(text, '')) AS h FROM hist
-),
-keep1 AS MATERIALIZED (
-  SELECT md5(COALESCE(text, '')) AS h, MIN(doc_id) AS doc_id FROM batch
-  GROUP BY md5(COALESCE(text, ''))
-),
-keep1n AS MATERIALIZED (
-  SELECT k.h, k.doc_id FROM keep1 k LEFT JOIN hist_dg s ON s.h = k.h
-  WHERE s.h IS NULL
-),
-kept AS MATERIALIZED (
-  SELECT b.doc_id, b.text FROM batch b JOIN keep1n k ON k.doc_id = b.doc_id
-),
-b_keys AS MATERIALIZED (
-  SELECT doc_id, CAST(i - 1 AS BIGINT) AS block_no,
-         md5(substr(text, (i - 1) * 64 + 1, 64)) AS block_hash,
-         CAST(ceil(length(text) / 64) AS BIGINT) AS n_blocks
-  FROM kept, unnest(generate_series(1,
-       CAST(ceil(length(text) / 64) AS INT))) AS u(i)
-  WHERE length(text) > 0
-),
-h_keys AS MATERIALIZED (
-  SELECT doc_id, CAST(i - 1 AS BIGINT) AS block_no,
-         md5(substr(text, (i - 1) * 64 + 1, 64)) AS block_hash,
-         CAST(ceil(length(text) / 64) AS BIGINT) AS n_blocks
-  FROM hist, unnest(generate_series(1,
-       CAST(ceil(length(text) / 64) AS INT))) AS u(i)
-  WHERE length(text) > 0
-),
-hist_drop AS MATERIALIZED (
+# substr). History digests + composite block-key state; phase 1 exact
+# (min-id keeper, digest anti-join), phase 2 shared-block fraction >= 0.5
+# vs history (the collision aggregate is the verification — no payload
+# re-read), phase 3 within-batch pairs under the greedy admission.
+ORACLES["mm_payload_ingest"] = q(
+    _ingest_split("documents", "doc_id", "text", 7, (5, 300000, _PAYLOAD_TAIL)),
+    _novel_keepers("md5(COALESCE(text, ''))"),
+    _payload_block_keys("kept", "b_keys"),
+    _payload_block_keys("hist", "h_keys"),
+    f"""hist_drop AS MATERIALIZED (
   SELECT DISTINCT bid FROM (
-    SELECT b.doc_id AS bid, h.doc_id AS hid,
-           FLOOR(CAST(COUNT(*) AS DOUBLE)
-                 / GREATEST(b.n_blocks, h.n_blocks) * 10000) / 10000 AS sim
+    SELECT b.doc_id AS bid, h.doc_id AS hid, {_block_sim("b", "h")} AS sim
     FROM b_keys b JOIN h_keys h
       ON b.block_no = h.block_no AND b.block_hash = h.block_hash
     GROUP BY b.doc_id, h.doc_id, b.n_blocks, h.n_blocks
@@ -3666,9 +3108,7 @@ kept2 AS MATERIALIZED (
 ),
 mis_edges AS MATERIALIZED (
   SELECT id_a AS lo, id_b AS hi FROM (
-    SELECT l.doc_id AS id_a, r.doc_id AS id_b,
-           FLOOR(CAST(COUNT(*) AS DOUBLE)
-                 / GREATEST(l.n_blocks, r.n_blocks) * 10000) / 10000 AS sim
+    SELECT l.doc_id AS id_a, r.doc_id AS id_b, {_block_sim("l", "r")} AS sim
     FROM b_keys l JOIN b_keys r
       ON l.block_no = r.block_no AND l.block_hash = r.block_hash
      AND l.doc_id < r.doc_id
@@ -3676,338 +3116,161 @@ mis_edges AS MATERIALIZED (
       AND r.doc_id IN (SELECT doc_id FROM kept2)
     GROUP BY l.doc_id, r.doc_id, l.n_blocks, r.n_blocks
   ) v WHERE sim >= 0.5
-),
-mis_nodes AS MATERIALIZED (
-  SELECT DISTINCT node FROM (
-    SELECT lo AS node FROM mis_edges UNION ALL SELECT hi FROM mis_edges) u
-),
-s0 AS MATERIALIZED (SELECT node, 'U' AS st FROM mis_nodes),
-"""
-    + ",\n".join(_greedy_mis_round(f"s{i}", f"s{i + 1}") for i in range(8))
-    + """,
-admitted AS (
-  SELECT k.doc_id FROM kept2 k
-  WHERE k.doc_id NOT IN (SELECT node FROM mis_nodes)
-  UNION ALL
-  SELECT node AS doc_id FROM s8 WHERE st = 'A'
-)
+)""",
+    _greedy_mis("doc_id"),
+    select="""
 SELECT k.doc_id, k.h AS payload_hash
 FROM keep1n k JOIN admitted a ON a.doc_id = k.doc_id
-"""
+""",
 )
 
-
-# Streaming faces of the r10 ingest families (r10): the drained admitted
-# sets equal the one-batch admissions (greedy batch-split property,
-# property-pinned for both operators), so each shares its batch oracle.
-ORACLES["stream_ingest_semantic"] = ORACLES["sim_ingest_semantic"]
-ORACLES["stream_ingest_payloads"] = ORACLES["mm_payload_ingest"]
-
-# Streaming datacard (r10): commutative counts + DECIMAL sums make the
-# drained state bit-equal to the batch state in any arrival order, and the
-# card derivation is the property-pinned datacard_from_state — so the
-# drained card IS the batch card.
-# r14: the stream_datacard face was RETIRED from the registry (VERDICT
-# r13 #5) — the card derivation stays oracle-checked via text_datacard /
-# text_datacard_merge and stream ≡ batch is pinned verbatim in
-# tests/test_properties.py::test_stream_datacard_equals_batch_card.
+# Streaming faces and artifact round trips whose answer equals a batch
+# face's (the greedy batch-split property; fit -> parquet -> load ->
+# assign is bit-identical to fit-then-assign — both property-pinned).
+for _face, _same in {
+    "stream_ingest_neardup": "dedup_ingest_neardup",
+    "stream_ingest_semantic": "sim_ingest_semantic",
+    "stream_ingest_payloads": "mm_payload_ingest",
+    "sim_centroid_roundtrip": "sim_knn_join_multiprobe",
+}.items():
+    ORACLES[_face] = ORACLES[_same]
 
 
 def _pq_oracle(dim: int = 64) -> str:
-    """SQL mirror of the PQ pipeline (r10): per-subspace kmeans chains
-    (one prefixed Lloyd unroll per subspace over sliced vectors — the
-    fit's own final assignment IS the code), per-subspace query-to-
-    sub-centroid squared distances in the shared left-fold order, ADC =
-    fixed-order sum of the m terms, rounded candidate cut, exact-cosine
-    re-rank. Every arithmetic step replays pq_fit/pq_encode/pq_topk_adc
-    bit-for-bit."""
-    m, ksub, n_iter = PQ_ORACLE_M, PQ_ORACLE_KSUB, PQ_ORACLE_N_ITER
-    dsub = dim // m
-    parts = [
-        "WITH qv AS (SELECT CAST(embedding AS DOUBLE[]) AS q "
-        "FROM embeddings WHERE vec_id = 0),\n"
-        "ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v "
-        "FROM embeddings)"
-    ]
-    for s in range(m):
-        lo, hi = s * dsub + 1, (s + 1) * dsub
-        parts.append(
-            f",\ns{s}ev AS (SELECT vec_id, v[{lo}:{hi}] AS v FROM ev)"
-        )
-    for s in range(m):
-        parts.append(
-            ",\n"
-            + kmeans_ctes(
-                k=ksub, n_iter=n_iter, prefix=f"s{s}", src_vecs=f"s{s}ev"
-            )
-        )
-    for s in range(m):
-        off = s * dsub
-        parts.append(
-            f""",
-d{s} AS (
-  SELECT a.vec_id,
-         list_reduce(list_transform(generate_series(1, {dsub}), i ->
-           (q[{off} + i] - c.c[i]) * (q[{off} + i] - c.c[i])),
-           (x,y) -> x + y) AS d
+    """SQL mirror of the PQ pipeline: per-subspace kmeans chains (the
+    fit's own final assignment is the code), per-subspace
+    query-to-sub-centroid squared distances in the shared left-fold
+    order, ADC = fixed-order sum of the m terms, rounded candidate cut,
+    exact-cosine re-rank. Every arithmetic step replays
+    pq_fit/pq_encode/pq_topk_adc bit-for-bit."""
+    dsub = dim // PQ_ORACLE_M
+    dists = [
+        f"""d{s} AS (
+  SELECT a.vec_id, {_sqdist_sql(f"q[{s * dsub} + i]", "c.c[i]", dsub)} AS d
   FROM s{s}assign_final a
   JOIN s{s}cents_final c ON c.cid = a.cid
   CROSS JOIN qv
 )"""
-        )
-    adc_sum = "d0.d"
-    joins = "FROM d0"
-    for s in range(1, m):
-        adc_sum = f"({adc_sum} + d{s}.d)"
-        joins += f" JOIN d{s} ON d{s}.vec_id = d0.vec_id"
-    parts.append(
-        f""",
-adc AS (
-  SELECT d0.vec_id, ROUND({adc_sum}, 6) AS adc_r
-  {joins}
+        for s in range(PQ_ORACLE_M)
+    ]
+    joins = "".join(
+        f" JOIN d{s} ON d{s}.vec_id = d0.vec_id" for s in range(1, PQ_ORACLE_M)
+    )
+    return q(
+        QUERY_VEC, EV, _pq_books("ev", dim), *dists,
+        f"""adc AS (
+  SELECT d0.vec_id, ROUND({_adc_sum("d")}, 6) AS adc_r
+  FROM d0{joins}
 ),
 cand AS (SELECT vec_id, adc_r FROM adc ORDER BY adc_r, vec_id LIMIT {PQ_ORACLE_RERANK}),
 rescored AS (
-  SELECT e.vec_id,
-         ROUND(
-           list_reduce(list_transform(generate_series(1, len(v)), i -> v[i]*q[i]), (x,y) -> x+y)
-           / (sqrt(list_reduce(list_transform(generate_series(1, len(v)), i -> v[i]*v[i]), (x,y) -> x+y))
-            * sqrt(list_reduce(list_transform(generate_series(1, len(q)), i -> q[i]*q[i]), (x,y) -> x+y))),
-           6) AS cos_r,
-         cand.adc_r
+  SELECT e.vec_id, {_cos6_sql("v", "q")} AS cos_r, cand.adc_r
   FROM ev e JOIN cand ON cand.vec_id = e.vec_id CROSS JOIN qv
-)
-SELECT vec_id, rank, cos_r, adc_r FROM (
-  SELECT vec_id,
-         CAST(ROW_NUMBER() OVER (ORDER BY cos_r DESC, vec_id) AS BIGINT) AS rank,
-         cos_r, adc_r
-  FROM rescored
-) r WHERE rank <= 10"""
+)""",
+        select=_topk_by_cos("rescored", ", adc_r"),
     )
-    return "".join(parts)
 
 
 ORACLES["sim_topk_pq"] = _pq_oracle()
 
 
 def _ivfpq_oracle(dim: int = 64) -> str:
-    """SQL mirror of the IVF-PQ pipeline (r10): one coarse kmeans chain
-    over the full vectors, residuals against the assigned coarse centroid,
-    one PQ kmeans chain per subspace over the SLICED RESIDUALS (the fit's
-    final assignment IS the code), the nprobe nearest coarse cells by the
+    """SQL mirror of the IVF-PQ pipeline: one coarse kmeans chain over the
+    full vectors, residuals against the assigned coarse centroid, one PQ
+    kmeans chain per subspace over the sliced residuals (the fit's final
+    assignment is the code), the nprobe nearest coarse cells by the
     shared left-fold distance, a per-(probed cell, subspace) LUT of
     residual-query-to-sub-centroid squared distances, ADC as the
     fixed-order sum of the m LUT lookups over only the probed cells' rows,
-    rounded candidate cut, exact-cosine re-rank on the ORIGINAL vectors.
+    rounded candidate cut, exact-cosine re-rank on the original vectors.
     Replays similarity.ivfpq_topk bit-for-bit (same accumulator orders,
     same (score, id) tie-breaks)."""
-    m, ksub = PQ_ORACLE_M, PQ_ORACLE_KSUB
-    nlist, nprobe = IVFPQ_ORACLE_NLIST, IVFPQ_ORACLE_NPROBE
-    dsub = dim // m
-    parts = [
-        "WITH qv AS (SELECT CAST(embedding AS DOUBLE[]) AS q "
-        "FROM embeddings WHERE vec_id = 0),\n"
-        "ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v "
-        "FROM embeddings),\n"
-        + kmeans_ctes(
-            k=nlist, n_iter=IVFPQ_ORACLE_N_ITER, prefix="g", src_vecs="ev"
-        )
-    ]
-    parts.append(
-        f""",
-rv AS (
-  SELECT a.vec_id,
-         list_transform(generate_series(1, {dim}), i -> a.v[i] - c.c[i]) AS v,
-         a.cid AS blk
-  FROM gassign_final a JOIN gcents_final c ON c.cid = a.cid
-)"""
-    )
-    for s in range(m):
-        lo, hi = s * dsub + 1, (s + 1) * dsub
-        parts.append(
-            f",\ns{s}ev AS (SELECT vec_id, v[{lo}:{hi}] AS v FROM rv)"
-        )
-    for s in range(m):
-        parts.append(
-            ",\n"
-            + kmeans_ctes(
-                k=ksub,
-                n_iter=PQ_ORACLE_N_ITER,
-                prefix=f"s{s}",
-                src_vecs=f"s{s}ev",
-            )
-        )
-    parts.append(
-        f""",
-probed AS (
-  SELECT cid FROM (
-    SELECT c.cid,
-           list_reduce(list_transform(generate_series(1, {dim}), i ->
-             (q[i] - c.c[i]) * (q[i] - c.c[i])), (x,y) -> x + y) AS d
-    FROM gcents_final c CROSS JOIN qv
-    ORDER BY d, c.cid LIMIT {nprobe}) t
-)"""
-    )
-    for s in range(m):
-        off = s * dsub
-        parts.append(
-            f""",
-lut{s} AS (
+    dsub = dim // PQ_ORACLE_M
+    luts = [
+        f"""lut{s} AS (
   SELECT g.cid AS blk, b.cid AS code,
-         list_reduce(list_transform(generate_series(1, {dsub}), i ->
-           ((q[{off} + i] - g.c[{off} + i]) - b.c[i])
-           * ((q[{off} + i] - g.c[{off} + i]) - b.c[i])),
-           (x,y) -> x + y) AS d
+         {_sqdist_sql(f"(q[{s * dsub} + i] - g.c[{s * dsub} + i])", "b.c[i]", dsub)} AS d
   FROM gcents_final g
   JOIN probed p ON p.cid = g.cid
   CROSS JOIN qv
   CROSS JOIN s{s}cents_final b
 )"""
-        )
-    code_cols = ", ".join(f"a{s}.cid AS c{s}" for s in range(m))
-    code_joins = "".join(
-        f" JOIN s{s}assign_final a{s} ON a{s}.vec_id = r.vec_id"
-        for s in range(m)
+        for s in range(PQ_ORACLE_M)
+    ]
+    lut_joins = "".join(
+        f" JOIN lut{s} l{s} ON l{s}.blk = c.blk AND l{s}.code = c.c{s}"
+        for s in range(PQ_ORACLE_M)
     )
-    adc_sum = "l0.d"
-    lut_joins = " JOIN lut0 l0 ON l0.blk = c.blk AND l0.code = c.c0"
-    for s in range(1, m):
-        adc_sum = f"({adc_sum} + l{s}.d)"
-        lut_joins += (
-            f" JOIN lut{s} l{s} ON l{s}.blk = c.blk AND l{s}.code = c.c{s}"
-        )
-    parts.append(
-        f""",
-codes AS (
-  SELECT r.vec_id, r.blk, {code_cols}
-  FROM rv r{code_joins}
-),
-adc AS (
-  SELECT c.vec_id, c.blk, ROUND({adc_sum}, 6) AS adc_r
+    return q(
+        QUERY_VEC, EV, _ivf_residual_ctes(dim), _pq_books("rv", dim),
+        f"""probed AS (
+  SELECT cid FROM (
+    SELECT c.cid, {_sqdist_sql("q[i]", "c.c[i]", dim)} AS d
+    FROM gcents_final c CROSS JOIN qv
+    ORDER BY d, c.cid LIMIT {IVFPQ_ORACLE_NPROBE}) t
+)""",
+        *luts,
+        _pq_codes(),
+        f"""adc AS (
+  SELECT c.vec_id, c.blk, ROUND({_adc_sum("l")}, 6) AS adc_r
   FROM codes c{lut_joins}
 ),
 cand AS (SELECT vec_id, blk, adc_r FROM adc
          ORDER BY adc_r, vec_id LIMIT {PQ_ORACLE_RERANK}),
 rescored AS (
-  SELECT e.vec_id,
-         ROUND(
-           list_reduce(list_transform(generate_series(1, len(v)), i -> v[i]*q[i]), (x,y) -> x+y)
-           / (sqrt(list_reduce(list_transform(generate_series(1, len(v)), i -> v[i]*v[i]), (x,y) -> x+y))
-            * sqrt(list_reduce(list_transform(generate_series(1, len(q)), i -> q[i]*q[i]), (x,y) -> x+y))),
-           6) AS cos_r,
-         cand.adc_r, cand.blk
+  SELECT e.vec_id, {_cos6_sql("v", "q")} AS cos_r, cand.adc_r, cand.blk
   FROM ev e JOIN cand ON cand.vec_id = e.vec_id CROSS JOIN qv
-)
-SELECT vec_id, rank, cos_r, adc_r, blk FROM (
-  SELECT vec_id,
-         CAST(ROW_NUMBER() OVER (ORDER BY cos_r DESC, vec_id) AS BIGINT) AS rank,
-         cos_r, adc_r, blk
-  FROM rescored
-) r WHERE rank <= 10"""
+)""",
+        select=_topk_by_cos("rescored", ", adc_r, blk"),
     )
-    return "".join(parts)
 
 
 ORACLES["sim_topk_ivfpq"] = _ivfpq_oracle()
 
 
 def _ivfpq_knn_oracle(dim: int = 64) -> str:
-    """SQL mirror of the IVF-PQ k-NN graph (r10): the coarse/residual/
-    per-subspace chains of the single-query oracle, then EVERY vector as
+    """SQL mirror of the IVF-PQ k-NN graph: the coarse/residual/
+    per-subspace chains of the single-query oracle, then every vector as
     a query — nprobe probe rows via the shared top-n assignment helper,
     per-(query, probed-cell, subspace) LUTs over the query residual,
     blocked pairs on the cell id scored by the fixed-order ADC sum,
     per-query (adc_r, xid) cut to the rerank set, exact-cosine re-rank.
     Replays similarity.knn_join_ivfpq bit-for-bit."""
-    m, ksub = PQ_ORACLE_M, PQ_ORACLE_KSUB
-    nlist, nprobe = IVFPQ_ORACLE_NLIST, IVFPQ_ORACLE_NPROBE
-    k, rerank = IVFPQ_ORACLE_KJOIN, IVFPQ_ORACLE_RERANK_JOIN
-    dsub = dim // m
-    parts = [
-        "WITH ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v "
-        "FROM embeddings),\n"
-        + kmeans_ctes(
-            k=nlist, n_iter=IVFPQ_ORACLE_N_ITER, prefix="g", src_vecs="ev"
-        )
-    ]
-    parts.append(
-        f""",
-rv AS (
-  SELECT a.vec_id,
-         list_transform(generate_series(1, {dim}), i -> a.v[i] - c.c[i]) AS v,
-         a.cid AS blk
-  FROM gassign_final a JOIN gcents_final c ON c.cid = a.cid
+    dsub = dim // PQ_ORACLE_M
+    luts = [
+        f"""lut{s} AS (
+  SELECT q.qid, q.blk, b.cid AS code,
+         {_sqdist_sql(f"q.qr[{s * dsub} + i]", "b.c[i]", dsub)} AS d
+  FROM qres q CROSS JOIN s{s}cents_final b
 )"""
+        for s in range(PQ_ORACLE_M)
+    ]
+    lut_joins = "".join(
+        f" JOIN lut{s} l{s} ON l{s}.qid = c.qid AND l{s}.blk = c.blk"
+        f" AND l{s}.code = c.c{s}"
+        for s in range(PQ_ORACLE_M)
     )
-    for s in range(m):
-        lo, hi = s * dsub + 1, (s + 1) * dsub
-        parts.append(
-            f",\ns{s}ev AS (SELECT vec_id, v[{lo}:{hi}] AS v FROM rv)"
-        )
-    for s in range(m):
-        parts.append(
-            ",\n"
-            + kmeans_ctes(
-                k=ksub,
-                n_iter=PQ_ORACLE_N_ITER,
-                prefix=f"s{s}",
-                src_vecs=f"s{s}ev",
-            )
-        )
-    parts.append(
-        ",\n"
-        + _kmeans_assign_topn("gcents_final", "qprobe", nprobe, src_vecs="ev")
-    )
-    parts.append(
-        f""",
-qres AS (
+    code_cols = ", ".join(f"c.c{s}" for s in range(PQ_ORACLE_M))
+    return q(
+        EV, _ivf_residual_ctes(dim), _pq_books("rv", dim),
+        _kmeans_assign_topn(
+            "gcents_final", "qprobe", IVFPQ_ORACLE_NPROBE, src_vecs="ev"
+        ),
+        f"""qres AS (
   SELECT p.vec_id AS qid, p.cid AS blk,
          list_transform(generate_series(1, {dim}), i -> p.v[i] - c.c[i]) AS qr
   FROM qprobe p JOIN gcents_final c ON c.cid = p.cid
-)"""
-    )
-    for s in range(m):
-        off = s * dsub
-        parts.append(
-            f""",
-lut{s} AS (
-  SELECT q.qid, q.blk, b.cid AS code,
-         list_reduce(list_transform(generate_series(1, {dsub}), i ->
-           (q.qr[{off} + i] - b.c[i]) * (q.qr[{off} + i] - b.c[i])),
-           (x,y) -> x + y) AS d
-  FROM qres q CROSS JOIN s{s}cents_final b
-)"""
-        )
-    code_cols = ", ".join(f"a{s}.cid AS c{s}" for s in range(m))
-    code_joins = "".join(
-        f" JOIN s{s}assign_final a{s} ON a{s}.vec_id = r.vec_id"
-        for s in range(m)
-    )
-    adc_sum = "l0.d"
-    lut_joins = (
-        " JOIN lut0 l0 ON l0.qid = c.qid AND l0.blk = c.blk"
-        " AND l0.code = c.c0"
-    )
-    for s in range(1, m):
-        adc_sum = f"({adc_sum} + l{s}.d)"
-        lut_joins += (
-            f" JOIN lut{s} l{s} ON l{s}.qid = c.qid AND l{s}.blk = c.blk"
-            f" AND l{s}.code = c.c{s}"
-        )
-    parts.append(
-        f""",
-codes AS (
-  SELECT r.vec_id AS xid, r.blk, {code_cols}
-  FROM rv r{code_joins}
-),
-qcells AS (SELECT DISTINCT qid, blk FROM qres),
+)""",
+        *luts,
+        _pq_codes(" AS xid"),
+        f"""qcells AS (SELECT DISTINCT qid, blk FROM qres),
 pairs AS (
-  SELECT q.qid, c.xid, c.blk, {', '.join(f'c.c{s}' for s in range(m))}
+  SELECT q.qid, c.xid, c.blk, {code_cols}
   FROM qcells q JOIN codes c ON c.blk = q.blk
   WHERE q.qid <> c.xid
 ),
 adc AS (
-  SELECT c.qid, c.xid, ROUND({adc_sum}, 6) AS adc_r
+  SELECT c.qid, c.xid, ROUND({_adc_sum("l")}, 6) AS adc_r
   FROM pairs c{lut_joins}
 ),
 cand AS (
@@ -4015,31 +3278,22 @@ cand AS (
     SELECT qid, xid, adc_r,
            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_r, xid) AS rn
     FROM adc) t
-  WHERE rn <= {rerank}
+  WHERE rn <= {IVFPQ_ORACLE_RERANK_JOIN}
 ),
 rescored AS (
-  SELECT cand.qid, cand.xid,
-         ROUND(
-           list_reduce(list_transform(generate_series(1, len(q.v)),
-             i -> q.v[i] * x.v[i]), (a,b) -> a + b)
-           / (sqrt(list_reduce(list_transform(generate_series(1, len(q.v)),
-                i -> q.v[i] * q.v[i]), (a,b) -> a + b))
-            * sqrt(list_reduce(list_transform(generate_series(1, len(x.v)),
-                i -> x.v[i] * x.v[i]), (a,b) -> a + b))),
-           6) AS cos_r,
-         cand.adc_r
+  SELECT cand.qid, cand.xid, {_cos6_sql("q.v", "x.v")} AS cos_r, cand.adc_r
   FROM cand
   JOIN ev q ON q.vec_id = cand.qid
   JOIN ev x ON x.vec_id = cand.xid
-)
+)""",
+        select=f"""
 SELECT qid AS vec_id, rank, xid AS neighbor_id, cos_r, adc_r FROM (
   SELECT qid, xid, cos_r, adc_r,
          CAST(ROW_NUMBER() OVER (PARTITION BY qid
               ORDER BY cos_r DESC, xid) AS BIGINT) AS rank
   FROM rescored
-) t WHERE rank <= {k}"""
+) t WHERE rank <= {IVFPQ_ORACLE_KJOIN}""",
     )
-    return "".join(parts)
 
 
 ORACLES["sim_knn_join_ivfpq"] = _ivfpq_knn_oracle()

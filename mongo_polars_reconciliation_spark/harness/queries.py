@@ -7,6 +7,8 @@ sorts columns by name before value-hashing).
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -30,6 +32,21 @@ from mongo_polars_reconciliation_spark.harness.fixtures import (
     payload_ingest_split,
     recon_cfg,
     semantic_ingest_split,
+)
+from mongo_polars_reconciliation_spark.harness.oracles import (
+    IVFPQ_ORACLE_KJOIN,
+    IVFPQ_ORACLE_N_ITER,
+    IVFPQ_ORACLE_NLIST,
+    IVFPQ_ORACLE_NPROBE,
+    IVFPQ_ORACLE_RERANK_JOIN,
+    KMEANS_ORACLE_K,
+    KMEANS_ORACLE_N_ITER,
+    MULTIPROBE_ORACLE_N_ITER,
+    MULTIPROBE_ORACLE_NLIST,
+    PQ_ORACLE_KSUB,
+    PQ_ORACLE_M,
+    PQ_ORACLE_N_ITER,
+    PQ_ORACLE_RERANK,
 )
 from mongo_polars_reconciliation_spark.operators.match import (
     hot_match_keys,
@@ -1062,12 +1079,6 @@ def sim_topk_pq(spark, sf_dir) -> DataFrame:
         save_pq_codebooks,
     )
     from mongo_polars_reconciliation_spark.harness.fixtures import query_vector
-    from mongo_polars_reconciliation_spark.harness.oracles import (
-        PQ_ORACLE_KSUB,
-        PQ_ORACLE_M,
-        PQ_ORACLE_N_ITER,
-        PQ_ORACLE_RERANK,
-    )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
@@ -1087,8 +1098,41 @@ def sim_topk_pq(spark, sf_dir) -> DataFrame:
     )
 
 
+def _fit_ivfpq(emb: DataFrame):
+    """The IVF-PQ artifacts under the oracle geometry — the Spark mirror of
+    the fit chain of ``oracles._ivfpq_oracle``: a coarse k-means over the
+    vectors, the residuals against each vector's cell, product codebooks
+    fitted on those residuals. The residual frame is checkpointed (the m
+    subspace fits and the probe would otherwise each re-run the assignment
+    kernel and broadcast join behind the slices) and returned with the two
+    artifacts as ``(coarse, res, books)``."""
+    from mongo_polars_reconciliation_spark.extensions.similarity import (
+        ivf_residuals,
+        kmeans_fit,
+        pq_fit,
+    )
+
+    coarse = kmeans_fit(emb, k=IVFPQ_ORACLE_NLIST, n_iter=IVFPQ_ORACLE_N_ITER)
+    res = ivf_residuals(emb, coarse).localCheckpoint(eager=False)
+    books = pq_fit(
+        res, m=PQ_ORACLE_M, ksub=PQ_ORACLE_KSUB, n_iter=PQ_ORACLE_N_ITER
+    )
+    return coarse, res, books
+
+
+def _run_pair(*calls: tuple) -> list:
+    """Run independent Spark actions (``(fn, *args)`` each) on a 2-thread
+    pool and return their results in call order. The IVF-PQ artifact
+    writes and reloads are independent jobs on disjoint dirs, so they
+    overlap (byte-identical artifacts; measured 0.81 → 0.44 s min for the
+    save+load pair)."""
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futures = [pool.submit(*c) for c in calls]
+        return [f.result() for f in futures]
+
+
 def sim_topk_ivfpq(spark, sf_dir) -> DataFrame:
-    """IVF-PQ ANN (r10): the composition of the two persisted artifacts —
+    """IVF-PQ ANN: the composition of the two persisted artifacts —
     a coarse centroid table pruning the scan to nprobe cells and residual
     product codebooks scoring the survivors by ADC, exact-cosine re-rank
     on the originals (FAISS IVFPQ; Jégou et al. 2011). Both artifacts are
@@ -1096,56 +1140,28 @@ def sim_topk_ivfpq(spark, sf_dir) -> DataFrame:
     many — the model-artifact pattern), so the query pins the whole
     build→persist→serve path end to end."""
     from mongo_polars_reconciliation_spark.extensions.similarity import (
-        ivf_residuals,
         ivfpq_topk,
-        kmeans_fit,
         load_centroids,
         load_pq_codebooks,
-        pq_fit,
         save_centroids,
         save_pq_codebooks,
     )
     from mongo_polars_reconciliation_spark.harness.fixtures import query_vector
-    from mongo_polars_reconciliation_spark.harness.oracles import (
-        IVFPQ_ORACLE_N_ITER,
-        IVFPQ_ORACLE_NLIST,
-        IVFPQ_ORACLE_NPROBE,
-        PQ_ORACLE_KSUB,
-        PQ_ORACLE_M,
-        PQ_ORACLE_N_ITER,
-        PQ_ORACLE_RERANK,
-    )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
-    coarse = kmeans_fit(
-        emb, k=IVFPQ_ORACLE_NLIST, n_iter=IVFPQ_ORACLE_N_ITER
-    )
-    # checkpoint: the m subspace fits and the head probe would otherwise
-    # each re-run the assignment kernel + broadcast join behind the slices
-    res = ivf_residuals(emb, coarse).localCheckpoint(eager=False)
-    books = pq_fit(
-        res, m=PQ_ORACLE_M, ksub=PQ_ORACLE_KSUB, n_iter=PQ_ORACLE_N_ITER
-    )
+    coarse, _, books = _fit_ivfpq(emb)
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     cpath = scratch_path(tag, "ivfpq_coarse")
     bpath = scratch_path(tag, "ivfpq_books")
-    # the two artifact writes (and the two reloads) are independent jobs
-    # on disjoint dirs — overlap them on a 2-thread driver pool (r16,
-    # guide §2.6; the persist_results treatment). Byte-identical
-    # artifacts; measured 0.81 → 0.44 s min for the save+load pair.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fc = pool.submit(save_centroids, spark, coarse, cpath)
-        fb = pool.submit(save_pq_codebooks, spark, books, bpath)
-        fc.result()
-        fb.result()
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        lc = pool.submit(load_centroids, spark, cpath)
-        lb = pool.submit(load_pq_codebooks, spark, bpath)
-        coarse_loaded, books_loaded = lc.result(), lb.result()
+    _run_pair(
+        (save_centroids, spark, coarse, cpath),
+        (save_pq_codebooks, spark, books, bpath),
+    )
+    coarse_loaded, books_loaded = _run_pair(
+        (load_centroids, spark, cpath), (load_pq_codebooks, spark, bpath)
+    )
     return ivfpq_topk(
         emb,
         query_vector(spark, sf_dir),
@@ -1158,39 +1174,20 @@ def sim_topk_ivfpq(spark, sf_dir) -> DataFrame:
 
 
 def sim_knn_join_ivfpq(spark, sf_dir) -> DataFrame:
-    """IVF-PQ k-NN graph (r10): every vector probes its nprobe nearest
+    """IVF-PQ k-NN graph: every vector probes its nprobe nearest
     coarse cells, blocked candidate pairs are scored by ADC — m code
     lookups per pair instead of a 64-dim fold — and only each query's
     rerank survivors pay the exact cosine. The corpus-scale ANN-graph
     build (the dedup/SemDeDup front end) under the compressed-scan
     trade."""
     from mongo_polars_reconciliation_spark.extensions.similarity import (
-        ivf_residuals,
-        kmeans_fit,
         knn_join_ivfpq,
-        pq_fit,
-    )
-    from mongo_polars_reconciliation_spark.harness.oracles import (
-        IVFPQ_ORACLE_KJOIN,
-        IVFPQ_ORACLE_N_ITER,
-        IVFPQ_ORACLE_NLIST,
-        IVFPQ_ORACLE_NPROBE,
-        IVFPQ_ORACLE_RERANK_JOIN,
-        PQ_ORACLE_KSUB,
-        PQ_ORACLE_M,
-        PQ_ORACLE_N_ITER,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
-    coarse = kmeans_fit(
-        emb, k=IVFPQ_ORACLE_NLIST, n_iter=IVFPQ_ORACLE_N_ITER
-    )
-    res = ivf_residuals(emb, coarse).localCheckpoint(eager=False)
-    books = pq_fit(
-        res, m=PQ_ORACLE_M, ksub=PQ_ORACLE_KSUB, n_iter=PQ_ORACLE_N_ITER
-    )
+    coarse, res, books = _fit_ivfpq(emb)
     return knn_join_ivfpq(
         emb,
         coarse,
@@ -1205,7 +1202,7 @@ def sim_knn_join_ivfpq(spark, sf_dir) -> DataFrame:
 
 
 def sim_knn_join_ivfpq_served(spark, sf_dir) -> DataFrame:
-    """IVF-PQ k-NN graph from PERSISTED artifacts (r11, VERDICT r10 #4):
+    """IVF-PQ k-NN graph from PERSISTED artifacts:
     the recurring SERVE cost of an ANN-graph build wave — the coarse
     centroid table and residual codebooks are fitted/saved at most once
     per process (first call), and the graph is built from the LOADED
@@ -1219,24 +1216,11 @@ def sim_knn_join_ivfpq_served(spark, sf_dir) -> DataFrame:
     import os
 
     from mongo_polars_reconciliation_spark.extensions.similarity import (
-        ivf_residuals,
-        kmeans_fit,
         knn_join_ivfpq,
         load_centroids,
         load_pq_codebooks,
-        pq_fit,
         save_centroids,
         save_pq_codebooks,
-    )
-    from mongo_polars_reconciliation_spark.harness.oracles import (
-        IVFPQ_ORACLE_KJOIN,
-        IVFPQ_ORACLE_N_ITER,
-        IVFPQ_ORACLE_NLIST,
-        IVFPQ_ORACLE_NPROBE,
-        IVFPQ_ORACLE_RERANK_JOIN,
-        PQ_ORACLE_KSUB,
-        PQ_ORACLE_M,
-        PQ_ORACLE_N_ITER,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
@@ -1246,27 +1230,14 @@ def sim_knn_join_ivfpq_served(spark, sf_dir) -> DataFrame:
     cpath = scratch_path(tag, "ivfpq_kj_coarse")
     bpath = scratch_path(tag, "ivfpq_kj_books")
     if not (os.path.exists(cpath) and os.path.exists(bpath)):
-        coarse = kmeans_fit(
-            emb, k=IVFPQ_ORACLE_NLIST, n_iter=IVFPQ_ORACLE_N_ITER
+        coarse, _, books = _fit_ivfpq(emb)
+        _run_pair(
+            (save_centroids, spark, coarse, cpath),
+            (save_pq_codebooks, spark, books, bpath),
         )
-        res = ivf_residuals(emb, coarse).localCheckpoint(eager=False)
-        books = pq_fit(
-            res, m=PQ_ORACLE_M, ksub=PQ_ORACLE_KSUB, n_iter=PQ_ORACLE_N_ITER
-        )
-        # independent writes, disjoint dirs — overlap (r16, guide §2.6)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fc = pool.submit(save_centroids, spark, coarse, cpath)
-            fb = pool.submit(save_pq_codebooks, spark, books, bpath)
-            fc.result()
-            fb.result()
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        lc = pool.submit(load_centroids, spark, cpath)
-        lb = pool.submit(load_pq_codebooks, spark, bpath)
-        coarse_loaded, books_loaded = lc.result(), lb.result()
+    coarse_loaded, books_loaded = _run_pair(
+        (load_centroids, spark, cpath), (load_pq_codebooks, spark, bpath)
+    )
     return knn_join_ivfpq(
         emb,
         coarse_loaded,
@@ -1285,10 +1256,6 @@ def sim_topk_ivf_fitted(spark, sf_dir) -> DataFrame:
         topk_ivf_fitted,
     )
     from mongo_polars_reconciliation_spark.harness.fixtures import query_vector
-    from mongo_polars_reconciliation_spark.harness.oracles import (
-        KMEANS_ORACLE_K,
-        KMEANS_ORACLE_N_ITER,
-    )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return topk_ivf_fitted(
@@ -1308,10 +1275,6 @@ def dedup_embedding_cosine_fitted(spark, sf_dir) -> DataFrame:
         embedding_near_dups_fitted,
     )
     from mongo_polars_reconciliation_spark.harness.fixtures import build_embeddings_aug
-    from mongo_polars_reconciliation_spark.harness.oracles import (
-        KMEANS_ORACLE_K,
-        KMEANS_ORACLE_N_ITER,
-    )
 
     return embedding_near_dups_fitted(
         build_embeddings_aug(spark, sf_dir),
@@ -1706,10 +1669,6 @@ def sim_knn_join_multiprobe(spark, sf_dir) -> DataFrame:
     from mongo_polars_reconciliation_spark.extensions.similarity import (
         knn_join_multiprobe,
     )
-    from mongo_polars_reconciliation_spark.harness.oracles import (
-        MULTIPROBE_ORACLE_N_ITER,
-        MULTIPROBE_ORACLE_NLIST,
-    )
 
     return knn_join_multiprobe(
         spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
@@ -1734,10 +1693,6 @@ def sim_centroid_roundtrip(spark, sf_dir) -> DataFrame:
         knn_join_multiprobe,
         load_centroids,
         save_centroids,
-    )
-    from mongo_polars_reconciliation_spark.harness.oracles import (
-        MULTIPROBE_ORACLE_N_ITER,
-        MULTIPROBE_ORACLE_NLIST,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -1768,10 +1723,6 @@ def sim_ingest_semantic(spark, sf_dir) -> DataFrame:
         kmeans_fit,
         load_centroids,
         save_centroids,
-    )
-    from mongo_polars_reconciliation_spark.harness.oracles import (
-        MULTIPROBE_ORACLE_N_ITER,
-        MULTIPROBE_ORACLE_NLIST,
     )
 
     hist, batch = semantic_ingest_split(spark, sf_dir)
@@ -1805,10 +1756,6 @@ def sim_recall_probe(spark, sf_dir) -> DataFrame:
     from mongo_polars_reconciliation_spark.extensions.similarity import (
         ann_recall_at_k,
     )
-    from mongo_polars_reconciliation_spark.harness.oracles import (
-        MULTIPROBE_ORACLE_N_ITER,
-        MULTIPROBE_ORACLE_NLIST,
-    )
 
     return ann_recall_at_k(
         spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
@@ -1830,10 +1777,6 @@ def sim_recall_probe_sampled(spark, sf_dir) -> DataFrame:
     from mongo_polars_reconciliation_spark.extensions.similarity import (
         ann_recall_at_k_sampled,
     )
-    from mongo_polars_reconciliation_spark.harness.oracles import (
-        MULTIPROBE_ORACLE_N_ITER,
-        MULTIPROBE_ORACLE_NLIST,
-    )
 
     return ann_recall_at_k_sampled(
         spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
@@ -1854,10 +1797,6 @@ def sim_semantic_dedup_fitted(spark, sf_dir) -> DataFrame:
         semantic_dedup_fitted,
     )
     from mongo_polars_reconciliation_spark.harness.fixtures import build_embeddings_aug
-    from mongo_polars_reconciliation_spark.harness.oracles import (
-        MULTIPROBE_ORACLE_N_ITER,
-        MULTIPROBE_ORACLE_NLIST,
-    )
 
     return semantic_dedup_fitted(
         build_embeddings_aug(spark, sf_dir),
@@ -2116,9 +2055,7 @@ def dedup_ingest_waves(spark, sf_dir) -> DataFrame:
     # by wave 1) — overlap them on a driver pool (r16, guide §2.6); this
     # is the BATCH wave path, no crash-ordering contract (unlike the
     # streaming loop, whose ledger write must stay last)
-    from concurrent.futures import ThreadPoolExecutor as _TPE
-
-    with _TPE(max_workers=3) as _pool:
+    with ThreadPoolExecutor(max_workers=3) as _pool:
         for _f in [
             _pool.submit(
                 lambda: seed_ledger.unionByName(a1).write.parquet(
@@ -2568,10 +2505,6 @@ def stream_ingest_semantic(spark, sf_dir) -> DataFrame:
         kmeans_fit,
         load_centroids,
         save_centroids,
-    )
-    from mongo_polars_reconciliation_spark.harness.oracles import (
-        MULTIPROBE_ORACLE_N_ITER,
-        MULTIPROBE_ORACLE_NLIST,
     )
     from mongo_polars_reconciliation_spark.streaming.corpus import (
         incremental_semantic_ingest,

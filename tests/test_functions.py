@@ -313,6 +313,46 @@ def test_stratified_sample_rejects_rates_outside_unit_interval(spark):
     assert stratified_sample(docs, "lang", {"en": 1.0}, default_rate=0.0).count() == 1
 
 
+def test_stratified_sample_threshold_is_exact_ceil(spark):
+    """A row is kept iff its bucket pmod(h, 10000) < rate·10000 exactly:
+    the bucket just below a rate whose float product falls short of the
+    integer (0.57 → 5699, 0.69 → 6899) or has a fraction (1/3 → 3333) is
+    kept, and the bucket at the cut is dropped."""
+    from pyspark.sql import functions as F
+
+    from mongo_polars_reconciliation_spark.extensions.text import (
+        stratified_sample,
+    )
+    from mongo_polars_reconciliation_spark.functions.hashing import (
+        poly_hash_mixed_col,
+    )
+
+    cases = {"a": (0.57, 5699), "b": (0.69, 6899), "c": (1 / 3, 3333)}
+    bucket = F.pmod(poly_hash_mixed_col("doc_id"), F.lit(10_000))
+    found = (
+        spark.range(0, 200_000)
+        .selectExpr("id AS doc_id")
+        .withColumn("b", bucket)
+        .where(F.col("b").isin(*[b for _, b in cases.values()]))
+        .collect()
+    )
+    ids = {
+        b: sorted(r["doc_id"] for r in found if r["b"] == b)
+        for _, b in cases.values()
+    }
+    assert all(ids.values()), ids
+    docs = spark.createDataFrame(
+        [(i, s) for s, (_, b) in cases.items() for i in ids[b]]
+        + [(i, "d") for i in ids[5699]],
+        "doc_id long, lang string",
+    )
+    rates = {s: r for s, (r, _) in cases.items()}
+    out = stratified_sample(docs, "lang", rates, default_rate=0.5699)
+    kept = {r["doc_id"] for r in out.collect()}
+    want = {i for _, b in cases.values() for i in ids[b]}
+    assert kept == want, sorted(want - kept)
+
+
 def test_nearest_rank_is_exact_ceil(spark):
     """nearest_rank(q) is Python's exact ceil(q·n) for every n in 0…200,
     including the thirds, which no decimal string can express."""

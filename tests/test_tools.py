@@ -94,19 +94,22 @@ def test_no_module_level_ab_flags():
 
 
 def test_leaf_modules_imported_at_module_level():
-    """``functions.*`` and ``session`` import nothing from the package, so
-    no module needs to import them inside a function to break a cycle;
-    a function-local import of either is a hidden per-call cost and a
-    dependency the module header does not show."""
+    """``functions.*``, ``session`` and ``harness.oracles`` import nothing
+    from the package but ``functions``, so no module needs to import them
+    inside a function, or below its header, to break a cycle; such an
+    import is a hidden per-call cost and a dependency the module header
+    does not show."""
     import pathlib
     import re
 
     pkg = pathlib.Path(__file__).resolve().parents[1] / (
         "mongo_polars_reconciliation_spark"
     )
-    local = re.compile(
-        r"^\s+from mongo_polars_reconciliation_spark\.(functions\b|session import)"
+    leaf = (
+        r"from mongo_polars_reconciliation_spark\."
+        r"(functions\b|session import|harness\.oracles import)"
     )
+    local = re.compile(rf"^\s+{leaf}|^{leaf}.*noqa: E402")
     hits = [
         f"{path.relative_to(pkg)}:{i}"
         for path in sorted(pkg.rglob("*.py"))
@@ -114,6 +117,53 @@ def test_leaf_modules_imported_at_module_level():
         if local.match(line)
     ]
     assert not hits, hits
+
+
+# Each of these is the body of one shared SQL fragment in
+# harness/oracles.py (fixture CTE, kernel or cascade step); a second copy
+# is a fixture or kernel change waiting to be made in only one place.
+_ORACLE_FRAGMENT_LITERALS = [
+    "SELECT doc_id + 200000, substr(text, strpos(text, ' ') + 1)",
+    "0.4 * LEAST(1.0",
+    "i -> a.v[i]*b.v[i]",
+    "i -> v[i]*q[i]",
+    "ORDER BY cos_r DESC, vec_id",
+    "WHEN doc_id % 97 = 0",
+    "('en','the')",
+    "i -> CASE WHEN i <= 8 THEN 0.0",
+    "SELECT lo AS node FROM mis_edges UNION ALL",
+    "(h, c) -> (h*31 + c) % 8191",
+    "FLOOR(CAST(i.n_int AS DOUBLE)",
+    "ORDER BY ABS(b.importe - a.amount), b.row_num",
+    "generate_series(1, len(t)-",
+]
+
+
+def test_oracle_fragments_written_once():
+    """Every fixture CTE and SQL kernel of the DuckDB oracles is written
+    once, and the oracle module imports nothing from the package but the
+    shared SQL hash helpers (an oracle built from engine code would check
+    the engine against itself)."""
+    import ast
+    import pathlib
+
+    path = pathlib.Path(__file__).resolve().parents[1] / (
+        "mongo_polars_reconciliation_spark/harness/oracles.py"
+    )
+    src = path.read_text()
+    repeated = {
+        lit: src.count(lit)
+        for lit in _ORACLE_FRAGMENT_LITERALS
+        if src.count(lit) > 1
+    }
+    assert not repeated, repeated
+    pkg_imports = {
+        node.module
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.ImportFrom)
+        and (node.module or "").startswith("mongo_polars_reconciliation_spark")
+    }
+    assert pkg_imports == {"mongo_polars_reconciliation_spark.functions.hashing"}
 
 
 def test_capture_plans_names_unknown_faces(tmp_path):

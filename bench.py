@@ -141,10 +141,6 @@ SECONDARY = [
     "text_mix_temperature_alpha",
     "sim_knn_join_ivfpq_served",
     "text_pii_scrub",
-    # r14 additions
-    "recon_match_skewed",
-    # r15 additions
-    "recon_cascade_skewed",
 ]
 
 

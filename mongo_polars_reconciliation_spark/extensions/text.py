@@ -512,17 +512,21 @@ def stratified_sample(
                 f"stratified_sample: rate for {k!r} must be in [0, 1], got {r}"
             )
     h = F.pmod(poly_hash_mixed_col(id_col), F.lit(denom))
-
-    def cut(r: float) -> int:
-        # h < rate·denom over integer h is h < ceil(rate·denom), taken on
-        # the rate's decimal value: a float product can land just below an
-        # integer (0.57 · 10000 = 5699.999…)
-        return math.ceil(Fraction(str(r)) * denom)
-
     threshold = _per_stratum(
-        strata_col, {k: cut(r) for k, r in rates.items()}, cut(default_rate)
+        strata_col,
+        {k: _cut(r, denom) for k, r in rates.items()},
+        _cut(default_rate, denom),
     )
     return df.where(h < threshold)
+
+
+def _cut(x: float, denom: int) -> int:
+    """The integer threshold of ``h < x·denom`` over integer ``h``:
+    ``ceil(x·denom)``, taken on ``x``'s decimal value. A float product can
+    land just below an integer (0.57 · 10000 = 5699.999…), and rounding
+    it drops a bucket whenever ``x·denom`` has a fraction (1/3 → 3334,
+    not 3333)."""
+    return math.ceil(Fraction(str(x)) * denom)
 
 
 def _per_stratum(col: str, values: dict, default) -> Column:
@@ -1159,10 +1163,11 @@ def mix_epochs(
     base = _per_stratum(
         strata_col, {k: int(w) for k, w in weights.items()}, int(dw)
     )
+    # h < frac(w)·denom is h < ceil(w·denom) − floor(w)·denom
     thr = _per_stratum(
         strata_col,
-        {k: int(round((w - int(w)) * denom)) for k, w in weights.items()},
-        int(round((dw - int(dw)) * denom)),
+        {k: _cut(w, denom) - int(w) * denom for k, w in weights.items()},
+        _cut(dw, denom) - int(dw) * denom,
     )
     n_copies = base + F.when(h < thr, F.lit(1)).otherwise(F.lit(0))
     return (

@@ -1,15 +1,11 @@
-"""Skew-aware join helper: explicit key salting.
+"""Skew-proof aggregation: explicit key salting for a two-stage aggregate.
 
-At 100 TB the reconciliation keys are skew-prone (VOID amounts cluster, a
-hot settlement date can dominate a day's file). First line of defense is AQE
-skew-join splitting (on by default in session.py) — it needs no code. This
-helper is the explicit fallback for the cases AQE can't fix, e.g. a
-shuffle-hash join whose ONE hot key overwhelms a task even after splitting:
-replicate the small side R times and scatter the big side's hot rows across
-R salt buckets, turning one monster partition into R even ones.
-
-Cost model: the small side is duplicated R× (bounded — use only when small
-side ≪ big side) and the join output is identical to the unsalted join.
+At 100 TB the aggregation keys can be skew-prone (one event type can be
+most of a table). Map-side combine handles most of it; when a single hot
+key still overwhelms one reducer, ``salted_two_stage_agg`` scatters its
+rows over R salt buckets, aggregates per (key, salt), and merges the R
+partials per key. Skewed joins are left to AQE's skew-join splitting (on
+in session.py).
 """
 
 from __future__ import annotations
@@ -28,13 +24,6 @@ def salt_large(df: DataFrame, buckets: int) -> DataFrame:
     return df.withColumn(
         SALT, F.pmod(F.hash(*[F.col(c) for c in df.columns]), F.lit(buckets))
     )
-
-
-def replicate_small(df: DataFrame, buckets: int) -> DataFrame:
-    """Replicate: small side cross-joined with the salt domain so every salt
-    bucket of the large side finds its partner rows."""
-    salts = F.explode(F.sequence(F.lit(0), F.lit(buckets - 1))).alias(SALT)
-    return df.select("*", salts)
 
 
 def salted_two_stage_agg(
@@ -71,18 +60,3 @@ def salted_two_stage_agg(
             for out in sum_cols.values()
         ],
     )
-
-
-def salted_join(
-    large: DataFrame,
-    small: DataFrame,
-    on: list[str],
-    how: str = "inner",
-    buckets: int = 8,
-) -> DataFrame:
-    """``large ⋈ small`` on equi-keys with salting: result is identical to
-    ``large.join(small, on, how)`` but the shuffle distributes each hot key
-    over ``buckets`` tasks."""
-    l_salted = salt_large(large, buckets)
-    s_salted = replicate_small(small, buckets)
-    return l_salted.join(s_salted, on=[*on, SALT], how=how).drop(SALT)

@@ -2330,14 +2330,10 @@ FROM merged m JOIN full_scan g2 ON g2.j = m.j AND g2.b = m.b
 }
 
 # Faces whose answer is another face's by contract share its SQL:
-# - the skew-hardened match and cascade equal the plain ones (the hot-key
-#   split partitions the key space, so it cannot change a row);
 # - the csv sink round trip re-reads the internal residual;
 # - a drained bounded stream equals the batch aggregate;
 # - the star-based CC variant computes the same min-reachable-id fixpoint.
 for _face, _same in {
-    "recon_match_skewed": "recon_match_exact",
-    "recon_cascade_skewed": "recon_cascade_summary",
     "recon_csv_sink_roundtrip": "recon_residual_internal",
     "stream_events_hourly": "events_hourly",
     "stream_dedup_corpus": "dedup_exact",

@@ -7,8 +7,6 @@ sorts columns by name before value-hashing).
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -48,10 +46,7 @@ from mongo_polars_reconciliation_spark.harness.oracles import (
     PQ_ORACLE_N_ITER,
     PQ_ORACLE_RERANK,
 )
-from mongo_polars_reconciliation_spark.operators.match import (
-    hot_match_keys,
-    match_records,
-)
+from mongo_polars_reconciliation_spark.operators.match import match_records
 from mongo_polars_reconciliation_spark.operators.residuals import (
     residual_external,
     residual_internal,
@@ -64,6 +59,7 @@ from mongo_polars_reconciliation_spark.plans.pipeline import (
     TolerancePass,
 )
 from mongo_polars_reconciliation_spark.scratch import scratch_path
+from mongo_polars_reconciliation_spark.session import overlap
 from mongo_polars_reconciliation_spark.sources.state import (
     merge_keep_existing,
     remanent_lookup,
@@ -103,21 +99,6 @@ def _ab(spark: SparkSession, sf_dir: str):
 def recon_match_exact(spark, sf_dir) -> DataFrame:
     cfg, a, b = _ab(spark, sf_dir)
     matched, _ = match_records(a, b, cfg)
-    return matched.select(
-        "_id", F.col(ROW_NUM).alias("row_num"), "amount", "trx_date"
-    )
-
-
-def recon_match_skewed(spark, sf_dir) -> DataFrame:
-    """Exact match through the hot-key split plan: key tuples with a
-    combined A+B count ≥ 4 join via a broadcast of B's hot slice, the rest
-    sort-merges. The output is bit-identical to ``match_records``, so the
-    face shares ``recon_match_exact``'s oracle SQL. The threshold is
-    fixture-low (the synthetic B's densest key carries 3 candidate rows
-    against 1 A row — 16 hot keys at sf0.001, 165 at sf0.01) so the check
-    exercises BOTH branches."""
-    cfg, a, b = _ab(spark, sf_dir)
-    matched, _ = match_records(a, b, cfg, hot_keys=hot_match_keys(a, b, cfg, 4))
     return matched.select(
         "_id", F.col(ROW_NUM).alias("row_num"), "amount", "trx_date"
     )
@@ -177,22 +158,6 @@ def recon_cascade_summary(spark, sf_dir) -> DataFrame:
     rc = Reconciliation(cfg, a, b)
     rc.run(
         [ExactPass(), TolerancePass(TOLERANCE_RULES)],
-        zero_effect_rules=[ZE_RULE],
-    )
-    return rc.summary(amount_col="amount")
-
-
-def recon_cascade_skewed(spark, sf_dir) -> DataFrame:
-    """The flagship cascade with its exact pass on the hot-key split plan
-    (``ExactPass(hot_threshold=4)``). The buckets are bit-identical to
-    ``recon_cascade_summary`` — the split changes only the physical join
-    strategy — so the face shares its oracle SQL and the check IS the
-    pipeline-level bit-identity check. The threshold matches
-    ``recon_match_skewed`` so BOTH branches engage at both gate scales."""
-    cfg, a, b = _ab(spark, sf_dir)
-    rc = Reconciliation(cfg, a, b)
-    rc.run(
-        [ExactPass(hot_threshold=4), TolerancePass(TOLERANCE_RULES)],
         zero_effect_rules=[ZE_RULE],
     )
     return rc.summary(amount_col="amount")
@@ -1121,14 +1086,12 @@ def _fit_ivfpq(emb: DataFrame):
 
 
 def _run_pair(*calls: tuple) -> list:
-    """Run independent Spark actions (``(fn, *args)`` each) on a 2-thread
-    pool and return their results in call order. The IVF-PQ artifact
-    writes and reloads are independent jobs on disjoint dirs, so they
-    overlap (byte-identical artifacts; measured 0.81 → 0.44 s min for the
-    save+load pair)."""
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futures = [pool.submit(*c) for c in calls]
-        return [f.result() for f in futures]
+    """Run independent Spark actions (``(fn, *args)`` each) through
+    ``session.overlap`` and return their results in call order. The IVF-PQ
+    artifact writes and reloads are independent jobs on disjoint dirs, so
+    they overlap (byte-identical artifacts; measured 0.81 → 0.44 s min for
+    the save+load pair)."""
+    return overlap(lambda c: c[0](*c[1:]), calls)
 
 
 def sim_topk_ivfpq(spark, sf_dir) -> DataFrame:
@@ -2052,28 +2015,17 @@ def dedup_ingest_waves(spark, sf_dir) -> DataFrame:
     _shutil.rmtree(root, ignore_errors=True)
     # the three face writes are independent (disjoint dirs; every shared
     # input — a1 eager, seed_ledger/seed_bands/hist already materialized
-    # by wave 1) — overlap them on a driver pool (r16, guide §2.6); this
-    # is the BATCH wave path, no crash-ordering contract (unlike the
-    # streaming loop, whose ledger write must stay last)
-    with ThreadPoolExecutor(max_workers=3) as _pool:
-        for _f in [
-            _pool.submit(
-                lambda: seed_ledger.unionByName(a1).write.parquet(
-                    f"{root}/state/admitted"
-                )
-            ),
-            _pool.submit(
-                lambda: seed_bands.unionByName(band_state(adm1)).write.parquet(
-                    f"{root}/state/bands"
-                )
-            ),
-            _pool.submit(
-                lambda: hist.unionByName(adm1).write.parquet(
-                    f"{root}/state/docs"
-                )
-            ),
-        ]:
-            _f.result()
+    # by wave 1) — so they overlap; this is the BATCH wave path, no
+    # crash-ordering contract (unlike the streaming loop, whose ledger
+    # write must stay last)
+    overlap(
+        lambda face: face[0].write.parquet(f"{root}/state/{face[1]}"),
+        [
+            (seed_ledger.unionByName(a1), "admitted"),
+            (seed_bands.unionByName(band_state(adm1)), "bands"),
+            (hist.unionByName(adm1), "docs"),
+        ],
+    )
     tables = compact_ingest_state(
         spark,
         f"{root}/state",
@@ -2858,7 +2810,6 @@ QUERIES = {
     "sim_topk_ivf": sim_topk_ivf,
     "sim_knn_join_ivfpq_served": sim_knn_join_ivfpq_served,
     "sim_topk_lsh": sim_topk_lsh,
-    "recon_match_skewed": recon_match_skewed,
     "sim_contamination": sim_contamination,
     "events_hourly": events_hourly,
     "events_sessionize": events_sessionize,
@@ -2920,7 +2871,6 @@ QUERIES = {
     "stream_ingest_novel": stream_ingest_novel,
     "text_heavy_hitters_cms": text_heavy_hitters_cms,
     "text_cms_merge": text_cms_merge,
-    "recon_cascade_skewed": recon_cascade_skewed,
 }
 
 

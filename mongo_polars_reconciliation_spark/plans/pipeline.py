@@ -21,11 +21,6 @@ semantics the reference engine has anyway (Polars collects per step). The
 trade: a lost executor forces a job restart instead of partition
 recompute. A frame the caller already cached, or one that already is a
 checkpoint leaf, is used as is (``session.materialize``).
-
-Exact passes take an optional ``hot_threshold``: the pass then matches
-through ``match_candidates``' hot-key split plan, whose output is
-bit-identical to the plain plan (operators/match.py), so only the physical
-join strategy changes.
 """
 
 from __future__ import annotations
@@ -40,7 +35,6 @@ from mongo_polars_reconciliation_spark.config import (
     ZeroEffectRule,
 )
 from mongo_polars_reconciliation_spark.operators.match import (
-    hot_match_keys,
     match_candidates,
     split_winners_losers,
 )
@@ -60,16 +54,9 @@ class ExactPass:
     ``keys``: optional per-pass key set (a subset of the run config's pairs,
     since the prepared B frame only carries ``ext_``/``exd_`` columns for
     those) — the reference's cascade re-matches residuals on different key
-    configs between steps (src/reconciliation.py:66-73, new_rc_step).
-
-    ``hot_threshold``: when set, key tuples with at least this many combined
-    A+B rows (``hot_match_keys``) join through a broadcast of B's hot slice
-    and the rest sort-merges. The output is bit-identical to the plain
-    plan; set it for fanout-heavy hot keys, not for any frequent key.
-    ``None`` keeps the plain plan, where AQE picks the join by size."""
+    configs between steps (src/reconciliation.py:66-73, new_rc_step)."""
 
     keys: tuple = ()
-    hot_threshold: int | None = None
 
 
 @dataclass(frozen=True)
@@ -114,17 +101,8 @@ class Reconciliation:
         self.a_df = self._persist(clean)
         self.z_eff_a = _union(self.z_eff_a, pairs)
 
-    def match_records(self, hot_threshold: int | None = None) -> None:
-        # the split plan re-reads both inputs; run()/new_rc_step() have
-        # already checkpointed them, as match_candidates requires
-        hot_keys = (
-            None
-            if hot_threshold is None
-            else hot_match_keys(self.a_df, self.b_df, self.cfg, hot_threshold)
-        )
-        ranked = match_candidates(
-            self.a_df, self.b_df, self.cfg, hot_keys=hot_keys, cache=self._persist
-        )
+    def match_records(self) -> None:
+        ranked = match_candidates(self.a_df, self.b_df, self.cfg, cache=self._persist)
         matched, loser_b = split_winners_losers(ranked, self.cfg)
         self._candidates = ranked
         self.a_to_b_mt = _union(self.a_to_b_mt, matched)
@@ -176,7 +154,7 @@ class Reconciliation:
             if isinstance(p, ExactPass):
                 if p.keys:
                     self.cfg = replace(base_cfg, keys=list(p.keys))
-                self.match_records(hot_threshold=p.hot_threshold)
+                self.match_records()
                 self.not_match_records()
                 self.cfg = base_cfg
             else:

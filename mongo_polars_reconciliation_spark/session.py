@@ -8,15 +8,18 @@ nanos-as-long so the ``events`` table's TIMESTAMP(NANOS) parquet is readable,
 and the package root on the Python workers' ``PYTHONPATH``.
 
 :func:`materialize` is the one "checkpoint unless already materialized"
-rule the operators share, and :func:`widen` the one "repartition when
-narrower than the cluster" rule.
+rule the operators share, :func:`widen` the one "repartition when
+narrower than the cluster" rule, and :func:`overlap` the one driver
+thread pool for independent jobs.
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _WORKER_PATH = "spark.executorEnv.PYTHONPATH"
@@ -97,3 +100,21 @@ def widen(df: DataFrame, *cols) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target, *cols)
     return df
+
+
+def overlap(fn, items) -> list:
+    """``[fn(x) for x in items]`` on a 2-thread driver pool, results in
+    item order: independent jobs (disjoint output dirs, read-only inputs)
+    overlap, so one job's straggler tasks leave no executor slot idle.
+    Each call runs with a copy of the calling thread's local properties
+    (job description, job group, call site, scheduler pool): under
+    PySpark's pinned-thread mode a plain pool thread is a fresh JVM thread
+    and would start its jobs unlabelled. The copy is taken per item, in
+    the calling thread, because a SQL execution writes its id into its
+    thread's properties and two workers must not share one object."""
+    session = SparkSession.active()
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(session)(fn), x) for x in items
+        ]
+        return [f.result() for f in futures]

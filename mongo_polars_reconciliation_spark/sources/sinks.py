@@ -20,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from mongo_polars_reconciliation_spark.session import overlap
+
 
 def save_bucket_csv(df: DataFrame, path: str) -> None:
     """CSV sink with the reference's single-file semantics (S6): the
@@ -70,11 +72,11 @@ def persist_results(
 
     The bucket writes are independent (distinct source frames, disjoint
     target dirs), so they run on a 2-worker driver thread pool, as the
-    reference's loop did: the next bucket's jobs fill executor slots left
-    idle by the previous bucket's straggler tasks. On the perfbench
+    reference's loop did (``session.overlap``): the next bucket's jobs fill
+    executor slots left idle by the previous bucket's straggler tasks, and
+    every job carries the caller's job description. On the perfbench
     ``recon_daily`` buckets (4 cores) a sequential loop measured a median
     of 1.26-1.43 s per call, the pool 0.91-0.99 s."""
-    from concurrent.futures import ThreadPoolExecutor
 
     def _persist_one(item: tuple[str, tuple[DataFrame, str]]) -> tuple[str, str]:
         name, (df, ts_col) = item
@@ -82,8 +84,7 @@ def persist_results(
         write_time_partitioned(df, final, ts_col)
         return name, final
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        paths = dict(pool.map(_persist_one, buckets.items()))
+    paths = dict(overlap(_persist_one, buckets.items()))
     if summary is not None:
         path = f"{out_root}/aggregated_results"
         summary.coalesce(1).write.mode("overwrite").parquet(path)

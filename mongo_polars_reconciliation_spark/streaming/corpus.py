@@ -51,13 +51,13 @@ from __future__ import annotations
 
 import os
 import shutil
-from concurrent.futures import ThreadPoolExecutor
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mongo_polars_reconciliation_spark.extensions.text import cms_cells
+from mongo_polars_reconciliation_spark.session import overlap
 from mongo_polars_reconciliation_spark.streaming.events import drain
 
 
@@ -95,8 +95,7 @@ def read_documents_stream(
             f"{feed}/part{i}"
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        list(pool.map(_write_part, range(n_files)))
+    overlap(_write_part, range(n_files))
     now = _time.time()
     for i in range(n_files):
         for f in _glob.glob(f"{feed}/part{i}/*.parquet"):
@@ -211,8 +210,7 @@ def _crawl_loop(
 
         # the pre-ledger appends read only the two checkpoints and land in
         # disjoint dirs, so they overlap; the ledger waits for all of them
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            list(pool.map(append, faces[:-1]))
+        overlap(append, faces[:-1])
         append(faces[-1])
 
     drain(
@@ -518,10 +516,9 @@ def _compact_faces(
         return face, table
 
     # face rewrites are independent (distinct tables, distinct source
-    # dirs) — overlap them on a small driver pool so one face's write
-    # tail back-fills with the next face's scan
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        return dict(pool.map(_compact_one, faces.items()))
+    # dirs) — overlap them so one face's write tail back-fills with the
+    # next face's scan
+    return dict(overlap(_compact_one, faces.items()))
 
 
 def ingest_novel_state(

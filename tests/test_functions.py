@@ -313,34 +313,40 @@ def test_stratified_sample_rejects_rates_outside_unit_interval(spark):
     assert stratified_sample(docs, "lang", {"en": 1.0}, default_rate=0.0).count() == 1
 
 
-def test_stratified_sample_threshold_is_exact_ceil(spark):
-    """A row is kept iff its bucket pmod(h, 10000) < rate·10000 exactly:
-    the bucket just below a rate whose float product falls short of the
-    integer (0.57 → 5699, 0.69 → 6899) or has a fraction (1/3 → 3333) is
-    kept, and the bucket at the cut is dropped."""
+def _ids_by_bucket(spark, buckets):
+    """bucket → the ids below 200,000 whose mixed-hash bucket
+    ``pmod(h, 10000)`` is that bucket (the samplers' ``h``); every
+    bucket gets at least one id."""
     from pyspark.sql import functions as F
 
-    from mongo_polars_reconciliation_spark.extensions.text import (
-        stratified_sample,
-    )
     from mongo_polars_reconciliation_spark.functions.hashing import (
         poly_hash_mixed_col,
     )
 
-    cases = {"a": (0.57, 5699), "b": (0.69, 6899), "c": (1 / 3, 3333)}
     bucket = F.pmod(poly_hash_mixed_col("doc_id"), F.lit(10_000))
     found = (
         spark.range(0, 200_000)
         .selectExpr("id AS doc_id")
         .withColumn("b", bucket)
-        .where(F.col("b").isin(*[b for _, b in cases.values()]))
+        .where(F.col("b").isin(*buckets))
         .collect()
     )
-    ids = {
-        b: sorted(r["doc_id"] for r in found if r["b"] == b)
-        for _, b in cases.values()
-    }
+    ids = {b: sorted(r["doc_id"] for r in found if r["b"] == b) for b in buckets}
     assert all(ids.values()), ids
+    return ids
+
+
+def test_stratified_sample_threshold_is_exact_ceil(spark):
+    """A row is kept iff its bucket pmod(h, 10000) < rate·10000 exactly:
+    the bucket just below a rate whose float product falls short of the
+    integer (0.57 → 5699, 0.69 → 6899) or has a fraction (1/3 → 3333) is
+    kept, and the bucket at the cut is dropped."""
+    from mongo_polars_reconciliation_spark.extensions.text import (
+        stratified_sample,
+    )
+
+    cases = {"a": (0.57, 5699), "b": (0.69, 6899), "c": (1 / 3, 3333)}
+    ids = _ids_by_bucket(spark, [b for _, b in cases.values()])
     docs = spark.createDataFrame(
         [(i, s) for s, (_, b) in cases.items() for i in ids[b]]
         + [(i, "d") for i in ids[5699]],
@@ -351,6 +357,32 @@ def test_stratified_sample_threshold_is_exact_ceil(spark):
     kept = {r["doc_id"] for r in out.collect()}
     want = {i for _, b in cases.values() for i in ids[b]}
     assert kept == want, sorted(want - kept)
+
+
+def test_mix_epochs_threshold_is_exact_ceil(spark):
+    """A row gets its extra copy iff its bucket pmod(h, 10000) <
+    frac(w)·10000 exactly: bucket 3333 is below 3333.33…, so it gets one
+    at weights 1/3 and 4/3, and bucket 3334 gets none."""
+    from pyspark.sql import functions as F
+
+    from mongo_polars_reconciliation_spark.extensions.text import mix_epochs
+
+    ids = _ids_by_bucket(spark, [3333, 3334])
+    docs = spark.createDataFrame(
+        [(i, s) for s in ("third", "four_thirds") for b in ids for i in ids[b]],
+        "doc_id long, lang string",
+    )
+    out = mix_epochs(docs, "lang", {"third": 1 / 3}, default_weight=4 / 3)
+    copies = {
+        (r["lang"], r["doc_id"]): r["n"]
+        for r in out.groupBy("lang", "doc_id").agg(F.count("*").alias("n")).collect()
+    }
+    for i in ids[3333]:
+        assert copies.get(("third", i)) == 1, i
+        assert copies.get(("four_thirds", i)) == 2, i
+    for i in ids[3334]:
+        assert ("third", i) not in copies, i
+        assert copies.get(("four_thirds", i)) == 1, i
 
 
 def test_nearest_rank_is_exact_ceil(spark):

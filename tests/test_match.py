@@ -2,10 +2,7 @@ import pytest
 from conftest import rows
 
 from mongo_polars_reconciliation_spark.config import KeyPair, ReconConfig
-from mongo_polars_reconciliation_spark.operators.match import (
-    hot_match_keys,
-    match_records,
-)
+from mongo_polars_reconciliation_spark.operators.match import match_records
 from mongo_polars_reconciliation_spark.operators.residuals import (
     residual_external,
     residual_internal,
@@ -109,14 +106,14 @@ def test_null_keys_never_match(spark):
     assert residual_external(b, a, CFG).count() == 1
 
 
-# --- skew-hardened match (r14, VERDICT r13 #2) --------------------------------
+# --- a hot key ---------------------------------------------------------------
 
 
 @pytest.fixture(scope="module")
 def skewed_ab(spark):
-    """Deliberately skewed fixture: key ("HOT", 7.0) carries ~half of A and
-    3 candidates on B (duplicate arbitration inside the hot branch); the
-    long tail is unique 1:1 keys plus residuals on both sides."""
+    """Deliberately skewed fixture: key ("HOT", 7.0) carries half of A
+    (a0..a199) and 3 candidates on B (x0, x1, x2); the long tail is unique
+    1:1 keys that overlap on T203..T399, plus residuals on both sides."""
     from pyspark.sql import functions as F
 
     a = spark.range(0, 400).select(
@@ -142,241 +139,28 @@ def skewed_ab(spark):
     return a.localCheckpoint(), b.localCheckpoint()
 
 
-def test_match_skewed_equals_plain(skewed_ab):
-    """Bit-identity: the hot-key split partitions the key space, so winners
-    AND losers equal the single-join plan's row-for-row (both arbitrate by
-    ext_file_row_number inside per-branch id groups that cannot straddle
-    the split — an id has one key tuple)."""
+def test_match_hot_key_winners_and_losers(skewed_ab):
+    """One join arbitrates a hot key like any other: each of the 200 hot A
+    rows wins the first B candidate in file order and returns the other
+    two, and the tail matches 1:1."""
     a, b = skewed_ab
-    matched_p, losers_p = match_records(a, b, CFG)
-    matched_s, losers_s = match_records(
-        a, b, CFG, hot_keys=hot_match_keys(a, b, CFG, 50)
+    matched, losers = match_records(a, b, CFG)
+    hot = [f"a{i}" for i in range(200)]
+    tail = [f"a{i}" for i in range(203, 400)]
+    assert rows(matched, "_id", "ext_payload") == sorted(
+        [(i, "x0") for i in hot] + [(i, f"x{int(i[1:]) - 200}") for i in tail]
     )
-    assert rows(matched_s) == rows(matched_p)
-    assert rows(losers_s) == rows(losers_p)
-    assert matched_s.columns == matched_p.columns
-    assert losers_s.columns == losers_p.columns
-    # the fixture actually engages BOTH branches: 200 hot A rows x 3 B
-    # candidates -> 200 winners + 400 losers in the hot branch; the tail
-    # overlap T203..T399 contributes 197 1:1 winners via sort-merge
-    assert matched_s.count() == 200 + 197
-    assert losers_s.count() == 400
+    assert rows(losers, "ext_payload") == sorted([("x1",), ("x2",)] * 200)
+    assert set(losers.columns) == set(b.columns)
 
 
-def test_match_skewed_strict_compat_equals_plain(skewed_ab):
-    """The faithful middle-drop bug arbitration also survives the split."""
+def test_match_hot_key_strict_compat(skewed_ab):
+    """strict_compat on a hot key: only the LAST of the three candidates
+    returns per A row, the middle one vanishes, and the winners are the
+    same as without it."""
     a, b = skewed_ab
     cfg = ReconConfig(keys=CFG.keys, strict_compat=True)
-    matched_p, losers_p = match_records(a, b, cfg)
-    matched_s, losers_s = match_records(
-        a, b, cfg, hot_keys=hot_match_keys(a, b, cfg, 50)
-    )
-    assert rows(matched_s) == rows(matched_p)
-    assert rows(losers_s) == rows(losers_p)
-
-
-def test_match_skewed_plan_broadcasts_hot_slice(spark, skewed_ab):
-    """Plan pin: the hot slice joins via BroadcastHashJoin (it never enters
-    a shuffle) while the tail keeps sort-merge. autoBroadcastJoinThreshold
-    is disabled so the pin can't pass by Spark size-estimating the whole
-    small fixture into a broadcast — only the explicit hot-slice hint (and
-    the aggregate-sized hot-key splitter frames) may broadcast."""
-    from mongo_polars_reconciliation_spark.operators.match import (
-        match_candidates,
-    )
-
-    a, b = skewed_ab
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        ranked = match_candidates(a, b, CFG, hot_keys=hot_match_keys(a, b, CFG, 50))
-        plan = ranked._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    inner_bcast = [
-        ln for ln in plan.splitlines()
-        if "BroadcastHashJoin" in ln and "Inner" in ln
-    ]
-    inner_smj = [
-        ln for ln in plan.splitlines()
-        if "SortMergeJoin" in ln and "Inner" in ln
-    ]
-    assert inner_bcast, plan  # the hot match join is broadcast
-    assert inner_smj, plan    # the tail match join still sort-merges
-
-
-def test_hot_match_keys_counts_both_sides(spark):
-    """A key can be hot from either side: combined count (nA+nB) decides,
-    mirroring the ingest kernel's combined_cap_keys discipline."""
-    a = spark.createDataFrame(
-        [("a1", "AHOT", 1.0)] * 6 + [("a2", "BHOT", 2.0), ("a3", "COLD", 3.0)],
-        ["_id", "transaction_code", "approved_transaction_amount"],
-    )
-    b = prepare_external(
-        spark.createDataFrame(
-            [(i, "BHOT", "2.0") for i in range(6)] + [(9, "COLD", "3.0")],
-            ["ord", "codigo", "importe"],
-        ),
-        CFG, order_by=["ord"],
-    ).drop("ext_ord")
-    hot = rows(hot_match_keys(a, b, CFG, hot_threshold=6))
-    assert hot == [("AHOT", 1.0), ("BHOT", 2.0)]
-
-
-def test_hot_match_keys_auto_budget_rule(spark):
-    """r15 (VERDICT r14 #4): the budget rule keeps the fattest keys while
-    their cumulative B-side row count fits the broadcast budget, floors the
-    candidate set at min_fanout, and breaks combined-count ties by key
-    value (deterministic pick)."""
-    from mongo_polars_reconciliation_spark.operators.match import (
-        hot_match_keys_auto,
-    )
-
-    # per-key layout: (key, nA, nB) -> combined
-    #   K1: 2+10=12, K2: 6+4=10, K3: 8+2=10 (tie with K2), K4: 1+1=2
-    a = spark.createDataFrame(
-        [("a", "K1", 1.0)] * 2 + [("a", "K2", 2.0)] * 6
-        + [("a", "K3", 3.0)] * 8 + [("a", "K4", 4.0)],
-        ["_id", "transaction_code", "approved_transaction_amount"],
-    )
-    b = prepare_external(
-        spark.createDataFrame(
-            [(i, "K1", "1.0") for i in range(10)]
-            + [(20 + i, "K2", "2.0") for i in range(4)]
-            + [(30 + i, "K3", "3.0") for i in range(2)]
-            + [(40, "K4", "4.0")],
-            ["ord", "codigo", "importe"],
-        ),
-        CFG, order_by=["ord"],
-    ).drop("ext_ord")
-    # budget 14: K1 (cum nB 10) + K2 (cum 14) fit; K3 (cum 16) does not.
-    # K2 enters before K3 on the tie because "K2" < "K3".
-    got = rows(hot_match_keys_auto(a, b, CFG, broadcast_budget_rows=14,
-                                   min_fanout=3))
-    assert got == [("K1", 1.0), ("K2", 2.0)]
-    # min_fanout floors the candidate set regardless of budget headroom
-    got_all = rows(hot_match_keys_auto(a, b, CFG, broadcast_budget_rows=10**6,
-                                       min_fanout=3))
-    assert got_all == [("K1", 1.0), ("K2", 2.0), ("K3", 3.0)]
-    # the whole frame stays declarative: nothing above collected anything
-    # until rows() did
-    # r16 note: both calls above double as the design-point pruned==unpruned
-    # equality pin (VERDICT r15 #4) — the top-K cap (budget//min_fanout = 4
-    # resp. 333333) exceeds the candidate count, so the pre-prune is a
-    # no-op there and these expectations are exactly what the r15 unpruned
-    # rule computed.
-
-
-def test_hot_match_keys_auto_skips_useless_keys(spark):
-    """r16 (ADVICE r15, both items): key tuples that can never usefully
-    occupy the broadcast budget are dropped BEFORE the ranking window —
-    (1) tuples with a NULL component (equality semi-joins never match
-    them; a fat NULL cluster must not crowd out real hot keys), (2)
-    tuples with zero B-side rows (nothing to broadcast), (3) tuples
-    whose B slice ALONE exceeds the budget (previously its prefix sum
-    poisoned the budget and disabled the split for every later fitting
-    key — now it is skipped and they are admitted)."""
-    from mongo_polars_reconciliation_spark.operators.match import (
-        hot_match_keys_auto,
-    )
-
-    # per-key layout: (key, nA, nB)
-    #   NULL cluster: 8 A rows, 8 B rows (combined 16 — fattest)
-    #   MONSTER:      2 A rows, 9 B rows (nb 9 > budget 8 — unadmittable)
-    #   HOT:          4 A rows, 4 B rows (fits)
-    #   AONLY:        6 A rows, 0 B rows (nothing to broadcast)
-    a = spark.createDataFrame(
-        [("a", None, 1.0)] * 8 + [("a", "MONSTER", 2.0)] * 2
-        + [("a", "HOT", 3.0)] * 4 + [("a", "AONLY", 4.0)] * 6,
-        "`_id` string, transaction_code string, "
-        "approved_transaction_amount double",
-    )
-    b = prepare_external(
-        spark.createDataFrame(
-            [(i, None, "1.0") for i in range(8)]
-            + [(10 + i, "MONSTER", "2.0") for i in range(9)]
-            + [(30 + i, "HOT", "3.0") for i in range(4)],
-            "ord int, codigo string, importe string",
-        ),
-        CFG, order_by=["ord"],
-    ).drop("ext_ord")
-    got = rows(hot_match_keys_auto(a, b, CFG, broadcast_budget_rows=8,
-                                   min_fanout=3))
-    assert got == [("HOT", 3.0)]
-
-
-def test_hot_match_keys_auto_cap_truncates_to_prefix(spark):
-    """r16 (VERDICT r15 #4): on an adversarial workload of many
-    min-fanout keys with tiny B slices, the budget//min_fanout top-K cap
-    binds and the rule keeps the cap-many FATTEST keys — still a prefix
-    of the unpruned ranking, so still budget-respecting and still a
-    valid key-space partition (the skewed match is bit-identical under
-    any partition)."""
-    from mongo_polars_reconciliation_spark.operators.match import (
-        hot_match_keys_auto,
-    )
-
-    # 6 keys K0..K5: key Ki has (6-i)+1 A rows and 1 B row, so combined
-    # counts 8,7,6,5,4,3 — all >= min_fanout 3, all nb=1. budget 9 would
-    # admit all six by the prefix rule (cum nb 6 <= 9), but the cap is
-    # 9 // 3 = 3, so the three fattest survive.
-    a_rows = []
-    for i in range(6):
-        a_rows += [("a", f"K{i}", float(i))] * (7 - i)
-    a = spark.createDataFrame(
-        a_rows,
-        "`_id` string, transaction_code string, "
-        "approved_transaction_amount double",
-    )
-    b = prepare_external(
-        spark.createDataFrame(
-            [(i, f"K{i}", str(float(i))) for i in range(6)],
-            "ord int, codigo string, importe string",
-        ),
-        CFG, order_by=["ord"],
-    ).drop("ext_ord")
-    got = rows(hot_match_keys_auto(a, b, CFG, broadcast_budget_rows=9,
-                                   min_fanout=3))
-    assert got == [("K0", 0.0), ("K1", 1.0), ("K2", 2.0)]
-
-
-def test_hot_match_keys_auto_feeds_skewed_match(skewed_ab):
-    """The auto-derived frame drops into match_records as hot_keys and the
-    bit-identity still holds (the rule is just another way to pick the
-    key-space partition)."""
-    from mongo_polars_reconciliation_spark.operators.match import (
-        hot_match_keys_auto,
-    )
-
-    a, b = skewed_ab
-    hot = hot_match_keys_auto(a, b, CFG, broadcast_budget_rows=100,
-                              min_fanout=50)
-    assert rows(hot) == [("HOT", 7.0)]  # the rule finds the monster key
-    matched_p, losers_p = match_records(a, b, CFG)
-    matched_s, losers_s = match_records(a, b, CFG, hot_keys=hot)
-    assert rows(matched_s) == rows(matched_p)
-    assert rows(losers_s) == rows(losers_p)
-
-
-def test_match_skewed_null_keys_and_arg_contract(spark):
-    """NULL-keyed rows stay in the sort-merge branch and drop out of the
-    inner join exactly as in the plain plan; a caller-supplied hot_keys
-    frame is honored as-is."""
-    a = spark.createDataFrame(
-        [("a1", None, 1.0), ("a2", "T1", 1.0)],
-        "`_id` string, transaction_code string, approved_transaction_amount double",
-    )
-    b = prepare_external(
-        spark.createDataFrame(
-            [(1, None, "1.0"), (2, "T1", "1.0")],
-            "ord int, codigo string, importe string",
-        ),
-        CFG, order_by=["ord"],
-    ).drop("ext_ord")
-    matched, _ = match_records(a, b, CFG, hot_keys=hot_match_keys(a, b, CFG, 2))
-    assert rows(matched, "_id") == [("a2",)]
-    explicit = spark.createDataFrame(
-        [("T1", 1.0)], ["transaction_code", "approved_transaction_amount"]
-    )
-    matched_e, _ = match_records(a, b, CFG, hot_keys=explicit)
-    assert rows(matched_e, "_id") == [("a2",)]
+    matched_s, losers_s = match_records(a, b, cfg)
+    matched, _ = match_records(a, b, CFG)
+    assert rows(matched_s) == rows(matched)
+    assert rows(losers_s, "ext_payload") == [("x2",)] * 200

@@ -37,15 +37,20 @@ def duck():
 
 
 def normalize(rows, colnames):
-    """Sort columns by name, then rows; floats to a canonical repr."""
+    """Sort columns by name, then rows. Each value becomes a tagged key:
+    NULL ``(0,)``, NaN ``(1,)``, any other value ``(2, v)`` (array
+    elements likewise), so rows that mix NULL or NaN with numbers sort,
+    and NULL still equals only NULL."""
     order = sorted(range(len(colnames)), key=lambda i: colnames[i])
 
     def canon(v):
-        if isinstance(v, float):
-            if math.isnan(v):
-                return "NaN"
-            return v
-        return v
+        if v is None:
+            return (0,)
+        if isinstance(v, float) and math.isnan(v):
+            return (1,)
+        if isinstance(v, list):
+            return (2, tuple(canon(e) for e in v))
+        return (2, v)
 
     return sorted(tuple(canon(r[i]) for i in order) for r in rows)
 
@@ -74,6 +79,23 @@ def test_query_matches_oracle(spark, duck, name):
     sn, dn = normalize(spark_rows, spark_cols), normalize(duck_rows, duck_cols)
     mismatches = [(a, b) for a, b in zip(sn, dn) if a != b]
     assert not mismatches, f"{name}: first mismatches {mismatches[:5]}"
+
+
+def test_normalize_orders_null_apart_from_numbers():
+    """Rows mixing NULL with floats and ints sort without a TypeError, and
+    NULL equals only NULL: not 0, not NaN, not a value of another row."""
+    nan = float("nan")
+    spark_rows = [(2, None), (1, 0.5), (None, 3), (1, None), (nan, 1)]
+    duck_rows = [(None, 3), (1, 0.5), (1, None), (2, None), (nan, 1)]
+    sn = normalize(spark_rows, ["b", "a"])
+    assert sn == normalize(duck_rows, ["b", "a"])
+    assert sn == normalize(list(reversed(spark_rows)), ["b", "a"])
+    assert normalize([(None,)], ["a"]) != normalize([(0,)], ["a"])
+    assert normalize([(None,)], ["a"]) != normalize([(nan,)], ["a"])
+    assert normalize([(1,)], ["a"]) == normalize([(1.0,)], ["a"])
+    arrays = [([1.0, None],), ([1.0, 2.0],)]
+    assert normalize(arrays, ["a"]) == normalize(arrays[::-1], ["a"])
+    assert normalize([([None],)], ["a"]) != normalize([([0],)], ["a"])
 
 
 def test_entry_smoke(spark):

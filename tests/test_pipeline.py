@@ -58,9 +58,9 @@ def build(spark):
 
 def build_skewed(spark):
     """Cascade-shaped skewed fixture: key ("HOT", 7.0) carries 60 A rows and
-    3 B candidates (duplicate arbitration inside the hot branch), a 1:1
+    3 B candidates (duplicate arbitration on a hot key), a 1:1
     tail, residuals on both sides, and one zero-effect pair — every bucket
-    is non-trivial and both split branches engage at hot_threshold=10."""
+    is non-trivial."""
     from pyspark.sql import functions as F
 
     a = (
@@ -103,61 +103,52 @@ def build_skewed(spark):
     return a, b
 
 
-SKEW_PASSES_PLAIN = [
-    ExactPass(),
-    ExactPass(keys=(KeyPair("transaction_code", "codigo", None),)),
-]
-SKEW_PASSES_HOT = [
-    ExactPass(hot_threshold=10),
-    ExactPass(
-        keys=(KeyPair("transaction_code", "codigo", None),), hot_threshold=10
-    ),
-]
+def test_cascade_on_a_hot_key(spark, monkeypatch):
+    """A full-key exact pass, then a reduced-key one, over a hot key: the
+    60 hot A rows each win the first of their 3 candidates, the 2 losing
+    candidates per row return to ``b_to_a_nmt``, the second pass matches
+    on its replaced cfg, and every bucket keeps its columns."""
+    import mongo_polars_reconciliation_spark.plans.pipeline as pipeline
 
+    code_only = (KeyPair("transaction_code", "codigo", None),)
+    seen = []
+    real = pipeline.match_candidates
 
-def test_cascade_skew_knob_buckets_equal_plain(spark):
-    """The hot_threshold knob threaded through the cascade produces
-    bit-identical buckets — both the full-key pass and a
-    reduced-key second pass (replaced cfg) run the skewed plan, and every
-    accumulator bucket equals the plain cascade's row-for-row."""
+    def spy(a, b, cfg, cache=None):
+        seen.append(tuple(cfg.keys))
+        return real(a, b, cfg, cache=cache)
+
+    monkeypatch.setattr(pipeline, "match_candidates", spy)
     a, b = build_skewed(spark)
-    out = {}
-    for tag, passes in (("plain", SKEW_PASSES_PLAIN), ("hot", SKEW_PASSES_HOT)):
-        rc = Reconciliation(CFG, a, b)
-        buckets = rc.run(passes, zero_effect_rules=[ZE])
-        out[tag] = {k: (rows(df), df.columns) for k, df in buckets.items()}
-        rc.unpersist()
-    assert set(out["hot"]) == set(out["plain"])
-    for k in out["plain"]:
-        assert out["hot"][k][1] == out["plain"][k][1], k  # same columns
-        assert out["hot"][k][0] == out["plain"][k][0], k  # same rows
-    # the fixture engages the hot branch for real: 60 hot A ids win one of
-    # 3 candidates each and the 2 losing candidates return per id group
-    mt = [r[0] for r in out["hot"]["a_to_b_mt"][0]]
-    assert sum(1 for _id in mt if _id.startswith("a")) >= 60
+    rc = Reconciliation(CFG, a, b)
+    buckets = rc.run(
+        [ExactPass(), ExactPass(keys=code_only)], zero_effect_rules=[ZE]
+    )
+    assert seen == [tuple(CFG.keys), code_only]
+    assert rc.cfg is CFG
 
+    rn = CFG.ext_row_number_col
+    hot_rn = sorted(r[rn] for r in b.where("ext_codigo = 'HOT'").collect())
+    mt = rows(buckets["a_to_b_mt"], "_id", rn)
+    hot = [(i, n) for i, n in mt if int(i[1:]) < 60]
+    assert hot == sorted((f"a{i}", hot_rn[0]) for i in range(60))
+    assert len(mt) == 60 + 57  # the 1:1 tail overlaps on T63..T119
+    back = rows(buckets["b_to_a_nmt"].where("ext_codigo = 'HOT'"), rn)
+    assert back == sorted([(hot_rn[1],), (hot_rn[2],)] * 60)
+    assert buckets["b_to_a_nmt"].count() == 120 + 40  # losers + T120..T159
+    assert rows(buckets["a_to_b_nmt"], "_id") == [("a60",), ("a61",), ("a62",)]
 
-def test_cascade_skew_knob_plan_pin(spark):
-    """Pipeline-level plan pin: with the knob set, the pass built by
-    Reconciliation.match_records carries the split plan — BroadcastHashJoin
-    for the hot slice, SortMergeJoin for the tail — with auto-broadcast
-    disabled so the pin cannot pass by size estimation. Materialization is
-    stubbed to identity for the pin only: the checkpoint leaf hides the
-    join operators from toString, and what the pin must witness is the
-    plan the pipeline BUILDS."""
-    a, b = build_skewed(spark)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        rc = Reconciliation(CFG, a, b)
-        rc._persist = lambda df: df  # identity materialization (pin-only)
-        rc.match_records(hot_threshold=10)
-        plan = rc._candidates._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    lines = plan.splitlines()
-    assert any("BroadcastHashJoin" in ln and "Inner" in ln for ln in lines), plan
-    assert any("SortMergeJoin" in ln and "Inner" in ln for ln in lines), plan
+    # the code-only pass consumes only B's code column, so its matches
+    # would carry ext_importe; the bucket keeps it beside the exd_ copies
+    assert set(buckets["a_to_b_mt"].columns) == {
+        *A_COLS, rn, "ext_importe", "exd_codigo", "exd_importe"
+    }
+    assert set(buckets["a_to_b_nmt"].columns) == set(A_COLS)
+    assert set(buckets["b_to_a_nmt"].columns) == set(b.columns)
+    assert set(buckets["z_eff_a"].columns) == {
+        *A_COLS, *(f"{c}_right" for c in A_COLS if c not in ZE.b2_cols)
+    }
+    rc.unpersist()
 
 
 def test_not_match_records_needs_a_prior_match(spark):

@@ -105,53 +105,6 @@ def test_lsh_probe_filter_is_scan_side(spark):
     assert "Join" not in plan
 
 
-def test_hot_key_auto_rule_preprune_is_take_ordered(spark):
-    """r16 (VERDICT r15 #4): the budget-derived hot-key rule's ranking
-    window must be fed by a distributed top-K (TakeOrderedAndProject —
-    per-partition top-K + single-partition merge), never a full global
-    Sort of the key aggregate, so the single-partition window input is
-    capped at budget/min_fanout keys whatever the key-count
-    distribution. Also: no Python evaluation, no cartesian, and the
-    arbitrary-size key frame never becomes a driver collect."""
-    from mongo_polars_reconciliation_spark.config import KeyPair, ReconConfig
-    from mongo_polars_reconciliation_spark.operators.match import (
-        hot_match_keys_auto,
-    )
-    from mongo_polars_reconciliation_spark.sources.external import (
-        prepare_external,
-    )
-
-    cfg = ReconConfig(
-        keys=[
-            KeyPair("transaction_code", "codigo", None),
-            KeyPair("approved_transaction_amount", "importe", "double"),
-        ]
-    )
-    a = spark.createDataFrame(
-        [("a", f"K{i % 4}", float(i % 4)) for i in range(64)],
-        "`_id` string, transaction_code string, "
-        "approved_transaction_amount double",
-    )
-    b = prepare_external(
-        spark.createDataFrame(
-            [(i, f"K{i % 4}", str(float(i % 4))) for i in range(64)],
-            "ord int, codigo string, importe string",
-        ),
-        cfg, order_by=["ord"],
-    ).drop("ext_ord")
-    df = hot_match_keys_auto(a, b, cfg, broadcast_budget_rows=64,
-                             min_fanout=8)
-    plan = formatted_plan(df)
-    assert "TakeOrderedAndProject" in plan
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
-    assert "CartesianProduct" not in plan
-    # exactly one Sort is acceptable: the single-partition window sort
-    # over the <= cap pre-pruned rows; the pre-prune itself must NOT be
-    # a Sort+GlobalLimit pair (that shape sorts the whole key frame)
-    assert "GlobalLimit" not in plan
-
-
 @pytest.mark.parametrize(
     "name", ["dedup_minhash_lsh", "dedup_simhash", "dedup_ngram_jaccard"]
 )

@@ -4208,98 +4208,6 @@ def test_ivfpq_rows_come_from_probed_cells_and_rerank_is_exact(spark):
         assert bf[r["vec_id"]] == r["cos_r"], r
 
 
-# nullable key variant: exercises the auto rule's NULL-cluster filter
-_nrows = st.lists(
-    st.tuples(st.one_of(st.none(), _key), _amt), max_size=20
-)
-
-
-@settings(max_examples=8, deadline=None)
-@given(
-    ra=_nrows,
-    rb=_nrows,
-    budget=st.sampled_from([1, 3, 6, 100]),
-    min_fanout=st.sampled_from([1, 2, 4]),
-)
-def test_hot_match_keys_auto_matches_python_model(
-    spark, ra, rb, budget, min_fanout
-):
-    """r16: the hardened budget rule (`hot_match_keys_auto`) equals a
-    sequential Python replay for ANY workload, budget and fanout floor —
-    eligibility filters (nk >= min_fanout, non-NULL components, 1 <= nb
-    <= budget), deterministic (-nk, key) ranking, the budget//min_fanout
-    top-K cap, and maximal-prefix admission under the cumulative B-side
-    budget. Because nb >= 1 for every candidate, the cumulative sum is
-    strictly increasing and the <=-budget filter IS a prefix — the
-    replay's early break is exact."""
-    from collections import Counter
-
-    from mongo_polars_reconciliation_spark.operators.match import (
-        hot_match_keys_auto,
-    )
-
-    a, b = _frames(spark, ra, rb)
-    got = sorted(
-        map(
-            tuple,
-            hot_match_keys_auto(
-                a, b, CFG,
-                broadcast_budget_rows=budget, min_fanout=min_fanout,
-            ).collect(),
-        )
-    )
-    na, nb = Counter(tuple(r) for r in ra), Counter(tuple(r) for r in rb)
-    elig = [
-        t for t in set(na) | set(nb)
-        if na[t] + nb[t] >= min_fanout
-        and 1 <= nb[t] <= budget
-        and t[0] is not None
-    ]
-    elig.sort(key=lambda t: (-(na[t] + nb[t]), t))
-    cap = max(1, budget // max(min_fanout, 1))
-    picked, cum = [], 0
-    for t in elig[:cap]:
-        cum += nb[t]
-        if cum > budget:
-            break
-        picked.append(t)
-    assert got == sorted(picked)
-
-
-@settings(max_examples=8, deadline=None)
-@given(
-    ra=_rows,
-    rb=_rows,
-    thr=st.sampled_from([1, 2, 4, 50]),
-    strict=st.booleans(),
-)
-def test_match_skewed_equals_plain_property(spark, ra, rb, thr, strict):
-    """The hot-key split is bit-identical to the plain match for ANY
-    key distribution and ANY threshold — including the degenerate splits
-    (thr=1: everything hot, the sort-merge branch is empty; thr=50: nothing
-    hot, the broadcast branch is empty) and both arbitration modes. The
-    tiny alphabet forces key collisions, k>=3 duplicate groups (the strict
-    middle-drop shape), and empty sides."""
-    from mongo_polars_reconciliation_spark.operators.match import (
-        hot_match_keys,
-    )
-
-    cfg = ReconConfig(keys=CFG.keys, strict_compat=strict)
-    a, b = _frames(spark, ra, rb)
-    matched_p, losers_p = match_records(a, b, cfg)
-    matched_s, losers_s = match_records(
-        a, b, cfg, hot_keys=hot_match_keys(a, b, cfg, thr)
-    )
-    assert matched_s.columns == matched_p.columns
-    assert losers_s.columns == losers_p.columns
-    assert sorted(map(tuple, matched_s.collect())) == sorted(
-        map(tuple, matched_p.collect())
-    )
-    assert sorted(map(tuple, losers_s.collect())) == sorted(
-        map(tuple, losers_p.collect())
-    )
-
-
 def test_pq_fit_fused_equals_sequential_kmeans_per_subspace(spark):
     """r16 (optimization round): pq_fit's fused single-loop Lloyd fit must
     be BIT-identical to the original sequential form — m independent

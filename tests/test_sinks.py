@@ -104,6 +104,33 @@ def test_persist_results_writes_each_bucket_once(spark, monkeypatch):
     assert rows(spark.read.parquet(f"{root}/even")) == rows(rerun["even"][0])
 
 
+def test_persist_results_jobs_carry_the_callers_description(spark):
+    """Every job of one ``persist_results`` call, the bucket writes on its
+    driver pool included, carries the job description set on the calling
+    thread."""
+    from perfbench.tracing import SparkStatus
+
+    root = f"{OUT}/persist_labels"
+    shutil.rmtree(root, ignore_errors=True)
+    ev = spark.read.parquet(f"{SF_DIR}/events.parquet").localCheckpoint()
+    buckets = {
+        name: (ev.where(F.col("event_id") % 3 == i), "ts")
+        for i, name in enumerate(("r0", "r1", "r2"))
+    }
+    summary = ev.groupBy("event_type").count()
+    status = SparkStatus(spark)
+    sc = spark.sparkContext
+    lo = status.next_job_id()
+    sc.setJobDescription("x")
+    try:
+        persist_results(buckets, root, summary=summary)
+    finally:
+        sc.setJobDescription(None)
+    jobs = status.jobs(lo, status.next_job_id())
+    assert len(jobs) > len(buckets)
+    assert [j["jobId"] for j in jobs if j.get("description") != "x"] == []
+
+
 def test_match_and_residual_partition_a(spark):
     """Invariant (SURVEY.md §5 property 1): winners ∪ internal-residual
     partitions A by _id — nothing lost, nothing duplicated."""

@@ -1,34 +1,6 @@
-"""Salted-join equivalence and Mongo-module gating."""
+"""Mongo-module gating."""
 
 import pytest
-from pyspark.sql import functions as F
-
-from mongo_polars_reconciliation_spark.functions.skew import salted_join
-
-
-def test_salted_join_equals_plain_join(spark):
-    # skewed large side: 90% of rows share one key
-    large = spark.range(0, 2000).select(
-        F.when(F.col("id") % 10 != 0, F.lit("HOT")).otherwise(
-            F.concat(F.lit("k"), F.col("id"))
-        ).alias("key"),
-        F.col("id").alias("payload"),
-    )
-    small = spark.createDataFrame(
-        [("HOT", 1.0), ("k0", 2.0), ("k10", 3.0), ("absent", 9.9)],
-        ["key", "dim"],
-    )
-    plain = large.join(small, on=["key"], how="inner")
-    salted = salted_join(large, small, on=["key"], buckets=4)
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-    assert sorted(plain.columns) == sorted(salted.columns)
-
-
-def test_salted_left_join_keeps_unmatched(spark):
-    large = spark.createDataFrame([("a", 1), ("b", 2)], ["key", "v"])
-    small = spark.createDataFrame([("a", 10)], ["key", "w"])
-    out = salted_join(large, small, on=["key"], how="left", buckets=3)
-    assert sorted(map(tuple, out.collect())) == [("a", 1, 10), ("b", 2, None)]
 
 
 def test_mongo_module_gates_without_connector(spark):

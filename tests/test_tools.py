@@ -189,3 +189,23 @@ def test_capture_plans_names_unknown_faces(tmp_path):
     assert out.returncode != 0
     assert "unknown faces: no_such_face stream_datacard" in out.stderr
     assert not (tmp_path / "plans").exists()
+
+
+def test_scale_probe_names_unknown_probes(tmp_path):
+    """Unknown probe names (``match_skew`` was deleted) fail up front,
+    each named, before any Spark application starts: a started driver
+    would create its block manager dir under ``SPARK_LOCAL_DIRS``."""
+    import os
+    import pathlib
+
+    tool = pathlib.Path(__file__).resolve().parents[1] / "tools" / "scale_probe.py"
+    local = tmp_path / "spark-local"
+    out = subprocess.run(
+        [sys.executable, str(tool), "4", "simhash,match_skew,no_such_probe"],
+        capture_output=True,
+        text=True,
+        env={**os.environ, "SPARK_LOCAL_DIRS": str(local)},
+    )
+    assert out.returncode != 0
+    assert "unknown probe(s) ['match_skew', 'no_such_probe']" in out.stderr
+    assert not local.exists()

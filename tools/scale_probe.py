@@ -22,10 +22,11 @@ Synthetic blow-up rules keep the WORKLOAD shape honest:
   preserving the label strata.
 
 Usage:
-    python tools/scale_probe.py [factor]   # default 4
+    python tools/scale_probe.py [factor] [probe,...]   # default 4, all probes
 
 Prints one JSON line per probe: {probe, factor, t_base_sec, t_scaled_sec,
-ratio, ideal}. Advisory; exit code always 0.
+ratio, ideal}. Advisory: the exit code is 0 unless a probe name is
+unknown.
 """
 
 from __future__ import annotations
@@ -588,201 +589,9 @@ def probe_admit_depth(spark) -> None:
     print(json.dumps(out))
 
 
-def _skew_cfg():
-    from mongo_polars_reconciliation_spark.config import KeyPair, ReconConfig
-
-    return ReconConfig(
-        keys=[
-            KeyPair("transaction_code", "codigo", None),
-            KeyPair("approved_transaction_amount", "importe", "double"),
-        ]
-    )
-
-
-def _skew_fixture(spark, cfg, f: int):
-    """The match_skew fixture: one monster key ("HOT", 7.0) with
-    nA = 5000·f against a fixed 2000-row B slice, plus a 250k·f 1:1 tail
-    (each tail key combined count 2). Shared by the A/B probe and the
-    hot-key sizing-rule probe."""
-    from mongo_polars_reconciliation_spark.sources.external import (
-        prepare_external,
-    )
-
-    hot_a, hot_b, tail = 5_000 * f, 2_000, 250_000 * f
-    a = (
-        spark.range(0, hot_a + tail)
-        .select(
-            F.concat(F.lit("a"), F.col("id")).alias("_id"),
-            F.when(F.col("id") < hot_a, F.lit("HOT"))
-            .otherwise(F.concat(F.lit("T"), F.col("id")))
-            .alias("transaction_code"),
-            F.when(F.col("id") < hot_a, F.lit(7.0))
-            .otherwise(F.col("id").cast("double"))
-            .alias("approved_transaction_amount"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    b_raw = spark.range(0, hot_b + tail).select(
-        F.col("id").alias("ord"),
-        F.when(F.col("id") < hot_b, F.lit("HOT"))
-        .otherwise(F.concat(F.lit("T"), F.col("id") + hot_a - hot_b))
-        .alias("codigo"),
-        F.when(F.col("id") < hot_b, F.lit("7.0"))
-        .otherwise((F.col("id") + hot_a - hot_b).cast("string"))
-        .alias("importe"),
-    )
-    b = prepare_external(b_raw, cfg, order_by=["ord"]).localCheckpoint(
-        eager=True
-    )
-    return a, b
-
-
-def probe_hot_auto(spark) -> None:
-    """Evidence that the budget-derived sizing rule
-    (``operators/match.py:hot_match_keys_auto``) picks a sane hot-key set
-    on the skew fixture, and that the picked frame drives
-    ``match_records(hot_keys=...)`` to the plain plan's matched count.
-    Expectations the emitted line witnesses:
-
-    * under a realistic budget (1M rows) the rule picks EXACTLY the
-      monster key — the 1:1 tail (combined count 2 per key) sits below
-      ``min_fanout`` and never pays the split;
-    * the implied threshold it reports (min combined count among picked
-      keys, 7000 here) is the deterministic equivalent of the hand knob:
-      any ``hot_threshold`` in (tail_max_combined, implied] yields the
-      same key-space partition;
-    * a budget SMALLER than the hot B slice (1000 < 2000) picks nothing —
-      the rule never overfills the broadcast, it degrades to the plain
-      plan instead (the monster is skipped individually, so further
-      fitting hot keys would still be admitted — pinned by
-      ``tests/test_match.py::test_hot_match_keys_auto_skips_useless_keys``)."""
-    from mongo_polars_reconciliation_spark.operators.match import (
-        hot_match_keys_auto,
-        match_records,
-    )
-
-    cfg = _skew_cfg()
-    a, b = _skew_fixture(spark, cfg, 1)
-    ka = cfg.a_columns
-    counts = (
-        a.select(*ka)
-        .unionByName(
-            b.select(
-                *[
-                    F.col(kb).alias(kaa)
-                    for kaa, kb in zip(ka, cfg.b_columns, strict=True)
-                ]
-            )
-        )
-        .groupBy(*ka)
-        .agg(F.count(F.lit(1)).alias("nk"))
-    )
-    picked = hot_match_keys_auto(a, b, cfg, broadcast_budget_rows=1_000_000)
-    picked_counts = counts.join(picked, on=ka).agg(
-        F.count(F.lit(1)).alias("n"), F.min("nk").alias("implied")
-    ).collect()[0]
-    tail_max = counts.join(picked, on=ka, how="left_anti").agg(
-        F.max("nk")
-    ).collect()[0][0]
-    monster = picked.where(
-        (F.col(ka[0]) == "HOT") & (F.col(ka[1]) == 7.0)
-    ).count()
-    too_small = hot_match_keys_auto(
-        a, b, cfg, broadcast_budget_rows=1_000
-    ).count()
-    split_matched = match_records(a, b, cfg, hot_keys=picked)[0].count()
-    plain_matched = match_records(a, b, cfg)[0].count()
-    print(json.dumps({
-        "probe": "hot_auto",
-        "budget_rows": 1_000_000,
-        "picked_keys": picked_counts["n"],
-        "picked_has_monster": monster == 1,
-        "implied_threshold": picked_counts["implied"],
-        "tail_max_combined": tail_max,
-        "too_small_budget_picks": too_small,
-        "split_matched_equals_plain": split_matched == plain_matched,
-    }))
-
-
-def probe_match_skew(spark, factor: int = 4) -> None:
-    """A/B the hot-key split plan (``match_records(hot_keys=...)``) against
-    the plain sort-merge plan on a fanout-heavy fixture at 1x and
-    {factor}x — the evidence for when the split pays: one monster key
-    whose nA·nB pair production is a single sort-merge task's straggler
-    work, plus a 1:1 tail. The hot side scales with the factor (nA =
-    5000·f against a fixed 2000-row B slice — hot pairs grow linearly,
-    preserving the workload's complexity class) and so does the tail.
-
-    What it measures is the CROSSOVER, which is the whole 100 TB
-    argument: at small fanout the split's fixed costs (key aggregate +
-    semi/anti passes) lose to the straggler it removes, and as fanout
-    grows the plain plan's wall-clock grows FASTER than the skewed
-    plan's (its growth rides one task; the broadcast branch's rides the
-    whole cluster), so the split wins from some scale on. The ROBUST
-    expectation is the ordering — plain_ratio > skewed_ratio and
-    speedup rising with the factor; the absolute crossover point sits
-    around this probe's top scale on local[32] and flaps with ambient
-    load (a shared memory bus understates a straggler that would
-    serialize a whole stage on a real cluster). Auto-broadcast is disabled
-    inside the probe so Spark cannot size-estimate the plain plan into a
-    broadcast and vacate the comparison."""
-    from mongo_polars_reconciliation_spark.operators.match import (
-        hot_match_keys,
-        match_records,
-    )
-
-    cfg = _skew_cfg()
-
-    def fixture(f: int):
-        return _skew_fixture(spark, cfg, f)
-
-    def clock_once(fn) -> float:
-        t0 = time.perf_counter()
-        fn()[0].write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        out = {"probe": "match_skew", "factor": factor}
-        for f, tag in ((1, "1x"), (factor, f"{factor}x")):
-            a, b = fixture(f)
-            # INTERLEAVED reps (the bench_recheck discipline): an ambient
-            # load spike lands on both plans alike instead of biasing
-            # whichever ran second; mins are compared.
-            tp = ts = float("inf")
-            for _ in range(3):
-                tp = min(tp, clock_once(lambda: match_records(a, b, cfg)))
-                ts = min(
-                    ts,
-                    clock_once(
-                        lambda: match_records(
-                            a, b, cfg, hot_keys=hot_match_keys(a, b, cfg, 4_000)
-                        )
-                    ),
-                )
-            tp, ts = round(tp, 2), round(ts, 2)
-            out[tag] = {
-                "plain_sec": tp,
-                "skewed_sec": ts,
-                "speedup": round(tp / ts, 2) if ts > 0 else None,
-            }
-        out["plain_ratio"] = round(
-            out[f"{factor}x"]["plain_sec"] / out["1x"]["plain_sec"], 2
-        )
-        out["skewed_ratio"] = round(
-            out[f"{factor}x"]["skewed_sec"] / out["1x"]["skewed_sec"], 2
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    print(json.dumps(out))
-
-
 def main() -> None:
     factor = int(sys.argv[1]) if len(sys.argv) > 1 else 4
     only = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None
-    spark = get_spark("scale_probe")
-    spark.range(10).count()
     probes = [
         ("neardup_ingest", docs_at, probe_neardup_ingest),
         ("minhash_near_dups", docs_at, probe_minhash),
@@ -809,21 +618,19 @@ def main() -> None:
         # r13: Hamming-LSH block collisions (near-dup trio complete)
         ("simhash", docs_at, probe_simhash),
     ]
-    # special probes emit their own line shape (rounds / A-vs-B timings,
-    # not the plain 1x/Nx ratio)
-    special = [
-        ("admit_depth", probe_admit_depth),
-        ("match_skew", probe_match_skew),
-        # budget-derived hot-key sizing rule evidence
-        ("hot_auto", probe_hot_auto),
-    ]
+    # special probes emit their own line shape (rounds, not the plain
+    # 1x/Nx ratio)
+    special = [("admit_depth", probe_admit_depth)]
     if only is not None:
+        # checked before the session starts, so a typo costs no JVM
         known = {n for n, _, _ in probes} | {n for n, _ in special}
         unknown = only - known
         if unknown:
             raise SystemExit(f"scale_probe: unknown probe(s) {sorted(unknown)}")
         probes = [p for p in probes if p[0] in only]
         special = [p for p in special if p[0] in only]
+    spark = get_spark("scale_probe")
+    spark.range(10).count()
     for name, run in special:
         run(spark)
     for name, mk, run in probes:

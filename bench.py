@@ -24,8 +24,8 @@ from mongo_polars_reconciliation_spark.harness.queries import QUERIES
 from mongo_polars_reconciliation_spark.session import get_spark
 from perfbench.tracing import SparkStatus
 
-# r15: curation_pipeline / _v2 / _v3 were RETIRED from the driver registry
-# (VERDICT r14 #2; carrying pins in tests/test_curation_parity.py at both
+# curation_pipeline / _v2 / _v3 were RETIRED from the driver registry
+# (carrying pins in tests/test_curation_parity.py at both
 # gate scales) but STAY TIMED: curation_pipeline is a frozen HEADLINE
 # member (cross-round total comparability) and v2/v3 keep their per-query
 # secondary history. The harness functions remain; this map shadows the
@@ -52,8 +52,8 @@ HEADLINE = [
 # Heavy extension queries tracked round-over-round WITHOUT joining the
 # headline metric (keeps the headline total comparable across rounds while
 # making regressions in the tail visible). Timed identically; reported
-# under "secondary". NOTE: this list GROWS as operators land (8 r7
-# additions) — compare secondary numbers per-query across rounds, never
+# under "secondary". NOTE: this list GROWS as operators land —
+# compare secondary numbers per-query across rounds, never
 # as a sum; only the headline membership is frozen.
 SECONDARY = [
     "dedup_simhash",
@@ -69,7 +69,7 @@ SECONDARY = [
     "text_pack_sequences",
     "events_salted_agg",
     "events_hist_quantiles",
-    # r5: no declared surface stays bench-blind — multimodal plumbing and
+    # no declared surface stays bench-blind — multimodal plumbing and
     # one full streaming drain are timed in the tail too
     "mm_decode_features",
     "mm_frame_sample",
@@ -84,22 +84,19 @@ SECONDARY = [
     "sim_knn_join",
     "sim_semantic_dedup",
     "curation_pipeline_v2",
-    # r6 additions
     "sim_knn_join_multiprobe",
     "sim_semantic_dedup_fitted",
     "text_dup_spans_trim",
     "text_heavy_hitters_cms",
     "recon_orc_roundtrip",
-    # r7 additions
     "text_cms_merge",
     "events_hist_merge",
-    # stream_cms_counters retired r14 (carrying pin in tests/test_streaming.py)
+    # stream_cms_counters is retired (carrying pin in tests/test_streaming.py)
     "text_bloom_decontaminate",
     "text_ngram_novelty",
     "text_split_leakage_safe",
     "text_split_cluster_safe",
     "dedup_source_overlap",
-    # r8 additions
     "text_bpe_merges",
     "text_bpe_encode",
     "sim_recall_probe",
@@ -109,7 +106,6 @@ SECONDARY = [
     "curation_pipeline_v3",
     "text_quality_gate",
     "stream_ingest_novel",
-    # r9 additions
     "dedup_ingest_neardup",
     "sim_recall_probe_sampled",
     "text_bpe_vocab_roundtrip",
@@ -117,7 +113,6 @@ SECONDARY = [
     "mm_payload_dedup",
     "mm_payload_near_dup",
     "stream_ingest_neardup",
-    # r10 additions
     "sim_centroid_roundtrip",
     "sim_ingest_semantic",
     "dedup_ingest_waves",
@@ -131,11 +126,10 @@ SECONDARY = [
     "text_lm_buckets",
     "text_datacard_merge",
     "text_pack_shards_roundtrip",
-    # stream_datacard retired r14 (carrying pin in tests/test_properties.py)
+    # stream_datacard is retired (carrying pin in tests/test_properties.py)
     "sim_knn_join_ivfpq",
     "text_mix_temperature",
     "text_line_dedup",
-    # r11 additions
     "text_line_dedup_trim",
     "curation_pipeline_v4",
     "text_mix_temperature_alpha",
@@ -179,7 +173,7 @@ def main() -> None:
     # Clamp: 0/negative would divide-by-zero in mean() / ValueError in min().
     reps = max(1, int(os.environ.get("SPARK_GRAFT_REPS", "2")))
 
-    # r11 (VERDICT r10 ask #6, tail-query bench hygiene): sub-2 s tail
+    # sub-2 s tail
     # queries run last in the loop and inherit within-session JVM state
     # (GC pressure, code-cache churn), flapping 2-3x across sessions even
     # though their plans are map-only/broadcast. reps=2 mins don't wash
@@ -190,9 +184,8 @@ def main() -> None:
     # denominator, so its sampling definition must never change between
     # rounds (extra control samples would deflate control_min and
     # inflate every >2 s query's normalized ratio against older records).
-    # The per-query MEANS are immune since r12: mean() below slices
-    # ts[:reps], so extra samples tighten the MIN only (see the r12
-    # advice note at mean()).
+    # The per-query MEANS are immune: mean() below slices ts[:reps], so
+    # extra samples tighten the MIN only (see the note at mean()).
     extra_reps_below_sec = 2.0
     extra_reps = 2
     control = "q1_pricing_summary"
@@ -235,18 +228,18 @@ def main() -> None:
                 ts.append(round(time.perf_counter() - t0, 3))
         return ts
 
-    # r12 (advice): the MEAN is computed over only the FIRST `reps`
-    # samples — the fixed-sampling definition every pre-r11 record was
+    # the MEAN is computed over only the FIRST `reps`
+    # samples — the fixed-sampling definition the oldest records were
     # measured under. Letting the adaptive extra reps (warmer samples)
     # into the mean gave every sub-2 s query a one-time downward step
     # that drift tooling would read as a phantom improvement. Extra
     # samples tighten the MIN only (their whole purpose); per-query
     # sample counts are recorded so tooling can see the policy.
-    # Caveat (r13, advice): r11 is the ONE round whose committed record
-    # computed sub-2 s means over all 4 adaptive samples (the policy
-    # landed in r11, the first-reps slice in r12) — r12+ means compared
-    # to the r11 record show a one-time phantom UPWARD step on those
-    # queries. Compare MINs across r11, as warmup_policy advises.
+    # Caveat: exactly one older committed record computed sub-2 s means
+    # over all 4 adaptive samples (the adaptive reps landed one change
+    # before the first-reps slice) — later means compared to it show a
+    # one-time phantom UPWARD step on those queries. Compare MINs across
+    # records, as warmup_policy advises.
     def mean(ts: list[float]) -> float:
         head = ts[:reps]
         return round(sum(head) / len(head), 3)
@@ -262,7 +255,7 @@ def main() -> None:
         for name, ts in list(head_runs.items()) + list(sec_runs.items())
     }
 
-    # Control-normalized mins (r10, VERDICT r9 ask #7): q1_pricing_summary is
+    # Control-normalized mins: q1_pricing_summary is
     # the long-standing code-unchanged control of tools/bench_recheck.py; its
     # min in THIS session measures the day's ambient handicap. Dividing every
     # query min by it makes cross-session comparisons self-adjudicating —
@@ -294,19 +287,19 @@ def main() -> None:
         "n_samples": n_samples,
         "warmup_policy": (
             f"adaptive: +{extra_reps} timed reps when the first-pass min is "
-            f"< {extra_reps_below_sec} s (r11, VERDICT r10 ask #6 — sub-2 s "
+            f"< {extra_reps_below_sec} s (sub-2 s "
             "tail queries inherit JVM state; extra samples tighten the min); "
             "the control query is EXEMPT so its min keeps the fixed-reps "
-            "definition older records were measured under; since r12 the "
+            "definition older records were measured under; the "
             "MEAN too is computed over only the first `reps` samples "
-            "(advice — extra warm samples were deflating sub-2 s means vs "
-            "pre-r11 records), so extra reps tighten the min ONLY; "
-            "r11 is the one round whose sub-2 s means used all 4 samples "
-            "— compare MINs across r11"
+            "(extra warm samples deflate sub-2 s means vs "
+            "older records), so extra reps tighten the min ONLY; "
+            "one older record's sub-2 s means used all 4 samples "
+            "— compare MINs across records"
         ),
         "fixture_warm_sec": fixture_warm,
         "sf": float(sf),
-        # r17 (VERDICT r16 #2): per-query Spark job/stage/task counts from
+        # per-query Spark job/stage/task counts from
         # the first timed rep — the scaling-evidence field. At sf0.1 most
         # queries run a handful of tasks per stage (AQE size-based
         # coalescing), which is WHY 8-vs-32-core wall ratios are ~1 there;
@@ -320,14 +313,14 @@ def main() -> None:
     # front of the JSON once the query list grew past ~35 entries. The
     # bench_last.json + tools/bench_drift.py replace the manual (and
     # twice-late, see dedup_clusters_star) per-query comparison.
-    # r9 (advice): the default landing spot is OUTSIDE the repo tree — an
+    # the default landing spot is OUTSIDE the repo tree — an
     # ad-hoc bench run must not dirty the working tree or risk committing
     # machine-local timings as a side effect. (A stable tmpdir path, NOT the
     # per-process scratch root: that one is atexit-removed, which would
     # delete the record the drift check wants to read.) Closing a round
     # copies the adjudicated record in explicitly:
     #   SPARK_GRAFT_BENCH_OUT=/root/repo/bench_last.json python bench.py
-    # r10 (advice): the default name is uid-suffixed — a fixed world-shared
+    # the default name is uid-suffixed — a fixed world-shared
     # tmp name would collide (or clobber) across users on a shared machine,
     # and another user's symlink at that path could redirect the write.
     out_path = os.environ.get(
@@ -340,12 +333,12 @@ def main() -> None:
         json.dump(out, fh, indent=1)
     print(f"bench: full-fidelity record written to {out_path}", file=sys.stderr)
     sys.stderr.flush()
-    # r11: the driver's BENCH_r{N}.json keeps only a ~2000-char stdout TAIL
-    # and parses what it finds there — the full record outgrew that window
-    # around r8 (134 queries ≈ 8 kB), so every BENCH since r8 recorded
-    # "parsed": null. stdout now carries ONLY this COMPACT record (headline
-    # queries + the totals — it fits the tail window); full per-query
-    # fidelity lives in the file written above.
+    # the recorded bench output keeps only a ~2000-char stdout TAIL and
+    # parses what it finds there — the full record (134 queries ≈ 8 kB)
+    # outgrew that window, and such records read "parsed": null. stdout
+    # now carries ONLY this COMPACT record (headline queries + the totals
+    # — it fits the tail window); full per-query fidelity lives in the
+    # file written above.
     compact = {
         "metric": "headline_queries_total",
         "value": out["value"],

@@ -699,12 +699,15 @@ def simhash_near_dups(
     )
 
 
+# dedup_clusters counts convergence once per this many label rounds
+CLUSTER_CHECK_EVERY = 3
+
+
 def dedup_clusters(
     pairs: DataFrame,
     ids: DataFrame,
     id_col: str = "doc_id",
     max_iter: int = 50,
-    check_every: int = 3,
 ) -> DataFrame:
     """Connected components over near-dup pairs: every document gets the
     MIN id reachable through the pair graph as its ``cluster_id`` — the
@@ -721,13 +724,13 @@ def dedup_clusters(
     localCheckpoint'ed so round N+1 plans against a leaf, not N stacked
     joins.
 
-    Convergence is counted every ``check_every`` rounds, not every round:
-    labels are MONOTONE (only ever decrease), so "the latest round changed
-    nothing" certifies the fixpoint regardless of what the uncounted
-    rounds in between did. A long-chain graph therefore costs
-    ~1/check_every as many driver actions (the uncounted rounds fuse into
-    the next count's job), trading at most check_every−1 cheap no-op
-    rounds after convergence.
+    Convergence is counted every ``CLUSTER_CHECK_EVERY`` rounds, not
+    every round: labels are MONOTONE (only ever decrease), so "the latest
+    round changed nothing" certifies the fixpoint regardless of what the
+    uncounted rounds in between did. A long-chain graph therefore costs
+    ~1/CLUSTER_CHECK_EVERY as many driver actions (the uncounted rounds
+    fuse into the next count's job), trading at most
+    CLUSTER_CHECK_EVERY−1 cheap no-op rounds after convergence.
 
     ``ids``: one row per document id (the universe — singletons keep
     themselves as cluster_id)."""
@@ -764,7 +767,7 @@ def dedup_clusters(
             )
             .localCheckpoint(eager=False)
         )
-        if rnd % check_every == 0 or rnd == max_iter:
+        if rnd % CLUSTER_CHECK_EVERY == 0 or rnd == max_iter:
             changed = new_labels.where(F.col("__chg")).count()
             if changed == 0:
                 labels = new_labels.drop("__chg")

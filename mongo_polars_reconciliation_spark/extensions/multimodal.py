@@ -59,19 +59,25 @@ def extract_features(mm: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the binary payload.
 
     The stub 'decoder' computes byte length and the hex of the first 8 bytes
-    — stand-ins for (width, height, phash). Swap ``_extract_batch``'s body
-    for PIL/ffmpeg calls in production; the mapInPandas contract (schema,
-    batch shape) stays identical."""
+    — stand-ins for (width, height, phash). A NULL payload gives NULL
+    ``byte_len`` and ``prefix_hex`` (SQL ``octet_length`` and ``hex`` of
+    NULL). Swap ``_extract``'s body for PIL/ffmpeg calls in production;
+    the mapInPandas contract (schema, batch shape) stays identical."""
 
     def _extract(batches: Iterator, /):
         import pandas as pd
 
         for pdf in batches:
+            payload = pdf["payload"]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
-                    "byte_len": pdf["payload"].map(len).astype("int64"),
-                    "prefix_hex": pdf["payload"].map(lambda b: bytes(b)[:8].hex()),
+                    "byte_len": payload.map(len, na_action="ignore").astype(
+                        "Int64"
+                    ),
+                    "prefix_hex": payload.map(
+                        lambda b: bytes(b)[:8].hex(), na_action="ignore"
+                    ),
                     "mime": pdf["meta"].map(lambda m: m["mime"]),
                 }
             )

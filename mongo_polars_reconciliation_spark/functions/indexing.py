@@ -29,7 +29,6 @@ def with_prefix_sum(
     order_by: list[str],
     value_col: str,
     name: str = "prefix_sum",
-    scalable: bool = True,
 ) -> DataFrame:
     """Add an EXCLUSIVE prefix sum of ``value_col`` (long) by the given total
     order: row i gets sum(value of rows 0..i-1), first row gets 0.
@@ -37,16 +36,11 @@ def with_prefix_sum(
     The global sequential dependency collapses to one scan + one broadcast
     (module docstring) — the distributed scan primitive behind row
     numbering, sequence packing, byte-offset assignment, and contiguous
-    shard layout at 100 TB. ``scalable=False`` is the one-task reference
-    form: a global window with no PARTITION BY.
+    shard layout at 100 TB.
     """
     if not order_by:
         raise ValueError("order_by must name a deterministic total order")
     v = F.col(value_col).cast("long")
-    if not scalable:
-        w = Window.orderBy(*order_by).rowsBetween(Window.unboundedPreceding, -1)
-        return df.withColumn(name, F.coalesce(F.sum(v).over(w), F.lit(0)))
-
     ranged = (
         df.repartitionByRange(
             df.sparkSession.sparkContext.defaultParallelism, *order_by

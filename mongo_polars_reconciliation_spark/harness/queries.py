@@ -920,10 +920,9 @@ def dedup_minhash_lsh(spark, sf_dir) -> DataFrame:
     return minhash_near_dups(build_documents_aug(spark, sf_dir))
 
 
-# dedup_minhash_lsh_capped RETIRED r13 (VERDICT r12 #5, registry
-# consolidation): the face was dedup_minhash_lsh plus the hot-bucket
-# guard at 1000, sharing the uncapped oracle — its entire check is
-# carried verbatim by
+# dedup_minhash_lsh_capped is retired from the registry: the face was
+# dedup_minhash_lsh plus the hot-bucket guard at 1000, sharing the
+# uncapped oracle — its entire check is carried verbatim by
 # tests/test_lsh_cap.py::test_minhash_capped_equals_uncapped_on_fixture;
 # cap-ENGAGED behavior stays pinned by the hot-bucket tests there.
 
@@ -1029,7 +1028,7 @@ def sim_topk_ivf(spark, sf_dir) -> DataFrame:
 
 
 def sim_topk_pq(spark, sf_dir) -> DataFrame:
-    """Product-quantization ANN (r10): fit per-subspace codebooks once,
+    """Product-quantization ANN: fit per-subspace codebooks once,
     persist them to parquet and reload (the model-artifact pattern —
     bit-exact doubles, so fit→save→load→probe equals fit-then-probe),
     then answer the top-10 query via ADC candidate scoring over the m
@@ -1299,7 +1298,7 @@ def curation_pipeline_v2(spark, sf_dir) -> DataFrame:
 
 
 def curation_pipeline_v3(spark, sf_dir) -> DataFrame:
-    """v2 plus the r8 bigram-LM typicality gate (threshold 32800 of 10^6,
+    """v2 plus the bigram-LM typicality gate (threshold 32800 of 10^6,
     ~the corpus's bottom few percent): the full build — exact dedup →
     LSH near-dup → repetition gate → decontamination → LM gate →
     quality gate → per-language stats."""
@@ -1451,7 +1450,7 @@ def text_mix_epochs(spark, sf_dir) -> DataFrame:
 
 
 def text_mix_temperature(spark, sf_dir) -> DataFrame:
-    """Temperature-weighted corpus mixing at α=1/2 (r10): per-language
+    """Temperature-weighted corpus mixing at α=1/2: per-language
     sampling weights DERIVED from the corpus shares — w = sqrt(n_max/n),
     the largest language runs 1.0 epochs and smaller ones upsample by
     the square-root ratio — computed in pure integers (integer DIV +
@@ -1467,7 +1466,7 @@ def text_mix_temperature(spark, sf_dir) -> DataFrame:
 
 
 def text_mix_temperature_alpha(spark, sf_dir) -> DataFrame:
-    """Temperature mixing at α=3/4 (r11): the generalized dyadic-α path —
+    """Temperature mixing at α=3/4: the generalized dyadic-α path —
     w = (n_max/n)^(3/4) in 1/denom units via the binary-expansion product
     isqrt(n_max·denom²/n) · isqrt(isqrt(n_max·denom⁴/n)) DIV denom, every
     step exact DECIMAL(38,0) arithmetic (the α=1/2 spec's machinery,
@@ -1485,7 +1484,7 @@ def text_mix_temperature_alpha(spark, sf_dir) -> DataFrame:
 
 
 def text_line_dedup(spark, sf_dir) -> DataFrame:
-    """C4-style corpus-wide line dedup (r10): every repeated line (the
+    """C4-style corpus-wide line dedup: every repeated line (the
     injected boilerplate footers) survives only at its first global
     occurrence, documents reassembled from their surviving lines;
     whole-boilerplate docs empty out (NULL digest — the drop signal).
@@ -1503,7 +1502,7 @@ def text_line_dedup(spark, sf_dir) -> DataFrame:
 
 
 def text_line_dedup_trim(spark, sf_dir) -> DataFrame:
-    """The line-dedup TRIM face (r11): same first-global-occurrence
+    """The line-dedup TRIM face: same first-global-occurrence
     semantics as text_line_dedup but the reassembled surviving TEXT is
     emitted — the cleaned corpus a downstream stage consumes (NULL text
     for emptied-out docs, the C4 drop signal). The oracle checks the
@@ -1519,7 +1518,7 @@ def text_line_dedup_trim(spark, sf_dir) -> DataFrame:
 
 
 def curation_pipeline_v4(spark, sf_dir) -> DataFrame:
-    """v3 plus the C4 corpus-wide LINE-dedup stage (r11): exact dedup →
+    """v3 plus the C4 corpus-wide LINE-dedup stage: exact dedup →
     line dedup TRIM (corpus-repeated lines cut to their first global
     occurrence, emptied docs dropped, CLEANED text feeds every later
     stage) → LSH near-dup → repetition gate → decontamination → LM gate
@@ -1547,8 +1546,8 @@ def curation_pipeline_v4(spark, sf_dir) -> DataFrame:
 
 
 def text_pii_scrub(spark, sf_dir) -> DataFrame:
-    """PII redaction with real regexes (r11; r12 adds the Luhn-validated
-    card stage and the null-text rule): emails, 16-digit card numbers
+    """PII redaction with real regexes, a Luhn-validated card stage and
+    the null-text rule: emails, 16-digit card numbers
     passing the Luhn mod-10 check (an integer-arithmetic expression — a
     Luhn-INVALID 16-digit run in the fixture must survive un-redacted),
     phone numbers and IPv4s counted per class and globally replaced with
@@ -1643,7 +1642,7 @@ def sim_knn_join_multiprobe(spark, sf_dir) -> DataFrame:
 
 
 def sim_centroid_roundtrip(spark, sf_dir) -> DataFrame:
-    """Centroid artifact round-trip (r10): fit the multiprobe k-means
+    """Centroid artifact round-trip: fit the multiprobe k-means
     ONCE, persist the centroid table to parquet, load it back, and build
     the k-NN graph from the LOADED centroids — the fit-once/assign-many
     production shape (the vector-side mirror of
@@ -1681,11 +1680,12 @@ def sim_ingest_semantic(spark, sf_dir) -> DataFrame:
     with cosine >= 0.9 (the SemDeDup threshold). mis_max_iter=8 matches
     the oracle's unrolled greedy rounds."""
     from mongo_polars_reconciliation_spark.extensions.similarity import (
-        assignment_state,
-        ingest_novel_semantic,
         kmeans_fit,
         load_centroids,
         save_centroids,
+    )
+    from mongo_polars_reconciliation_spark.streaming.corpus import (
+        SemanticFamily,
     )
 
     hist, batch = semantic_ingest_split(spark, sf_dir)
@@ -1695,20 +1695,14 @@ def sim_ingest_semantic(spark, sf_dir) -> DataFrame:
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     path = scratch_path(tag, "ingest_centroids")
     save_centroids(spark, cents, path)
-    cents = load_centroids(spark, path)
-    return ingest_novel_semantic(
-        batch,
-        assignment_state(hist, cents, nprobe=2),
-        hist,
-        cents,
-        threshold=0.9,
-        nprobe=2,
-        mis_max_iter=8,
+    family = SemanticFamily(load_centroids(spark, path), nprobe=2)
+    return family.admit(
+        batch, family.seed(hist), threshold=0.9, mis_max_iter=8
     )
 
 
 def sim_recall_probe(spark, sf_dir) -> DataFrame:
-    """ANN quality gate (r8): per-vector recall@10 of the fitted
+    """ANN quality gate: per-vector recall@10 of the fitted
     multi-probe k-NN graph (nprobe=2, the pinned IVF constants) against
     the exact all-pairs brute-force truth — n_true, n_hit, and the floor4
     recall ratio for every vector. The truth side's all-pairs join is a
@@ -1730,7 +1724,7 @@ def sim_recall_probe(spark, sf_dir) -> DataFrame:
 
 
 def sim_recall_probe_sampled(spark, sf_dir) -> DataFrame:
-    """Sampled ANN recall probe (r9): a deterministic 5-per-label probe
+    """Sampled ANN recall probe: a deterministic 5-per-label probe
     set (the fixed-k KMV sampler) gets exact ground truth built ONE-SIDED
     against the full corpus — O(sample·n), the shape that stays runnable
     at corpus scale — and is scored against the unchanged production
@@ -1779,7 +1773,7 @@ def text_bpe_pairs(spark, sf_dir) -> DataFrame:
 
 
 def text_bpe_merges(spark, sf_dir) -> DataFrame:
-    """Iterative BPE vocabulary induction (r8): the full merge LOOP — five
+    """Iterative BPE vocabulary induction: the full merge LOOP — five
     rounds of corpus-wide weighted pair counting, each round's winner
     (count DESC, lhs, rhs tie-break) merged into every word before the
     next — returning the learned merge table. The DuckDB oracle replays
@@ -1792,7 +1786,7 @@ def text_bpe_merges(spark, sf_dir) -> DataFrame:
 
 
 def text_bpe_encode(spark, sf_dir) -> DataFrame:
-    """BPE encode (r8): fit 5 merges, then apply them back to the corpus
+    """BPE encode: fit 5 merges, then apply them back to the corpus
     as a vocab-dimension join — per-doc whitespace tokens, chars, BPE
     symbol count and floor4 compression ratio. Oracle replays fit AND
     encode (the fitted CTE chain's final segmentation IS the encode
@@ -1805,7 +1799,7 @@ def text_bpe_encode(spark, sf_dir) -> DataFrame:
 
 
 def text_bpe_vocab_roundtrip(spark, sf_dir) -> DataFrame:
-    """Tokenizer artifact round-trip (r9): fit 5 BPE merges, persist the
+    """Tokenizer artifact round-trip: fit 5 BPE merges, persist the
     merge table to parquet, read it back, and encode the corpus from the
     LOADED table — bit-equal to fit-then-encode in one session (the
     recon_orc_roundtrip write-read pattern applied to the trained
@@ -1923,28 +1917,21 @@ def dedup_ingest_neardup(spark, sf_dir) -> DataFrame:
     an already-admitted batch member (sequential-arrival greedy — the
     rule that makes batch splits and redeliveries idempotent).
     mis_max_iter=8 matches the oracle's unrolled greedy rounds."""
-    from mongo_polars_reconciliation_spark.extensions.dedup import (
-        band_state,
-        ingest_novel_neardup,
+    from mongo_polars_reconciliation_spark.streaming.corpus import (
+        NeardupFamily,
     )
 
     hist, batch = neardup_ingest_split(spark, sf_dir)
-    state_digests = hist.select(
-        F.md5(F.coalesce(F.col("text"), F.lit("")).cast("binary")).alias(
-            "text_hash"
-        )
-    ).distinct()
-    return ingest_novel_neardup(
-        batch, state_digests, band_state(hist), hist, mis_max_iter=8
-    )
+    family = NeardupFamily()
+    return family.admit(batch, family.seed(hist), mis_max_iter=8)
 
 
 def dedup_ingest_waves(spark, sf_dir) -> DataFrame:
-    """Multi-wave ingest ACROSS a state compaction (r10): wave 1 admits
-    the %3==2 slice against the seeded history, all three state faces
-    (digest ledger, band keys, docs) are folded into append-only dirs
-    and COMPACTED into the bucketed tables the admission joins want
-    (``compact_ingest_state``), then wave 2 admits the synthetic
+    """Multi-wave ingest ACROSS a state compaction: wave 1 admits the
+    %3==2 slice against the seeded history, the folded state faces
+    (digest ledger, band keys, docs) are written as append-only dirs and
+    COMPACTED into the bucketed tables the admission joins want
+    (``compact_state``), then wave 2 admits the synthetic
     redeliveries/variants PLUS a genuinely novel slice (token-reversed
     %10==6 docs under +300000 ids — reversed word order shares no
     3-shingle with the original) reading ONLY the compacted tables — the
@@ -1960,21 +1947,15 @@ def dedup_ingest_waves(spark, sf_dir) -> DataFrame:
     tests/test_bucketing.py."""
     import shutil as _shutil
 
-    from mongo_polars_reconciliation_spark.extensions.dedup import (
-        band_state,
-        ingest_novel_neardup,
-    )
     from mongo_polars_reconciliation_spark.streaming.corpus import (
-        compact_ingest_state,
+        NeardupFamily,
+        compact_state,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
-    # hist feeds 4 consumers (seed bands, ledger, wave-1 corpus arg, docs
-    # face write) and seed_ledger / seed_bands 2 each — checkpoint so the
-    # shingle→signature seed pipeline runs once, not per consumer
-    hist = docs.where(F.col("doc_id") % 3 < 2).localCheckpoint(eager=False)
+    hist = docs.where(F.col("doc_id") % 3 < 2)
     b1 = docs.where(F.col("doc_id") % 3 == 2)
     near_text = F.expr("substring(text, instr(text, ' ') + 1)")
     b2 = (
@@ -1994,56 +1975,45 @@ def dedup_ingest_waves(spark, sf_dir) -> DataFrame:
             ),
         )
     )
-    seed_ledger = hist.select(
-        "doc_id",
-        F.md5(F.coalesce(F.col("text"), F.lit("")).cast("binary")).alias(
-            "text_hash"
-        ),
-    ).localCheckpoint(eager=False)
-    seed_bands = band_state(hist).localCheckpoint(eager=False)
-    a1 = ingest_novel_neardup(
-        b1,
-        seed_ledger.select("text_hash").distinct(),
-        seed_bands,
-        hist,
-        mis_max_iter=8,
-    ).localCheckpoint(eager=True)
-    adm1 = b1.join(a1.select("doc_id"), "doc_id")
+    family = NeardupFamily()
+    # each seed face feeds wave 1 and its fold — checkpoint so the
+    # shingle→signature seed pipeline runs once, not per consumer
+    seeds = {
+        name: face.localCheckpoint(eager=False)
+        for name, face in family.seed(hist).items()
+    }
+    a1 = family.admit(b1, seeds, mis_max_iter=8).localCheckpoint(eager=True)
+    state = family.fold(seeds, a1, family.admitted_rows(b1, a1))
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     root = scratch_path(tag, "ingest_waves")
     _shutil.rmtree(root, ignore_errors=True)
-    # the three face writes are independent (disjoint dirs; every shared
-    # input — a1 eager, seed_ledger/seed_bands/hist already materialized
-    # by wave 1) — so they overlap; this is the BATCH wave path, no
-    # crash-ordering contract (unlike the streaming loop, whose ledger
-    # write must stay last)
+    # the face writes are independent (disjoint dirs, shared inputs
+    # already materialized by wave 1), so they overlap; this is the BATCH
+    # wave path, with no crash-ordering contract (unlike the streaming
+    # loop, whose ledger write must stay last)
     overlap(
-        lambda face: face[0].write.parquet(f"{root}/state/{face[1]}"),
-        [
-            (seed_ledger.unionByName(a1), "admitted"),
-            (seed_bands.unionByName(band_state(adm1)), "bands"),
-            (hist.unionByName(adm1), "docs"),
-        ],
+        lambda face: state[face.name].write.parquet(
+            f"{root}/state/{face.path}"
+        ),
+        family.faces,
     )
-    tables = compact_ingest_state(
+    tables = compact_state(
         spark,
+        family,
         f"{root}/state",
         table_prefix=f"ingest_waves_{tag.replace('.', '_')}",
         buckets=8,
     )
-    a2 = ingest_novel_neardup(
-        b2,
-        spark.table(tables["digests"]),
-        spark.table(tables["bands"]),
-        spark.table(tables["docs"]),
+    a2 = family.admit(
+        b2, {name: spark.table(t) for name, t in tables.items()},
         mis_max_iter=8,
     )
     return a1.unionByName(a2)
 
 
 def text_lm_score(spark, sf_dir) -> DataFrame:
-    """Corpus-bigram LM quality score per document (r8): mean conditional
+    """Corpus-bigram LM quality score per document: mean conditional
     bigram probability, integer-exact at 10^-6 resolution — the
     typicality signal of CCNet-style quality filtering, with no float
     log-probs so the oracle replays every score bit-for-bit."""
@@ -2054,7 +2024,7 @@ def text_lm_score(spark, sf_dir) -> DataFrame:
 
 def text_lm_buckets(spark, sf_dir) -> DataFrame:
     """CCNet-style per-language head/middle/tail typicality terciles
-    (r10) over the integer-exact bigram-LM score — cutoffs from the
+    over the integer-exact bigram-LM score — cutoffs from the
     collapsed (lang, score) distribution, never a raw-corpus sort;
     bucketing is a broadcast join on lang."""
     from mongo_polars_reconciliation_spark.extensions.text import (
@@ -2067,7 +2037,7 @@ def text_lm_buckets(spark, sf_dir) -> DataFrame:
 
 
 def text_quality_gate(spark, sf_dir) -> DataFrame:
-    """Adaptive percentile quality gate (r8): survivors after dropping
+    """Adaptive percentile quality gate: survivors after dropping
     the corpus's worst 5%% (permille = 50) by fused quality — the
     distribution-relative gate real pipelines use instead of a fixed
     threshold. The cutoff is a TakeOrderedAndProject order statistic,
@@ -2082,7 +2052,7 @@ def text_quality_gate(spark, sf_dir) -> DataFrame:
 
 
 def text_quality_c4(spark, sf_dir) -> DataFrame:
-    """C4-residual quality signals (r9), fused into the single-projection
+    """C4-residual quality signals, fused into the single-projection
     scorer: sentence count, terminal-punctuation-per-sentence ratio
     (capped at 1), and mean words per sentence — over the punctuation-
     injected fixture (the natural texts carry no punctuation). Map-only:
@@ -2100,7 +2070,7 @@ def text_quality_c4(spark, sf_dir) -> DataFrame:
 
 
 def text_quality_gopher(spark, sf_dir) -> DataFrame:
-    """Gopher rule-filter signals (r10), fused into the single-projection
+    """Gopher rule-filter signals, fused into the single-projection
     scorer: line-structure fractions (bullet starts, '...' ends),
     alphabetic-word fraction, symbol-per-word ratio, mean word length and
     required-stop-word hits — over the line/symbol-injected fixture (the
@@ -2129,8 +2099,8 @@ def text_quality_gopher(spark, sf_dir) -> DataFrame:
 
 def text_cms_merge(spark, sf_dir) -> DataFrame:
     """Mergeability pin for the CMS sketch (mirror of events_kmv_merge):
-    per-split partial sketches — each from its OWN filtered scan (r8:
-    independently-constructed sides, so the pin can actually fail) —
+    per-split partial sketches — each from its OWN filtered scan
+    (independently-constructed sides, so the pin can actually fail) —
     summed counter-by-counter next to the independently re-derived global
     full-scan sketch: every (j, b) pair of the d×w=3×64 state, with the
     oracle pinning cnt_merged == cnt_global bit-for-bit (a property test
@@ -2163,7 +2133,7 @@ def text_datacard(spark, sf_dir) -> DataFrame:
 
 
 def text_datacard_merge(spark, sf_dir) -> DataFrame:
-    """Mergeability pin for the corpus data card (r10, the cms/kmv/hist
+    """Mergeability pin for the corpus data card (the cms/kmv/hist
     merge family): per-split exact states — (source, lang, ws_tokens)
     histogram + DECIMAL quality sums, each from its own filtered scan —
     folded and derived into a card next to the full-rescan card; every
@@ -2181,7 +2151,7 @@ def text_datacard_merge(spark, sf_dir) -> DataFrame:
 
 
 def text_pack_shards_roundtrip(spark, sf_dir) -> DataFrame:
-    """Training-shard writer round trip (r10, the persist_roundtrip
+    """Training-shard writer round trip (the persist_roundtrip
     treatment for the training sink): pack the corpus, write one parquet
     file per shard (whole batches co-located, round-robin over shards),
     RE-READ the shard files and return every doc's packing coordinates +
@@ -2220,7 +2190,7 @@ def text_sample_stratified(spark, sf_dir) -> DataFrame:
 
 
 def text_sample_fixed_k(spark, sf_dir) -> DataFrame:
-    """Deterministic fixed-size per-stratum sample (r8): exactly 5 docs
+    """Deterministic fixed-size per-stratum sample: exactly 5 docs
     per source by the k-smallest-mixed-hash rule — the eval-set carving
     primitive; KMV-mergeable, so per-shard samples re-merge without
     rescans."""
@@ -2244,7 +2214,7 @@ def mm_decode_features(spark, sf_dir) -> DataFrame:
 
 
 def mm_payload_dedup(spark, sf_dir) -> DataFrame:
-    """Exact BINARY payload dedup (r9): md5 over the raw payload bytes of
+    """Exact BINARY payload dedup: md5 over the raw payload bytes of
     the duplicate-injected multimodal fixture — min-id keeper + copy
     count per distinct payload, the exact_dedup_groups contract applied
     to the binary column."""
@@ -2259,7 +2229,7 @@ def mm_payload_dedup(spark, sf_dir) -> DataFrame:
 
 
 def mm_payload_near_dup(spark, sf_dir) -> DataFrame:
-    """Chunked-byte-signature near-dup probe (r9): 64-byte aligned block
+    """Chunked-byte-signature near-dup probe: 64-byte aligned block
     digests, pigeonhole bucket join, shared-block fraction >= 0.5 —
     catches byte-exact copies (sim 1.0) and appended-tail re-uploads
     (shared prefix blocks) without any decoder."""
@@ -2275,10 +2245,10 @@ def mm_payload_near_dup(spark, sf_dir) -> DataFrame:
     )
 
 
-# mm_payload_near_dup_capped RETIRED r13 (VERDICT r12 #5, registry
-# consolidation): the face was the uncapped query plus the hot-bucket
-# guard at 1000, sharing the uncapped oracle — its entire check (the
-# guard is semantics-preserving on this fixture) is carried verbatim by
+# mm_payload_near_dup_capped is retired from the registry: the face was
+# the uncapped query plus the hot-bucket guard at 1000, sharing the
+# uncapped oracle — its entire check (the guard is semantics-preserving
+# on this fixture) is carried verbatim by
 # tests/test_lsh_cap.py::test_payload_capped_equals_uncapped_on_fixture;
 # cap-ENGAGED behavior stays pinned by the hot-block tests there.
 
@@ -2292,24 +2262,14 @@ def mm_payload_ingest(spark, sf_dir) -> DataFrame:
     exact copy nor a chunked-block near-dup (shared aligned-block
     fraction >= 0.5) of history or of an already-admitted batch member.
     mis_max_iter=8 matches the oracle's unrolled greedy rounds."""
-    from mongo_polars_reconciliation_spark.extensions.multimodal import (
-        ingest_novel_payloads,
-        payload_block_state,
+    from mongo_polars_reconciliation_spark.streaming.corpus import (
+        PayloadFamily,
     )
 
     hist, batch = payload_ingest_split(spark, sf_dir)
-    state_digests = hist.select(
-        F.md5(
-            F.coalesce(F.col("payload"), F.lit("").cast("binary"))
-        ).alias("payload_hash")
-    ).distinct()
-    return ingest_novel_payloads(
-        batch,
-        state_digests,
-        payload_block_state(hist, block_bytes=64),
-        block_bytes=64,
-        threshold=0.5,
-        mis_max_iter=8,
+    family = PayloadFamily(block_bytes=64)
+    return family.admit(
+        batch, family.seed(hist), threshold=0.5, mis_max_iter=8
     )
 
 
@@ -2365,6 +2325,7 @@ def stream_ingest_novel(spark, sf_dir) -> DataFrame:
     aggregation: the drained result equals the batch ingest bit-for-bit,
     with n_copies counting batch-2 arrivals of each novel digest."""
     from mongo_polars_reconciliation_spark.streaming.corpus import (
+        NeardupFamily,
         ingest_novel_state,
         read_documents_stream,
     )
@@ -2372,11 +2333,7 @@ def stream_ingest_novel(spark, sf_dir) -> DataFrame:
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     hist, b2 = exact_ingest_split(spark, sf_dir)
-    state = hist.select(
-        F.md5(F.coalesce(F.col("text"), F.lit("")).cast("binary")).alias(
-            "text_hash"
-        )
-    ).distinct()
+    state = NeardupFamily().digests(hist)
     stream = read_documents_stream(spark, b2, name=f"ingest_{tag}")
     return run_to_table(
         ingest_novel_state(stream, state),
@@ -2395,26 +2352,15 @@ def stream_ingest_neardup(spark, sf_dir) -> DataFrame:
     shares dedup_ingest_neardup's oracle."""
     import shutil
 
-    from mongo_polars_reconciliation_spark.extensions.dedup import band_state
     from mongo_polars_reconciliation_spark.streaming.corpus import (
+        NeardupFamily,
         incremental_neardup_ingest,
         read_documents_stream,
     )
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     hist, batch = neardup_ingest_split(spark, sf_dir)
-    # Eager-checkpoint every seed face: each is consumed once PER TRIGGER
-    # inside foreachBatch, and the band-key seed is itself a whole
-    # shingle→signature pipeline — without materialization each trigger
-    # re-derives it from the parquet scan (measured ~1 s/trigger at
-    # sf0.1).
-    hist = hist.localCheckpoint(eager=True)
-    seed_digests = hist.select(
-        F.md5(F.coalesce(F.col("text"), F.lit("")).cast("binary")).alias(
-            "text_hash"
-        )
-    ).distinct().localCheckpoint(eager=True)
-    seed_bands = band_state(hist).localCheckpoint(eager=True)
+    seeds = _checkpointed_seeds(NeardupFamily(), hist)
     # coalesce(1): the feed writer emits each id-range part as ONE file, so
     # maxFilesPerTrigger=1 yields exactly the two intended id-ordered
     # triggers — a multi-partition write split each part into several
@@ -2431,14 +2377,27 @@ def stream_ingest_neardup(spark, sf_dir) -> DataFrame:
     shutil.rmtree(root, ignore_errors=True)
     incremental_neardup_ingest(
         stream,
-        seed_digests,
-        seed_bands,
-        hist,
+        seeds["digests"],
+        seeds["bands"],
+        seeds["docs"],
         f"{root}/state",
         f"{root}/ckpt",
         mis_max_iter=8,
     )
     return spark.read.parquet(f"{root}/state/admitted")
+
+
+def _checkpointed_seeds(family, hist: DataFrame) -> "dict[str, DataFrame]":
+    """``family.seed(hist)``, every face eager-checkpointed: each is
+    consumed once PER TRIGGER inside foreachBatch, and a key-state seed
+    is itself a whole hashing pipeline — without materialization each
+    trigger re-derives it from the parquet scan (measured ~1 s/trigger
+    at sf0.1)."""
+    hist = hist.localCheckpoint(eager=True)
+    return {
+        name: face.localCheckpoint(eager=True)
+        for name, face in family.seed(hist).items()
+    }
 
 
 def stream_ingest_semantic(spark, sf_dir) -> DataFrame:
@@ -2453,12 +2412,12 @@ def stream_ingest_semantic(spark, sf_dir) -> DataFrame:
     import shutil
 
     from mongo_polars_reconciliation_spark.extensions.similarity import (
-        assignment_state,
         kmeans_fit,
         load_centroids,
         save_centroids,
     )
     from mongo_polars_reconciliation_spark.streaming.corpus import (
+        SemanticFamily,
         incremental_semantic_ingest,
         read_documents_stream,
     )
@@ -2472,9 +2431,7 @@ def stream_ingest_semantic(spark, sf_dir) -> DataFrame:
     path = scratch_path(tag, "stream_ingest_centroids")
     save_centroids(spark, cents, path)
     cents = load_centroids(spark, path)
-    seed_assign = assignment_state(hist, cents, nprobe=2).localCheckpoint(
-        eager=True
-    )
+    seeds = _checkpointed_seeds(SemanticFamily(cents, nprobe=2), hist)
     stream = read_documents_stream(
         spark,
         batch.coalesce(1),
@@ -2487,8 +2444,8 @@ def stream_ingest_semantic(spark, sf_dir) -> DataFrame:
     shutil.rmtree(root, ignore_errors=True)
     incremental_semantic_ingest(
         stream,
-        seed_assign,
-        hist,
+        seeds["assign"],
+        seeds["vecs"],
         cents,
         f"{root}/state",
         f"{root}/ckpt",
@@ -2510,25 +2467,15 @@ def stream_ingest_payloads(spark, sf_dir) -> DataFrame:
     oracle."""
     import shutil
 
-    from mongo_polars_reconciliation_spark.extensions.multimodal import (
-        payload_block_state,
-    )
     from mongo_polars_reconciliation_spark.streaming.corpus import (
+        PayloadFamily,
         incremental_payload_ingest,
         read_documents_stream,
     )
 
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     hist, batch = payload_ingest_split(spark, sf_dir)
-    hist = hist.localCheckpoint(eager=True)
-    seed_digests = hist.select(
-        F.md5(
-            F.coalesce(F.col("payload"), F.lit("").cast("binary"))
-        ).alias("payload_hash")
-    ).distinct().localCheckpoint(eager=True)
-    seed_blocks = payload_block_state(hist, block_bytes=64).localCheckpoint(
-        eager=True
-    )
+    seeds = _checkpointed_seeds(PayloadFamily(block_bytes=64), hist)
     stream = read_documents_stream(
         spark,
         batch.select("doc_id", "payload").coalesce(1),
@@ -2540,8 +2487,8 @@ def stream_ingest_payloads(spark, sf_dir) -> DataFrame:
     shutil.rmtree(root, ignore_errors=True)
     incremental_payload_ingest(
         stream,
-        seed_digests,
-        seed_blocks,
+        seeds["digests"],
+        seeds["blocks"],
         f"{root}/state",
         f"{root}/ckpt",
         block_bytes=64,
@@ -2604,7 +2551,7 @@ def stream_datacard(spark, sf_dir) -> DataFrame:
 def events_hist_merge(spark, sf_dir) -> DataFrame:
     """Mergeable-sketch pattern, histogram edition: per-split partial
     histograms of events.value (split on hashed event_type — each partial
-    bins its own filtered scan, r8 independent-sides rework) over SHARED
+    bins its own filtered scan, so the sides are independent) over SHARED
     global bin edges, merged by elementwise count sum next to the
     independently re-binned full-scan counts — the third sketch-merge pin
     (KMV, CMS, histogram), all bit-exact."""

@@ -3,7 +3,7 @@
 Harness queries and the streaming test feeds materialize small parquet/CSV
 round-trip files. Those used to live under ``/root/repo/.stream_tmp`` —
 inside the repo tree — which was gitignored but still wrote build artifacts
-next to source (r7 verdict hygiene item). All such paths now hang off ONE
+next to source. All such paths now hang off ONE
 lazily-created ``tempfile.mkdtemp`` directory per process.
 
 The root must be stable WITHIN a process (not per-call): several queries

@@ -15,47 +15,69 @@ counter, datacard group), partitioned by that key.
 ``incremental_semantic_ingest``, ``incremental_payload_ingest``): the
 reference's ingest loop (``second_conciliate.py:420-447``: read the
 persisted state, admit only novel rows, append) as a ``foreachBatch``
-stream, written once in ``_crawl_loop``. Each family is an admission
-operator plus its list of state faces, each face a parquet dir under
-``state_root``, in write order. Per trigger:
+stream, written once in ``_crawl_loop``.
 
-- every face is read as its seed frame unioned with its dir, when the dir
-  holds files — so trigger N+1's horizon includes trigger N's admissions,
-  as successive dumps meet a growing corpus;
-- the family's batch admission operator runs against those faces;
-- the admitted ids and the admitted batch rows are eager-checkpointed, so
-  every append reads one materialized answer;
-- the pre-ledger faces are appended (overlapped), then the ledger face —
-  the last in the list — strictly after them.
+Each ingest family is ONE definition here (:class:`NeardupFamily`,
+:class:`SemanticFamily`, :class:`PayloadFamily`), and every caller (the
+loops, :func:`compact_state`, the harness faces, the scale probes and
+the tests) takes its state from it:
 
-Crash safety follows from the write order. A crash after some pre-ledger
-appends leaves the ledger short, so the replayed trigger re-derives the
-same admissions and appends them again; a crash after the ledger append
-means the replay admits nothing, and every face is already complete.
-The duplicate and ghost state rows a replay leaves are harmless by
-construction of the admission operators: the text and payload operators filter the
-self-pairs a replayed row forms with its own ghost and dedup state rows
-after their candidate semi-join, and the semantic store is reached only
-through its assign/ ledger. The crash-window tests in
-tests/test_properties.py and tests/test_streaming.py pin this. A
-transactional sink would put all faces in one commit; until then this
-order makes every crash window replay-idempotent.
+- ``faces``: the state faces in write order, the ledger last. A
+  :class:`Face` names its parquet dir under ``state_root``, the columns
+  the admission reads, its bucket key and the rows a trigger appends;
+- the geometry (MinHash ``n``/``num_hashes``/``bands``; centroids and
+  ``nprobe``; ``block_bytes``) is bound once, on the family, so the
+  state probed and the state appended can never disagree (a mismatch
+  silently misses near-dups of earlier admissions);
+- ``seed(history)``: each face's rows for a history corpus. A digest
+  ledger digests NULL content as the empty content;
+- ``fold(state, admitted, admitted_rows)``: each face unioned with the
+  rows one trigger appends, a digest ledger DISTINCTed — the state the
+  next trigger reads back;
+- ``admit(batch, state, **kwargs)``: the family's batch admission
+  operator under that geometry.
 
-The per-trigger plan is the batch engine's (swept by the batch plan
-sweep); ``drain`` records the stream side in ``LAST_PLANS``. The
-compactors (``compact_*_state``) rewrite a loop's append-only dirs into
-the bucketed tables the batch wave path reads.
+Per trigger the loop reads every face as its seed unioned with its dir
+(when the dir holds files), admits, eager-checkpoints the admitted ids
+and the admitted batch rows so every append reads one materialized
+answer, appends the pre-ledger faces (overlapped), then the ledger.
+
+Invariants:
+
+- **The ledger is written last.** A crash after some pre-ledger
+  appends leaves the ledger short, so the replayed trigger re-derives
+  the same admissions and appends them again; a crash after the ledger
+  append means the replay admits nothing, and every face is already
+  complete. A transactional sink would put all faces in one commit;
+  until then this order makes every crash window replay-idempotent.
+- **Duplicate and ghost state rows are semantics-free.** The text and
+  payload operators filter the self-pairs a replayed row forms with its
+  own ghost and dedup state rows after their candidate semi-join; the
+  semantic store is reached only through its assign/ ledger. This is
+  also why :func:`compact_state` may DISTINCT every face.
+- **The geometry is bound once** per family instance (above).
+
+The crash-window tests in tests/test_properties.py and
+tests/test_streaming.py pin the first two, parametrized over the three
+families. The per-trigger plan is the batch engine's (swept by the
+batch plan sweep); ``drain`` records the stream side in ``LAST_PLANS``.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mongo_polars_reconciliation_spark.extensions import (
+    dedup,
+    multimodal,
+    similarity,
+)
 from mongo_polars_reconciliation_spark.extensions.text import cms_cells
 from mongo_polars_reconciliation_spark.session import overlap
 from mongo_polars_reconciliation_spark.streaming.events import drain
@@ -163,49 +185,237 @@ def cms_counter_state(
     )
 
 
+@dataclass(frozen=True)
+class Face:
+    """One state face of an ingest family: the parquet dir
+    ``state_root/<path>`` the crawl loop appends to, and the table
+    :func:`compact_state` buckets by ``key``.
+
+    ``cols`` are what the admission operator reads: a seed and a dir are
+    projected to them. ``rows(admitted, admitted_rows)`` gives the rows
+    one trigger appends. A ``ledger_set`` face is a digest ledger: every
+    read and every fold DISTINCTs it."""
+
+    name: str
+    cols: "tuple[str, ...]"
+    key: str
+    rows: "Callable[[DataFrame, DataFrame], DataFrame]"
+    ledger_set: bool = False
+    dir: str = ""
+
+    @property
+    def path(self) -> str:
+        return self.dir or self.name
+
+    def union(self, state: DataFrame, rows: DataFrame) -> DataFrame:
+        df = state.unionByName(rows.select(*self.cols))
+        return df.distinct() if self.ledger_set else df
+
+
+class IngestFamily:
+    """What the three families share (module docstring). A family
+    defines ``id_col``, ``row_col`` (the content column), ``plan_name``,
+    ``faces`` in write order with the ledger last, ``digests(history)``
+    and ``admit(batch, state, **kwargs)``."""
+
+    def seed(self, history: DataFrame) -> "dict[str, DataFrame]":
+        """Each face's rows for a ``history`` corpus: the whole history
+        appended as one admission."""
+        admitted = self.digests(history)
+        return {
+            f.name: f.rows(admitted, history).select(*f.cols)
+            for f in self.faces
+        }
+
+    def admitted_rows(
+        self, batch: DataFrame, admitted: DataFrame
+    ) -> DataFrame:
+        """The batch rows (id + content) of the admitted ids."""
+        return batch.select(self.id_col, self.row_col).join(
+            admitted.select(self.id_col), self.id_col
+        )
+
+    def fold(
+        self, state: "dict[str, DataFrame]", admitted: DataFrame,
+        admitted_rows: DataFrame,
+    ) -> "dict[str, DataFrame]":
+        """``state`` after one admission: each face unioned with the rows a
+        trigger appends to it, exactly as the crawl loop reads them back."""
+        return {
+            f.name: f.union(state[f.name], f.rows(admitted, admitted_rows))
+            for f in self.faces
+        }
+
+
+def _digest_ledger(
+    history: DataFrame, col: str, alias: str, empty
+) -> DataFrame:
+    """The distinct content digests of ``history``; NULL content digests as
+    the empty content (md5(NULL) is NULL, and NULL never matches the
+    admission's anti-join, so a NULL-content doc would re-admit forever)."""
+    return history.select(
+        F.md5(F.coalesce(F.col(col), empty)).alias(alias)
+    ).distinct()
+
+
+@dataclass(frozen=True)
+class NeardupFamily(IngestFamily):
+    """Text near-dup ingest (``extensions/dedup.py:ingest_novel_neardup``):
+    bands/ (MinHash band keys), docs/ and, last, the admitted/
+    (id, text_hash) digest ledger. The MinHash geometry ``n`` /
+    ``num_hashes`` / ``bands`` is bound here, so the state probed and
+    the state appended share it."""
+
+    id_col: str = "doc_id"
+    row_col: str = "text"
+    n: int = 3
+    num_hashes: int = 12
+    bands: int = 4
+    plan_name = "incremental_neardup"
+
+    @property
+    def faces(self) -> "tuple[Face, ...]":
+        return (
+            Face("bands", ("bband", self.id_col), "bband",
+                 lambda adm, rows: dedup.band_state(
+                     rows, self.id_col, self.row_col, self.n,
+                     self.num_hashes, self.bands,
+                 )),
+            Face("docs", (self.id_col, self.row_col), self.id_col,
+                 lambda adm, rows: rows),
+            Face("digests", ("text_hash",), "text_hash",
+                 lambda adm, rows: adm, ledger_set=True, dir="admitted"),
+        )
+
+    def digests(self, history: DataFrame) -> DataFrame:
+        return _digest_ledger(history, self.row_col, "text_hash", F.lit(""))
+
+    def admit(
+        self, batch: DataFrame, state: "dict[str, DataFrame]", **kwargs
+    ) -> DataFrame:
+        return dedup.ingest_novel_neardup(
+            batch, state["digests"], state["bands"], state["docs"],
+            id_col=self.id_col, text_col=self.row_col, n=self.n,
+            num_hashes=self.num_hashes, bands=self.bands, **kwargs,
+        )
+
+
+@dataclass(frozen=True)
+class SemanticFamily(IngestFamily):
+    """Embedding ingest (``extensions/similarity.py:ingest_novel_semantic``):
+    vecs/ and, last, assign/ (probe-assignment rows). The centroid
+    artifact ``cents`` and ``nprobe`` are bound here: a per-trigger refit
+    or another nprobe would probe the accumulated state with mismatched
+    blocks. There is no digest ledger: an admitted vector's own assign/
+    rows are its ledger entry, because a redelivered copy meets itself at
+    cos 1.0, and ghost vecs/ rows are unreachable without them."""
+
+    cents: "list[list[float]]"
+    nprobe: int = 2
+    id_col: str = "vec_id"
+    row_col: str = "embedding"
+    plan_name = "incremental_semantic"
+
+    @property
+    def faces(self) -> "tuple[Face, ...]":
+        return (
+            Face("vecs", (self.id_col, self.row_col), self.id_col,
+                 lambda adm, rows: rows),
+            Face("assign", ("blk", self.id_col), "blk",
+                 lambda adm, rows: similarity.assignment_state(
+                     rows, self.cents, self.nprobe, self.id_col, self.row_col
+                 )),
+        )
+
+    def digests(self, history: DataFrame) -> None:
+        return None
+
+    def admit(
+        self, batch: DataFrame, state: "dict[str, DataFrame]", **kwargs
+    ) -> DataFrame:
+        return similarity.ingest_novel_semantic(
+            batch, state["assign"], state["vecs"], self.cents,
+            nprobe=self.nprobe, id_col=self.id_col, vec_col=self.row_col,
+            **kwargs,
+        )
+
+
+@dataclass(frozen=True)
+class PayloadFamily(IngestFamily):
+    """Binary-payload ingest
+    (``extensions/multimodal.py:ingest_novel_payloads``): blocks/
+    (aligned-block keys) and, last, the admitted/ (id, payload_hash)
+    digest ledger. The chunk geometry ``block_bytes`` is bound here."""
+
+    block_bytes: int = 1024
+    id_col: str = "doc_id"
+    row_col: str = "payload"
+    plan_name = "incremental_payload"
+
+    @property
+    def faces(self) -> "tuple[Face, ...]":
+        return (
+            Face("blocks", ("bblock", self.id_col, "n_blocks"), "bblock",
+                 lambda adm, rows: multimodal.payload_block_state(
+                     rows, self.block_bytes, self.id_col, self.row_col
+                 )),
+            Face("digests", ("payload_hash",), "payload_hash",
+                 lambda adm, rows: adm, ledger_set=True, dir="admitted"),
+        )
+
+    def digests(self, history: DataFrame) -> DataFrame:
+        return _digest_ledger(
+            history, self.row_col, "payload_hash", F.lit("").cast("binary")
+        )
+
+    def admit(
+        self, batch: DataFrame, state: "dict[str, DataFrame]", **kwargs
+    ) -> DataFrame:
+        return multimodal.ingest_novel_payloads(
+            batch, state["digests"], state["blocks"],
+            block_bytes=self.block_bytes, id_col=self.id_col,
+            payload_col=self.row_col, **kwargs,
+        )
+
+
 def _crawl_loop(
-    stream: DataFrame,
-    faces: "list[tuple[str, DataFrame, Callable]]",
-    admit: "Callable[[DataFrame, dict[str, DataFrame]], DataFrame]",
-    row_cols: "tuple[str, ...]", state_root: str, checkpoint_dir: str,
-    plan_name: str, id_col: str, digest_ledger: bool = True,
+    stream: DataFrame, family: IngestFamily, seeds: "dict[str, DataFrame]",
+    state_root: str, checkpoint_dir: str, **admit_kwargs,
 ) -> None:
     """Drain ``stream`` through the crawl loop (module docstring).
 
-    ``faces`` lists ``(name, seed, rows)`` in write order, the last being
-    the ledger. Per trigger, face ``name`` is read as ``seed`` unioned
-    with the ``state_root/name`` dir (projected to ``seed``'s columns)
-    when that dir holds files, a ``digest_ledger`` then DISTINCTed;
-    ``admit(batch, {name: face})`` gives the admitted ids; the ids and
-    the admitted batch rows (``id_col`` + ``row_cols``) are
-    eager-checkpointed; ``rows(admitted, admitted_rows)`` is appended to
-    every face but the ledger on a 2-thread pool, then to the ledger.
-    The executed plan lands in ``LAST_PLANS[plan_name]``."""
+    Per trigger, each face is read as its seed unioned with its
+    ``state_root`` dir when that dir holds files (:meth:`Face.union`);
+    ``family.admit`` gives the admitted ids; the ids and the admitted
+    batch rows are eager-checkpointed; each face's rows are appended,
+    every face but the ledger on a 2-thread pool, then the ledger. The
+    executed plan lands in ``LAST_PLANS[family.plan_name]``."""
     from mongo_polars_reconciliation_spark.streaming.recon import (
         _has_state_files,
     )
 
     spark = stream.sparkSession
-    ledger = faces[-1][0]
+    faces = family.faces
+    seeds = {f.name: seeds[f.name].select(*f.cols) for f in faces}
 
-    def read(name: str, seed: DataFrame) -> DataFrame:
-        path = f"{state_root}/{name}"
+    def read(face: Face) -> DataFrame:
+        path = f"{state_root}/{face.path}"
         if not _has_state_files(spark, path):
-            return seed
-        df = seed.unionByName(spark.read.parquet(path).select(*seed.columns))
-        return df.distinct() if digest_ledger and name == ledger else df
+            return seeds[face.name]
+        return face.union(seeds[face.name], spark.read.parquet(path))
 
     def process(batch: DataFrame, epoch_id: int) -> None:
-        state = {name: read(name, seed) for name, seed, _ in faces}
-        admitted = admit(batch, state).localCheckpoint(eager=True)
-        adm_rows = batch.select(id_col, *row_cols).join(
-            admitted.select(id_col), id_col
-        ).localCheckpoint(eager=True)
+        state = {f.name: read(f) for f in faces}
+        admitted = family.admit(batch, state, **admit_kwargs).localCheckpoint(
+            eager=True
+        )
+        adm_rows = family.admitted_rows(batch, admitted).localCheckpoint(
+            eager=True
+        )
 
-        def append(face) -> None:
-            name, _, rows = face
-            rows(admitted, adm_rows).write.mode("append").parquet(
-                f"{state_root}/{name}"
+        def append(face: Face) -> None:
+            face.rows(admitted, adm_rows).write.mode("append").parquet(
+                f"{state_root}/{face.path}"
             )
 
         # the pre-ledger appends read only the two checkpoints and land in
@@ -217,7 +427,7 @@ def _crawl_loop(
         stream.writeStream.foreachBatch(process).option(
             "checkpointLocation", checkpoint_dir
         ),
-        plan_name,
+        family.plan_name,
     )
 
 
@@ -232,46 +442,24 @@ def incremental_neardup_ingest(
     text_col: str = "text",
     **neardup_kwargs,
 ) -> None:
-    """The text crawl loop: each trigger runs
-    ``extensions/dedup.py:ingest_novel_neardup`` against the seeds plus
-    every earlier admission, then appends bands/ (the admitted docs'
-    band keys), docs/ (the admitted docs) and, last, the admitted/
-    (id, text_hash) ledger.
+    """The text crawl loop of :class:`NeardupFamily`. ``neardup_kwargs``
+    go to ``ingest_novel_neardup``; its MinHash geometry (``n`` /
+    ``num_hashes`` / ``bands``) binds the family, so the appended band
+    keys share it.
 
     Equivalence contract (what the oracle checks): when trigger order
     respects id order, the drained admitted set equals the one-batch
     admission of the concatenated stream — the greedy batch-split
-    property pinned in tests/test_properties.py.
-
-    ``neardup_kwargs`` go both to the admission operator and to the
-    ``band_state`` rows appended for admitted docs: the MinHash geometry
-    (n/num_hashes/bands) must match between the state probed and the
-    state appended, or later triggers silently miss near-dups of earlier
-    admissions."""
-    from mongo_polars_reconciliation_spark.extensions.dedup import (
-        band_state,
-        ingest_novel_neardup,
-    )
-
-    # the shared subset of the admission and band_state signatures
-    band_kwargs = {
-        k: v
-        for k, v in neardup_kwargs.items()
-        if k in ("n", "num_hashes", "bands")
+    property pinned in tests/test_properties.py."""
+    geometry = {
+        k: neardup_kwargs.pop(k)
+        for k in ("n", "num_hashes", "bands")
+        if k in neardup_kwargs
     }
-    faces = [
-        ("bands", seed_bands.select("bband", id_col),
-         lambda adm, rows: band_state(rows, id_col, text_col, **band_kwargs)),
-        ("docs", seed_docs.select(id_col, text_col), lambda adm, rows: rows),
-        ("admitted", seed_digests.select("text_hash"), lambda adm, rows: adm),
-    ]
     _crawl_loop(
-        docs_stream, faces,
-        lambda batch, st: ingest_novel_neardup(
-            batch, st["admitted"], st["bands"], st["docs"],
-            id_col=id_col, text_col=text_col, **neardup_kwargs,
-        ),
-        (text_col,), state_root, checkpoint_dir, "incremental_neardup", id_col,
+        docs_stream, NeardupFamily(id_col, text_col, **geometry),
+        {"digests": seed_digests, "bands": seed_bands, "docs": seed_docs},
+        state_root, checkpoint_dir, **neardup_kwargs,
     )
 
 
@@ -288,43 +476,14 @@ def incremental_semantic_ingest(
     vec_col: str = "embedding",
     mis_max_iter: int = 25,
 ) -> None:
-    """The embedding crawl loop: each trigger runs
-    ``extensions/similarity.py:ingest_novel_semantic`` under the persisted
-    centroid artifact against the seeds plus every earlier admission,
-    then appends vecs/ (the admitted vectors) and, last, assign/ (their
-    probe-assignment rows).
-
-    ``cents`` and ``nprobe`` are shared between the admission join and
-    the appended :func:`assignment_state` rows: a per-trigger refit (or a
-    different nprobe) would make later triggers probe the accumulated
-    state with mismatched blocks and silently miss semantic dups of
-    earlier admissions.
-
-    This family has no digest ledger: an admitted vector's own assign/
-    rows are its ledger entry, because a redelivered copy meets itself at
-    cos 1.0 and is dropped. Ghost vecs/ rows from a crash before the
-    assign/ append are unreachable (the store is read only through the
-    assignment collision semi-join). The drained admitted set is read
-    from vecs/."""
-    from mongo_polars_reconciliation_spark.extensions.similarity import (
-        assignment_state,
-        ingest_novel_semantic,
-    )
-
-    faces = [
-        ("vecs", seed_vecs.select(id_col, vec_col), lambda adm, rows: rows),
-        ("assign", seed_assign.select("blk", id_col),
-         lambda adm, rows: assignment_state(rows, cents, nprobe, id_col, vec_col)),
-    ]
+    """The embedding crawl loop of :class:`SemanticFamily` under the
+    persisted centroid artifact ``cents``. The drained admitted set is
+    read from vecs/."""
     _crawl_loop(
-        vecs_stream, faces,
-        lambda batch, st: ingest_novel_semantic(
-            batch, st["assign"], st["vecs"], cents,
-            threshold=threshold, nprobe=nprobe,
-            id_col=id_col, vec_col=vec_col, mis_max_iter=mis_max_iter,
-        ),
-        (vec_col,), state_root, checkpoint_dir, "incremental_semantic", id_col,
-        digest_ledger=False,
+        vecs_stream, SemanticFamily(cents, nprobe, id_col, vec_col),
+        {"assign": seed_assign, "vecs": seed_vecs},
+        state_root, checkpoint_dir,
+        threshold=threshold, mis_max_iter=mis_max_iter,
     )
 
 
@@ -341,149 +500,36 @@ def incremental_payload_ingest(
     max_bucket_size: "int | None" = None,
     mis_max_iter: int = 25,
 ) -> None:
-    """The binary-payload crawl loop: each trigger runs
-    ``extensions/multimodal.py:ingest_novel_payloads`` against the seeds
-    plus every earlier admission, then appends blocks/ (the admitted
-    payloads' block keys) and, last, the admitted/ (id, payload_hash)
-    ledger. ``block_bytes`` is shared between the admission join and the
-    appended :func:`payload_block_state` rows — a mismatched chunk
-    geometry would make later triggers probe with foreign keys."""
-    from mongo_polars_reconciliation_spark.extensions.multimodal import (
-        ingest_novel_payloads,
-        payload_block_state,
-    )
-
-    faces = [
-        ("blocks", seed_blocks.select("bblock", id_col, "n_blocks"),
-         lambda adm, rows: payload_block_state(
-             rows, block_bytes, id_col, payload_col
-         )),
-        ("admitted", seed_digests.select("payload_hash"), lambda adm, rows: adm),
-    ]
+    """The binary-payload crawl loop of :class:`PayloadFamily`."""
     _crawl_loop(
-        mm_stream, faces,
-        lambda batch, st: ingest_novel_payloads(
-            batch, st["admitted"], st["blocks"],
-            block_bytes=block_bytes, threshold=threshold,
-            id_col=id_col, payload_col=payload_col,
-            max_bucket_size=max_bucket_size, mis_max_iter=mis_max_iter,
-        ),
-        (payload_col,), state_root, checkpoint_dir, "incremental_payload", id_col,
+        mm_stream, PayloadFamily(block_bytes, id_col, payload_col),
+        {"digests": seed_digests, "blocks": seed_blocks},
+        state_root, checkpoint_dir, threshold=threshold,
+        max_bucket_size=max_bucket_size, mis_max_iter=mis_max_iter,
     )
 
 
-def compact_ingest_state(
+def compact_state(
     spark: SparkSession,
+    family: IngestFamily,
     state_root: str,
-    table_prefix: str = "corpus_ingest",
-    buckets: int = 64,
-    id_col: str = "doc_id",
-) -> "dict[str, str]":
-    """Compact the crawl loop's append-only state dirs into the BUCKETED
-    tables the admission joins want: ``incremental_neardup_ingest``
-    appends one parquet fragment per micro-batch to admitted/ bands/
-    docs/ — correct, but after N triggers each is N small fragments and
-    every anti-join reshuffles the whole accumulated state. This rewrite
-    lands each face bucketed by exactly its join key — digests by
-    text_hash, band keys by bband, docs by the id — so the NEXT ingest
-    reads the (huge) state sides exchange-free, the layout both
-    bucketed-state plan pins in tests/test_bucketing.py verify.
-
-    Returns {face: table_name}. Run it like any compaction job — between
-    ingest waves, not inside one; readers launched before the rewrite
-    keep their snapshot, and the loop's idempotence property means a
-    re-delivered batch admits nothing whether it reads the fragments or
-    the compacted tables (pinned in tests/test_streaming.py).
-
-    Consumers: the compacted tables feed the BATCH wave
-    path — ``spark.table(out['digests'])`` etc. straight into
-    ``ingest_novel_neardup`` (the ``dedup_ingest_waves`` query is exactly
-    wave → compact → wave, with the wave-2 plan pinned exchange-free on
-    all three compacted faces). ``incremental_neardup_ingest`` reads the
-    ``state_root`` parquet DIRS, not these tables — to resume the
-    streaming loop after a compaction, seed a fresh ``state_root`` from
-    the tables (or pass them as the seed_* frames of a new loop)."""
-    faces = {
-        "digests": (f"{state_root}/admitted", "text_hash"),
-        "bands": (f"{state_root}/bands", "bband"),
-        "docs": (f"{state_root}/docs", id_col),
-    }
-    return _compact_faces(
-        spark,
-        faces,
-        table_prefix,
-        buckets,
-        dedupe={"digests": ["text_hash"]},
-    )
-
-
-def compact_semantic_state(
-    spark: SparkSession,
-    state_root: str,
-    table_prefix: str = "semantic_ingest",
-    buckets: int = 64,
-    id_col: str = "vec_id",
-) -> "dict[str, str]":
-    """:func:`compact_ingest_state` for the embedding-space crawl loop's
-    faces: ``incremental_semantic_ingest`` appends one fragment per
-    trigger to vecs/ and assign/; this rewrite lands the vector store
-    bucketed by the id (the collision verify's semi-join key) and the
-    assignment rows by blk (the collision join's key), and drops the
-    duplicate rows a crash-replayed trigger may have appended — dedup at
-    compaction is SAFE precisely because the admission joins already
-    treat duplicate state rows as semantics-free. Same consumer routing
-    as the text compactor: tables feed the batch wave path; the
-    streaming loop reads state_root dirs."""
-    faces = {
-        "vecs": (f"{state_root}/vecs", id_col),
-        "assign": (f"{state_root}/assign", "blk"),
-    }
-    return _compact_faces(
-        spark,
-        faces,
-        table_prefix,
-        buckets,
-        dedupe={"vecs": None, "assign": None},
-    )
-
-
-def compact_payload_state(
-    spark: SparkSession,
-    state_root: str,
-    table_prefix: str = "payload_ingest",
-    buckets: int = 64,
-    id_col: str = "doc_id",
-) -> "dict[str, str]":
-    """:func:`compact_ingest_state` for the binary-payload crawl loop's
-    faces: the (doc_id, payload_hash) ledger bucketed by
-    payload_hash (the digest anti-join's key) and the block rows by
-    bblock (the collision join's key), crash-replay duplicates dropped.
-    Same consumer routing as the text compactor."""
-    faces = {
-        "digests": (f"{state_root}/admitted", "payload_hash"),
-        "blocks": (f"{state_root}/blocks", "bblock"),
-    }
-    return _compact_faces(
-        spark,
-        faces,
-        table_prefix,
-        buckets,
-        dedupe={"digests": None, "blocks": None},
-    )
-
-
-def _compact_faces(
-    spark: SparkSession,
-    faces: "dict[str, tuple[str, str]]",
     table_prefix: str,
-    buckets: int,
-    dedupe: "dict[str, list[str] | None] | None" = None,
+    buckets: int = 64,
 ) -> "dict[str, str]":
-    """Shared face-rewrite loop of the three state compactors: each
-    ``face -> (fragment_dir, bucket_key)`` lands as a managed bucketed
-    table ``{table_prefix}_{face}``. ``dedupe[face]`` = column subset to
-    project-and-distinct (None = full-row distinct); faces absent from
-    ``dedupe`` are rewritten verbatim."""
+    """Compact a crawl loop's append-only dirs under ``state_root`` into
+    one managed table ``{table_prefix}_{face}`` per face of ``family``,
+    bucketed (and sorted) by the face's join key and DISTINCT over its
+    columns, which is safe because duplicate state rows are
+    semantics-free. After N triggers each dir is N small fragments and
+    every admission join reshuffles it; the next ingest reads the
+    compacted (huge) state sides exchange-free (the bucketed-state plan
+    pins in tests/test_bucketing.py).
+
+    Returns {face: table_name}. Run it between ingest waves, not inside
+    one. The tables feed the batch wave path (``dedup_ingest_waves`` is
+    wave → compact → wave); the streaming loop reads ``state_root``
+    dirs, so to resume it after a compaction pass the tables as the
+    seeds of a fresh ``state_root``."""
     from mongo_polars_reconciliation_spark.sources.state import (
         write_bucketed_state,
     )
@@ -500,25 +546,24 @@ def _compact_faces(
         )
     wh = wh_uri.removeprefix("file:")
 
-    def _compact_one(item) -> tuple[str, str]:
-        face, (path, key) = item
-        table = f"{table_prefix}_{face}"
+    def _compact_one(face: Face) -> "tuple[str, str]":
+        table = f"{table_prefix}_{face.name}"
         # a crashed earlier compaction can leave the managed location
         # behind after its table entry is gone — saveAsTable then fails
         # with LOCATION_ALREADY_EXISTS; clear it like the table itself
         spark.sql(f"DROP TABLE IF EXISTS {table}")
         shutil.rmtree(f"{wh}/{table}", ignore_errors=True)
-        df = spark.read.parquet(path)
-        if dedupe is not None and face in dedupe:
-            cols = dedupe[face]
-            df = (df.select(*cols) if cols else df).distinct()
-        write_bucketed_state(df, table, buckets=buckets, key=key)
-        return face, table
+        df = spark.read.parquet(f"{state_root}/{face.path}")
+        write_bucketed_state(
+            df.select(*face.cols).distinct(), table, buckets=buckets,
+            key=face.key,
+        )
+        return face.name, table
 
     # face rewrites are independent (distinct tables, distinct source
     # dirs) — overlap them so one face's write tail back-fills with the
     # next face's scan
-    return dict(overlap(_compact_one, faces.items()))
+    return dict(overlap(_compact_one, family.faces))
 
 
 def ingest_novel_state(

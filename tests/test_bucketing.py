@@ -53,7 +53,7 @@ def test_bucketed_state_joins_without_exchange_on_stored_side(spark):
 
 
 def test_bucketed_digest_state_anti_join_shuffle_free_on_stored_side(spark):
-    """r8 ingest_novel scale claim, pinned: with the accumulated digest
+    """ingest_novel scale claim, pinned: with the accumulated digest
     state stored bucketed by text_hash, the incremental-ingest anti-join
     reads the (huge) state side with NO exchange — only the arriving
     batch shuffles to the bucket count."""
@@ -95,7 +95,7 @@ def test_bucketed_digest_state_anti_join_shuffle_free_on_stored_side(spark):
 
 
 def test_bucketed_band_state_join_shuffle_free_on_stored_side(spark):
-    """r9 ingest_novel_neardup scale claim, pinned: the accumulated
+    """ingest_novel_neardup scale claim, pinned: the accumulated
     MinHash band-key state, stored bucketed by the composite bband key,
     feeds the batch-vs-history collision join with NO exchange on the
     stored side — only the arriving batch's band keys shuffle."""
@@ -129,7 +129,7 @@ def test_bucketed_band_state_join_shuffle_free_on_stored_side(spark):
 
 
 def test_bucketed_assignment_state_join_shuffle_free_on_stored_side(spark):
-    """r10 ingest_novel_semantic scale claim, pinned: the accumulated
+    """ingest_novel_semantic scale claim, pinned: the accumulated
     probe-assignment state, stored bucketed by blk, feeds the
     batch-vs-history block-collision join with NO exchange on the stored
     side — only the arriving batch's assignment rows shuffle."""
@@ -173,7 +173,7 @@ def test_bucketed_assignment_state_join_shuffle_free_on_stored_side(spark):
 
 
 def test_waves_compacted_faces_join_shuffle_free_on_stored_side(spark):
-    """r10 dedup_ingest_waves scale claim, pinned: after the between-waves
+    """dedup_ingest_waves scale claim, pinned: after the between-waves
     compaction, each of the three state faces feeds its admission join
     with NO exchange on the stored side. The faces are pinned as the
     three sub-joins ingest_novel_neardup actually builds — the operator
@@ -240,7 +240,7 @@ def test_waves_compacted_faces_join_shuffle_free_on_stored_side(spark):
 
 
 def test_bucketed_payload_block_state_join_shuffle_free_on_stored_side(spark):
-    """r10 ingest_novel_payloads scale claim, pinned: the accumulated
+    """ingest_novel_payloads scale claim, pinned: the accumulated
     composite block-key state, stored bucketed by bblock, feeds the
     batch-vs-history collision join with NO exchange on the stored side."""
     from mongo_polars_reconciliation_spark.extensions.multimodal import (

@@ -1,6 +1,4 @@
-"""Consolidation PRE-pins for the two retire-eligible registry faces
-(r16, VERDICT r15 #6 groundwork — pre-verified this round, NOTES_r16
-"Consolidation pre-verification").
+"""Consolidation PRE-pins for the two retire-eligible registry faces.
 
 ``sim_topk_ivf`` is the only registry exerciser of ``label_centroids`` +
 the broadcast-join centroid scoring path (extensions/similarity.py — the

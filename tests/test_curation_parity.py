@@ -1,5 +1,5 @@
-"""Carrying pins for the RETIRED curation registry faces (r15, VERDICT r14
-#2 — registry consolidation, the r14 stream-face pattern).
+"""Carrying pins for the RETIRED curation registry faces (registry
+consolidation, the retired stream-face pattern).
 
 curation_pipeline (v1), curation_pipeline_v2 and curation_pipeline_v3 are
 strict rungs of the composition ladder whose top, curation_pipeline_v4,

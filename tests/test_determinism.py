@@ -26,29 +26,23 @@ def _sorted_rows(df):
      "text_pack_sequences", "events_salted_agg", "text_tfidf_top_terms",
      "events_hist_quantiles", "text_dup_spans", "sim_contamination",
      "text_datacard", "events_anomaly_mad",
-     # r6 operators
      "sim_knn_join_multiprobe", "sim_semantic_dedup_fitted",
      "text_dup_spans_trim", "text_heavy_hitters_cms",
-     # r7 operators
      "text_cms_merge", "text_bloom_decontaminate", "text_ngram_novelty",
      "text_split_leakage_safe", "dedup_source_overlap",
      "dedup_ngram_jaccard",
-     # r8 operators
      "text_bpe_merges", "text_bpe_encode", "text_sample_fixed_k",
      "dedup_ingest_incremental", "text_lm_score", "sim_recall_probe",
      "text_quality_gate",
-     # r9 operators
      "dedup_ingest_neardup", "sim_recall_probe_sampled",
      "text_bpe_vocab_roundtrip", "text_quality_c4",
      "mm_payload_dedup", "mm_payload_near_dup",
-     # r10 operators
      "sim_centroid_roundtrip",
      "sim_ingest_semantic", "dedup_ingest_waves", "mm_payload_ingest",
      "dedup_clusters_quality", "sim_topk_pq", "sim_topk_ivfpq",
      "text_quality_gopher", "text_lm_buckets", "text_datacard_merge",
      "text_pack_shards_roundtrip", "sim_knn_join_ivfpq",
      "text_mix_temperature", "text_line_dedup",
-     # r11 operators
      "text_line_dedup_trim", "curation_pipeline_v4",
      "text_mix_temperature_alpha", "sim_knn_join_ivfpq_served",
      "text_pii_scrub"],

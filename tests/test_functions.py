@@ -10,14 +10,18 @@ from mongo_polars_reconciliation_spark.functions import (
 
 
 def test_prefix_sum_scalable_matches_window(spark):
+    """The range-partitioned scan equals the one-task reference form, a
+    global window with no PARTITION BY."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
     df = spark.range(0, 500).selectExpr("id", "(id % 13) + 1 as v")
-    scal = rows(
-        with_prefix_sum(df, ["id"], "v", scalable=True),
+    scal = rows(with_prefix_sum(df, ["id"], "v"), "id", "prefix_sum")
+    w = Window.orderBy("id").rowsBetween(Window.unboundedPreceding, -1)
+    simple = rows(
+        df.withColumn("prefix_sum", F.coalesce(F.sum("v").over(w), F.lit(0))),
         "id",
         "prefix_sum",
-    )
-    simple = rows(
-        with_prefix_sum(df, ["id"], "v", scalable=False), "id", "prefix_sum"
     )
     assert scal == simple
     # exclusive semantics: first row is 0, each next adds the previous value
@@ -155,6 +159,24 @@ def test_frame_sample_empty_payload_emits_no_frames(spark):
     assert [(r["doc_id"], r["frame_no"], r["byte_offset"]) for r in out] == [
         (2, 0, 0),
         (2, 1, 256),
+    ]
+
+
+def test_extract_features_null_payload_gives_null_features(spark):
+    """A NULL payload gives NULL byte_len and prefix_hex, as SQL
+    octet_length and hex of NULL do, next to the values of a real one."""
+    from mongo_polars_reconciliation_spark.extensions.multimodal import (
+        attach_payload,
+        extract_features,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, None), (2, "abcdefghij")], "doc_id long, text string"
+    )
+    out = sorted(map(tuple, extract_features(attach_payload(docs)).collect()))
+    assert out == [
+        (1, None, None, "text/plain"),
+        (2, 10, b"abcdefgh".hex(), "text/plain"),
     ]
 
 
@@ -431,7 +453,7 @@ def test_semantic_contamination_reports_partnerless_rows(spark):
 
 
 def test_null_text_docs_get_split_and_overlap_rows(spark):
-    """r8 regression (advice item): md5(NULL) is NULL, and NULL join keys
+    """Regression (advice item): md5(NULL) is NULL, and NULL join keys
     never match — so null-text docs used to vanish from leakage_safe_split
     (no assignment at all) and from the source-overlap matrix. Both now
     digest NULL as '' — every doc gets exactly one split row, null-text and
@@ -455,7 +477,7 @@ def test_null_text_docs_get_split_and_overlap_rows(spark):
 
 
 def test_ingest_novel_suppresses_cross_batch_and_within_batch_dups(spark):
-    """r8 ingest_novel contract: within-batch duplicates collapse to the
+    """ingest_novel contract: within-batch duplicates collapse to the
     min id; digests already in the state never re-admit (whatever id they
     arrive under); null text digests as '' and dedups against an
     empty-text state entry."""

@@ -1,8 +1,8 @@
-"""Direct pins for the shared ingest admission kernel (r13, VERDICT r12
-#2). The three families' property suites exercise these paths
-transitively; these unit pins hold the kernel's own contracts so a
-future family port (or a kernel edit) fails HERE first, with a message
-naming the violated invariant rather than a drifted ingest result."""
+"""Direct pins for the shared ingest admission kernel. The three
+families' property suites exercise these paths transitively; these unit
+pins hold the kernel's own contracts so a future family port (or a
+kernel edit) fails HERE first, with a message naming the violated
+invariant rather than a drifted ingest result."""
 
 from pyspark.sql import functions as F
 

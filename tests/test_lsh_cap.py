@@ -247,8 +247,9 @@ def test_payload_ingest_cap_bounds_degenerate_history_collisions(spark):
     the genuinely novel zero-padded doc still admits."""
     from mongo_polars_reconciliation_spark.extensions.multimodal import (
         attach_payload,
-        ingest_novel_payloads,
-        payload_block_state,
+    )
+    from mongo_polars_reconciliation_spark.streaming.corpus import (
+        PayloadFamily,
     )
 
     zeros = "\x00" * 64
@@ -270,18 +271,11 @@ def test_payload_ingest_cap_bounds_degenerate_history_collisions(spark):
             "doc_id long, text string",
         )
     )
-    digests = hist.select(
-        F.md5(F.col("payload")).alias("payload_hash")
-    ).distinct()
+    family = PayloadFamily(block_bytes=64)
     got = sorted(
         r["doc_id"]
-        for r in ingest_novel_payloads(
-            batch,
-            digests,
-            payload_block_state(hist, block_bytes=64),
-            block_bytes=64,
-            max_bucket_size=100,
-            mis_max_iter=8,
+        for r in family.admit(
+            batch, family.seed(hist), max_bucket_size=100, mis_max_iter=8
         ).collect()
     )
     assert got == [100001], got
@@ -297,25 +291,17 @@ def test_text_ingest_history_cap_equals_uncapped(spark):
     join, and the admission answer is STILL identical to uncapped,
     because hot-bucket candidates share only boilerplate (Jaccard far
     under threshold) and fail verification anyway."""
-    from pyspark.sql import functions as F
+    from tests.test_properties import _ingest_case
 
-    from mongo_polars_reconciliation_spark.extensions.dedup import (
-        band_state,
-        ingest_novel_neardup,
-    )
-    from tests.test_properties import _neardup_fixture
-
-    hist, batch, digests, bands = _neardup_fixture(spark)
+    family, hist, batch = _ingest_case(spark, "neardup")
+    state = family.seed(hist)
     exact = sorted(
-        tuple(r)
-        for r in ingest_novel_neardup(
-            batch, digests, bands, hist, mis_max_iter=8
-        ).collect()
+        tuple(r) for r in family.admit(batch, state, mis_max_iter=8).collect()
     )
     capped = sorted(
         tuple(r)
-        for r in ingest_novel_neardup(
-            batch, digests, bands, hist, max_bucket_size=1000, mis_max_iter=8
+        for r in family.admit(
+            batch, state, max_bucket_size=1000, mis_max_iter=8
         ).collect()
     )
     assert exact == capped and len(exact) > 0
@@ -337,22 +323,15 @@ def test_text_ingest_history_cap_equals_uncapped(spark):
         ],
         "doc_id long, text string",
     )
-    dg2 = hist2.select(
-        F.md5(F.coalesce(F.col("text"), F.lit("")).cast("binary")).alias(
-            "text_hash"
-        )
-    ).distinct()
-    bands2 = band_state(hist2)
+    state2 = family.seed(hist2)
     got_exact = sorted(
         r["doc_id"]
-        for r in ingest_novel_neardup(
-            batch2, dg2, bands2, hist2, mis_max_iter=8
-        ).collect()
+        for r in family.admit(batch2, state2, mis_max_iter=8).collect()
     )
     got_capped = sorted(
         r["doc_id"]
-        for r in ingest_novel_neardup(
-            batch2, dg2, bands2, hist2, max_bucket_size=100, mis_max_iter=8
+        for r in family.admit(
+            batch2, state2, max_bucket_size=100, mis_max_iter=8
         ).collect()
     )
     assert got_exact == got_capped, (got_exact, got_capped)

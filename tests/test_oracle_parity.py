@@ -11,7 +11,7 @@ import pytest
 
 import __spark_entry__ as entry_mod
 
-# r9 (VERDICT r8 ask #8): the parity sweep dominates the suite's wall time.
+# the parity sweep dominates the suite's wall time.
 # It stays in the DEFAULT run (the round gate is unchanged; no test removed)
 # but carries a marker so unit iterations can run `-m "not parity"` and
 # finish in seconds, and a single query can be re-checked with

@@ -254,9 +254,10 @@ def test_asof_join_is_union_window_not_range_join(spark):
 
 
 def test_dedup_clusters_counts_every_k_rounds(spark):
-    """Convergence is counted once per check_every-round block, not per
-    round: a diameter-6 chain with check_every=3 must finish with ~1/3 the
-    driver actions while still reaching the exact fixpoint."""
+    """Convergence is counted once per CLUSTER_CHECK_EVERY-round block,
+    not per round: a diameter-6 chain with 3-round blocks must finish
+    with ~1/3 the driver actions while still reaching the exact
+    fixpoint."""
     from mongo_polars_reconciliation_spark.extensions import dedup as ddp
 
     pairs = spark.createDataFrame(
@@ -274,7 +275,7 @@ def test_dedup_clusters_counts_every_k_rounds(spark):
     try:
         got = {
             r["doc_id"]: r["cluster_id"]
-            for r in ddp.dedup_clusters(pairs, ids, check_every=3).collect()
+            for r in ddp.dedup_clusters(pairs, ids).collect()
         }
     finally:
         ddp.DataFrame.count = orig
@@ -313,7 +314,7 @@ def test_mix_epochs_is_map_only(spark):
 
 
 def test_single_partition_key_survives_constant_folding(spark):
-    """r12 (VERDICT r11 #3): single_partition_key() must survive into the
+    """single_partition_key() must survive into the
     OPTIMIZED plan as a real partition key. A foldable literal
     (the `Window.partitionBy(F.lit(1))` mix_temperature carried) is
     constant-folded to an EMPTY window spec, and WindowExec then logs its
@@ -382,11 +383,11 @@ BNLJ_BY_DESIGN = {
     "events_kmv_merge",
     "text_lang_id",
     "events_hist_quantiles",
-    # r8: the independent-sides rework bins each filtered scan against the
+    # the independent-sides rework bins each filtered scan against the
     # same one-row (lo, hi) broadcast, so the 1-row crossJoin now shows in
     # the plan n_splits+1 times (it was hidden behind a checkpoint before)
     "events_hist_merge",
-    # r8: adaptive gate joins the 1-row cutoff as a broadcast
+    # adaptive gate joins the 1-row cutoff as a broadcast
     "text_quality_gate",
     "sim_contamination",
     "curation_pipeline",
@@ -420,7 +421,7 @@ def test_bloom_filter_is_plan_literal_or_broadcast(spark):
         text.BLOOM_LITERAL_MAX_WORDS = old_gate
 
 
-# r15: retired from the driver registry (VERDICT r14 #2) but still swept
+# retired from the driver registry but still swept
 # here — the harness functions remain (they back the DuckDB parity carrying
 # pins in test_curation_parity.py and stay bench-timed), so their plans
 # stay under the three-killer sweep too, exactly like the stream
@@ -476,7 +477,7 @@ STREAM_TABLE_OF = {
     "stream_datacard": "mem_stream_datacard",
 }
 
-# r14: retired from the driver registry (VERDICT r13 #5) but still swept
+# retired from the driver registry but still swept
 # here — the harness functions remain (they back the stream-≡-batch
 # carrying pins in test_streaming.py / test_properties.py), so their
 # drained plans stay under the three-killer sweep too.

@@ -622,7 +622,7 @@ def test_bloom_decontaminate_no_false_negatives(spark):
 
 
 def test_auto_nlist_preserves_nesting_and_scales(spark):
-    """nlist="auto" (VERDICT r6 #3): the resolved value is
+    """nlist="auto": the resolved value is
     ceil(n/target_block_rows), the fitted pipeline accepts it, and the
     candidate-nesting invariant (nprobe=2 ⊇ nprobe=1, shared scores
     identical) holds under auto-resolution exactly as with a pinned
@@ -756,7 +756,7 @@ def test_cms_heavy_hitters_matches_python_model(spark):
 
     def bucket(tok, j):
         # Kirsch-Mitzenmacher rows: h1 mod p, h2 the same fold mod a second
-        # prime (functions/hashing.py:POLY_P31B — r8 fix: the reversed-token
+        # prime (functions/hashing.py:POLY_P31B — a reversed-token
         # h2 collapsed to h1 for palindromic/1-char tokens)
         return (
             (_py_poly_hash_mixed(tok) + j * _py_poly_hash_mixed(tok, p=2147483629)) % p
@@ -1020,7 +1020,7 @@ def test_bpe_encode_stats_consistent_with_fit(spark):
 
 
 def test_cms_rows_independent_for_palindromic_tokens(spark):
-    """r8 h2 pin: with h2 derived from the reversed token (the r7 design),
+    """The h2 pin: with h2 derived from the reversed token (an earlier design),
     every palindromic token — including ALL 1-char tokens — had h1 == h2,
     so its d bucket rows were affine transforms of one hash (g_j =
     h1·(1+j) mod p mod w) and row-independence vanished for that key
@@ -1324,7 +1324,7 @@ def test_ingest_novel_is_idempotent_after_state_update(spark):
 
 
 def test_quality_gate_null_text_scored_as_empty(spark):
-    """r9 advice: a NULL-text doc must not vanish from (or reorder) the
+    """A NULL-text doc must not vanish from (or reorder) the
     adaptive gate — it scores as empty text, exactly as if text were ''."""
     from mongo_polars_reconciliation_spark.extensions.text import (
         quality_gate_adaptive,
@@ -1347,7 +1347,7 @@ def test_quality_gate_null_text_scored_as_empty(spark):
 
 
 def test_sample_shortfall_audit_flags_tight_prefilter(spark):
-    """r9 advice: a too-tight prefilter_frac silently shrinks the sample;
+    """A too-tight prefilter_frac silently shrinks the sample;
     the audit frame must report exactly the per-stratum loss, and report
     zero when the prefilter is generous or absent."""
     from mongo_polars_reconciliation_spark.extensions.text import (
@@ -1381,20 +1381,171 @@ def test_sample_shortfall_audit_flags_tight_prefilter(spark):
         assert r["shortfall"] == 0 and r["n_eligible"] == r["n_rows"]
 
 
-def _neardup_fixture(spark, sf_dir="/root/testdata/sf0.001"):
-    """The dedup_ingest_neardup query's (hist, batch, digest-state) shapes."""
-    from mongo_polars_reconciliation_spark.extensions.dedup import band_state
-    from mongo_polars_reconciliation_spark.harness.fixtures import (
-        neardup_ingest_split,
+_INGEST_FAMILIES = ["neardup", "semantic", "payload"]
+
+
+def _ingest_case(spark, name, sf_dir="/root/testdata/sf0.001"):
+    """(family, hist, batch) of one driver ingest fixture — the
+    dedup_ingest_neardup, sim_ingest_semantic and mm_payload_ingest
+    shapes: exact redeliveries and near-dup variants of history docs
+    under ids >= 100000, after the original-id slice."""
+    from mongo_polars_reconciliation_spark.extensions.similarity import (
+        kmeans_fit,
+    )
+    from mongo_polars_reconciliation_spark.harness import fixtures
+    from mongo_polars_reconciliation_spark.streaming.corpus import (
+        NeardupFamily,
+        PayloadFamily,
+        SemanticFamily,
     )
 
-    hist, batch = neardup_ingest_split(spark, sf_dir)
-    digests = hist.select(
-        F.md5(F.coalesce(F.col("text"), F.lit("")).cast("binary")).alias(
-            "text_hash"
+    hist, batch = getattr(fixtures, f"{name}_ingest_split")(spark, sf_dir)
+    family = {
+        "neardup": NeardupFamily,
+        "semantic": lambda: SemanticFamily(kmeans_fit(hist, k=32, n_iter=1)),
+        "payload": lambda: PayloadFamily(block_bytes=64),
+    }[name]()
+    return family, hist, batch
+
+
+def _admitted_ids(family, admitted):
+    return sorted(r[family.id_col] for r in admitted.collect())
+
+
+@pytest.mark.parametrize("name", _INGEST_FAMILIES)
+def test_ingest_batch_split_equals_one_batch(spark, name):
+    """Sequential-arrival admission is indifferent to batch boundaries
+    that respect id order: ingesting B1 (low ids) then B2 (high ids,
+    against the state B1's admissions were folded into) admits exactly
+    what ingesting B1 ∪ B2 at once admits."""
+    family, hist, batch = _ingest_case(spark, name)
+    state = family.seed(hist)
+    one = _admitted_ids(family, family.admit(batch, state, mis_max_iter=8))
+
+    median = 100000  # original-id slice first, synthetic redeliveries after
+    late = F.col(family.id_col) >= median
+    b1 = batch.where(~late).localCheckpoint(eager=True)
+    b2 = batch.where(late).localCheckpoint(eager=True)
+    a1 = family.admit(b1, state, mis_max_iter=8).localCheckpoint(eager=True)
+    state2 = family.fold(state, a1, family.admitted_rows(b1, a1))
+    a2 = family.admit(b2, state2, mis_max_iter=8)
+    two = sorted(_admitted_ids(family, a1) + _admitted_ids(family, a2))
+    assert two == one and len(one) > 0
+
+
+@pytest.mark.parametrize("name", _INGEST_FAMILIES)
+def test_ingest_redelivery_admits_nothing(spark, name):
+    """After folding an admitted batch into every state face,
+    re-delivering the SAME batch admits nothing: each previously rejected
+    row is (by the greedy rule) an exact or near dup of something now in
+    state, and each admitted one is its own exact copy (a digest-ledger
+    hit, or a cos-1.0 self-match for the semantic family)."""
+    family, hist, batch = _ingest_case(spark, name)
+    state = family.seed(hist)
+    a1 = family.admit(batch, state, mis_max_iter=8).localCheckpoint(eager=True)
+    assert a1.count() > 0
+    state2 = family.fold(state, a1, family.admitted_rows(batch, a1))
+    assert family.admit(batch, state2, mis_max_iter=8).count() == 0
+
+
+@pytest.mark.parametrize("name", _INGEST_FAMILIES)
+def test_ingest_tolerates_duplicate_state_rows(spark, name):
+    """Every state face duplicated (a crash-replayed append) changes
+    nothing. The store and block faces are deduped after their candidate
+    semi-join: a duplicated history doc would double its Jaccard sizes,
+    and a duplicated block row would double its pair's n_shared and
+    inflate the similarity past the threshold."""
+    family, hist, batch = _ingest_case(spark, name)
+    state = family.seed(hist)
+    clean = _admitted_ids(family, family.admit(batch, state, mis_max_iter=8))
+    doubled = {k: v.unionAll(v) for k, v in state.items()}
+    dup = _admitted_ids(family, family.admit(batch, doubled, mis_max_iter=8))
+    assert clean == dup and len(clean) > 0
+
+
+@pytest.mark.parametrize("name", _INGEST_FAMILIES)
+def test_ingest_crash_window_replay_on_fixture(spark, name):
+    """The crash window BETWEEN the pre-ledger appends and the ledger
+    append: fold the admissions into every face but the ledger, replay
+    the batch, and require the original admitted set back. Without the
+    self-pair filter each admitted text or payload meets its own ghost
+    rows (Jaccard or shared fraction 1.0) and is silently dropped, so
+    the ledger is never backfilled; the ghost vectors are unreachable
+    without their assign/ rows."""
+    family, hist, batch = _ingest_case(spark, name)
+    state = family.seed(hist)
+    a1 = family.admit(batch, state, mis_max_iter=8).localCheckpoint(eager=True)
+    original = _admitted_ids(family, a1)
+    assert len(original) > 0
+    ledger = family.faces[-1].name
+    crashed = {
+        **family.fold(state, a1, family.admitted_rows(batch, a1)),
+        ledger: state[ledger],
+    }
+    replay = family.admit(batch, crashed, mis_max_iter=8)
+    assert _admitted_ids(family, replay) == original
+
+
+def _cold_start_case(spark, name):
+    """(family, batch, admitted ids) of a first wave against EMPTY state."""
+    from mongo_polars_reconciliation_spark.extensions.multimodal import (
+        attach_payload,
+    )
+    from mongo_polars_reconciliation_spark.extensions.similarity import (
+        kmeans_fit,
+    )
+    from mongo_polars_reconciliation_spark.streaming.corpus import (
+        NeardupFamily,
+        PayloadFamily,
+        SemanticFamily,
+    )
+
+    if name == "neardup":
+        # docs shorter than the shingle width carry no band keys: distinct
+        # short texts all admit (even near-identical ones), exact copies
+        # collapse (4 is a copy of 2)
+        batch = spark.createDataFrame(
+            [(1, "ab"), (2, "ab cd"), (3, "ab ce"), (4, "ab cd"), (5, "")],
+            "doc_id long, text string",
         )
-    ).distinct()
-    return hist, batch, digests, band_state(hist)
+        return NeardupFamily(), batch, [1, 2, 3, 5]
+    if name == "payload":
+        # zero-length payloads emit no blocks: two empty payloads are
+        # exact copies (one admits), and an empty payload is never a
+        # block near-dup of anything
+        batch = attach_payload(
+            spark.createDataFrame(
+                [(1, "a" * 200), (2, ""), (3, ""), (4, "a" * 200),
+                 (5, "b" * 200)],
+                "doc_id long, text string",
+            )
+        )
+        return PayloadFamily(block_bytes=64), batch, [1, 2, 5]
+    # natural vectors are far apart, so every original admits and every
+    # exact copy (+1000 ids) rejects against its lower-id original
+    emb = spark.read.parquet(
+        "/root/testdata/sf0.001/embeddings.parquet"
+    ).select("vec_id", "embedding")
+    base = emb.where(F.col("vec_id") < 40)
+    copies = base.where(F.col("vec_id") % 4 == 1).select(
+        (F.col("vec_id") + 1000).alias("vec_id"), "embedding"
+    )
+    family = SemanticFamily(kmeans_fit(base, k=4, n_iter=1))
+    want = sorted(r["vec_id"] for r in base.collect())
+    return family, base.unionByName(copies), want
+
+
+@pytest.mark.parametrize("name", _INGEST_FAMILIES)
+def test_ingest_cold_start(spark, name):
+    """A first wave against EMPTY state (the seed of an empty history)
+    reduces to within-batch greedy admission, and its redelivery then
+    admits nothing."""
+    family, batch, want = _cold_start_case(spark, name)
+    state = family.seed(batch.limit(0))
+    a1 = family.admit(batch, state, mis_max_iter=8).localCheckpoint(eager=True)
+    assert _admitted_ids(family, a1) == want
+    state2 = family.fold(state, a1, family.admitted_rows(batch, a1))
+    assert family.admit(batch, state2, mis_max_iter=8).count() == 0
 
 
 def test_neardup_ingest_greedy_not_pair_drop(spark):
@@ -1403,8 +1554,11 @@ def test_neardup_ingest_greedy_not_pair_drop(spark):
     never-admitted b. Per-pair keep-lowest (drop every hi of a verified
     pair) would wrongly drop c; this pins the greedy rule."""
     from mongo_polars_reconciliation_spark.extensions.dedup import (
-        band_state,
-        ingest_novel_neardup,
+        jaccard_verify,
+        shingle_sets,
+    )
+    from mongo_polars_reconciliation_spark.streaming.corpus import (
+        NeardupFamily,
     )
 
     toks = [f"w{i:02d}" for i in range(1, 17)]
@@ -1414,26 +1568,14 @@ def test_neardup_ingest_greedy_not_pair_drop(spark):
     df = spark.createDataFrame(
         [(1, a), (2, b), (3, c)], "doc_id long, text string"
     )
-    empty_dg = spark.createDataFrame([], "text_hash string")
-    empty_bands = spark.createDataFrame([], "bband string, doc_id long")
-    empty_docs = spark.createDataFrame([], "doc_id long, text string")
-    got = sorted(
-        r["doc_id"]
-        for r in ingest_novel_neardup(
-            df, empty_dg, empty_bands, empty_docs,
-            # 12 bands of 1 hash: a J=2/3 pair misses all 12 bands with
-            # probability ~(1/3)^12 — and the fixture is deterministic,
-            # so the collisions below are a checked fact, not luck
-            num_hashes=12, bands=12,
-        ).collect()
-    )
+    # 12 bands of 1 hash: a J=2/3 pair misses all 12 bands with
+    # probability ~(1/3)^12 — and the fixture is deterministic, so the
+    # collisions below are a checked fact, not luck
+    family = NeardupFamily(num_hashes=12, bands=12)
+    got = _admitted_ids(family, family.admit(df, family.seed(df.limit(0))))
     assert got == [1, 3], got
     # sanity: the chain structure really held (a~b and b~c verified,
     # a!~c unverified) — otherwise the admitted set above means nothing
-    from mongo_polars_reconciliation_spark.extensions.dedup import (
-        jaccard_verify, shingle_sets,
-    )
-
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3)], "id_a long, id_b long"
     )
@@ -1444,62 +1586,8 @@ def test_neardup_ingest_greedy_not_pair_drop(spark):
     assert verified == [(1, 2), (2, 3)], verified
 
 
-def test_neardup_ingest_batch_split_equals_one_batch(spark):
-    """Sequential-arrival admission is indifferent to batch boundaries
-    that respect id order: ingesting B1 (low ids) then B2 (high ids,
-    against the updated state) admits exactly the docs that ingesting
-    B1 ∪ B2 at once admits."""
-    from mongo_polars_reconciliation_spark.extensions.dedup import (
-        band_state,
-        ingest_novel_neardup,
-    )
-
-    hist, batch, digests, bands = _neardup_fixture(spark)
-    one = ingest_novel_neardup(batch, digests, bands, hist, mis_max_iter=8)
-    one_ids = sorted(r["doc_id"] for r in one.collect())
-
-    median = 100000  # original-id slice first, synthetic redeliveries after
-    b1 = batch.where(F.col("doc_id") < median).localCheckpoint(eager=True)
-    b2 = batch.where(F.col("doc_id") >= median).localCheckpoint(eager=True)
-    a1 = ingest_novel_neardup(b1, digests, bands, hist, mis_max_iter=8)
-    a1 = a1.localCheckpoint(eager=True)
-    admitted_docs1 = b1.join(a1.select("doc_id"), "doc_id")
-    digests2 = digests.unionByName(a1.select("text_hash")).distinct()
-    bands2 = bands.unionByName(band_state(admitted_docs1))
-    docs2 = hist.unionByName(admitted_docs1)
-    a2 = ingest_novel_neardup(b2, digests2, bands2, docs2, mis_max_iter=8)
-    two_ids = sorted(
-        [r["doc_id"] for r in a1.collect()]
-        + [r["doc_id"] for r in a2.collect()]
-    )
-    assert two_ids == one_ids
-
-
-def test_neardup_ingest_redelivery_admits_nothing(spark):
-    """Extending the r8 exact-ingest pin: after admitting a batch and
-    folding the admitted docs into all three state faces, re-delivering
-    the SAME batch admits zero documents — every previously rejected doc
-    is (by the greedy rule) an exact or near dup of something now in
-    state."""
-    from mongo_polars_reconciliation_spark.extensions.dedup import (
-        band_state,
-        ingest_novel_neardup,
-    )
-
-    hist, batch, digests, bands = _neardup_fixture(spark)
-    a1 = ingest_novel_neardup(
-        batch, digests, bands, hist, mis_max_iter=8
-    ).localCheckpoint(eager=True)
-    admitted_docs = batch.join(a1.select("doc_id"), "doc_id")
-    digests2 = digests.unionByName(a1.select("text_hash")).distinct()
-    bands2 = bands.unionByName(band_state(admitted_docs))
-    docs2 = hist.unionByName(admitted_docs)
-    again = ingest_novel_neardup(batch, digests2, bands2, docs2, mis_max_iter=8)
-    assert again.count() == 0
-
-
 def test_sampled_recall_rows_bitmatch_full_probe(spark):
-    """r9: the sampled recall probe's per-vector rows equal the full
+    """The sampled recall probe's per-vector rows equal the full
     O(n²) probe's rows for the same ids, bit-for-bit — the one-sided
     exact graph runs the same IEEE fold on the same operands, so
     sampling changes COST, not answers."""
@@ -1532,7 +1620,7 @@ def test_sampled_recall_rows_bitmatch_full_probe(spark):
 
 
 def test_bpe_encode_from_loaded_merges_bitmatches_fit_encode(spark):
-    """r9 artifact round-trip: encoding from a parquet-persisted merge
+    """Artifact round-trip: encoding from a parquet-persisted merge
     table equals fit-then-encode in one session, row for row — the BPE
     replay property (rank-ordered merges over raw characters reproduce
     the fit's final segmentation) survives the write/read."""
@@ -1562,7 +1650,7 @@ def test_bpe_encode_from_loaded_merges_bitmatches_fit_encode(spark):
 
 
 def test_curation_v2_c4_gates(spark):
-    """r9: the optional C4 gates drop exactly the docs whose fused c4
+    """The optional C4 gates drop exactly the docs whose fused c4
     signals fall below the floors — checked on a corpus where every other
     v2 stage is a no-op (all texts distinct, non-repetitive, benchmark
     unrelated), against the independently computed signal rows."""
@@ -1622,7 +1710,7 @@ def test_curation_v2_c4_gates(spark):
 
 
 def test_gopher_signals_match_python_model(spark):
-    """r10: the fused gopher signals equal a doc-at-a-time Python replay
+    """The fused gopher signals equal a doc-at-a-time Python replay
     (same counts, same floor4'd divisions) on handcrafted texts covering
     bullet/ellipsis lines, '#' and '...' symbols, numeric words, and the
     required-stop-word list."""
@@ -1679,7 +1767,7 @@ def test_gopher_signals_match_python_model(spark):
 
 
 def test_curation_v2_gopher_gates(spark):
-    """r10: the optional Gopher gates drop exactly the docs whose fused
+    """The optional Gopher gates drop exactly the docs whose fused
     gopher signals violate the cap/floor — same harness as the C4 gate
     test (every other v2 stage a no-op), against independently computed
     signal rows."""
@@ -1739,11 +1827,11 @@ def test_curation_v2_gopher_gates(spark):
 
 
 def test_line_dedup_edge_corpora(spark):
-    """r11 edge pins: both line-dedup faces are graceful on an EMPTY
+    """Edge pins: both line-dedup faces are graceful on an EMPTY
     corpus (no crash, empty output) and on a corpus that is one empty
     document (one empty line — kept, text_kept '').
 
-    r12 (the r11 verdict's defect): NULL-text docs must SURFACE, scored
+    NULL-text docs must SURFACE, scored
     as empty text per the repo-wide null-text rule — the old
     posexplode(split(NULL)) path silently dropped them from the output
     entirely, violating the operator's own n_kept contract. A NULL doc
@@ -1783,7 +1871,7 @@ def test_line_dedup_edge_corpora(spark):
 
 
 def test_mix_temperature_quarter_alpha_matches_python(spark):
-    """r11: the α=1/4 branch (single nested-isqrt chain, not the 3/4
+    """The α=1/4 branch (single nested-isqrt chain, not the 3/4
     product) equals the Python integer replay — the one dyadic path the
     driver queries don't exercise directly."""
     import math
@@ -1810,8 +1898,8 @@ def test_mix_temperature_quarter_alpha_matches_python(spark):
 
 
 def test_curation_fused_gates_match_sequential_replay(spark):
-    """r11 (advice): with BOTH gate families engaged, the single fused
-    projection + union-of-flags left_anti equals the r10 sequential
+    """With BOTH gate families engaged, the single fused
+    projection + union-of-flags left_anti equals the sequential
     per-family gating replayed in Python (flag C4 on the frame, shrink,
     flag Gopher on the shrunken frame) — the signals are row-local, so
     the two compositions must coincide doc-for-doc."""
@@ -1869,12 +1957,12 @@ def test_curation_fused_gates_match_sequential_replay(spark):
 
 
 def test_curation_v4_line_stage(spark):
-    """r11: curate_corpus_v2(line_dedup=True) trims corpus-repeated
+    """curate_corpus_v2(line_dedup=True) trims corpus-repeated
     lines BEFORE any downstream stage — the shared footer survives only
     in its first-occurrence doc, whole-footer docs empty out and are
     dropped, and the surviving stats equal the pipeline replayed on the
     pre-trimmed corpus (the stage composes, it doesn't special-case).
-    line_dedup=False stays byte-identical to the r10 behavior."""
+    line_dedup=False stays byte-identical to the pipeline without it."""
     from mongo_polars_reconciliation_spark.extensions.curation import (
         curate_corpus_v2,
     )
@@ -1934,7 +2022,7 @@ def test_curation_v4_line_stage(spark):
 
 
 def test_curation_v4_null_text_docs_compose(spark):
-    """r12: NULL-text docs through the full v4 composition. With the
+    """NULL-text docs through the full v4 composition. With the
     NULL-text line-dedup fix a NULL doc now REACHES the downstream
     stages (as empty text) instead of vanishing at the line stage —
     this pins that (a) the flagship neither crashes nor double-counts
@@ -1995,12 +2083,12 @@ _pii_frag = st.sampled_from(
     ["plain words here", "a.b@x.org", "john.doe@example.com", "555-123-4567",
      "192.168.1.77", "10.0.0.5", "not-a-phone 55-123-4567", "v1.2.3.4x",
      "semi@invalid@double", "trailing dot 1.2.3.", "", "x@y.zz",
-     # r12 card fragments: Luhn-valid plain + separated, Luhn-INVALID
+     # card fragments: Luhn-valid plain + separated, Luhn-INVALID
      # (must survive), 15/17-digit near-misses, repeated valid card
      "4532015112830366", "4532-0151-1283-0366", "4532 0151 1283 0366",
      "1234-5678-9012-3456", "123456789012345", "12345678901234567",
      "4532015112830366 4532015112830366",
-     # r13 (advice): cross-class boundary — a phone followed by a digit
+     # cross-class boundary — a phone followed by a digit
      # run lets the CARD candidate scan match across the phone's tail:
      # '4567 8901 2345 6783' IS Luhn-valid and redacts, mangling the
      # phone (the documented intended over-redaction direction), while
@@ -2009,7 +2097,7 @@ _pii_frag = st.sampled_from(
      "call 555-123-4567 8901 2345 6783",
      "call 555-123-4567 8901 2345 6789"]
 )
-# r12: NULL texts — the null-text rule (counts 0, scrubbed text NULL)
+# NULL texts — the null-text rule (counts 0, scrubbed text NULL)
 _pii_text = st.one_of(
     st.none(), st.lists(_pii_frag, min_size=1, max_size=6).map(" ".join)
 )
@@ -2057,7 +2145,7 @@ def _pii_python_replay(t):
 @settings(max_examples=10, deadline=None)
 @given(texts=st.lists(_pii_text, min_size=1, max_size=6))
 def test_pii_scrub_random_texts_match_python_re(spark, texts):
-    """r11 randomized pin (r12: + the Luhn card stage and NULL texts):
+    """Randomized pin, with the Luhn card stage and NULL texts:
     pii_scrub equals a Python `re` replay of the staged
     count-then-replace spec on corpora drawn from adversarial fragments
     — doubled '@', near-miss phones, version strings that look like IPs,
@@ -2081,7 +2169,7 @@ def test_pii_scrub_random_texts_match_python_re(spark, texts):
 
 
 def test_pii_card_stage_duckdb_matches_python_re():
-    """r12: the THIRD side of the card stage's engine triangle. The
+    """The THIRD side of the card stage's engine triangle. The
     fixture-driven parity sweep pins Spark≡DuckDB on the three injected
     card shapes only, and the hypothesis replay pins Spark≡Python on
     adversarial strings — this closes DuckDB≡Python on those same
@@ -2153,7 +2241,7 @@ def test_pii_card_stage_duckdb_matches_python_re():
 
 
 def test_pii_scrub_luhn_edge_pins(spark):
-    """r12 handcrafted pins for the card stage: a Luhn-valid plain card,
+    """Handcrafted pins for the card stage: a Luhn-valid plain card,
     the same card hyphen- and space-separated, a Luhn-INVALID run that
     must survive to the output INTACT (and not half-match the later
     phone/IP stages), a 17-digit run no \\b can split, and the NULL-text
@@ -2197,7 +2285,7 @@ _gopher_text = st.lists(_gopher_line, min_size=1, max_size=4).map("\n".join)
 @settings(max_examples=8, deadline=None)
 @given(texts=st.lists(_gopher_text, min_size=1, max_size=6))
 def test_gopher_signals_random_texts_match_model(spark, texts):
-    """r10 randomized pin: the fused gopher signals equal the Python
+    """Randomized pin: the fused gopher signals equal the Python
     replay on hypothesis-generated texts mixing bullets, '...'-runs,
     '#'-words, numerics, empty tokens and multi-line structure — the
     edge classes the handcrafted pin can't enumerate."""
@@ -2255,7 +2343,7 @@ _lmb_text = st.lists(
     )
 )
 def test_lm_buckets_random_corpora_match_model(spark, docs):
-    """r10 randomized pin: per-language tercile bucketing equals the
+    """Randomized pin: per-language tercile bucketing equals the
     Python nearest-rank replay on hypothesis corpora dense with tied
     scores, single-doc languages and unscored (<2-token) docs."""
     from mongo_polars_reconciliation_spark.extensions.text import (
@@ -2299,7 +2387,7 @@ _ivfpq_vec = st.lists(
 @settings(max_examples=5, deadline=None)
 @given(vecs=st.lists(_ivfpq_vec, min_size=6, max_size=14, unique_by=tuple))
 def test_ivfpq_knn_degenerate_equals_exact_on_random_vectors(spark, vecs):
-    """r10 randomized pin of the degenerate-parameter law on tiny random
+    """Randomized pin of the degenerate-parameter law on tiny random
     corpora (dim 8, m=2): probe-all + unbounded rerank must reproduce the
     exact graph even with near-ties and duplicate-direction vectors —
     the regimes where a tie-break slip would first show."""
@@ -2342,7 +2430,7 @@ def test_ivfpq_knn_degenerate_equals_exact_on_random_vectors(spark, vecs):
 
 
 def test_ivfpq_knn_degenerates_to_exact_graph(spark):
-    """r10: with nprobe = nlist (every cell probed) and an unbounded
+    """With nprobe = nlist (every cell probed) and an unbounded
     rerank, the IVF-PQ k-NN graph's candidate set is ALL non-self pairs
     and the exact re-rank orders them — so the output must equal
     knn_join_exact's ground-truth graph row-for-row (same neighbors,
@@ -2381,11 +2469,11 @@ def test_ivfpq_knn_degenerates_to_exact_graph(spark):
 
 
 def test_stream_datacard_equals_batch_card(spark):
-    """r10: the drained streaming datacard equals the batch
+    """The drained streaming datacard equals the batch
     corpus_datacard row-for-row — counts and DECIMAL sums commute with
     micro-batching, and the card derivation runs on the drained state.
-    r14: this is now the CARRYING pin for the RETIRED registry face
-    stream_datacard (VERDICT r13 #5) — the card math stays oracle-checked
+    This is the CARRYING pin for the RETIRED registry face
+    stream_datacard — the card math stays oracle-checked
     through text_datacard/text_datacard_merge; stream ≡ batch lives here."""
     from mongo_polars_reconciliation_spark.extensions.text import (
         corpus_datacard,
@@ -2410,8 +2498,8 @@ def test_stream_datacard_equals_batch_card(spark):
 _ld_line = st.sampled_from(
     ["footer", "header", "alpha beta", "x", "", "shared line", "unique-ish"]
 )
-# r12: NULL texts in the generator — the r11 verdict's defect (NULL-text
-# docs silently vanishing) lived exactly in the input class these pins
+# NULL texts in the generator — a past defect (NULL-text docs
+# silently vanishing) lived exactly in the input class these pins
 # never generated. NULL scores as empty text (the repo-wide rule).
 _ld_text = st.one_of(
     st.none(), st.lists(_ld_line, min_size=1, max_size=5).map("\n".join)
@@ -2421,10 +2509,10 @@ _ld_text = st.one_of(
 @settings(max_examples=8, deadline=None)
 @given(texts=st.lists(_ld_text, min_size=1, max_size=7))
 def test_line_dedup_random_corpora_match_model(spark, texts):
-    """r10 randomized pin: corpus-wide line dedup equals the Python
+    """Randomized pin: corpus-wide line dedup equals the Python
     first-occurrence replay on hypothesis corpora drawn from a tiny line
     alphabet — maximal repetition pressure, empty lines, whole-duplicate
-    docs, NULL-text docs (r12), and many docs that empty out entirely."""
+    docs, NULL-text docs, and many docs that empty out entirely."""
     import hashlib
 
     from mongo_polars_reconciliation_spark.extensions.text import (
@@ -2450,7 +2538,7 @@ def test_line_dedup_random_corpora_match_model(spark, texts):
 
 
 def test_line_dedup_matches_python_model(spark):
-    """r10: corpus-wide line dedup equals a doc-at-a-time Python replay
+    """Corpus-wide line dedup equals a doc-at-a-time Python replay
     (first global occurrence by (id, line_no), per-doc reassembly) on a
     corpus with cross-doc repeats, WITHIN-doc repeats, position
     variation and a doc that empties out entirely — and the global
@@ -2492,7 +2580,7 @@ def test_line_dedup_matches_python_model(spark):
 
 
 def test_line_dedup_trim_emits_cleaned_text(spark):
-    """r11 (VERDICT r10 #2): the trimming face returns the reassembled
+    """The trimming face returns the reassembled
     surviving TEXT itself — equal line-for-line to the Python
     first-occurrence replay — with NULL text for emptied-out docs, and
     its digest agrees exactly with line_dedup_corpus's audit face on the
@@ -2542,7 +2630,7 @@ def test_line_dedup_trim_emits_cleaned_text(spark):
 
 
 def test_new_operators_handle_empty_and_null_strata(spark):
-    """r10 edge pins: the round's derived-weight/reporting operators are
+    """Edge pins: the round's derived-weight/reporting operators are
     graceful on EMPTY corpora (no crash, empty output) and treat a NULL
     stratum as its own stratum instead of silently dropping those rows
     (the null-safe-join contract — silent corpus loss is the worst
@@ -2580,7 +2668,7 @@ def test_new_operators_handle_empty_and_null_strata(spark):
 
 
 def test_isqrt_dec_null_propagates_to_loud_guard(spark):
-    """r11 (review finding): a NULL isqrt input — a decimal overflow
+    """A NULL isqrt input — a decimal overflow
     under NON-ANSI mode — must propagate as NULL (greatest/least skip
     null operands, so without the explicit branch it surfaced as the
     smax clamp: a silently wrong huge weight), reaching mix_temperature's
@@ -2602,9 +2690,9 @@ def test_isqrt_dec_null_propagates_to_loud_guard(spark):
 
 
 def test_isqrt_dec_and_div_exact_match_python(spark):
-    """r11: the DECIMAL(38,0) exact-arithmetic kernels match Python int
-    math across the FULL range — including past 2^63 where the r10
-    BIGINT pipeline silently wrapped (the advice finding) and
+    """The DECIMAL(38,0) exact-arithmetic kernels match Python int
+    math across the FULL range — including past 2^63 where a
+    BIGINT pipeline silently wraps and
     adversarial near-squares at 10^37..10^38 where the float seed is up
     to ~1.2e3 off and the Newton chain + ±2 ladder must recover
     exactly. Values ride as strings (a long would overflow)."""
@@ -2663,7 +2751,7 @@ def test_isqrt_dec_and_div_exact_match_python(spark):
 
 
 def test_isqrt_unscale_matches_python(spark):
-    """r13 (VERDICT r12 #3, the α=3/4 fusion): recovering w_{1/2} from
+    """Recovering w_{1/2} from
     the q4 chain's first root — c = r4 DIV d, ±1 ladder against q2 —
     is bit-identical to math.isqrt(q2) across the contract domain,
     including x just above/below perfect squares (where c = w+1 and the
@@ -2723,7 +2811,7 @@ def test_isqrt_unscale_matches_python(spark):
 
 
 def test_mix_temperature_alpha_weights_and_rates(spark):
-    """r11: α=3/4 weights equal the Python integer replay of the
+    """The α=3/4 weights equal the Python integer replay of the
     binary-expansion spec — w = (isqrt(n_max·denom² DIV n) ·
     isqrt(isqrt(n_max·denom⁴ DIV n))) DIV denom — the largest stratum
     still runs exactly 1.0 epochs, each stratum's realized copy count
@@ -2783,7 +2871,7 @@ def test_mix_temperature_alpha_weights_and_rates(spark):
 
 
 def test_mix_temperature_weights_and_rates(spark):
-    """r10: the derived weights realize the α=1/2 law — the largest
+    """The derived weights realize the α=1/2 law — the largest
     stratum's weight is EXACTLY 1.0 epochs (one copy per doc, no hash
     dependence), every stratum's weight equals the integer-exact
     sqrt((n_max·denom²) DIV n), and each stratum's realized copy count
@@ -2830,7 +2918,7 @@ def test_mix_temperature_weights_and_rates(spark):
 
 @pytest.mark.parametrize("qname", ["text_line_dedup", "text_line_dedup_trim"])
 def test_line_dedup_plan_has_no_window(spark, qname):
-    """r10 plan pin of the skew-safe claim (extended to the r11 trim
+    """Plan pin of the skew-safe claim (also on the trim
     face): first occurrence is an aggregate + hash join, reassembly a
     per-doc collect — the physical plan must contain NO window operator
     at all (a row_number over partitionBy(line) would stall on
@@ -2849,7 +2937,7 @@ def test_line_dedup_plan_has_no_window(spark, qname):
 
 
 def test_lm_buckets_plan_never_sorts_raw_rows(spark):
-    """r10 plan pin: the tercile cutoffs come from the collapsed
+    """Plan pin: the tercile cutoffs come from the collapsed
     (lang, score) histogram and bucketing is a broadcast join — the
     physical plan must contain NO sort-merge join (the raw corpus is
     never sorted into skewed language partitions for a rank; the only
@@ -2867,7 +2955,7 @@ def test_lm_buckets_plan_never_sorts_raw_rows(spark):
 
 
 def test_packed_shards_rewrite_is_idempotent(spark, tmp_path):
-    """r10: re-running the shard writer over the same corpus and output
+    """Re-running the shard writer over the same corpus and output
     dir (mode overwrite) yields byte-identical content rows and keeps
     the one-file-per-shard contract — the rerun-a-failed-job story."""
     import glob as _glob
@@ -2889,7 +2977,7 @@ def test_packed_shards_rewrite_is_idempotent(spark, tmp_path):
 
 
 def test_packed_shards_one_file_per_shard_and_balanced(spark, tmp_path):
-    """r10: the shard writer's loader contract — exactly one parquet data
+    """The shard writer's loader contract — exactly one parquet data
     file per shard directory, every batch wholly inside one shard, and
     round-robin balance (shard batch counts differ by at most 1)."""
     import glob as _glob
@@ -2920,7 +3008,7 @@ def test_packed_shards_one_file_per_shard_and_balanced(spark, tmp_path):
 
 
 def test_packed_shards_validation_catches_split_files(spark, tmp_path):
-    """r11 (advice): the one-file-per-shard contract silently breaks
+    """The one-file-per-shard contract silently breaks
     when spark.sql.files.maxRecordsPerFile splits a task's output — the
     writer must now CATCH that at write time (loud RuntimeError naming
     the shards) instead of returning with a violated loader contract,
@@ -2944,7 +3032,7 @@ def test_packed_shards_validation_catches_split_files(spark, tmp_path):
         spark.conf.set("spark.sql.files.maxRecordsPerFile", prev)
     # with the poison config removed, the default validating write passes
     write_packed_shards(docs, out, n_shards=4, token_budget=256)
-    # r11 (review finding): an EMPTY corpus writes only _SUCCESS — the
+    # an EMPTY corpus writes only _SUCCESS — the
     # validation read can't infer a schema there and must no-op, not
     # crash (the pre-validation write path always accepted empty input)
     empty = spark.createDataFrame([], "doc_id long, text string")
@@ -2952,7 +3040,7 @@ def test_packed_shards_validation_catches_split_files(spark, tmp_path):
 
 
 def test_datacard_state_fold_equals_full_rescan(spark):
-    """r10: the datacard state is an exact sufficient statistic — folding
+    """The datacard state is an exact sufficient statistic — folding
     per-split states (any split count) and deriving the card equals
     corpus_datacard's full rescan on every metric, column-wise, and the
     merge-check query's merged_*/global_* pairs are equal row-wise."""
@@ -2989,7 +3077,7 @@ def test_datacard_state_fold_equals_full_rescan(spark):
 
 
 def test_lm_buckets_match_python_model(spark):
-    """r10: the per-language tercile bucketing equals a Python replay of
+    """The per-language tercile bucketing equals a Python replay of
     the nearest-rank cutoff rule on the engine's own scores — including
     tied scores (which must share a bucket) and a language whose docs
     all tie (everything lands in head: cut1 == cut2 == the one score)."""
@@ -3041,36 +3129,6 @@ def test_lm_buckets_match_python_model(spark):
     # ties share a bucket; the all-tied language is entirely head
     assert got[1][2] == got[4][2]
     assert {got[d][2] for d in (7, 8, 9)} == {"head"}
-
-
-def test_neardup_ingest_short_docs_exact_only(spark):
-    """Docs shorter than the shingle width carry no band keys, so they are
-    exact-dedup-only by construction: distinct short texts all admit
-    (even near-identical ones), exact copies collapse, and redelivery
-    still admits nothing (digest state suffices)."""
-    from mongo_polars_reconciliation_spark.extensions.dedup import (
-        band_state,
-        ingest_novel_neardup,
-    )
-
-    batch = spark.createDataFrame(
-        [(1, "ab"), (2, "ab cd"), (3, "ab ce"), (4, "ab cd"), (5, "")],
-        "doc_id long, text string",
-    )
-    empty_dg = spark.createDataFrame([], "text_hash string")
-    empty_bands = spark.createDataFrame([], "bband string, doc_id long")
-    empty_docs = spark.createDataFrame([], "doc_id long, text string")
-    a1 = ingest_novel_neardup(batch, empty_dg, empty_bands, empty_docs)
-    got = sorted(r["doc_id"] for r in a1.collect())
-    assert got == [1, 2, 3, 5]  # 4 is an exact copy of 2; all else distinct
-    admitted_docs = batch.join(a1.select("doc_id"), "doc_id")
-    again = ingest_novel_neardup(
-        batch,
-        a1.select("text_hash"),
-        band_state(admitted_docs),
-        admitted_docs,
-    )
-    assert again.count() == 0
 
 
 def test_payload_block_near_dup_matches_python_model(spark):
@@ -3168,7 +3226,7 @@ def test_greedy_admit_matches_python_sequential_model(spark, edges):
 
 
 def test_centroid_artifact_roundtrip_bitmatches_fit_use(spark):
-    """r10 artifact round-trip (the BPE pin's vector-side mirror): a
+    """Artifact round-trip (the BPE pin's vector-side mirror): a
     centroid table written to parquet and loaded back is the EXACT float
     list the fit returned (parquet doubles are bit-exact), and the k-NN
     graph built from the loaded centroids equals fit-then-use row for
@@ -3231,280 +3289,23 @@ def test_load_centroids_rejects_corrupt_artifact(spark):
         load_centroids(spark, path + "_gap")
 
 
-def _semantic_fixture(spark, sf_dir="/root/testdata/sf0.001"):
-    """History + arriving batch + persisted centroid/assignment state for
-    the embedding-space ingest properties — the sim_ingest_semantic
-    fixture shapes (exact re-uploads + zeroed-dim near-dup variants)."""
-    from mongo_polars_reconciliation_spark.extensions.similarity import (
-        assignment_state,
-        kmeans_fit,
-    )
-    from mongo_polars_reconciliation_spark.harness.fixtures import (
-        semantic_ingest_split,
-    )
-
-    hist, batch = semantic_ingest_split(spark, sf_dir)
-    cents = kmeans_fit(hist, k=32, n_iter=1)
-    return hist, batch, cents, assignment_state(hist, cents, nprobe=2)
-
-
-def test_semantic_ingest_batch_split_equals_one_batch(spark):
-    """r10: the embedding-space ingest inherits the greedy family's
-    batch-split property — B1 (low ids) then B2 against the updated
-    state admits exactly what one concatenated batch admits."""
-    from mongo_polars_reconciliation_spark.extensions.similarity import (
-        assignment_state,
-        ingest_novel_semantic,
-    )
-
-    hist, batch, cents, assign = _semantic_fixture(spark)
-    one = ingest_novel_semantic(
-        batch, assign, hist, cents, mis_max_iter=8
-    )
-    one_ids = sorted(r["vec_id"] for r in one.collect())
-
-    median = 100000
-    b1 = batch.where(F.col("vec_id") < median).localCheckpoint(eager=True)
-    b2 = batch.where(F.col("vec_id") >= median).localCheckpoint(eager=True)
-    a1 = ingest_novel_semantic(
-        b1, assign, hist, cents, mis_max_iter=8
-    ).localCheckpoint(eager=True)
-    adm1 = b1.join(a1, "vec_id")
-    assign2 = assign.unionByName(assignment_state(adm1, cents, nprobe=2))
-    vecs2 = hist.unionByName(adm1)
-    a2 = ingest_novel_semantic(b2, assign2, vecs2, cents, mis_max_iter=8)
-    two_ids = sorted(
-        [r["vec_id"] for r in a1.collect()]
-        + [r["vec_id"] for r in a2.collect()]
-    )
-    assert two_ids == one_ids and len(one_ids) > 0
-
-
-def test_semantic_ingest_redelivery_admits_nothing(spark):
-    """r10: after folding an admitted batch into the assignment state and
-    the vector store, re-delivering the SAME batch admits zero vectors —
-    every rejected vector is (by the greedy rule) a semantic dup of
-    something now in state, and every admitted one now matches itself at
-    cos 1.0."""
-    from mongo_polars_reconciliation_spark.extensions.similarity import (
-        assignment_state,
-        ingest_novel_semantic,
-    )
-
-    hist, batch, cents, assign = _semantic_fixture(spark)
-    a1 = ingest_novel_semantic(
-        batch, assign, hist, cents, mis_max_iter=8
-    ).localCheckpoint(eager=True)
-    assert a1.count() > 0
-    adm = batch.join(a1, "vec_id")
-    assign2 = assign.unionByName(assignment_state(adm, cents, nprobe=2))
-    vecs2 = hist.unionByName(adm)
-    again = ingest_novel_semantic(batch, assign2, vecs2, cents, mis_max_iter=8)
-    assert again.count() == 0
-
-
-def test_semantic_ingest_tolerates_duplicate_state_rows(spark):
-    """r10: duplicated assignment/vector state rows (a crash-replayed
-    append) change nothing — the vector store is deduped after the
-    collision semi-join, mirroring the text ingest's contract."""
-    from mongo_polars_reconciliation_spark.extensions.similarity import (
-        ingest_novel_semantic,
-    )
-
-    hist, batch, cents, assign = _semantic_fixture(spark)
-    clean = sorted(
-        r["vec_id"]
-        for r in ingest_novel_semantic(
-            batch, assign, hist, cents, mis_max_iter=8
-        ).collect()
-    )
-    dup = sorted(
-        r["vec_id"]
-        for r in ingest_novel_semantic(
-            batch,
-            assign.unionAll(assign),
-            hist.unionAll(hist),
-            cents,
-            mis_max_iter=8,
-        ).collect()
-    )
-    assert clean == dup and len(clean) > 0
-
-
-def _payload_fixture(spark, sf_dir="/root/testdata/sf0.001"):
-    """History + arriving batch + persisted digest/block state for the
-    payload ingest properties — the mm_payload_ingest fixture shapes
-    (byte-exact re-uploads + appended-tail variants, 64-byte blocks)."""
-    from mongo_polars_reconciliation_spark.extensions.multimodal import (
-        payload_block_state,
-    )
-    from mongo_polars_reconciliation_spark.harness.fixtures import (
-        payload_ingest_split,
-    )
-
-    hist, batch = payload_ingest_split(spark, sf_dir)
-    digests = hist.select(
-        F.md5(F.col("payload")).alias("payload_hash")
-    ).distinct()
-    return hist, batch, digests, payload_block_state(hist, block_bytes=64)
-
-
-def test_payload_ingest_batch_split_equals_one_batch(spark):
-    """r10: the payload ingest inherits the greedy family's batch-split
-    property — B1 (low ids) then B2 against the updated state admits
-    exactly what one concatenated batch admits."""
-    from mongo_polars_reconciliation_spark.extensions.multimodal import (
-        ingest_novel_payloads,
-        payload_block_state,
-    )
-
-    hist, batch, digests, blocks = _payload_fixture(spark)
-    one = ingest_novel_payloads(
-        batch, digests, blocks, block_bytes=64, mis_max_iter=8
-    )
-    one_ids = sorted(r["doc_id"] for r in one.collect())
-
-    median = 100000
-    b1 = batch.where(F.col("doc_id") < median).localCheckpoint(eager=True)
-    b2 = batch.where(F.col("doc_id") >= median).localCheckpoint(eager=True)
-    a1 = ingest_novel_payloads(
-        b1, digests, blocks, block_bytes=64, mis_max_iter=8
-    ).localCheckpoint(eager=True)
-    adm1 = b1.join(a1.select("doc_id"), "doc_id")
-    digests2 = digests.unionByName(
-        a1.select(F.col("payload_hash"))
-    ).distinct()
-    blocks2 = blocks.unionByName(payload_block_state(adm1, block_bytes=64))
-    a2 = ingest_novel_payloads(
-        b2, digests2, blocks2, block_bytes=64, mis_max_iter=8
-    )
-    two_ids = sorted(
-        [r["doc_id"] for r in a1.collect()]
-        + [r["doc_id"] for r in a2.collect()]
-    )
-    assert two_ids == one_ids and len(one_ids) > 0
-
-
-def test_payload_ingest_redelivery_admits_nothing(spark):
-    """r10: after folding an admitted batch into both state faces,
-    re-delivering the SAME batch admits zero payloads."""
-    from mongo_polars_reconciliation_spark.extensions.multimodal import (
-        ingest_novel_payloads,
-        payload_block_state,
-    )
-
-    hist, batch, digests, blocks = _payload_fixture(spark)
-    a1 = ingest_novel_payloads(
-        batch, digests, blocks, block_bytes=64, mis_max_iter=8
-    ).localCheckpoint(eager=True)
-    assert a1.count() > 0
-    adm = batch.join(a1.select("doc_id"), "doc_id")
-    digests2 = digests.unionByName(a1.select("payload_hash")).distinct()
-    blocks2 = blocks.unionByName(payload_block_state(adm, block_bytes=64))
-    again = ingest_novel_payloads(
-        batch, digests2, blocks2, block_bytes=64, mis_max_iter=8
-    )
-    assert again.count() == 0
-
-
 def test_payload_ingest_capped_equals_uncapped_on_fixture(spark):
-    """r10: with no degenerate block bucket on the fixture, the combined
+    """With no degenerate block bucket on the fixture, the combined
     batch+state hot-bucket cap changes nothing — and the state-side count
     it pays touches only the buckets the batch's keys hit (the bucketed
     semi-join), never full history."""
-    from mongo_polars_reconciliation_spark.extensions.multimodal import (
-        ingest_novel_payloads,
-    )
-
-    hist, batch, digests, blocks = _payload_fixture(spark)
+    family, hist, batch = _ingest_case(spark, "payload")
+    state = family.seed(hist)
     exact = sorted(
-        tuple(r)
-        for r in ingest_novel_payloads(
-            batch, digests, blocks, block_bytes=64, mis_max_iter=8
-        ).collect()
+        tuple(r) for r in family.admit(batch, state, mis_max_iter=8).collect()
     )
     capped = sorted(
         tuple(r)
-        for r in ingest_novel_payloads(
-            batch,
-            digests,
-            blocks,
-            block_bytes=64,
-            max_bucket_size=1000,
-            mis_max_iter=8,
+        for r in family.admit(
+            batch, state, max_bucket_size=1000, mis_max_iter=8
         ).collect()
     )
     assert exact == capped and len(exact) > 0
-
-
-def test_semantic_ingest_cold_start_empty_state(spark):
-    """r10: a first-wave ingest against EMPTY state reduces to pure
-    within-batch greedy admission — exact copies collapse to the lower
-    id, unrelated vectors all admit."""
-    from mongo_polars_reconciliation_spark.extensions.similarity import (
-        ingest_novel_semantic,
-        kmeans_fit,
-    )
-
-    emb = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
-    ).select("vec_id", "embedding")
-    base = emb.where(F.col("vec_id") < 40)
-    copies = base.where(F.col("vec_id") % 4 == 1).select(
-        (F.col("vec_id") + 1000).alias("vec_id"), "embedding"
-    )
-    batch = base.unionByName(copies)
-    cents = kmeans_fit(base, k=4, n_iter=1)
-    empty_assign = spark.createDataFrame([], "blk int, vec_id long")
-    empty_vecs = spark.createDataFrame(
-        [], "vec_id long, embedding array<float>"
-    )
-    got = sorted(
-        r["vec_id"]
-        for r in ingest_novel_semantic(
-            batch, empty_assign, empty_vecs, cents, mis_max_iter=8
-        ).collect()
-    )
-    n_base = base.count()
-    # every original admits (natural vectors are far apart), every exact
-    # copy rejects against its lower-id original
-    assert got == sorted(r["vec_id"] for r in base.collect()), got
-    assert len(got) == n_base
-
-
-def test_payload_ingest_cold_start_and_zero_length(spark):
-    """r10: cold start against empty state + zero-length payloads, which
-    emit no blocks and are exact-dedup-only by construction — two empty
-    payloads are exact copies of each other (one admits), and a
-    zero-length payload can never be a block near-dup of anything."""
-    from mongo_polars_reconciliation_spark.extensions.multimodal import (
-        attach_payload,
-        ingest_novel_payloads,
-    )
-
-    batch = attach_payload(
-        spark.createDataFrame(
-            [
-                (1, "a" * 200),
-                (2, ""),          # zero-length
-                (3, ""),          # exact copy of 2 → rejected
-                (4, "a" * 200),   # exact copy of 1 → rejected
-                (5, "b" * 200),
-            ],
-            "doc_id long, text string",
-        )
-    )
-    empty_dg = spark.createDataFrame([], "payload_hash string")
-    empty_blocks = spark.createDataFrame(
-        [], "bblock string, doc_id long, n_blocks long"
-    )
-    got = sorted(
-        r["doc_id"]
-        for r in ingest_novel_payloads(
-            batch, empty_dg, empty_blocks, block_bytes=64, mis_max_iter=8
-        ).collect()
-    )
-    assert got == [1, 2, 5], got
 
 
 # Payload-ingest randomized model: texts composed from a small pool of
@@ -3567,13 +3368,14 @@ def _payload_model(hist, batch, block_bytes=64, threshold=0.5):
     batch_docs=st.lists(_doc_strategy, min_size=1, max_size=6),
 )
 def test_payload_ingest_matches_python_model(spark, hist_docs, batch_docs):
-    """r10 randomized end-to-end pin, independent of the DuckDB oracle:
+    """Randomized end-to-end pin, independent of the DuckDB oracle:
     on arbitrary chunk-composed corpora the engine's payload admission
     equals the doc-at-a-time Python model."""
     from mongo_polars_reconciliation_spark.extensions.multimodal import (
         attach_payload,
-        ingest_novel_payloads,
-        payload_block_state,
+    )
+    from mongo_polars_reconciliation_spark.streaming.corpus import (
+        PayloadFamily,
     )
     from pyspark.sql import functions as SF
 
@@ -3589,18 +3391,10 @@ def test_payload_ingest_matches_python_model(spark, hist_docs, batch_docs):
     batch_df = attach_payload(
         spark.createDataFrame(list(batch.items()), "doc_id long, text string")
     )
-    digests = hist_df.select(
-        SF.md5(SF.col("payload")).alias("payload_hash")
-    ).distinct()
-    got = sorted(
-        r["doc_id"]
-        for r in ingest_novel_payloads(
-            batch_df,
-            digests,
-            payload_block_state(hist_df, block_bytes=64),
-            block_bytes=64,
-            mis_max_iter=10,
-        ).collect()
+    family = PayloadFamily(block_bytes=64)
+    got = _admitted_ids(
+        family,
+        family.admit(batch_df, family.seed(hist_df), mis_max_iter=10),
     )
     assert got == expected, (hist, batch, got, expected)
 
@@ -3685,13 +3479,12 @@ def _semantic_model(hist, batch, cents, threshold=0.9, nprobe=2):
     ),
 )
 def test_semantic_ingest_matches_python_model(spark, hist_spec, batch_spec):
-    """r10 randomized end-to-end pin, independent of the DuckDB oracle:
+    """Randomized end-to-end pin, independent of the DuckDB oracle:
     on prototype-composed corpora the engine's semantic admission under
     explicit centroids equals the doc-at-a-time Python model (same
     left-fold IEEE arithmetic, same probe blocking, same greedy)."""
-    from mongo_polars_reconciliation_spark.extensions.similarity import (
-        assignment_state,
-        ingest_novel_semantic,
+    from mongo_polars_reconciliation_spark.streaming.corpus import (
+        SemanticFamily,
     )
 
     hist = {i: _vec_of(p, f) for i, (p, f) in enumerate(hist_spec)}
@@ -3706,87 +3499,44 @@ def test_semantic_ingest_matches_python_model(spark, hist_spec, batch_spec):
         [(i, v) for i, v in batch.items()],
         "vec_id long, embedding array<double>",
     )
-    got = sorted(
-        r["vec_id"]
-        for r in ingest_novel_semantic(
-            batch_df,
-            assignment_state(hist_df, _PROTOS, nprobe=2),
-            hist_df,
-            _PROTOS,
-            threshold=0.9,
-            nprobe=2,
-            mis_max_iter=10,
-        ).collect()
+    family = SemanticFamily(_PROTOS, nprobe=2)
+    got = _admitted_ids(
+        family,
+        family.admit(
+            batch_df, family.seed(hist_df), threshold=0.9, mis_max_iter=10
+        ),
     )
     assert got == expected, (hist_spec, batch_spec, got, expected)
 
 
 def test_payload_ingest_null_payload_redelivery_idempotent(spark):
-    """r10: a NULL payload digests as the EMPTY payload — without the
+    """A NULL payload digests as the EMPTY payload — without the
     coalesce its NULL digest would never match the state anti-join
     (NULL <> NULL) and the doc would re-admit on EVERY redelivery (the
-    r8 null-text lesson). First delivery admits it once (as empty
-    content); folding the digest into state makes the redelivery admit
-    zero, and an explicit empty payload is its exact copy."""
-    from mongo_polars_reconciliation_spark.extensions.multimodal import (
-        ingest_novel_payloads,
+    NULL-text rule of the text family). First delivery admits it once
+    (as empty content); folding the admission into state makes the
+    redelivery admit zero, and an explicit empty payload is its exact
+    copy."""
+    from mongo_polars_reconciliation_spark.streaming.corpus import (
+        PayloadFamily,
     )
 
     batch = spark.createDataFrame(
         [(1, bytearray(b"real content here")), (2, None), (3, bytearray(b""))],
         "doc_id long, payload binary",
     )
-    empty_dg = spark.createDataFrame([], "payload_hash string")
-    empty_blocks = spark.createDataFrame(
-        [], "bblock string, doc_id long, n_blocks long"
-    )
-    a1 = ingest_novel_payloads(
-        batch, empty_dg, empty_blocks, block_bytes=64, mis_max_iter=8
-    ).localCheckpoint(eager=True)
+    family = PayloadFamily(block_bytes=64)
+    state = family.seed(batch.limit(0))
+    a1 = family.admit(batch, state, mis_max_iter=8).localCheckpoint(eager=True)
     # doc 3 (explicit empty) is an exact copy of doc 2 (NULL → '') —
     # keeper min-id rule admits 1 and 2 only
-    assert sorted(r["doc_id"] for r in a1.collect()) == [1, 2]
-    again = ingest_novel_payloads(
-        batch,
-        a1.select("payload_hash").distinct(),
-        empty_blocks,
-        block_bytes=64,
-        mis_max_iter=8,
-    )
-    assert again.count() == 0
-
-
-def test_payload_ingest_tolerates_duplicate_state_rows(spark):
-    """r10: duplicated block-state rows (a crash-replayed append) change
-    nothing — without the post-semi-join distinct, a duplicated history
-    row doubles its pair's n_shared and inflates the similarity past
-    the threshold, over-dropping near-threshold batch payloads."""
-    from mongo_polars_reconciliation_spark.extensions.multimodal import (
-        ingest_novel_payloads,
-    )
-
-    hist, batch, digests, blocks = _payload_fixture(spark)
-    clean = sorted(
-        tuple(r)
-        for r in ingest_novel_payloads(
-            batch, digests, blocks, block_bytes=64, mis_max_iter=8
-        ).collect()
-    )
-    dup = sorted(
-        tuple(r)
-        for r in ingest_novel_payloads(
-            batch,
-            digests,
-            blocks.unionAll(blocks),
-            block_bytes=64,
-            mis_max_iter=8,
-        ).collect()
-    )
-    assert clean == dup and len(clean) > 0
+    assert _admitted_ids(family, a1) == [1, 2]
+    state2 = family.fold(state, a1, family.admitted_rows(batch, a1))
+    assert family.admit(batch, state2, mis_max_iter=8).count() == 0
 
 
 def test_cluster_keepers_by_quality_argmax_and_ties(spark):
-    """r10: the struct-max arbitration equals the obvious per-cluster
+    """The struct-max arbitration equals the obvious per-cluster
     Python argmax, including the MIN-id tie-break on equal quality and
     singleton clusters keeping themselves."""
     from mongo_polars_reconciliation_spark.extensions.dedup import (
@@ -3830,20 +3580,21 @@ def test_cluster_keepers_by_quality_argmax_and_ties(spark):
 
 
 def test_neardup_ingest_crash_window_replay_idempotent(spark):
-    """r10 hardening: the crash window BETWEEN the bands/docs state writes
-    and the digest-ledger write must replay to exactly the original
-    admitted set. The trap is a replayed batch doc meeting its own ghost
-    state rows: unfiltered self-pairs drop it outright, and a ghost doc's
+    """The crash window BETWEEN the bands/docs state writes and the
+    digest-ledger write must replay to exactly the original admitted
+    set. The trap is a replayed batch doc meeting its own ghost state
+    rows: unfiltered self-pairs drop it outright, and a ghost doc's
     shingles counted twice next to its batch-side copy would distort
     jacc_r for its neighbors — this fixture puts two admitted docs at
     true J = 7/13 (< 0.6, no edge, both admitted) whose doubled-count
     distortion 2*7/(2*10+10-2*7) = 0.875 would cross the threshold and
     silently drop BOTH on replay."""
     from mongo_polars_reconciliation_spark.extensions.dedup import (
-        band_state,
-        ingest_novel_neardup,
         jaccard_verify,
         shingle_sets,
+    )
+    from mongo_polars_reconciliation_spark.streaming.corpus import (
+        NeardupFamily,
     )
 
     toks = [f"w{i:02d}" for i in range(1, 16)]
@@ -3857,114 +3608,28 @@ def test_neardup_ingest_crash_window_replay_idempotent(spark):
     assert jaccard_verify(pairs, shingle_sets(df), threshold=0.6).count() == 0
     # ... but the pair DOES collide in at least one 1-hash band, so the
     # replay actually reaches the verification stage (a checked fact)
-    bs = band_state(df, num_hashes=12, bands=12)
-    b_bands = {r["bband"] for r in bs.where("doc_id = 1").collect()}
-    c_bands = {r["bband"] for r in bs.where("doc_id = 2").collect()}
-    assert b_bands & c_bands, "fixture lost its band collision"
+    family = NeardupFamily(num_hashes=12, bands=12)
+    ghosts = family.seed(df)
+    bands = {
+        i: {r["bband"] for r in ghosts["bands"].where(f"doc_id={i}").collect()}
+        for i in (1, 2)
+    }
+    assert bands[1] & bands[2], "fixture lost its band collision"
 
-    empty_dg = spark.createDataFrame([], "text_hash string")
-    empty_bands = spark.createDataFrame([], "bband string, doc_id long")
-    empty_docs = spark.createDataFrame([], "doc_id long, text string")
-    original = sorted(
-        r["doc_id"]
-        for r in ingest_novel_neardup(
-            df, empty_dg, empty_bands, empty_docs,
-            num_hashes=12, bands=12, mis_max_iter=8,
-        ).collect()
-    )
+    empty = family.seed(df.limit(0))
+    original = _admitted_ids(family, family.admit(df, empty, mis_max_iter=8))
     assert original == [1, 2], original
     # crash window: bands/ and docs/ hold the admitted ghosts, the digest
     # ledger was never written -> the replayed trigger must re-derive the
     # SAME admissions (and would re-append, which the duplicate-state-row
     # contract absorbs)
-    replay = sorted(
-        r["doc_id"]
-        for r in ingest_novel_neardup(
-            df,
-            empty_dg,
-            band_state(df, num_hashes=12, bands=12),
-            df,
-            num_hashes=12, bands=12, mis_max_iter=8,
-        ).collect()
-    )
+    ghosts["digests"] = empty["digests"]
+    replay = _admitted_ids(family, family.admit(df, ghosts, mis_max_iter=8))
     assert replay == original, (replay, original)
 
 
-def test_neardup_ingest_crash_window_replay_on_fixture(spark):
-    """The crash-window replay pin over the real driver fixture: fold the
-    admitted docs into bands/ and docs/ but NOT the digest ledger, replay
-    the full batch, and require the original admitted set back."""
-    from mongo_polars_reconciliation_spark.extensions.dedup import (
-        band_state,
-        ingest_novel_neardup,
-    )
-
-    hist, batch, digests, bands = _neardup_fixture(spark)
-    a1 = ingest_novel_neardup(
-        batch, digests, bands, hist, mis_max_iter=8
-    ).localCheckpoint(eager=True)
-    original = sorted(r["doc_id"] for r in a1.collect())
-    assert len(original) > 0
-    adm_docs = batch.join(a1.select("doc_id"), "doc_id")
-    bands2 = bands.unionByName(band_state(adm_docs))
-    docs2 = hist.unionByName(adm_docs)
-    replay = ingest_novel_neardup(
-        batch, digests, bands2, docs2, mis_max_iter=8
-    )
-    assert sorted(r["doc_id"] for r in replay.collect()) == original
-
-
-def test_payload_ingest_crash_window_replay_idempotent(spark):
-    """r10 hardening, payload face: blocks/ written, digest ledger not —
-    without the self-pair filter every admitted payload meets its own
-    ghost blocks at shared fraction 1.0 and is silently dropped, so the
-    ledger is never backfilled. Replay must admit the original set."""
-    from mongo_polars_reconciliation_spark.extensions.multimodal import (
-        ingest_novel_payloads,
-        payload_block_state,
-    )
-
-    hist, batch, digests, blocks = _payload_fixture(spark)
-    a1 = ingest_novel_payloads(
-        batch, digests, blocks, block_bytes=64, mis_max_iter=8
-    ).localCheckpoint(eager=True)
-    original = sorted(r["doc_id"] for r in a1.collect())
-    assert len(original) > 0
-    adm = batch.join(a1.select("doc_id"), "doc_id")
-    blocks2 = blocks.unionByName(payload_block_state(adm, block_bytes=64))
-    replay = ingest_novel_payloads(
-        batch, digests, blocks2, block_bytes=64, mis_max_iter=8
-    )
-    assert sorted(r["doc_id"] for r in replay.collect()) == original
-
-
-def test_semantic_ingest_crash_window_replay_idempotent(spark):
-    """r10 hardening, vector face: vecs/ written, assign/ not (the skin's
-    write order) — the ghost vectors are unreachable without assignment
-    rows (the store is only read through the collision semi-join), so the
-    replay re-derives the original admissions. The other window (both
-    faces written) is the redelivery-admits-nothing pin: cos-1.0
-    self-match IS the semantic family's ledger."""
-    from mongo_polars_reconciliation_spark.extensions.similarity import (
-        ingest_novel_semantic,
-    )
-
-    hist, batch, cents, assign = _semantic_fixture(spark)
-    a1 = ingest_novel_semantic(
-        batch, assign, hist, cents, mis_max_iter=8
-    ).localCheckpoint(eager=True)
-    original = sorted(r["vec_id"] for r in a1.collect())
-    assert len(original) > 0
-    adm = batch.join(a1, "vec_id")
-    vecs2 = hist.unionByName(adm)
-    replay = ingest_novel_semantic(
-        batch, assign, vecs2, cents, mis_max_iter=8
-    )
-    assert sorted(r["vec_id"] for r in replay.collect()) == original
-
-
 def test_pq_codebooks_roundtrip_bit_exact(spark):
-    """r10: the PQ codebook artifact round-trips bit-exactly through
+    """The PQ codebook artifact round-trips bit-exactly through
     parquet (the save_centroids contract, grid edition), and a torn
     artifact (a missing (sub, cid) cell) fails loudly on load."""
     import shutil
@@ -3995,7 +3660,7 @@ def test_pq_codebooks_roundtrip_bit_exact(spark):
 
 
 def test_pq_encode_matches_python_model(spark):
-    """r10: PQ codes equal a doc-at-a-time Python replay (argmin of the
+    """PQ codes equal a doc-at-a-time Python replay (argmin of the
     left-fold squared distance per subspace, min-cid tie-break) on
     handcrafted vectors including an exact tie."""
     from mongo_polars_reconciliation_spark.extensions.similarity import (
@@ -4042,7 +3707,7 @@ def test_pq_encode_matches_python_model(spark):
 
 
 def test_pq_topk_survivors_carry_bruteforce_scores(spark):
-    """r10: every row pq_topk_adc returns carries the SAME exact cos_r
+    """Every row pq_topk_adc returns carries the SAME exact cos_r
     the brute-force scan computes for that id (identical fold on
     identical operands) — the re-rank stage changes the candidate SET,
     never a survivor's score."""
@@ -4075,7 +3740,7 @@ def test_pq_topk_survivors_carry_bruteforce_scores(spark):
 
 
 def test_ivf_residuals_match_python_model(spark):
-    """r10: ivf_residuals equals a doc-at-a-time Python replay — nearest
+    """ivf_residuals equals a doc-at-a-time Python replay — nearest
     coarse centroid by left-fold squared distance (min-cid tie-break),
     residual = v − centroid — on handcrafted vectors including a tie."""
     from mongo_polars_reconciliation_spark.extensions.similarity import (
@@ -4111,7 +3776,7 @@ def test_ivf_residuals_match_python_model(spark):
 
 
 def test_ivfpq_loaded_artifacts_probe_bit_equal(spark, tmp_path):
-    """r10: ivfpq_topk under SAVED-then-LOADED artifacts returns rows
+    """ivfpq_topk under SAVED-then-LOADED artifacts returns rows
     bit-identical to the in-memory fit — the coarse table and the
     residual codebooks both survive the parquet round trip exactly
     (fit once, probe many)."""
@@ -4147,7 +3812,7 @@ def test_ivfpq_loaded_artifacts_probe_bit_equal(spark, tmp_path):
 
 
 def test_ivfpq_knn_served_graph_bit_equal(spark):
-    """r11 (VERDICT r10 #4): the SERVED k-NN graph face — built from
+    """The SERVED k-NN graph face — built from
     persisted artifacts with the residual encode re-run under them —
     returns rows bit-identical to the fit-inclusive sim_knn_join_ivfpq
     build (same geometry constants, same corpus), which is why the two
@@ -4166,7 +3831,7 @@ def test_ivfpq_knn_served_graph_bit_equal(spark):
 
 
 def test_ivfpq_rows_come_from_probed_cells_and_rerank_is_exact(spark):
-    """r10: every returned row's blk is one of the nprobe nearest coarse
+    """Every returned row's blk is one of the nprobe nearest coarse
     cells to the query (the pruning contract — unprobed cells are never
     scanned), the exact-hit query vector wins rank 1 with cos_r 1.0, and
     every survivor's cos_r equals the brute-force score for that id."""
@@ -4209,7 +3874,7 @@ def test_ivfpq_rows_come_from_probed_cells_and_rerank_is_exact(spark):
 
 
 def test_pq_fit_fused_equals_sequential_kmeans_per_subspace(spark):
-    """r16 (optimization round): pq_fit's fused single-loop Lloyd fit must
+    """pq_fit's fused single-loop Lloyd fit must
     be BIT-identical to the original sequential form — m independent
     kmeans_fit calls over sliced projections — on the real embeddings
     fixture, including through the residual path (the sim_topk_ivfpq

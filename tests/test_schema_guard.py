@@ -1,4 +1,4 @@
-"""Testdata schema-drift tripwire (VERDICT r3 item 2): the MICROS-vs-NANOS
+"""Testdata schema-drift tripwire: the MICROS-vs-NANOS
 events.ts drift must surface as ONE loud failure here, never as silent
 1000×-shrunk timestamps downstream."""
 
@@ -57,7 +57,7 @@ def test_missing_table_reported():
 
 
 def test_readme_operator_count_matches_queries():
-    """Doc-drift tripwire (VERDICT r6 nit): the README's advertised
+    """Doc-drift tripwire: the README's advertised
     operator count must equal len(QUERIES) — it went stale twice when new
     queries landed after the README edit."""
     import re
@@ -90,7 +90,7 @@ def test_bench_lists_reference_declared_queries():
     spec.loader.exec_module(mod)
     from mongo_polars_reconciliation_spark.harness.queries import QUERIES
 
-    # r15: bench resolves names through BENCH_FNS = QUERIES + the retired
+    # bench resolves names through BENCH_FNS = QUERIES + the retired
     # curation faces it deliberately keeps timing (frozen headline
     # membership) — validate against the map bench actually uses, and pin
     # that the shadow map only ever ADDS the documented retirees.

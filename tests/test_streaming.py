@@ -9,6 +9,11 @@ from pyspark.sql import functions as F
 from mongo_polars_reconciliation_spark.functions.timenorm import ensure_epoch_nanos
 from mongo_polars_reconciliation_spark.harness.queries import QUERIES, _ab
 from mongo_polars_reconciliation_spark.scratch import scratch_path
+from mongo_polars_reconciliation_spark.streaming.corpus import (
+    NeardupFamily,
+    PayloadFamily,
+    SemanticFamily,
+)
 from mongo_polars_reconciliation_spark.streaming.events import (
     EVENTS_SCHEMA,
     read_events_stream,
@@ -223,66 +228,87 @@ def test_stream_dedup_corpus_state_carries_across_batches(spark):
     assert got == {1: 2, 3: 1}
 
 
-def test_compact_ingest_state_closes_the_loop(spark):
-    """r9: after the streaming crawl loop drains, compacting the
-    append-only state dirs into bucketed tables preserves the admission
-    horizon — re-delivering the SAME batch against the compacted tables
-    admits nothing (idempotence survives the rewrite), and the compacted
-    faces carry the bucketed layout the anti-join plan pins rely on."""
-    from mongo_polars_reconciliation_spark.extensions.dedup import (
-        ingest_novel_neardup,
+# family: (its crawl-loop query, that query's state dir, {face: bucket key})
+_COMPACT_CASES = {
+    "neardup": (
+        "stream_ingest_neardup",
+        "neardup_state",
+        {"digests": "text_hash", "bands": "bband", "docs": "doc_id"},
+    ),
+    "semantic": (
+        "stream_ingest_semantic",
+        "sem_ingest_state",
+        {"vecs": "vec_id", "assign": "blk"},
+    ),
+    "payload": (
+        "stream_ingest_payloads",
+        "payload_ingest_state",
+        {"digests": "payload_hash", "blocks": "bblock"},
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_COMPACT_CASES))
+def test_compact_state_closes_the_loop(spark, name):
+    """After a crawl loop drains, compacting its append-only state dirs
+    into bucketed tables preserves the admission horizon: re-delivering
+    the SAME batch against seeds + compacted tables admits nothing
+    (idempotence survives the rewrite), a compacted digest ledger holds
+    one row per admission, and every face carries the bucket spec on its
+    join key (a bare scan won't USE buckets — the join-side exploitation
+    is what the test_bucketing.py plan pins verify; here we pin the
+    catalog spec)."""
+    from mongo_polars_reconciliation_spark.extensions.similarity import (
+        load_centroids,
     )
+    from mongo_polars_reconciliation_spark.harness import fixtures
     from mongo_polars_reconciliation_spark.streaming.corpus import (
-        compact_ingest_state,
+        compact_state,
     )
 
+    query, state_dir, keys = _COMPACT_CASES[name]
     sf_dir = "/root/testdata/sf0.001"
-    # drain the streaming loop (also the parity query's path)
-    admitted = QUERIES["stream_ingest_neardup"](spark, sf_dir)
-    n_admitted = admitted.count()
-    assert n_admitted > 0
-    root = scratch_path("sf0.001", "neardup_state")
-    tables = compact_ingest_state(spark, f"{root}/state",
-                                  table_prefix="t_compact", buckets=4)
-    assert set(tables) == {"digests", "bands", "docs"}
-    # compacted digest count == distinct admitted digests
-    assert (
-        spark.table(tables["digests"]).count()
-        == admitted.select("text_hash").distinct().count()
+    admitted = QUERIES[query](spark, sf_dir)
+    assert admitted.count() > 0
+    family = {
+        "neardup": NeardupFamily,
+        "payload": lambda: PayloadFamily(block_bytes=64),
+        "semantic": lambda: SemanticFamily(
+            load_centroids(
+                spark, scratch_path("sf0.001", "stream_ingest_centroids")
+            )
+        ),
+    }[name]()
+    tables = compact_state(
+        spark,
+        family,
+        f"{scratch_path('sf0.001', state_dir)}/state",
+        table_prefix=f"t_compact_{name}",
+        buckets=4,
     )
-    # the full admission horizon = seeds + compacted state; re-deliver
-    from mongo_polars_reconciliation_spark.extensions.dedup import band_state
-    from mongo_polars_reconciliation_spark.harness.fixtures import (
-        neardup_ingest_split,
-    )
+    assert set(tables) == set(keys)
 
-    hist, batch = neardup_ingest_split(spark, sf_dir)
-    seed_digests = hist.select(
-        F.md5(F.coalesce(F.col("text"), F.lit("")).cast("binary")).alias(
-            "text_hash"
-        )
-    ).distinct()
-    again = ingest_novel_neardup(
-        batch,
-        seed_digests.unionByName(
-            spark.table(tables["digests"]).select("text_hash")
-        ).distinct(),
-        band_state(hist).unionByName(spark.table(tables["bands"])),
-        hist.unionByName(spark.table(tables["docs"])),
-        mis_max_iter=8,
-    )
-    assert again.count() == 0
-    # layout: every face carries the bucket spec on its join key (a bare
-    # scan won't USE buckets — the join-side exploitation is what the
-    # test_bucketing.py plan pins verify; here we pin the catalog spec)
-    keys = {"digests": "text_hash", "bands": "bband", "docs": "doc_id"}
-    for face, key in keys.items():
+    hist, batch = getattr(fixtures, f"{name}_ingest_split")(spark, sf_dir)
+    seeds = family.seed(hist)
+    horizon = {
+        f.name: f.union(seeds[f.name], spark.table(tables[f.name]))
+        for f in family.faces
+    }
+    assert family.admit(batch, horizon, mis_max_iter=8).count() == 0
+    for face in family.faces:
+        if face.ledger_set:
+            assert spark.table(tables[face.name]).count() == admitted.count()
         desc = {
             r["col_name"].strip(): r["data_type"].strip()
-            for r in spark.sql(f"DESCRIBE FORMATTED {tables[face]}").collect()
+            for r in spark.sql(
+                f"DESCRIBE FORMATTED {tables[face.name]}"
+            ).collect()
         }
-        assert desc.get("Num Buckets") == "4", (face, desc)
-        assert key in desc.get("Bucket Columns", ""), (face, desc)
+        assert desc.get("Num Buckets") == "4", (face.name, desc)
+        assert keys[face.name] in desc.get("Bucket Columns", ""), (
+            face.name,
+            desc,
+        )
 
 
 def test_neardup_stream_state_matches_nondefault_geometry(spark):
@@ -291,7 +317,9 @@ def test_neardup_stream_state_matches_nondefault_geometry(spark):
     non-default bands, a near-dup of a batch-1 ADMISSION arriving in
     batch 2 collides only if the persisted bband keys were built with the
     matching rows-per-band — otherwise the probe silently misses."""
-    from mongo_polars_reconciliation_spark.extensions.dedup import band_state
+    from mongo_polars_reconciliation_spark.streaming.corpus import (
+        incremental_neardup_ingest,
+    )
 
     toks = [f"w{i:02d}" for i in range(1, 13)]
     orig = " ".join(toks)            # doc 10, batch 0 (novel)
@@ -301,8 +329,13 @@ def test_neardup_stream_state_matches_nondefault_geometry(spark):
     )
     geometry = {"num_hashes": 12, "bands": 6}
     state = _drain(
-        spark, "nondefault_geom", docs, _neardup_ingest(spark, **geometry),
+        spark, "nondefault_geom", docs, NeardupFamily(),
         split_expr=(F.col("doc_id") >= 20).cast("int"),
+        # through the public wrapper: its kwargs must bind the geometry
+        ingest=lambda stream, seeds, state, ckpt: incremental_neardup_ingest(
+            stream, seeds["digests"], seeds["bands"], seeds["docs"],
+            state, ckpt, **geometry,
+        ),
     )
     # doc 20 must be rejected THROUGH the persisted band state: with
     # mismatched geometry its probe keys never equal the stored keys and
@@ -312,51 +345,20 @@ def test_neardup_stream_state_matches_nondefault_geometry(spark):
     # rejection above proves nothing)
     def bands_of(doc_id):
         one = docs.where(F.col("doc_id") == doc_id)
-        return {r["bband"] for r in band_state(one, **geometry).collect()}
+        bands = NeardupFamily(**geometry).seed(one)["bands"]
+        return {r["bband"] for r in bands.collect()}
 
     assert bands_of(10) & bands_of(20), "fixture lost its band collision"
 
 
-def test_neardup_ingest_tolerates_duplicate_state_rows(spark):
-    """r10 (advice): the ledger-last write order means a crash-replayed
-    trigger can append bands/ and docs/ rows twice; the batch operator
-    must return the same admissions over duplicated state faces (the
-    docs dedup happens after the candidate semi-join, so a duplicated
-    history doc cannot double its Jaccard sizes)."""
-    from mongo_polars_reconciliation_spark.extensions.dedup import (
-        band_state,
-        ingest_novel_neardup,
-    )
-    from tests.test_properties import _neardup_fixture
-
-    hist, batch, digests, bands = _neardup_fixture(spark)
-    clean = sorted(
-        r["doc_id"]
-        for r in ingest_novel_neardup(
-            batch, digests, bands, hist, mis_max_iter=8
-        ).collect()
-    )
-    dup = sorted(
-        r["doc_id"]
-        for r in ingest_novel_neardup(
-            batch,
-            digests,
-            bands.unionAll(bands),
-            hist.unionAll(hist),
-            mis_max_iter=8,
-        ).collect()
-    )
-    assert clean == dup and len(clean) > 0
-
-
 def test_compact_ingest_state_refuses_remote_warehouse(spark):
-    """r10 (advice): the compaction's stale-location cleanup shells out
+    """The compaction's stale-location cleanup shells out
     to the local filesystem; a non-file: warehouse URI must fail loudly
     BEFORE any table drop, not rmtree a stripped-scheme path."""
     import pytest as _pytest
 
     from mongo_polars_reconciliation_spark.streaming.corpus import (
-        compact_ingest_state,
+        compact_state,
     )
 
     class _Conf:
@@ -371,30 +373,45 @@ def test_compact_ingest_state_refuses_remote_warehouse(spark):
             raise AssertionError("guard must fire before any catalog op")
 
     with _pytest.raises(ValueError, match="local .file:. warehouse"):
-        compact_ingest_state(_FakeSpark(), "/tmp/nowhere")
+        compact_state(_FakeSpark(), NeardupFamily(), "/tmp/nowhere", "t")
 
 
-def _drain(spark, name, docs, ingest, split_expr=None, ghosts=None):
-    """Drain ``docs`` through ``ingest(stream, state_dir, checkpoint_dir)``
+def _drain(spark, name, docs, family, split_expr=None, ghosts=False,
+           ingest=None, **admit_kwargs):
+    """Drain ``docs`` through ``family``'s crawl loop from empty seeds,
     under a fresh scratch root, as the two triggers ``split_expr`` (a 0/1
-    Column) gives or as one, after writing each ``ghosts`` frame as its
-    face dir; return the state dir."""
+    Column) gives or as one; return the state dir. ``ghosts`` first
+    writes every pre-ledger face's rows for all of ``docs``, as a first
+    trigger that crashed before its ledger append leaves them.
+    ``ingest(stream, seeds, state_dir, checkpoint_dir)`` replaces the
+    loop call."""
     from mongo_polars_reconciliation_spark.streaming.corpus import (
+        _crawl_loop,
         read_documents_stream,
     )
 
     root = scratch_path("unit", f"{name}_state")
     shutil.rmtree(root, ignore_errors=True)
-    for face, rows in (ghosts or {}).items():
-        rows.write.parquet(f"{root}/state/{face}")
+    if ghosts:
+        rows = family.seed(docs)
+        for face in family.faces[:-1]:
+            rows[face.name].write.parquet(f"{root}/state/{face.path}")
     stream = read_documents_stream(
         spark,
         docs.coalesce(1),
         name=name,
         n_files=1 if split_expr is None else 2,
+        id_col=family.id_col,
         split_expr=F.lit(0) if split_expr is None else split_expr,
     )
-    ingest(stream, f"{root}/state", f"{root}/ckpt")
+    seeds = family.seed(docs.limit(0))
+    if ingest is None:
+        _crawl_loop(
+            stream, family, seeds, f"{root}/state", f"{root}/ckpt",
+            **admit_kwargs,
+        )
+    else:
+        ingest(stream, seeds, f"{root}/state", f"{root}/ckpt")
     return f"{root}/state"
 
 
@@ -406,47 +423,11 @@ def _ids(spark, path):
     return [r[0] for r in _rows(spark, path)]
 
 
-def _neardup_ingest(spark, **kwargs):
-    from mongo_polars_reconciliation_spark.streaming.corpus import (
-        incremental_neardup_ingest,
-    )
-
-    return lambda stream, state, ckpt: incremental_neardup_ingest(
-        stream,
-        spark.createDataFrame([], "text_hash string"),
-        spark.createDataFrame([], "bband string, doc_id long"),
-        spark.createDataFrame([], "doc_id long, text string"),
-        state,
-        ckpt,
-        **kwargs,
-    )
-
-
-def _payload_ingest(spark):
-    from mongo_polars_reconciliation_spark.streaming.corpus import (
-        incremental_payload_ingest,
-    )
-
-    return lambda stream, state, ckpt: incremental_payload_ingest(
-        stream,
-        spark.createDataFrame([], "payload_hash string"),
-        spark.createDataFrame([], "bblock string, doc_id long, n_blocks long"),
-        state,
-        ckpt,
-        block_bytes=4,
-        threshold=0.5,
-    )
-
-
 def test_semantic_stream_rejects_cross_trigger_dup(spark):
     """The embedding-space crawl loop must reject a trigger-2 exact
     re-upload of a trigger-1 ADMISSION through the persisted (assign,
     vecs) state — the cross-trigger face of the cos-1.0 ledger. The
     drained vecs/ face is the admitted set."""
-    from mongo_polars_reconciliation_spark.streaming.corpus import (
-        incremental_semantic_ingest,
-    )
-
     vecs = spark.createDataFrame(
         [
             (10, [1.0, 0.0, 0.0]),
@@ -460,17 +441,9 @@ def test_semantic_stream_rejects_cross_trigger_dup(spark):
         spark,
         "sem_cross_trigger",
         vecs,
-        lambda stream, state, ckpt: incremental_semantic_ingest(
-            stream,
-            spark.createDataFrame([], "blk int, vec_id long"),
-            spark.createDataFrame([], "vec_id long, embedding array<float>"),
-            cents,
-            state,
-            ckpt,
-            threshold=0.9,
-            nprobe=2,
-        ),
+        SemanticFamily(cents, nprobe=2),
         split_expr=(F.col("vec_id") >= 20).cast("int"),
+        threshold=0.9,
     )
     assert _ids(spark, f"{state}/vecs") == [10, 21]
     # the assign face carries nprobe rows per admitted vector
@@ -493,8 +466,8 @@ def test_payload_stream_rejects_cross_trigger_dups(spark):
         "doc_id long, payload binary",
     )
     state = _drain(
-        spark, "payload_cross_trigger", mm, _payload_ingest(spark),
-        split_expr=(F.col("doc_id") >= 20).cast("int"),
+        spark, "payload_cross_trigger", mm, PayloadFamily(block_bytes=4),
+        split_expr=(F.col("doc_id") >= 20).cast("int"), threshold=0.5,
     )
     assert _ids(spark, f"{state}/admitted") == [10, 22]
 
@@ -506,19 +479,16 @@ def test_neardup_loop_replays_crash_window_ghosts(spark):
     must still write the clean drain's ledger. The pair is the trap of
     test_neardup_ingest_crash_window_replay_idempotent: true J = 7/13 is
     below 0.6, but ghost shingles counted twice would verify it."""
-    from mongo_polars_reconciliation_spark.extensions.dedup import band_state
-
     toks = [f"w{i:02d}" for i in range(1, 16)]
     docs = spark.createDataFrame(
         [(1, " ".join(toks[0:12])), (2, " ".join(toks[3:15]))],
         "doc_id long, text string",
     )
-    geometry = {"num_hashes": 12, "bands": 12}
-    ingest = _neardup_ingest(spark, mis_max_iter=8, **geometry)
-    clean = _drain(spark, "ghost_neardup_clean", docs, ingest)
+    family = NeardupFamily(num_hashes=12, bands=12)
+    clean = _drain(spark, "ghost_neardup_clean", docs, family, mis_max_iter=8)
     replay = _drain(
-        spark, "ghost_neardup_replay", docs, ingest,
-        ghosts={"bands": band_state(docs, **geometry), "docs": docs},
+        spark, "ghost_neardup_replay", docs, family, ghosts=True,
+        mis_max_iter=8,
     )
     assert _ids(spark, f"{clean}/admitted") == [1, 2]
     assert _rows(spark, f"{replay}/admitted") == _rows(spark, f"{clean}/admitted")
@@ -528,18 +498,14 @@ def test_payload_loop_replays_crash_window_ghosts(spark):
     """The payload face of the loop-level crash window: ghost blocks/ rows
     and no admitted/ ledger. Without the self-pair filter each payload
     meets its own ghost blocks at shared fraction 1.0 and is dropped."""
-    from mongo_polars_reconciliation_spark.extensions.multimodal import (
-        payload_block_state,
-    )
-
     mm = spark.createDataFrame(
         [(10, b"AAAABBBBCCCCDDDD"), (22, b"WWWWXXXXYYYYZZZZ")],
         "doc_id long, payload binary",
     )
-    clean = _drain(spark, "ghost_payload_clean", mm, _payload_ingest(spark))
+    family = PayloadFamily(block_bytes=4)
+    clean = _drain(spark, "ghost_payload_clean", mm, family, threshold=0.5)
     replay = _drain(
-        spark, "ghost_payload_replay", mm, _payload_ingest(spark),
-        ghosts={"blocks": payload_block_state(mm, block_bytes=4)},
+        spark, "ghost_payload_replay", mm, family, ghosts=True, threshold=0.5
     )
     assert _ids(spark, f"{clean}/admitted") == [10, 22]
     assert _rows(spark, f"{replay}/admitted") == _rows(spark, f"{clean}/admitted")
@@ -569,112 +535,9 @@ def test_read_documents_stream_orders_parts_by_mtime(spark):
         assert max(mtimes[i]) < min(mtimes[i + 1]), (i, mtimes)
 
 
-def _bucket_spec(spark, table):
-    return {
-        r["col_name"].strip(): r["data_type"].strip()
-        for r in spark.sql(f"DESCRIBE FORMATTED {table}").collect()
-    }
-
-
-def test_compact_semantic_state_closes_the_loop(spark):
-    """r10: compacting the embedding-space crawl loop's append-only faces
-    into bucketed tables preserves the admission horizon — re-delivering
-    the SAME batch against (seeds + compacted tables) admits nothing —
-    and each face carries the bucket spec on its join key."""
-    from mongo_polars_reconciliation_spark.extensions.similarity import (
-        assignment_state,
-        ingest_novel_semantic,
-        load_centroids,
-    )
-    from mongo_polars_reconciliation_spark.harness.fixtures import (
-        semantic_ingest_split,
-    )
-    from mongo_polars_reconciliation_spark.streaming.corpus import (
-        compact_semantic_state,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    admitted = QUERIES["stream_ingest_semantic"](spark, sf_dir)
-    assert admitted.count() > 0
-    root = scratch_path("sf0.001", "sem_ingest_state")
-    tables = compact_semantic_state(
-        spark, f"{root}/state", table_prefix="t_sem_compact", buckets=4
-    )
-    assert set(tables) == {"vecs", "assign"}
-
-    hist, batch = semantic_ingest_split(spark, sf_dir)
-    cents = load_centroids(
-        spark, scratch_path("sf0.001", "stream_ingest_centroids")
-    )
-    again = ingest_novel_semantic(
-        batch,
-        assignment_state(hist, cents, nprobe=2).unionByName(
-            spark.table(tables["assign"])
-        ),
-        hist.unionByName(spark.table(tables["vecs"])),
-        cents,
-        mis_max_iter=8,
-    )
-    assert again.count() == 0
-    for face, key in {"vecs": "vec_id", "assign": "blk"}.items():
-        desc = _bucket_spec(spark, tables[face])
-        assert desc.get("Num Buckets") == "4", (face, desc)
-        assert key in desc.get("Bucket Columns", ""), (face, desc)
-
-
-def test_compact_payload_state_closes_the_loop(spark):
-    """r10: the payload-face mirror of the compaction pin — re-delivery
-    against (seeds + compacted tables) admits nothing, bucket specs on
-    the digest and block join keys."""
-    from mongo_polars_reconciliation_spark.extensions.multimodal import (
-        ingest_novel_payloads,
-        payload_block_state,
-    )
-    from mongo_polars_reconciliation_spark.harness.fixtures import (
-        payload_ingest_split,
-    )
-    from mongo_polars_reconciliation_spark.streaming.corpus import (
-        compact_payload_state,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    admitted = QUERIES["stream_ingest_payloads"](spark, sf_dir)
-    assert admitted.count() > 0
-    root = scratch_path("sf0.001", "payload_ingest_state")
-    tables = compact_payload_state(
-        spark, f"{root}/state", table_prefix="t_payload_compact", buckets=4
-    )
-    assert set(tables) == {"digests", "blocks"}
-    # compacted ledger == drained admitted set
-    assert spark.table(tables["digests"]).count() == admitted.count()
-
-    hist, batch = payload_ingest_split(spark, sf_dir)
-    seed_digests = hist.select(
-        F.md5(
-            F.coalesce(F.col("payload"), F.lit("").cast("binary"))
-        ).alias("payload_hash")
-    ).distinct()
-    again = ingest_novel_payloads(
-        batch,
-        seed_digests.unionByName(
-            spark.table(tables["digests"]).select("payload_hash")
-        ).distinct(),
-        payload_block_state(hist, block_bytes=64).unionByName(
-            spark.table(tables["blocks"])
-        ),
-        block_bytes=64,
-        mis_max_iter=8,
-    )
-    assert again.count() == 0
-    for face, key in {"digests": "payload_hash", "blocks": "bblock"}.items():
-        desc = _bucket_spec(spark, tables[face])
-        assert desc.get("Num Buckets") == "4", (face, desc)
-        assert key in desc.get("Bucket Columns", ""), (face, desc)
-
-
 def test_stream_cms_equals_batch_counters(spark):
-    """r14 carrying pin for the RETIRED registry face stream_cms_counters
-    (VERDICT r13 #5): the drained complete-mode CMS state equals the batch
+    """Carrying pin for the RETIRED registry face stream_cms_counters
+   : the drained complete-mode CMS state equals the batch
     sketch's (j, b) counters bit-for-bit — counter increments are plain
     sums, so they commute with micro-batching. The counter MATH itself
     stays independently oracle-checked through text_heavy_hitters_cms and

@@ -1,5 +1,5 @@
 """Round-tooling behavior pins: the drift adjudicator's control
-normalization (VERDICT r9 ask #7) must actually self-adjudicate a
+normalization must actually self-adjudicate a
 uniformly-loaded session, and the record loaders must survive both full
 records and truncated driver tails."""
 
@@ -164,6 +164,64 @@ def test_oracle_fragments_written_once():
         and (node.module or "").startswith("mongo_polars_reconciliation_spark")
     }
     assert pkg_imports == {"mongo_polars_reconciliation_spark.functions.hashing"}
+
+
+_KEY_STATE_BUILDERS = {"band_state", "assignment_state", "payload_block_state"}
+_DIGEST_LEDGER_COLUMNS = {"text_hash", "payload_hash"}
+
+
+def _hand_built_ingest_state(src):
+    """Lines of ``src`` that build an ingest seed or fold by hand: an
+    ``md5(...)`` aliased to a digest-ledger column, or a key-state
+    builder's rows passed to ``unionByName``."""
+    import ast
+
+    def name(func):
+        return getattr(func, "attr", getattr(func, "id", None))
+
+    found = []
+    for node in ast.walk(ast.parse(src)):
+        if not (isinstance(node, ast.Call) and node.args):
+            continue
+        arg = node.args[0]
+        if (
+            name(node.func) == "alias"
+            and isinstance(arg, ast.Constant)
+            and arg.value in _DIGEST_LEDGER_COLUMNS
+            and any(
+                isinstance(n, ast.Call) and name(n.func) == "md5"
+                for n in ast.walk(node.func)
+            )
+        ) or (
+            name(node.func) == "unionByName"
+            and isinstance(arg, ast.Call)
+            and name(arg.func) in _KEY_STATE_BUILDERS
+        ):
+            found.append(node.lineno)
+    return found
+
+
+def test_ingest_state_built_only_by_family_definitions():
+    """Every harness face, tool and test takes its ingest seeds and folds
+    from the family definitions in streaming/corpus.py, so the digest
+    ledger's NULL rule, the face layout and the geometry cannot drift
+    between copies. The bucketing plan pins build state tables as unit
+    tests of the builders themselves and are exempt."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    files = [
+        *(root / "mongo_polars_reconciliation_spark/harness").glob("*.py"),
+        *(root / "tools").glob("*.py"),
+        *(root / "tests").glob("*.py"),
+    ]
+    found = {
+        str(f.relative_to(root)): lines
+        for f in files
+        if f.name != "test_bucketing.py"
+        and (lines := _hand_built_ingest_state(f.read_text()))
+    }
+    assert not found, found
 
 
 def test_capture_plans_names_unknown_faces(tmp_path):

@@ -56,7 +56,7 @@ def _min_sections(raw: str) -> dict[str, float]:
             return {**doc.get("queries_min", {}), **doc.get("secondary_min", {})}
         if "tail" in doc:  # driver wrapper, truncated stdout
             raw = doc["tail"]
-        elif "queries" in doc:  # pre-r6 bench output: means only
+        elif "queries" in doc:  # the oldest bench output: means only
             return dict(doc.get("queries", {}))
     # Truncated tail: take only text after the LAST "_min" section marker(s)
     # so we never mix a query's mean (earlier dict) with another's min.
@@ -76,8 +76,8 @@ def load_mins(path: str) -> dict[str, float]:
 
 
 def load_control(path: str) -> "float | None":
-    """The record's control-query min (bench.py's ``control_min_sec``,
-    present since r10). Regex fallback for truncated driver tails."""
+    """The record's control-query min (bench.py's ``control_min_sec``;
+    older records lack it). Regex fallback for truncated driver tails."""
     with open(path) as fh:
         raw = fh.read()
     try:
@@ -119,13 +119,13 @@ def main() -> None:
     benches = sorted(glob.glob(os.path.join(ROOT, "BENCH_r*.json")))
     old = sys.argv[1] if len(sys.argv) > 1 else (benches[-1] if benches else None)
     # Default NEW: the out-of-tree record a plain `python bench.py` writes
-    # since r9 (advice item — ad-hoc runs must not dirty the working tree);
+    # (ad-hoc runs must not dirty the working tree);
     # fall back to the committed copy if no fresh run exists.
     import datetime
     import tempfile
 
-    # uid-suffixed since r10 (advice: a world-shared tmp name collides across
-    # users); the un-suffixed name is still accepted for pre-r10 records.
+    # uid-suffixed (a world-shared tmp name collides across users); the
+    # un-suffixed name is still accepted for older records.
     tmp_candidates = [
         os.path.join(
             tempfile.gettempdir(), f"mpr_spark_bench_last.{os.getuid()}.json"
@@ -152,7 +152,7 @@ def main() -> None:
     mtime = datetime.datetime.fromtimestamp(os.path.getmtime(new))
     print(f"bench_drift: NEW record {new} written {mtime:%Y-%m-%d %H:%M:%S}")
     a, b = load_mins(old), load_mins(new)
-    # Control normalization (r10, ask #7): when both records carry the
+    # Control normalization: when both records carry the
     # control query's min (bench.py's control_min_sec), divide every ratio
     # by the control's own ratio — a uniformly-loaded session then shows
     # ratio ~1.0 everywhere instead of flagging the whole suite. The

@@ -1,11 +1,11 @@
 #!/usr/bin/env python
 """Interleaved A/B re-measure for bench drift flags (the adjudication step).
 
-Protocol (r9, VERDICT r8 ask #7): when ``tools/bench_drift.py`` flags a
+Protocol: when ``tools/bench_drift.py`` flags a
 query SLOWER whose code is unchanged since the old record (git-verifiable),
 the flag is NOT committed as-is — for two rounds running a committed
-artifact carried a pure-noise flag (dedup_clusters_star r7,
-text_dup_spans_trim r8; both re-measured at the old level). This tool runs
+artifact carried a pure-noise flag (dedup_clusters_star,
+then text_dup_spans_trim; both re-measured at the old level). This tool runs
 the adjudication BEFORE the artifact is committed:
 
   * one Spark session, >= 3 reps (default 4);
@@ -35,7 +35,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# r15: look up through bench.py's BENCH_FNS (registry + the retired-but-
+# look up through bench.py's BENCH_FNS (registry + the retired-but-
 # still-benched curation faces) so any benched query can be adjudicated.
 from bench import BENCH_FNS as QUERIES
 from mongo_polars_reconciliation_spark.session import get_spark

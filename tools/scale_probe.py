@@ -96,22 +96,17 @@ def emb_at(spark, factor: int):
 
 
 def probe_neardup_ingest(spark, docs):
-    """The r9 flagship: full near-dup admission of a batch vs history."""
-    from mongo_polars_reconciliation_spark.extensions.dedup import (
-        band_state,
-        ingest_novel_neardup,
+    """The flagship ingest: full near-dup admission of a batch vs history."""
+    from mongo_polars_reconciliation_spark.streaming.corpus import (
+        NeardupFamily,
     )
 
     docs = docs.localCheckpoint(eager=True)  # exclude synthesis from timing
     hist = docs.where(F.col("doc_id") % 3 < 2)
     batch = docs.where(F.col("doc_id") % 3 == 2)
-    digests = hist.select(
-        F.md5(F.coalesce(F.col("text"), F.lit("")).cast("binary")).alias(
-            "text_hash"
-        )
-    ).distinct()
+    family = NeardupFamily()
     t0 = time.perf_counter()
-    ingest_novel_neardup(batch, digests, band_state(hist), hist).write.format(
+    family.admit(batch, family.seed(hist)).write.format(
         "noop"
     ).mode("overwrite").save()
     return time.perf_counter() - t0
@@ -148,7 +143,7 @@ def _probe_recall(nlist):
 
 
 def probe_ivfpq(spark, emb):
-    """The r10 IVF-PQ serve path: fit coarse + residual codebooks once
+    """The IVF-PQ serve path: fit coarse + residual codebooks once
     per corpus size, then time ONLY the probe (assign → residual-encode
     probed cells → ADC → exact re-rank). Probe work is (n/nlist)·nprobe
     rows of m-lookup scoring — with fixed nlist=4 it grows linearly in n
@@ -177,7 +172,7 @@ def probe_ivfpq(spark, emb):
 
 
 def probe_semantic_ingest(spark, emb):
-    """The r10 vector-side ingest: probe assignment under persisted
+    """The vector-side ingest: probe assignment under persisted
     centroids + block-collision admission. nlist scales with the corpus
     (auto) so block sizes — and the collision join's pair work — stay
     bounded as the blow-up grows.
@@ -191,50 +186,50 @@ def probe_semantic_ingest(spark, emb):
     the 4×→8× ratio is 1.58× (ideal 2×) — LINEAR at bounded 1024-row
     blocks, the FAISS-style brute-scan cell the auto_nlist docstring
     promises. The same transition-artifact-vs-asymptote distinction the
-    r9 recall probes established, now measured on the ingest path."""
+    recall probes established, now measured on the ingest path."""
     from mongo_polars_reconciliation_spark.extensions.similarity import (
-        assignment_state,
         auto_nlist,
-        ingest_novel_semantic,
         kmeans_fit,
+    )
+    from mongo_polars_reconciliation_spark.streaming.corpus import (
+        SemanticFamily,
     )
 
     emb = emb.localCheckpoint(eager=True)
     hist = emb.where(F.col("vec_id") % 3 < 2)
     batch = emb.where(F.col("vec_id") % 3 == 2)
-    cents = kmeans_fit(hist, k=auto_nlist(hist), n_iter=1)
-    assign = assignment_state(hist, cents, nprobe=2).localCheckpoint(
-        eager=True
-    )
+    family = SemanticFamily(kmeans_fit(hist, k=auto_nlist(hist), n_iter=1))
+    seeds = family.seed(hist)
+    seeds["assign"] = seeds["assign"].localCheckpoint(eager=True)
     t0 = time.perf_counter()
-    ingest_novel_semantic(batch, assign, hist, cents).write.format(
+    family.admit(batch, seeds).write.format(
         "noop"
     ).mode("overwrite").save()
     return time.perf_counter() - t0
 
 
 def probe_payload_ingest(spark, docs):
-    """The r10 payload ingest: digest anti-join + block-key collision
+    """The payload ingest: digest anti-join + block-key collision
     admission. Block buckets hold copies of identical aligned blocks —
     the prefix-salted blow-up keeps them constant-size, so the probe
     should track the data ratio, not square it."""
     from mongo_polars_reconciliation_spark.extensions.multimodal import (
         attach_payload,
-        ingest_novel_payloads,
-        payload_block_state,
+    )
+    from mongo_polars_reconciliation_spark.streaming.corpus import (
+        PayloadFamily,
     )
 
     mm = attach_payload(docs).localCheckpoint(eager=True)
     hist = mm.where(F.col("doc_id") % 3 < 2)
     batch = mm.where(F.col("doc_id") % 3 == 2)
-    digests = hist.select(F.md5(F.col("payload")).alias("payload_hash"))
-    blocks = payload_block_state(hist, block_bytes=64).localCheckpoint(
-        eager=True
-    )
+    family = PayloadFamily(block_bytes=64)
+    seeds = family.seed(hist)
+    seeds["blocks"] = seeds["blocks"].localCheckpoint(eager=True)
     t0 = time.perf_counter()
-    ingest_novel_payloads(
-        batch, digests, blocks, block_bytes=64, max_bucket_size=1000
-    ).write.format("noop").mode("overwrite").save()
+    family.admit(batch, seeds, max_bucket_size=1000).write.format(
+        "noop"
+    ).mode("overwrite").save()
     return time.perf_counter() - t0
 
 
@@ -255,7 +250,7 @@ def probe_payload_ingest(spark, docs):
 
 
 def probe_line_dedup(spark, docs):
-    """r11: corpus line dedup, trim face. The blow-up keeps organic lines
+    """Corpus line dedup, trim face. The blow-up keeps organic lines
     distinct (prefixed tokens) but injects the SAME footer lines into
     every copy, so hot-key multiplicity on the first-occurrence
     aggregate grows with the factor — exactly the skew face the
@@ -288,7 +283,7 @@ def probe_line_dedup(spark, docs):
 
 
 def probe_clusters_star(spark, docs):
-    """r13: star-contraction connected components over the MinHash
+    """Star-contraction connected components over the MinHash
     near-dup pair graph. The prefixed-token blow-up makes each copy's
     pair graph independent of the others', so edges grow linearly with
     the factor while component structure (and hence the O(log n) round
@@ -316,14 +311,14 @@ def probe_clusters_star(spark, docs):
 
 
 def probe_simhash(spark, docs):
-    """r13: SimHash pigeonhole near-dup — completes the near-dup trio
+    """SimHash pigeonhole near-dup — completes the near-dup trio
     (minhash and ngram_jaccard above). Signature work is map-linear; the
     block self-join's candidate set grows with real near-dup structure
     (linear under the disjoint-token blow-up) PLUS random block
     collisions: a random pair collides on any given block with
     probability 2^-BLOCK_BITS, so the expected colliding candidate
     pairs are ~BLOCKS·C(n,2)/2^BLOCK_BITS = 4·C(n,2)/2^16 ≈ n²/2^15 —
-    negligible at probe scale but a real asymptote (ADVICE r13: the
+    negligible at probe scale but a real asymptote (the
     earlier ~n²/(4·2^16) figure undercounted by ~8×). Collision-safe
     scaling needs a LARGER per-block bucket space, i.e. MORE bits per
     block — which, with the pigeonhole constraint BLOCKS > max_hamming
@@ -346,7 +341,7 @@ def probe_simhash(spark, docs):
 
 
 def probe_ngram_jaccard(spark, docs):
-    """r13: exact n-gram Jaccard via the stop-shingle-capped inverted
+    """Exact n-gram Jaccard via the stop-shingle-capped inverted
     index. The within-shingle self-join is the one place a quadratic
     could hide (≤ max_df² pairs per shared shingle); the prefixed-token
     blow-up keeps copies' shingles disjoint, so every shingle's document
@@ -364,7 +359,7 @@ def probe_ngram_jaccard(spark, docs):
 
 
 def probe_bloom_decontaminate(spark, docs):
-    """r16 batch 2: bloom_decontaminate after the literal-bitmap rewrite
+    """Batch 2: bloom_decontaminate after the literal-bitmap rewrite
     (the broadcast-joined position table and the per-gram
     groupBy(doc, h1, h2) became a row-local bit test + ONE groupBy(doc)).
     The filter side is FIXED (≤ m_bits positions regardless of corpus or
@@ -388,13 +383,13 @@ def probe_bloom_decontaminate(spark, docs):
 
 
 def probe_lsh_hot_bucket(spark, docs):
-    """r17 (VERDICT r16 #1): CAPPED LSH pair generation with a
+    """CAPPED LSH pair generation with a
     deliberately degenerate band bucket far past the cap — 20% of the
     corpus carries the SAME text, so every one of its band buckets holds
     1000 rows at 1x (100x the cap of 10) and 4000 at 4x, while the rest
-    of the corpus is organically unique. The r16 window form co-located
+    of the corpus is organically unique. An earlier window form co-located
     the monster bucket on ONE window task before the cap filter could
-    drop it (AQE cannot split a window partition); the r17 form counts
+    drop it (AQE cannot split a window partition); the current form counts
     it with a map-side partial aggregate and anti-joins the over-cap
     keys via broadcast, so nothing ever gathers the bucket. Linear wall
     growth here is the skew-safety evidence; superlinear growth (or a
@@ -422,7 +417,7 @@ def probe_lsh_hot_bucket(spark, docs):
 
 
 def probe_curation_v4(spark, docs):
-    """r13 (VERDICT r12 #4): the FLAGSHIP composition — exact dedup →
+    """The FLAGSHIP composition — exact dedup →
     line-dedup TRIM → LSH near-dup → repetition → decontamination → LM
     gate → quality gate → per-language stats — probed end-to-end. Each
     stage has linear posture individually (line dedup and pii carry
@@ -476,7 +471,7 @@ def probe_curation_v4(spark, docs):
 
 
 def probe_pii_scrub(spark, docs):
-    """r12: PII scrub including the Luhn card stage — a zero-exchange
+    """PII scrub including the Luhn card stage — a zero-exchange
     map projection whose cost must scale with scanned bytes and nothing
     else. The blow-up injects a fixed doc_id-keyed FRACTION of
     card/email/phone/IP hits (including a Luhn-invalid run the filter
@@ -509,7 +504,7 @@ def probe_pii_scrub(spark, docs):
 
 
 def probe_admit_depth(spark) -> None:
-    """r14 (VERDICT r13 #4): bound the ONE driver-side loop the ingest
+    """Bound the ONE driver-side loop the ingest
     family keeps — ``greedy_admit``'s round count — against graph depth,
     empirically. Rounds needed = longest dependency chain in the pair DAG
     (each round finalizes the next node of the deepest chain: a node is
@@ -546,7 +541,7 @@ def probe_admit_depth(spark) -> None:
                 hi_b = mid
             except RuntimeError:
                 lo_b = mid + 1
-        # r15 (advice): the bisection never tests `cap` itself — if every
+        # the bisection never tests `cap` itself — if every
         # midpoint fails, lo_b drifts up to cap and would be reported as
         # the measured round count for a graph that actually needs MORE
         # than cap rounds. One verification run at the reported bound
@@ -597,25 +592,25 @@ def main() -> None:
         ("minhash_near_dups", docs_at, probe_minhash),
         ("recall_sampled_fixed_nlist", emb_at, _probe_recall(32)),
         ("recall_sampled_auto_nlist", emb_at, _probe_recall("auto")),
-        # r10 ingest family extensions
+        # ingest family extensions
         ("semantic_ingest", emb_at, probe_semantic_ingest),
         ("payload_ingest", docs_at, probe_payload_ingest),
         ("ivfpq_probe", emb_at, probe_ivfpq),
-        # r11: line dedup with factor-hot shared footer lines
+        # line dedup with factor-hot shared footer lines
         ("line_dedup_trim", docs_at, probe_line_dedup),
-        # r12: the Luhn-staged PII scrub (map-only; linearity evidence)
+        # the Luhn-staged PII scrub (map-only; linearity evidence)
         ("pii_scrub", docs_at, probe_pii_scrub),
-        # r13: the flagship composition — stage-interaction watchdog
+        # the flagship composition — stage-interaction watchdog
         ("curation_v4", docs_at, probe_curation_v4),
-        # r13: star-CC round scaling over the near-dup pair graph
+        # star-CC round scaling over the near-dup pair graph
         ("clusters_star", docs_at, probe_clusters_star),
-        # r13: capped inverted-index self-join fanout
+        # capped inverted-index self-join fanout
         ("ngram_jaccard", docs_at, probe_ngram_jaccard),
-        # r16 batch 2: literal-bitmap Bloom probe side
+        # literal-bitmap Bloom probe side
         ("bloom_decontaminate", docs_at, probe_bloom_decontaminate),
-        # r17: capped LSH with a 100x-cap degenerate bucket (skew safety)
+        # capped LSH with a 100x-cap degenerate bucket (skew safety)
         ("lsh_hot_bucket", docs_at, probe_lsh_hot_bucket),
-        # r13: Hamming-LSH block collisions (near-dup trio complete)
+        # Hamming-LSH block collisions (near-dup trio complete)
         ("simhash", docs_at, probe_simhash),
     ]
     # special probes emit their own line shape (rounds, not the plain
